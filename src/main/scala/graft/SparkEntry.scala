@@ -2258,7 +2258,7 @@ object SparkEntry {
     * default (1 GiB) keeps every bench SF single-batch (local inputs are
     * well under it), so the driver's record stays comparable, while a
     * production backlog drains in bounded slices. */
-  private def streamTriggerBytes(s: SparkSession): Long =
+  private[graft] def streamTriggerBytes(s: SparkSession): Long =
     GraftConf.int(s, GraftConf.StreamTriggerMb, 1024).toLong << 20
 
   /** [[withStreamParts]] with the partition count DERIVED from the
@@ -2273,21 +2273,40 @@ object SparkEntry {
     * 1 GiB trigger derives 32 partitions — so no constant here is a
     * local-mode assumption. The state-store count is still fixed at first
     * start per checkpoint (every row uses a fresh checkpoint dir). */
-  private def withStreamParts[T](s: SparkSession, dir: String, glob: String)(
-      body: => T): T = {
+  private[graft] def withStreamParts[T](s: SparkSession, dir: String, glob: String)(
+      body: => T): T =
+    withStreamParts(s, streamParts(s, dir, glob))(body)
+
+  /** The partition count [[withStreamParts]] derives for the drain of
+    * `dir/glob`. A glob match that is a directory (a Spark-written
+    * multi-file table) counts the bytes of its leaf data files —
+    * underscore/dot markers and checksums excluded, as the reader skips
+    * them — not the directory entry's own zero length. */
+  private[graft] def streamParts(s: SparkSession, dir: String, glob: String): Int = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    def leafBytes(st: org.apache.hadoop.fs.FileStatus): Long =
+      if (!st.isDirectory) st.getLen
+      else {
+        val it = fs.listFiles(st.getPath, true)
+        var n = 0L
+        while (it.hasNext) {
+          val f = it.next()
+          if (!f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
+            n += f.getLen
+        }
+        n
+      }
     val bytes = Option(fs.globStatus(new org.apache.hadoop.fs.Path(p, glob)))
       .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus])
-      .map(_.getLen).sum
+      .map(leafBytes).sum
     val perPart = GraftConf.int(s, GraftConf.StreamPartMb, 32).toLong << 20
     val vol = math.min(bytes, streamTriggerBytes(s))
     val derived = math.max(
       GraftConf.int(s, GraftConf.StreamMinParts, 8).toLong,
       (vol + perPart - 1L) / perPart)
-    val n = math.max(1L,
+    math.max(1L,
       math.min(derived, s.sessionState.conf.numShufflePartitions.toLong)).toInt
-    withStreamParts(s, n)(body)
   }
 
   /** Flagship (smoke, sf0.001): the reference's signature pipeline — replay

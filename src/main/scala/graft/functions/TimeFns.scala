@@ -38,12 +38,6 @@ object TimeFns {
     * ns->us truncation when it reads TIMESTAMP(NANOS) parquet. */
   def nanosToMicros(ns: Column): Column = ldiv(ns, 1000L)
 
-  /** Unix epoch nanos (long) -> TimestampType (micros precision). */
-  def nanosToTimestamp(ns: Column): Column = timestamp_micros(nanosToMicros(ns))
-
-  /** Epoch micros (long) -> TimestampType. */
-  def microsToTimestamp(us: Column): Column = timestamp_micros(us)
-
   /** Day-partition id of a timestamp column: `year*1000 + dayOfYear`,
     * the reference's index partition key (IndexByEventTypeStore.cs:92-98). */
   def pid(ts: Column): Column = (year(ts) * lit(1000) + dayofyear(ts)).cast("int")

@@ -28,9 +28,4 @@ object CounterOps {
     * as a pure log append). Returns the rows to append. */
   def resetDeltas(incrementsLog: DataFrame, msgid: String): DataFrame =
     getCount(incrementsLog, msgid).select(col("msgid"), (-col("cv")).as("delta"))
-
-  /** Counter truth straight from the event log: events per type
-    * (the reference maintains this externally via IMessageCounter). */
-  def countsFromEvents(eventsWithEt: DataFrame): DataFrame =
-    eventsWithEt.groupBy(col("et")).agg(count(lit(1)).as("cv"))
 }

@@ -195,10 +195,6 @@ object EventStoreOps {
   def semiJoinAggregatesOn(events: DataFrame, touchedKeys: DataFrame, cond: Column): DataFrame =
     events.join(touchedKeys, cond, "left_semi")
 
-  /** C2 on the canonical schema. */
-  def semiJoinAggregates(events: DataFrame, index: DataFrame): DataFrame =
-    semiJoinAggregatesOn(events, index.select(col("aid")).distinct(), col("id") === col("aid"))
-
   /** E1 `EnumerateEventStore` dispatch (CassandraEventStore.cs:148-161):
     * full-store scan when no event type requested, index path otherwise.
     * Time bounds are FileTime longs, inclusive (B5). */

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Levels
 
 /** Composed "forget this document everywhere" — the compliance delete a
   * 100 TB pipeline runs routinely (reference delete semantics: A5
@@ -44,7 +45,7 @@ import org.apache.spark.sql.functions._
   * delta collapses in the (shingle, src) replay-dedup), so the recovery
   * story for a crash mid-pass is "rerun the whole forget" — ForgetSpec
   * drives a partial pass and proves the rerun converges. In-place level
-  * rewrites go through [[stagedOverwrite]] (survivors materialized to an
+  * rewrites go through [[Levels.stagedOverwrite]] (survivors materialized to an
   * invisible sibling BEFORE the target is touched), so no crash point
   * ever loses survivor rows — the mid-Overwrite truncation window a
   * plain `SaveMode.Overwrite` on the same directory would open.
@@ -68,7 +69,7 @@ object ForgetOps {
     * partition overwrite + explicit empty-directory cleanup — the
     * [[graft.sources.Storage.deleteIndexAndRewrite]] pattern. On a
     * streamed layout the pass ends with a lineage fence
-    * ([[fenceIfStreamed]]) so a stale-checkpoint restart cannot
+    * ([[Levels.fence]]) so a stale-checkpoint restart cannot
     * resurrect forgotten rows by replaying its newest batch. */
   def forgetFromLshIndex(spark: SparkSession, path: String, docs: DataFrame,
       idCol: String = "doc_id", textCol: String = "text",
@@ -80,14 +81,14 @@ object ForgetOps {
         shingleK, nHashes, bands, nBuckets)
       .select(col("band"), col("bucket")).distinct()
       .collect().map(r => (r.get(0).toString, r.get(1).toString)).toSeq
-    eachLevelPar(spark, levelRoots(spark, path)) { root =>
+    eachLevelPar(spark, Levels.dirsOrRoot(spark, path)) { root =>
       rewritePartitions(spark, root,
         keys.map { case (band, bucket) =>
           Seq("band" -> band, "bucket" -> bucket) },
         dropIds = docs.select(col(idCol).as("id")),
         joinCol = "id", sortCols = Seq("id"))
     }
-    fenceIfStreamed(spark, path)
+    Levels.fence(spark, path)
   }
 
   /** Drop `ids` from a [[MultimodalOps.writePhashIndex]] layout (or a
@@ -101,14 +102,14 @@ object ForgetOps {
     val keys = MultimodalOps.bandedPhash(media, fps, k, nBuckets)
       .select(col("band_ix"), col("bucket")).distinct()
       .collect().map(r => (r.getInt(0), r.getInt(1))).toSeq
-    eachLevelPar(spark, levelRoots(spark, path)) { root =>
+    eachLevelPar(spark, Levels.dirsOrRoot(spark, path)) { root =>
       rewritePartitions(spark, root,
         keys.map { case (bi, b) =>
           Seq("band_ix" -> bi.toString, "bucket" -> b.toString) },
         dropIds = media.select(col("media_id").as("media_id")),
         joinCol = "media_id", sortCols = Seq("media_id", "frame_ix"))
     }
-    fenceIfStreamed(spark, path)
+    Levels.fence(spark, path)
   }
 
   /** Drop `ids` from a [[graft.operators.RetrievalOps.writePostingsIndex]]
@@ -126,20 +127,15 @@ object ForgetOps {
       .select(pmod(xxhash64(col("tok")), lit(nPt.toLong)).cast("int").as("pt"))
       .distinct().collect().map(_.getInt(0)).toSeq
     val ids = docs.select(col(idCol).cast("long").as("doc_id"))
-    eachLevelPar(spark, batchLevels(spark, path)) { level =>
+    eachLevelPar(spark, Levels.dirs(spark, path)) { level =>
       rewritePartitions(spark, level,
         pts.map(pt => Seq("pt" -> pt.toString)),
         dropIds = ids, joinCol = "doc_id", sortCols = Seq("tok", "doc_id"))
     }
-    // each `_docs` level is the only copy of its survivor rows — swap via
-    // staging, never truncate-in-place (heal first: a prior pass may have
-    // crashed mid-swap, leaving a level's rows only in its staging sibling)
-    healStagedLevels(spark, s"$path/_docs")
-    eachLevelPar(spark, batchLevels(spark, s"$path/_docs")) { level =>
-      stagedOverwrite(level,
-        spark.read.parquet(level).join(ids, Seq("doc_id"), "left_anti"))
-    }
-    fenceIfStreamed(spark, path, s"$path/_docs")
+    // each `_docs` level is the only copy of its survivor rows
+    purgeLevels(spark, s"$path/_docs", "doc_id LONG, dl LONG")(
+      _.join(ids, Seq("doc_id"), "left_anti"))
+    Levels.fence(spark, path, s"$path/_docs")
   }
 
   /** Subtract `docs` from a [[TextOps.writeShingleIndex]] layout by
@@ -205,7 +201,7 @@ object ForgetOps {
       .withColumn("cnt", -col("cnt"))
       .repartition(col("pb"))
       .write.mode(SaveMode.Append)
-      .partitionBy("pb").parquet(s"$path/__batch=-1")
+      .partitionBy("pb").parquet(Levels.base(path))
   }
 
   /** The shingle forget's src tag: an order-independent digest of the
@@ -282,12 +278,12 @@ object ForgetOps {
       .collect().map(_.get(0).toString).toSeq
     // a streamed sink (ivf/sq8/pqIndexStream) is `__batch=`-versioned —
     // rewrite each level's home cells; the flat batch layout is one root
-    eachLevelPar(spark, levelRoots(spark, path)) { root =>
+    eachLevelPar(spark, Levels.dirsOrRoot(spark, path)) { root =>
       rewritePartitions(spark, root,
         cells.map(c => Seq("cell" -> c)),
         dropIds = vecs.select(col("id")), joinCol = "id", sortCols = Seq("id"))
     }
-    fenceIfStreamed(spark, path)
+    Levels.fence(spark, path)
   }
 
   /** Forget `ids` from an exact k-NN graph: rows whose PROBE is an id
@@ -359,7 +355,7 @@ object ForgetOps {
     *
     * Crash anywhere -> rerun converges: the corpus rewrite and level
     * drops are idempotent anti-joins, the corrected level swaps in
-    * through staging ([[stagedOverwrite]] — a torn level can never win
+    * through staging ([[Levels.stagedOverwrite]] — a torn level can never win
     * latest-wins), and a completed pass's rerun finds nothing affected
     * and rewrites no level (the fences block stale replays —
     * knnGraphBatch guards every root before any write, and the resumed
@@ -383,18 +379,13 @@ object ForgetOps {
       .join(dead, col("id") === col("__dead"), "left_semi")
       .select(col("cell")).distinct()
       .collect().map(_.get(0).toString).toSeq
-    eachLevelPar(spark, batchLevels(spark, corpusDir)) { level =>
+    eachLevelPar(spark, Levels.dirs(spark, corpusDir)) { level =>
       rewritePartitions(spark, level, cells.map(c => Seq("cell" -> c)),
         dropIds = dead.select(col("__dead").as("id")), joinCol = "id",
         sortCols = Seq("id"))
     }
-    healStagedLevels(spark, edgesDir)
-    eachLevelPar(spark, batchLevels(spark, edgesDir)) { level =>
-      stagedOverwrite(level, spark.read
-        .schema("vec_id LONG, neighbor_id LONG, sim DOUBLE, rank INT")
-        .parquet(level)
-        .join(dead, col("vec_id") === col("__dead"), "left_anti"))
-    }
+    purgeLevels(spark, edgesDir, EdgesDDL)(
+      _.join(dead, col("vec_id") === col("__dead"), "left_anti"))
     // delta-bounded (the ids' blast radius) and consumed twice (the
     // emptiness probe + the requery join) — pin it so the resolved-graph
     // window runs once
@@ -442,19 +433,14 @@ object ForgetOps {
       // exactly as it picked the rows they supersede, and the frontier
       // slot holds only the dataless fence the resumed stream may
       // legitimately overwrite.
-      val dataLevels = batchLevels(spark, edgesDir).filter { l =>
-        val lp = new org.apache.hadoop.fs.Path(l)
-        lp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .listStatus(lp).exists(st => !st.getPath.getName.startsWith("_"))
-      }
-      require(dataLevels.nonEmpty,
+      val (f, ep) = Levels.fs(spark, edgesDir)
+      val newestData = Levels.ids(f, ep).reverse
+        .find(id => Levels.hasData(f, new org.apache.hadoop.fs.Path(Levels.dir(edgesDir, id))))
+      require(newestData.nonEmpty,
         s"forgetFromKnnGraphStore: affected probes exist but $edgesDir holds " +
           "no data level — corrupted store?")
-      val newest = dataLevels.maxBy(l => "__batch=(-?\\d+)".r
-        .findFirstMatchIn(l).map(_.group(1).toLong).getOrElse(Long.MinValue))
-      stagedOverwrite(newest, spark.read
-        .schema("vec_id LONG, neighbor_id LONG, sim DOUBLE, rank INT")
-        .parquet(newest)
+      val newest = Levels.dir(edgesDir, newestData.get)
+      Levels.stagedOverwrite(newest, spark.read.schema(EdgesDDL).parquet(newest)
         .join(affected.select(col("id").as("__aff")),
           col("vec_id") === col("__aff"), "left_anti")
         .unionByName(requeried))
@@ -464,7 +450,7 @@ object ForgetOps {
     // rows from the replayed input (corpus) — each fence makes it refuse
     // loudly, while the live stream's next batch id equals the fence and
     // legitimately overwrites the dataless directory
-    fenceIfStreamed(spark, corpusDir, edgesDir)
+    Levels.fence(spark, corpusDir, edgesDir)
   }
 
   /** Forget `ids` from a near-dup cluster assignment, splits included:
@@ -498,7 +484,7 @@ object ForgetOps {
     * the ids' rows (evidence FIRST — at any crash point the served
     * manifest is at worst stale, never derived from evidence that still
     * remembers the ids after the pass claims success; each level swaps
-    * through [[stagedOverwrite]], so no crash point loses survivor
+    * through [[Levels.stagedOverwrite]], so no crash point loses survivor
     * evidence), then the NEWEST manifest version is re-derived from the
     * surviving evidence via the caller's `remanifest` (staged too — the
     * served version is never torn), and finally every OLDER manifest
@@ -519,19 +505,12 @@ object ForgetOps {
       deltaDDL: String, remanifest: DataFrame => DataFrame): Unit = {
     val dead = ids.select(col(ids.columns.head).cast("long").as("doc_id"))
       .localCheckpoint(true)
-    healStagedLevels(spark, s"$path/_docs")
-    eachLevelPar(spark, batchLevels(spark, s"$path/_docs")) { level =>
-      stagedOverwrite(level, spark.read
-        .schema(org.apache.spark.sql.types.StructType.fromDDL(deltaDDL))
-        .parquet(level)
-        .join(dead, Seq("doc_id"), "left_anti"))
-    }
-    healStagedLevels(spark, s"$path/manifest")
-    val manifests = batchLevels(spark, s"$path/manifest")
+    purgeLevels(spark, s"$path/_docs", deltaDDL)(_.join(dead, Seq("doc_id"), "left_anti"))
+    Levels.heal(spark, s"$path/manifest")
+    val manifests = Levels.dirs(spark, s"$path/manifest")
     require(manifests.nonEmpty,
       s"forgetFromSchedule: no served manifest under $path/manifest")
-    val newest = manifests.maxBy(l =>
-      "__batch=(-?\\d+)".r.findFirstMatchIn(l).map(_.group(1).toLong).getOrElse(-1L))
+    val newest = manifests.last
     val dataCols = org.apache.spark.sql.types.StructType.fromDDL(deltaDDL)
       .fieldNames.filterNot(_ == "doc_id").toSeq
     val corpus = spark.read
@@ -541,7 +520,7 @@ object ForgetOps {
       .agg(max_by(struct(dataCols.map(col): _*),
         struct((col("__batch") +: dataCols.map(col)): _*)).as("__v"))
       .select(col("doc_id") +: dataCols.map(c => col(s"__v.$c").as(c)): _*)
-    stagedOverwrite(newest, remanifest(corpus))
+    Levels.stagedOverwrite(newest, remanifest(corpus))
     graft.streaming.StreamingOps.vacuumScheduleManifests(spark, path,
       keepVersions = 1)
     // enforce the quiesce contract instead of assuming it: a stale
@@ -553,7 +532,7 @@ object ForgetOps {
     // equals the fence and overwrites it. The manifest root is NOT
     // fenced — readLatestManifest serves the newest `_SUCCESS`-carrying
     // version, and a fence dir would read as an empty manifest.
-    fenceIfStreamed(spark, s"$path/_docs")
+    Levels.fence(spark, s"$path/_docs")
   }
 
   /** Forget `ids` from a [[graft.streaming.StreamingOps.curatedIngest]]
@@ -573,7 +552,7 @@ object ForgetOps {
     * ids-only by nature — the landing itself holds the payload evidence.
     * Key removal is a partition-pruned [[rewritePartitions]] of the
     * touched `pb` directories per level; document removal is a
-    * [[stagedOverwrite]] anti-join per level (no truncation window).
+    * [[Levels.stagedOverwrite]] anti-join per level (no truncation window).
     *
     * Re-admission contract (the oracle row's law): after the forget, a
     * re-crawl that re-sends content whose every admitter was forgotten is
@@ -606,7 +585,7 @@ object ForgetOps {
     // leftovers would dodge the rewrite and resurface at the next fold
     graft.streaming.StreamingOps.compactParaIndex(spark, outDir)
     graft.streaming.StreamingOps.compactCuratedDocs(spark, outDir)
-    healStagedLevels(spark, docsRoot)
+    Levels.heal(spark, docsRoot)
     val docsDDL = "doc_id LONG, clean_text STRING, n_kept LONG, n_dropped LONG"
     val dead = ids.select(col(idCol).cast("long").as("doc_id"))
       .localCheckpoint(true)
@@ -622,7 +601,7 @@ object ForgetOps {
       .localCheckpoint(true)
     val touched = keys.select(col("pb")).distinct()
       .collect().map(_.getInt(0)).toSeq
-    eachLevelPar(spark, batchLevels(spark, idx)) { level =>
+    eachLevelPar(spark, Levels.dirs(spark, idx)) { level =>
       rewritePartitions(spark, level,
         touched.map(pb => Seq("pb" -> pb.toString)),
         dropIds = keys.select(col("__k")), joinCol = "__k",
@@ -630,14 +609,9 @@ object ForgetOps {
     }
     // docs purge stays AFTER the full index rewrite (the crash contract:
     // keys are re-derivable only while the doc rows survive)
-    eachLevelPar(spark, batchLevels(spark, docsRoot)) { level =>
-      stagedOverwrite(level, spark.read
-        .schema(org.apache.spark.sql.types.StructType.fromDDL(docsDDL))
-        .parquet(level)
-        .join(dead, Seq("doc_id"), "left_anti"))
-    }
+    purgeLevels(spark, docsRoot, docsDDL)(_.join(dead, Seq("doc_id"), "left_anti"))
     // lineage fences on both roots (landing levels are always >= 0)
-    fenceIfStreamed(spark, idx, docsRoot)
+    Levels.fence(spark, idx, docsRoot)
   }
 
   /** Forget `ids` from a content-addressed chunk store of EITHER layout
@@ -658,29 +632,22 @@ object ForgetOps {
     * the rewrite. */
   def forgetFromChunkStore(spark: SparkSession, path: String,
       ids: DataFrame, idCol: String = "media_id"): Unit = {
-    if (batchLevels(spark, s"$path/recipes").isEmpty) {
+    if (Levels.dirs(spark, s"$path/recipes").isEmpty) {
       MultimodalOps.deleteFromChunkStore(spark, path, ids, idCol)
       return
     }
     graft.streaming.StreamingOps.compactChunkStore(spark, path)
     val dead = ids.select(col(ids.columns.head).cast("long").as(idCol))
       .localCheckpoint(true)
-    Seq("recipes", "chunks").foreach(r => healStagedLevels(spark, s"$path/$r"))
-    eachLevelPar(spark, batchLevels(spark, s"$path/recipes")) { level =>
-      stagedOverwrite(level, spark.read
-        .schema(s"$idCol LONG, chunk_idx INT, addr STRING").parquet(level)
-        .join(dead, Seq(idCol), "left_anti"))
-    }
+    purgeLevels(spark, s"$path/recipes", s"$idCol LONG, chunk_idx INT, addr STRING")(
+      _.join(dead, Seq(idCol), "left_anti"))
     val live = spark.read
       .schema(s"$idCol LONG, chunk_idx INT, addr STRING, __batch LONG")
       .option("basePath", s"$path/recipes").parquet(s"$path/recipes")
       .select(col("addr")).distinct().localCheckpoint(true)
-    eachLevelPar(spark, batchLevels(spark, s"$path/chunks")) { level =>
-      stagedOverwrite(level, spark.read
-        .schema("addr STRING, chunk_bytes BINARY").parquet(level)
-        .join(live, Seq("addr"), "left_semi"))
-    }
-    fenceIfStreamed(spark, s"$path/recipes", s"$path/chunks")
+    purgeLevels(spark, s"$path/chunks", "addr STRING, chunk_bytes BINARY")(
+      _.join(live, Seq("addr"), "left_semi"))
+    Levels.fence(spark, s"$path/recipes", s"$path/chunks")
   }
 
   /** The EXPLICIT ids-only fallback for a hive-partitioned artifact —
@@ -707,11 +674,14 @@ object ForgetOps {
     require(partCols.nonEmpty, "forgetByScan needs the hive partition columns")
     val rawDead = ids.select(col(ids.columns.head).as(joinCol))
     val sorts = if (sortCols.nonEmpty) sortCols else Seq(joinCol)
-    levelRoots(spark, path).foreach { root =>
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      val f = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (f.exists(rootPath) && f.listStatus(rootPath).exists(
-          _.getPath.getName.startsWith(partCols.head + "="))) {
+    // every level is checked — key width, null partitions — BEFORE the
+    // first rewrite: a refusal on a later level must not leave the
+    // earlier levels already rewritten
+    val rewrites = Levels.dirsOrRoot(spark, path).flatMap { root =>
+      val (f, rootPath) = Levels.fs(spark, root)
+      if (!f.exists(rootPath) || !f.listStatus(rootPath).exists(
+          _.getPath.getName.startsWith(partCols.head + "="))) None
+      else {
         val scanned = spark.read.parquet(root)
           .select((joinCol +: partCols).map(col): _*)
         // cast the ids to the ARTIFACT's join-column type before the
@@ -762,11 +732,14 @@ object ForgetOps {
         val affected = affectedRows
           .map(r => partCols.indices.map(i =>
             partCols(i) -> r.get(i).toString): Seq[(String, String)]).toSeq
-        rewritePartitions(spark, root, affected, dropIds = dead,
-          joinCol = joinCol, sortCols = sorts)
+        Some((root, affected, dead))
       }
     }
-    fenceIfStreamed(spark, path)
+    rewrites.foreach { case (root, affected, dead) =>
+      rewritePartitions(spark, root, affected, dropIds = dead,
+        joinCol = joinCol, sortCols = sorts)
+    }
+    Levels.fence(spark, path)
   }
 
   /** Persist the ATTESTATION of a completed composed forget pass — the
@@ -839,70 +812,6 @@ object ForgetOps {
         "column-pruned-scan fallback), or rebuild the artifact from the " +
         s"surviving corpus. Columns present: ${df.columns.mkString(", ")}")
 
-  /** Replace `dir`'s contents without the mid-Overwrite data-loss window
-    * a same-directory `SaveMode.Overwrite` opens (it truncates the target
-    * at job start, so a crash mid-write loses the directory's SURVIVOR
-    * rows — and the level was their only copy): materialize the new
-    * contents to an invisible `_staged_` SIBLING first, then swap
-    * (delete target, rename staging in). Every crash point leaves the
-    * full row set in at least one of the two directories, and
-    * [[healStagedLevels]] — run by each face before it enumerates levels
-    * — restores the invariant. The staged-rename discipline of
-    * StreamingOps' foldBatchDirs, specialized to one directory. Shared
-    * with [[MultimodalOps.deleteFromChunkStore]] (the same window on the
-    * recipes/chunks rewrite). */
-  private[graft] def stagedOverwrite(dir: String, df: DataFrame): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val f = p.getFileSystem(
-      df.sparkSession.sparkContext.hadoopConfiguration)
-    // a DATALESS existing target (a lineage fence, or a level that landed
-    // nothing) has nothing to rewrite — and "rewriting" it would plant an
-    // empty part file that makes the fence read as a real level (so the
-    // next pass stacks another fence above it, advancing the frontier
-    // past the live stream's next batch id)
-    if (f.exists(p) &&
-        !f.listStatus(p).exists(s => !s.getPath.getName.startsWith("_")))
-      return
-    val staging = new org.apache.hadoop.fs.Path(
-      p.getParent, "_staged_" + p.getName)
-    if (f.exists(staging)) f.delete(staging, true): Unit
-    df.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    require(f.delete(p, true) || !f.exists(p),
-      s"stagedOverwrite: delete $p failed")
-    require(f.rename(staging, p), s"stagedOverwrite: rename $staging -> $p failed")
-  }
-
-  /** Recover [[stagedOverwrite]] crash leftovers under `root`: a
-    * `_staged_<level>` sibling whose level is MISSING holds the survivors
-    * of a swap that crashed between delete and rename — rename it in; one
-    * whose level still exists is a stale (possibly partial) staging from
-    * a crash before the swap — the level is still the complete pre-pass
-    * copy, so drop the staging and let the rerun re-derive. Underscore
-    * prefix keeps leftovers invisible to every parquet reader and to
-    * [[batchLevels]] in the meantime. */
-  private[graft] def healStagedLevels(spark: SparkSession, root: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(p)) return
-    f.listStatus(p).map(_.getPath)
-      .filter(_.getName.startsWith("_staged_")).foreach { st =>
-        val target = new org.apache.hadoop.fs.Path(
-          p, st.getName.stripPrefix("_staged_"))
-        if (!f.exists(target))
-          require(f.rename(st, target), s"healStagedLevels: rename $st failed")
-        else f.delete(st, true): Unit
-      }
-  }
-
-  /** The rewrite roots of a possibly-VERSIONED hive layout: the
-    * `__batch=` levels when present (streamed sinks and level-structured
-    * batch writers), else the root itself (flat batch layouts). Keeps
-    * one face implementation serving both layout generations. */
-  private def levelRoots(spark: SparkSession, path: String): Seq[String] = {
-    val levels = batchLevels(spark, path)
-    if (levels.nonEmpty) levels else Seq(path)
-  }
-
   /** Run `f` once per level with the levels OVERLAPPED on a small pool
     * (optimization guide §2.6): a face's per-level rewrites touch
     * DISJOINT `__batch=` directories and share only read-only (pinned)
@@ -918,54 +827,19 @@ object ForgetOps {
     ()
   }
 
-  /** Land an EMPTY `__batch=max+1` lineage fence on each root that holds
-    * STREAMED deltas (a level >= 0 — a flat layout or a pure `-1` base
-    * has no checkpoint to fence against): a bare directory plus a
-    * `_SUCCESS` marker (the marker materializes the "directory" on
-    * object stores), visible to requireBatchLineage but invisible to
-    * partition discovery and every schema read (a zero-row parquet write
-    * would plant a flat part file under a hive-partitioned root —
-    * conflicting partition depths). After a forget rewrote levels IN
-    * PLACE, a stale-checkpoint stream restart would replay its newest
-    * batch and resurrect the forgotten rows from the replayed payload —
-    * the fence makes it refuse loudly instead; the live stream's NEXT
-    * batch id equals the fence and legitimately overwrites it. */
-  private def fenceIfStreamed(spark: SparkSession, roots: String*): Unit =
-    roots.foreach { root =>
-      val levels = batchLevels(spark, root)
-        .flatMap(l => "__batch=(-?\\d+)".r.findFirstMatchIn(l)
-          .map(_.group(1).toLong))
-      if (levels.exists(_ >= 0)) {
-        val f = new org.apache.hadoop.fs.Path(root)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // idempotent: if the newest level is already DATALESS (a prior
-        // pass's fence, or a real batch that landed nothing — either way
-        // a replay of it re-lands nothing), don't stack another — stacked
-        // fences would advance the frontier past the stream's next batch
-        // id and fence the LIVE stream out permanently
-        val newest = new org.apache.hadoop.fs.Path(
-          s"$root/__batch=${levels.max}")
-        val newestEmpty = !f.listStatus(newest)
-          .exists(s => !s.getPath.getName.startsWith("_"))
-        if (!newestEmpty) {
-          val dir = new org.apache.hadoop.fs.Path(
-            s"$root/__batch=${levels.max + 1L}")
-          f.mkdirs(dir): Unit
-          f.create(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"), true).close()
-        }
-      }
+  /** Rewrite every level under `root` to `keep(level rows)` through
+    * [[Levels.stagedOverwrite]] — each level is the only copy of its
+    * survivor rows, so it swaps via staging, never truncates in place —
+    * after healing a prior pass's crashed swap ([[Levels.heal]]). */
+  private def purgeLevels(spark: SparkSession, root: String, ddl: String)(
+      keep: DataFrame => DataFrame): Unit = {
+    Levels.heal(spark, root)
+    eachLevelPar(spark, Levels.dirs(spark, root)) { level =>
+      Levels.stagedOverwrite(level, keep(spark.read.schema(ddl).parquet(level)))
     }
-
-  /** The `__batch=` level directories under `root` (empty when `root`
-    * itself is absent). Sorted for deterministic iteration. */
-  private def batchLevels(spark: SparkSession, root: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(p)) Seq.empty
-    else f.listStatus(p).map(_.getPath)
-      .filter(_.getName.startsWith("__batch="))
-      .map(_.toString).toSeq.sorted
   }
+
+  private val EdgesDDL = "vec_id LONG, neighbor_id LONG, sim DOUBLE, rank INT"
 
   /** The shared partition-pruned rewrite: read ONLY the named hive
     * partitions, anti-join the ids, dynamic-overwrite them, and delete

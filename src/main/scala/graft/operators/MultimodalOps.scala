@@ -330,7 +330,7 @@ object MultimodalOps {
     * the chunk set is a SUPERSET of what live recipes need, so kept
     * payloads always reassemble; a crash merely leaves orphans, and
     * rerunning (even with no deletes) is the orphan vacuum. Both
-    * rewrites swap through staged siblings (ForgetOps.stagedOverwrite),
+    * rewrites swap through staged siblings (Levels.stagedOverwrite),
     * so no crash point loses survivor rows either. Single-writer ⇒ the
     * plain-tier single-mutator contract
     * ([[graft.sources.Storage.deleteAndRewrite]]); a store that must
@@ -345,13 +345,13 @@ object MultimodalOps {
     // staged swaps, not in-place Overwrite: each directory is the only
     // copy of its survivor rows, and a same-dir Overwrite truncates at
     // job start — a driver crash mid-write would lose survivors (the
-    // ForgetOps.stagedOverwrite window). Heal first: a prior pass may
+    // Levels.stagedOverwrite window). Heal first: a prior pass may
     // have crashed between truncation and install.
-    ForgetOps.healStagedLevels(spark, path)
-    ForgetOps.stagedOverwrite(s"$path/recipes",
+    graft.sources.Levels.heal(spark, path)
+    graft.sources.Levels.stagedOverwrite(s"$path/recipes",
       spark.read.parquet(s"$path/recipes")
         .join(deleteIds.select(col(idCol)), Seq(idCol), "left_anti"))
-    ForgetOps.stagedOverwrite(s"$path/chunks",
+    graft.sources.Levels.stagedOverwrite(s"$path/chunks",
       spark.read.parquet(s"$path/chunks")
         .join(spark.read.parquet(s"$path/recipes").select(col("addr")).distinct(),
           Seq("addr"), "left_semi"))
@@ -401,17 +401,11 @@ object MultimodalOps {
     * replay semantics. */
   private def requireFlatStore(
       spark: org.apache.spark.sql.SparkSession, path: String, op: String): Unit = {
-    val recipes = new org.apache.hadoop.fs.Path(s"$path/recipes")
-    val f = recipes.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (f.exists(recipes)) {
-      val leveled = f.listStatus(recipes)
-        .exists(_.getPath.getName.startsWith("__batch="))
-      require(!leveled,
-        s"$op: $path is a STREAMED chunk store (batch-id-derived levels) — " +
-          "in-place batch maintenance would corrupt the streaming sink's " +
-          "idempotence discipline; use compactChunkStore and the stream's own " +
-          "replay semantics, or rebuild into a flat store first")
-    }
+    require(graft.sources.Levels.ids(spark, s"$path/recipes").isEmpty,
+      s"$op: $path is a STREAMED chunk store (batch-id-derived levels) — " +
+        "in-place batch maintenance would corrupt the streaming sink's " +
+        "idempotence discipline; use compactChunkStore and the stream's own " +
+        "replay semantics, or rebuild into a flat store first")
   }
 
   /** The shared 8×8 DCT-II basis — see

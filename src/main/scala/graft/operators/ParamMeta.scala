@@ -64,9 +64,13 @@ private[graft] object ParamMeta {
       fields: Seq[(String, Long)], what: String, rebuildHint: String): Unit =
     readText(spark, path).foreach { text =>
       val bad = mismatches(text, fields)
-      require(bad.isEmpty,
-        s"$what disagree with the index at $path " +
-          s"(${bad.mkString(", ")}) — probe with the index's parameters " +
-          s"or rebuild it with $rebuildHint")
+      require(bad.isEmpty, refusal(path, what, rebuildHint)(bad))
     }
+
+  /** [[assertMatches]]' refusal wording over rendered mismatches. */
+  def refusal(path: String, what: String, rebuildHint: String)(
+      bad: Seq[String]): String =
+    s"$what disagree with the index at $path " +
+      s"(${bad.mkString(", ")}) — probe with the index's parameters " +
+      s"or rebuild it with $rebuildHint"
 }

@@ -132,12 +132,10 @@ object RetrievalOps {
   def writePostingsIndex(docs: DataFrame, path: String, nPt: Int = 16): Unit = {
     require(nPt >= 1, "nPt >= 1")
     val spark = docs.sparkSession
-    val base = new org.apache.hadoop.fs.Path(path, "__batch=-1")
-    val f = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(!f.exists(base), s"$base already exists — writePostingsIndex bootstraps once")
+    val base = graft.sources.Levels.newBase(spark, path, "writePostingsIndex")
     writePostingsMeta(spark, path, nPt)
-    writeDocsDelta(docs, s"$path/_docs/__batch=-1", "doc_id", "text")
-    writePostingsDelta(docs, s"$path/__batch=-1", nPt, "doc_id", "text")
+    writeDocsDelta(docs, graft.sources.Levels.base(s"$path/_docs"), "doc_id", "text")
+    writePostingsDelta(docs, base, nPt, "doc_id", "text")
   }
 
   /** One level of the pt-partitioned postings layout (shared by the batch

@@ -1469,7 +1469,7 @@ object TextOps {
     shinglePartialCounts(corpus, k, nPb, hashed, src = -1L)
       .repartition(col("pb"))
       .write.mode(org.apache.spark.sql.SaveMode.ErrorIfExists)
-      .partitionBy("pb").parquet(s"$path/__batch=-1")
+      .partitionBy("pb").parquet(graft.sources.Levels.base(path))
     writeSpanMeta(corpus.sparkSession, path, k, nPb, hashed)
   }
 

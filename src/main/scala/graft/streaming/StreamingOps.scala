@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 import org.apache.spark.sql.Row
 import graft.functions.TimeFns
+import graft.sources.Levels
+import graft.sources.Levels.requireBatchLineage
 
 /** Structured Streaming extensions (SURVEY.md §7 step 10 — additive; the
   * reference has no streaming engine, its "replay" is batch streaming).
@@ -57,6 +59,14 @@ object StreamingOps {
   def indexStream(events: DataFrame): DataFrame =
     graft.operators.IndexOps.buildIndex(events)
 
+  /** The one sink wiring every `foreachBatch` stream below shares: Append
+    * output, `checkpoint` as the checkpoint location, `body` per
+    * micro-batch. */
+  private def sink(df: DataFrame, checkpoint: String)(
+      body: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    df.writeStream.outputMode(OutputMode.Append())
+      .option("checkpointLocation", checkpoint).foreachBatch(body)
+
   /** Write a streaming frame to a memory sink for inspection/tests. */
   def toMemorySink(df: DataFrame, name: String, mode: OutputMode): DataStreamWriter[Row] =
     df.writeStream.format("memory").queryName(name).outputMode(mode)
@@ -75,12 +85,8 @@ object StreamingOps {
     * whose per-batch commit participates in the Generations manifest CAS. */
   def ingestTo(events: DataFrame, path: String, checkpoint: String,
       nBuckets: Int = graft.sources.Storage.DefaultBuckets): DataStreamWriter[Row] =
-    events.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.sources.Storage.appendEvents(batch, path, nBuckets)
-      }
+    sink(events, checkpoint)((batch, _) =>
+      graft.sources.Storage.appendEvents(batch, path, nBuckets))
 
   /** Streaming ingest into the VERSIONED (MVCC) layout: each micro-batch
     * is one `Generations.appendAndPromote` under `withConflictRetry`, so a
@@ -99,15 +105,12 @@ object StreamingOps {
     * note). */
   def ingestToVersioned(events: DataFrame, root: String, checkpoint: String,
       nBuckets: Int = graft.sources.Storage.DefaultBuckets): DataStreamWriter[Row] =
-    events.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.sources.Generations.withConflictRetry() {
-          graft.sources.Generations.appendAndPromote(
-            batch.sparkSession, root, batch, nBuckets)
-        }: Unit
-      }
+    sink(events, checkpoint) { (batch, _) =>
+      graft.sources.Generations.withConflictRetry() {
+        graft.sources.Generations.appendAndPromote(
+          batch.sparkSession, root, batch, nBuckets)
+      }: Unit
+    }
 
   /** Continuous index MAINTENANCE (E5's streaming analogue): each
     * micro-batch of canonical event rows is projected through the A6
@@ -118,12 +121,8 @@ object StreamingOps {
     * IndexByEventTypeStore.cs:44-61). Gated by q_stream_index: an
     * availability-now run's readback equals the batch derivation oracle. */
   def indexTo(events: DataFrame, path: String, checkpoint: String): DataStreamWriter[Row] =
-    events.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.sources.Storage.appendIndex(indexStream(batch), path)
-      }
+    sink(events, checkpoint)((batch, _) =>
+      graft.sources.Storage.appendIndex(indexStream(batch), path))
 
   /** Streaming index DELETE maintenance — A7's streaming twin (the
     * reference deletes index records alongside event deletes,
@@ -137,12 +136,8 @@ object StreamingOps {
     * at-least-once replay is harmless: re-deleting absent records rewrites
     * the same survivors (idempotent). */
   def indexDeleteStream(tombstones: DataFrame, path: String, checkpoint: String): DataStreamWriter[Row] =
-    tombstones.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.sources.Storage.deleteIndexAndRewrite(batch.sparkSession, path, batch)
-      }
+    sink(tombstones, checkpoint)((batch, _) =>
+      graft.sources.Storage.deleteIndexAndRewrite(batch.sparkSession, path, batch))
 
   /** Streaming forget feed for the LSH MinHash index — the compliance
     * queue shape ([[indexDeleteStream]]'s reasoning, on the §G tier):
@@ -162,13 +157,10 @@ object StreamingOps {
       checkpoint: String, idCol: String = "doc_id", textCol: String = "text",
       shingleK: Int = 3, nHashes: Int = 16, bands: Int = 4,
       nBuckets: Int = 64): DataStreamWriter[Row] =
-    tombstones.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.ForgetOps.forgetFromLshIndex(batch.sparkSession,
-          indexPath, batch, idCol, textCol, shingleK, nHashes, bands, nBuckets)
-      }
+    sink(tombstones, checkpoint) { (batch, _) =>
+      graft.operators.ForgetOps.forgetFromLshIndex(batch.sparkSession,
+        indexPath, batch, idCol, textCol, shingleK, nHashes, bands, nBuckets)
+    }
 
   /** The COMPOSED compliance queue — [[lshForgetStream]] generalized to
     * every payload-deriving face: ONE tombstone stream (documents with
@@ -223,45 +215,42 @@ object StreamingOps {
       spanK: Int = 3, nPb: Int = 16, hashed: Boolean = true,
       fps: Int = 4, frameK: Int = 8,
       phashBuckets: Int = 64): DataStreamWriter[Row] =
-    tombstones.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.operators.{ForgetOps, MultimodalOps}
-        val s = batch.sparkSession
-        // up to six faces re-read the tombstones — pin once per batch
-        val b = batch.localCheckpoint(true)
-        // the wired faces touch DISJOINT artifact roots and share only
-        // the pinned tombstones — pool them per micro-batch (optimization
-        // guide §2.6, operators.Par): each face is a chain of small
-        // driver actions (sign, collect keys, rewrite), so run serially
-        // most cores idle through every chain's scheduling tail. The
-        // single-maintainer contract is unchanged (each artifact still
-        // has exactly ONE mutator — this batch), and no face toggles
-        // session conf (rewrites use the per-write overwrite option).
-        val faces = Seq[Option[() => Unit]](
-          lshPath.map(p => () => ForgetOps.forgetFromLshIndex(s, p, b,
-            idCol, textCol, shingleK, nHashes, bands, nBuckets)),
-          phashPath.map(p => () => ForgetOps.forgetFromPhashIndex(s, p,
-            MultimodalOps.mediaFromDocuments(b), fps, frameK, phashBuckets)),
-          postingsPath.map(p => () => ForgetOps.forgetFromPostingsIndex(s, p, b,
-            nPt, idCol, textCol)),
-          shinglePath.map(p => () => ForgetOps.forgetFromShingleIndex(s, p, b,
-            spanK, nPb, hashed, idCol, textCol, passId = batchId)),
-          sq8Path.map(p => () => ForgetOps.forgetFromCellIndex(s, p, b,
-            centroids, idCol, vecCol)),
-          pqPath.map(p => () => ForgetOps.forgetFromPqIndex(s, p, b,
-            centroids, codebooks, idCol, vecCol)),
-          chunkStorePath.map(p => () => ForgetOps.forgetFromChunkStore(s, p,
-            b.select(col(idCol).as("media_id")))),
-          knnStorePath.map(p => () => ForgetOps.forgetFromKnnGraphStore(s, p, b,
-            knnK, knnNProbe, centroids, idCol)),
-          curatedPath.map(p => () => ForgetOps.forgetFromCuratedLanding(s, p, b,
-            curatedChunkSize, curatedNPb, idCol))
-        ).flatten
-        graft.operators.Par.run(s, parallelism = 4)(faces: _*)
-        ()
-      }
+    sink(tombstones, checkpoint) { (batch, batchId) =>
+      import graft.operators.{ForgetOps, MultimodalOps}
+      val s = batch.sparkSession
+      // up to six faces re-read the tombstones — pin once per batch
+      val b = batch.localCheckpoint(true)
+      // the wired faces touch DISJOINT artifact roots and share only
+      // the pinned tombstones — pool them per micro-batch (optimization
+      // guide §2.6, operators.Par): each face is a chain of small
+      // driver actions (sign, collect keys, rewrite), so run serially
+      // most cores idle through every chain's scheduling tail. The
+      // single-maintainer contract is unchanged (each artifact still
+      // has exactly ONE mutator — this batch), and no face toggles
+      // session conf (rewrites use the per-write overwrite option).
+      val faces = Seq[Option[() => Unit]](
+        lshPath.map(p => () => ForgetOps.forgetFromLshIndex(s, p, b,
+          idCol, textCol, shingleK, nHashes, bands, nBuckets)),
+        phashPath.map(p => () => ForgetOps.forgetFromPhashIndex(s, p,
+          MultimodalOps.mediaFromDocuments(b), fps, frameK, phashBuckets)),
+        postingsPath.map(p => () => ForgetOps.forgetFromPostingsIndex(s, p, b,
+          nPt, idCol, textCol)),
+        shinglePath.map(p => () => ForgetOps.forgetFromShingleIndex(s, p, b,
+          spanK, nPb, hashed, idCol, textCol, passId = batchId)),
+        sq8Path.map(p => () => ForgetOps.forgetFromCellIndex(s, p, b,
+          centroids, idCol, vecCol)),
+        pqPath.map(p => () => ForgetOps.forgetFromPqIndex(s, p, b,
+          centroids, codebooks, idCol, vecCol)),
+        chunkStorePath.map(p => () => ForgetOps.forgetFromChunkStore(s, p,
+          b.select(col(idCol).as("media_id")))),
+        knnStorePath.map(p => () => ForgetOps.forgetFromKnnGraphStore(s, p, b,
+          knnK, knnNProbe, centroids, idCol)),
+        curatedPath.map(p => () => ForgetOps.forgetFromCuratedLanding(s, p, b,
+          curatedChunkSize, curatedNPb, idCol))
+      ).flatten
+      graft.operators.Par.run(s, parallelism = 4)(faces: _*)
+      ()
+    }
 
   /** Streaming CURATED landing: each micro-batch of documents (doc_id,
     * text) is paragraph-deduped against the ACCUMULATED corpus — an
@@ -303,12 +292,7 @@ object StreamingOps {
     * still lands, per the paragraphDedup contract). */
   def curatedIngest(docs: DataFrame, outDir: String, checkpoint: String,
       chunkSize: Int = 8, nPb: Int = 64): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        curatedBatch(batch, batchId, outDir, chunkSize, nPb)
-      }
+    sink(docs, checkpoint)(curatedBatch(_, _, outDir, chunkSize, nPb))
 
   /** One [[curatedIngest]] micro-batch (extracted so specs can drive
     * replay/crash orderings directly). Deterministic given (batch contents,
@@ -318,8 +302,7 @@ object StreamingOps {
       chunkSize: Int, nPb: Int): Unit = {
     val s = batch.sparkSession
     val idx = s"$outDir/_para_index"
-    val idxPath = new org.apache.hadoop.fs.Path(idx)
-    val f = idxPath.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val (f, idxPath) = Levels.fs(s, idx)
     requireBatchLineage(f, idxPath, batchId, "curatedIngest", outDir)
     // docs/ is written FIRST each batch, so a crash between the two
     // writes leaves it one batch ahead of the index — guard it too
@@ -330,20 +313,14 @@ object StreamingOps {
     // the landing's key geometry, pinned like every persisted index: a
     // restart (or a forget pass) with drifted chunkSize/nPb would probe
     // the wrong pb directories / mis-key paragraphs silently
-    graft.operators.ParamMeta.assertMatches(s, idx,
-      Seq("chunkSize" -> chunkSize.toLong, "nPb" -> nPb.toLong),
-      "curated-landing parameters", "a fresh curatedIngest outDir")
-    if (!f.exists(new org.apache.hadoop.fs.Path(idx, "_meta.json"))) {
-      if (!f.exists(idxPath)) f.mkdirs(idxPath): Unit
-      graft.operators.ParamMeta.write(s, idx,
-        Seq("chunkSize" -> chunkSize.toLong, "nPb" -> nPb.toLong))
-    }
+    Levels.pin(s, idx, Seq("chunkSize" -> chunkSize.toLong, "nPb" -> nPb.toLong),
+      "probe")(graft.operators.ParamMeta.refusal(idx, "curated-landing parameters",
+      "a fresh curatedIngest outDir"))
     // a compactParaIndex crash can leave the folded keys visible only in
     // staging/retired leftovers (the hide window) — admissions computed
     // against the visible levels alone would re-admit known paragraphs
     // DURABLY, so heal the layout before the corpus read
-    healFoldLeftovers(s, idx, "__k LONG, pb INT",
-      dedupKeys = Seq("__k", "pb"), partitionCols = Seq("pb"))
+    Levels.healFoldLeftovers(s, idx, paraIndexFold(s))
     val paras = graft.operators.TextOps.chunkTokens(
         batch.withColumn("text", coalesce(col("text"), lit(""))),
         chunkSize, chunkSize)
@@ -385,33 +362,20 @@ object StreamingOps {
   /** Fold [[curatedIngest]]'s one-directory-per-batch index deltas into a
     * single base (`__batch=-1`, one file per pb directory) so the per-batch
     * corpus read stays O(touched pb directories) instead of growing a file
-    * per historical batch. MUST NOT run concurrently with the stream (the
-    * same single-maintainer contract as [[graft.sources.Storage.compact]]).
-    *
-    * Crash-safe by ordering, not atomicity: the distinct key set is staged
-    * under an underscore-prefixed directory (invisible to readers), the old
-    * base is retired, the staging renamed in, and only then are the deltas
-    * dropped. Every intermediate state either preserves all keys in
-    * visible directories or is recoverable by RERUNNING compactParaIndex
-    * (which unions staging/retired back in); the one overlap window —
-    * base installed, deltas not yet dropped — duplicates keys, which the
-    * union-window flag pass tolerates by construction (corpus presence is
-    * a partition max, never a join — no row multiplication, no
-    * re-admission).
-    *
-    * The NEWEST delta is never folded: the stream may have crashed after
-    * writing it but before the checkpoint committed, in which case that
-    * batch will REPLAY on restart — and a replay must still find its own
-    * keys under its own `__batch=<id>` directory, where the corpus read's
-    * `__batch < id` filter excludes them. Folded into the `-1` base they
-    * would read as prior corpus and the replay would flag every one of its
-    * own paragraphs as a duplicate, landing the batch with empty text
-    * (the content-loss window the batch-id layout exists to close). Only
-    * deltas strictly below the newest are provably checkpoint-committed
-    * (batch N+1 ran ⇒ batch N committed) and safe to relabel. */
+    * per historical batch — the leveled fold (README, "Leveled artifact
+    * layout": crash order, single maintainer, newest-delta protection).
+    * The fold's overlap window duplicates keys, which the union-window
+    * flag pass tolerates by construction (corpus presence is a partition
+    * max, never a join — no row multiplication, no re-admission). The
+    * protected newest delta matters here: a replayed batch must still
+    * find its own keys under its own level, where the corpus read's
+    * `__batch < id` filter excludes them — folded into the base they
+    * would read as prior corpus and the replay would land empty text. */
   def compactParaIndex(spark: SparkSession, outDir: String): Unit =
-    foldBatchDirs(spark, s"$outDir/_para_index", "__k LONG, pb INT",
-      dedupKeys = Seq("__k", "pb"), partitionCols = Seq("pb"))
+    Levels.fold(spark, s"$outDir/_para_index", paraIndexFold(spark))
+
+  private def paraIndexFold(spark: SparkSession) =
+    Levels.dedupOn(spark, "__k LONG, pb INT", Seq("__k", "pb"), Seq("pb"))
 
   /** Fold [[curatedIngest]]'s one-directory-per-batch DOCS deltas into a
     * `__batch=-1` base — the docs-side twin of [[compactParaIndex]], same
@@ -430,29 +394,8 @@ object StreamingOps {
     * visible to readers inside that crash window; rerunning this operator
     * converges the directory. */
   def compactCuratedDocs(spark: SparkSession, outDir: String): Unit =
-    foldBatchDirs(spark, s"$outDir/docs",
-      "doc_id LONG, clean_text STRING, n_kept LONG, n_dropped LONG",
-      dedupKeys = Seq("doc_id"), partitionCols = Seq.empty)
-
-  /** Checkpoint-lineage guard for `__batch=<id>`-structured sinks: under
-    * ONE checkpoint batch ids only move forward, so an existing delta
-    * AHEAD of this batch means the directory belongs to a different
-    * (older) checkpoint — proceeding would clobber its batch-id-derived
-    * directories and (for frontier-carrying sinks) read a wrong corpus
-    * frontier. A replay of THIS batch legitimately sees its own id,
-    * never more. */
-  private def requireBatchLineage(f: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path, batchId: Long, op: String, outDir: String): Unit =
-    if (f.exists(dir)) {
-      val ahead = f.listStatus(dir)
-        .map(_.getPath.getName).filter(_.startsWith("__batch="))
-        .map(_.stripPrefix("__batch=").toLong).filter(_ > batchId)
-      require(ahead.isEmpty,
-        s"$op: $outDir already holds batch ${if (ahead.isEmpty) -1 else ahead.max} " +
-          s"but this checkpoint is at batch $batchId — the sink was written by a " +
-          "different checkpoint lineage; use a fresh output directory (or the " +
-          "original checkpoint) instead of silently overwriting its history")
-    }
+    Levels.fold(spark, s"$outDir/docs", Levels.dedupOn(spark,
+      "doc_id LONG, clean_text STRING, n_kept LONG, n_dropped LONG", Seq("doc_id")))
 
   /** Streaming ANN-index maintenance: each micro-batch of embeddings is
     * assigned to its nearest FROZEN centroid (a shuffle-free codegen
@@ -479,20 +422,14 @@ object StreamingOps {
   def ivfIndexStream(embeddings: DataFrame, centroids: Seq[(Int, Seq[Double])],
       path: String, checkpoint: String,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataStreamWriter[Row] =
-    embeddings.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ivfBatch(batch, batchId, centroids, path, idCol, vecCol)
-      }
+    sink(embeddings, checkpoint)(ivfBatch(_, _, centroids, path, idCol, vecCol))
 
   /** One [[ivfIndexStream]] micro-batch (extracted so specs can drive
     * replay/crash orderings directly). */
   private[graft] def ivfBatch(batch: DataFrame, batchId: Long,
       centroids: Seq[(Int, Seq[Double])], path: String,
       idCol: String, vecCol: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val f = p.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
+    val (f, p) = Levels.fs(batch.sparkSession, path)
     requireBatchLineage(f, p, batchId, "ivfIndexStream", path)
     writeIvfCells(batch, centroids, s"$path/__batch=$batchId", idCol, vecCol)
   }
@@ -502,7 +439,7 @@ object StreamingOps {
     * [[ivfIndexStream]] appends deltas above it. */
   def ivfIndexBase(embeddings: DataFrame, centroids: Seq[(Int, Seq[Double])],
       path: String, idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
-    writeIvfCells(embeddings, centroids, s"$path/__batch=-1", idCol, vecCol)
+    writeIvfCells(embeddings, centroids, Levels.base(path), idCol, vecCol)
 
   private def writeIvfCells(embeddings: DataFrame, centroids: Seq[(Int, Seq[Double])],
       dir: String, idCol: String, vecCol: String): Unit = {
@@ -519,13 +456,14 @@ object StreamingOps {
   }
 
   /** Fold [[ivfIndexStream]]'s per-batch deltas into the `__batch=-1`
-    * base — same staged-rename fold, single-maintainer contract and
-    * newest-delta protection as [[compactParaIndex]]. Dedup on the vec id
+    * base — the leveled fold (README, "Leveled artifact layout"). Dedup on the vec id
     * is lossless for the same reason as the docs fold: each id lands in
     * exactly one batch with deterministic content. */
   def compactIvfIndex(spark: SparkSession, path: String): Unit =
-    foldBatchDirs(spark, path, "id LONG, v ARRAY<DOUBLE>, cell INT",
-      dedupKeys = Seq("id"), partitionCols = Seq("cell"))
+    Levels.fold(spark, path, ivfFold(spark))
+
+  private def ivfFold(spark: SparkSession) =
+    Levels.dedupOn(spark, "id LONG, v ARRAY<DOUBLE>, cell INT", Seq("id"), Seq("cell"))
 
   /** Streaming k-NN GRAPH maintenance — the edge-set twin of
     * [[ivfIndexStream]]: each micro-batch of new embeddings folds into
@@ -554,12 +492,7 @@ object StreamingOps {
   def knnGraphStream(embeddings: DataFrame, centroids: Seq[(Int, Seq[Double])],
       k: Int, nProbe: Int, path: String, checkpoint: String,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataStreamWriter[Row] =
-    embeddings.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        knnGraphBatch(batch, batchId, centroids, k, nProbe, path, idCol, vecCol)
-      }
+    sink(embeddings, checkpoint)(knnGraphBatch(_, _, centroids, k, nProbe, path, idCol, vecCol))
 
   /** One [[knnGraphStream]] micro-batch (extracted so specs can drive
     * replay/crash orderings directly). */
@@ -571,8 +504,7 @@ object StreamingOps {
     graft.plans.GraftFunctions.register(spark)
     val corpusDir = s"$path/corpus"
     val edgesDir = s"$path/edges"
-    val f = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (f, _) = Levels.fs(spark, path)
     // one guard per root the batch writes (corpus/ lands first, edges/
     // second — guarding only one would leave the other's crash orphan
     // overwritable by a foreign checkpoint)
@@ -653,16 +585,14 @@ object StreamingOps {
       spark.read.option("basePath", s"$path/edges").parquet(s"$path/edges"))
 
   /** Fold committed edge deltas into the `__batch=-1` base with
-    * LATEST-WINS resolution ([[foldBatchDirsLatestWins]] on the query
+    * LATEST-WINS resolution ([[Levels.latestWinsOn]] on the query
     * id — `dropDuplicates` would be WRONG here: a query's superseded
     * snapshots are not duplicate rows). The corpus side folds with
     * [[compactIvfIndex]]'s machinery (ids are write-once there). */
   def compactKnnGraph(spark: SparkSession, path: String): Unit = {
-    foldBatchDirs(spark, s"$path/corpus", "id LONG, v ARRAY<DOUBLE>, cell INT",
-      dedupKeys = Seq("id"), partitionCols = Seq("cell"))
-    foldBatchDirsLatestWins(spark, s"$path/edges",
-      "vec_id LONG, neighbor_id LONG, sim DOUBLE, rank INT",
-      keyCols = Seq("vec_id"))
+    Levels.fold(spark, s"$path/corpus", ivfFold(spark))
+    Levels.fold(spark, s"$path/edges", Levels.latestWinsOn(spark,
+      "vec_id LONG, neighbor_id LONG, sim DOUBLE, rank INT", Seq("vec_id")))
   }
 
   /** Streaming IVF-PQ index maintenance — the compressed-codes twin of
@@ -690,12 +620,7 @@ object StreamingOps {
   def pqIndexStream(embeddings: DataFrame, centroids: Seq[(Int, Seq[Double])],
       codebooks: Seq[Seq[(Int, Seq[Double])]], path: String, checkpoint: String,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataStreamWriter[Row] =
-    embeddings.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        pqBatch(batch, batchId, centroids, codebooks, path, idCol, vecCol)
-      }
+    sink(embeddings, checkpoint)(pqBatch(_, _, centroids, codebooks, path, idCol, vecCol))
 
   /** One [[pqIndexStream]] micro-batch (extracted so specs can drive
     * replay/crash orderings directly). */
@@ -703,8 +628,7 @@ object StreamingOps {
       centroids: Seq[(Int, Seq[Double])], codebooks: Seq[Seq[(Int, Seq[Double])]],
       path: String, idCol: String, vecCol: String): Unit = {
     val s = batch.sparkSession
-    val p = new org.apache.hadoop.fs.Path(path)
-    val f = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val (f, p) = Levels.fs(s, path)
     requireBatchLineage(f, p, batchId, "pqIndexStream", path)
     graft.operators.SimilarityOps.assertPqMeta(s, path, centroids, codebooks, "pqIndexStream")
     // sidecar BEFORE the first landing (the lshBatch crash-window rule)
@@ -718,13 +642,10 @@ object StreamingOps {
   def pqIndexBase(embeddings: DataFrame, centroids: Seq[(Int, Seq[Double])],
       codebooks: Seq[Seq[(Int, Seq[Double])]], path: String,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val f = p.getFileSystem(embeddings.sparkSession.sparkContext.hadoopConfiguration)
-    val dir = new org.apache.hadoop.fs.Path(p, "__batch=-1")
-    require(!f.exists(dir), s"$dir already exists — pqIndexBase bootstraps once")
+    val dir = Levels.newBase(embeddings.sparkSession, path, "pqIndexBase")
     graft.operators.SimilarityOps.writePqMeta(
       embeddings.sparkSession, path, centroids, codebooks)
-    writePqCells(embeddings, centroids, codebooks, dir.toString, idCol, vecCol)
+    writePqCells(embeddings, centroids, codebooks, dir, idCol, vecCol)
   }
 
   private def writePqCells(embeddings: DataFrame, centroids: Seq[(Int, Seq[Double])],
@@ -742,13 +663,14 @@ object StreamingOps {
   }
 
   /** Fold [[pqIndexStream]]'s per-batch deltas into the `__batch=-1`
-    * base — the established staged-rename fold, single-maintainer
-    * contract and newest-delta protection. Dedup on the vec id is
+    * base — the leveled fold (README, "Leveled artifact layout"). Dedup on the vec id is
     * lossless ([[compactIvfIndex]]'s argument: each id lands in exactly
     * one batch with deterministic codes). */
   def compactPqIndex(spark: SparkSession, path: String): Unit =
-    foldBatchDirs(spark, path, "id LONG, codes ARRAY<INT>, cell INT",
-      dedupKeys = Seq("id"), partitionCols = Seq("cell"))
+    Levels.fold(spark, path, codesFold(spark))
+
+  private def codesFold(spark: SparkSession) =
+    Levels.dedupOn(spark, "id LONG, codes ARRAY<INT>, cell INT", Seq("id"), Seq("cell"))
 
   /** Streaming IVF-SQ8 index maintenance — [[pqIndexStream]] one rung
     * down the compression ladder: each micro-batch lands codes-only
@@ -759,12 +681,7 @@ object StreamingOps {
   def sq8IndexStream(embeddings: DataFrame, centroids: Seq[(Int, Seq[Double])],
       path: String, checkpoint: String,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataStreamWriter[Row] =
-    embeddings.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sq8Batch(batch, batchId, centroids, path, idCol, vecCol)
-      }
+    sink(embeddings, checkpoint)(sq8Batch(_, _, centroids, path, idCol, vecCol))
 
   /** One [[sq8IndexStream]] micro-batch (extracted so specs can drive
     * replay/crash orderings directly). */
@@ -772,8 +689,7 @@ object StreamingOps {
       centroids: Seq[(Int, Seq[Double])], path: String,
       idCol: String, vecCol: String): Unit = {
     val s = batch.sparkSession
-    val p = new org.apache.hadoop.fs.Path(path)
-    val f = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val (f, p) = Levels.fs(s, path)
     requireBatchLineage(f, p, batchId, "sq8IndexStream", path)
     graft.operators.SimilarityOps.assertSq8Meta(s, path, centroids, "sq8IndexStream")
     // sidecar BEFORE the first landing (the lshBatch crash-window rule)
@@ -787,13 +703,10 @@ object StreamingOps {
     * (`__batch=-1`), recording the geometry sidecar. */
   def sq8IndexBase(embeddings: DataFrame, centroids: Seq[(Int, Seq[Double])],
       path: String, idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val f = p.getFileSystem(embeddings.sparkSession.sparkContext.hadoopConfiguration)
-    val dir = new org.apache.hadoop.fs.Path(p, "__batch=-1")
-    require(!f.exists(dir), s"$dir already exists — sq8IndexBase bootstraps once")
+    val dir = Levels.newBase(embeddings.sparkSession, path, "sq8IndexBase")
     graft.operators.SimilarityOps.writeSq8Meta(embeddings.sparkSession, path, centroids,
       centroids.headOption.map(_._2.size).getOrElse(0))
-    writeSq8Cells(embeddings, centroids, dir.toString, idCol, vecCol)
+    writeSq8Cells(embeddings, centroids, dir, idCol, vecCol)
   }
 
   private def writeSq8Cells(embeddings: DataFrame, centroids: Seq[(Int, Seq[Double])],
@@ -814,8 +727,7 @@ object StreamingOps {
     * [[compactPqIndex]]: each id lands in exactly one batch with
     * deterministic codes. */
   def compactSq8Index(spark: SparkSession, path: String): Unit =
-    foldBatchDirs(spark, path, "id LONG, codes ARRAY<INT>, cell INT",
-      dedupKeys = Seq("id"), partitionCols = Seq("cell"))
+    Levels.fold(spark, path, codesFold(spark))
 
   /** Streaming postings-index maintenance — the lexical-retrieval twin of
     * the ANN index sinks: each micro-batch of documents lands (a) its
@@ -843,20 +755,14 @@ object StreamingOps {
   def postingsStream(docs: DataFrame, path: String, checkpoint: String,
       nPt: Int = 16, idCol: String = "doc_id", textCol: String = "text")
       : DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        postingsBatch(batch, batchId, path, nPt, idCol, textCol)
-      }
+    sink(docs, checkpoint)(postingsBatch(_, _, path, nPt, idCol, textCol))
 
   /** One [[postingsStream]] micro-batch (extracted so specs can drive
     * replay/crash orderings directly). */
   private[graft] def postingsBatch(batch: DataFrame, batchId: Long, path: String,
       nPt: Int, idCol: String, textCol: String): Unit = {
     val s = batch.sparkSession
-    val p = new org.apache.hadoop.fs.Path(path)
-    val f = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val (f, p) = Levels.fs(s, path)
     requireBatchLineage(f, p, batchId, "postingsStream", path)
     // guard the `_docs` sidecar root too: it is written FIRST, so a crash
     // between the two writes leaves it one batch ahead of the postings
@@ -882,11 +788,11 @@ object StreamingOps {
     * with deterministic rows, so overlap-window duplicates are
     * identical. */
   def compactPostingsIndex(spark: SparkSession, path: String): Unit = {
-    foldBatchDirs(spark, path,
+    Levels.fold(spark, path, Levels.dedupOn(spark,
       "tok STRING, doc_id LONG, tf LONG, positions ARRAY<LONG>, pt INT",
-      dedupKeys = Seq("tok", "doc_id"), partitionCols = Seq("pt"))
-    foldBatchDirs(spark, s"$path/_docs", "doc_id LONG, dl LONG",
-      dedupKeys = Seq("doc_id"), partitionCols = Seq.empty)
+      Seq("tok", "doc_id"), Seq("pt")))
+    Levels.fold(spark, s"$path/_docs",
+      Levels.dedupOn(spark, "doc_id LONG, dl LONG", Seq("doc_id")))
   }
 
   /** Incremental/streaming concat-and-chunk packing — the packed
@@ -927,13 +833,8 @@ object StreamingOps {
       seqLen: Long, blockSeqs: Long = 1024L, blockTokens: Long = 1L << 20,
       idCol: String = "doc_id", textCol: String = "text",
       chunkSize: Long = 1L << 20): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        packBatch(batch, batchId, path, seqLen, blockSeqs, blockTokens,
-          idCol, textCol, chunkSize)
-      }
+    sink(docs, checkpoint)(packBatch(_, _, path, seqLen, blockSeqs, blockTokens,
+      idCol, textCol, chunkSize))
 
   /** One [[packStream]] micro-batch (extracted so specs can drive
     * replay/crash orderings directly; `batchId = -1` is the
@@ -943,9 +844,8 @@ object StreamingOps {
       idCol: String, textCol: String, chunkSize: Long): Unit = {
     import graft.operators.AssemblyOps
     val s = batch.sparkSession
-    val spansRoot = new org.apache.hadoop.fs.Path(s"$path/spans")
+    val (f, spansRoot) = Levels.fs(s, s"$path/spans")
     val offRoot = new org.apache.hadoop.fs.Path(s"$path/_offsets")
-    val f = spansRoot.getFileSystem(s.sparkContext.hadoopConfiguration)
     requireBatchLineage(f, spansRoot, batchId, "packStream", path)
     // `_offsets/` is written FIRST each batch, so a crash between the two
     // writes leaves it one batch ahead of `spans/` — guard it too, or a
@@ -953,9 +853,8 @@ object StreamingOps {
     // the orphaned offsets delta (the multi-root rule of cardBatch /
     // chunkStoreIngest)
     requireBatchLineage(f, offRoot, batchId, "packStream", offRoot.toString)
-    assertPackMeta(s, path, seqLen, blockSeqs, blockTokens)
-    if (!f.exists(new org.apache.hadoop.fs.Path(path, "_meta.json")))
-      writePackMeta(s, path, seqLen, blockSeqs, blockTokens)
+    Levels.pin(s, path, packFields(seqLen, blockSeqs, blockTokens))(bad =>
+      s"packStream: pack geometry mismatch vs $path/_meta.json (${bad.mkString("; ")})")
     // committed offsets strictly below this batch (replay-stable)
     val prev =
       if (f.exists(offRoot))
@@ -964,9 +863,7 @@ object StreamingOps {
           .groupBy(col("doc_id")) // fold-overlap duplicates are identical
           .agg(max(col("off")).as("off"), max(col("n")).as("n"), max(col("ob")).as("ob"))
       else
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "doc_id LONG, off LONG, n LONG, ob LONG"))
+        empty(s, "doc_id LONG, off LONG, n LONG, ob LONG")
     // T_prev: bounded driver value (one column-sum over the slim offsets
     // frame — the curatedBatch touched-set precedent), so the tail probe
     // below prunes ob directories with a LITERAL
@@ -1012,11 +909,11 @@ object StreamingOps {
       blockSeqs: Long = 1024L, blockTokens: Long = 1L << 20,
       idCol: String = "doc_id", textCol: String = "text",
       chunkSize: Long = 1L << 20): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/spans/__batch=-1")
-    val f = p.getFileSystem(docs.sparkSession.sparkContext.hadoopConfiguration)
-    require(!f.exists(p), s"$p already exists — packIndexBase bootstraps once")
-    writePackMeta(docs.sparkSession, path, seqLen, blockSeqs, blockTokens)
-    packBatch(docs, -1L, path, seqLen, blockSeqs, blockTokens, idCol, textCol, chunkSize)
+    Levels.newBase(docs.sparkSession, s"$path/spans", "packIndexBase")
+    graft.operators.ParamMeta.write(docs.sparkSession, path,
+      packFields(seqLen, blockSeqs, blockTokens))
+    packBatch(docs, Levels.BaseId, path, seqLen, blockSeqs, blockTokens, idCol, textCol,
+      chunkSize)
   }
 
   /** The accumulated packed manifest: every committed level's spans,
@@ -1038,27 +935,15 @@ object StreamingOps {
     * (doc_id) is lossless: each span/doc lands in exactly one batch
     * with deterministic values. */
   def compactPackIndex(spark: SparkSession, path: String): Unit = {
-    foldBatchDirs(spark, s"$path/spans",
+    Levels.fold(spark, s"$path/spans", Levels.dedupOn(spark,
       "seq_id LONG, seq_pos LONG, doc_id LONG, doc_start LONG, len LONG, sb LONG",
-      dedupKeys = Seq("seq_id", "seq_pos"), partitionCols = Seq("sb"))
-    foldBatchDirs(spark, s"$path/_offsets", "doc_id LONG, off LONG, n LONG, ob LONG",
-      dedupKeys = Seq("doc_id"), partitionCols = Seq("ob"))
+      Seq("seq_id", "seq_pos"), Seq("sb")))
+    Levels.fold(spark, s"$path/_offsets", Levels.dedupOn(spark,
+      "doc_id LONG, off LONG, n LONG, ob LONG", Seq("doc_id"), Seq("ob")))
   }
 
-  private def writePackMeta(spark: SparkSession, path: String,
-      seqLen: Long, blockSeqs: Long, blockTokens: Long): Unit =
-    graft.operators.ParamMeta.write(spark, path, Seq("seqLen" -> seqLen,
-      "blockSeqs" -> blockSeqs, "blockTokens" -> blockTokens))
-
-  private def assertPackMeta(spark: SparkSession, path: String,
-      seqLen: Long, blockSeqs: Long, blockTokens: Long): Unit =
-    graft.operators.ParamMeta.readText(spark, path).foreach { text =>
-      val bad = graft.operators.ParamMeta.mismatches(text,
-        Seq("seqLen" -> seqLen, "blockSeqs" -> blockSeqs,
-          "blockTokens" -> blockTokens), callerLabel = "caller")
-      require(bad.isEmpty,
-        s"packStream: pack geometry mismatch vs $path/_meta.json (${bad.mkString("; ")})")
-    }
+  private def packFields(seqLen: Long, blockSeqs: Long, blockTokens: Long) =
+    Seq("seqLen" -> seqLen, "blockSeqs" -> blockSeqs, "blockTokens" -> blockTokens)
 
   /** Streaming UniMax-scheduled training manifest — the maintenance
     * story for [[graft.operators.AssemblyOps.trainManifest]], whose
@@ -1096,13 +981,8 @@ object StreamingOps {
       refreshEvery: Int = 1, seed: Long = 0L, nRanges: Int = 64,
       sourceCol: String = "source", idCol: String = "doc_id",
       textCol: String = "text"): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        manifestBatch(batch, batchId, path, budgetTokens, epochCap, seqLen,
-          refreshEvery, seed, nRanges, sourceCol, idCol, textCol)
-      }
+    sink(docs, checkpoint)(manifestBatch(_, _, path, budgetTokens, epochCap, seqLen,
+      refreshEvery, seed, nRanges, sourceCol, idCol, textCol))
 
   /** One [[manifestStream]] micro-batch — a [[scheduleBatch]] with the
     * UniMax delta/refresh pair (extracted so specs can drive replay/crash
@@ -1139,13 +1019,8 @@ object StreamingOps {
       nBuckets: Int, seqLen: Long, refreshEvery: Int = 1, seed: Long = 0L,
       rangeWidth: Long = 64L, idCol: String = "doc_id",
       textCol: String = "text"): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        curriculumBatch(batch, batchId, path, nBuckets, seqLen, refreshEvery,
-          seed, rangeWidth, idCol, textCol)
-      }
+    sink(docs, checkpoint)(curriculumBatch(_, _, path, nBuckets, seqLen, refreshEvery,
+      seed, rangeWidth, idCol, textCol))
 
   /** One [[curriculumStream]] micro-batch. */
   private[graft] def curriculumBatch(batch: DataFrame, batchId: Long,
@@ -1173,12 +1048,7 @@ object StreamingOps {
   def logitStream(docs: DataFrame, path: String, checkpoint: String,
       steps: Int = 3, lrDen: Double = 4096.0, refreshEvery: Int = 1)
       : DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        logitBatch(batch, batchId, path, steps, lrDen, refreshEvery)
-      }
+    sink(docs, checkpoint)(logitBatch(_, _, path, steps, lrDen, refreshEvery))
 
   /** The slim evidence-delta schema a [[logitStream]] sink lands —
     * derived from the shared feature template
@@ -1229,12 +1099,7 @@ object StreamingOps {
   def glmStream(docs: DataFrame, path: String, checkpoint: String,
       steps: Int = 3, lrDen: Double = 4096.0, refreshEvery: Int = 1)
       : DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        glmBatch(batch, batchId, path, steps, lrDen, refreshEvery)
-      }
+    sink(docs, checkpoint)(glmBatch(_, _, path, steps, lrDen, refreshEvery))
 
   /** One [[glmStream]] micro-batch — [[logitBatch]]'s pinning contract
     * (exact lrDen bits, nFeatures) plus `link` = 1 so a logit sink and a
@@ -1272,13 +1137,8 @@ object StreamingOps {
       refreshEvery: Int = 1, rangeWidth: Long = 64L,
       domainCol: String = "source", idCol: String = "doc_id",
       scoreCol: String = "score"): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        prefPairsBatch(batch, batchId, path, refreshEvery, rangeWidth,
-          domainCol, idCol, scoreCol)
-      }
+    sink(docs, checkpoint)(prefPairsBatch(_, _, path, refreshEvery, rangeWidth,
+      domainCol, idCol, scoreCol))
 
   /** One [[prefPairsStream]] micro-batch. */
   private[graft] def prefPairsBatch(batch: DataFrame, batchId: Long,
@@ -1318,12 +1178,7 @@ object StreamingOps {
   def doremiStream(docs: DataFrame, path: String, checkpoint: String,
       steps: Int = 3, lrDen: Double = 4096.0, eta: Double = 1.0,
       refreshEvery: Int = 1): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        doremiBatch(batch, batchId, path, steps, lrDen, eta, refreshEvery)
-      }
+    sink(docs, checkpoint)(doremiBatch(_, _, path, steps, lrDen, eta, refreshEvery))
 
   /** One [[doremiStream]] micro-batch — [[logitBatch]]'s pinning contract
     * (exact lrDen bits, nFeatures) plus the EG rate's exact bits, so a
@@ -1367,8 +1222,7 @@ object StreamingOps {
 
   /** [[compactManifestState]] for a [[doremiStream]] sink. */
   def compactDoremiState(spark: SparkSession, path: String): Unit =
-    foldBatchDirsLatestWins(spark, s"$path/_docs", DoremiDeltaDDL,
-      keyCols = Seq("doc_id"))
+    compactSchedule(spark, path, DoremiDeltaDDL)
 
   /** Streaming Bradley–Terry reward maintenance — the seventh
     * [[scheduleBatch]] instance: the reward-ranked keep set is a global
@@ -1385,13 +1239,8 @@ object StreamingOps {
   def btRankStream(docs: DataFrame, path: String, checkpoint: String,
       steps: Int = 3, lrDen: Double = 4096.0, keepFrac: Double = 0.25,
       saltBuckets: Int = 4, refreshEvery: Int = 1): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        btRankBatch(batch, batchId, path, steps, lrDen, keepFrac,
-          saltBuckets, refreshEvery)
-      }
+    sink(docs, checkpoint)(btRankBatch(_, _, path, steps, lrDen, keepFrac,
+      saltBuckets, refreshEvery))
 
   /** One [[btRankStream]] micro-batch — [[logitBatch]]'s pinning contract
     * (exact lrDen bits, nFeatures) plus the keep fraction's exact bits
@@ -1433,8 +1282,7 @@ object StreamingOps {
 
   /** [[compactManifestState]] for a [[btRankStream]] sink. */
   def compactBtState(spark: SparkSession, path: String): Unit =
-    foldBatchDirsLatestWins(spark, s"$path/_docs", BtDeltaDDL,
-      keyCols = Seq("doc_id"))
+    compactSchedule(spark, path, BtDeltaDDL)
 
   /** The shared core of the global-schedule maintainers
     * ([[manifestStream]], [[curriculumStream]]): a schedule that is a
@@ -1465,15 +1313,16 @@ object StreamingOps {
       remanifest: DataFrame => DataFrame): Unit = {
     require(refreshEvery >= 1, "refreshEvery must be >= 1")
     val s = batch.sparkSession
-    val docsRoot = new org.apache.hadoop.fs.Path(s"$path/_docs")
+    val (f, docsRoot) = Levels.fs(s, s"$path/_docs")
     val manifestRoot = new org.apache.hadoop.fs.Path(s"$path/manifest")
-    val f = docsRoot.getFileSystem(s.sparkContext.hadoopConfiguration)
     Seq(docsRoot, manifestRoot).foreach { r =>
       requireBatchLineage(f, r, batchId, op, r.toString)
     }
-    assertScheduleMeta(s, path, op, metaFields)
-    if (!f.exists(new org.apache.hadoop.fs.Path(path, "_meta.json")))
-      writeScheduleMeta(s, path, metaFields)
+    Levels.pin(s, path, metaFields)(bad =>
+      s"$op: schedule parameter mismatch vs $path/_meta.json " +
+        s"(${bad.mkString("; ")}) — a drifted restart would silently change " +
+        "the global schedule; restart with the recorded parameters " +
+        "or use a fresh directory")
     // slim evidence delta FIRST
     deltaOf(batch)
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -1486,8 +1335,8 @@ object StreamingOps {
       // staging/retired leftovers back in. Single-writer context: a
       // leftover means the out-of-band compaction crashed, so rerunning
       // cannot race it. No-op (two exists probes) in the steady state.
-      if (foldLeftovers(f, docsRoot).nonEmpty)
-        foldBatchDirsLatestWins(s, docsRoot.toString, deltaDDL, Seq("doc_id"))
+      Levels.healFoldLeftovers(s, docsRoot.toString,
+        Levels.latestWinsOn(s, deltaDDL, Seq("doc_id")))
       // the accumulated evidence INCLUDING this batch's delta (just
       // rewritten, so a replay recomputes identically), resolved
       // LATEST-WINS per doc: a re-emitted doc is an evidence update and
@@ -1517,35 +1366,27 @@ object StreamingOps {
     * into the `__batch=-1` base — without it every refresh re-lists and
     * re-reads one delta directory per batch forever (unbounded small-file
     * growth on a long-running stream). Latest-wins per doc
-    * ([[foldBatchDirsLatestWins]]): a re-emitted doc's newest evidence
+    * ([[Levels.latestWinsOn]]): a re-emitted doc's newest evidence
     * survives the fold exactly as the refresh resolves it, and the
     * refresh heals crash leftovers itself before any state it persists.
     * Single-maintainer context like every other compactor. */
   def compactManifestState(spark: SparkSession, path: String): Unit =
-    foldBatchDirsLatestWins(spark, s"$path/_docs",
-      "doc_id LONG, source STRING, n_tokens LONG", keyCols = Seq("doc_id"))
+    compactSchedule(spark, path, "doc_id LONG, source STRING, n_tokens LONG")
+
+  private def compactSchedule(spark: SparkSession, path: String, deltaDDL: String): Unit =
+    Levels.fold(spark, s"$path/_docs", Levels.latestWinsOn(spark, deltaDDL, Seq("doc_id")))
 
   /** [[compactManifestState]] for a [[curriculumStream]] sink. */
   def compactCurriculumState(spark: SparkSession, path: String): Unit =
-    foldBatchDirsLatestWins(spark, s"$path/_docs",
-      "doc_id LONG, score LONG, n_tokens LONG", keyCols = Seq("doc_id"))
+    compactSchedule(spark, path, "doc_id LONG, score LONG, n_tokens LONG")
 
   /** [[compactManifestState]] for a [[logitStream]] sink. */
   def compactLogitState(spark: SparkSession, path: String): Unit =
-    foldBatchDirsLatestWins(spark, s"$path/_docs", LogitDeltaDDL,
-      keyCols = Seq("doc_id"))
-
-  /** [[compactManifestState]] for a [[glmStream]] sink (same delta
-    * schema as the logit sink — the GD seam — but named per sink so a
-    * future schema split can't silently fold the wrong shape). */
-  def compactGlmState(spark: SparkSession, path: String): Unit =
-    foldBatchDirsLatestWins(spark, s"$path/_docs", LogitDeltaDDL,
-      keyCols = Seq("doc_id"))
+    compactSchedule(spark, path, LogitDeltaDDL)
 
   /** [[compactManifestState]] for a [[prefPairsStream]] sink. */
   def compactPrefState(spark: SparkSession, path: String): Unit =
-    foldBatchDirsLatestWins(spark, s"$path/_docs",
-      "doc_id LONG, source STRING, score LONG", keyCols = Seq("doc_id"))
+    compactSchedule(spark, path, "doc_id LONG, source STRING, score LONG")
 
   /** Prune a schedule sink's superseded full-manifest versions, keeping
     * the newest `keepVersions` — each version is O(corpus-span-count)
@@ -1568,16 +1409,10 @@ object StreamingOps {
   def vacuumScheduleManifests(spark: SparkSession, path: String,
       keepVersions: Int = 1): Unit = {
     require(keepVersions >= 1, "keepVersions must be >= 1")
-    val p = new org.apache.hadoop.fs.Path(s"$path/manifest")
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(p)) return
-    val dirs = f.listStatus(p).toSeq.map(_.getPath)
-      .filter(_.getName.startsWith("__batch="))
-    def batchOf(d: org.apache.hadoop.fs.Path): Long =
-      d.getName.stripPrefix("__batch=").toLong
-    val complete = dirs
-      .filter(d => f.exists(new org.apache.hadoop.fs.Path(d, "_SUCCESS")))
-      .sortBy(-batchOf(_))
+    val root = s"$path/manifest"
+    val (f, p) = Levels.fs(spark, root)
+    val dirs = Levels.ids(f, p)
+    val complete = Levels.committed(f, p).reverse
     // A committer configured with marksuccessfuljobs=false never writes
     // the marker, so NO version ever counts as complete and this vacuum
     // silently degrades to a permanent no-op (unbounded growth on a
@@ -1592,8 +1427,9 @@ object StreamingOps {
           "commit protocol does not write markers " +
           "(mapreduce.fileoutputcommitter.marksuccessfuljobs=false), " +
           "retention is disabled; enable markers or prune manually.")
-    complete.take(keepVersions).lastOption.map(batchOf).foreach { floor =>
-      dirs.filter(batchOf(_) < floor).foreach(d => f.delete(d, true): Unit)
+    complete.take(keepVersions).lastOption.foreach { floor =>
+      dirs.filter(_ < floor).foreach(v => f.delete(
+        new org.apache.hadoop.fs.Path(Levels.dir(root, v)), true): Unit)
     }
   }
 
@@ -1630,38 +1466,17 @@ object StreamingOps {
     * complete one out of the keep window. */
   private def readLatestManifest(spark: SparkSession, path: String,
       ddl: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/manifest")
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val latest =
-      if (f.exists(p))
-        f.listStatus(p).toSeq.map(_.getPath)
-          .filter(_.getName.startsWith("__batch="))
-          .filter(d => f.exists(new org.apache.hadoop.fs.Path(d, "_SUCCESS")))
-          .map(_.getName.stripPrefix("__batch=").toLong).sorted.lastOption
-      else None
-    latest match {
-      case Some(v) => spark.read.schema(ddl).parquet(s"$p/__batch=$v")
-      case None => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row],
-        org.apache.spark.sql.types.StructType.fromDDL(ddl))
+    val root = s"$path/manifest"
+    val (f, p) = Levels.fs(spark, root)
+    Levels.committed(f, p).lastOption match {
+      case Some(v) => spark.read.schema(ddl).parquet(Levels.dir(root, v))
+      case None => empty(spark, ddl)
     }
   }
 
-  private def writeScheduleMeta(spark: SparkSession, path: String,
-      metaFields: Seq[(String, Long)]): Unit =
-    graft.operators.ParamMeta.write(spark, path, metaFields)
-
-  private def assertScheduleMeta(spark: SparkSession, path: String,
-      op: String, metaFields: Seq[(String, Long)]): Unit =
-    graft.operators.ParamMeta.readText(spark, path).foreach { text =>
-      val bad = graft.operators.ParamMeta.mismatches(text, metaFields,
-        callerLabel = "caller")
-      require(bad.isEmpty,
-        s"$op: schedule parameter mismatch vs $path/_meta.json " +
-          s"(${bad.mkString("; ")}) — a drifted restart would silently change " +
-          "the global schedule; restart with the recorded parameters " +
-          "or use a fresh directory")
-    }
+  private def empty(spark: SparkSession, ddl: String): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      org.apache.spark.sql.types.StructType.fromDDL(ddl))
 
   /** Streaming content-addressed chunk-store ingest — the CAS-backup
     * twin of the other versioned sinks: each micro-batch of binary
@@ -1687,53 +1502,42 @@ object StreamingOps {
   def chunkStoreIngest(media: DataFrame, path: String, checkpoint: String,
       w: Int = 8, divisor: Int = 16,
       idCol: String = "media_id", binCol: String = "content"): DataStreamWriter[Row] =
-    media.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        storeBatch(batch, batchId, path, w, divisor, idCol, binCol)
-      }
+    sink(media, checkpoint)(storeBatch(_, _, path, w, divisor, idCol, binCol))
 
   /** One [[chunkStoreIngest]] micro-batch (extracted so specs can drive
     * replay/crash orderings directly). */
   private[graft] def storeBatch(batch: DataFrame, batchId: Long, path: String,
       w: Int, divisor: Int, idCol: String, binCol: String): Unit = {
     val s = batch.sparkSession
-    val recipesRoot = new org.apache.hadoop.fs.Path(s"$path/recipes")
-    val f = recipesRoot.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val (f, recipesRoot) = Levels.fs(s, s"$path/recipes")
     requireBatchLineage(f, recipesRoot, batchId, "chunkStoreIngest", path)
     // chunks/ is written FIRST each batch, so a crash between the two
     // writes leaves it one batch ahead of recipes/ — guard it too
     requireBatchLineage(f, new org.apache.hadoop.fs.Path(s"$path/chunks"),
       batchId, "chunkStoreIngest", s"$path/chunks")
-    assertStoreMeta(f, new org.apache.hadoop.fs.Path(path), w, divisor, path)
+    Levels.pin(s, path, Seq("w" -> w.toLong, "divisor" -> divisor.toLong))(bad =>
+      s"chunkStoreIngest chunking parameters disagree with the store at $path " +
+        s"(${bad.map(_.replace("index=", "store=")).mkString(", ")}) — a drifted " +
+        "restart silently stops deduplicating against history; restart with the " +
+        "store's parameters or use a fresh path")
     // the novel-set anti-join reads the accumulated chunk addresses: a
     // crashed compactChunkStore's hide window would hide the folded
     // history and re-store known chunks as "novel" — duplicate addr rows
     // that persist past the fold's own recovery — so heal first
-    healFoldLeftovers(s, s"$path/chunks", "addr STRING, chunk_bytes BINARY",
-      dedupKeys = Seq("addr"), partitionCols = Seq.empty)
-    val meta = new org.apache.hadoop.fs.Path(path, "_meta.json")
-    if (!f.exists(meta))
-      writeFile(f, meta, s"""{"w":$w,"divisor":$divisor}""".getBytes("UTF-8"))
+    Levels.healFoldLeftovers(s, s"$path/chunks", chunksFold(s))
     val chunks = graft.operators.MultimodalOps
       .cdcByteChunks(batch, w, divisor, idCol, binCol)
       .withColumn("addr", sha2(col("chunk_bytes"), 256))
       .localCheckpoint(true)
-    val chunksRoot = new org.apache.hadoop.fs.Path(s"$path/chunks")
-    val priorLevels =
-      if (f.exists(chunksRoot))
-        f.listStatus(chunksRoot).toSeq.map(_.getPath)
-          .filter(_.getName.startsWith("__batch="))
-          .filter(_.getName.stripPrefix("__batch=").toLong < batchId)
-      else Seq.empty
+    val priorLevels = Levels.ids(s, s"$path/chunks").filter(_ < batchId)
+      .map(Levels.dir(s"$path/chunks", _))
     val novel = chunks
       .groupBy(col("addr")).agg(max(col("chunk_bytes")).as("chunk_bytes"))
     val deduped =
       if (priorLevels.isEmpty) novel
       else novel.join(
         s.read.schema("addr STRING, chunk_bytes BINARY")
-          .parquet(priorLevels.map(_.toString): _*).select(col("addr")),
+          .parquet(priorLevels: _*).select(col("addr")),
         Seq("addr"), "left_anti")
     deduped.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$path/chunks/__batch=$batchId")
@@ -1742,33 +1546,19 @@ object StreamingOps {
       .parquet(s"$path/recipes/__batch=$batchId")
   }
 
-  private def assertStoreMeta(f: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path, w: Int, divisor: Int, path: String): Unit = {
-    val meta = new org.apache.hadoop.fs.Path(p, "_meta.json")
-    if (f.exists(meta)) {
-      val in = f.open(meta)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      val bad = graft.operators.ParamMeta.mismatches(text,
-        Seq("w" -> w.toLong, "divisor" -> divisor.toLong), callerLabel = "caller")
-        .map(_.replace("index=", "store="))
-      require(bad.isEmpty,
-        s"chunkStoreIngest chunking parameters disagree with the store at $path " +
-          s"(${bad.mkString(", ")}) — a drifted restart silently stops deduplicating " +
-          "against history; restart with the store's parameters or use a fresh path")
-    }
+  /** Fold the committed levels of a [[chunkStoreIngest]] layout — both
+    * sides, the leveled fold (README, "Leveled artifact layout"). Chunk
+    * rows dedup on the address (bytes identical per address), recipe rows
+    * on (id, chunk_idx) (each lands in exactly one batch with
+    * deterministic content). */
+  def compactChunkStore(spark: SparkSession, path: String): Unit = {
+    Levels.fold(spark, s"$path/chunks", chunksFold(spark))
+    Levels.fold(spark, s"$path/recipes", Levels.dedupOn(spark,
+      "media_id LONG, chunk_idx INT, addr STRING", Seq("media_id", "chunk_idx")))
   }
 
-  /** Fold the committed levels of a [[chunkStoreIngest]] layout — both
-    * sides, the established staged-rename fold with newest-delta
-    * protection. Chunk rows dedup on the address (bytes identical per
-    * address), recipe rows on (id, chunk_idx) (each lands in exactly one
-    * batch with deterministic content). */
-  def compactChunkStore(spark: SparkSession, path: String): Unit = {
-    foldBatchDirs(spark, s"$path/chunks", "addr STRING, chunk_bytes BINARY",
-      dedupKeys = Seq("addr"), partitionCols = Seq.empty)
-    foldBatchDirs(spark, s"$path/recipes", "media_id LONG, chunk_idx INT, addr STRING",
-      dedupKeys = Seq("media_id", "chunk_idx"), partitionCols = Seq.empty)
-  }
+  private def chunksFold(spark: SparkSession) =
+    Levels.dedupOn(spark, "addr STRING, chunk_bytes BINARY", Seq("addr"))
 
   /** Streaming MinHash-LSH index maintenance — the text-space twin of
     * [[ivfIndexStream]]: each micro-batch of documents is shingled,
@@ -1792,12 +1582,7 @@ object StreamingOps {
       idCol: String = "doc_id", textCol: String = "text",
       shingleK: Int = 3, nHashes: Int = 16, bands: Int = 4,
       nBuckets: Int = 64): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        lshBatch(batch, batchId, path, idCol, textCol, shingleK, nHashes, bands, nBuckets)
-      }
+    sink(docs, checkpoint)(lshBatch(_, _, path, idCol, textCol, shingleK, nHashes, bands, nBuckets))
 
   /** One [[lshIndexStream]] micro-batch (extracted so specs can drive
     * replay/crash orderings directly). */
@@ -1805,8 +1590,7 @@ object StreamingOps {
       idCol: String, textCol: String, shingleK: Int, nHashes: Int,
       bands: Int, nBuckets: Int): Unit = {
     val s = batch.sparkSession
-    val p = new org.apache.hadoop.fs.Path(path)
-    val f = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val (f, p) = Levels.fs(s, path)
     requireBatchLineage(f, p, batchId, "lshIndexStream", path)
     graft.operators.DedupOps.assertLshMeta(s, path, shingleK, nHashes, bands, nBuckets)
     // record the parameters BEFORE the first landing: a crash between the
@@ -1831,19 +1615,21 @@ object StreamingOps {
       .bandedWithBucket(corpus, idCol, textCol, shingleK, nHashes, bands, nBuckets)
       .repartition(col("band"), col("bucket"))
       .write.mode(org.apache.spark.sql.SaveMode.ErrorIfExists)
-      .partitionBy("band", "bucket").parquet(s"$path/__batch=-1")
+      .partitionBy("band", "bucket").parquet(Levels.base(path))
     graft.operators.DedupOps.writeLshMeta(
       corpus.sparkSession, path, shingleK, nHashes, bands, nBuckets)
   }
 
   /** Fold [[lshIndexStream]]'s per-batch deltas into the `__batch=-1`
-    * base — same staged-rename fold, single-maintainer contract and
-    * newest-delta protection as the other versioned sinks. Dedup on
+    * base — the leveled fold (README, "Leveled artifact layout"). Dedup on
     * (id, band, bandsig) is lossless: signatures are deterministic, so an
     * overlap-window duplicate carries identical columns. */
   def compactLshIndex(spark: SparkSession, path: String): Unit =
-    foldBatchDirs(spark, path, "id LONG, bandsig LONG, band INT, bucket INT",
-      dedupKeys = Seq("id", "band", "bandsig"), partitionCols = Seq("band", "bucket"))
+    Levels.fold(spark, path, lshFold(spark))
+
+  private def lshFold(spark: SparkSession) =
+    Levels.dedupOn(spark, "id LONG, bandsig LONG, band INT, bucket INT",
+      Seq("id", "band", "bandsig"), Seq("band", "bucket"))
 
   /** Streaming pHash-index maintenance — [[lshIndexStream]]'s video twin:
     * each micro-batch of media is frame-sampled, DCT-hashed, banded
@@ -1859,20 +1645,14 @@ object StreamingOps {
     * Fold deltas with [[compactPhashIndex]]. */
   def phashIndexStream(media: DataFrame, path: String, checkpoint: String,
       fps: Int = 4, k: Int = 8, nBuckets: Int = 64): DataStreamWriter[Row] =
-    media.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        phashBatch(batch, batchId, path, fps, k, nBuckets)
-      }
+    sink(media, checkpoint)(phashBatch(_, _, path, fps, k, nBuckets))
 
   /** One [[phashIndexStream]] micro-batch (extracted so specs can drive
     * replay/crash orderings directly). */
   private[graft] def phashBatch(batch: DataFrame, batchId: Long, path: String,
       fps: Int, k: Int, nBuckets: Int): Unit = {
     val s = batch.sparkSession
-    val p = new org.apache.hadoop.fs.Path(path)
-    val f = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val (f, p) = Levels.fs(s, path)
     requireBatchLineage(f, p, batchId, "phashIndexStream", path)
     graft.operators.MultimodalOps.assertPhashMeta(s, path, fps, k, nBuckets)
     // meta BEFORE data — the lshBatch first-landing crash-window reasoning
@@ -1885,16 +1665,14 @@ object StreamingOps {
   }
 
   /** Fold [[phashIndexStream]]'s per-batch deltas into the `__batch=-1`
-    * base — same staged-rename fold, single-maintainer contract and
-    * newest-delta protection as the other versioned sinks. Dedup on
+    * base — the leveled fold (README, "Leveled artifact layout"). Dedup on
     * (media_id, frame_ix, band_ix) is lossless: the DCT hash is
     * deterministic, so an overlap-window duplicate carries identical
     * columns. */
   def compactPhashIndex(spark: SparkSession, path: String): Unit =
-    foldBatchDirs(spark, path,
+    Levels.fold(spark, path, Levels.dedupOn(spark,
       "media_id LONG, frame_ix LONG, phash LONG, band LONG, band_ix INT, bucket INT",
-      dedupKeys = Seq("media_id", "frame_ix", "band_ix"),
-      partitionCols = Seq("band_ix", "bucket"))
+      Seq("media_id", "frame_ix", "band_ix"), Seq("band_ix", "bucket")))
 
   /** Streaming shingle-COUNT index maintenance — the exact-substring twin
     * of [[lshIndexStream]]: each micro-batch of documents is shingled and
@@ -1920,20 +1698,14 @@ object StreamingOps {
     * [[dedupedEvents]]-style upstream dedup. */
   def shingleIndexStream(docs: DataFrame, path: String, checkpoint: String,
       k: Int = 3, nPb: Int = 16, hashed: Boolean = true): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        shingleBatch(batch, batchId, path, k, nPb, hashed)
-      }
+    sink(docs, checkpoint)(shingleBatch(_, _, path, k, nPb, hashed))
 
   /** One [[shingleIndexStream]] micro-batch (extracted so specs can drive
     * replay/crash orderings directly). */
   private[graft] def shingleBatch(batch: DataFrame, batchId: Long, path: String,
       k: Int, nPb: Int, hashed: Boolean): Unit = {
     val s = batch.sparkSession
-    val p = new org.apache.hadoop.fs.Path(path)
-    val f = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val (f, p) = Levels.fs(s, path)
     requireBatchLineage(f, p, batchId, "shingleIndexStream", path)
     graft.operators.TextOps.assertSpanMeta(s, path, k, Some(nPb), Some(hashed))
     // meta BEFORE data — same first-landing crash-window reasoning as
@@ -1947,8 +1719,7 @@ object StreamingOps {
   }
 
   /** Fold [[shingleIndexStream]]'s per-batch deltas into the `__batch=-1`
-    * base — same staged-rename fold, single-maintainer contract and
-    * newest-delta protection as the other versioned sinks. Rows stay
+    * base — the leveled fold (README, "Leveled artifact layout"). Rows stay
     * SOURCE-TAGGED partials, deduped on (shingle, src) — identical rows in
     * the fold-overlap window, so dropping duplicates is exact, whereas a
     * SUMMING fold would double-count under exactly that overlap (and on a
@@ -1961,8 +1732,8 @@ object StreamingOps {
       s"no _meta.json under $path — nothing has landed yet (the first batch " +
         "or writeShingleIndex records it), so there is nothing to compact")
     val t = if (hashed.get == 1) "LONG" else "STRING"
-    foldBatchDirs(spark, path, s"shingle $t, cnt LONG, src LONG, pb INT",
-      dedupKeys = Seq("shingle", "src"), partitionCols = Seq("pb"))
+    Levels.fold(spark, path, Levels.dedupOn(spark, s"shingle $t, cnt LONG, src LONG, pb INT",
+      Seq("shingle", "src"), Seq("pb")))
   }
 
   /** Streaming Kneser–Ney count maintenance — the maintained-model twin of
@@ -1983,12 +1754,7 @@ object StreamingOps {
     * within-batch pair extraction uses them. */
   def knCountsStream(docs: DataFrame, path: String, checkpoint: String,
       idCol: String = "doc_id", textCol: String = "text"): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        knBatch(batch, batchId, path, idCol, textCol)
-      }
+    sink(docs, checkpoint)(knBatch(_, _, path, idCol, textCol))
 
   /** One [[knCountsStream]] micro-batch (extracted so specs can drive
     * replay/crash orderings directly; `batchId = -1` bootstraps an
@@ -1996,9 +1762,8 @@ object StreamingOps {
   private[graft] def knBatch(batch: DataFrame, batchId: Long, path: String,
       idCol: String, textCol: String): Unit = {
     val s = batch.sparkSession
-    val uniRoot = new org.apache.hadoop.fs.Path(s"$path/_unigrams")
+    val (f, uniRoot) = Levels.fs(s, s"$path/_unigrams")
     val pairsRoot = new org.apache.hadoop.fs.Path(s"$path/_pairs")
-    val f = uniRoot.getFileSystem(s.sparkContext.hadoopConfiguration)
     Seq(uniRoot, pairsRoot).foreach { r =>
       requireBatchLineage(f, r, batchId, "knCountsStream", r.toString)
     }
@@ -2045,11 +1810,10 @@ object StreamingOps {
     // the two roots fold independently (disjoint staged renames) —
     // overlap them (guide §2.6)
     graft.operators.Par.run(spark, parallelism = 2)(
-      () => foldBatchDirs(spark, s"$path/_pairs",
-        "w1 STRING, w2 STRING, c LONG, src LONG",
-        dedupKeys = Seq("w1", "w2", "src"), partitionCols = Seq.empty),
-      () => foldBatchDirs(spark, s"$path/_unigrams", "w STRING, c LONG, src LONG",
-        dedupKeys = Seq("w", "src"), partitionCols = Seq.empty))
+      () => Levels.fold(spark, s"$path/_pairs", Levels.dedupOn(spark,
+        "w1 STRING, w2 STRING, c LONG, src LONG", Seq("w1", "w2", "src"))),
+      () => Levels.fold(spark, s"$path/_unigrams", Levels.dedupOn(spark,
+        "w STRING, c LONG, src LONG", Seq("w", "src"))))
     ()
   }
 
@@ -2062,20 +1826,14 @@ object StreamingOps {
     * discipline, same read-time `<unk>` cut. */
   def kn3CountsStream(docs: DataFrame, path: String, checkpoint: String,
       idCol: String = "doc_id", textCol: String = "text"): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        kn3Batch(batch, batchId, path, idCol, textCol)
-      }
+    sink(docs, checkpoint)(kn3Batch(_, _, path, idCol, textCol))
 
   /** One [[kn3CountsStream]] micro-batch. */
   private[graft] def kn3Batch(batch: DataFrame, batchId: Long, path: String,
       idCol: String, textCol: String): Unit = {
     val s = batch.sparkSession
-    val uniRoot = new org.apache.hadoop.fs.Path(s"$path/_unigrams")
+    val (f, uniRoot) = Levels.fs(s, s"$path/_unigrams")
     val triRoot = new org.apache.hadoop.fs.Path(s"$path/_trigrams")
-    val f = uniRoot.getFileSystem(s.sparkContext.hadoopConfiguration)
     Seq(uniRoot, triRoot).foreach { r =>
       requireBatchLineage(f, r, batchId, "kn3CountsStream", r.toString)
     }
@@ -2112,11 +1870,10 @@ object StreamingOps {
   def compactKn3Counts(spark: SparkSession, path: String): Unit = {
     // the compactKnCounts overlap, one Markov order up
     graft.operators.Par.run(spark, parallelism = 2)(
-      () => foldBatchDirs(spark, s"$path/_trigrams",
-        "w1 STRING, w2 STRING, w3 STRING, c LONG, src LONG",
-        dedupKeys = Seq("w1", "w2", "w3", "src"), partitionCols = Seq.empty),
-      () => foldBatchDirs(spark, s"$path/_unigrams", "w STRING, c LONG, src LONG",
-        dedupKeys = Seq("w", "src"), partitionCols = Seq.empty))
+      () => Levels.fold(spark, s"$path/_trigrams", Levels.dedupOn(spark,
+        "w1 STRING, w2 STRING, w3 STRING, c LONG, src LONG", Seq("w1", "w2", "w3", "src"))),
+      () => Levels.fold(spark, s"$path/_unigrams", Levels.dedupOn(spark,
+        "w STRING, c LONG, src LONG", Seq("w", "src"))))
     ()
   }
 
@@ -2130,20 +1887,14 @@ object StreamingOps {
     * [[readNbCounts]]. */
   def nbCountsStream(docs: DataFrame, path: String, checkpoint: String,
       classCol: String = "lang", textCol: String = "text"): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        nbBatch(batch, batchId, path, classCol, textCol)
-      }
+    sink(docs, checkpoint)(nbBatch(_, _, path, classCol, textCol))
 
   /** One [[nbCountsStream]] micro-batch. */
   private[graft] def nbBatch(batch: DataFrame, batchId: Long, path: String,
       classCol: String, textCol: String): Unit = {
     val s = batch.sparkSession
-    val ncwRoot = new org.apache.hadoop.fs.Path(s"$path/_ncw")
+    val (f, ncwRoot) = Levels.fs(s, s"$path/_ncw")
     val clsRoot = new org.apache.hadoop.fs.Path(s"$path/_cls")
-    val f = ncwRoot.getFileSystem(s.sparkContext.hadoopConfiguration)
     Seq(ncwRoot, clsRoot).foreach { r =>
       requireBatchLineage(f, r, batchId, "nbCountsStream", r.toString)
     }
@@ -2182,11 +1933,10 @@ object StreamingOps {
   def compactNbCounts(spark: SparkSession, path: String): Unit = {
     // the compactKnCounts overlap for the NB evidence roots
     graft.operators.Par.run(spark, parallelism = 2)(
-      () => foldBatchDirs(spark, s"$path/_ncw",
-        "__c STRING, w STRING, __n LONG, src LONG",
-        dedupKeys = Seq("__c", "w", "src"), partitionCols = Seq.empty),
-      () => foldBatchDirs(spark, s"$path/_cls", "__c STRING, __dc LONG, src LONG",
-        dedupKeys = Seq("__c", "src"), partitionCols = Seq.empty))
+      () => Levels.fold(spark, s"$path/_ncw", Levels.dedupOn(spark,
+        "__c STRING, w STRING, __n LONG, src LONG", Seq("__c", "w", "src"))),
+      () => Levels.fold(spark, s"$path/_cls", Levels.dedupOn(spark,
+        "__c STRING, __dc LONG, src LONG", Seq("__c", "src"))))
     ()
   }
 
@@ -2223,12 +1973,7 @@ object StreamingOps {
     * dedup — the shingle-index contract). */
   def cardStream(docs: DataFrame, path: String, checkpoint: String,
       approx: Boolean = false): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        cardBatch(batch, batchId, path, approx)
-      }
+    sink(docs, checkpoint)(cardBatch(_, _, path, approx))
 
   /** One [[cardStream]] micro-batch (extracted for spec-driven replay).
     * `approx = true` is the 100 TB distinct-count mode: instead of the
@@ -2244,8 +1989,7 @@ object StreamingOps {
   private[graft] def cardBatch(batch: DataFrame, batchId: Long, path: String,
       approx: Boolean = false): Unit = {
     val s = batch.sparkSession
-    val f = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
+    val (f, _) = Levels.fs(s, path)
     val keysSub = if (approx) "_hll" else "_keys"
     Seq("_sums", keysSub).foreach { sub =>
       requireBatchLineage(f, new org.apache.hadoop.fs.Path(s"$path/$sub"),
@@ -2282,7 +2026,7 @@ object StreamingOps {
     * batch card — the result equals [[graft.operators.CurationOps.datasetCard]]
     * over every document landed so far (oracle-gated by q_stream_card). */
   def readCard(spark: SparkSession, path: String, approx: Boolean = false): DataFrame = {
-    val sums = stateScan(spark, s"$path/_sums",
+    val sums = Levels.stateScan(spark, s"$path/_sums",
         "source STRING, n_docs LONG, n_chars LONG, n_tokens LONG, __sum_q4 LONG, src LONG")
       // partial sums dedup on (source, src) before summing — in the
       // fold's crash-overlap window (base installed, folded delta not
@@ -2299,7 +2043,7 @@ object StreamingOps {
         // HLL register-max union is idempotent, so the (source, kind, src)
         // dedup only matters for scan size, not correctness — but the fold
         // discipline keeps it anyway (one sketch per batch per stratum)
-        stateScan(spark, s"$path/_hll",
+        Levels.stateScan(spark, s"$path/_hll",
             "source STRING, kind STRING, sketch BINARY, src LONG")
           .dropDuplicates(Seq("source", "kind", "src"))
           .groupBy(col("source"), col("kind"))
@@ -2313,7 +2057,7 @@ object StreamingOps {
             coalesce(max(when(col("kind") === "l", col("est"))), lit(0L))
               .as("n_langs"))
       else
-        stateScan(spark, s"$path/_keys",
+        Levels.stateScan(spark, s"$path/_keys",
             "source STRING, kind STRING, key STRING")
           .dropDuplicates(Seq("source", "kind", "key"))
           .groupBy(col("source")).agg(
@@ -2334,17 +2078,15 @@ object StreamingOps {
     * sketches on (source, kind, src) (identical rows in any overlap
     * window — and over-merging would be harmless anyway, HLL union is
     * idempotent). Newest-delta protection and crash-leftover recovery
-    * come with [[foldBatchDirs]]. */
+    * come with [[Levels.fold]]. */
   def compactCardState(spark: SparkSession, path: String): Unit = {
-    foldBatchDirs(spark, s"$path/_sums",
+    Levels.fold(spark, s"$path/_sums", Levels.dedupOn(spark,
       "source STRING, n_docs LONG, n_chars LONG, n_tokens LONG, __sum_q4 LONG, src LONG",
-      dedupKeys = Seq("source", "src"), partitionCols = Seq.empty)
-    foldBatchDirs(spark, s"$path/_keys",
-      "source STRING, kind STRING, key STRING",
-      dedupKeys = Seq("source", "kind", "key"), partitionCols = Seq.empty)
-    foldBatchDirs(spark, s"$path/_hll",
-      "source STRING, kind STRING, sketch BINARY, src LONG",
-      dedupKeys = Seq("source", "kind", "src"), partitionCols = Seq.empty)
+      Seq("source", "src")))
+    Levels.fold(spark, s"$path/_keys", Levels.dedupOn(spark,
+      "source STRING, kind STRING, key STRING", Seq("source", "kind", "key")))
+    Levels.fold(spark, s"$path/_hll", Levels.dedupOn(spark,
+      "source STRING, kind STRING, sketch BINARY, src LONG", Seq("source", "kind", "src")))
   }
 
   /** Streaming MULTIMODAL release report — [[cardStream]]'s media twin
@@ -2393,13 +2135,8 @@ object StreamingOps {
   def mediaCardStream(docs: DataFrame, path: String, checkpoint: String,
       fps: Int = 4, k: Int = 8, maxDist: Int = 3, minFrames: Int = 2,
       w: Int = 8, divisor: Int = 16, nBuckets: Int = 64): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mediaCardBatch(batch, batchId, path, fps, k, maxDist, minFrames,
-          w, divisor, nBuckets)
-      }
+    sink(docs, checkpoint)(mediaCardBatch(_, _, path, fps, k, maxDist, minFrames,
+      w, divisor, nBuckets))
 
   /** One [[mediaCardStream]] micro-batch (extracted for spec-driven
     * replay/crash orderings). */
@@ -2408,8 +2145,7 @@ object StreamingOps {
       w: Int, divisor: Int, nBuckets: Int): Unit = {
     import graft.operators.MultimodalOps
     val s = batch.sparkSession
-    val f = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
+    val (f, _) = Levels.fs(s, path)
     Seq("_sums", "_chunkkeys", "_media", "_dup").foreach { sub =>
       requireBatchLineage(f, new org.apache.hadoop.fs.Path(s"$path/$sub"),
         batchId, "mediaCardStream", s"$path/$sub")
@@ -2467,7 +2203,7 @@ object StreamingOps {
     * source-tagged sums, distinct-of-distincts chunk addresses, and the
     * accumulated dup-endpoint ids attributed through the `_media` face. */
   def readMediaCard(spark: SparkSession, path: String): DataFrame = {
-    val sums = stateScan(spark, s"$path/_sums",
+    val sums = Levels.stateScan(spark, s"$path/_sums",
         "source STRING, n_media LONG, n_bytes LONG, n_frames LONG, " +
           "n_chunks LONG, src LONG")
       .dropDuplicates(Seq("source", "src"))
@@ -2476,14 +2212,14 @@ object StreamingOps {
         sum(col("n_bytes")).as("n_bytes"),
         sum(col("n_frames")).as("n_frames"),
         sum(col("n_chunks")).as("n_chunks"))
-    val dchunks = stateScan(spark, s"$path/_chunkkeys",
+    val dchunks = Levels.stateScan(spark, s"$path/_chunkkeys",
         "source STRING, addr STRING")
       .dropDuplicates(Seq("source", "addr"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_distinct_chunks"))
-    val mass = stateScan(spark, s"$path/_dup", "media_id LONG")
+    val mass = Levels.stateScan(spark, s"$path/_dup", "media_id LONG")
       .dropDuplicates(Seq("media_id"))
-      .join(stateScan(spark, s"$path/_media", "media_id LONG, source STRING")
+      .join(Levels.stateScan(spark, s"$path/_media", "media_id LONG, source STRING")
         .dropDuplicates(Seq("media_id")), Seq("media_id"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_phash_clustered"))
@@ -2501,16 +2237,14 @@ object StreamingOps {
     * rerun), the key/id faces on their full identity, and the frame
     * index through [[compactPhashIndex]]. */
   def compactMediaCardState(spark: SparkSession, path: String): Unit = {
-    foldBatchDirs(spark, s"$path/_sums",
+    Levels.fold(spark, s"$path/_sums", Levels.dedupOn(spark,
       "source STRING, n_media LONG, n_bytes LONG, n_frames LONG, " +
-        "n_chunks LONG, src LONG",
-      dedupKeys = Seq("source", "src"), partitionCols = Seq.empty)
-    foldBatchDirs(spark, s"$path/_chunkkeys", "source STRING, addr STRING",
-      dedupKeys = Seq("source", "addr"), partitionCols = Seq.empty)
-    foldBatchDirs(spark, s"$path/_media", "media_id LONG, source STRING",
-      dedupKeys = Seq("media_id", "source"), partitionCols = Seq.empty)
-    foldBatchDirs(spark, s"$path/_dup", "media_id LONG",
-      dedupKeys = Seq("media_id"), partitionCols = Seq.empty)
+        "n_chunks LONG, src LONG", Seq("source", "src")))
+    Levels.fold(spark, s"$path/_chunkkeys", Levels.dedupOn(spark,
+      "source STRING, addr STRING", Seq("source", "addr")))
+    Levels.fold(spark, s"$path/_media", Levels.dedupOn(spark,
+      "media_id LONG, source STRING", Seq("media_id", "source")))
+    Levels.fold(spark, s"$path/_dup", Levels.dedupOn(spark, "media_id LONG", Seq("media_id")))
     compactPhashIndex(spark, s"$path/_phidx")
   }
 
@@ -2538,36 +2272,19 @@ object StreamingOps {
     * silently changing the exactness budget mid-index. */
   def topkStream(docs: DataFrame, path: String, checkpoint: String,
       maxTracked: Int = 1024, textCol: String = "text"): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        topkBatch(batch, batchId, path, maxTracked, textCol)
-      }
+    sink(docs, checkpoint)(topkBatch(_, _, path, maxTracked, textCol))
 
   /** One [[topkStream]] micro-batch (extracted for spec-driven replay). */
   private[graft] def topkBatch(batch: DataFrame, batchId: Long, path: String,
       maxTracked: Int, textCol: String = "text"): Unit = {
     val s = batch.sparkSession
-    val p = new org.apache.hadoop.fs.Path(path)
-    val f = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val (f, p) = Levels.fs(s, path)
     requireBatchLineage(f, p, batchId, "topkStream", path)
-    val meta = new org.apache.hadoop.fs.Path(p, "_meta.json")
-    if (f.exists(meta)) {
-      val in = f.open(meta)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      val rec = graft.operators.ParamMeta.field(text, "maxTracked")
-      require(rec.contains(maxTracked.toLong),
-        s"topkStream: maxTracked disagrees with the index at $path " +
-          s"(index=${rec.getOrElse(-1L)} batch=$maxTracked) — states merge " +
-          "count-based under one slot budget; restart with the index's " +
-          "parameter or rebuild it")
-    } else {
-      f.mkdirs(p)
-      // sidecar BEFORE data: a first-batch crash between the writes must
-      // not let a parameter-drifted restart pass the assert
-      writeFile(f, meta, s"""{"maxTracked":$maxTracked}""".getBytes("UTF-8"))
-    }
+    Levels.pin(s, path, Seq("maxTracked" -> maxTracked.toLong), "batch")(bad =>
+      s"topkStream: maxTracked disagrees with the index at $path " +
+        s"(${bad.map(_.stripPrefix("maxTracked: ")).mkString}) — states merge " +
+        "count-based under one slot budget; restart with the index's " +
+        "parameter or rebuild it")
     batch
       // NO coalesce: tokenHeavyHitters (and the oracle's string_split on
       // NULL) drop null-text rows entirely — a coalesce would land one
@@ -2586,16 +2303,12 @@ object StreamingOps {
     * [[graft.operators.TextOps.tokenHeavyHitters]] tie discipline).
     * `maxTracked` comes from the index's own sidecar. */
   def readTopK(spark: SparkSession, path: String, k: Int): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val meta = new org.apache.hadoop.fs.Path(p, "_meta.json")
-    require(f.exists(meta), s"no _meta.json under $path — nothing has landed")
-    val in = f.open(meta)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val maxTracked = graft.operators.ParamMeta.field(text, "maxTracked")
+    val text = graft.operators.ParamMeta.readText(spark, path)
+    require(text.isDefined, s"no _meta.json under $path — nothing has landed")
+    val maxTracked = graft.operators.ParamMeta.field(text.get, "maxTracked")
       .map(_.toInt)
       .getOrElse(sys.error(s"malformed _meta.json under $path"))
-    stateScan(spark, path, topkStateDDL)
+    Levels.stateScan(spark, path, topkStateDDL)
       // one state per batch: identical rows in a fold-overlap window, and
       // frequent-items merge double-counts — dedup is load-bearing
       .dropDuplicates(Seq("src"))
@@ -2612,10 +2325,9 @@ object StreamingOps {
     * NEVER re-merge (count-based states double-count under re-merge; the
     * merge stays [[readTopK]]'s job, exactly the shingle-index
     * source-tagged-partials rule). Newest-delta protection and
-    * crash-leftover recovery come with [[foldBatchDirs]]. */
+    * crash-leftover recovery come with [[Levels.fold]]. */
   def compactTopkState(spark: SparkSession, path: String): Unit =
-    foldBatchDirs(spark, path, topkStateDDL,
-      dedupKeys = Seq("src"), partitionCols = Seq.empty)
+    Levels.fold(spark, path, Levels.dedupOn(spark, topkStateDDL, Seq("src")))
 
   /** Streaming EXACT quantiles: maintain a per-(group, value) count
     * histogram as an accumulator sink — for bounded-domain values
@@ -2631,19 +2343,13 @@ object StreamingOps {
     * sums — the shingle-index discipline. */
   def quantileStream(docs: DataFrame, path: String, checkpoint: String,
       groupCol: String = "lang", valueCol: String = "n_chars"): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        quantileBatch(batch, batchId, path, groupCol, valueCol)
-      }
+    sink(docs, checkpoint)(quantileBatch(_, _, path, groupCol, valueCol))
 
   /** One [[quantileStream]] micro-batch (extracted for spec-driven replay). */
   private[graft] def quantileBatch(batch: DataFrame, batchId: Long, path: String,
       groupCol: String = "lang", valueCol: String = "n_chars"): Unit = {
     val s = batch.sparkSession
-    val p = new org.apache.hadoop.fs.Path(path)
-    val f = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val (f, p) = Levels.fs(s, path)
     requireBatchLineage(f, p, batchId, "quantileStream", path)
     batch.groupBy(col(groupCol).as("g"), col(valueCol).cast("long").as("v"))
       .agg(count(lit(1)).as("cnt"))
@@ -2660,7 +2366,7 @@ object StreamingOps {
   def readQuantiles(spark: SparkSession, path: String, ps: Seq[Double],
       groupCol: String = "lang"): DataFrame = {
     require(ps.nonEmpty && ps.forall(p => p > 0.0 && p <= 1.0), "ps in (0, 1]")
-    val merged = stateScan(spark, path, "g STRING, v LONG, cnt LONG, src LONG")
+    val merged = Levels.stateScan(spark, path, "g STRING, v LONG, cnt LONG, src LONG")
       .dropDuplicates(Seq("g", "v", "src"))
       .groupBy(col("g"), col("v")).agg(sum(col("cnt")).as("cnt"))
     // exact values are the histogram keys, so the located key IS the
@@ -2675,8 +2381,8 @@ object StreamingOps {
     * sum (source-tagged partials; a summing fold would double-count in
     * the crash-rerun window). */
   def compactQuantileState(spark: SparkSession, path: String): Unit =
-    foldBatchDirs(spark, path, "g STRING, v LONG, cnt LONG, src LONG",
-      dedupKeys = Seq("g", "v", "src"), partitionCols = Seq.empty)
+    Levels.fold(spark, path, Levels.dedupOn(spark,
+      "g STRING, v LONG, cnt LONG, src LONG", Seq("g", "v", "src")))
 
   /** Token-budget-capped streaming ingest: admit arriving documents until
     * the stream's LIFETIME admitted-token total covers `budgetTokens`,
@@ -2700,20 +2406,14 @@ object StreamingOps {
   def budgetIngest(docs: DataFrame, outDir: String, checkpoint: String,
       budgetTokens: Long, seed: Long = 0L, nRanges: Int = 64,
       idCol: String = "doc_id", textCol: String = "text"): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        budgetBatch(batch, batchId, outDir, budgetTokens, seed, nRanges, idCol, textCol)
-      }
+    sink(docs, checkpoint)(budgetBatch(_, _, outDir, budgetTokens, seed, nRanges, idCol, textCol))
 
   /** One [[budgetIngest]] micro-batch (extracted for spec-driven replay). */
   private[graft] def budgetBatch(batch: DataFrame, batchId: Long, outDir: String,
       budgetTokens: Long, seed: Long, nRanges: Int,
       idCol: String = "doc_id", textCol: String = "text"): Unit = {
     val s = batch.sparkSession
-    val totalsP = new org.apache.hadoop.fs.Path(s"$outDir/_totals")
-    val f = totalsP.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val (f, totalsP) = Levels.fs(s, s"$outDir/_totals")
     Seq("docs", "_totals").foreach { sub =>
       requireBatchLineage(f, new org.apache.hadoop.fs.Path(s"$outDir/$sub"),
         batchId, "budgetIngest", s"$outDir/$sub")
@@ -2723,7 +2423,7 @@ object StreamingOps {
     // are invisible to its replay). Totals rows carry their admitting
     // batch as `src`, so the prior-batch filter is on the ROW tag, not
     // the directory name, and the read is exact in BOTH of
-    // foldBatchDirs' crash windows: the overlap window (base installed,
+    // Levels.fold's crash windows: the overlap window (base installed,
     // folded delta not yet dropped) shows the same total twice — the
     // dropDuplicates("src") collapses it; the hide window (old base
     // retired, staging not yet installed) shows it only inside a
@@ -2732,7 +2432,7 @@ object StreamingOps {
     // admissions, so this read may not merely self-heal after recovery.
     val prior: Long =
       if (!f.exists(totalsP)) 0L
-      else stateScan(s, s"$outDir/_totals", "admitted_tokens LONG, src LONG")
+      else Levels.stateScan(s, s"$outDir/_totals", "admitted_tokens LONG, src LONG")
         .dropDuplicates("src")
         .filter(col("src") < batchId)
         .agg(coalesce(sum(col("admitted_tokens")), lit(0L))).head().getLong(0)
@@ -2762,10 +2462,10 @@ object StreamingOps {
     * filter, so the admitted-token sum is preserved exactly; the newest
     * (replayable) delta is protected as everywhere. */
   def compactBudgetState(spark: SparkSession, outDir: String): Unit = {
-    foldBatchDirs(spark, s"$outDir/_totals", "admitted_tokens LONG, src LONG",
-      dedupKeys = Seq("src"), partitionCols = Seq.empty)
-    foldBatchDirs(spark, s"$outDir/docs", "doc_id LONG, sort_key LONG, n_tokens LONG",
-      dedupKeys = Seq("doc_id"), partitionCols = Seq.empty)
+    Levels.fold(spark, s"$outDir/_totals", Levels.dedupOn(spark,
+      "admitted_tokens LONG, src LONG", Seq("src")))
+    Levels.fold(spark, s"$outDir/docs", Levels.dedupOn(spark,
+      "doc_id LONG, sort_key LONG, n_tokens LONG", Seq("doc_id")))
   }
 
   /** The full streaming dedup-clustering loop — the daily-crawl
@@ -2818,13 +2518,8 @@ object StreamingOps {
       shingleK: Int = 3, nHashes: Int = 16, bands: Int = 4,
       nBuckets: Int = 64, threshold: Double = 0.5,
       assignEvery: Int = 1, nDocBuckets: Int = 64): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        clusterBatch(batch, batchId, outDir, idCol, textCol,
-          shingleK, nHashes, bands, nBuckets, threshold, assignEvery, nDocBuckets)
-      }
+    sink(docs, checkpoint)(clusterBatch(_, _, outDir, idCol, textCol,
+      shingleK, nHashes, bands, nBuckets, threshold, assignEvery, nDocBuckets))
 
   /** One [[clusterIngest]] micro-batch (extracted so specs can drive
     * replay/crash orderings directly). */
@@ -2836,8 +2531,7 @@ object StreamingOps {
     val s = batch.sparkSession
     val docsDir = s"$outDir/docs"
     val lshDir = s"$outDir/_lsh"
-    val docsPath = new org.apache.hadoop.fs.Path(docsDir)
-    val f = docsPath.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val (f, docsPath) = Levels.fs(s, docsDir)
     // one guard per root the batch writes, BEFORE any landing: _pairs
     // lands first, then _assign (conditionally), then _lsh (lshBatch
     // re-guards its own root, harmlessly), then docs — a crash after any
@@ -2852,29 +2546,20 @@ object StreamingOps {
     // hidden docs base drops the rescore's corpus text (cross pairs
     // silently lost from the durable pair delta), a hidden LSH base
     // drops the collision candidates themselves
-    healFoldLeftovers(s, docsDir, s"$idCol LONG, $textCol STRING, db INT",
-      dedupKeys = Seq(idCol), partitionCols = Seq("db"))
-    healFoldLeftovers(s, lshDir, "id LONG, bandsig LONG, band INT, bucket INT",
-      dedupKeys = Seq("id", "band", "bandsig"), partitionCols = Seq("band", "bucket"))
+    Levels.healFoldLeftovers(s, docsDir, clusterDocsFold(s, idCol, textCol))
+    Levels.healFoldLeftovers(s, lshDir, lshFold(s))
     // the db bucketing is a pruning contract like the LSH banding: a
     // restart probing with a different nDocBuckets would silently read
     // the wrong directories and DROP cross pairs — record the parameter
     // before the first data landing (sidecar-first, the round-10 crash
     // -window lesson) and refuse a drifted restart
-    val dbMeta = new org.apache.hadoop.fs.Path(docsDir, "_db_meta.json")
-    if (f.exists(dbMeta)) {
-      val in = f.open(dbMeta)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      val rec = graft.operators.ParamMeta.field(text, "nDocBuckets").map(_.toInt)
-      require(rec.contains(nDocBuckets),
-        s"clusterIngest: docs landing at $docsDir is bucketed with " +
-          s"nDocBuckets=${rec.getOrElse(-1)} but this run uses $nDocBuckets — " +
-          "restart with the landing's parameter or use a fresh directory")
-    } else {
-      val out = f.create(dbMeta, true)
-      try out.write(s"""{"nDocBuckets":$nDocBuckets}""".getBytes("UTF-8"))
-      finally out.close()
-    }
+    Levels.pin(s, docsDir, Seq("nDocBuckets" -> nDocBuckets.toLong),
+        file = "_db_meta.json")(_ =>
+      s"clusterIngest: docs landing at $docsDir is bucketed with nDocBuckets=" +
+        graft.operators.ParamMeta.readText(s, docsDir, "_db_meta.json")
+          .flatMap(graft.operators.ParamMeta.field(_, "nDocBuckets")).getOrElse(-1L) +
+        s" but this run uses $nDocBuckets — " +
+        "restart with the landing's parameter or use a fresh directory")
     // the batch feeds three derivations — pin it once
     val b = batch.select(col(idCol), col(textCol)).localCheckpoint(true)
     // the docs landing is hive-partitioned by a doc-id bucket, so the
@@ -2888,8 +2573,7 @@ object StreamingOps {
         .select(col(idCol), col(textCol))
     // a corpus exists only once a batch has LANDED data — the sidecar
     // alone (written above, possibly this very batch) creates the dir
-    val corpusExists = f.exists(docsPath) &&
-      f.listStatus(docsPath).exists(_.getPath.getName.startsWith("__batch="))
+    val corpusExists = Levels.ids(f, docsPath).nonEmpty
     // the batch's SELF pairs and its index CROSS pairs are independent
     // eager chains over the pinned batch (each ends in a candidate pin;
     // the cross probe also collects its touched buckets) — derive them
@@ -2970,8 +2654,10 @@ object StreamingOps {
     * assignment/pair state via [[vacuumClusterState]]. */
   def compactClusterDocs(spark: SparkSession, outDir: String,
       idCol: String = "doc_id", textCol: String = "text"): Unit =
-    foldBatchDirs(spark, s"$outDir/docs",
-      s"$idCol LONG, $textCol STRING, db INT", Seq(idCol), Seq("db"))
+    Levels.fold(spark, s"$outDir/docs", clusterDocsFold(spark, idCol, textCol))
+
+  private def clusterDocsFold(spark: SparkSession, idCol: String, textCol: String) =
+    Levels.dedupOn(spark, s"$idCol LONG, $textCol STRING, db INT", Seq(idCol), Seq("db"))
 
   /** Reclaim the dead state of a [[clusterIngest]] sink. Only the newest
     * batch `N` can ever replay (Structured Streaming commits batch `N-1`
@@ -2985,25 +2671,17 @@ object StreamingOps {
     * [[compactLshIndex]]); a crash mid-vacuum just leaves some dead
     * directories for the next run. */
   def vacuumClusterState(spark: SparkSession, outDir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val assignP = new Path(s"$outDir/_assign")
-    val pairsP = new Path(s"$outDir/_pairs")
-    val f = assignP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def versions(p: Path): Seq[Long] =
-      if (f.exists(p))
-        f.listStatus(p).toSeq.map(_.getPath.getName)
-          .filter(_.startsWith("__batch="))
-          .map(_.stripPrefix("__batch=").toLong)
-      else Seq.empty
+    val (assign, pairs) = (s"$outDir/_assign", s"$outDir/_pairs")
+    val (f, _) = Levels.fs(spark, outDir)
+    def drop(root: String, keep: Long => Boolean): Unit =
+      Levels.ids(spark, root).filterNot(keep).foreach(v =>
+        f.delete(new org.apache.hadoop.fs.Path(Levels.dir(root, v)), true): Unit)
     // pairs land every batch, so the newest pair delta IS the newest batch
-    val newestBatch = versions(pairsP).sorted.lastOption
-    val frontier = newestBatch.flatMap(n =>
-      versions(assignP).filter(_ < n).sorted.lastOption)
+    val frontier = Levels.ids(spark, pairs).lastOption.flatMap(n =>
+      Levels.ids(spark, assign).filter(_ < n).lastOption)
     frontier.foreach { fr =>
-      versions(assignP).filter(_ < fr)
-        .foreach(v => f.delete(new Path(s"$outDir/_assign/__batch=$v"), true): Unit)
-      versions(pairsP).filter(_ <= fr)
-        .foreach(v => f.delete(new Path(s"$outDir/_pairs/__batch=$v"), true): Unit)
+      drop(assign, _ >= fr)
+      drop(pairs, _ > fr)
     }
   }
 
@@ -3011,24 +2689,10 @@ object StreamingOps {
     * frontier) with its version id, or (empty, -1) when none exists. */
   private def latestAssignment(spark: SparkSession, outDir: String,
       batchId: Long): (DataFrame, Long) = {
-    val p = new org.apache.hadoop.fs.Path(s"$outDir/_assign")
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prior =
-      if (f.exists(p))
-        f.listStatus(p).toSeq.map(_.getPath.getName)
-          .filter(_.startsWith("__batch="))
-          .map(_.stripPrefix("__batch=").toLong)
-          .filter(_ < batchId).sorted.lastOption
-      else None
-    prior match {
-      case Some(v) =>
-        (spark.read.schema("doc_id LONG, cluster_id LONG")
-          .parquet(s"$outDir/_assign/__batch=$v"), v)
-      case None =>
-        (spark.createDataFrame(
-          spark.sparkContext.emptyRDD[Row],
-          org.apache.spark.sql.types.StructType.fromDDL("doc_id LONG, cluster_id LONG")),
-          -1L)
+    val ddl = "doc_id LONG, cluster_id LONG"
+    Levels.ids(spark, s"$outDir/_assign").filter(_ < batchId).lastOption match {
+      case Some(v) => (spark.read.schema(ddl).parquet(Levels.dir(s"$outDir/_assign", v)), v)
+      case None => (empty(spark, ddl), -1L)
     }
   }
 
@@ -3036,22 +2700,11 @@ object StreamingOps {
     * (empty frame when none exist). */
   private def pairDeltas(spark: SparkSession, outDir: String,
       sinceExclusive: Long, untilExclusive: Long): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$outDir/_pairs")
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs =
-      if (f.exists(p))
-        f.listStatus(p).toSeq.map(_.getPath.getName)
-          .filter(_.startsWith("__batch="))
-          .map(_.stripPrefix("__batch=").toLong)
-          .filter(v => v > sinceExclusive && v < untilExclusive)
-      else Seq.empty
-    if (dirs.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row],
-        org.apache.spark.sql.types.StructType.fromDDL("id1 LONG, id2 LONG"))
-    else
-      spark.read.schema("id1 LONG, id2 LONG")
-        .parquet(dirs.map(v => s"$outDir/_pairs/__batch=$v"): _*)
+    val dirs = Levels.ids(spark, s"$outDir/_pairs")
+      .filter(v => v > sinceExclusive && v < untilExclusive)
+    if (dirs.isEmpty) empty(spark, "id1 LONG, id2 LONG")
+    else spark.read.schema("id1 LONG, id2 LONG")
+      .parquet(dirs.map(Levels.dir(s"$outDir/_pairs", _)): _*)
   }
 
   /** Streaming Bloom-sidecar maintenance — the membership-summary twin of
@@ -3077,49 +2730,38 @@ object StreamingOps {
   def bloomIndexStream(docs: DataFrame, path: String, checkpoint: String,
       textCol: String = "text",
       expectedItems: Long = 1L << 22, fpp: Double = 0.01): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        bloomBatch(batch, batchId, path, textCol, expectedItems, fpp)
-      }
+    sink(docs, checkpoint)(bloomBatch(_, _, path, textCol, expectedItems, fpp))
 
   /** One [[bloomIndexStream]] micro-batch (extracted so specs can drive
     * replay/crash orderings directly). */
   private[graft] def bloomBatch(batch: DataFrame, batchId: Long, path: String,
       textCol: String, expectedItems: Long, fpp: Double): Unit = {
     val s = batch.sparkSession
-    val p = new org.apache.hadoop.fs.Path(path)
-    val f = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val (f, p) = Levels.fs(s, path)
     requireBatchLineage(f, p, batchId, "bloomIndexStream", path)
-    assertBloomMeta(f, p, expectedItems, fpp, path)
-    // meta BEFORE data: a crash between the two then leaves the sizing
-    // recorded and no sketch — a drifted restart still fails loudly at
-    // the batch, never by landing an unmergeable sketch
-    val meta = new org.apache.hadoop.fs.Path(p, "_meta.json")
-    if (!f.exists(meta)) writeFile(f, meta, bloomMetaJson(expectedItems, fpp))
+    Levels.pin(s, path, bloomFields(expectedItems, fpp), "batch")(bad =>
+      s"bloom-sidecar sizing disagrees with the index at $path " +
+        s"(${bad.mkString(", ")}) — differently-sized sketches do not " +
+        "merge; restart with the index's parameters or rebuild it")
     val bytes = graft.operators.DedupOps.corpusDigestBloom(
       batch, textCol, expectedItems, fpp)
-    writeFile(f, new org.apache.hadoop.fs.Path(p, s"__batch=$batchId/bloom.bin"), bytes)
+    writeFile(f, new org.apache.hadoop.fs.Path(s"$path/__batch=$batchId/bloom.bin"), bytes)
   }
 
   /** Bootstrap the sidecar from an existing corpus (`__batch=-1`). */
   def bloomIndexBase(corpus: DataFrame, path: String, textCol: String = "text",
       expectedItems: Long = 1L << 22, fpp: Double = 0.01): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val f = p.getFileSystem(corpus.sparkSession.sparkContext.hadoopConfiguration)
-    val dir = new org.apache.hadoop.fs.Path(p, "__batch=-1")
-    require(!f.exists(dir), s"$dir already exists — bloomIndexBase bootstraps once")
-    writeFile(f, new org.apache.hadoop.fs.Path(p, "_meta.json"),
-      bloomMetaJson(expectedItems, fpp))
+    val s = corpus.sparkSession
+    val (f, _) = Levels.fs(s, path)
+    val dir = Levels.newBase(s, path, "bloomIndexBase")
+    graft.operators.ParamMeta.write(s, path, bloomFields(expectedItems, fpp))
     val bytes = graft.operators.DedupOps.corpusDigestBloom(
       corpus, textCol, expectedItems, fpp)
     writeFile(f, new org.apache.hadoop.fs.Path(dir, "bloom.bin"), bytes)
   }
 
-  private def bloomMetaJson(expectedItems: Long, fpp: Double): Array[Byte] =
-    s"""{"expectedItems":$expectedItems,"fppMicros":${math.round(fpp * 1e6)}}"""
-      .getBytes("UTF-8")
+  private def bloomFields(expectedItems: Long, fpp: Double) =
+    Seq("expectedItems" -> expectedItems, "fppMicros" -> math.round(fpp * 1e6))
 
   private def bloomBytes(bf: org.apache.spark.util.sketch.BloomFilter): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
@@ -3135,60 +2777,25 @@ object StreamingOps {
     * OR is idempotent, so over-merging a leftover is always safe and a
     * reader never loses bits whatever the crash point. */
   def readMergedBloom(spark: SparkSession, path: String): Array[Byte] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val levels = f.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("__batch="))
-      .sortBy(_.getPath.getName.stripPrefix("__batch=").toLong)
-      .map(s => new org.apache.hadoop.fs.Path(s.getPath, "bloom.bin")) ++
-      Seq(new org.apache.hadoop.fs.Path(p, "_compacting.bin"),
-        new org.apache.hadoop.fs.Path(p, "_retired.bin"))
-    val present = levels.filter(f.exists)
+    val (f, p) = Levels.fs(spark, path)
+    val present = (Levels.dirs(spark, path).map(new org.apache.hadoop.fs.Path(_, "bloom.bin")) ++
+      Levels.foldLeftovers(f, p, Some("bloom.bin")).map(_._1)).filter(f.exists)
     require(present.nonEmpty, s"no sketch levels under $path")
     bloomBytes(present.map(readBloom(f, _)).reduce(_ mergeInPlace _))
   }
 
-  /** Fold committed sketch deltas into the `__batch=-1` base. OR-merge is
-    * idempotent (re-merging the same bits is a no-op), so the fold is
-    * crash-safe by the retired ordering alone: merge (including any
-    * staging/retired leftover of a crashed prior fold) → write staging →
-    * retire old base → install staging → drop folded deltas → drop
-    * retired. Every intermediate state keeps all bits reachable by
-    * [[readMergedBloom]] (which unions the leftovers), and rerunning the
-    * fold converges. The newest delta is still protected (uniform
-    * contract: only deltas strictly below the newest are provably
-    * checkpoint-committed). */
-  def compactBloomIndex(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(p)) return
-    val staging = new org.apache.hadoop.fs.Path(p, "_compacting.bin")
-    val retired = new org.apache.hadoop.fs.Path(p, "_retired.bin")
-    val all = f.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("__batch="))
-      .map(_.getPath.getName.stripPrefix("__batch=").toLong)
-    val newest = all.filter(_ >= 0).sorted.lastOption
-    val foldable = all.filterNot(newest.contains)
-    if (foldable.size <= 1 && foldable.forall(_ == -1L) &&
-        !f.exists(staging) && !f.exists(retired)) return
-    // a crashed prior fold may have left the base missing (retired holds
-    // its bits) — merge whatever exists among levels + leftovers
-    val sources = (foldable.sorted.map(id =>
-        new org.apache.hadoop.fs.Path(p, s"__batch=$id/bloom.bin")) ++
-      Seq(staging, retired)).filter(f.exists)
-    if (sources.isEmpty) return
-    val merged = sources.map(readBloom(f, _)).reduce(_ mergeInPlace _)
-    writeFile(f, staging, bloomBytes(merged))
-    val baseDir = new org.apache.hadoop.fs.Path(p, "__batch=-1")
-    val base = new org.apache.hadoop.fs.Path(baseDir, "bloom.bin")
-    f.mkdirs(baseDir): Unit
-    if (f.exists(retired)) f.delete(retired, false): Unit
-    if (f.exists(base)) require(f.rename(base, retired), s"retire $base failed")
-    require(f.rename(staging, base), s"rename $staging -> $base failed")
-    foldable.filter(_ >= 0).foreach(id =>
-      f.delete(new org.apache.hadoop.fs.Path(p, s"__batch=$id"), true): Unit)
-    f.delete(retired, false): Unit
-  }
+  /** Fold committed sketch deltas into the `__batch=-1` base — the
+    * leveled fold (README, "Leveled artifact layout") over one
+    * `bloom.bin` per level, its staging step an OR-merge. OR is
+    * idempotent, so re-merging a crash leftover is a no-op and
+    * [[readMergedBloom]] never loses bits at any crash point. */
+  def compactBloomIndex(spark: SparkSession, path: String): Unit =
+    Levels.fold(spark, path, (_, levels, leftovers, staging) => {
+      val (f, _) = Levels.fs(spark, path)
+      writeFile(f, new org.apache.hadoop.fs.Path(staging), bloomBytes(
+        (levels ++ leftovers.map(_._1)).map(l => readBloom(f, new org.apache.hadoop.fs.Path(l)))
+          .reduce(_ mergeInPlace _)))
+    }, file = Some("bloom.bin"))
 
   private def readBloom(f: org.apache.hadoop.fs.FileSystem,
       path: org.apache.hadoop.fs.Path): org.apache.spark.util.sketch.BloomFilter = {
@@ -3200,199 +2807,6 @@ object StreamingOps {
       path: org.apache.hadoop.fs.Path, bytes: Array[Byte]): Unit = {
     val out = f.create(path, true)
     try out.write(bytes) finally out.close()
-  }
-
-  private def assertBloomMeta(f: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path, expectedItems: Long, fpp: Double,
-      path: String): Unit = {
-    val meta = new org.apache.hadoop.fs.Path(p, "_meta.json")
-    if (f.exists(meta)) {
-      val in = f.open(meta)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      val mismatches = graft.operators.ParamMeta.mismatches(text,
-        Seq("expectedItems" -> expectedItems, "fppMicros" -> math.round(fpp * 1e6)),
-        callerLabel = "batch")
-      require(mismatches.isEmpty,
-        s"bloom-sidecar sizing disagrees with the index at $path " +
-          s"(${mismatches.mkString(", ")}) — differently-sized sketches do not " +
-          "merge; restart with the index's parameters or rebuild it")
-    }
-  }
-
-  /** Leftover staging/retired directories of a crashed [[foldBatchDirs]]
-    * under `dir`, if any. Their presence means the layout is
-    * mid-transition: in the HIDE window (old base renamed to `_retired`,
-    * staging not yet installed) the folded history is visible ONLY inside
-    * these underscore directories, which partition discovery skips. */
-  private def foldLeftovers(f: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] =
-    Seq("_compacting", "_retired")
-      .map(new org.apache.hadoop.fs.Path(dir, _)).filter(f.exists)
-
-  /** Crash-window-exact scan of an accumulator directory: the visible
-    * `__batch=` levels (partition-discovery read) unioned with any
-    * staging/retired leftovers of a crashed fold, so a read in the hide
-    * window still sees the folded history instead of silently dropping
-    * it. Read-only — safe under concurrent readers (recovery itself stays
-    * the maintainer's job). Callers apply their own dedup: the OVERLAP
-    * window (base installed, folded delta not yet dropped) shows the same
-    * rows twice, and every caller's tag/key dedup collapses that. */
-  private def stateScan(spark: SparkSession, root: String, ddl: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // select the data columns explicitly: the discovery read appends the
-    // __batch partition column, which the flat leftover dirs don't have
-    val dataCols = org.apache.spark.sql.types.StructType.fromDDL(ddl)
-      .fieldNames.toSeq.map(col)
-    val base = spark.read.schema(ddl).option("basePath", root).parquet(root)
-      .select(dataCols: _*)
-    foldLeftovers(f, p).foldLeft(base)((acc, d) =>
-      acc.unionByName(spark.read.schema(ddl).parquet(d.toString).select(dataCols: _*)))
-  }
-
-  /** Heal a crashed fold BEFORE a batch step reads `dir` to compute state
-    * it will PERSIST (admissions, dedup flags, novel-chunk sets): rerun
-    * the fold, whose staged-rename steps are idempotent and union the
-    * leftovers back in. Unlike a reader, a batch step may not merely
-    * tolerate the hide window — a decision computed from the visible
-    * levels alone would be wrong AND durable (the budget-frontier /
-    * re-admission failure class). Single-writer context only: the stream
-    * IS the maintainer here, and a leftover means the out-of-band
-    * compaction crashed, so rerunning cannot race it. No-op (two exists
-    * probes) in the steady state. */
-  private def healFoldLeftovers(spark: SparkSession, dir: String, ddl: String,
-      dedupKeys: Seq[String], partitionCols: Seq[String]): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (foldLeftovers(f, p).nonEmpty)
-      foldBatchDirs(spark, dir, ddl, dedupKeys, partitionCols)
-  }
-
-  /** Shared staged-rename fold under a `__batch=<id>`-structured directory:
-    * read every delta strictly below the newest (plus the existing base
-    * and any staging/retired leftovers of a crashed prior fold), dedup on
-    * `dedupKeys`, write to an invisible staging dir, then
-    * retire-old-base → install-staging → drop-folded-deltas. Every crash
-    * point either keeps all rows in visible directories or is recovered by
-    * rerunning; the one overlap window (base installed, folded delta not
-    * yet dropped) only duplicates rows the callers tolerate (see each
-    * caller's contract). */
-  private def foldBatchDirs(spark: SparkSession, dir: String, dataDDL: String,
-      dedupKeys: Seq[String], partitionCols: Seq[String]): Unit = {
-    import org.apache.hadoop.fs.Path
-    val dirPath = new Path(dir)
-    val f = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(dirPath)) return
-    val staging = new Path(dirPath, "_compacting")
-    val retired = new Path(dirPath, "_retired")
-    val base = new Path(dirPath, "__batch=-1")
-    val dataCols = org.apache.spark.sql.types.StructType.fromDDL(dataDDL).fieldNames.toSeq
-    val allBatchDirs = f.listStatus(dirPath).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("__batch="))
-    val newest = allBatchDirs
-      .map(_.getPath.getName.stripPrefix("__batch=").toLong)
-      .filter(_ >= 0).sorted.lastOption
-    val batchDirs = allBatchDirs.filterNot(s =>
-      newest.contains(s.getPath.getName.stripPrefix("__batch=").toLong))
-    // nothing foldable (just the base and/or the protected newest delta)
-    // and no crash leftovers to recover — leave the directory untouched
-    if (batchDirs.forall(_.getPath.getName == "__batch=-1") &&
-        batchDirs.size <= 1 && !f.exists(staging) && !f.exists(retired)) return
-    val visible =
-      if (batchDirs.nonEmpty)
-        Seq(spark.read.schema(s"$dataDDL, __batch LONG").option("basePath", dir)
-          .parquet(batchDirs.map(_.getPath.toString): _*)
-          .select(dataCols.map(col): _*))
-      else Seq.empty
-    // a crashed prior fold leaves rows in staging/retired — union them
-    // back so a rerun always recovers the full set
-    val extras = Seq(staging, retired).filter(f.exists).map(p =>
-      spark.read.schema(dataDDL).parquet(p.toString).select(dataCols.map(col): _*))
-    val parts = visible ++ extras
-    if (parts.isEmpty) return
-    // materialized (localCheckpoint) before any directory is touched: the
-    // plan reads the very directories the steps below retire
-    val deduped = parts.reduce(_ unionByName _).dropDuplicates(dedupKeys)
-    val compacted =
-      (if (partitionCols.nonEmpty) deduped.repartition(partitionCols.map(col): _*)
-       else deduped).localCheckpoint(true)
-    compacted.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy(partitionCols: _*).parquet(staging.toString)
-    // retired's content is now ⊆ staging, safe to drop before reusing it
-    if (f.exists(retired)) f.delete(retired, true): Unit
-    if (f.exists(base)) require(f.rename(base, retired), s"rename $base failed")
-    require(f.rename(staging, base), s"rename $staging -> $base failed")
-    batchDirs.filter(_.getPath.getName != "__batch=-1")
-      .foreach(s => f.delete(s.getPath, true): Unit)
-    f.delete(retired, true): Unit
-  }
-
-  /** [[foldBatchDirs]]' LATEST-WINS sibling — for VERSIONED state, where
-    * `dropDuplicates` would be wrong (a key's superseded snapshots are
-    * not duplicate rows): fold every committed delta strictly below the
-    * newest into the `__batch=-1` base, keeping for each key only the
-    * rows of its newest batch level (a version may be multi-row — a
-    * query's k edges — so the resolution is a window filter, not a
-    * per-key reduce). Same staged-rename ordering and newest-delta
-    * protection as [[foldBatchDirs]].
-    *
-    * Crash leftovers re-enter at pseudo-batches ordered by recency:
-    * staging (−2) is a finished NEWER resolution than the not-yet-renamed
-    * base (−1 beats it only when a still-visible delta isn't the true
-    * winner — and in the staging-exists window no delta has been deleted
-    * yet, so every key staging won from a delta still resolves to that
-    * delta); retired (−3) is always the base's predecessor. This is why
-    * a latest-wins fold can't share foldBatchDirs' flat −1 recovery:
-    * superseded SNAPSHOTS at one pseudo-batch would interleave rows of
-    * different versions of the same key. */
-  private def foldBatchDirsLatestWins(spark: SparkSession, dir: String,
-      dataDDL: String, keyCols: Seq[String]): Unit = {
-    import org.apache.hadoop.fs.Path
-    val dirPath = new Path(dir)
-    val f = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(dirPath)) return
-    val staging = new Path(dirPath, "_compacting")
-    val retired = new Path(dirPath, "_retired")
-    val base = new Path(dirPath, "__batch=-1")
-    val dataCols = org.apache.spark.sql.types.StructType.fromDDL(dataDDL)
-      .fieldNames.toSeq
-    val allBatchDirs = f.listStatus(dirPath).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("__batch="))
-    val newest = allBatchDirs
-      .map(_.getPath.getName.stripPrefix("__batch=").toLong)
-      .filter(_ >= 0).sorted.lastOption
-    val batchDirs = allBatchDirs.filterNot(s =>
-      newest.contains(s.getPath.getName.stripPrefix("__batch=").toLong))
-    if (batchDirs.forall(_.getPath.getName == "__batch=-1") &&
-        batchDirs.size <= 1 && !f.exists(staging) && !f.exists(retired)) return
-    val visible =
-      if (batchDirs.nonEmpty)
-        Seq(spark.read.schema(s"$dataDDL, __batch LONG").option("basePath", dir)
-          .parquet(batchDirs.map(_.getPath.toString): _*))
-      else Seq.empty
-    val extras = Seq((staging, -2L), (retired, -3L)).filter(p => f.exists(p._1))
-      .map { case (p, b) =>
-        spark.read.schema(dataDDL).parquet(p.toString).withColumn("__batch", lit(b))
-      }
-    val parts = visible ++ extras
-    if (parts.isEmpty) return
-    val resolved = {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(keyCols.map(col): _*)
-      parts.reduce(_ unionByName _)
-        .withColumn("__mb", max(col("__batch")).over(w))
-        .filter(col("__batch") === col("__mb"))
-        .select(dataCols.map(col): _*)
-        .localCheckpoint(true)
-    }
-    resolved.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(staging.toString)
-    if (f.exists(retired)) f.delete(retired, true): Unit
-    if (f.exists(base)) require(f.rename(base, retired), s"rename $base failed")
-    require(f.rename(staging, base), s"rename $staging -> $base failed")
-    batchDirs.filter(_.getPath.getName != "__batch=-1")
-      .foreach(s => f.delete(s.getPath, true): Unit)
-    f.delete(retired, true): Unit
   }
 
   /** Gap-based session windows over the live stream — the canonical
@@ -3590,22 +3004,18 @@ object StreamingOps {
   def kmeansStream(embeddings: DataFrame, path: String, checkpoint: String,
       seed: Seq[(Int, Seq[Double])],
       idCol: String = "vec_id", vecCol: String = "embedding"): DataStreamWriter[Row] =
-    embeddings.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        kmeansBatch(batch, batchId, path, seed, idCol, vecCol)
-      }
+    sink(embeddings, checkpoint)(kmeansBatch(_, _, path, seed, idCol, vecCol))
 
   private[graft] def kmeansBatch(batch: DataFrame, batchId: Long, path: String,
       seed: Seq[(Int, Seq[Double])], idCol: String, vecCol: String): Unit = {
     val s = batch.sparkSession
-    val p = new org.apache.hadoop.fs.Path(path)
-    val f = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val (f, p) = Levels.fs(s, path)
     requireBatchLineage(f, p, batchId, "kmeansStream", path)
-    assertKmeansMeta(f, p, seed, path)
-    val meta = new org.apache.hadoop.fs.Path(p, "_meta.json")
-    if (!f.exists(meta)) writeFile(f, meta, kmeansMetaJson(seed))
+    Levels.pin(s, path, Seq("k" -> seed.size.toLong,
+        "dim" -> seed.headOption.map(_._2.size).getOrElse(0).toLong))(bad =>
+      s"kmeansStream seed geometry disagrees with the state at $path " +
+        s"(${bad.map(_.replace("index=", "state=")).mkString(", ")}) — a drifted " +
+        "restart would fold incompatible accumulators; use the original seed or a fresh path")
     val centroids = graft.operators.SimilarityOps.centroidsFromSums(
       accumulatedSums(s, path, belowBatch = batchId), seed)
     val vecs = batch.select(col(idCol).cast("long").as("id"),
@@ -3629,22 +3039,14 @@ object StreamingOps {
     * itself or via staging, never both. */
   private[graft] def accumulatedSums(spark: SparkSession, path: String,
       belowBatch: Long): Seq[(Int, Int, Long, Long)] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(p)) return Seq.empty
-    val staged = stagedFold(f, p)
+    val (f, p) = Levels.fs(spark, path)
+    val staged = Levels.manifestStaging(f, p)
     val excluded = staged.map(_._2).getOrElse(Set.empty)
-    val levels = f.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("__batch="))
-      .map(_.getPath)
-      .filter(l => !excluded.contains(l.getName))
-      .filter(_.getName.stripPrefix("__batch=").toLong < belowBatch)
-    val dirs = levels.map(_.toString) ++
+    val dirs = Levels.ids(f, p).filter(id => !excluded.contains(id) && id < belowBatch)
+      .map(Levels.dir(path, _)) ++
       // the staged fold replaces its sources; its level id is the max of
-      // the folded names, so the belowBatch filter applies to it too
-      staged.filter { case (_, names) =>
-        names.map(_.stripPrefix("__batch=").toLong).max < belowBatch
-      }.map(_._1.toString)
+      // the folded ids, so the belowBatch filter applies to it too
+      staged.filter(_._2.max < belowBatch).map(_._1.toString)
     if (dirs.isEmpty) return Seq.empty
     spark.read.parquet(dirs: _*)
       .groupBy(col("cell"), col("dim"))
@@ -3653,41 +3055,6 @@ object StreamingOps {
       .map(r => (r.getAs[Int]("cell"), r.getAs[Int]("dim"),
         r.getAs[Long]("sx"), r.getAs[Long]("n")))
       .toSeq
-  }
-
-  private def kmeansMetaJson(seed: Seq[(Int, Seq[Double])]): Array[Byte] =
-    s"""{"k":${seed.size},"dim":${seed.headOption.map(_._2.size).getOrElse(0)}}"""
-      .getBytes("UTF-8")
-
-  private def assertKmeansMeta(f: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path, seed: Seq[(Int, Seq[Double])], path: String): Unit = {
-    val meta = new org.apache.hadoop.fs.Path(p, "_meta.json")
-    if (f.exists(meta)) {
-      val in = f.open(meta)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      val bad = graft.operators.ParamMeta.mismatches(text, Seq(
-        "k" -> seed.size.toLong,
-        "dim" -> seed.headOption.map(_._2.size).getOrElse(0).toLong),
-        callerLabel = "caller")
-        .map(_.replace("index=", "state="))
-      require(bad.isEmpty,
-        s"kmeansStream seed geometry disagrees with the state at $path " +
-          s"(${bad.mkString(", ")}) — a drifted restart would fold " +
-          "incompatible accumulators; use the original seed or a fresh path")
-    }
-  }
-
-  /** The completed staging fold, if one exists: (path, folded level
-    * names). A staging dir without its `_folded.json` manifest is an
-    * incomplete write — invisible here, deleted by the next compact. */
-  private def stagedFold(f: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Option[(org.apache.hadoop.fs.Path, Set[String])] = {
-    val staging = new org.apache.hadoop.fs.Path(p, "_staging_kmfold")
-    val manifest = new org.apache.hadoop.fs.Path(staging, "_folded.json")
-    if (!f.exists(manifest)) return None
-    val in = f.open(manifest)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    Some((staging, """__batch=-?\d+""".r.findAllIn(text).toSet))
   }
 
   /** The maintained state as of the last committed batch, in
@@ -3703,13 +3070,6 @@ object StreamingOps {
         col("n_vecs"))
   }
 
-  /** Current centroids (seed ⊕ all landed state) for downstream
-    * consumers — e.g. seeding ivfIndexStream or semanticDedup. */
-  def streamKmeansCentroids(spark: SparkSession, path: String,
-      seed: Seq[(Int, Seq[Double])]): Seq[(Int, Seq[Double])] =
-    graft.operators.SimilarityOps.centroidsFromSums(
-      accumulatedSums(spark, path, belowBatch = Long.MaxValue), seed)
-
   /** Fold committed state levels into one — the newest delta is never
     * touched (the only replayable one; the established compaction
     * contract). The folded level takes the name of the HIGHEST folded
@@ -3723,42 +3083,31 @@ object StreamingOps {
     *  2. delete the folded source levels (readers already skip them);
     *  3. rename staging to `__batch=<maxFoldedId>` (manifest travels
     *     inside the directory but underscore files are invisible to the
-    *     parquet reader, and [[stagedFold]] only looks under the staging
+    *     parquet reader, and [[Levels.manifestStaging]] only looks under the staging
     *     name — after the rename the level is an ordinary one).
     * Rerunning after any crash completes the protocol: a manifest-less
     * staging is deleted and refolded; a completed staging re-runs steps
     * 2-3. Single-maintainer contract like Storage.compact. */
   def compactKmeansState(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (f, p) = Levels.fs(spark, path)
     if (!f.exists(p)) return
-    val staging = new org.apache.hadoop.fs.Path(p, "_staging_kmfold")
-    stagedFold(f, p) match {
-      case Some((st, names)) =>
+    Levels.manifestStaging(f, p) match {
+      case Some((_, folded)) =>
         // recovery: finish the interrupted run (its fold set, not ours)
-        val maxId = names.map(_.stripPrefix("__batch=").toLong).max
-        names.foreach(n => f.delete(new org.apache.hadoop.fs.Path(p, n), true))
-        f.rename(st, new org.apache.hadoop.fs.Path(p, s"__batch=$maxId"))
+        Levels.installManifestFold(f, p, folded)
         return
-      case None =>
-        f.delete(staging, true) // incomplete staging: refold from sources
+      case None => // incomplete staging: refold from sources
+        f.delete(Levels.manifestStagingDir(p), true)
     }
-    val levels = f.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("__batch="))
-      .map(_.getPath)
-      .sortBy(_.getName.stripPrefix("__batch=").toLong)
+    val levels = Levels.ids(f, p)
     if (levels.size <= 2) return // base + newest only — nothing to fold
     val foldable = levels.dropRight(1) // protect the newest delta
-    val maxId = foldable.map(_.getName.stripPrefix("__batch=").toLong).max
-    spark.read.parquet(foldable.map(_.toString): _*)
+    spark.read.parquet(foldable.map(Levels.dir(path, _)): _*)
       .groupBy(col("cell"), col("dim"))
       .agg(sum(col("sx")).as("sx"), sum(col("n_vecs")).as("n_vecs"))
       .coalesce(1)
-      .write.mode("overwrite").parquet(staging.toString)
-    val manifest = foldable.map(l => s""""${l.getName}"""").mkString("[", ",", "]")
-    writeFile(f, new org.apache.hadoop.fs.Path(staging, "_folded.json"),
-      s"""{"folded":$manifest}""".getBytes("UTF-8"))
-    foldable.foreach(l => f.delete(l, true))
-    f.rename(staging, new org.apache.hadoop.fs.Path(p, s"__batch=$maxId"))
+      .write.mode("overwrite").parquet(Levels.manifestStagingDir(p).toString)
+    Levels.writeFoldManifest(f, p, foldable.toSet)
+    Levels.installManifestFold(f, p, foldable.toSet)
   }
 }

@@ -565,6 +565,27 @@ class ForgetSpec extends SparkSpec {
       Seq("[1]", "[9]"))
   }
 
+  test("forgetByScan checks every level's key width before the first rewrite") {
+    // two levels: a LONG-keyed level 0 the LONG ids may rewrite, then an
+    // INT-keyed level 1 they are WIDER than — the refusal must come
+    // before level 0 is touched, not after it was already rewritten
+    val dir = tmpDir()
+    Seq((1L, "a"), (5L, "a")).toDF("k", "part")
+      .write.partitionBy("part").parquet(s"$dir/lv/__batch=0")
+    Seq((5, "b"), (9, "b")).toDF("k", "part")
+      .write.partitionBy("part").parquet(s"$dir/lv/__batch=1")
+    def files(root: java.io.File): Map[String, String] =
+      if (root.isDirectory) root.listFiles().toSeq.flatMap(files).toMap
+      else Map(root.getPath -> java.security.MessageDigest.getInstance("SHA-256")
+        .digest(java.nio.file.Files.readAllBytes(root.toPath)).map("%02x".format(_)).mkString)
+    val level0 = new java.io.File(s"$dir/lv/__batch=0")
+    val before = files(level0)
+    val e = intercept[IllegalArgumentException](
+      ForgetOps.forgetByScan(spark, s"$dir/lv", Seq(5L).toDF("k"), "k", Seq("part")))
+    assert(e.getMessage.contains("WIDER"))
+    assert(files(level0) == before)
+  }
+
   test("forgetStream drains every wired face; a forced replay is a per-face no-op") {
     import org.apache.spark.sql.streaming.Trigger
     val d = docs()
