@@ -1,7 +1,14 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{AnalysisException, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 import graft.functions.TimeFns
 import graft.model.Model
 
@@ -14,10 +21,12 @@ import graft.model.Model
   *    sorted within partitions by (id, rev, pos). This reproduces both
   *    guarantees of the reference schema (CassandraEventStoreSchema.cs:15):
   *    one aggregate's rows are co-located (single bucket) and stored in
-  *    clustering order. A per-aggregate read prunes to 1/nBuckets of the
-  *    data by directory, then to a handful of row groups via parquet
-  *    min/max on the sorted `id` — the Spark analogue of a single-partition
-  *    Cassandra read.
+  *    clustering order. A per-aggregate read ([[readAggregate]]) reads only
+  *    its `bucket=<b>` directory (1/nBuckets of the data), listed on the
+  *    driver with the schema taken from one file footer, then skips to a
+  *    handful of row groups via parquet min/max on the sorted `id`, and
+  *    orders the rows in one partition with no range sample — the Spark
+  *    analogue of a single-partition Cassandra read.
   *  - index: parquet partitioned by (et, pid) — identical to the reference's
   *    composite partition key ((et, pid)); a replay of one event type over a
   *    day range touches exactly those directories.
@@ -191,12 +200,14 @@ object Storage {
     * the min/max statistics the pruned reads rely on). */
   def appendEvents(
       rows: DataFrame, path: String,
-      nBuckets: Int = DefaultBuckets, format: String = "parquet"): Unit =
+      nBuckets: Int = DefaultBuckets, format: String = "parquet"): Unit = {
+    requireBuckets(nBuckets)
     rows
       .withColumn("bucket", pmod(xxhash64(col("id")), lit(nBuckets)).cast("int"))
       .repartition(col("bucket"))
       .sortWithinPartitions(col("id"), col("rev"), col("pos"))
       .write.mode(SaveMode.Append).partitionBy("bucket").format(format).save(path)
+  }
 
   /** A6 index sink: derive + append partitioned by (et, pid). */
   def appendIndex(indexRows: DataFrame, path: String): Unit =
@@ -232,25 +243,68 @@ object Storage {
 
   /** Pruned per-aggregate read against the bucketed layout — the Spark
     * analogue of Cassandra routing a single-partition read by token
-    * (CassandraEventStore.cs:362-365). The bucket for the id is computed
-    * with the same xxhash64 expression the writer used, so the scan prunes
-    * to one bucket directory (1/nBuckets of the files) before the sorted
-    * `id` min/max skips row groups inside it. */
+    * (CassandraEventStore.cs:362-365) for `LoadAggregateEventsQuery`
+    * (:483-490). The bucket for the id is computed with the same xxhash64
+    * expression the writer used, and only that `bucket=<b>` directory is
+    * read (with `basePath = path`, so `bucket` stays a column and the
+    * `bucket` filter stays a partition filter in the plan); the sorted `id`
+    * min/max then skips row groups inside it.
+    *
+    * No whole-table metadata work: the one directory is listed on the
+    * driver (no leaf-listing job) and the data schema comes from one data
+    * file's footer (no schema-inference job). The rows are ordered by
+    * (rev, pos) in ONE partition — one aggregate is small, so the scan
+    * keeps its file splits and a single-partition exchange replaces the
+    * range-sampled global sort; [[graft.operators.EventStoreOps.reassembleCommits]]
+    * downstream then needs no exchange of its own.
+    *
+    * A miss (the bucket has no data file: never written, or emptied by
+    * [[deleteAndRewrite]]) reads another bucket's directory instead, whose
+    * files the bucket filter prunes: an empty frame with the hit's schema,
+    * from the same plan. A store with no data file at all fails with the
+    * error a plain `spark.read.parquet(path)` raises. */
   def readAggregate(
       spark: SparkSession,
       path: String,
       aggregateId: Array[Byte],
       nBuckets: Int = DefaultBuckets): DataFrame = {
     val bucket = bucketOf(aggregateId, nBuckets)
-    spark.read.parquet(path)
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(path)
+    val fs = root.getFileSystem(hadoopConf)
+    def list(dir: Path) =
+      try fs.listStatus(dir).toSeq catch { case _: java.io.FileNotFoundException => Nil }
+    // a data file as Spark sees one: not `_*`/`.*` (markers, checksums, temp files)
+    def dataFile(dir: Path) = list(dir).find(f => f.isFile && !f.getPath.getName.matches("[_.].*"))
+    // the root is listed only on a miss (Iterator's `++` is lazy)
+    val candidates = Iterator(new Path(root, s"bucket=$bucket")) ++ list(root).iterator
+      .filter(d => d.isDirectory && d.getPath.getName.startsWith("bucket=")).map(_.getPath)
+    val (dir, file) = candidates.flatMap(d => dataFile(d).map(d -> _)).nextOption()
+      .getOrElse(throw (
+        if (fs.exists(root)) new AnalysisException("UNABLE_TO_INFER_SCHEMA", Map("format" -> "Parquet"))
+        else new AnalysisException("PATH_NOT_FOUND", Map("path" -> fs.makeQualified(root).toString))))
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, hadoopConf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    val dataSchema = ParquetFileFormat.readSchemaFromFooter(
+      new Footer(file.getPath, footer), new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    spark.read.schema(dataSchema.add("bucket", IntegerType))
+      .option("basePath", path).parquet(dir.toString)
       .filter(col("bucket") === bucket && col("id") === lit(aggregateId))
-      .orderBy(col("rev"), col("pos"))
+      .repartition(1)
+      .sortWithinPartitions(col("rev"), col("pos"))
   }
+
+  /** Refuses a bucket count below 1 — before anything is written or a
+    * stream starts (0 would fail mid-job, a negative count would write
+    * `bucket=-k` directories). */
+  private[graft] def requireBuckets(nBuckets: Int): Unit =
+    require(nBuckets >= 1, s"nBuckets must be at least 1, got $nBuckets")
 
   /** Bucket routing for an aggregate id, computed driver-side with the same
     * XXH64 kernel the writer's `xxhash64(id)` expression uses (seed 42) —
     * a point read must not launch a Spark job just to pick its directory. */
   def bucketOf(aggregateId: Array[Byte], nBuckets: Int = DefaultBuckets): Int = {
+    requireBuckets(nBuckets)
     val h = org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
       aggregateId, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET,
       aggregateId.length, 42L)

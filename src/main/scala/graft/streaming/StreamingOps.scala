@@ -84,9 +84,11 @@ object StreamingOps {
     * concurrent deletes/compactions goes through [[ingestToVersioned]],
     * whose per-batch commit participates in the Generations manifest CAS. */
   def ingestTo(events: DataFrame, path: String, checkpoint: String,
-      nBuckets: Int = graft.sources.Storage.DefaultBuckets): DataStreamWriter[Row] =
+      nBuckets: Int = graft.sources.Storage.DefaultBuckets): DataStreamWriter[Row] = {
+    graft.sources.Storage.requireBuckets(nBuckets)
     sink(events, checkpoint)((batch, _) =>
       graft.sources.Storage.appendEvents(batch, path, nBuckets))
+  }
 
   /** Streaming ingest into the VERSIONED (MVCC) layout: each micro-batch
     * is one `Generations.appendAndPromote` under `withConflictRetry`, so a
@@ -104,13 +106,15 @@ object StreamingOps {
     * fraction of its touched buckets (appendAndPromote's read-merge-write
     * note). */
   def ingestToVersioned(events: DataFrame, root: String, checkpoint: String,
-      nBuckets: Int = graft.sources.Storage.DefaultBuckets): DataStreamWriter[Row] =
+      nBuckets: Int = graft.sources.Storage.DefaultBuckets): DataStreamWriter[Row] = {
+    graft.sources.Storage.requireBuckets(nBuckets)
     sink(events, checkpoint) { (batch, _) =>
       graft.sources.Generations.withConflictRetry() {
         graft.sources.Generations.appendAndPromote(
           batch.sparkSession, root, batch, nBuckets)
       }: Unit
     }
+  }
 
   /** Continuous index MAINTENANCE (E5's streaming analogue): each
     * micro-batch of canonical event rows is projected through the A6

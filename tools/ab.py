@@ -1,0 +1,86 @@
+#!/usr/bin/env python3
+"""Paired parent/change benchmark: checks out the parent commit, runs
+alternating pairs of `perfbench/run.py --trace 0` per workload and seed, and
+prints `perfbench/compare.py`'s verdict per end-to-end metric.
+
+Usage (from anywhere in the repository):
+
+    python3 tools/ab.py --parent REV --workdir DIR [--seeds 1-10 7919]
+                        [--workloads point_load live_ingest] [--seconds N]
+
+The parent commit REV (`HEAD` while the change is uncommitted, `HEAD~1`
+once it is committed) is cloned into `DIR/parent` and checked out detached;
+a later call with the same DIR and parent reuses that checkout and its
+benchmark build. The change is the working tree of this repository. For
+the i-th seed the parent runs first when i is even and second when i is odd,
+so neither side always runs on the warmer host. Run outputs are appended to
+`DIR/parent.txt` and `DIR/change.txt` (delete them to start over), then
+compared. Workloads and `--seconds` default to BENCHMARK.json. Each run takes
+about a minute; run nothing else on the host meanwhile.
+"""
+
+import argparse
+import json
+import os
+import subprocess
+import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def seeds(specs):
+    """'1-10' and '7919' style arguments to a list of seeds, in order."""
+    out = []
+    for s in specs:
+        lo, _, hi = s.partition("-")
+        out += list(range(int(lo), int(hi) + 1)) if hi else [int(lo)]
+    return out
+
+
+def git(*args, cwd=ROOT):
+    return subprocess.run(["git", *args], cwd=cwd, check=True,
+                          capture_output=True, text=True).stdout.strip()
+
+
+def checkout_parent(rev, path):
+    sha = git("rev-parse", "--verify", f"{rev}^{{commit}}")
+    if not os.path.isdir(os.path.join(path, ".git")):
+        subprocess.run(["git", "clone", "--quiet", "--no-checkout", ROOT, path], check=True)
+    git("checkout", "--quiet", "--detach", sha, cwd=path)
+    return sha
+
+
+def run(side, cwd, out, workload, seed, seconds):
+    print(f"{side:6} {workload} seed {seed}", flush=True)
+    with open(out, "a") as f:
+        subprocess.run([sys.executable, "perfbench/run.py", "--workload", workload,
+                        "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
+                       cwd=cwd, stdout=f, check=False)
+
+
+def main():
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        spec = json.load(f)
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--workdir", required=True)
+    ap.add_argument("--parent", required=True)
+    ap.add_argument("--seeds", nargs="+", default=["1-10"])
+    ap.add_argument("--workloads", nargs="+", default=[w["name"] for w in spec["workloads"]])
+    ap.add_argument("--seconds", type=int, default=spec["run_seconds"])
+    a = ap.parse_args()
+    work = os.path.abspath(a.workdir)
+    os.makedirs(work, exist_ok=True)
+    parent = os.path.join(work, "parent")
+    print(f"parent {checkout_parent(a.parent, parent)} in {parent}", flush=True)
+    outs = {"parent": (parent, os.path.join(work, "parent.txt")),
+            "change": (ROOT, os.path.join(work, "change.txt"))}
+    for i, seed in enumerate(seeds(a.seeds)):
+        for w in a.workloads:
+            for side in (("parent", "change") if i % 2 == 0 else ("change", "parent")):
+                run(side, *outs[side], w, seed, a.seconds)
+    return subprocess.run([sys.executable, os.path.join(ROOT, "perfbench", "compare.py"),
+                           outs["parent"][1], outs["change"][1]]).returncode
+
+
+if __name__ == "__main__":
+    sys.exit(main())
