@@ -371,6 +371,7 @@ object Generations {
   def bootstrap(
       spark: SparkSession, root: String, rows: DataFrame,
       nBuckets: Int = Storage.DefaultBuckets): Unit = {
+    Storage.requireBuckets(nBuckets)
     val gen = claimGeneration(spark, root)
     Storage.appendEvents(rows, s"$root/$gen", nBuckets)
     val buckets = spark.read.parquet(s"$root/$gen")
@@ -460,6 +461,7 @@ object Generations {
   def deleteAndPromote(
       spark: SparkSession, root: String, tombstones: DataFrame,
       nBuckets: Int = Storage.DefaultBuckets): Option[String] = {
+    Storage.requireBuckets(nBuckets)
     // capture the base version BEFORE reading state: any writer that
     // commits after this line makes the final promote() a conflict, so the
     // read-modify-write can never silently overwrite a concurrent commit
@@ -512,6 +514,7 @@ object Generations {
   def appendAndPromote(
       spark: SparkSession, root: String, rows: DataFrame,
       nBuckets: Int = Storage.DefaultBuckets): Option[String] = {
+    Storage.requireBuckets(nBuckets)
     val baseVersion = currentVersion(spark, root)
     val entries = readManifest(spark, root).map(_.entries).getOrElse(Map.empty)
     val incoming = rows

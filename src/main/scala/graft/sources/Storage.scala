@@ -1,14 +1,7 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.format.converter.ParquetMetadataConverter
-import org.apache.parquet.hadoop.Footer
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{AnalysisException, DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.{
-  ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.IntegerType
 import graft.functions.TimeFns
 import graft.model.Model
 
@@ -22,11 +15,16 @@ import graft.model.Model
   *    guarantees of the reference schema (CassandraEventStoreSchema.cs:15):
   *    one aggregate's rows are co-located (single bucket) and stored in
   *    clustering order. A per-aggregate read ([[readAggregate]]) reads only
-  *    its `bucket=<b>` directory (1/nBuckets of the data), listed on the
-  *    driver with the schema taken from one file footer, then skips to a
+  *    its `bucket=<b>` directory (1/nBuckets of the data), then skips to a
   *    handful of row groups via parquet min/max on the sorted `id`, and
   *    orders the rows in one partition with no range sample — the Spark
   *    analogue of a single-partition Cassandra read.
+  *  - reads ([[readEvents]]): the frame is built from the partition
+  *    directory names and one data file's schema, with no Spark job, and a
+  *    scan lists files only under the partition directories its filters
+  *    keep (`PrunedFileIndex`); the directory set is fixed when the frame
+  *    is built and each directory's files are listed once, by the first
+  *    plan that keeps it.
   *  - index: parquet partitioned by (et, pid) — identical to the reference's
   *    composite partition key ((et, pid)); a replay of one event type over a
   *    day range touches exactly those directories.
@@ -245,50 +243,29 @@ object Storage {
     * analogue of Cassandra routing a single-partition read by token
     * (CassandraEventStore.cs:362-365) for `LoadAggregateEventsQuery`
     * (:483-490). The bucket for the id is computed with the same xxhash64
-    * expression the writer used, and only that `bucket=<b>` directory is
-    * read (with `basePath = path`, so `bucket` stays a column and the
-    * `bucket` filter stays a partition filter in the plan); the sorted `id`
-    * min/max then skips row groups inside it.
+    * expression the writer used; the frame is [[readEvents]]'s, narrowed to
+    * that `bucket=<b>` directory, and the sorted `id` min/max then skips row
+    * groups inside it. The narrowing matters for the relation's size, not
+    * for pruning: the single-partition exchange below makes the planner
+    * size its input against `spark.sql.maxSinglePartitionBytes` from the
+    * relation's statistics, which over the whole table would list every
+    * directory (a Spark job past 32 of them) and, past 128 MB, add a
+    * shuffle.
     *
-    * No whole-table metadata work: the one directory is listed on the
-    * driver (no leaf-listing job) and the data schema comes from one data
-    * file's footer (no schema-inference job). The rows are ordered by
-    * (rev, pos) in ONE partition — one aggregate is small, so the scan
-    * keeps its file splits and a single-partition exchange replaces the
-    * range-sampled global sort; [[graft.operators.EventStoreOps.reassembleCommits]]
-    * downstream then needs no exchange of its own.
-    *
-    * A miss (the bucket has no data file: never written, or emptied by
-    * [[deleteAndRewrite]]) reads another bucket's directory instead, whose
-    * files the bucket filter prunes: an empty frame with the hit's schema,
-    * from the same plan. A store with no data file at all fails with the
-    * error a plain `spark.read.parquet(path)` raises. */
+    * The rows are ordered by (rev, pos) in ONE partition — one aggregate is
+    * small, so the scan keeps its file splits and a single-partition
+    * exchange replaces the range-sampled global sort;
+    * [[graft.operators.EventStoreOps.reassembleCommits]] downstream then
+    * needs no exchange of its own. A miss (the bucket directory is absent:
+    * never written, or emptied by [[deleteAndRewrite]]) keeps no directory:
+    * an empty frame with the table's schema. */
   def readAggregate(
       spark: SparkSession,
       path: String,
       aggregateId: Array[Byte],
       nBuckets: Int = DefaultBuckets): DataFrame = {
     val bucket = bucketOf(aggregateId, nBuckets)
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
-    val root = new Path(path)
-    val fs = root.getFileSystem(hadoopConf)
-    def list(dir: Path) =
-      try fs.listStatus(dir).toSeq catch { case _: java.io.FileNotFoundException => Nil }
-    // a data file as Spark sees one: not `_*`/`.*` (markers, checksums, temp files)
-    def dataFile(dir: Path) = list(dir).find(f => f.isFile && !f.getPath.getName.matches("[_.].*"))
-    // the root is listed only on a miss (Iterator's `++` is lazy)
-    val candidates = Iterator(new Path(root, s"bucket=$bucket")) ++ list(root).iterator
-      .filter(d => d.isDirectory && d.getPath.getName.startsWith("bucket=")).map(_.getPath)
-    val (dir, file) = candidates.flatMap(d => dataFile(d).map(d -> _)).nextOption()
-      .getOrElse(throw (
-        if (fs.exists(root)) new AnalysisException("UNABLE_TO_INFER_SCHEMA", Map("format" -> "Parquet"))
-        else new AnalysisException("PATH_NOT_FOUND", Map("path" -> fs.makeQualified(root).toString))))
-    val footer = ParquetFooterReader.readFooter(
-      HadoopInputFile.fromStatus(file, hadoopConf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
-    val dataSchema = ParquetFileFormat.readSchemaFromFooter(
-      new Footer(file.getPath, footer), new ParquetToSparkSchemaConverter(spark.sessionState.conf))
-    spark.read.schema(dataSchema.add("bucket", IntegerType))
-      .option("basePath", path).parquet(dir.toString)
+    PrunedFileIndex.read(spark, path, "parquet", only = Some(s"bucket=$bucket"))
       .filter(col("bucket") === bucket && col("id") === lit(aggregateId))
       .repartition(1)
       .sortWithinPartitions(col("rev"), col("pos"))
@@ -329,6 +306,7 @@ object Storage {
       path: String,
       tombstones: DataFrame,
       nBuckets: Int = DefaultBuckets): Unit = {
+    requireBuckets(nBuckets)
     // affected buckets computed distributed (writer's xxhash64 expression);
     // the collect is bounded by nBuckets even when the tombstone frame isn't
     val buckets = tombstones
@@ -336,7 +314,7 @@ object Storage {
       .distinct().collect().map(_.getInt(0)).toSeq
     if (buckets.isEmpty) return
     val survivors = deleteEvents(
-        spark.read.parquet(path).filter(col("bucket").isin(buckets: _*)),
+        readEvents(spark, path).filter(col("bucket").isin(buckets: _*)),
         tombstones)
       .localCheckpoint(true)
     val survivorBuckets = survivors.select(col("bucket")).distinct()
@@ -382,7 +360,7 @@ object Storage {
     if (parts.isEmpty) return
     val cond = parts.map { case (e, p) => col("et") === lit(e) && col("pid") === lit(p) }
       .reduce(_ || _)
-    val survivors = deleteIndexRecords(spark.read.parquet(path).filter(cond), tombstones)
+    val survivors = deleteIndexRecords(readEvents(spark, path).filter(cond), tombstones)
       .localCheckpoint(true)
     val survivorParts = survivors.select(col("et"), col("pid")).distinct().collect()
       .map(r => (r.getAs[String]("et"), r.getAs[Int]("pid"))).toSet
@@ -405,8 +383,38 @@ object Storage {
     }
   }
 
+  /** The table at `path` — the events, the (et, pid) index, or an
+    * unpartitioned table — in `format` ("parquet" or "orc"), with the
+    * schema and rows of `spark.read.format(format).load(path)`, but listing
+    * only the partition directories the scan's filters keep: a page, point
+    * or index-range read lists its one `bucket=<b>` or `et=/pid=`
+    * directories on the driver, the analogue of Cassandra routing a read to
+    * one partition by its key (CassandraEventStore.cs:238-276,
+    * IndexByEventTypeStore.cs:193, 260-276).
+    *
+    * Building the frame runs no Spark job: the partition directory names are
+    * walked on the driver (not the files inside the leaf directories), the
+    * partition schema is inferred from them as Spark infers it, and the data
+    * schema is read from the first data file found. Planning a scan lists
+    * the kept directories through Spark's own listing, in a parallel job only
+    * when it keeps more directories than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (a whole-table
+    * scan, as before).
+    *
+    * Snapshot rule — later than `spark.read`'s, which fixes the file set when
+    * the frame is built: the set of partition directories is fixed when the
+    * frame is built (a directory created later is not seen), and each
+    * directory's files are listed when the first plan over the frame, or
+    * over a frame derived from it, keeps it. That listing is kept, so every
+    * later plan over those frames sees the same files for that directory and
+    * collecting a frame again returns the same rows; but a file appended to
+    * a directory no plan has kept yet is seen. An empty root fails with
+    * `UNABLE_TO_INFER_SCHEMA` and an absent one with `PATH_NOT_FOUND`, as
+    * `spark.read` does. The tables this engine writes have no
+    * `_spark_metadata` log (no streaming file sink writes them); unlike
+    * `spark.read`, this read would not consult one. */
   def readEvents(spark: SparkSession, path: String, format: String = "parquet"): DataFrame =
-    spark.read.format(format).load(path)
+    PrunedFileIndex.read(spark, path, format)
 
   /** Compaction for any hive-partitioned layout this engine writes:
     * rewrite so each partition directory holds ONE large sorted file

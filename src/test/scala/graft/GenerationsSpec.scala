@@ -416,4 +416,25 @@ class GenerationsSpec extends SparkSpec {
     assert(cur.count() == 8)
     assert(cur.filter(col("id") === lit("b".getBytes)).count() == 2)
   }
+
+  test("a bucket count below 1 is refused by deleteAndRewrite and the generation writers " +
+      "before anything is read or written") {
+    val dir = tmpDir()
+    val log = mkLog(Seq("a", "b", "c"), nRevs = 2)
+    Storage.appendEvents(log, s"$dir/events", nBuckets = 4)
+    Generations.bootstrap(spark, s"$dir/versioned", log, nBuckets = 4)
+    val before = fileSet(dir)
+    val tomb = mkTomb(Seq(("a", 1, 0)))
+    Seq(0, -3).foreach { n =>
+      intercept[IllegalArgumentException](
+        Storage.deleteAndRewrite(spark, s"$dir/events", tomb, nBuckets = n))
+      intercept[IllegalArgumentException](
+        Generations.bootstrap(spark, s"$dir/fresh", log, nBuckets = n))
+      intercept[IllegalArgumentException](
+        Generations.deleteAndPromote(spark, s"$dir/versioned", tomb, nBuckets = n))
+      intercept[IllegalArgumentException](
+        Generations.appendAndPromote(spark, s"$dir/versioned", log, nBuckets = n))
+    }
+    assert(fileSet(dir) == before)
+  }
 }
