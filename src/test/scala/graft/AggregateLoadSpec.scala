@@ -106,6 +106,35 @@ class AggregateLoadSpec extends SparkSpec {
     assert(rows.nonEmpty && rows == rowsOf(wholeTable(path, "7")))
   }
 
+  test("event file footers keep min/max on id, rev, pos and ts but not on data; " +
+      "a load still skips row groups on id") {
+    val path = s"${tmpDir()}/events"
+    val ids = (1 to 40).map(a => f"agg-$a%02d")
+    spark.conf.set("parquet.block.row.count.limit", "50")
+    try Storage.appendEvents(events(ids, 1 to 10), path, nBuckets = 1)
+    finally spark.conf.unset("parquet.block.row.count.limit")
+    val files = new java.io.File(s"$path/bucket=0").listFiles().filter(_.getName.endsWith(".parquet"))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val blocks = files.toSeq.flatMap { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.toString), conf))
+      try r.getFooter.getBlocks.asScala.toSeq finally r.close()
+    }
+    assert(blocks.size >= 16, blocks.size)
+    blocks.flatMap(_.getColumns.asScala).foreach { c =>
+      val name = c.getPath.toDotString
+      assert(c.getStatistics.hasNonNullValue == (name != "data"), name)
+    }
+    val df = Storage.readAggregate(spark, path, "agg-17".getBytes, nBuckets = 1)
+    assert(df.collect().map(_.getAs[Int]("rev")).toSeq == (1 to 10).flatMap(r => Seq(r, r)))
+    val scanned = Plans.collect(df.queryExecution.executedPlan) {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s.metrics("numOutputRows").value
+    }.sum
+    // the aggregate's 20 rows span at most two 50-row groups of the 800
+    assert(scanned > 0 && scanned <= 100, scanned)
+  }
+
   test("a load and its commit reassembly run in two jobs, with no listing job and no range sample") {
     val path = s"${tmpDir()}/events"
     val ids = (1 to 300).map(a => s"agg-$a")

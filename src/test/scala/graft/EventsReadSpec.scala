@@ -146,14 +146,17 @@ class EventsReadSpec extends SparkSpec {
     val path = s"${tmpDir()}/index"
     val ets = (0 until threshold + 8).map(i => f"t$i%02d")
     writeIndex(path, days = 2, ets)
-    // empty the event type whose directory the walk lists first, leaving its
-    // `et=` directory behind without a `pid=` directory
+    // empty the event type whose directory the walk lists first: the delete
+    // drops its `et=` directory, which is then made again by hand, empty,
+    // as a store written by another tool could hold it
     val root = new org.apache.hadoop.fs.Path(path)
-    def etDirs = root.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(root)
-      .map(_.getPath.getName).filter(_.startsWith("et=")).toSeq
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def etDirs = fs.listStatus(root).map(_.getPath.getName).filter(_.startsWith("et=")).toSeq
     val gone = etDirs.head.stripPrefix("et=")
     Storage.deleteIndexAndRewrite(spark, path,
       spark.read.parquet(path).filter(col("et") === gone).localCheckpoint(true))
+    assert(!etDirs.contains(s"et=$gone") && etDirs.size == ets.size - 1)
+    assert(fs.mkdirs(new org.apache.hadoop.fs.Path(root, s"et=$gone")))
     assert(etDirs.head == s"et=$gone" && new java.io.File(s"$path/et=$gone").list().isEmpty)
 
     assertSameAsSparkRead(path)

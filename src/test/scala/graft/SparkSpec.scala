@@ -12,6 +12,8 @@ object TestSpark {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config(s"spark.hadoop.${graft.sources.LocalFs.ImplKey}",
+        classOf[graft.sources.LocalFs].getName)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
