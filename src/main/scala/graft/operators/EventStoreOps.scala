@@ -82,17 +82,22 @@ object EventStoreOps {
     *
     * One shuffle on (id) with map-side partial aggregation; commits are
     * small (a handful of events), so collect_list per (id, rev) is bounded.
-    * For pathological aggregates, the typed flatMapGroups variant below
-    * streams instead. */
+    * Over a single-partition input ([[graft.sources.Storage.readAggregate]])
+    * neither the aggregation nor the final order plans an exchange: the
+    * load and its reassembly are one job. The output columns are built in
+    * one projection, so the plan is analysed once for them. For
+    * pathological aggregates, the typed flatMapGroups variant below streams
+    * instead. */
   def reassembleCommits(events: DataFrame): DataFrame =
     events
       .groupBy(col("id"), col("rev"))
       .agg(
         min("ts").as("ts"),
         sort_array(collect_list(struct(col("pos"), col("data")))).as("all_events"))
-      .withColumn("events", filter(col("all_events"), (e, i) => e.getField("pos") === i))
-      .withColumn("publicEvents", filter(col("all_events"), (e, i) => e.getField("pos") =!= i))
-      .drop("all_events")
+      .select(
+        col("id"), col("rev"), col("ts"),
+        filter(col("all_events"), (e, i) => e.getField("pos") === i).as("events"),
+        filter(col("all_events"), (e, i) => e.getField("pos") =!= i).as("publicEvents"))
       .orderBy("id", "rev")
 
   /** E3 per-aggregate stream grouping (CassandraEventStore.cs:336-391): all

@@ -100,11 +100,16 @@ private[sources] object PrunedFileIndex {
     *
     * `only` narrows the frame to one leaf partition directory, named
     * relative to `path` (`bucket=3`), as `spark.read` of that directory
-    * with `basePath = path` would. Scans prune without it; it keeps the
-    * relation's size (`sizeInBytes`, otherwise the whole-table listing) to
-    * that directory's for a plan that asks for it although its filters keep
-    * one directory — a single-partition child, which the planner sizes
-    * against `spark.sql.maxSinglePartitionBytes`. */
+    * with `basePath = path` would. When that directory holds a data file,
+    * the frame is built from it alone: one listing, its first data file as
+    * the schema sample, and its name as the only partition path the
+    * partition types are inferred from — nothing else under `path` is
+    * listed or read. When it is absent or holds no data file, the table is
+    * walked as without `only` and the frame keeps no directory, so a miss
+    * has the schema a hit has. Either way the relation's size
+    * (`sizeInBytes`, otherwise the whole-table listing) is that
+    * directory's, for a plan that asks for it although its filters keep one
+    * directory. */
   def read(spark: SparkSession, path: String, format: String, only: Option[String] = None): DataFrame = {
     val fileFormat: FileFormat = format.toLowerCase(java.util.Locale.ROOT) match {
       case "parquet" => new ParquetFileFormat
@@ -144,7 +149,9 @@ private[sources] object PrunedFileIndex {
         case i => (level, probed.lift(i).flatMap(_.find(isData)))
       }
     }
-    val (leafDirs, sample) = walk(Seq(root))
+    val kept = only.map(d => new Path(root, d))
+    val (leafDirs, sample) = kept.flatMap(d => list(d).find(isData).map(f => (Seq(d), Some(f))))
+      .getOrElse(walk(Seq(root)))
     val spec =
       if (leafDirs == Seq(root)) PartitionSpec(new StructType(), Seq(PartitionPath(InternalRow.empty, root)))
       else PartitionDiscovery.parse(spark, root, leafDirs)
@@ -159,7 +166,7 @@ private[sources] object PrunedFileIndex {
       }
     }.getOrElse(throw new AnalysisException(
       "UNABLE_TO_INFER_SCHEMA", Map("format" -> fileFormat.toString)))
-    val partitions = spec.partitions.filter(p => only.forall(d => p.path == new Path(root, d)))
+    val partitions = spec.partitions.filter(p => kept.forall(_ == p.path))
     spark.baseRelationToDataFrame(HadoopFsRelation(
       new PrunedFileIndex(spark, root, spec.partitionColumns, partitions), spec.partitionColumns,
       nullable(dataSchema).asInstanceOf[StructType], None, fileFormat, Map.empty)(spark))

@@ -14,11 +14,11 @@ import graft.model.Model
   *    sorted within partitions by (id, rev, pos). This reproduces both
   *    guarantees of the reference schema (CassandraEventStoreSchema.cs:15):
   *    one aggregate's rows are co-located (single bucket) and stored in
-  *    clustering order. A per-aggregate read ([[readAggregate]]) reads only
-  *    its `bucket=<b>` directory (1/nBuckets of the data), then skips to a
-  *    handful of row groups via parquet min/max on the sorted `id`, and
-  *    orders the rows in one partition with no range sample — the Spark
-  *    analogue of a single-partition Cassandra read.
+  *    clustering order. A per-aggregate read ([[readAggregate]]) lists and
+  *    reads only its `bucket=<b>` directory (1/nBuckets of the data), then
+  *    skips to a handful of row groups via parquet min/max on the sorted
+  *    `id`, and orders the rows in one partition with no exchange — the
+  *    Spark analogue of a single-partition Cassandra read.
   *  - reads ([[readEvents]]): the frame is built from the partition
   *    directory names and one data file's schema, with no Spark job, and a
   *    scan lists files only under the partition directories its filters
@@ -248,20 +248,17 @@ object Storage {
     * analogue of Cassandra routing a single-partition read by token
     * (CassandraEventStore.cs:362-365) for `LoadAggregateEventsQuery`
     * (:483-490). The bucket for the id is computed with the same xxhash64
-    * expression the writer used; the frame is [[readEvents]]'s, narrowed to
-    * that `bucket=<b>` directory, and the sorted `id` min/max then skips row
-    * groups inside it. The narrowing matters for the relation's size, not
-    * for pruning: the single-partition exchange below makes the planner
-    * size its input against `spark.sql.maxSinglePartitionBytes` from the
-    * relation's statistics, which over the whole table would list every
-    * directory (a Spark job past 32 of them) and, past 128 MB, add a
-    * shuffle.
+    * expression the writer used; the frame is [[readEvents]]'s, built from
+    * that `bucket=<b>` directory alone (one listing, and the data schema
+    * sampled from one of its files), and the sorted `id` min/max then skips
+    * row groups inside it.
     *
     * The rows are ordered by (rev, pos) in ONE partition — one aggregate is
-    * small, so the scan keeps its file splits and a single-partition
-    * exchange replaces the range-sampled global sort;
-    * [[graft.operators.EventStoreOps.reassembleCommits]] downstream then
-    * needs no exchange of its own. A miss (the bucket directory is absent:
+    * small, so the scan's file splits are coalesced into one task, with no
+    * exchange, and sorted there; the coalesced plan reports a single
+    * partition, so [[graft.operators.EventStoreOps.reassembleCommits]]
+    * downstream plans no exchange either: the load and its reassembly are
+    * one Spark job of one stage. A miss (the bucket directory is absent:
     * never written, or emptied by [[deleteAndRewrite]]) keeps no directory:
     * an empty frame with the table's schema. */
   def readAggregate(
@@ -272,7 +269,7 @@ object Storage {
     val bucket = bucketOf(aggregateId, nBuckets)
     PrunedFileIndex.read(spark, path, "parquet", only = Some(s"bucket=$bucket"))
       .filter(col("bucket") === bucket && col("id") === lit(aggregateId))
-      .repartition(1)
+      .coalesce(1)
       .sortWithinPartitions(col("rev"), col("pos"))
   }
 

@@ -1,21 +1,22 @@
 package graft
 
 import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.TestBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
-import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 import graft.operators.EventStoreOps
-import graft.sources.{Storage, Tables}
+import graft.sources.{LocalFs, Storage, Tables}
 import graft.streaming.StreamingOps
 
 /** `Storage.readAggregate` reads only its bucket directory: the same rows,
   * order and schema as a filter over the whole table, without the
-  * whole-table listing, schema-inference and range-sampling jobs. */
+  * whole-table listing, schema-inference and range-sampling jobs, and
+  * with its commit reassembly in one job with no exchange. */
 class AggregateLoadSpec extends SparkSpec {
   import spark.implicits._
 
@@ -43,6 +44,18 @@ class AggregateLoadSpec extends SparkSpec {
       sc.removeJobTag(tag)
       sc.removeSparkListener(listener)
     }
+  }
+
+  /** Runs `body` with [[CountingFs]] as the session's `file:` FileSystem and
+    * returns its result with the directories under `root` it listed. */
+  private def withListings[T](root: String)(body: => T): (T, Seq[String]) = {
+    val keys = Seq(LocalFs.ImplKey -> classOf[CountingFs].getName, "fs.file.impl.disable.cache" -> "true")
+    keys.foreach { case (k, v) => spark.conf.set(k, v) }
+    CountingFs.listed.clear()
+    try {
+      val r = body
+      (r, CountingFs.listed.asScala.toSeq.filter(_.startsWith(root)))
+    } finally keys.foreach { case (k, _) => spark.conf.unset(k) }
   }
 
   private def listingJobs(jobs: Seq[String]) = jobs.filter(_.startsWith("Listing leaf files"))
@@ -135,7 +148,7 @@ class AggregateLoadSpec extends SparkSpec {
     assert(scanned > 0 && scanned <= 100, scanned)
   }
 
-  test("a load and its commit reassembly run in two jobs, with no listing job and no range sample") {
+  test("a load and its commit reassembly run in one job, with no exchange and no listing job") {
     val path = s"${tmpDir()}/events"
     val ids = (1 to 300).map(a => s"agg-$a")
     Seq(1 to 3, 4 to 6).foreach(r => Storage.appendEvents(events(ids, r), path))
@@ -147,12 +160,27 @@ class AggregateLoadSpec extends SparkSpec {
     }
     assert(commits.map(_.getAs[Int]("rev")).toSeq == (1 to 6))
     assert(commits.forall(_.getAs[Seq[_]]("events").size == 2))
-    assert(jobs.size <= 2, jobs)
+    assert(jobs.size == 1, jobs)
     assert(listingJobs(jobs).isEmpty, jobs)
-    val rangeExchanges = Plans.collect(plan) {
-      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
-    }
-    assert(rangeExchanges.isEmpty, plan)
+    val exchanges = Plans.collect(plan) { case e: ShuffleExchangeExec => e }
+    assert(exchanges.isEmpty, plan)
+  }
+
+  test("a hit lists only its bucket directory; the schema is the whole table's and " +
+      "a bucket of several files comes back in (rev, pos) order") {
+    val path = s"${tmpDir()}/events"
+    val ids = (1 to 300).map(a => s"agg-$a")
+    Seq(1 to 2, 3 to 4, 5 to 6).foreach(r => Storage.appendEvents(events(ids, r), path))
+    assertListedInParallel(path)
+    val id = "agg-9"
+    val dir = new java.io.File(s"$path/bucket=${Storage.bucketOf(id.getBytes)}")
+    assert(dir.listFiles().count(_.getName.endsWith(".parquet")) >= 3)
+    val (df, listed) = withListings(path)(Storage.readAggregate(spark, path, id.getBytes))
+    assert(listed == Seq(dir.getPath), listed)
+    assert(df.schema == spark.read.parquet(path).schema)
+    val rows = rowsOf(df)
+    assert(rows.map(r => (r(1), r(2))) == (1 to 6).flatMap(r => Seq((r, 0), (r, 1))))
+    assert(rows == rowsOf(wholeTable(path, id)))
   }
 
   test("a miss (bucket never written, or emptied by deleteAndRewrite) is empty with the hit's schema") {
@@ -212,4 +240,17 @@ class AggregateLoadSpec extends SparkSpec {
     }
     assert(new java.io.File(dir).list().isEmpty)
   }
+}
+
+/** The engine's `file:` FileSystem, recording the path of every directory
+  * listed through it (as a local path). */
+class CountingFs extends LocalFs {
+  override def listStatus(p: Path): Array[FileStatus] = {
+    CountingFs.listed.add(p.toUri.getPath)
+    super.listStatus(p)
+  }
+}
+
+object CountingFs {
+  val listed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 }

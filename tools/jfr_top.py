@@ -4,6 +4,7 @@
 Usage:
 
     python3 tools/jfr_top.py REC.jfr [--thread REGEX] [--depth N]
+                             [--from HH:MM:SS] [--to HH:MM:SS]
 
 Runs `jfr print --json` (the JDK's `jfr` tool, from $JAVA_HOME/bin or PATH)
 and prints, for the Java samples (`jdk.ExecutionSample`) and the native
@@ -13,11 +14,29 @@ samples (`jdk.NativeMethodSample`) of the threads whose name matches REGEX
 shares. `--depth` is the stack depth read per sample (default 64); a frame
 deeper than that does not count as inclusive. A native sample's top frame
 is the Java method that called into native code, for example
-`java.lang.ProcessImpl.forkAndExec` for a forked process.
+`java.lang.ProcessImpl.forkAndExec` for a forked process. `--from` and
+`--to` keep only the samples taken in those seconds, both included, as time
+of day in the zone `jfr print` writes (`jfr summary REC.jfr` shows it), so a
+profile can leave out a run's set-up; either may be left out.
 
 Record with, for example:
 
     java -XX:StartFlightRecording=filename=rec.jfr,settings=profile ...
+
+A `perfbench` run is recorded without editing the harness: `run.py` passes
+its environment to the JVM it starts, and that JVM reads `spark.*` system
+properties into its Spark conf. Build first (a plain run rebuilds
+`.bench_build/` after a source change), so that no build JVM writes the
+recording as well:
+
+    JAVA_TOOL_OPTIONS="-XX:StartFlightRecording=filename=/tmp/rec.jfr,settings=profile" \
+        python3 perfbench/run.py --workload point_load --seed 1 --seconds 20 --trace 1
+
+Adding `-Dspark.eventLog.enabled=true -Dspark.eventLog.compress=false
+-Dspark.eventLog.dir=file:/tmp/events` (an existing directory) to
+JAVA_TOOL_OPTIONS also writes the Spark event log, one JSON line per event
+under `/tmp/events/eventlog_v2_*/`: every job, stage and task with its
+start and end, to line the samples up with the jobs they ran beside.
 """
 
 import argparse
@@ -41,8 +60,15 @@ def jfr_tool():
     return exe
 
 
+def clock(text):
+    """An HH:MM:SS argument, as given."""
+    if not re.fullmatch(r"\d\d:\d\d:\d\d", text):
+        raise argparse.ArgumentTypeError(f"'{text}' is not HH:MM:SS")
+    return text
+
+
 def samples(rec, depth):
-    """(kind, thread name, [frame, ...] top first) for every sample."""
+    """(kind, thread name, HH:MM:SS, [frame, ...] top first) for every sample."""
     out = subprocess.run(
         [jfr_tool(), "print", "--json", "--stack-depth", str(depth),
          "--events", ",".join(k for k, _ in KINDS), rec],
@@ -54,7 +80,8 @@ def samples(rec, depth):
         thread = t.get("javaName") or t.get("osName") or "?"
         frames = [f"{f['method']['type']['name'].replace('/', '.')}.{f['method']['name']}"
                   for f in ((v.get("stackTrace") or {}).get("frames") or [])]
-        yield kinds[e["type"]], thread, frames
+        at = re.search(r"T(\d\d:\d\d:\d\d)", v["startTime"]).group(1)
+        yield kinds[e["type"]], thread, at, frames
 
 
 def main():
@@ -62,6 +89,10 @@ def main():
     ap.add_argument("recording")
     ap.add_argument("--thread", default="", help="regex on the sampled thread's name")
     ap.add_argument("--depth", type=int, default=64, help="stack frames read per sample")
+    ap.add_argument("--from", dest="since", type=clock, default="00:00:00", metavar="HH:MM:SS",
+                    help="first second kept")
+    ap.add_argument("--to", dest="until", type=clock, default="23:59:59", metavar="HH:MM:SS",
+                    help="last second kept")
     args = ap.parse_args()
     match = re.compile(args.thread)
 
@@ -69,8 +100,8 @@ def main():
     self_ = {k: collections.Counter() for _, k in KINDS}
     incl = {k: collections.Counter() for _, k in KINDS}
     threads = collections.Counter()
-    for kind, thread, frames in samples(args.recording, args.depth):
-        if not match.search(thread):
+    for kind, thread, at, frames in samples(args.recording, args.depth):
+        if not match.search(thread) or not args.since <= at <= args.until:
             continue
         n[kind] += 1
         threads[re.sub(r"\d+", "N", thread)] += 1
@@ -78,7 +109,8 @@ def main():
             self_[kind][frames[0]] += 1
         incl[kind].update(set(frames))
 
-    print(f"{args.recording}: thread ~ /{args.thread}/, stack depth {args.depth}")
+    print(f"{args.recording}: thread ~ /{args.thread}/, stack depth {args.depth}, "
+          f"{args.since} to {args.until}")
     for name, c in threads.most_common(5):
         print(f"  {c:6d} samples  {name}")
     for _, kind in KINDS:
