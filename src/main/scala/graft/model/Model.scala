@@ -1,7 +1,5 @@
 package graft.model
 
-import org.apache.spark.sql.types._
-
 /** The logical model of the reference engine
   * (/root/reference/src/One.Inception.EventStore.Cassandra/):
   *
@@ -23,34 +21,6 @@ object Model {
     * (AggregateCommitBlock.cs:12 `PublicEventsOffset = 5`, write side
     * CassandraEventStore.cs:72-86). */
   val PublicEventsOffset: Int = 5
-
-  val eventsSchema: StructType = StructType(Seq(
-    StructField("id", BinaryType, nullable = false),
-    StructField("rev", IntegerType, nullable = false),
-    StructField("pos", IntegerType, nullable = false),
-    StructField("ts", LongType, nullable = false), // .NET FileTime UTC
-    StructField("data", BinaryType, nullable = true),
-  ))
-
-  val indexSchema: StructType = StructType(Seq(
-    StructField("et", StringType, nullable = false),
-    StructField("pid", IntegerType, nullable = false),
-    StructField("aid", BinaryType, nullable = false),
-    StructField("rev", IntegerType, nullable = false),
-    StructField("pos", IntegerType, nullable = false),
-    StructField("ts", LongType, nullable = false),
-  ))
-
-  val counterSchema: StructType = StructType(Seq(
-    StructField("msgid", StringType, nullable = false),
-    StructField("delta", LongType, nullable = false), // increments log row
-  ))
-
-  val messageStoreSchema: StructType = StructType(Seq(
-    StructField("date", LongType, nullable = false), // day-truncated FileTime
-    StructField("ts", LongType, nullable = false),
-    StructField("data", BinaryType, nullable = true),
-  ))
 
   /** One serialized event inside a reassembled commit. */
   case class RawEvent(pos: Int, data: Array[Byte])

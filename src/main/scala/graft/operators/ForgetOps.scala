@@ -44,11 +44,13 @@ import graft.sources.Levels
   * under a src tag derived from the id set itself, so a rerun's second
   * delta collapses in the (shingle, src) replay-dedup), so the recovery
   * story for a crash mid-pass is "rerun the whole forget" — ForgetSpec
-  * drives a partial pass and proves the rerun converges. In-place level
-  * rewrites go through [[Levels.stagedOverwrite]] (survivors materialized to an
-  * invisible sibling BEFORE the target is touched), so no crash point
-  * ever loses survivor rows — the mid-Overwrite truncation window a
-  * plain `SaveMode.Overwrite` on the same directory would open.
+  * drives a partial pass and proves the rerun converges. Every in-place
+  * rewrite is a staged swap: whole levels through
+  * [[Levels.stagedOverwrite]], named hive partitions through
+  * [[Levels.rewritePartitions]]. Each writes the survivors to a hidden
+  * staging BEFORE any target is touched and keeps that staging when it
+  * fails, and the next pass over the same root installs it, so no crash
+  * point loses survivor rows.
   *
   * Ids-only requests: the partition-pruned faces derive the affected
   * directories by RE-SIGNING the forgotten payloads, so a tombstone
@@ -60,14 +62,15 @@ object ForgetOps {
 
   /** Drop `ids` from a [[DedupOps.writeMinHashIndex]] layout — or from a
     * VERSIONED [[graft.streaming.StreamingOps.lshIndexStream]] sink, whose
-    * `__batch=` levels each rewrite independently (a root-level dynamic
-    * overwrite would flatten the level structure). Affected
+    * `__batch=` levels each rewrite independently (one rewrite of the
+    * whole root would flatten the level structure). Affected
     * `(band, bucket)` directories are derived by RE-SIGNING the forgotten
     * docs (the caller supplies them with text — a compliance pass holds
     * the payloads it is erasing), so the rewrite reads 1/(bands·buckets)
-    * of the index per signature, never the whole artifact. Dynamic
-    * partition overwrite + explicit empty-directory cleanup — the
-    * [[graft.sources.Storage.deleteIndexAndRewrite]] pattern. On a
+    * of the index per signature, never the whole artifact, and swaps
+    * them in through [[Levels.rewritePartitions]] (an emptied directory
+    * is dropped) — the [[graft.sources.Storage.deleteIndexAndRewrite]]
+    * pattern. On a
     * streamed layout the pass ends with a lineage fence
     * ([[Levels.fence]]) so a stale-checkpoint restart cannot
     * resurrect forgotten rows by replaying its newest batch. */
@@ -373,6 +376,8 @@ object ForgetOps {
     val dead = ids.select(col(idCol).cast("long").as("__dead"))
       .localCheckpoint(true)
     val corpusDDL = "id LONG, v ARRAY<DOUBLE>, cell INT, __batch LONG"
+    // heal before the cell scan, as forgetByScan does
+    Levels.dirs(spark, corpusDir).foreach(Levels.healRewrite(spark, _))
     def corpusNow() = spark.read.schema(corpusDDL)
       .option("basePath", corpusDir).parquet(corpusDir)
     val cells = corpusNow().select(col("id"), col("cell"))
@@ -678,6 +683,9 @@ object ForgetOps {
     // first rewrite: a refusal on a later level must not leave the
     // earlier levels already rewritten
     val rewrites = Levels.dirsOrRoot(spark, path).flatMap { root =>
+      // heal before the scan: a partition that a failed swap left only in
+      // its staging would be missed by the scan, then healed in unforgotten
+      Levels.healRewrite(spark, root)
       val (f, rootPath) = Levels.fs(spark, root)
       if (!f.exists(rootPath) || !f.listStatus(rootPath).exists(
           _.getPath.getName.startsWith(partCols.head + "="))) None
@@ -841,49 +849,15 @@ object ForgetOps {
 
   private val EdgesDDL = "vec_id LONG, neighbor_id LONG, sim DOUBLE, rank INT"
 
-  /** The shared partition-pruned rewrite: read ONLY the named hive
-    * partitions, anti-join the ids, dynamic-overwrite them, and delete
-    * any partition whose every row was dropped (dynamic overwrite leaves
-    * directories it wrote no data for). The
-    * [[graft.sources.Storage.deleteIndexAndRewrite]] discipline,
-    * generalized over partition schemes. */
+  /** The shared partition-pruned rewrite: the named hive partitions of
+    * `root` minus the rows whose `joinCol` is in `dropIds`, through
+    * [[Levels.rewritePartitions]]' staged swap. The forgotten ids are
+    * delta-sized and broadcast, as a delete's tombstones are: the planner
+    * then never sizes the rewrite's read, which would list every
+    * partition directory of `root`. */
   private def rewritePartitions(spark: SparkSession, root: String,
       partitions: Seq[Seq[(String, String)]], dropIds: DataFrame,
-      joinCol: String, sortCols: Seq[String]): Unit = {
-    if (partitions.isEmpty) return
-    val partCols = partitions.head.map(_._1)
-    // an index with no data directories (every payload below one frame /
-    // shingle) has nothing to rewrite — and schema inference would fail
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val rootFs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!rootFs.exists(rootPath) ||
-        !rootFs.listStatus(rootPath).exists(
-          _.getPath.getName.startsWith(partCols.head + "="))) return
-    val cond = partitions.map(p =>
-        p.map { case (c, v) => col(c) === lit(v) }.reduce(_ && _))
-      .reduce(_ || _)
-    val survivors = spark.read.parquet(root).filter(cond)
-      .join(dropIds.select(col(joinCol)), Seq(joinCol), "left_anti")
-      .localCheckpoint(true)
-    val survivorParts: Set[Seq[String]] = survivors
-      .select(partCols.map(col): _*).distinct().collect()
-      .map(r => partCols.indices.map(i => r.get(i).toString): Seq[String]).toSet
-    // per-WRITE dynamic overwrite (not a session-conf toggle): scoped to
-    // exactly this writer, so concurrent forget faces in other driver
-    // threads (Par) can never observe — or clobber — a shared toggle
-    survivors
-      .repartition(partCols.map(col): _*)
-      .sortWithinPartitions(sortCols.map(col): _*)
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partCols: _*).parquet(root)
-    val conf = spark.sparkContext.hadoopConfiguration
-    partitions
-      .filterNot(p => survivorParts.contains(p.map(_._2)))
-      .foreach { p =>
-        val dir = new org.apache.hadoop.fs.Path(
-          root + "/" + p.map { case (c, v) => s"$c=$v" }.mkString("/"))
-        dir.getFileSystem(conf).delete(dir, true): Unit
-      }
-  }
+      joinCol: String, sortCols: Seq[String]): Unit =
+    Levels.rewritePartitions(spark, root, partitions, sortCols)(
+      _.join(broadcast(dropIds.select(col(joinCol))), Seq(joinCol), "left_anti"))
 }

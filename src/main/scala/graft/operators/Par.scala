@@ -17,8 +17,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Contract:
   *  - chains must touch DISJOINT state: different output directories, no
-  *    shared session-conf mutation (the per-write `partitionOverwriteMode`
-  *    option exists for exactly this — session-conf toggles are not
+  *    shared session-conf mutation (session-conf toggles are not
   *    thread-safe), no ordering dependency between chains;
   *  - results return in INPUT order;
   *  - every chain runs to completion (success or failure) before the

@@ -8,9 +8,12 @@ import org.apache.spark.sql.functions._
   * (SURVEY.md §2 A5; reference `CassandraEventStore.cs:126-146`, whose
   * DELETE is durable because Cassandra owns the storage engine).
   *
-  * `Storage.deleteAndRewrite` overwrites bucket partitions in place — safe
-  * on HDFS-style filesystems, not on object stores (no atomic directory
-  * replace; a failed rewrite leaves a half-deleted bucket). This layer is
+  * `Storage.deleteAndRewrite` swaps bucket partitions in place: each
+  * affected bucket is moved out and its staged copy renamed in, and the next
+  * rewrite heals a swap that failed part-way. It needs a filesystem whose
+  * directory rename is atomic and cheap, and readers see a bucket missing
+  * while it is swapped, so it is single-mutator and not for object stores
+  * (there a rename copies every file). This layer is
   * the object-store path: data is IMMUTABLE once written, organized as
   * generation directories under one table root, and the only mutation is
   * an atomic swap of a small `_CURRENT` manifest:

@@ -21,7 +21,10 @@ import org.apache.spark.sql.functions._
   *    the base, drops the folded deltas, then drops the retired copy.
   *    Every crash point keeps all rows in a visible level or in one of
   *    the two underscore leftovers, which re-enter a rerun (and
-  *    [[stateScan]]) at pseudo-levels −2 (staging) and −3 (retired). */
+  *    [[stateScan]]) at pseudo-levels −2 (staging) and −3 (retired);
+  *  - [[rewritePartitions]] rewrites named hive partitions of one root
+  *    (a level, or any flat partitioned table) through a `_rewriting`
+  *    staging that the next rewrite of that root heals. */
 private[graft] object Levels {
 
   private val Prefix = "__batch="
@@ -30,6 +33,8 @@ private[graft] object Levels {
   private val Staging = "_compacting"
   private val Retired = "_retired"
   private val Staged = "_staged_"
+  private val Rewriting = "_rewriting"
+  private val Replaced = "_replaced"
   private val ManifestStaging = "_staging_kmfold"
   private val Manifest = "_folded.json"
 
@@ -158,6 +163,109 @@ private[graft] object Levels {
     require(f.rename(staging, p), s"stagedOverwrite: rename $staging -> $p failed")
   }
 
+  /** Rewrite the hive partitions `parts` of the table at `root` in place to
+    * `keep(their rows)` — the one partition rewrite behind
+    * [[Storage.deleteAndRewrite]], [[Storage.deleteIndexAndRewrite]] and
+    * the partition-pruned ForgetOps faces. Each entry of `parts` names one
+    * leaf partition as (column, value) pairs in directory order; no other
+    * partition is read or touched. The rows are read through
+    * [[Storage.readEvents]], which lists files only under the named
+    * directories.
+    *
+    * Crash order: write `keep(rows)` once to `root/_rewriting`
+    * (repartitioned by the partition columns, sorted by `sortCols`); then,
+    * one partition at a time, move the target into the staging's
+    * `_replaced` and rename its staged copy in, or, when it kept no row,
+    * remove the ancestors it leaves empty; then drop the staging. The
+    * staging is complete (`_SUCCESS`) before the first target moves and is
+    * never dropped on failure, so at every crash point each partition's
+    * rows sit in its target or its staged copy. The next rewrite of `root`
+    * heals first ([[healRewrite]]), so a rerun of the same rewrite equals a
+    * clean run. Single-mutator per root. */
+  def rewritePartitions(spark: SparkSession, root: String,
+      parts: Seq[Seq[(String, String)]], sortCols: Seq[String])(
+      keep: DataFrame => DataFrame): Unit = {
+    val (f, p) = fs(spark, root)
+    healRewrite(f, p)
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
+    val targets = parts.map(_.map { case (c, v) => s"${escapePathName(c)}=${escapePathName(v)}" }
+      .mkString("/")).distinct
+    if (!targets.exists(t => f.exists(new Path(p, t)))) return
+    val cols = parts.head.map(_._1)
+    val staging = new Path(p, Rewriting)
+    keep(Storage.readEvents(spark, root)
+        .filter(parts.map(_.map { case (c, v) => col(c) === lit(v) }.reduce(_ && _)).reduce(_ || _)))
+      .repartition(cols.map(col): _*)
+      .sortWithinPartitions(sortCols.map(col): _*)
+      .write.partitionBy(cols: _*).parquet(staging.toString)
+    (targets ++ stagedLeaves(f, staging)).distinct.foreach { t =>
+      val target = new Path(p, t)
+      if (f.exists(target)) {
+        val replaced = new Path(new Path(staging, Replaced), t)
+        f.mkdirs(replaced.getParent): Unit
+        require(f.rename(target, replaced), s"rewritePartitions: rename $target failed")
+      }
+      if (f.exists(new Path(staging, t))) install(f, p, t)
+      else {
+        var d = target.getParent
+        while (d.depth > p.depth && f.exists(d) && f.listStatus(d).isEmpty) {
+          f.delete(d, false): Unit
+          d = d.getParent
+        }
+      }
+    }
+    f.delete(staging, true): Unit
+  }
+
+  /** Recover a [[rewritePartitions]] of `root` that failed. A complete
+    * staging (`_SUCCESS`) renames in each staged partition whose target is
+    * missing: the failure fell between moving the target out and renaming
+    * the staged copy in. When the target was moved out and an append (a
+    * later `ingestTo` or `indexTo` batch) has made it again, its files are
+    * newer than the rewrite: they join the staged copy first. A target
+    * never moved out is complete, and its staged copy is dropped. An
+    * incomplete staging never touched a target. Either way the staging
+    * goes. */
+  def healRewrite(spark: SparkSession, root: String): Unit = {
+    val (f, p) = fs(spark, root)
+    healRewrite(f, p)
+  }
+
+  private def healRewrite(f: FileSystem, root: Path): Unit = {
+    val staging = new Path(root, Rewriting)
+    if (!f.exists(staging)) return
+    if (f.exists(new Path(staging, "_SUCCESS")))
+      stagedLeaves(f, staging).foreach { t =>
+        val target = new Path(root, t)
+        if (f.exists(target) && f.exists(new Path(new Path(staging, Replaced), t))) {
+          f.listStatus(target).map(_.getPath).filterNot(_.getName.matches("[_.].*")).foreach(d =>
+            require(f.rename(d, new Path(new Path(staging, t), d.getName)), s"healRewrite: rename $d failed"))
+          f.delete(target, true): Unit
+        }
+        if (!f.exists(target)) install(f, root, t)
+      }
+    f.delete(staging, true): Unit
+  }
+
+  /** Rename the staged partition `t` over `root/t`, making its parent. */
+  private def install(f: FileSystem, root: Path, t: String): Unit = {
+    val target = new Path(root, t)
+    f.mkdirs(target.getParent): Unit
+    require(f.rename(new Path(new Path(root, Rewriting), t), target),
+      s"rewritePartitions: rename into $target failed")
+  }
+
+  /** The leaf `k=v` directories under `dir`, relative to it. */
+  private def stagedLeaves(f: FileSystem, dir: Path): Seq[String] = {
+    def walk(d: Path, rel: Seq[String]): Seq[String] = {
+      val subs = f.listStatus(d).toSeq
+        .filter(s => s.isDirectory && s.getPath.getName.contains("=")).map(_.getPath.getName)
+      if (subs.isEmpty) Seq(rel.mkString("/")).filter(_.nonEmpty)
+      else subs.flatMap(n => walk(new Path(d, n), rel :+ n))
+    }
+    walk(dir, Seq.empty)
+  }
+
   /** Recover [[stagedOverwrite]] leftovers under `root`: a staging whose
     * target is MISSING holds the survivors of a swap that crashed between
     * delete and rename — rename it in; one whose target still exists is a
@@ -229,6 +337,8 @@ private[graft] object Levels {
     val all = ids(f, p)
     val newest = all.filter(_ >= 0).lastOption
     val folded = all.filterNot(newest.contains)
+    // a forget that failed mid-swap left a level's rows in its staging
+    folded.foreach(id => healRewrite(f, new Path(p, name(id))))
     val leftovers = foldLeftovers(f, p, file)
     if (folded.forall(_ == BaseId) && leftovers.isEmpty) return
     def at(id: Long) = file.fold(new Path(p, name(id)))(new Path(new Path(p, name(id)), _))

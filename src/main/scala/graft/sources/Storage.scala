@@ -292,50 +292,33 @@ object Storage {
 
   /** A5 end-to-end (CassandraEventStore.cs:126-146): physically remove
     * tombstoned rows from the bucketed layout. The affected buckets are
-    * computed driver-side from the tombstone ids (a delete touches few
-    * aggregates; the id set is driver-scale), and ONLY those bucket
-    * partitions are rewritten — dynamic partition overwrite leaves every
-    * other bucket's files untouched (asserted by StorageCounterSpec).
+    * computed from the tombstone ids with the writer's own expression (a
+    * delete touches few aggregates; the collect is bounded by nBuckets),
+    * and ONLY those bucket partitions are rewritten — every other bucket's
+    * files are untouched (asserted by StorageCounterSpec); a bucket whose
+    * every row was tombstoned is dropped.
     *
-    * Survivors are materialized (localCheckpoint) before the overwrite:
-    * Spark refuses to overwrite a path it is still reading from, and the
-    * affected slice is 1/nBuckets of the table by construction. This
-    * in-place variant is the HDFS-style path; the object-store path —
-    * surviving slice to a fresh generation prefix, atomic `_CURRENT`
-    * manifest swap — is `Generations.deleteAndPromote`. */
+    * The rewrite is [[Levels.rewritePartitions]]' staged swap: the
+    * survivors are written once to a hidden staging directory under
+    * `path`, then each affected bucket is moved out and its staged copy
+    * renamed in. A crash at any point leaves every survivor in its bucket
+    * or in the staging, and the next rewrite of `path` heals the swap
+    * (keeping rows an append landed in the meantime), so rerunning the
+    * same delete equals a clean run. Single-mutator: no append or other
+    * rewrite of `path` may run beside it. The object-store
+    * path — surviving slice to a fresh generation prefix, atomic
+    * `_CURRENT` manifest swap — is `Generations.deleteAndPromote`. */
   def deleteAndRewrite(
       spark: SparkSession,
       path: String,
       tombstones: DataFrame,
       nBuckets: Int = DefaultBuckets): Unit = {
     requireBuckets(nBuckets)
-    // affected buckets computed distributed (writer's xxhash64 expression);
-    // the collect is bounded by nBuckets even when the tombstone frame isn't
     val buckets = tombstones
       .select(pmod(xxhash64(col("id")), lit(nBuckets)).cast("int").as("bucket"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    if (buckets.isEmpty) return
-    val survivors = deleteEvents(
-        readEvents(spark, path).filter(col("bucket").isin(buckets: _*)),
-        tombstones)
-      .localCheckpoint(true)
-    val survivorBuckets = survivors.select(col("bucket")).distinct()
-      .collect().map(_.getInt(0)).toSet
-    // per-WRITE dynamic overwrite (not a session-conf toggle) — scoped to
-    // this writer, safe under concurrent driver threads (operators.Par)
-    survivors
-      .repartition(col("bucket"))
-      .sortWithinPartitions(col("id"), col("rev"), col("pos"))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket").parquet(path)
-    // dynamic overwrite only replaces partitions present in the written
-    // data: a bucket whose every row was tombstoned must be dropped by hand
-    val conf = spark.sparkContext.hadoopConfiguration
-    buckets.filterNot(survivorBuckets).foreach { b =>
-      val p = new org.apache.hadoop.fs.Path(s"$path/bucket=$b")
-      p.getFileSystem(conf).delete(p, true): Unit
-    }
+      .distinct().collect().map(r => Seq("bucket" -> r.getInt(0).toString)).toSeq
+    Levels.rewritePartitions(spark, path, buckets, Seq("id", "rev", "pos"))(
+      deleteEvents(_, tombstones))
   }
 
   /** A7 index delete (IndexByEventTypeStore.cs:63-83): anti-join on the
@@ -351,46 +334,17 @@ object Storage {
     * the index analogue of [[deleteAndRewrite]] (reference delete path:
     * IndexByEventTypeStore.cs:63-83). The affected (et, pid) partitions are
     * computed from the tombstones (a delete touches few — the collect is
-    * partition-scale, not record-scale), ONLY those directories are read
-    * (literal partition filters prune the scan) and anti-joined on the full
-    * primary key, then rewritten via dynamic partition overwrite; every
-    * other partition's files are physically untouched. Idempotent: deleting
+    * partition-scale, not record-scale); ONLY those directories are read,
+    * anti-joined on the full primary key and swapped in through
+    * [[Levels.rewritePartitions]] (crash order and heal as for
+    * [[deleteAndRewrite]]). Every other partition's files are physically
+    * untouched; a partition whose every record was tombstoned is dropped,
+    * and so is an `et=` directory it leaves empty. Idempotent: deleting
     * already-absent records rewrites the same survivors. */
   def deleteIndexAndRewrite(spark: SparkSession, path: String, tombstones: DataFrame): Unit = {
     val parts = tombstones.select(col("et"), col("pid")).distinct().collect()
-      .map(r => (r.getAs[String]("et"), r.getAs[Int]("pid"))).toSeq
-    if (parts.isEmpty) return
-    val cond = parts.map { case (e, p) => col("et") === lit(e) && col("pid") === lit(p) }
-      .reduce(_ || _)
-    val survivors = deleteIndexRecords(readEvents(spark, path).filter(cond), tombstones)
-      .localCheckpoint(true)
-    val survivorParts = survivors.select(col("et"), col("pid")).distinct().collect()
-      .map(r => (r.getAs[String]("et"), r.getAs[Int]("pid"))).toSet
-    // per-WRITE dynamic overwrite (not a session-conf toggle) — scoped to
-    // this writer, safe under concurrent driver threads (operators.Par)
-    survivors
-      .repartition(col("et"), col("pid"))
-      .sortWithinPartitions(col("ts"))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("et", "pid").parquet(path)
-    // dynamic overwrite only replaces partitions present in the written
-    // data: a partition whose every record was tombstoned is dropped by
-    // hand, and so is an `et=` directory that leaves empty, which every
-    // later listing of the index would walk (escapePathName is the
-    // writer's own partition-directory encoding)
-    val conf = spark.sparkContext.hadoopConfiguration
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
-    val dropped = parts.filterNot(survivorParts)
-    dropped.foreach { case (e, p) =>
-      val d = new org.apache.hadoop.fs.Path(s"$path/et=${escapePathName(e)}/pid=$p")
-      d.getFileSystem(conf).delete(d, true): Unit
-    }
-    dropped.map(_._1).distinct.foreach { e =>
-      val d = new org.apache.hadoop.fs.Path(s"$path/et=${escapePathName(e)}")
-      val fs = d.getFileSystem(conf)
-      if (fs.exists(d) && fs.listStatus(d).isEmpty) fs.delete(d, false): Unit
-    }
+      .map(r => Seq("et" -> r.getString(0), "pid" -> r.get(1).toString)).toSeq
+    Levels.rewritePartitions(spark, path, parts, Seq("ts"))(deleteIndexRecords(_, tombstones))
   }
 
   /** The table at `path` — the events, the (et, pid) index, or an

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.streaming.StreamingOps
 
@@ -53,5 +54,34 @@ class StreamingIndexDeleteSpec extends SparkSpec {
     assert(files("view", 2026001) == viewBefore)
     // fully-deleted partition: directory dropped
     assert(!new java.io.File(s"$idx/et=click/pid=2026002").exists())
+  }
+
+  test("a batch that fails mid-swap replays on restart to the index of a clean run") {
+    import spark.implicits._
+    val dir = tmpDir()
+    val land = s"$dir/tombs"
+    val index = (for (et <- Seq("click", "view"); pid <- 1 to 3; a <- 1 to 3)
+      yield (et, pid, s"a$a", 1, 0, 1000L * pid + a)).toDF("et", "pid", "aid", "rev", "pos", "ts")
+    val tombs = index.select("et", "pid", "ts", "aid", "rev", "pos")
+    // two micro-batches: three records of click/1..3, then all of view/2
+    tombs.filter(col("et") === "click" && col("ts") % 1000 === 2).coalesce(1).write.parquet(s"$land/0")
+    tombs.filter(col("et") === "view" && col("pid") === 2).coalesce(1).write.parquet(s"$land/1")
+    def drain(idx: String, ckpt: String): Unit =
+      StreamingOps.indexDeleteStream(
+          spark.readStream.schema(tombs.schema).option("maxFilesPerTrigger", 1)
+            .option("recursiveFileLookup", "true").parquet(land),
+          idx, ckpt)
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    val (crashed, clean) = (s"$dir/crashed", s"$dir/clean")
+    Seq(crashed, clean).foreach(graft.sources.Storage.appendIndex(index, _))
+    drain(clean, s"$dir/ckpt_clean")
+    FailingRenameFs.during(spark, crashed)(
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        drain(crashed, s"$dir/ckpt")))
+    assert(FailingRenameFs.fired)
+    drain(crashed, s"$dir/ckpt")
+    assert(FailingRenameFs.rows(spark, crashed) == FailingRenameFs.rows(spark, clean))
+    assert(FailingRenameFs.rows(spark, clean).size == 18 - 3 - 3)
+    assert(FailingRenameFs.strayDirs(crashed).isEmpty, FailingRenameFs.strayDirs(crashed))
   }
 }

@@ -6,8 +6,10 @@ deleted comments and blank lines never count as a reduction.
 Line comments and (nested) block comments, scaladoc included, are
 dropped; string literals are kept, so a `//` inside a string is code.
 
-Usage: python3 tools/ncloc.py <file.scala>...   (prints per file + total)
+Usage: python3 tools/ncloc.py <file.scala or directory>...
+  (prints per file + total; a directory counts every *.scala below it)
 """
+import os
 import sys
 
 
@@ -50,9 +52,23 @@ def code(src):
     return "".join(out)
 
 
+def scala_files(paths):
+    """Each named file, and every *.scala under each named directory, in
+    sorted order."""
+    for p in paths:
+        if os.path.isdir(p):
+            for d, subdirs, files in os.walk(p):
+                subdirs.sort()
+                for n in sorted(files):
+                    if n.endswith(".scala"):
+                        yield os.path.join(d, n)
+        else:
+            yield p
+
+
 def main(paths):
     total = 0
-    for p in paths:
+    for p in scala_files(paths):
         with open(p, encoding="utf-8") as f:
             k = sum(1 for line in code(f.read()).split("\n") if line.strip())
         print(f"{k:6d} {p}")
