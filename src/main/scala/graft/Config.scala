@@ -103,7 +103,7 @@ object GraftConf {
   // batch); partmb sizes the drain's shuffle/state partitions to the
   // trigger volume; minparts is the task-granularity floor a stateful
   // drain keeps for intra-batch overlap even when the volume-derived
-  // count is smaller (SparkEntry.withStreamParts derives n from these).
+  // count is smaller (SparkEntry.drain derives n from these).
   val StreamTriggerMb = "stream.triggermb" // micro-batch byte cap (MiB)
   val StreamPartMb = "stream.partmb" // trigger bytes per stream partition (MiB)
   val StreamMinParts = "stream.minparts" // floor on the derived partition count

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import graft.functions.{TextFns, TimeFns, VectorFns}
 import graft.operators.{AssemblyOps, CurationOps, DedupOps, MultimodalOps, RetrievalOps, SimilarityOps, TemporalOps, TextOps}
 import graft.sources.Tables
@@ -2231,57 +2232,101 @@ object SparkEntry {
        |FROM e GROUP BY cell, dim ORDER BY cell, dim""".stripMargin
   }
 
-  /** Run `body` (a streaming start + awaitTermination) with the session's
-    * shuffle partitions — which fix the stream's state-store/shuffle
-    * partition count at start — sized to the per-micro-batch volume
-    * instead of the session's batch parallelism. Stateful micro-batches
-    * pay per-partition state maintenance every trigger; at test scale 32
-    * partitions of machinery dominated the actual work (q_stream_attrib:
-    * 5.8s -> 3.1s at 8). Restored afterwards either way.
-    *
-    * NOT thread-safe against concurrent [[graft.operators.Par]] chains:
-    * this is a session-conf toggle, so a drain wrapped here must never
-    * run inside (or beside) a Par pool on the same session — the toggle
-    * would silently retune every in-flight chain's shuffles. All call
-    * sites keep drains-at-derived-parallelism OUTSIDE Par; the composed
-    * forget drains run unwrapped for exactly this reason. */
-  private def withStreamParts[T](s: SparkSession, n: Int)(body: => T): T = {
-    val saved = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", saved)
+  /** A fresh scratch directory for one query's intermediate tables. All
+    * of them live under one per-JVM `graft_*` root, which a shutdown hook
+    * removes when the JVM exits: after Spark has stopped (the hook runs
+    * below Spark's own shutdown priority), so after Verify or Bench has
+    * collected every result read from it. */
+  private def scratchDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(scratchRoot, s"${prefix}_").toString
+
+  private lazy val scratchRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft_")
+    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
+      () => org.apache.commons.io.FileUtils.deleteQuietly(root.toFile), 20)
+    root
   }
 
-  /** Byte cap one AvailableNow micro-batch may ingest — applied as
-    * `maxBytesPerTrigger` on every streaming source below. Without it
-    * nothing bounds the micro-batch: under AvailableNow a 100 TB backlog
-    * arrives as ONE batch and any per-batch sizing is meaningless. The
-    * default (1 GiB) keeps every bench SF single-batch (local inputs are
-    * well under it), so the driver's record stays comparable, while a
-    * production backlog drains in bounded slices. */
-  private[graft] def streamTriggerBytes(s: SparkSession): Long =
+  /** Byte cap one AvailableNow micro-batch may ingest, set on every
+    * streaming source by [[stream]]. Without it nothing bounds the
+    * micro-batch: under AvailableNow a 100 TB backlog arrives as ONE batch
+    * and any per-batch sizing is meaningless. The default (1 GiB) keeps
+    * every bench SF single-batch (local inputs are well under it), so the
+    * bench record stays comparable, while a production backlog drains
+    * in bounded slices. */
+  private def streamTriggerBytes(s: SparkSession): Long =
     GraftConf.int(s, GraftConf.StreamTriggerMb, 1024).toLong << 20
 
-  /** [[withStreamParts]] with the partition count DERIVED from the
-    * per-trigger volume instead of hard-coded at the call site: a trigger
-    * ingests at most min(input bytes, [[streamTriggerBytes]]), the drain
-    * gets one shuffle/state partition per [[GraftConf.StreamPartMb]]
-    * (default 32 MiB) of that, floored at [[GraftConf.StreamMinParts]]
-    * (default 8 — stateful drains keep a few tasks' worth of intra-batch
-    * overlap even when the volume alone derives fewer) and clamped to the
-    * session's batch parallelism. At bench SFs (inputs << 32 MiB) the
-    * floor decides; on a production backlog the volume term does — a
-    * 1 GiB trigger derives 32 partitions — so no constant here is a
-    * local-mode assumption. The state-store count is still fixed at first
-    * start per checkpoint (every row uses a fresh checkpoint dir). */
-  private[graft] def withStreamParts[T](s: SparkSession, dir: String, glob: String)(
-      body: => T): T =
-    withStreamParts(s, streamParts(s, dir, glob))(body)
+  /** The streaming source over test table `table` of `dir`, capped at
+    * [[streamTriggerBytes]] per micro-batch, with the schema read through
+    * [[Tables]]. A file-stream source takes a directory, never a plain
+    * file, so the table is scoped by its path: a Spark-written multi-file
+    * `<table>.parquet` directory streams that directory, and a single
+    * `<table>.parquet` file streams `dir` through a file-name glob filter
+    * (which would match no part file of a directory table). */
+  private[graft] def stream(s: SparkSession, dir: String, table: String): DataFrame = {
+    val file = s"$table.parquet"
+    val path = new org.apache.hadoop.fs.Path(dir, file)
+    val src = s.readStream.schema(Tables.table(s, dir, table).schema)
+      .option("maxBytesPerTrigger", streamTriggerBytes(s).toString)
+    if (path.getFileSystem(s.sparkContext.hadoopConfiguration).getFileStatus(path).isDirectory)
+      src.parquet(path.toString)
+    else src.option("pathGlobFilter", file).parquet(dir)
+  }
 
-  /** The partition count [[withStreamParts]] derives for the drain of
-    * `dir/glob`. A glob match that is a directory (a Spark-written
-    * multi-file table) counts the bytes of its leaf data files —
-    * underscore/dot markers and checksums excluded, as the reader skips
-    * them — not the directory entry's own zero length. */
+  /** Drain the stream of test table `table` of `dir` to completion: start
+    * `writer` under [[Trigger.AvailableNow]] and wait for it. The session's
+    * shuffle partitions — which fix the stream's state-store/shuffle
+    * partition count at start — are set to [[streamParts]], sized to the
+    * per-micro-batch volume instead of the session's batch parallelism,
+    * and restored afterwards either way. Stateful micro-batches pay
+    * per-partition state maintenance every trigger; at test scale 32
+    * partitions of machinery dominated the actual work (q_stream_attrib:
+    * 5.8s -> 3.1s at 8).
+    *
+    * NOT thread-safe against concurrent [[graft.operators.Par]] chains:
+    * this is a session-conf toggle, so a drain must never run inside (or
+    * beside) a Par pool on the same session — the toggle would silently
+    * retune every in-flight chain's shuffles. So the two concurrent
+    * queues of q_stream_forget_all and the Par-chained queue of
+    * q_stream_forget start their own AvailableNow queries at the session's
+    * partition count; every other drain runs here, outside Par. */
+  private[graft] def drain(s: SparkSession, dir: String, table: String)(
+      writer: => DataStreamWriter[_]): StreamingQuery = {
+    val saved = s.conf.get("spark.sql.shuffle.partitions")
+    s.conf.set("spark.sql.shuffle.partitions", streamParts(s, dir, s"$table.parquet").toString)
+    try {
+      val q = writer.trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      q
+    } finally s.conf.set("spark.sql.shuffle.partitions", saved)
+  }
+
+  /** [[drain]] into the memory sink `name` in output `mode`, returning the
+    * drained rows; a stale query still running under `name` is stopped
+    * first. */
+  private def drainToMemory(s: SparkSession, dir: String, table: String, name: String,
+      mode: String)(rows: DataFrame): DataFrame = {
+    s.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
+    drain(s, dir, table)(rows.writeStream.format("memory").queryName(name).outputMode(mode))
+    s.table(name)
+  }
+
+  /** The shuffle/state partition count [[drain]] sets for the stream of
+    * `dir/glob`: a trigger ingests at most min(input bytes,
+    * [[streamTriggerBytes]]), the drain gets one partition per
+    * [[GraftConf.StreamPartMb]] (default 32 MiB) of that, floored at
+    * [[GraftConf.StreamMinParts]] (default 8 — stateful drains keep a few
+    * tasks' worth of intra-batch overlap even when the volume alone
+    * derives fewer) and clamped to the session's batch parallelism. At
+    * bench SFs (inputs << 32 MiB) the floor decides; on a production
+    * backlog the volume term does — a 1 GiB trigger derives 32 partitions
+    * — so no constant here is a local-mode assumption. The state-store
+    * count is still fixed at first start per checkpoint (every row uses a
+    * fresh checkpoint dir). A glob match that is a directory (a
+    * Spark-written multi-file table) counts the bytes of its leaf data
+    * files — underscore/dot markers and checksums excluded, as the reader
+    * skips them — not the directory entry's own zero length. */
   private[graft] def streamParts(s: SparkSession, dir: String, glob: String): Int = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -2580,55 +2625,26 @@ object SparkEntry {
 
     "q_stream_counters" -> { (s, dir) => // streaming D2: the message counter
       // as an update/complete-mode stateful streaming aggregation, driven
-      // to batch completion with Trigger.AvailableNow and gated by the
+      // to batch completion with an AvailableNow drain and gated by the
       // SAME oracle as the batch fold — the streaming path computes the
       // reference's counter semantics (MessageCounter.cs) exactly-once
-      import org.apache.spark.sql.streaming.Trigger
-      Tables.withNanosAsLong(s)
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val name = "q_stream_counters_sink"
-      s.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-      // file-stream sources take a DIRECTORY (the landing zone); scope it
-      // to the events table with a glob filter
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .option("maxBytesPerTrigger", streamTriggerBytes(s).toString)
-        .parquet(dir)
-      val counts = graft.streaming.StreamingOps.liveCounters(src, etCol = "event_type")
-      withStreamParts(s, dir, "events.parquet") {
-        val q = counts.writeStream.format("memory").queryName(name)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      s.table(name).select(col("msgid"), col("cv")).orderBy(col("msgid"))
+      drainToMemory(s, dir, "events", "q_stream_counters_sink", "complete")(
+          graft.streaming.StreamingOps.liveCounters(stream(s, dir, "events"), etCol = "event_type"))
+        .select(col("msgid"), col("cv")).orderBy(col("msgid"))
     },
 
-    "q_stream_dedup" -> { (s, dir) => // streaming exactly-once landing: two
-      // file-stream sources over the same log simulate at-least-once
+    "q_stream_dedup" -> { (s, dir) => // streaming exactly-once landing: the
+      // log's file-stream source unioned with itself simulates at-least-once
       // redelivery (every event arrives twice); dropDuplicatesWithinWatermark
       // on (id, rev, pos) lands each exactly once, and the landed counts
       // must match the batch oracle — the reference's non-idempotent
       // retry-double-write (CassandraEventStore.cs:67-70) made exact
-      import org.apache.spark.sql.streaming.Trigger
-      Tables.withNanosAsLong(s)
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val name = "q_stream_dedup_sink"
-      s.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-      def src() = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .option("maxBytesPerTrigger", streamTriggerBytes(s).toString)
-        .parquet(dir)
-        .select(col("user_id").as("id"), col("event_id").cast("int").as("rev"),
-          lit(0).as("pos"), col("event_type"),
-          timestamp_micros(Tables.tsToMicros(col("ts"), schema("ts").dataType)).as("ts_t"))
-      val redelivered = src().unionByName(src())
-      val landed = graft.streaming.StreamingOps.dedupedEvents(redelivered, "ts_t")
-      withStreamParts(s, dir, "events.parquet") {
-        val q = landed.writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      s.table(name)
+      val ev = stream(s, dir, "events")
+      val src = ev.select(col("user_id").as("id"), col("event_id").cast("int").as("rev"),
+        lit(0).as("pos"), col("event_type"),
+        timestamp_micros(Tables.tsToMicros(col("ts"), ev.schema("ts").dataType)).as("ts_t"))
+      drainToMemory(s, dir, "events", "q_stream_dedup_sink", "append")(
+          graft.streaming.StreamingOps.dedupedEvents(src.unionByName(src), "ts_t"))
         .groupBy(col("event_type").as("msgid"))
         .agg(count(lit(1)).as("cv"))
         .orderBy(col("msgid"))
@@ -2640,7 +2656,7 @@ object SparkEntry {
       // layout-independent, so the oracle gates read correctness;
       // LayoutSpec gates the pruning property (footer min/max tight on
       // BOTH dimensions) that is the feature's reason to exist at 100 TB.
-      val out = java.nio.file.Files.createTempDirectory("graft_zorder_").toString
+      val out = scratchDir("zorder")
       try {
         val ev = Tables.events(s, dir)
           .select(col("user_id"), col("event_id"), col("ts_us"),
@@ -2655,13 +2671,7 @@ object SparkEntry {
           // materialized before the table copy is deleted — a bench rep
           // must not orphan a full events copy under /tmp per invocation
           .localCheckpoint(true)
-      } finally {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm)
-          f.delete(): Unit
-        }
-        rm(new java.io.File(out))
-      }
+      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
     },
 
     "q_stream_contamination" -> { (s, dir) => // stream-STATIC join: eval
@@ -2670,27 +2680,14 @@ object SparkEntry {
       // shape); the landed pair set rolled up per eval doc must equal the
       // batch shingle-overlap truth. Stateless append — no watermark, no
       // join state; the static side re-plans per micro-batch.
-      import org.apache.spark.sql.streaming.Trigger
-      Tables.withNanosAsLong(s)
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val name = "q_stream_contamination_sink"
-      s.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-      val evalStream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxBytesPerTrigger", streamTriggerBytes(s).toString)
-        .parquet(dir)
+      val evalStream = stream(s, dir, "documents")
         .filter(pmod(col("doc_id"), lit(97)) === 0)
       val trainShingles = CurationOps.shingleRows(
           Tables.documents(s, dir).filter(pmod(col("doc_id"), lit(97)) =!= 0),
           k = 3, hashed = false)
         .select(col("shingle")).distinct()
-      val pairs = graft.streaming.StreamingOps.contaminationStream(evalStream, trainShingles)
-      withStreamParts(s, dir, "documents.parquet") {
-        val q = pairs.writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      s.table(name)
+      drainToMemory(s, dir, "documents", "q_stream_contamination_sink", "append")(
+          graft.streaming.StreamingOps.contaminationStream(evalStream, trainShingles))
         .groupBy(col("eval_id"))
         .agg(countDistinct(col("shingle")).as("n_shared"))
         .orderBy(col("eval_id"))
@@ -2703,25 +2700,12 @@ object SparkEntry {
       // threshold lands exactly once — stateless append, no join state.
       // The per-eval argmax over the landed pairs must equal the batch
       // g_decontam rows' flagged subset; rolled up here per eval doc.
-      import org.apache.spark.sql.streaming.Trigger
-      val name = "q_stream_decontam_sink"
-      s.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-      val schema = s.read.parquet(s"$dir/embeddings.parquet").schema
-      val evalStream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .option("maxBytesPerTrigger", streamTriggerBytes(s).toString)
-        .parquet(dir)
+      val evalStream = stream(s, dir, "embeddings")
         .filter(col("label") === 0)
       val train = Tables.embeddings(s, dir).filter(col("label") === 1)
-      val pairs = graft.streaming.StreamingOps.decontamStream(
-        evalStream, train, centroids = fixtureCentroids(64),
-        nProbe = KmFixtureK, threshold = 0.3)
-      withStreamParts(s, dir, "embeddings.parquet") {
-        val q = pairs.writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      s.table(name)
+      drainToMemory(s, dir, "embeddings", "q_stream_decontam_sink", "append")(
+          graft.streaming.StreamingOps.decontamStream(evalStream, train,
+            centroids = fixtureCentroids(64), nProbe = KmFixtureK, threshold = 0.3))
         .groupBy(col("eval_id"))
         .agg(max(struct(col("sim"), (-col("train_id")).as("nt"),
           col("train_id").as("t"))).as("m"),
@@ -2737,25 +2721,11 @@ object SparkEntry {
       // state. The memory sink collects the append-mode pair stream; the
       // per-purchase rollup of those pairs must equal the batch self-join
       // the oracle computes — landing the pairs exactly once is the gate.
-      import org.apache.spark.sql.streaming.Trigger
-      Tables.withNanosAsLong(s)
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val name = "q_stream_attrib_sink"
-      s.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .option("maxBytesPerTrigger", streamTriggerBytes(s).toString)
-        .parquet(dir)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          timestamp_micros(Tables.tsToMicros(col("ts"), schema("ts").dataType)).as("ts_t"))
-      val pairs = graft.streaming.StreamingOps.attributionPairs(
-        src, srcType = "view", tgtType = "purchase")
-      withStreamParts(s, dir, "events.parquet") {
-        val q = pairs.writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      s.table(name)
+      val ev = stream(s, dir, "events")
+      val src = ev.select(col("user_id"), col("event_id"), col("event_type"),
+        timestamp_micros(Tables.tsToMicros(col("ts"), ev.schema("ts").dataType)).as("ts_t"))
+      drainToMemory(s, dir, "events", "q_stream_attrib_sink", "append")(
+          graft.streaming.StreamingOps.attributionPairs(src, srcType = "view", tgtType = "purchase"))
         .groupBy(col("purchase_id"))
         .agg(count(lit(1)).as("n_views"), min(col("view_id")).as("first_view_id"))
         .orderBy(col("purchase_id"))
@@ -2768,24 +2738,11 @@ object SparkEntry {
       // the batch sessionizer by design: session_window starts a NEW
       // session at gap == 6h exactly (strict <), and the oracle encodes
       // that (>= starts a session), so the gate is exact, not approximate.
-      import org.apache.spark.sql.streaming.Trigger
-      Tables.withNanosAsLong(s)
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val name = "q_stream_sessions_sink"
-      s.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .option("maxBytesPerTrigger", streamTriggerBytes(s).toString)
-        .parquet(dir)
-        .select(col("user_id"),
-          timestamp_micros(Tables.tsToMicros(col("ts"), schema("ts").dataType)).as("ts_t"))
-      val sess = graft.streaming.StreamingOps.sessionCounts(src)
-      withStreamParts(s, dir, "events.parquet") {
-        val q = sess.writeStream.format("memory").queryName(name)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      s.table(name)
+      val ev = stream(s, dir, "events")
+      val src = ev.select(col("user_id"),
+        timestamp_micros(Tables.tsToMicros(col("ts"), ev.schema("ts").dataType)).as("ts_t"))
+      drainToMemory(s, dir, "events", "q_stream_sessions_sink", "complete")(
+          graft.streaming.StreamingOps.sessionCounts(src))
         .select(col("user_id"), col("start_us"), col("last_us"), col("n_events"))
         .orderBy(col("user_id"), col("start_us"))
     },
@@ -2795,25 +2752,16 @@ object SparkEntry {
       // derivation and landed in the (et, pid) layout via foreachBatch
       // (StreamingOps.indexTo); readback of the persisted index must equal
       // the batch derivation, so it shares q_index_build's oracle
-      import org.apache.spark.sql.streaming.Trigger
-      Tables.withNanosAsLong(s)
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val out = java.nio.file.Files.createTempDirectory("graft_q_stream_index_")
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .option("maxBytesPerTrigger", streamTriggerBytes(s).toString)
-        .parquet(dir)
-        .select( // test-table -> canonical event columns (FIXTURES.md §2)
-          col("event_type").as("et"),
-          col("user_id").as("id"),
-          col("event_id").as("rev"),
-          lit(0).as("pos"),
-          TimeFns.microsToFileTime(Tables.tsToMicros(col("ts"), schema("ts").dataType)).as("ts"))
-      withStreamParts(s, dir, "events.parquet") {
-        val q = graft.streaming.StreamingOps.indexTo(src, s"$out/index", s"$out/ckpt")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      val out = scratchDir("q_stream_index")
+      val ev = stream(s, dir, "events")
+      val src = ev.select( // test-table -> canonical event columns (FIXTURES.md §2)
+        col("event_type").as("et"),
+        col("user_id").as("id"),
+        col("event_id").as("rev"),
+        lit(0).as("pos"),
+        TimeFns.microsToFileTime(Tables.tsToMicros(col("ts"), ev.schema("ts").dataType)).as("ts"))
+      drain(s, dir, "events")(
+        graft.streaming.StreamingOps.indexTo(src, s"$out/index", s"$out/ckpt"))
       s.read.parquet(s"$out/index")
         .select(col("et"), col("pid"), col("aid"), col("rev").as("eid"),
           TimeFns.fileTimeToMicros(col("ts")).as("ts_us"))
@@ -2826,7 +2774,7 @@ object SparkEntry {
       // (rewrites ONLY bucket(7) into generation 2, atomic manifest swap),
       // then read back through the manifest — must equal the oracle's
       // WHERE user_id <> 7 over the source table
-      val root = java.nio.file.Files.createTempDirectory("graft_gen_").toString + "/events"
+      val root = scratchDir("gen") + "/events"
       val log = Tables.eventLog(s, dir).drop("et")
         .withColumn("id", col("id").cast("string").cast("binary"))
       graft.sources.Generations.bootstrap(s, root, log, nBuckets = 16)
@@ -2845,7 +2793,7 @@ object SparkEntry {
       // Generations.diff(1, 2) — resolved from the MANIFESTS, reading
       // only buckets whose entry changed (here: bucket(7) on both
       // sides), must report exactly aggregate 7's rows as 'removed'
-      val root = java.nio.file.Files.createTempDirectory("graft_gendiff_").toString + "/events"
+      val root = scratchDir("gendiff") + "/events"
       val log = Tables.eventLog(s, dir).drop("et")
         .withColumn("id", col("id").cast("string").cast("binary"))
       graft.sources.Generations.bootstrap(s, root, log, nBuckets = 16)
@@ -2868,27 +2816,17 @@ object SparkEntry {
       // (counts per type) over the versioned layout. The CONCURRENT
       // stream-vs-delete race is StreamingGenerationsSpec; this gates the
       // composed data path end-to-end against DuckDB.
-      import org.apache.spark.sql.streaming.Trigger
-      Tables.withNanosAsLong(s)
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val out = java.nio.file.Files.createTempDirectory("graft_q_stream_versioned_")
+      val out = scratchDir("q_stream_versioned")
       val root = s"$out/events"
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .option("maxBytesPerTrigger", streamTriggerBytes(s).toString)
-        .parquet(dir)
-        .select( // test-table -> canonical event columns (FIXTURES.md §2)
-          col("user_id").cast("string").cast("binary").as("id"),
-          col("event_id").cast("int").as("rev"),
-          lit(0).as("pos"),
-          TimeFns.microsToFileTime(Tables.tsToMicros(col("ts"), schema("ts").dataType)).as("ts"),
-          col("event_type").cast("binary").as("data"))
-      withStreamParts(s, dir, "events.parquet") {
-        val q = graft.streaming.StreamingOps
-          .ingestToVersioned(src, root, s"$out/ckpt", nBuckets = 16)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      val ev = stream(s, dir, "events")
+      val src = ev.select( // test-table -> canonical event columns (FIXTURES.md §2)
+        col("user_id").cast("string").cast("binary").as("id"),
+        col("event_id").cast("int").as("rev"),
+        lit(0).as("pos"),
+        TimeFns.microsToFileTime(Tables.tsToMicros(col("ts"), ev.schema("ts").dataType)).as("ts"),
+        col("event_type").cast("binary").as("data"))
+      drain(s, dir, "events")(graft.streaming.StreamingOps
+        .ingestToVersioned(src, root, s"$out/ckpt", nBuckets = 16))
       val tomb = graft.sources.Generations.readCurrent(s, root)
         .filter(col("id") === lit("7".getBytes)).select("id", "rev", "pos")
       graft.sources.Generations.deleteAndPromote(s, root, tomb, nBuckets = 16)
@@ -2906,20 +2844,11 @@ object SparkEntry {
       // truth (g_para_dedup's oracle; the single source file arrives as one
       // micro-batch — cross-batch/cross-run frontier semantics are
       // StreamingCurationSpec's job)
-      import org.apache.spark.sql.streaming.Trigger
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val out = java.nio.file.Files.createTempDirectory("graft_q_stream_curated_")
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxBytesPerTrigger", streamTriggerBytes(s).toString)
-        .parquet(dir)
+      val out = scratchDir("q_stream_curated")
+      val src = stream(s, dir, "documents")
         .select(col("doc_id"), col("text"))
-      withStreamParts(s, dir, "documents.parquet") {
-        val q = graft.streaming.StreamingOps
-          .curatedIngest(src, s"$out/curated", s"$out/ckpt")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      drain(s, dir, "documents")(graft.streaming.StreamingOps
+        .curatedIngest(src, s"$out/curated", s"$out/ckpt"))
       s.read.parquet(s"$out/curated/docs")
         .select(col("doc_id"), col("clean_text"), col("n_kept"), col("n_dropped"))
         .orderBy(col("doc_id"))
@@ -2930,20 +2859,11 @@ object SparkEntry {
       // digests; the merged read must equal the BATCH datasetCard over
       // the same corpus (g_dataset_card's oracle verbatim). Cross-batch
       // merge/replay/fold semantics are CardStreamSpec's job.
-      import org.apache.spark.sql.streaming.Trigger
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val out = java.nio.file.Files.createTempDirectory("graft_q_stream_card_")
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxBytesPerTrigger", streamTriggerBytes(s).toString)
-        .parquet(dir)
+      val out = scratchDir("q_stream_card")
+      val src = stream(s, dir, "documents")
         .select(col("source"), col("lang"), col("text"))
-      withStreamParts(s, dir, "documents.parquet") {
-        val q = graft.streaming.StreamingOps
-          .cardStream(src, s"$out/card", s"$out/ckpt")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      drain(s, dir, "documents")(graft.streaming.StreamingOps
+        .cardStream(src, s"$out/card", s"$out/ckpt"))
       graft.streaming.StreamingOps.readCard(s, s"$out/card")
         .orderBy(col("source"))
     },
@@ -2954,21 +2874,12 @@ object SparkEntry {
       // case IS the batch tokenBudgetSample, so it shares g_token_budget's
       // single-window oracle. Cross-batch frontier/replay semantics are
       // BudgetStreamSpec's job.
-      import org.apache.spark.sql.streaming.Trigger
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val out = java.nio.file.Files.createTempDirectory("graft_q_stream_budget_")
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxBytesPerTrigger", streamTriggerBytes(s).toString)
-        .parquet(dir)
+      val out = scratchDir("q_stream_budget")
+      val src = stream(s, dir, "documents")
         .select(col("doc_id"), col("text"))
-      withStreamParts(s, dir, "documents.parquet") {
-        val q = graft.streaming.StreamingOps
-          .budgetIngest(src, s"$out/budget", s"$out/ckpt",
-            budgetTokens = 9000L, seed = 7L, nRanges = 8)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      drain(s, dir, "documents")(graft.streaming.StreamingOps
+        .budgetIngest(src, s"$out/budget", s"$out/ckpt",
+          budgetTokens = 9000L, seed = 7L, nRanges = 8))
       s.read.schema("doc_id LONG, sort_key LONG, n_tokens LONG")
         .option("basePath", s"$out/budget/docs").parquet(s"$out/budget/docs")
         .select(col("doc_id"), col("sort_key"), col("n_tokens"))
@@ -2980,20 +2891,11 @@ object SparkEntry {
       // partials; rank selection over the merged histogram must equal
       // the batch exact-quantile truth (g_exact_quantiles' oracle
       // verbatim). Cross-batch merge/replay/fold are QuantileStreamSpec's.
-      import org.apache.spark.sql.streaming.Trigger
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val out = java.nio.file.Files.createTempDirectory("graft_q_stream_quant_")
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxBytesPerTrigger", streamTriggerBytes(s).toString)
-        .parquet(dir)
+      val out = scratchDir("q_stream_quant")
+      val src = stream(s, dir, "documents")
         .select(col("lang"), col("n_chars"))
-      withStreamParts(s, dir, "documents.parquet") {
-        val q = graft.streaming.StreamingOps
-          .quantileStream(src, s"$out/hist", s"$out/ckpt")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      drain(s, dir, "documents")(graft.streaming.StreamingOps
+        .quantileStream(src, s"$out/hist", s"$out/ckpt"))
       graft.streaming.StreamingOps
         .readQuantiles(s, s"$out/hist", ps = Seq(0.25, 0.5, 0.75))
         .orderBy(col("lang"))
@@ -3005,20 +2907,11 @@ object SparkEntry {
       // the vocabulary fits the tracked slots (g_sketch_topk's oracle
       // verbatim — the streamed state merges to the batch sketch).
       // Cross-batch merge/replay/fold semantics are TopkStreamSpec's job.
-      import org.apache.spark.sql.streaming.Trigger
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val out = java.nio.file.Files.createTempDirectory("graft_q_stream_topk_")
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxBytesPerTrigger", streamTriggerBytes(s).toString)
-        .parquet(dir)
+      val out = scratchDir("q_stream_topk")
+      val src = stream(s, dir, "documents")
         .select(col("text"))
-      withStreamParts(s, dir, "documents.parquet") {
-        val q = graft.streaming.StreamingOps
-          .topkStream(src, s"$out/topk", s"$out/ckpt", maxTracked = 1024)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      drain(s, dir, "documents")(graft.streaming.StreamingOps
+        .topkStream(src, s"$out/topk", s"$out/ckpt", maxTracked = 1024))
       graft.streaming.StreamingOps.readTopK(s, s"$out/topk", k = 10)
     },
 
@@ -3030,23 +2923,14 @@ object SparkEntry {
       // must equal brute force — the g_sim_ivf_indexed losslessness
       // contract extended over the streaming landing. Cross-batch
       // replay/fold semantics are StreamingIvfSpec's job.
-      import org.apache.spark.sql.streaming.Trigger
       val e = Tables.embeddings(s, dir)
       val qv = e.filter(col("vec_id") === 0)
         .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
       val centroids = SimilarityOps.ivfCentroids(e, k = 16, nIters = 2)
-      val out = java.nio.file.Files.createTempDirectory("graft_q_stream_ivf_")
-      val schema = s.read.parquet(s"$dir/embeddings.parquet").schema
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .option("maxBytesPerTrigger", streamTriggerBytes(s).toString)
-        .parquet(dir)
-      withStreamParts(s, dir, "embeddings.parquet") {
-        val q = graft.streaming.StreamingOps
-          .ivfIndexStream(src, centroids, s"$out/index", s"$out/ckpt")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      val out = scratchDir("q_stream_ivf")
+      val src = stream(s, dir, "embeddings")
+      drain(s, dir, "embeddings")(graft.streaming.StreamingOps
+        .ivfIndexStream(src, centroids, s"$out/index", s"$out/ckpt"))
       SimilarityOps.ivfTopKIndexed(s, s"$out/index", centroids, qv, 20, nProbe = 16)
     },
 
@@ -3057,22 +2941,13 @@ object SparkEntry {
       // losslessness contract extended over the streaming landing (shares
       // its oracle). Multi-batch fold/replay/compaction semantics are
       // KnnStreamSpec's job.
-      import org.apache.spark.sql.streaming.Trigger
       val e = Tables.embeddings(s, dir)
       val centroids = SimilarityOps.ivfCentroids(e, k = 16, nIters = 2)
-      val out = java.nio.file.Files.createTempDirectory("graft_q_stream_knn_")
-      val schema = s.read.parquet(s"$dir/embeddings.parquet").schema
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .option("maxBytesPerTrigger", streamTriggerBytes(s).toString)
-        .parquet(dir)
-      withStreamParts(s, dir, "embeddings.parquet") {
-        val q = graft.streaming.StreamingOps
-          .knnGraphStream(src, centroids, k = 5,
-            nProbe = if (oracleScale(dir)) 16 else 4, s"$out/graph", s"$out/ckpt")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      val out = scratchDir("q_stream_knn")
+      val src = stream(s, dir, "embeddings")
+      drain(s, dir, "embeddings")(graft.streaming.StreamingOps
+        .knnGraphStream(src, centroids, k = 5,
+          nProbe = if (oracleScale(dir)) 16 else 4, s"$out/graph", s"$out/ckpt"))
       graft.streaming.StreamingOps.readKnnGraph(s, s"$out/graph")
         .orderBy(col("vec_id"), col("rank"))
     },
@@ -3084,23 +2959,14 @@ object SparkEntry {
       // g_sim_pq_indexed's losslessness contract over the streaming
       // landing (shares g_sim_pq's oracle). Cross-batch replay/fold/drift
       // semantics are PqStreamSpec's job.
-      import org.apache.spark.sql.streaming.Trigger
       val e = Tables.embeddings(s, dir)
       val qv = e.filter(col("vec_id") === 0)
         .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-      val out = java.nio.file.Files.createTempDirectory("graft_q_stream_pq_")
-      val schema = s.read.parquet(s"$dir/embeddings.parquet").schema
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .option("maxBytesPerTrigger", streamTriggerBytes(s).toString)
-        .parquet(dir)
-      withStreamParts(s, dir, "embeddings.parquet") {
-        val q = graft.streaming.StreamingOps
-          .pqIndexStream(src, fixtureCentroids(64), fixturePqCodebooks(64),
-            s"$out/index", s"$out/ckpt")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      val out = scratchDir("q_stream_pq")
+      val src = stream(s, dir, "embeddings")
+      drain(s, dir, "embeddings")(graft.streaming.StreamingOps
+        .pqIndexStream(src, fixtureCentroids(64), fixturePqCodebooks(64),
+          s"$out/index", s"$out/ckpt"))
       SimilarityOps.pqTopKIndexed(s, s"$out/index", fixtureCentroids(64),
         fixturePqCodebooks(64), qv, k = 20, nProbe = KmFixtureK)
     },
@@ -3112,20 +2978,11 @@ object SparkEntry {
       // g_chunk_store's end-to-end round-trip contract over the
       // streaming landing. Cross-batch novel-only dedup, replay, drift
       // and compaction are ChunkStoreStreamSpec's job.
-      import org.apache.spark.sql.streaming.Trigger
-      val out = java.nio.file.Files.createTempDirectory("graft_q_stream_store_")
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxBytesPerTrigger", streamTriggerBytes(s).toString)
-        .parquet(dir)
-      withStreamParts(s, dir, "documents.parquet") {
-        val q = graft.streaming.StreamingOps
-          .chunkStoreIngest(MultimodalOps.mediaFromDocuments(src),
-            s"$out/store", s"$out/ckpt")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      val out = scratchDir("q_stream_store")
+      val src = stream(s, dir, "documents")
+      drain(s, dir, "documents")(graft.streaming.StreamingOps
+        .chunkStoreIngest(MultimodalOps.mediaFromDocuments(src),
+          s"$out/store", s"$out/ckpt"))
       MultimodalOps.readChunkStore(s, s"$out/store")
         .select(col("media_id"), md5(col("content")).as("content_md5"))
         .orderBy(col("media_id"))
@@ -3139,21 +2996,12 @@ object SparkEntry {
       // (banding is deterministic, so a streamed corpus signs identically
       // to a batch-built one). Cross-batch replay/fold semantics are
       // StreamingLshSpec's job.
-      import org.apache.spark.sql.streaming.Trigger
       val docs = Tables.documents(s, dir)
-      val out = java.nio.file.Files.createTempDirectory("graft_q_stream_lsh_")
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxBytesPerTrigger", streamTriggerBytes(s).toString)
-        .parquet(dir)
+      val out = scratchDir("q_stream_lsh")
+      val src = stream(s, dir, "documents")
         .filter(col("doc_id") % 5 =!= 0) // the corpus split streams in
-      withStreamParts(s, dir, "documents.parquet") {
-        val q = graft.streaming.StreamingOps
-          .lshIndexStream(src, s"$out/lshidx", s"$out/ckpt", nBuckets = 16)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      drain(s, dir, "documents")(graft.streaming.StreamingOps
+        .lshIndexStream(src, s"$out/lshidx", s"$out/ckpt", nBuckets = 16))
       val corpus = docs.filter(col("doc_id") % 5 =!= 0)
       DedupOps.minHashNearDupsIndexed(
           docs.filter(col("doc_id") % 5 === 0), corpus, s"$out/lshidx",
@@ -3169,21 +3017,12 @@ object SparkEntry {
       // deterministic and the probe final-merges the partials, so a
       // streamed corpus counts identically to a batch-signed one).
       // Cross-batch replay/fold semantics are SpanIndexSpec's job.
-      import org.apache.spark.sql.streaming.Trigger
       val docs = Tables.documents(s, dir)
-      val out = java.nio.file.Files.createTempDirectory("graft_q_stream_spans_")
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxBytesPerTrigger", streamTriggerBytes(s).toString)
-        .parquet(dir)
+      val out = scratchDir("q_stream_spans")
+      val src = stream(s, dir, "documents")
         .filter(col("doc_id") % 5 =!= 0) // the corpus split streams in
-      withStreamParts(s, dir, "documents.parquet") {
-        val q = graft.streaming.StreamingOps
-          .shingleIndexStream(src, s"$out/spanidx", s"$out/ckpt", k = 3, nPb = 8, hashed = false)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      drain(s, dir, "documents")(graft.streaming.StreamingOps
+        .shingleIndexStream(src, s"$out/spanidx", s"$out/ckpt", k = 3, nPb = 8, hashed = false))
       TextOps.duplicatedSpansAgainst(docs.filter(col("doc_id") % 5 === 0),
           s"$out/spanidx", k = 3, minSpanTokens = 8, hashed = false)
         .orderBy(col("doc_id"), col("start_tok"))
@@ -3196,22 +3035,13 @@ object SparkEntry {
       // must equal the recursive-CTE component truth over the corpus
       // split's exact-Jaccard pairs. Multi-batch/replay/lineage semantics
       // are ClusterStreamSpec's job.
-      import org.apache.spark.sql.streaming.Trigger
-      val out = java.nio.file.Files.createTempDirectory("graft_q_stream_cc_")
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxBytesPerTrigger", streamTriggerBytes(s).toString)
-        .parquet(dir)
+      val out = scratchDir("q_stream_cc")
+      val src = stream(s, dir, "documents")
         .filter(col("doc_id") % 5 =!= 0)
         .select(col("doc_id"), col("text"))
-      withStreamParts(s, dir, "documents.parquet") {
-        val q = graft.streaming.StreamingOps
-          .clusterIngest(src, s"$out/loop", s"$out/ckpt", nBuckets = 8,
-            nDocBuckets = 8) // both bucket counts sized to the fixture sf
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      drain(s, dir, "documents")(graft.streaming.StreamingOps
+        .clusterIngest(src, s"$out/loop", s"$out/ckpt", nBuckets = 8,
+          nDocBuckets = 8)) // both bucket counts sized to the fixture sf
       graft.streaming.StreamingOps.currentAssignment(s, s"$out/loop")
         .orderBy(col("doc_id"))
     },
@@ -3223,22 +3053,13 @@ object SparkEntry {
       // plain incremental-exact truth (no false negatives + exact confirm
       // — g_dedup_incremental_exact's oracle verbatim). Multi-batch
       // merge/replay/fold semantics are BloomStreamSpec's job.
-      import org.apache.spark.sql.streaming.Trigger
       val docs = Tables.documents(s, dir)
-      val out = java.nio.file.Files.createTempDirectory("graft_q_stream_bloom_")
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxBytesPerTrigger", streamTriggerBytes(s).toString)
-        .parquet(dir)
+      val out = scratchDir("q_stream_bloom")
+      val src = stream(s, dir, "documents")
         .filter(col("doc_id") % 5 =!= 0) // the corpus split streams in
-      withStreamParts(s, dir, "documents.parquet") {
-        val q = graft.streaming.StreamingOps
-          .bloomIndexStream(src, s"$out/bloomidx", s"$out/ckpt",
-            expectedItems = 1L << 10, fpp = 0.05)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      drain(s, dir, "documents")(graft.streaming.StreamingOps
+        .bloomIndexStream(src, s"$out/bloomidx", s"$out/ckpt",
+          expectedItems = 1L << 10, fpp = 0.05))
       val sketch = graft.streaming.StreamingOps.readMergedBloom(s, s"$out/bloomidx")
       DedupOps.incrementalExactBloom(
           docs.filter(col("doc_id") % 5 === 0),
@@ -3697,7 +3518,7 @@ object SparkEntry {
       // nBuckets sized to the SF (16 -> 64 directories here; a 100 TB
       // corpus would keep the 64-bucket default = 256 directories)
       val docs = Tables.documents(s, dir)
-      val out = java.nio.file.Files.createTempDirectory("graft_mh_index_")
+      val out = scratchDir("mh_index")
       val path = s"$out/mhidx"
       val corpus = docs.filter(col("doc_id") % 5 =!= 0)
       DedupOps.writeMinHashIndex(corpus, path, nBuckets = 16)
@@ -3839,19 +3660,10 @@ object SparkEntry {
       // the batch Lloyd step exactly (g_kmeans_step's oracle verbatim).
       // Multi-batch sequential semantics, replay idempotence, drifted-seed
       // refusal and state compaction are KmeansStreamSpec's job.
-      import org.apache.spark.sql.streaming.Trigger
-      val out = java.nio.file.Files.createTempDirectory("graft_q_stream_km_")
-      val schema = s.read.parquet(s"$dir/embeddings.parquet").schema
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .option("maxBytesPerTrigger", streamTriggerBytes(s).toString)
-        .parquet(dir)
-      withStreamParts(s, dir, "embeddings.parquet") {
-        val q = graft.streaming.StreamingOps
-          .kmeansStream(src, s"$out/kmstate", s"$out/ckpt", seed = fixtureCentroids(64))
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      val out = scratchDir("q_stream_km")
+      val src = stream(s, dir, "embeddings")
+      drain(s, dir, "embeddings")(graft.streaming.StreamingOps
+        .kmeansStream(src, s"$out/kmstate", s"$out/ckpt", seed = fixtureCentroids(64)))
       graft.streaming.StreamingOps.readStreamKmeans(s, s"$out/kmstate")
         .orderBy(col("cell"), col("dim"))
     },
@@ -3901,7 +3713,7 @@ object SparkEntry {
       // payload from its recipe, and prove the round trip byte-exact by
       // digest — the oracle hashes the ORIGINALS, so a green row
       // certifies write + store-dedup + join + ordered concat end to end.
-      val path = java.nio.file.Files.createTempDirectory("graft_chunkstore_").toString + "/store"
+      val path = scratchDir("chunkstore") + "/store"
       MultimodalOps.writeChunkStore(
         MultimodalOps.mediaFromDocuments(Tables.documents(s, dir)), path)
       MultimodalOps.readChunkStore(s, path)
@@ -3973,7 +3785,7 @@ object SparkEntry {
       // duplicatedSpans over the union restricted to increment docs, which
       // is exactly what the oracle computes
       val docs = Tables.documents(s, dir)
-      val out = java.nio.file.Files.createTempDirectory("graft_span_index_")
+      val out = scratchDir("span_index")
       val path = s"$out/spanidx"
       TextOps.writeShingleIndex(docs.filter(col("doc_id") % 5 =!= 0), path,
         k = 3, nPb = 8, hashed = false)
@@ -4131,7 +3943,7 @@ object SparkEntry {
       val e = Tables.embeddings(s, dir)
       val q = e.filter(col("vec_id") === 0)
         .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-      val path = java.nio.file.Files.createTempDirectory("graft_sq8idx_").toString + "/idx"
+      val path = scratchDir("sq8idx") + "/idx"
       SimilarityOps.writeSq8Index(e, fixtureCentroids(64), path)
       SimilarityOps.sq8TopKIndexed(s, path, fixtureCentroids(64), e, q,
         k = 20, nProbe = KmFixtureK, refine = 4)
@@ -4144,22 +3956,13 @@ object SparkEntry {
       // — g_sim_sq8_indexed's losslessness contract over the streaming
       // landing (shares g_sim_sq8's oracle). Cross-batch replay/fold
       // semantics are Sq8StreamSpec's job.
-      import org.apache.spark.sql.streaming.Trigger
       val e = Tables.embeddings(s, dir)
       val qv = e.filter(col("vec_id") === 0)
         .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-      val out = java.nio.file.Files.createTempDirectory("graft_q_stream_sq8_")
-      val schema = s.read.parquet(s"$dir/embeddings.parquet").schema
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .option("maxBytesPerTrigger", streamTriggerBytes(s).toString)
-        .parquet(dir)
-      withStreamParts(s, dir, "embeddings.parquet") {
-        val q = graft.streaming.StreamingOps
-          .sq8IndexStream(src, fixtureCentroids(64), s"$out/index", s"$out/ckpt")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      val out = scratchDir("q_stream_sq8")
+      val src = stream(s, dir, "embeddings")
+      drain(s, dir, "embeddings")(graft.streaming.StreamingOps
+        .sq8IndexStream(src, fixtureCentroids(64), s"$out/index", s"$out/ckpt"))
       SimilarityOps.sq8TopKIndexed(s, s"$out/index", fixtureCentroids(64), e, qv,
         k = 20, nProbe = KmFixtureK, refine = 4)
     },
@@ -4209,7 +4012,7 @@ object SparkEntry {
       // from the _docs frame it already joins (so the constants track a
       // streamed index). Contract: bit-equal to the full-scan g_bm25
       // (shared oracle hash).
-      val path = java.nio.file.Files.createTempDirectory("graft_postings_").toString + "/idx"
+      val path = scratchDir("postings") + "/idx"
       val nPt = GraftConf.int(s, GraftConf.PostingsNPt, 16)
       RetrievalOps.writePostingsIndex(Tables.documents(s, dir), path, nPt)
       RetrievalOps.bm25TopKIndexed(s, path, Bm25Query,
@@ -4227,20 +4030,11 @@ object SparkEntry {
       // g_bm25_indexed losslessness contract over the streaming landing
       // plus the fold. Cross-batch replay/lineage/crash-window semantics
       // are PostingsStreamSpec's job.
-      import org.apache.spark.sql.streaming.Trigger
-      val out = java.nio.file.Files.createTempDirectory("graft_q_stream_postings_")
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxBytesPerTrigger", streamTriggerBytes(s).toString)
-        .parquet(dir)
-      withStreamParts(s, dir, "documents.parquet") {
-        val q = graft.streaming.StreamingOps
-          .postingsStream(src, s"$out/idx", s"$out/ckpt",
-            nPt = GraftConf.int(s, GraftConf.PostingsNPt, 16))
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      val out = scratchDir("q_stream_postings")
+      val src = stream(s, dir, "documents")
+      drain(s, dir, "documents")(graft.streaming.StreamingOps
+        .postingsStream(src, s"$out/idx", s"$out/ckpt",
+          nPt = GraftConf.int(s, GraftConf.PostingsNPt, 16)))
       graft.streaming.StreamingOps.compactPostingsIndex(s, s"$out/idx")
       RetrievalOps.bm25TopKIndexed(s, s"$out/idx", Bm25Query,
         k = GraftConf.int(s, GraftConf.RetrievalK, 10),
@@ -4331,7 +4125,7 @@ object SparkEntry {
       val e = Tables.embeddings(s, dir)
       val q = e.filter(col("vec_id") === 0)
         .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-      val path = java.nio.file.Files.createTempDirectory("graft_pqidx_").toString + "/idx"
+      val path = scratchDir("pqidx") + "/idx"
       SimilarityOps.writePqIndex(e, fixtureCentroids(64), fixturePqCodebooks(64), path)
       SimilarityOps.pqTopKIndexed(s, path, fixtureCentroids(64), fixturePqCodebooks(64),
         q, k = 20, nProbe = KmFixtureK)
@@ -4390,7 +4184,7 @@ object SparkEntry {
       val q = e.filter(col("vec_id") === 0)
         .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
       val centroids = SimilarityOps.ivfCentroids(e, k = 16, nIters = 2)
-      val path = java.nio.file.Files.createTempDirectory("graft_ivf_idx_").toString + "/index"
+      val path = scratchDir("ivf_idx") + "/index"
       SimilarityOps.writeIvfIndex(e, centroids, path)
       SimilarityOps.ivfTopKIndexed(s, path, centroids, q, 20, nProbe = 16)
     },
@@ -4561,19 +4355,10 @@ object SparkEntry {
       // an AvailableNow run of knCountsStream + the fold serve the
       // words, and seed/cap/EM run vocabulary-sized on top. Must be
       // bit-equal to the batch g_unigram_step (shared oracle hash).
-      import org.apache.spark.sql.streaming.Trigger
-      val out = java.nio.file.Files.createTempDirectory("graft_q_stream_unigram_")
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxBytesPerTrigger", streamTriggerBytes(s).toString)
-        .parquet(dir)
-      withStreamParts(s, dir, "documents.parquet") {
-        val q = graft.streaming.StreamingOps
-          .knCountsStream(src, s"$out/idx", s"$out/ckpt")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      val out = scratchDir("q_stream_unigram")
+      val src = stream(s, dir, "documents")
+      drain(s, dir, "documents")(graft.streaming.StreamingOps
+        .knCountsStream(src, s"$out/idx", s"$out/ckpt"))
       graft.streaming.StreamingOps.compactKnCounts(s, s"$out/idx")
       val words = graft.streaming.StreamingOps.readKnCounts(s, s"$out/idx")._1
         .filter(length(col("w")) > 0) // bpeWords' empty-token filter
@@ -4737,20 +4522,11 @@ object SparkEntry {
       // function of the corpus (the UniMax-manifest argument), so the
       // maintenance contract is periodic O(corpus-features) retrain;
       // staleness/replay/lineage/drift are LogitSpec's job.
-      import org.apache.spark.sql.streaming.Trigger
-      val out = java.nio.file.Files.createTempDirectory("graft_q_stream_logit_")
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxBytesPerTrigger", streamTriggerBytes(s).toString)
-        .parquet(dir)
-      withStreamParts(s, dir, "documents.parquet") {
-        val q = graft.streaming.StreamingOps
-          .logitStream(src, s"$out/idx", s"$out/ckpt",
-            steps = GraftConf.int(s, GraftConf.LogitSteps, GraftConf.LogitStepsDefault))
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      val out = scratchDir("q_stream_logit")
+      val src = stream(s, dir, "documents")
+      drain(s, dir, "documents")(graft.streaming.StreamingOps
+        .logitStream(src, s"$out/idx", s"$out/ckpt",
+          steps = GraftConf.int(s, GraftConf.LogitSteps, GraftConf.LogitStepsDefault)))
       graft.streaming.StreamingOps.readLogitScores(s, s"$out/idx")
         .orderBy(col("doc_id"))
     },
@@ -4789,20 +4565,11 @@ object SparkEntry {
       // to the batch g_kn_score (shared oracle hash) — the <unk> cut
       // applies at model-read time, so the stream never needs to know
       // minCount. Replay/lineage/fold semantics are KnStreamSpec's job.
-      import org.apache.spark.sql.streaming.Trigger
-      val out = java.nio.file.Files.createTempDirectory("graft_q_stream_kn_")
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxBytesPerTrigger", streamTriggerBytes(s).toString)
-        .parquet(dir)
+      val out = scratchDir("q_stream_kn")
+      val src = stream(s, dir, "documents")
         .filter(col("doc_id") % 2 === 0)
-      withStreamParts(s, dir, "documents.parquet") {
-        val q = graft.streaming.StreamingOps
-          .knCountsStream(src, s"$out/idx", s"$out/ckpt")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      drain(s, dir, "documents")(graft.streaming.StreamingOps
+        .knCountsStream(src, s"$out/idx", s"$out/ckpt"))
       graft.streaming.StreamingOps.compactKnCounts(s, s"$out/idx")
       val (uni, pairs) = graft.streaming.StreamingOps.readKnCounts(s, s"$out/idx")
       TextOps.knScore(
@@ -4832,21 +4599,12 @@ object SparkEntry {
       // be bit-equal to the batch g_kn3_score (shared oracle hash) —
       // the bigram-continuation level derives from the trigram types at
       // read time, so the stream maintains exactly two frames.
-      import org.apache.spark.sql.streaming.Trigger
-      val out = java.nio.file.Files.createTempDirectory("graft_q_stream_kn3_")
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxBytesPerTrigger", streamTriggerBytes(s).toString)
-        .parquet(dir)
+      val out = scratchDir("q_stream_kn3")
+      val src = stream(s, dir, "documents")
         .filter(col("doc_id") % 2 === 0)
-      withStreamParts(s, dir, "documents.parquet") {
-        val q = graft.streaming.StreamingOps
-          .kn3CountsStream(src, s"$out/idx", s"$out/ckpt")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        graft.streaming.StreamingOps.compactKn3Counts(s, s"$out/idx")
-      }
+      drain(s, dir, "documents")(graft.streaming.StreamingOps
+        .kn3CountsStream(src, s"$out/idx", s"$out/ckpt"))
+      graft.streaming.StreamingOps.compactKn3Counts(s, s"$out/idx")
       val (uni, tri) = graft.streaming.StreamingOps.readKn3Counts(s, s"$out/idx")
       TextOps.kn3Score(
           Tables.documents(s, dir).filter(col("doc_id") % 2 === 1), uni, tri,
@@ -4937,22 +4695,13 @@ object SparkEntry {
       // (shared oracle hash). Pairing is a global function of each
       // domain's ranking, so the scheduleBatch periodic-re-derive
       // contract applies.
-      import org.apache.spark.sql.streaming.Trigger
-      val out = java.nio.file.Files.createTempDirectory("graft_q_stream_pref_")
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxBytesPerTrigger", streamTriggerBytes(s).toString)
-        .parquet(dir)
+      val out = scratchDir("q_stream_pref")
+      val src = stream(s, dir, "documents")
         .select(col("doc_id"), col("source"),
           floor(graft.functions.TextFns.qualityScore(col("text")) * lit(1e4))
             .cast("long").as("score"))
-      withStreamParts(s, dir, "documents.parquet") {
-        val q = graft.streaming.StreamingOps
-          .prefPairsStream(src, s"$out/idx", s"$out/ckpt")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      drain(s, dir, "documents")(graft.streaming.StreamingOps
+        .prefPairsStream(src, s"$out/idx", s"$out/ckpt"))
       graft.streaming.StreamingOps.readPrefPairs(s, s"$out/idx")
         .orderBy(col("source"), col("pair_rank"))
     },
@@ -5075,20 +4824,11 @@ object SparkEntry {
       // bit-equal to the batch g_glm_poisson (shared oracle hash). The
       // link id is pinned in _meta.json so a logit sink and a GLM sink
       // can never silently continue each other.
-      import org.apache.spark.sql.streaming.Trigger
-      val out = java.nio.file.Files.createTempDirectory("graft_q_stream_glm_")
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxBytesPerTrigger", streamTriggerBytes(s).toString)
-        .parquet(dir)
-      withStreamParts(s, dir, "documents.parquet") {
-        val q = graft.streaming.StreamingOps
-          .glmStream(src, s"$out/idx", s"$out/ckpt",
-            steps = GraftConf.int(s, GraftConf.LogitSteps, GraftConf.LogitStepsDefault))
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      val out = scratchDir("q_stream_glm")
+      val src = stream(s, dir, "documents")
+      drain(s, dir, "documents")(graft.streaming.StreamingOps
+        .glmStream(src, s"$out/idx", s"$out/ckpt",
+          steps = GraftConf.int(s, GraftConf.LogitSteps, GraftConf.LogitStepsDefault)))
       graft.streaming.StreamingOps.readGlmScores(s, s"$out/idx")
         .orderBy(col("doc_id"))
     },
@@ -5099,20 +4839,11 @@ object SparkEntry {
       // loss -> EG weights on refresh — the served mixture must be
       // bit-equal to the batch g_doremi_weights (shared oracle hash).
       // lrDen and eta pin by exact IEEE bits in _meta.json.
-      import org.apache.spark.sql.streaming.Trigger
-      val out = java.nio.file.Files.createTempDirectory("graft_q_stream_doremi_")
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxBytesPerTrigger", streamTriggerBytes(s).toString)
-        .parquet(dir)
-      withStreamParts(s, dir, "documents.parquet") {
-        val q = graft.streaming.StreamingOps
-          .doremiStream(src, s"$out/idx", s"$out/ckpt",
-            steps = GraftConf.int(s, GraftConf.LogitSteps, GraftConf.LogitStepsDefault))
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      val out = scratchDir("q_stream_doremi")
+      val src = stream(s, dir, "documents")
+      drain(s, dir, "documents")(graft.streaming.StreamingOps
+        .doremiStream(src, s"$out/idx", s"$out/ckpt",
+          steps = GraftConf.int(s, GraftConf.LogitSteps, GraftConf.LogitStepsDefault)))
       graft.streaming.StreamingOps.readDoremiWeights(s, s"$out/idx")
         .orderBy(col("source"))
     },
@@ -5124,20 +4855,11 @@ object SparkEntry {
       // top-quarter keep on refresh — the served rows must be bit-equal
       // to the batch g_bt_rank (shared oracle hash). lrDen and keepFrac
       // pin by exact IEEE bits in _meta.json.
-      import org.apache.spark.sql.streaming.Trigger
-      val out = java.nio.file.Files.createTempDirectory("graft_q_stream_bt_")
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxBytesPerTrigger", streamTriggerBytes(s).toString)
-        .parquet(dir)
-      withStreamParts(s, dir, "documents.parquet") {
-        val q = graft.streaming.StreamingOps
-          .btRankStream(src, s"$out/idx", s"$out/ckpt",
-            steps = GraftConf.int(s, GraftConf.LogitSteps, GraftConf.LogitStepsDefault))
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      val out = scratchDir("q_stream_bt")
+      val src = stream(s, dir, "documents")
+      drain(s, dir, "documents")(graft.streaming.StreamingOps
+        .btRankStream(src, s"$out/idx", s"$out/ckpt",
+          steps = GraftConf.int(s, GraftConf.LogitSteps, GraftConf.LogitStepsDefault)))
       graft.streaming.StreamingOps.readBtRank(s, s"$out/idx")
         .orderBy(col("doc_id"))
     },
@@ -5198,20 +4920,11 @@ object SparkEntry {
       // compactNbCounts folds both roots, and classifying the odd half
       // against the folded model must be bit-equal to the batch
       // g_nb_langid (shared oracle hash).
-      import org.apache.spark.sql.streaming.Trigger
-      val out = java.nio.file.Files.createTempDirectory("graft_q_stream_nb_")
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxBytesPerTrigger", streamTriggerBytes(s).toString)
-        .parquet(dir)
+      val out = scratchDir("q_stream_nb")
+      val src = stream(s, dir, "documents")
         .filter(col("doc_id") % 2 === 0)
-      withStreamParts(s, dir, "documents.parquet") {
-        val q = graft.streaming.StreamingOps
-          .nbCountsStream(src, s"$out/idx", s"$out/ckpt")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      drain(s, dir, "documents")(graft.streaming.StreamingOps
+        .nbCountsStream(src, s"$out/idx", s"$out/ckpt"))
       graft.streaming.StreamingOps.compactNbCounts(s, s"$out/idx")
       val (ncw, cls) = graft.streaming.StreamingOps.readNbCounts(s, s"$out/idx")
       TextOps.nbScore(
@@ -5591,7 +5304,7 @@ object SparkEntry {
       // Contract: bit-equal to the full-scan g_phrase (shared oracle
       // hash); the ONE index serves both BM25 (positions pruned away)
       // and phrases.
-      val path = java.nio.file.Files.createTempDirectory("graft_posidx_").toString + "/idx"
+      val path = scratchDir("posidx") + "/idx"
       RetrievalOps.writePostingsIndex(Tables.documents(s, dir), path,
         GraftConf.int(s, GraftConf.PostingsNPt, 16))
       RetrievalOps.phraseMatchesIndexed(s, path, Seq("order", "order"))
@@ -5638,7 +5351,7 @@ object SparkEntry {
       // ONE positional index — query cost is posting-list-sized.
       // Contract: bit-equal to the full-scan g_bm25_phrase (shared
       // oracle hash).
-      val path = java.nio.file.Files.createTempDirectory("graft_servelex_").toString + "/idx"
+      val path = scratchDir("servelex") + "/idx"
       RetrievalOps.writePostingsIndex(Tables.documents(s, dir), path,
         GraftConf.int(s, GraftConf.PostingsNPt, 16))
       RetrievalOps.bm25PhraseTopKIndexed(s, path, Bm25Query, Seq("order", "order"),
@@ -5710,7 +5423,7 @@ object SparkEntry {
       // truth — a green row certifies the banded join lossless at the
       // radius AND the persisted layout read back bit-exact.
       val media = MultimodalOps.mediaFromDocuments(Tables.documents(s, dir))
-      val out = java.nio.file.Files.createTempDirectory("graft_phash_idx_")
+      val out = scratchDir("phash_idx")
       val nb = GraftConf.int(s, GraftConf.PhashBuckets, 16)
       val (fps, k) = (GraftConf.int(s, GraftConf.PhashFps, 4),
         GraftConf.int(s, GraftConf.PhashK, 8))
@@ -5735,25 +5448,16 @@ object SparkEntry {
       // deterministic, so a streamed corpus indexes identically to a
       // batch-built one). Cross-batch replay/fold semantics are the
       // shared versioned-sink specs' job.
-      import org.apache.spark.sql.streaming.Trigger
-      val out = java.nio.file.Files.createTempDirectory("graft_q_stream_phash_")
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxBytesPerTrigger", streamTriggerBytes(s).toString)
-        .parquet(dir)
+      val out = scratchDir("q_stream_phash")
+      val src = stream(s, dir, "documents")
         .filter(col("doc_id") % 5 =!= 0)
         .select(col("doc_id").as("media_id"),
           to_binary(col("text"), lit("utf-8")).as("content"))
       val nb = GraftConf.int(s, GraftConf.PhashBuckets, 16)
-      withStreamParts(s, dir, "documents.parquet") {
-        val q = graft.streaming.StreamingOps
-          .phashIndexStream(src, s"$out/idx", s"$out/ckpt",
-            fps = GraftConf.int(s, GraftConf.PhashFps, 4),
-            k = GraftConf.int(s, GraftConf.PhashK, 8), nBuckets = nb)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      drain(s, dir, "documents")(graft.streaming.StreamingOps
+        .phashIndexStream(src, s"$out/idx", s"$out/ckpt",
+          fps = GraftConf.int(s, GraftConf.PhashFps, 4),
+          k = GraftConf.int(s, GraftConf.PhashK, 8), nBuckets = nb))
       val media = MultimodalOps.mediaFromDocuments(Tables.documents(s, dir))
       MultimodalOps.mediaPhashDupsIndexed(
           media.filter(col("media_id") % 5 === 0), s"$out/idx",
@@ -5801,7 +5505,7 @@ object SparkEntry {
       val media = MultimodalOps.mediaFromDocuments(docs)
       val corpus = media.filter(col("media_id") % 5 =!= 0)
       val inc = media.filter(col("media_id") % 5 === 0)
-      val out = java.nio.file.Files.createTempDirectory("graft_phash_cc_incr_")
+      val out = scratchDir("phash_cc_incr")
       val nb = GraftConf.int(s, GraftConf.PhashBuckets, 16)
       val (fps, k) = (GraftConf.int(s, GraftConf.PhashFps, 4),
         GraftConf.int(s, GraftConf.PhashK, 8))
@@ -5856,20 +5560,11 @@ object SparkEntry {
       // corpus — g_media_card's oracle verbatim ("one truth, one hash").
       // Cross-batch pair discovery / replay / fold are
       // MediaCardStreamSpec's job.
-      import org.apache.spark.sql.streaming.Trigger
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val out = java.nio.file.Files.createTempDirectory("graft_q_stream_mcard_")
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxBytesPerTrigger", streamTriggerBytes(s).toString)
-        .parquet(dir)
+      val out = scratchDir("q_stream_mcard")
+      val src = stream(s, dir, "documents")
         .select(col("doc_id"), col("source"), col("text"))
-      withStreamParts(s, dir, "documents.parquet") {
-        val q = graft.streaming.StreamingOps
-          .mediaCardStream(src, s"$out/card", s"$out/ckpt", nBuckets = 16)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      drain(s, dir, "documents")(graft.streaming.StreamingOps
+        .mediaCardStream(src, s"$out/card", s"$out/ckpt", nBuckets = 16))
       graft.streaming.StreamingOps.readMediaCard(s, s"$out/card")
         .orderBy(col("source"))
     },
@@ -5918,7 +5613,7 @@ object SparkEntry {
       type DF = org.apache.spark.sql.DataFrame
       val (docs, ids, kept) = pre(0).asInstanceOf[(DF, DF, DF)]
       val dead = ids.select(col("doc_id"))
-      val out = java.nio.file.Files.createTempDirectory("graft_forget_").toString
+      val out = scratchDir("forget")
       // ONE action per artifact: the readback count and the two-sided
       // rebuild diff ride one union job (this row runs ~40 small jobs;
       // per-job scheduling + AQE latency dominates its wall time, so the
@@ -6160,8 +5855,8 @@ object SparkEntry {
       val ids = docs.filter(col("doc_id") % 97 === 3).select(col("doc_id"))
       val recrawl = docs
         .select((col("doc_id") + 10000000L).as("doc_id"), col("text"))
-      val out = java.nio.file.Files.createTempDirectory("graft_fg_cur_").toString
-      val out2 = java.nio.file.Files.createTempDirectory("graft_fg_cur2_").toString
+      val out = scratchDir("fg_cur")
+      val out2 = scratchDir("fg_cur2")
       def land(root: String, b0: org.apache.spark.sql.DataFrame,
           b1: org.apache.spark.sql.DataFrame): Unit = {
         StreamingOps.curatedBatch(b0, 0L, root, chunkSize = 8, nPb = 16)
@@ -6223,7 +5918,6 @@ object SparkEntry {
       // must equal a from-scratch rebuild over the remaining corpus
       // (audited at oracle SFs; bench SFs time the production shape —
       // n_diff = -1, the q_forget_everywhere protocol).
-      import org.apache.spark.sql.streaming.Trigger
       import graft.streaming.StreamingOps
       val full = Tables.documents(s, dir)
       val atOracle = oracleScale(dir)
@@ -6246,7 +5940,7 @@ object SparkEntry {
       type DF = org.apache.spark.sql.DataFrame
       val (docs, kept) = pre(0).asInstanceOf[(DF, DF)]
       val (emb, embKept) = pre(1).asInstanceOf[(DF, DF)]
-      val out = java.nio.file.Files.createTempDirectory("graft_sfa_").toString
+      val out = scratchDir("sfa")
       // the six artifact builds are independent write chains against
       // disjoint $out subtrees — overlap them (guide §2.6, operators.Par;
       // pool 6 = all chains in flight, A/B-measured vs 4 in r21)
@@ -6260,18 +5954,10 @@ object SparkEntry {
         () => MultimodalOps.writeChunkStore(MultimodalOps.mediaFromDocuments(docs),
           s"$out/cs"),
         () => SimilarityOps.writeSq8Index(emb, fixtureCentroids(64), s"$out/sq8"))
-      val docSchema = s.read.parquet(s"$dir/documents.parquet").schema
-      val docTombs = s.readStream.schema(docSchema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxBytesPerTrigger", streamTriggerBytes(s).toString)
-        .parquet(dir)
+      val docTombs = stream(s, dir, "documents")
         .filter(col("doc_id") % 97 === 3 &&
           (lit(atOracle) || col("doc_id") % 16 === 0))
-      val embSchema = s.read.parquet(s"$dir/embeddings.parquet").schema
-      val vecTombs = s.readStream.schema(embSchema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .option("maxBytesPerTrigger", streamTriggerBytes(s).toString)
-        .parquet(dir)
+      val vecTombs = stream(s, dir, "embeddings")
         .filter(col("vec_id") % 97 === 3 &&
           (lit(atOracle) || col("vec_id") % 32 === 0))
       // the two queues drain DISJOINT faces (doc artifacts vs the SQ8
@@ -6283,10 +5969,12 @@ object SparkEntry {
           postingsPath = Some(s"$out/pt"), shinglePath = Some(s"$out/sh"),
           chunkStorePath = Some(s"$out/cs"),
           nBuckets = 16, nPt = 16, spanK = 3, nPb = 16, phashBuckets = 16)
+        // not a drain: its conf toggle would retune the concurrent queue
         .trigger(Trigger.AvailableNow()).start()
       val q2 = StreamingOps.forgetStream(vecTombs, s"$out/ckpt2",
           sq8Path = Some(s"$out/sq8"), centroids = fixtureCentroids(64),
           idCol = "vec_id")
+        // not a drain: its conf toggle would retune the concurrent queue
         .trigger(Trigger.AvailableNow()).start()
       q1.awaitTermination()
       q2.awaitTermination()
@@ -6386,7 +6074,7 @@ object SparkEntry {
         if (oracleScale(dir)) allEmb
         else allEmb.filter(col("vec_id") % 32 === 0), reliable = false)
       val cents = fixtureCentroids(64)
-      val out = java.nio.file.Files.createTempDirectory("graft_fg_knn_").toString
+      val out = scratchDir("fg_knn")
       // the store chain (two lineage-ordered batches + the forget) and
       // the batch-truth rebuild are independent — overlap them (guide
       // §2.6); the truth is PINNED in its chain so the diff job below
@@ -6426,23 +6114,18 @@ object SparkEntry {
       // After the drain the index must equal a from-scratch rebuild over
       // the remaining corpus, row-for-row (n_diff pinned 0; the size from
       // the bands-per-doc invariant).
-      import org.apache.spark.sql.streaming.Trigger
       val docs = Tables.documents(s, dir)
-      val out = java.nio.file.Files.createTempDirectory("graft_q_stream_forget_")
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
+      val out = scratchDir("q_stream_forget")
+      val tombs = stream(s, dir, "documents").filter(col("doc_id") % 97 === 3)
       // the live-index chain (build -> drain the tombstone queue over it)
       // and the rebuild-truth chain touch disjoint roots — overlap them
       // (guide §2.6, operators.Par)
       graft.operators.Par.run(s, parallelism = 2)(
         () => {
           DedupOps.writeMinHashIndex(docs, s"$out/idx", nBuckets = 16)
-          val src = s.readStream.schema(schema)
-            .option("pathGlobFilter", "documents.parquet")
-            .option("maxBytesPerTrigger", streamTriggerBytes(s).toString)
-            .parquet(dir)
-            .filter(col("doc_id") % 97 === 3)
           val q = graft.streaming.StreamingOps
-            .lshForgetStream(src, s"$out/idx", s"$out/ckpt", nBuckets = 16)
+            .lshForgetStream(tombs, s"$out/idx", s"$out/ckpt", nBuckets = 16)
+            // not a drain: its conf toggle would retune the other Par chain
             .trigger(Trigger.AvailableNow()).start()
           q.awaitTermination()
         },
@@ -6510,20 +6193,11 @@ object SparkEntry {
       // UniMax-manifest argument), so the maintenance contract is the
       // same periodic O(corpus-counts) refresh; staleness/replay/
       // lineage/drift are CurriculumStreamSpec's job.
-      import org.apache.spark.sql.streaming.Trigger
-      val out = java.nio.file.Files.createTempDirectory("graft_q_stream_curriculum_")
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxBytesPerTrigger", streamTriggerBytes(s).toString)
-        .parquet(dir)
-      withStreamParts(s, dir, "documents.parquet") {
-        val q = graft.streaming.StreamingOps
-          .curriculumStream(src, s"$out/idx", s"$out/ckpt",
-            nBuckets = 4, seqLen = 128L)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      val out = scratchDir("q_stream_curriculum")
+      val src = stream(s, dir, "documents")
+      drain(s, dir, "documents")(graft.streaming.StreamingOps
+        .curriculumStream(src, s"$out/idx", s"$out/ckpt",
+          nBuckets = 4, seqLen = 128L))
       graft.streaming.StreamingOps.readCurriculumManifest(s, s"$out/idx")
         .orderBy(col("seq_id"), col("seq_pos"))
     },
@@ -6535,19 +6209,10 @@ object SparkEntry {
       // batch packTokenSpans — appending to a packed corpus is O(delta).
       // Cross-batch tail re-emission / replay / lineage / crash windows
       // are PackStreamSpec's job.
-      import org.apache.spark.sql.streaming.Trigger
-      val out = java.nio.file.Files.createTempDirectory("graft_q_stream_pack_")
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxBytesPerTrigger", streamTriggerBytes(s).toString)
-        .parquet(dir)
-      withStreamParts(s, dir, "documents.parquet") {
-        val q = graft.streaming.StreamingOps
-          .packStream(src, s"$out/idx", s"$out/ckpt", seqLen = 128L)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      val out = scratchDir("q_stream_pack")
+      val src = stream(s, dir, "documents")
+      drain(s, dir, "documents")(graft.streaming.StreamingOps
+        .packStream(src, s"$out/idx", s"$out/ckpt", seqLen = 128L))
       graft.streaming.StreamingOps.compactPackIndex(s, s"$out/idx")
       graft.streaming.StreamingOps.readPackIndex(s, s"$out/idx")
         .orderBy(col("seq_id"), col("seq_pos"))
@@ -6563,20 +6228,11 @@ object SparkEntry {
       // contract is periodic O(corpus-counts) refresh, never a re-scan of
       // text; staleness/refreshEvery/replay/lineage/drift semantics are
       // ManifestStreamSpec's job.
-      import org.apache.spark.sql.streaming.Trigger
-      val out = java.nio.file.Files.createTempDirectory("graft_q_stream_manifest_")
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxBytesPerTrigger", streamTriggerBytes(s).toString)
-        .parquet(dir)
-      withStreamParts(s, dir, "documents.parquet") {
-        val q = graft.streaming.StreamingOps
-          .manifestStream(src, s"$out/idx", s"$out/ckpt",
-            budgetTokens = 40000L, epochCap = 3, seqLen = 128L)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      val out = scratchDir("q_stream_manifest")
+      val src = stream(s, dir, "documents")
+      drain(s, dir, "documents")(graft.streaming.StreamingOps
+        .manifestStream(src, s"$out/idx", s"$out/ckpt",
+          budgetTokens = 40000L, epochCap = 3, seqLen = 128L))
       graft.streaming.StreamingOps.readTrainManifest(s, s"$out/idx")
         .orderBy(col("seq_id"), col("seq_pos"))
     },
@@ -6692,7 +6348,7 @@ object SparkEntry {
       // prove the round trip lossless — the oracle is the plain corpus
       // scan, so a green row certifies escaping/typing/sharding end to
       // end (the format training-data pipelines actually exchange)
-      val out = java.nio.file.Files.createTempDirectory("graft_jsonl_").toString + "/docs"
+      val out = scratchDir("jsonl") + "/docs"
       graft.sources.Tables.exportJsonl(Tables.documents(s, dir), out, nShards = 4)
       graft.sources.Tables.importJsonl(s, out,
           "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
@@ -7456,6 +7112,234 @@ object SparkEntry {
     },
   )
 
+  /** Shared by g_chunk_store and q_stream_store. */
+  private lazy val oracleSqlChunkStore: String =
+    """SELECT doc_id AS media_id, md5(text) AS content_md5
+      |FROM documents WHERE length(coalesce(text, '')) > 0
+      |ORDER BY media_id""".stripMargin
+
+  /** Shared by g_dataset_card and q_stream_card. */
+  private lazy val oracleSqlDatasetCard: String =
+    """SELECT source,
+      |       CAST(count(*) AS BIGINT) AS n_docs,
+      |       CAST(sum(length(text)) AS BIGINT) AS n_chars,
+      |       CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens,
+      |       CAST(count(DISTINCT sha256(text)) AS BIGINT) AS n_distinct_texts,
+      |       CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
+      |       CAST(sum(CAST(floor(least(greatest(
+      |         least(len(string_split(text, ' ')) / 64.0, 1.0) * 0.4 +
+      |         (len(list_distinct(string_split(text, ' '))) /
+      |          CAST(len(string_split(text, ' ')) AS DOUBLE)) * 0.4 +
+      |         (1.0 - length(regexp_replace(text, '[a-zA-Z0-9\s]', '', 'g')) /
+      |                CAST(length(text) AS DOUBLE)) * 0.2,
+      |         0.0), 1.0) * 10000) AS BIGINT)) AS DOUBLE)
+      |         / (10000.0 * count(*)) AS mean_quality
+      |FROM documents GROUP BY source ORDER BY source""".stripMargin
+
+  /** Shared by g_dedup_incremental_exact, g_dedup_bloom and q_stream_bloom. */
+  private lazy val oracleSqlDedupIncrementalExact: String =
+    """SELECT a.doc_id AS new_id,
+      |       CAST(count(b.doc_id) AS BIGINT) AS n_corpus_copies,
+      |       min(b.doc_id) AS first_copy_id
+      |FROM documents a LEFT JOIN documents b
+      |  ON b.doc_id % 5 <> 0 AND a.text = b.text
+      |WHERE a.doc_id % 5 = 0
+      |GROUP BY 1 ORDER BY 1""".stripMargin
+
+  /** Shared by g_dedup_clusters, g_dedup_cc_star and g_dedup_cc_incr. */
+  private lazy val oracleSqlDedupClusters: String =
+    """WITH RECURSIVE sh AS (
+      |  SELECT doc_id, list_distinct(CASE WHEN len(t) >= 3
+      |    THEN list_transform(range(1, len(t) - 1), i -> array_to_string(t[i:i+2], ' '))
+      |    ELSE [array_to_string(t, ' ')] END) AS toks
+      |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)),
+      |pairs AS (
+      |  SELECT a.doc_id AS id1, b.doc_id AS id2
+      |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
+      |  WHERE len(list_intersect(a.toks, b.toks)) /
+      |        (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks))) >= 0.5),
+      |edges AS (
+      |  SELECT id1 AS src, id2 AS dst FROM pairs
+      |  UNION SELECT id2 AS src, id1 AS dst FROM pairs),
+      |reach(a, b) AS (
+      |  SELECT src, src FROM edges
+      |  UNION
+      |  SELECT r.a, e.dst FROM reach r JOIN edges e ON r.b = e.src)
+      |SELECT a AS doc_id, min(b) AS cluster_id
+      |FROM reach GROUP BY a ORDER BY doc_id""".stripMargin
+
+  /** Shared by g_dedup_incremental, g_dedup_indexed and q_stream_lsh. */
+  private lazy val oracleSqlDedupIncremental: String =
+    """WITH sh AS (
+      |  SELECT doc_id, list_distinct(CASE WHEN len(t) >= 3
+      |    THEN list_transform(range(1, len(t) - 1), i -> array_to_string(t[i:i+2], ' '))
+      |    ELSE [array_to_string(t, ' ')] END) AS toks
+      |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents))
+      |SELECT a.doc_id AS new_id, b.doc_id AS corpus_id,
+      |       floor((len(list_intersect(a.toks, b.toks)) /
+      |             (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks)))) * 10000) / 10000 AS jaccard
+      |FROM sh a JOIN sh b ON a.doc_id % 5 = 0 AND b.doc_id % 5 <> 0
+      |WHERE len(list_intersect(a.toks, b.toks)) /
+      |      (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks))) >= 0.5
+      |ORDER BY new_id, corpus_id""".stripMargin
+
+  /** Shared by g_dup_spans_incr and q_stream_spans. */
+  private lazy val oracleSqlDupSpansIncr: String =
+    """WITH base AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+      |pos AS (SELECT doc_id, unnest(range(1, len(t) - 1)) AS i, t FROM base WHERE len(t) >= 3),
+      |sh AS (SELECT doc_id, i - 1 AS idx, array_to_string(t[i:i+2], ' ') AS shingle FROM pos),
+      |occ AS (SELECT shingle FROM (SELECT shingle, count(*) AS c FROM sh GROUP BY 1) WHERE c >= 2),
+      |isl AS (SELECT doc_id, idx,
+      |               idx - row_number() OVER (PARTITION BY doc_id ORDER BY idx) AS grp
+      |        FROM sh JOIN occ USING (shingle) WHERE doc_id % 5 = 0)
+      |SELECT doc_id, CAST(min(idx) AS BIGINT) AS start_tok,
+      |       CAST(max(idx) + 2 AS BIGINT) AS end_tok,
+      |       CAST(max(idx) - min(idx) + 3 AS BIGINT) AS span_tokens
+      |FROM isl GROUP BY doc_id, grp
+      |HAVING max(idx) - min(idx) + 3 >= 8
+      |ORDER BY doc_id, start_tok""".stripMargin
+
+  /** Shared by g_exact_quantiles and q_stream_quantiles. */
+  private lazy val oracleSqlExactQuantiles: String =
+    """WITH v AS (SELECT lang, doc_id, n_chars,
+      |        row_number() OVER (PARTITION BY lang ORDER BY n_chars, doc_id) AS rn,
+      |        count(*) OVER (PARTITION BY lang) AS n
+      |      FROM documents)
+      |SELECT lang,
+      |  max(CASE WHEN rn = CAST(ceil(0.25 * n) AS BIGINT) THEN n_chars END) AS p25,
+      |  max(CASE WHEN rn = CAST(ceil(0.5 * n) AS BIGINT) THEN n_chars END) AS p50,
+      |  max(CASE WHEN rn = CAST(ceil(0.75 * n) AS BIGINT) THEN n_chars END) AS p75
+      |FROM v GROUP BY lang ORDER BY lang""".stripMargin
+
+  /** Shared by g_knn_descent and g_knn_descent_pq. */
+  private lazy val oracleSqlKnnDescent: String =
+    """SELECT 5 AS k,
+      |  CAST((SELECT count(*) FROM embeddings WHERE vec_id % 4 = 0) AS BIGINT) AS n_queries,
+      |  CAST(5 * (SELECT count(*) FROM embeddings WHERE vec_id % 4 = 0) AS BIGINT) AS n_exact,
+      |  3 AS init_decile, 5 AS desc_decile,
+      |  true AS improved, true AS meets_floor""".stripMargin
+
+  /** Shared by g_para_dedup and q_stream_curated. */
+  private lazy val oracleSqlParaDedup: String =
+    """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+      |s AS (SELECT doc_id, toks, unnest(range(0, len(toks), 8)) AS st FROM t),
+      |p AS (SELECT doc_id, CAST(st // 8 AS INT) AS idx,
+      |             array_to_string(list_slice(toks, st + 1, st + 8), ' ') AS para
+      |      FROM s),
+      |r AS (SELECT doc_id, idx, para,
+      |             row_number() OVER (PARTITION BY para ORDER BY doc_id, idx) AS rn
+      |      FROM p)
+      |SELECT doc_id,
+      |       coalesce(array_to_string(list(para ORDER BY idx) FILTER (WHERE rn = 1), ' '), '') AS clean_text,
+      |       CAST(count(*) FILTER (WHERE rn = 1) AS BIGINT) AS n_kept,
+      |       CAST(count(*) FILTER (WHERE rn > 1) AS BIGINT) AS n_dropped
+      |FROM r GROUP BY doc_id ORDER BY doc_id""".stripMargin
+
+  /** Shared by g_sim_topk, g_sim_ann, g_sim_ivf, g_sim_ivf_indexed and q_stream_ivf. */
+  private lazy val oracleSqlSimTopK: String =
+    """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0)
+      |SELECT vec_id,
+      |       floor((list_dot_product(CAST(embedding AS DOUBLE[]), qv) /
+      |             (sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) *
+      |              sqrt(list_dot_product(qv, qv)))) * 10000) / 10000 AS sim
+      |FROM embeddings, q
+      |ORDER BY sim DESC, vec_id LIMIT 20""".stripMargin
+
+  /** Shared by g_sketch_topk and q_stream_topk. */
+  private lazy val oracleSqlSketchTopK: String =
+    """SELECT tok, CAST(count(*) AS BIGINT) AS cnt
+      |FROM (SELECT unnest(string_split(text, ' ')) AS tok FROM documents)
+      |GROUP BY tok ORDER BY cnt DESC, tok LIMIT 10""".stripMargin
+
+  /** Shared by g_token_budget and q_stream_budget. */
+  private lazy val oracleSqlTokenBudget: String =
+    """WITH k AS (SELECT doc_id,
+      |        ((doc_id % 2147483647) * 62089911 + 7) % 2147483647 AS sort_key,
+      |        CAST(len(string_split(coalesce(text, ''), ' ')) AS BIGINT) AS n_tokens
+      |      FROM documents),
+      |c AS (SELECT doc_id, sort_key, n_tokens,
+      |        SUM(n_tokens) OVER (ORDER BY sort_key, doc_id
+      |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+      |      FROM k)
+      |SELECT doc_id, sort_key, n_tokens FROM c
+      |WHERE cum - n_tokens < 9000
+      |ORDER BY doc_id""".stripMargin
+
+  /** Shared by q_asof_lastview and q_asof_chunked. */
+  private lazy val oracleSqlAsofLastView: String =
+    """WITH v AS (SELECT user_id, epoch_us(ts) AS ts_us, max(event_id) AS view_event_id
+      |           FROM events WHERE event_type = 'view' GROUP BY 1, 2),
+      |     p AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us
+      |           FROM events WHERE event_type = 'purchase')
+      |SELECT p.event_id, p.user_id, p.ts_us,
+      |       v.view_event_id, v.ts_us AS view_ts_us, p.ts_us - v.ts_us AS gap_us
+      |FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.ts_us >= v.ts_us
+      |ORDER BY p.event_id""".stripMargin
+
+  /** Shared by q_canon_streams and q_canon_streams_sorted. */
+  private lazy val oracleSqlCanonStreams: String =
+    """SELECT user_id AS id, count(*) AS n_events,
+      |       string_agg(CAST(event_id AS INT), ',' ORDER BY CAST(event_id AS INT)) AS revs_csv
+      |FROM events GROUP BY user_id ORDER BY id""".stripMargin
+
+  /** Shared by q_funnel3 and q_funnel3_agg. */
+  private lazy val oracleSqlFunnel3: String =
+    """WITH base AS (SELECT DISTINCT user_id FROM events
+      |              WHERE event_type IN ('signup', 'view', 'purchase')),
+      |su AS (SELECT user_id, min(epoch_us(ts)) AS t FROM events
+      |       WHERE event_type = 'signup' GROUP BY user_id),
+      |v AS (SELECT e.user_id, min(epoch_us(e.ts)) AS t
+      |      FROM events e JOIN su ON e.user_id = su.user_id
+      |      WHERE e.event_type = 'view' AND epoch_us(e.ts) > su.t
+      |      GROUP BY e.user_id),
+      |p AS (SELECT e.user_id, min(epoch_us(e.ts)) AS t
+      |      FROM events e JOIN v ON e.user_id = v.user_id
+      |      WHERE e.event_type = 'purchase' AND epoch_us(e.ts) > v.t
+      |      GROUP BY e.user_id)
+      |SELECT b.user_id,
+      |       coalesce(su.t, 0) AS signup_us,
+      |       coalesce(v.t, 0) AS view_us,
+      |       coalesce(p.t, 0) AS purchase_us
+      |FROM base b
+      |LEFT JOIN su USING (user_id)
+      |LEFT JOIN v USING (user_id)
+      |LEFT JOIN p USING (user_id)
+      |ORDER BY user_id""".stripMargin
+
+  /** Shared by q_index_build and q_stream_index. */
+  private lazy val oracleSqlIndexBuild: String =
+    """SELECT event_type AS et, CAST(year(ts)*1000 + dayofyear(ts) AS INT) AS pid,
+      |       user_id AS aid, event_id AS eid, epoch_us(ts) AS ts_us
+      |FROM events ORDER BY et, pid, ts_us, eid""".stripMargin
+
+  /** Shared by q_message_counter and q_stream_counters. */
+  private lazy val oracleSqlMessageCounter: String =
+    """SELECT event_type AS msgid, count(*) AS cv
+      |FROM events GROUP BY event_type ORDER BY msgid""".stripMargin
+
+  /** Shared by q_sessionize and q_sessionize_chunked. */
+  private lazy val oracleSqlSessionize: String =
+    """WITH t AS (
+      |  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
+      |         lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS prev_us
+      |  FROM events),
+      |s AS (
+      |  SELECT user_id, event_id, ts_us,
+      |         CAST(sum(CASE WHEN prev_us IS NULL OR ts_us - prev_us > 21600000000 THEN 1 ELSE 0 END)
+      |              OVER (PARTITION BY user_id ORDER BY ts_us, event_id
+      |                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
+      |  FROM t)
+      |SELECT user_id, session_id, count(*) AS n_events,
+      |       min(ts_us) AS start_us, max(ts_us) - min(ts_us) AS dur_us
+      |FROM s GROUP BY user_id, session_id
+      |ORDER BY user_id, session_id""".stripMargin
+
+  /** Shared by q_ts_range and q_ts_range_derived. */
+  private lazy val oracleSqlTsRange: String =
+    s"""SELECT event_id, user_id, event_type, epoch_us(ts) AS ts_us
+       |FROM events WHERE ts BETWEEN $SqlT10 AND $SqlT20
+       |ORDER BY event_id""".stripMargin
+
   /** DuckDB-equivalent SQL per query (same tables, same column names, same
     * row order). */
   def oracleSql: Map[String, String] = Map(
@@ -7475,21 +7359,15 @@ object SparkEntry {
       """SELECT props FROM events WHERE user_id = 7 ORDER BY event_id LIMIT 1""".stripMargin,
 
     "q_ts_range" ->
-      s"""SELECT event_id, user_id, event_type, epoch_us(ts) AS ts_us
-         |FROM events WHERE ts BETWEEN $SqlT10 AND $SqlT20
-         |ORDER BY event_id""".stripMargin,
+      oracleSqlTsRange,
 
     "q_ts_range_derived" ->
       // same truth as q_ts_range: the derived-column filter must select
       // exactly the rows the raw-bound convention selects
-      s"""SELECT event_id, user_id, event_type, epoch_us(ts) AS ts_us
-         |FROM events WHERE ts BETWEEN $SqlT10 AND $SqlT20
-         |ORDER BY event_id""".stripMargin,
+      oracleSqlTsRange,
 
     "q_index_build" ->
-      """SELECT event_type AS et, CAST(year(ts)*1000 + dayofyear(ts) AS INT) AS pid,
-        |       user_id AS aid, event_id AS eid, epoch_us(ts) AS ts_us
-        |FROM events ORDER BY et, pid, ts_us, eid""".stripMargin,
+      oracleSqlIndexBuild,
 
     "q_index_range" ->
       s"""SELECT event_type AS et, CAST(year(ts)*1000 + dayofyear(ts) AS INT) AS pid,
@@ -7530,15 +7408,13 @@ object SparkEntry {
       "SELECT min(epoch_us(ts)) AS min_ts_us FROM events",
 
     "q_message_counter" ->
-      """SELECT event_type AS msgid, count(*) AS cv
-        |FROM events GROUP BY event_type ORDER BY msgid""".stripMargin,
+      oracleSqlMessageCounter,
 
     "q_count_for_type" ->
       "SELECT count(*) AS cnt FROM events WHERE event_type = 'click'",
 
     "q_stream_counters" ->
-      """SELECT event_type AS msgid, count(*) AS cv
-        |FROM events GROUP BY event_type ORDER BY msgid""".stripMargin,
+      oracleSqlMessageCounter,
 
     "q_stream_dedup" ->
       // the doubled stream must land exactly the batch-distinct counts
@@ -7558,72 +7434,26 @@ object SparkEntry {
       // the streaming curated landing must equal the batch paragraph-dedup
       // truth — g_para_dedup's oracle verbatim (same chunking, same
       // first-occurrence-wins, same ordered reassembly)
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-        |s AS (SELECT doc_id, toks, unnest(range(0, len(toks), 8)) AS st FROM t),
-        |p AS (SELECT doc_id, CAST(st // 8 AS INT) AS idx,
-        |             array_to_string(list_slice(toks, st + 1, st + 8), ' ') AS para
-        |      FROM s),
-        |r AS (SELECT doc_id, idx, para,
-        |             row_number() OVER (PARTITION BY para ORDER BY doc_id, idx) AS rn
-        |      FROM p)
-        |SELECT doc_id,
-        |       coalesce(array_to_string(list(para ORDER BY idx) FILTER (WHERE rn = 1), ' '), '') AS clean_text,
-        |       CAST(count(*) FILTER (WHERE rn = 1) AS BIGINT) AS n_kept,
-        |       CAST(count(*) FILTER (WHERE rn > 1) AS BIGINT) AS n_dropped
-        |FROM r GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+      oracleSqlParaDedup,
 
     // the single-batch budget landing shares g_token_budget's
     // single-window truth (same budget, seed, permutation order)
     "q_stream_budget" ->
-      """WITH k AS (SELECT doc_id,
-        |        ((doc_id % 2147483647) * 62089911 + 7) % 2147483647 AS sort_key,
-        |        CAST(len(string_split(coalesce(text, ''), ' ')) AS BIGINT) AS n_tokens
-        |      FROM documents),
-        |c AS (SELECT doc_id, sort_key, n_tokens,
-        |        SUM(n_tokens) OVER (ORDER BY sort_key, doc_id
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |      FROM k)
-        |SELECT doc_id, sort_key, n_tokens FROM c
-        |WHERE cum - n_tokens < 9000
-        |ORDER BY doc_id""".stripMargin,
+      oracleSqlTokenBudget,
 
     // the streamed histogram shares the batch exact-quantile truth
     "q_stream_quantiles" ->
-      """WITH v AS (SELECT lang, doc_id, n_chars,
-        |        row_number() OVER (PARTITION BY lang ORDER BY n_chars, doc_id) AS rn,
-        |        count(*) OVER (PARTITION BY lang) AS n
-        |      FROM documents)
-        |SELECT lang,
-        |  max(CASE WHEN rn = CAST(ceil(0.25 * n) AS BIGINT) THEN n_chars END) AS p25,
-        |  max(CASE WHEN rn = CAST(ceil(0.5 * n) AS BIGINT) THEN n_chars END) AS p50,
-        |  max(CASE WHEN rn = CAST(ceil(0.75 * n) AS BIGINT) THEN n_chars END) AS p75
-        |FROM v GROUP BY lang ORDER BY lang""".stripMargin,
+      oracleSqlExactQuantiles,
 
     // the streamed heavy-hitter state shares the batch sketch's truth:
     // exact recount while the vocabulary fits the tracked slots,
     // deterministic tie-break (count desc, token asc) on both sides
     "q_stream_topk" ->
-      """SELECT tok, CAST(count(*) AS BIGINT) AS cnt
-        |FROM (SELECT unnest(string_split(text, ' ')) AS tok FROM documents)
-        |GROUP BY tok ORDER BY cnt DESC, tok LIMIT 10""".stripMargin,
+      oracleSqlSketchTopK,
 
     // the streamed card shares the batch card's truth
     "q_stream_card" ->
-      """SELECT source,
-        |       CAST(count(*) AS BIGINT) AS n_docs,
-        |       CAST(sum(length(text)) AS BIGINT) AS n_chars,
-        |       CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens,
-        |       CAST(count(DISTINCT sha256(text)) AS BIGINT) AS n_distinct_texts,
-        |       CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
-        |       CAST(sum(CAST(floor(least(greatest(
-        |         least(len(string_split(text, ' ')) / 64.0, 1.0) * 0.4 +
-        |         (len(list_distinct(string_split(text, ' '))) /
-        |          CAST(len(string_split(text, ' ')) AS DOUBLE)) * 0.4 +
-        |         (1.0 - length(regexp_replace(text, '[a-zA-Z0-9\s]', '', 'g')) /
-        |                CAST(length(text) AS DOUBLE)) * 0.2,
-        |         0.0), 1.0) * 10000) AS BIGINT)) AS DOUBLE)
-        |         / (10000.0 * count(*)) AS mean_quality
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin,
+      oracleSqlDatasetCard,
 
     "q_rev_monitor" ->
       // the monitor's per-aggregate sorted fold in closed form: scanning
@@ -7743,9 +7573,7 @@ object SparkEntry {
         |FROM events WHERE user_id = 7 ORDER BY rev, pos""".stripMargin,
 
     "q_canon_streams" ->
-      """SELECT user_id AS id, count(*) AS n_events,
-        |       string_agg(CAST(event_id AS INT), ',' ORDER BY CAST(event_id AS INT)) AS revs_csv
-        |FROM events GROUP BY user_id ORDER BY id""".stripMargin,
+      oracleSqlCanonStreams,
 
     "q_event_gaps" ->
       """WITH g AS (
@@ -7760,9 +7588,7 @@ object SparkEntry {
         |GROUP BY user_id ORDER BY user_id""".stripMargin,
 
     "q_canon_streams_sorted" ->
-      """SELECT user_id AS id, count(*) AS n_events,
-        |       string_agg(CAST(event_id AS INT), ',' ORDER BY CAST(event_id AS INT)) AS revs_csv
-        |FROM events GROUP BY user_id ORDER BY id""".stripMargin,
+      oracleSqlCanonStreams,
 
     "q_canon_enumerate" ->
       s"""SELECT user_id AS id, CAST(event_id AS INT) AS rev,
@@ -7793,20 +7619,7 @@ object SparkEntry {
         |ORDER BY revenue DESC, o_orderkey LIMIT 10""".stripMargin,
 
     "q_sessionize" ->
-      """WITH t AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-        |         lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS prev_us
-        |  FROM events),
-        |s AS (
-        |  SELECT user_id, event_id, ts_us,
-        |         CAST(sum(CASE WHEN prev_us IS NULL OR ts_us - prev_us > 21600000000 THEN 1 ELSE 0 END)
-        |              OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-        |                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-        |  FROM t)
-        |SELECT user_id, session_id, count(*) AS n_events,
-        |       min(ts_us) AS start_us, max(ts_us) - min(ts_us) AS dur_us
-        |FROM s GROUP BY user_id, session_id
-        |ORDER BY user_id, session_id""".stripMargin,
+      oracleSqlSessionize,
 
     "q_zorder_box" ->
       // the layout-independent truth of the two-dimensional box read
@@ -7865,20 +7678,7 @@ object SparkEntry {
     "q_sessionize_chunked" ->
       // same oracle as q_sessionize: the two-phase chunked path must
       // produce identical sessions
-      """WITH t AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-        |         lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS prev_us
-        |  FROM events),
-        |s AS (
-        |  SELECT user_id, event_id, ts_us,
-        |         CAST(sum(CASE WHEN prev_us IS NULL OR ts_us - prev_us > 21600000000 THEN 1 ELSE 0 END)
-        |              OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-        |                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-        |  FROM t)
-        |SELECT user_id, session_id, count(*) AS n_events,
-        |       min(ts_us) AS start_us, max(ts_us) - min(ts_us) AS dur_us
-        |FROM s GROUP BY user_id, session_id
-        |ORDER BY user_id, session_id""".stripMargin,
+      oracleSqlSessionize,
 
     "q_top2_per_user" ->
       """SELECT user_id, rn, event_id, value FROM (
@@ -8034,73 +7834,28 @@ object SparkEntry {
     "g_dedup_indexed" ->
       // identical truth to g_dedup_incremental: the persisted index is a
       // materialization of the corpus band keys, not a semantic change
-      """WITH sh AS (
-        |  SELECT doc_id, list_distinct(CASE WHEN len(t) >= 3
-        |    THEN list_transform(range(1, len(t) - 1), i -> array_to_string(t[i:i+2], ' '))
-        |    ELSE [array_to_string(t, ' ')] END) AS toks
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents))
-        |SELECT a.doc_id AS new_id, b.doc_id AS corpus_id,
-        |       floor((len(list_intersect(a.toks, b.toks)) /
-        |             (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks)))) * 10000) / 10000 AS jaccard
-        |FROM sh a JOIN sh b ON a.doc_id % 5 = 0 AND b.doc_id % 5 <> 0
-        |WHERE len(list_intersect(a.toks, b.toks)) /
-        |      (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks))) >= 0.5
-        |ORDER BY new_id, corpus_id""".stripMargin,
+      oracleSqlDedupIncremental,
 
     "q_stream_lsh" ->
       // identical truth to g_dedup_indexed: the streamed index is the same
       // materialization of the corpus band keys, landed per micro-batch
-      """WITH sh AS (
-        |  SELECT doc_id, list_distinct(CASE WHEN len(t) >= 3
-        |    THEN list_transform(range(1, len(t) - 1), i -> array_to_string(t[i:i+2], ' '))
-        |    ELSE [array_to_string(t, ' ')] END) AS toks
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents))
-        |SELECT a.doc_id AS new_id, b.doc_id AS corpus_id,
-        |       floor((len(list_intersect(a.toks, b.toks)) /
-        |             (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks)))) * 10000) / 10000 AS jaccard
-        |FROM sh a JOIN sh b ON a.doc_id % 5 = 0 AND b.doc_id % 5 <> 0
-        |WHERE len(list_intersect(a.toks, b.toks)) /
-        |      (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks))) >= 0.5
-        |ORDER BY new_id, corpus_id""".stripMargin,
+      oracleSqlDedupIncremental,
 
     "g_dedup_incremental" ->
       // exact cross-split shingle Jaccard: increment (doc_id % 5 = 0)
       // against corpus (the rest)
-      """WITH sh AS (
-        |  SELECT doc_id, list_distinct(CASE WHEN len(t) >= 3
-        |    THEN list_transform(range(1, len(t) - 1), i -> array_to_string(t[i:i+2], ' '))
-        |    ELSE [array_to_string(t, ' ')] END) AS toks
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents))
-        |SELECT a.doc_id AS new_id, b.doc_id AS corpus_id,
-        |       floor((len(list_intersect(a.toks, b.toks)) /
-        |             (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks)))) * 10000) / 10000 AS jaccard
-        |FROM sh a JOIN sh b ON a.doc_id % 5 = 0 AND b.doc_id % 5 <> 0
-        |WHERE len(list_intersect(a.toks, b.toks)) /
-        |      (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks))) >= 0.5
-        |ORDER BY new_id, corpus_id""".stripMargin,
+      oracleSqlDedupIncremental,
 
     "g_dedup_incremental_exact" ->
       // text equality stands in for the digest join (no SHA-256 collision
       // at any plausible corpus size)
-      """SELECT a.doc_id AS new_id,
-        |       CAST(count(b.doc_id) AS BIGINT) AS n_corpus_copies,
-        |       min(b.doc_id) AS first_copy_id
-        |FROM documents a LEFT JOIN documents b
-        |  ON b.doc_id % 5 <> 0 AND a.text = b.text
-        |WHERE a.doc_id % 5 = 0
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+      oracleSqlDedupIncrementalExact,
 
     "g_dedup_bloom" ->
       // identical truth to g_dedup_incremental_exact: the Bloom prefilter
       // is exact once the confirm join removes false positives (and no
       // false negative can exist)
-      """SELECT a.doc_id AS new_id,
-        |       CAST(count(b.doc_id) AS BIGINT) AS n_corpus_copies,
-        |       min(b.doc_id) AS first_copy_id
-        |FROM documents a LEFT JOIN documents b
-        |  ON b.doc_id % 5 <> 0 AND a.text = b.text
-        |WHERE a.doc_id % 5 = 0
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+      oracleSqlDedupIncrementalExact,
 
     "q_stream_cc" ->
       // the recursive component truth over the CORPUS SPLIT's exact
@@ -8130,13 +7885,7 @@ object SparkEntry {
     "q_stream_bloom" ->
       // identical truth again: the streamed sidecar OR-merges to the same
       // bits a batch-built sketch would set, and the probe is exact
-      """SELECT a.doc_id AS new_id,
-        |       CAST(count(b.doc_id) AS BIGINT) AS n_corpus_copies,
-        |       min(b.doc_id) AS first_copy_id
-        |FROM documents a LEFT JOIN documents b
-        |  ON b.doc_id % 5 <> 0 AND a.text = b.text
-        |WHERE a.doc_id % 5 = 0
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+      oracleSqlDedupIncrementalExact,
 
     "g_embed_neardup_recall" ->
       ("SELECT CAST(0.35 AS DOUBLE) AS threshold, true AS precision_exact, " +
@@ -8170,9 +7919,7 @@ object SparkEntry {
       // exact recount: the sketch must equal true counts while the
       // vocabulary fits its slots; deterministic tie-break (count desc,
       // token asc) on both sides
-      """SELECT tok, CAST(count(*) AS BIGINT) AS cnt
-        |FROM (SELECT unnest(string_split(text, ' ')) AS tok FROM documents)
-        |GROUP BY tok ORDER BY cnt DESC, tok LIMIT 10""".stripMargin,
+      oracleSqlSketchTopK,
 
     "g_sketch_quantiles" ->
       // the rank-contract booleans must hold for any correct quantile
@@ -8286,21 +8033,7 @@ object SparkEntry {
     "g_dataset_card" ->
       // the quality expression is g_quality's quality column pre-floor;
       // sums cast to BIGINT (DuckDB sum(BIGINT) is HUGEINT)
-      """SELECT source,
-        |       CAST(count(*) AS BIGINT) AS n_docs,
-        |       CAST(sum(length(text)) AS BIGINT) AS n_chars,
-        |       CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens,
-        |       CAST(count(DISTINCT sha256(text)) AS BIGINT) AS n_distinct_texts,
-        |       CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
-        |       CAST(sum(CAST(floor(least(greatest(
-        |         least(len(string_split(text, ' ')) / 64.0, 1.0) * 0.4 +
-        |         (len(list_distinct(string_split(text, ' '))) /
-        |          CAST(len(string_split(text, ' ')) AS DOUBLE)) * 0.4 +
-        |         (1.0 - length(regexp_replace(text, '[a-zA-Z0-9\s]', '', 'g')) /
-        |                CAST(length(text) AS DOUBLE)) * 0.2,
-        |         0.0), 1.0) * 10000) AS BIGINT)) AS DOUBLE)
-        |         / (10000.0 * count(*)) AS mean_quality
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin,
+      oracleSqlDatasetCard,
 
     "g_dsir_weights" ->
       // replay: whitespace tokens, the (acc*31+codepoint) mod 1e9+7
@@ -8352,15 +8085,11 @@ object SparkEntry {
     "g_chunk_store" ->
       // the round-trip truth is just the original corpus digests: equality
       // certifies the store's write/dedup/reassembly pipeline end-to-end
-      """SELECT doc_id AS media_id, md5(text) AS content_md5
-        |FROM documents WHERE length(coalesce(text, '')) > 0
-        |ORDER BY media_id""".stripMargin,
+      oracleSqlChunkStore,
 
     // the streamed landing shares the round-trip truth
     "q_stream_store" ->
-      """SELECT doc_id AS media_id, md5(text) AS content_md5
-        |FROM documents WHERE length(coalesce(text, '')) > 0
-        |ORDER BY media_id""".stripMargin,
+      oracleSqlChunkStore,
 
     "g_cdc_binary" ->
       // replay at byte granularity: the (acc*31+byte) fold over each
@@ -8507,37 +8236,13 @@ object SparkEntry {
       // the spec-pinned identity: spans against the corpus index ==
       // duplicatedSpans over the UNION, restricted to increment docs
       // (corpus_cnt + inc_cnt >= 2 is the union occurrence count)
-      """WITH base AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |pos AS (SELECT doc_id, unnest(range(1, len(t) - 1)) AS i, t FROM base WHERE len(t) >= 3),
-        |sh AS (SELECT doc_id, i - 1 AS idx, array_to_string(t[i:i+2], ' ') AS shingle FROM pos),
-        |occ AS (SELECT shingle FROM (SELECT shingle, count(*) AS c FROM sh GROUP BY 1) WHERE c >= 2),
-        |isl AS (SELECT doc_id, idx,
-        |               idx - row_number() OVER (PARTITION BY doc_id ORDER BY idx) AS grp
-        |        FROM sh JOIN occ USING (shingle) WHERE doc_id % 5 = 0)
-        |SELECT doc_id, CAST(min(idx) AS BIGINT) AS start_tok,
-        |       CAST(max(idx) + 2 AS BIGINT) AS end_tok,
-        |       CAST(max(idx) - min(idx) + 3 AS BIGINT) AS span_tokens
-        |FROM isl GROUP BY doc_id, grp
-        |HAVING max(idx) - min(idx) + 3 >= 8
-        |ORDER BY doc_id, start_tok""".stripMargin,
+      oracleSqlDupSpansIncr,
 
     "q_stream_spans" ->
       // identical truth to g_dup_spans_incr: the streamed index is the
       // same source-tagged partial-count materialization of the corpus,
       // landed per micro-batch and final-merged by the probe
-      """WITH base AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |pos AS (SELECT doc_id, unnest(range(1, len(t) - 1)) AS i, t FROM base WHERE len(t) >= 3),
-        |sh AS (SELECT doc_id, i - 1 AS idx, array_to_string(t[i:i+2], ' ') AS shingle FROM pos),
-        |occ AS (SELECT shingle FROM (SELECT shingle, count(*) AS c FROM sh GROUP BY 1) WHERE c >= 2),
-        |isl AS (SELECT doc_id, idx,
-        |               idx - row_number() OVER (PARTITION BY doc_id ORDER BY idx) AS grp
-        |        FROM sh JOIN occ USING (shingle) WHERE doc_id % 5 = 0)
-        |SELECT doc_id, CAST(min(idx) AS BIGINT) AS start_tok,
-        |       CAST(max(idx) + 2 AS BIGINT) AS end_tok,
-        |       CAST(max(idx) - min(idx) + 3 AS BIGINT) AS span_tokens
-        |FROM isl GROUP BY doc_id, grp
-        |HAVING max(idx) - min(idx) + 3 >= 8
-        |ORDER BY doc_id, start_tok""".stripMargin,
+      oracleSqlDupSpansIncr,
 
     "g_dedup_simhash" ->
       // brute-force recomputation: FNV-1a 64 per token (HUGEINT fold ==
@@ -8569,49 +8274,13 @@ object SparkEntry {
       // proven-equal truth of the MinHash pair list — g_dedup_minhash),
       // recomputed via recursive-CTE transitive closure; min reachable id
       // per doc == min-label propagation at convergence
-      """WITH RECURSIVE sh AS (
-        |  SELECT doc_id, list_distinct(CASE WHEN len(t) >= 3
-        |    THEN list_transform(range(1, len(t) - 1), i -> array_to_string(t[i:i+2], ' '))
-        |    ELSE [array_to_string(t, ' ')] END) AS toks
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)),
-        |pairs AS (
-        |  SELECT a.doc_id AS id1, b.doc_id AS id2
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |  WHERE len(list_intersect(a.toks, b.toks)) /
-        |        (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks))) >= 0.5),
-        |edges AS (
-        |  SELECT id1 AS src, id2 AS dst FROM pairs
-        |  UNION SELECT id2 AS src, id1 AS dst FROM pairs),
-        |reach(a, b) AS (
-        |  SELECT src, src FROM edges
-        |  UNION
-        |  SELECT r.a, e.dst FROM reach r JOIN edges e ON r.b = e.src)
-        |SELECT a AS doc_id, min(b) AS cluster_id
-        |FROM reach GROUP BY a ORDER BY doc_id""".stripMargin,
+      oracleSqlDedupClusters,
 
     "g_dedup_cc_star" ->
       // same truth as g_dedup_clusters (components over the exact
       // shingle-Jaccard pair list, proven equal to the MinHash pair list);
       // gates the alternating-star algorithm's output row-level
-      """WITH RECURSIVE sh AS (
-        |  SELECT doc_id, list_distinct(CASE WHEN len(t) >= 3
-        |    THEN list_transform(range(1, len(t) - 1), i -> array_to_string(t[i:i+2], ' '))
-        |    ELSE [array_to_string(t, ' ')] END) AS toks
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)),
-        |pairs AS (
-        |  SELECT a.doc_id AS id1, b.doc_id AS id2
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |  WHERE len(list_intersect(a.toks, b.toks)) /
-        |        (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks))) >= 0.5),
-        |edges AS (
-        |  SELECT id1 AS src, id2 AS dst FROM pairs
-        |  UNION SELECT id2 AS src, id1 AS dst FROM pairs),
-        |reach(a, b) AS (
-        |  SELECT src, src FROM edges
-        |  UNION
-        |  SELECT r.a, e.dst FROM reach r JOIN edges e ON r.b = e.src)
-        |SELECT a AS doc_id, min(b) AS cluster_id
-        |FROM reach GROUP BY a ORDER BY doc_id""".stripMargin,
+      oracleSqlDedupClusters,
 
     "g_cluster_keep" ->
       // the g_dedup_cc_star closure truth, then the election: rank within
@@ -8652,25 +8321,7 @@ object SparkEntry {
     "g_dedup_cc_incr" ->
       // identical truth to g_dedup_cc_star: merging the delta pairs into
       // the prior assignment must reproduce the full recursive closure
-      """WITH RECURSIVE sh AS (
-        |  SELECT doc_id, list_distinct(CASE WHEN len(t) >= 3
-        |    THEN list_transform(range(1, len(t) - 1), i -> array_to_string(t[i:i+2], ' '))
-        |    ELSE [array_to_string(t, ' ')] END) AS toks
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)),
-        |pairs AS (
-        |  SELECT a.doc_id AS id1, b.doc_id AS id2
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |  WHERE len(list_intersect(a.toks, b.toks)) /
-        |        (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks))) >= 0.5),
-        |edges AS (
-        |  SELECT id1 AS src, id2 AS dst FROM pairs
-        |  UNION SELECT id2 AS src, id1 AS dst FROM pairs),
-        |reach(a, b) AS (
-        |  SELECT src, src FROM edges
-        |  UNION
-        |  SELECT r.a, e.dst FROM reach r JOIN edges e ON r.b = e.src)
-        |SELECT a AS doc_id, min(b) AS cluster_id
-        |FROM reach GROUP BY a ORDER BY doc_id""".stripMargin,
+      oracleSqlDedupClusters,
 
     "g_fingerprints_rolling" ->
       // the identical (acc*31 + code) mod 1e9+7 fold over codepoints
@@ -8721,13 +8372,7 @@ object SparkEntry {
         |FROM reach GROUP BY a ORDER BY doc_id""".stripMargin,
 
     "g_sim_topk" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0)
-        |SELECT vec_id,
-        |       floor((list_dot_product(CAST(embedding AS DOUBLE[]), qv) /
-        |             (sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) *
-        |              sqrt(list_dot_product(qv, qv)))) * 10000) / 10000 AS sim
-        |FROM embeddings, q
-        |ORDER BY sim DESC, vec_id LIMIT 20""".stripMargin,
+      oracleSqlSimTopK,
 
     "g_maxsim" ->
       // full replay of the late-interaction scoring: 8x8 token-pair
@@ -8814,13 +8459,7 @@ object SparkEntry {
     // probe-all ANN == brute force: the losslessness gates share the
     // brute-force oracle (see the query comments)
     "g_sim_ann" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0)
-        |SELECT vec_id,
-        |       floor((list_dot_product(CAST(embedding AS DOUBLE[]), qv) /
-        |             (sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) *
-        |              sqrt(list_dot_product(qv, qv)))) * 10000) / 10000 AS sim
-        |FROM embeddings, q
-        |ORDER BY sim DESC, vec_id LIMIT 20""".stripMargin,
+      oracleSqlSimTopK,
 
     "q_generation_diff" ->
       // the delete's change set is exactly aggregate 7's rows, all
@@ -8841,32 +8480,18 @@ object SparkEntry {
     "q_stream_index" ->
       // identical to q_index_build: the streaming maintenance path must
       // land exactly the batch derivation
-      """SELECT event_type AS et, CAST(year(ts)*1000 + dayofyear(ts) AS INT) AS pid,
-        |       user_id AS aid, event_id AS eid, epoch_us(ts) AS ts_us
-        |FROM events ORDER BY et, pid, ts_us, eid""".stripMargin,
+      oracleSqlIndexBuild,
 
     "g_sim_ivf_indexed" ->
       // probe-all over the persisted layout == brute force (same
       // losslessness contract as g_sim_ivf, now including write + pruned
       // directory read)
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0)
-        |SELECT vec_id,
-        |       floor((list_dot_product(CAST(embedding AS DOUBLE[]), qv) /
-        |             (sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) *
-        |              sqrt(list_dot_product(qv, qv)))) * 10000) / 10000 AS sim
-        |FROM embeddings, q
-        |ORDER BY sim DESC, vec_id LIMIT 20""".stripMargin,
+      oracleSqlSimTopK,
 
     "q_stream_ivf" ->
       // probe-all over the STREAMED versioned layout == brute force (the
       // g_sim_ivf_indexed contract, landing through ivfIndexStream)
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0)
-        |SELECT vec_id,
-        |       floor((list_dot_product(CAST(embedding AS DOUBLE[]), qv) /
-        |             (sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) *
-        |              sqrt(list_dot_product(qv, qv)))) * 10000) / 10000 AS sim
-        |FROM embeddings, q
-        |ORDER BY sim DESC, vec_id LIMIT 20""".stripMargin,
+      oracleSqlSimTopK,
 
     "q_stream_knn" ->
       // the resolved streamed graph at probe-all == the brute-force graph
@@ -8874,13 +8499,7 @@ object SparkEntry {
       oracleSqlKnnBruteForce,
 
     "g_sim_ivf" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0)
-        |SELECT vec_id,
-        |       floor((list_dot_product(CAST(embedding AS DOUBLE[]), qv) /
-        |             (sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) *
-        |              sqrt(list_dot_product(qv, qv)))) * 10000) / 10000 AS sim
-        |FROM embeddings, q
-        |ORDER BY sim DESC, vec_id LIMIT 20""".stripMargin,
+      oracleSqlSimTopK,
 
     // the recall-floor gates: the Spark side computes recall@20 of the
     // reduced-probe approximate setting against brute force; the oracle row
@@ -8906,52 +8525,12 @@ object SparkEntry {
         |FROM curated GROUP BY lang, source ORDER BY lang, source""".stripMargin,
 
     "q_funnel3" ->
-      """WITH base AS (SELECT DISTINCT user_id FROM events
-        |              WHERE event_type IN ('signup', 'view', 'purchase')),
-        |su AS (SELECT user_id, min(epoch_us(ts)) AS t FROM events
-        |       WHERE event_type = 'signup' GROUP BY user_id),
-        |v AS (SELECT e.user_id, min(epoch_us(e.ts)) AS t
-        |      FROM events e JOIN su ON e.user_id = su.user_id
-        |      WHERE e.event_type = 'view' AND epoch_us(e.ts) > su.t
-        |      GROUP BY e.user_id),
-        |p AS (SELECT e.user_id, min(epoch_us(e.ts)) AS t
-        |      FROM events e JOIN v ON e.user_id = v.user_id
-        |      WHERE e.event_type = 'purchase' AND epoch_us(e.ts) > v.t
-        |      GROUP BY e.user_id)
-        |SELECT b.user_id,
-        |       coalesce(su.t, 0) AS signup_us,
-        |       coalesce(v.t, 0) AS view_us,
-        |       coalesce(p.t, 0) AS purchase_us
-        |FROM base b
-        |LEFT JOIN su USING (user_id)
-        |LEFT JOIN v USING (user_id)
-        |LEFT JOIN p USING (user_id)
-        |ORDER BY user_id""".stripMargin,
+      oracleSqlFunnel3,
 
     "q_funnel3_agg" ->
       // same oracle as q_funnel3: the agg-chain operator must reproduce
       // the greedy funnel exactly
-      """WITH base AS (SELECT DISTINCT user_id FROM events
-        |              WHERE event_type IN ('signup', 'view', 'purchase')),
-        |su AS (SELECT user_id, min(epoch_us(ts)) AS t FROM events
-        |       WHERE event_type = 'signup' GROUP BY user_id),
-        |v AS (SELECT e.user_id, min(epoch_us(e.ts)) AS t
-        |      FROM events e JOIN su ON e.user_id = su.user_id
-        |      WHERE e.event_type = 'view' AND epoch_us(e.ts) > su.t
-        |      GROUP BY e.user_id),
-        |p AS (SELECT e.user_id, min(epoch_us(e.ts)) AS t
-        |      FROM events e JOIN v ON e.user_id = v.user_id
-        |      WHERE e.event_type = 'purchase' AND epoch_us(e.ts) > v.t
-        |      GROUP BY e.user_id)
-        |SELECT b.user_id,
-        |       coalesce(su.t, 0) AS signup_us,
-        |       coalesce(v.t, 0) AS view_us,
-        |       coalesce(p.t, 0) AS purchase_us
-        |FROM base b
-        |LEFT JOIN su USING (user_id)
-        |LEFT JOIN v USING (user_id)
-        |LEFT JOIN p USING (user_id)
-        |ORDER BY user_id""".stripMargin,
+      oracleSqlFunnel3,
 
     "q_funnel" ->
       """WITH s AS (SELECT user_id, min(epoch_us(ts)) AS signup_us
@@ -9233,19 +8812,7 @@ object SparkEntry {
       // first-occurrence-wins over (doc_id, idx) per distinct passage and
       // ordered reassembly; list(... ORDER BY) FILTER replays the
       // kept-only ordered collect
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-        |s AS (SELECT doc_id, toks, unnest(range(0, len(toks), 8)) AS st FROM t),
-        |p AS (SELECT doc_id, CAST(st // 8 AS INT) AS idx,
-        |             array_to_string(list_slice(toks, st + 1, st + 8), ' ') AS para
-        |      FROM s),
-        |r AS (SELECT doc_id, idx, para,
-        |             row_number() OVER (PARTITION BY para ORDER BY doc_id, idx) AS rn
-        |      FROM p)
-        |SELECT doc_id,
-        |       coalesce(array_to_string(list(para ORDER BY idx) FILTER (WHERE rn = 1), ' '), '') AS clean_text,
-        |       CAST(count(*) FILTER (WHERE rn = 1) AS BIGINT) AS n_kept,
-        |       CAST(count(*) FILTER (WHERE rn > 1) AS BIGINT) AS n_dropped
-        |FROM r GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+      oracleSqlParaDedup,
 
     "g_para_dedup_incr" ->
       // the g_para_dedup idiom restricted to the increment, with a
@@ -9547,26 +9114,12 @@ object SparkEntry {
         |FROM r WHERE rn = 1 ORDER BY eval_id""".stripMargin,
 
     "q_asof_lastview" ->
-      """WITH v AS (SELECT user_id, epoch_us(ts) AS ts_us, max(event_id) AS view_event_id
-        |           FROM events WHERE event_type = 'view' GROUP BY 1, 2),
-        |     p AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us
-        |           FROM events WHERE event_type = 'purchase')
-        |SELECT p.event_id, p.user_id, p.ts_us,
-        |       v.view_event_id, v.ts_us AS view_ts_us, p.ts_us - v.ts_us AS gap_us
-        |FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.ts_us >= v.ts_us
-        |ORDER BY p.event_id""".stripMargin,
+      oracleSqlAsofLastView,
 
     "q_asof_chunked" ->
       // same oracle as q_asof_lastview: the chunked-carry variant must
       // produce the identical as-of matching
-      """WITH v AS (SELECT user_id, epoch_us(ts) AS ts_us, max(event_id) AS view_event_id
-        |           FROM events WHERE event_type = 'view' GROUP BY 1, 2),
-        |     p AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us
-        |           FROM events WHERE event_type = 'purchase')
-        |SELECT p.event_id, p.user_id, p.ts_us,
-        |       v.view_event_id, v.ts_us AS view_ts_us, p.ts_us - v.ts_us AS gap_us
-        |FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.ts_us >= v.ts_us
-        |ORDER BY p.event_id""".stripMargin,
+      oracleSqlAsofLastView,
 
     "q_range_activity" ->
       """WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us, event_type FROM events),
@@ -10168,15 +9721,7 @@ object SparkEntry {
       // plain rank selection: value at rank ceil(p*n) (1-indexed) in
       // (value, id) order per group — the truth the two-phase bucket
       // locate-and-window provably equals
-      """WITH v AS (SELECT lang, doc_id, n_chars,
-        |        row_number() OVER (PARTITION BY lang ORDER BY n_chars, doc_id) AS rn,
-        |        count(*) OVER (PARTITION BY lang) AS n
-        |      FROM documents)
-        |SELECT lang,
-        |  max(CASE WHEN rn = CAST(ceil(0.25 * n) AS BIGINT) THEN n_chars END) AS p25,
-        |  max(CASE WHEN rn = CAST(ceil(0.5 * n) AS BIGINT) THEN n_chars END) AS p50,
-        |  max(CASE WHEN rn = CAST(ceil(0.75 * n) AS BIGINT) THEN n_chars END) AS p75
-        |FROM v GROUP BY lang ORDER BY lang""".stripMargin,
+      oracleSqlExactQuantiles,
 
     "g_skew_report" ->
       // single-row fold over the per-key counts; the argmax scalar
@@ -10236,17 +9781,7 @@ object SparkEntry {
       // the single-window truth the two-phase form equals: global running
       // token sum over (sort_key, doc_id) permutation order, keep rows
       // whose cumulative START offset is below the budget
-      """WITH k AS (SELECT doc_id,
-        |        ((doc_id % 2147483647) * 62089911 + 7) % 2147483647 AS sort_key,
-        |        CAST(len(string_split(coalesce(text, ''), ' ')) AS BIGINT) AS n_tokens
-        |      FROM documents),
-        |c AS (SELECT doc_id, sort_key, n_tokens,
-        |        SUM(n_tokens) OVER (ORDER BY sort_key, doc_id
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |      FROM k)
-        |SELECT doc_id, sort_key, n_tokens FROM c
-        |WHERE cum - n_tokens < 9000
-        |ORDER BY doc_id""".stripMargin,
+      oracleSqlTokenBudget,
 
     "g_pipeline_e2e" ->
       // all four stages replayed in sequence: the g_quality_logit logit
@@ -10745,22 +10280,14 @@ object SparkEntry {
       // deterministic counts and BOTH measured deciles (the operator's
       // value is the init→descended gap) plus the monotonicity and floor
       // booleans
-      """SELECT 5 AS k,
-        |  CAST((SELECT count(*) FROM embeddings WHERE vec_id % 4 = 0) AS BIGINT) AS n_queries,
-        |  CAST(5 * (SELECT count(*) FROM embeddings WHERE vec_id % 4 = 0) AS BIGINT) AS n_exact,
-        |  3 AS init_decile, 5 AS desc_decile,
-        |  true AS improved, true AS meets_floor""".stripMargin,
+      oracleSqlKnnDescent,
 
     "g_knn_descent_pq" ->
       // same pinned-decile discipline as g_knn_descent; that BOTH rows pin
       // the SAME deciles (init 3 → descended 5) is itself the claim: the
       // refine=2 ADC-pruned, codes-scored descent climbs exactly as far
       // as full-precision descent at decile granularity
-      """SELECT 5 AS k,
-        |  CAST((SELECT count(*) FROM embeddings WHERE vec_id % 4 = 0) AS BIGINT) AS n_queries,
-        |  CAST(5 * (SELECT count(*) FROM embeddings WHERE vec_id % 4 = 0) AS BIGINT) AS n_exact,
-        |  3 AS init_decile, 5 AS desc_decile,
-        |  true AS improved, true AS meets_floor""".stripMargin,
+      oracleSqlKnnDescent,
 
     "g_knn_pq" -> knnPqOracleSql,
 

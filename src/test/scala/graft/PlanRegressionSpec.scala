@@ -4,7 +4,8 @@ package graft
   * predicates reaching the parquet scan and small sides broadcasting —
   * assert it so a refactor can't silently regress the physical plan
   * (the round-1 pushdown bug: filters on a derived micros column pushed
-  * only IsNotNull). */
+  * only IsNotNull). Also guarded here: the streaming rows' source scoping,
+  * which must stream a table whatever its on-disk shape. */
 class PlanRegressionSpec extends SparkSpec {
 
   val dir = "/root/testdata/sf0.001"
@@ -226,6 +227,23 @@ class PlanRegressionSpec extends SparkSpec {
       assert(!p.contains("CartesianProduct"),
         s"$n plans a CartesianProduct — cell routing must stay an equi-join " +
           "(the 1×1 recall denominator join is BNLJ, not cartesian)")
+    }
+  }
+
+  test("q_stream_counters and q_stream_index stream a multi-file events.parquet directory") {
+    // the same rows as a Spark-written directory of part files: a source
+    // scoped by a file-name glob matches no part file and drains nothing
+    val multi = tmpDir()
+    graft.sources.Tables.table(spark, dir, "events").repartition(4)
+      .write.parquet(s"$multi/events.parquet")
+    val parts = new java.io.File(s"$multi/events.parquet").listFiles()
+      .count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+    assert(parts >= 3, s"$parts part files")
+    Seq("q_stream_counters", "q_stream_index").foreach { n =>
+      def rows(d: String) = SparkEntry.queries(n)(spark, d).collect().map(_.toString).sorted.toSeq
+      val single = rows(dir)
+      assert(single.nonEmpty, s"$n drained no rows from the single-file table")
+      assert(rows(multi) == single, s"$n over the directory table")
     }
   }
 }

@@ -1,10 +1,10 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
-/** The volume-derived drain sizing (`SparkEntry.streamParts`) on the input
-  * shape no bench scale factor produces: a Spark-written MULTI-FILE
+/** The volume-derived drain sizing (`SparkEntry.streamParts`, applied by
+  * `SparkEntry.drain` to a `SparkEntry.stream` source) on the input shape
+  * no bench scale factor produces: a Spark-written MULTI-FILE
   * `events.parquet` directory, with the trigger and per-partition sizes
   * shrunk so the volume term (not the floor of 8) decides and the drain
   * spans several micro-batches. */
@@ -27,18 +27,11 @@ class StreamPartsSpec extends SparkSpec {
       .select((col("id") % 7).cast("string").as("event_type"),
         rand(1).as("a"), rand(2).as("b"), rand(3).as("c"))
       .write.parquet(s"$dir/events.parquet")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
     def drain(name: String) = {
-      val src = spark.readStream.schema(schema)
-        .option("maxBytesPerTrigger", SparkEntry.streamTriggerBytes(spark).toString)
-        .parquet(s"$dir/events.parquet")
-      val q = SparkEntry.withStreamParts(spark, dir, "events.parquet") {
-        val q = graft.streaming.StreamingOps.liveCounters(src, etCol = "event_type")
-          .writeStream.format("memory").queryName(name).outputMode("complete")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        q
-      }
+      val src = SparkEntry.stream(spark, dir, "events")
+      val q = SparkEntry.drain(spark, dir, "events")(
+        graft.streaming.StreamingOps.liveCounters(src, etCol = "event_type")
+          .writeStream.format("memory").queryName(name).outputMode("complete"))
       val rows = spark.table(name).orderBy(col("msgid")).collect().toSeq
       (rows, q.recentProgress.toSeq.filter(_.numInputRows > 0))
     }
