@@ -1,17 +1,18 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
-import graft.functions.{TextFns, TimeFns, VectorFns}
-import graft.operators.{AssemblyOps, CurationOps, DedupOps, MultimodalOps, RetrievalOps, SimilarityOps, TemporalOps, TextOps}
+import graft.functions.TimeFns
 import graft.sources.Tables
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract (SURVEY.md §7).
   *
-  * Every query here is one operator row of SURVEY.md §2, expressed on the
-  * driver test tables (role mapping FIXTURES.md §2: user_id = aggregate id,
-  * event_type = et, event_id = revision order, props = opaque payload).
+  * Every query is one operator row of SURVEY.md §2, declared once as a
+  * [[rows.QueryDef]] (name, oracle SQL, closure) in the per-family files
+  * of `graft.rows`, and expressed on the driver test tables (role
+  * mapping FIXTURES.md §2: user_id = aggregate id, event_type = et,
+  * event_id = revision order, props = opaque payload).
   *
   * Oracle-parity conventions (DuckDB 1.0 reads the same parquet):
   *  - `events.ts` is TIMESTAMP(NANOS) parquet: Spark reads it as epoch-nanos
@@ -29,10 +30,10 @@ object SparkEntry {
 
   // Inclusive replay window used by the time-filtered queries (B5/E4):
   // [2024-01-10, 2024-01-20] in epoch micros; events span 2024-01-01..30.
-  private val T10: Long = TimeFns.utcMicros("2024-01-10T00:00:00")
-  private val T20: Long = TimeFns.utcMicros("2024-01-20T00:00:00")
-  private val SqlT10 = "TIMESTAMP '2024-01-10 00:00:00'"
-  private val SqlT20 = "TIMESTAMP '2024-01-20 00:00:00'"
+  private[graft] val T10: Long = TimeFns.utcMicros("2024-01-10T00:00:00")
+  private[graft] val T20: Long = TimeFns.utcMicros("2024-01-20T00:00:00")
+  private[graft] val SqlT10 = "TIMESTAMP '2024-01-10 00:00:00'"
+  private[graft] val SqlT20 = "TIMESTAMP '2024-01-20 00:00:00'"
 
   /** Quadratic-truth budget policy (SURVEY §2.8): a losslessness gate may
     * run its probe-all / O(n²) setting only at the SFs the driver
@@ -42,62 +43,8 @@ object SparkEntry {
     * CORRECTNESS still certifies losslessness. The approximate regime
     * itself stays gated by the *_recall rows, which are sampled-query
     * (never full-quadratic) at any SF. */
-  private def oracleScale(dir: String): Boolean =
+  private[graft] def oracleScale(dir: String): Boolean =
     dir.contains("sf0.001") || dir.contains("sf0.01")
-
-  /** Sampled-recall query predicate (the policy's second half): the
-    * oracle SFs measure on the mod-4 sample their pinned counts/deciles
-    * assume; bench SFs keep the same statistical protocol at a coarser
-    * mod-16 sample — the gate's verification granularity is an oracle-SF
-    * concern, the bench tracks the production-shaped plan. The bench-SF
-    * modulus is a [[GraftConf]] knob (`spark.graft.recall.samplemod`);
-    * the oracle-SF modulus is pinned — the published counts assume it. */
-  private def recallSample(s: SparkSession, dir: String): Column => Column = {
-    val m =
-      if (oracleScale(dir)) 4
-      else GraftConf.int(s, GraftConf.RecallSampleMod, 16)
-    id => id % m === 0
-  }
-
-  /** The descent gates' shared measurement frame: init and descended
-    * recall vs the pinned sampled exact graph, integer-exact ppm
-    * arithmetic (never float-divide a gate), deciles as the oracle-pinned
-    * drift tripwire, `improved` as the structural monotonicity witness. */
-  private def descentGate(
-      exact: DataFrame, init: DataFrame, desc: DataFrame, k: Int): DataFrame = {
-    def hitsOf(g: DataFrame, as: String) = exact.join(
-        g.select(col("vec_id"), col("neighbor_id")),
-        Seq("vec_id", "neighbor_id"), "left_semi")
-      .agg(count(lit(1)).as(as))
-    val denom = exact.agg(
-      countDistinct(col("vec_id")).as("n_queries"), count(lit(1)).as("n_exact"))
-    hitsOf(init, "init_hits").crossJoin(hitsOf(desc, "desc_hits")).crossJoin(denom)
-      .withColumn("init_ppm", expr(
-        "CASE WHEN n_exact > 0 THEN (init_hits * CAST(1000000 AS BIGINT)) div n_exact " +
-          "ELSE CAST(0 AS BIGINT) END"))
-      .withColumn("desc_ppm", expr(
-        "CASE WHEN n_exact > 0 THEN (desc_hits * CAST(1000000 AS BIGINT)) div n_exact " +
-          "ELSE CAST(0 AS BIGINT) END"))
-      .select(lit(k).as("k"), col("n_queries"), col("n_exact"),
-        expr("init_ppm div 100000").cast("int").as("init_decile"),
-        expr("desc_ppm div 100000").cast("int").as("desc_decile"),
-        (col("desc_hits") >= col("init_hits")).as("improved"),
-        (col("desc_ppm") >= 500000L).as("meets_floor"))
-  }
-
-  /** ±1.0 hyperplane-sign list literal for the g_embed_neardup oracle: the
-    * identical XXH64 arithmetic as VectorFns.rhpBucket (seed 42,
-    * hash(plane) feeding hash(componentIdx)), evaluated at SQL-construction
-    * time so DuckDB recomputes the same LSH buckets from inline literals —
-    * the planes are deterministic shared state, not model weights. */
-  private def rhpSignsSql(plane: Int, dim: Int): String = {
-    import org.apache.spark.sql.catalyst.expressions.XXH64
-    val planeSeed = XXH64.hashInt(plane, 42L)
-    (0 until dim).map { j =>
-      val h = XXH64.hashInt(j, planeSeed)
-      if (((h % 2) + 2) % 2 == 1) "1.0" else "-1.0"
-    }.mkString("[", ", ", "]")
-  }
 
   /** Fixture centroids for the k-means-blocked SemDeDup gate: k ±1.0 sign
     * vectors from the same XXH64 arithmetic as [[rhpSignsSql]] under a
@@ -114,18 +61,48 @@ object SparkEntry {
     }
   }
 
-  private val KmFixtureK = 4
+  private[graft] val KmFixtureK = 4
 
-  private def fixtureCentroids(dim: Int): Seq[(Int, Seq[Double])] =
+  private[graft] def fixtureCentroids(dim: Int): Seq[(Int, Seq[Double])] =
     (1 to KmFixtureK).map(c => (c, fixtureCentroid(c, dim)))
+
+  /** The argmax of the columns `column(1)`..`column(n)` as a DuckDB CASE:
+    * the first column that is >= every later one, so a tie goes to the
+    * smallest index, as in the engine's cell and code argmaxes. */
+  private[graft] def argmaxCaseSql(n: Int)(column: Int => String): String = {
+    val arms = (1 until n).map { i =>
+      val conds = ((i + 1) to n).map(j => s"${column(i)} >= ${column(j)}").mkString(" AND ")
+      s"WHEN $conds THEN $i"
+    }.mkString(" ")
+    s"CASE $arms ELSE $n END"
+  }
+
+  /** The cosines of list column `vec` against the dim-64
+    * [[fixtureCentroids]], as the columns `<alias>1`..`<alias>K`. */
+  private[graft] def fixtureCosSql(vec: String, alias: String): String =
+    fixtureCentroids(64).map { case (cid, c) => s"${pqCosA(vec, pqArr(c))} AS $alias$cid" }
+      .mkString(",\n    ")
+
+  /** The fixture k-means coarse assignment: the argmax cell over the
+    * [[fixtureCosSql]] columns `<cos>1`..`<cos>K`. */
+  private[graft] def fixtureCellSql(cos: String): String =
+    argmaxCaseSql(KmFixtureK)(i => s"$cos$i")
+
+  /** CTE `probe`: the two fixture cells nearest the query, ranked by the
+    * [[fixtureCosSql]] columns `qc_1`..`qc_K` of CTE `qcs`. */
+  private[graft] def fixtureProbeCteSql: String =
+    s"""probe AS (
+       |  SELECT cid FROM (
+       |    ${(1 to KmFixtureK).map(c => s"SELECT $c AS cid, qc_$c AS qc FROM qcs").mkString(" UNION ALL\n    ")})
+       |  ORDER BY qc DESC, cid LIMIT 2)""".stripMargin
 
   /** Fixture PQ codebooks: per (subspace, code) a ±1 sign vector from the
     * same XXH64 arithmetic under seed 11 — deterministic shared state the
     * oracle replays from inline literals, exactly like [[fixtureCentroids]].
     * Data-derived training (SimilarityOps.trainPqCodebooks) stays
     * spec-gated (PqSpec). */
-  private val PqM = 8
-  private val PqC = 4
+  private[graft] val PqM = 8
+  private[graft] val PqC = 4
 
   private def pqCodeword(s: Int, cid: Int, subDim: Int): Seq[Double] = {
     import org.apache.spark.sql.catalyst.expressions.XXH64
@@ -136,127 +113,38 @@ object SparkEntry {
     }
   }
 
-  private def fixturePqCodebooks(dim: Int): Seq[Seq[(Int, Seq[Double])]] = {
+  private[graft] def fixturePqCodebooks(dim: Int): Seq[Seq[(Int, Seq[Double])]] = {
     val subDim = dim / PqM
     (0 until PqM).map(s => (1 to PqC).map(cid => (cid, pqCodeword(s, cid, subDim))))
   }
 
-  /** The bitext ratio-margin definition truth, shared by g_bitext_margin
-    * (exact cross product) and g_bitext_ivf (probe-all IVF candidates ==
-    * the cross product — the scale path's losslessness gate). Same
-    * fixed-point pipeline both sides: floored-cos LONGs, top-k integer
-    * neighborhood sums (sum(BIGINT) -> HUGEINT, cast back), the three
-    * divisions over identical operands, argmax with ties to smallest y. */
-  /** The semantic-decontamination definition truth, shared by
-    * g_decontam_semantic (exact cross product) and g_decontam_ivf
-    * (probe-all IVF candidates == the cross product): floored-cos LONG,
-    * per-eval argmax with ties to the smallest train id, threshold flag
-    * compared on the quantized integer. */
-  private lazy val oracleSqlDecontamSemantic: String =
-    """WITH x AS (
-      |  SELECT vec_id AS eval_id, CAST(embedding AS DOUBLE[]) AS xv
-      |  FROM embeddings WHERE label = 0),
-      |y AS (
-      |  SELECT vec_id AS train_id, CAST(embedding AS DOUBLE[]) AS yv
-      |  FROM embeddings WHERE label = 1),
-      |sc AS (
-      |  SELECT eval_id, train_id,
-      |    CAST(floor((list_dot_product(xv, yv) /
-      |      (sqrt(list_dot_product(xv, xv)) * sqrt(list_dot_product(yv, yv)))) * 10000.0)
-      |      AS BIGINT) AS s
-      |  FROM x CROSS JOIN y),
-      |r AS (SELECT eval_id, train_id, s,
-      |        row_number() OVER (PARTITION BY eval_id ORDER BY s DESC, train_id) AS rn
-      |      FROM sc)
-      |SELECT eval_id, train_id, CAST(s AS DOUBLE) / 1e4 AS sim,
-      |       (s >= 3000) AS contaminated
-      |FROM r WHERE rn = 1 ORDER BY eval_id""".stripMargin
-
-  private lazy val oracleSqlBitextMargin: String =
-    """WITH x AS (
-        |  SELECT vec_id AS x_id, CAST(embedding AS DOUBLE[]) AS xv
-        |  FROM embeddings WHERE label = 0),
-        |y AS (
-        |  SELECT vec_id AS y_id, CAST(embedding AS DOUBLE[]) AS yv
-        |  FROM embeddings WHERE label = 1),
-        |sc AS (
-        |  SELECT x_id, y_id,
-        |    CAST(floor((list_dot_product(xv, yv) /
-        |      (sqrt(list_dot_product(xv, xv)) * sqrt(list_dot_product(yv, yv)))) * 10000.0)
-        |      AS BIGINT) AS s
-        |  FROM x CROSS JOIN y),
-        |fw AS (
-        |  SELECT x_id, CAST(sum(s) AS BIGINT) AS fwd, count(*) AS nf FROM (
-        |    SELECT x_id, s, row_number() OVER (PARTITION BY x_id ORDER BY s DESC, y_id) AS rn
-        |    FROM sc) t WHERE rn <= 4 GROUP BY x_id),
-        |bw AS (
-        |  SELECT y_id, CAST(sum(s) AS BIGINT) AS bwd, count(*) AS nb FROM (
-        |    SELECT y_id, s, row_number() OVER (PARTITION BY y_id ORDER BY s DESC, x_id) AS rn
-        |    FROM sc) t WHERE rn <= 4 GROUP BY y_id),
-        |m AS (
-        |  SELECT sc.x_id, sc.y_id,
-        |    floor(((2.0 * s) / (CAST(fwd AS DOUBLE) / nf + CAST(bwd AS DOUBLE) / nb)) * 10000) / 10000 AS margin
-        |  FROM sc JOIN fw USING (x_id) JOIN bw USING (y_id)),
-        |best AS (
-        |  SELECT x_id, y_id, margin,
-        |    row_number() OVER (PARTITION BY x_id ORDER BY margin DESC, y_id) AS rn
-        |  FROM m)
-        |SELECT x_id, y_id, margin FROM best WHERE rn = 1 ORDER BY x_id""".stripMargin
-
   /** PQ encode + ADC replay shared by g_sim_pq (full ADC scan) and
     * g_sim_ivfpq (coarse-cell-pruned scan): per subspace the codeword
-    * argmax is the kmeansStepOracleSql CASE pattern over sliced vectors;
+    * argmax is the [[argmaxCaseSql]] CASE over sliced vectors;
     * the ADC lookup table is the query's per-(subspace, codeword)
     * fixed-point cosines — `floor(cos*1e6)` BIGINTs whose sum is exact in
     * both engines (the engine computes the same table driver-side). */
-  private def pqOracleSql(pruned: Boolean): String = {
+  private[graft] def pqOracleSql(pruned: Boolean): String = {
     val dim = 64
     val subDim = dim / PqM
-    def cosSql(vec: String, s: Int, w: Seq[Double]): String = {
-      val sub = s"$vec[${s * subDim + 1}:${(s + 1) * subDim}]"
-      val arr = w.mkString("[", ", ", "]")
-      s"(list_dot_product($sub, $arr) / (sqrt(list_dot_product($sub, $sub)) * sqrt(list_dot_product($arr, $arr))))"
-    }
-    val cbs = fixturePqCodebooks(dim)
-    val dataCos = (for { s <- 0 until PqM; (cid, w) <- cbs(s) } yield
-      s"${cosSql("v", s, w)} AS c_${s}_$cid").mkString(",\n    ")
-    val lutCos = (for { s <- 0 until PqM; (cid, w) <- cbs(s) } yield
-      s"CAST(floor(${cosSql("qv", s, w)} * 1000000) AS BIGINT) AS l_${s}_$cid")
+    val dataCos = pqCwCosSql(dim)
+    val lutCos = (for { s <- 0 until PqM; (cid, w) <- fixturePqCodebooks(dim)(s) } yield
+      s"CAST(floor(${pqCosA(s"qv[${s * subDim + 1}:${(s + 1) * subDim}]", pqArr(w))} * 1000000)" +
+        s" AS BIGINT) AS l_${s}_$cid")
       .mkString(",\n    ")
-    val codes = (0 until PqM).map { s =>
-      val arms = (1 until PqC).map { i =>
-        val conds = ((i + 1) to PqC).map(j => s"c_${s}_$i >= c_${s}_$j").mkString(" AND ")
-        s"WHEN $conds THEN $i"
-      }.mkString(" ")
-      s"CASE $arms ELSE $PqC END AS code_$s"
-    }.mkString(",\n    ")
+    val codes = pqCodeCasesSql
     val score = (0 until PqM).map { s =>
       val arms = (1 until PqC).map(c => s"WHEN $c THEN l_${s}_$c").mkString(" ")
       s"(CASE code_$s $arms ELSE l_${s}_$PqC END)"
     }.mkString("\n     + ")
-    val cents = fixtureCentroids(dim)
-    def centCos(vec: String, alias: String): String = cents.map { case (cid, c) =>
-      val arr = c.mkString("[", ", ", "]")
-      s"(list_dot_product($vec, $arr) / (sqrt(list_dot_product($vec, $vec)) * sqrt(list_dot_product($arr, $arr)))) AS $alias$cid"
-    }.mkString(",\n    ")
-    val coarseAssign = {
-      val arms = (1 until KmFixtureK).map { i =>
-        val conds = ((i + 1) to KmFixtureK).map(j => s"cc_$i >= cc_$j").mkString(" AND ")
-        s"WHEN $conds THEN $i"
-      }.mkString(" ")
-      s"CASE $arms ELSE $KmFixtureK END AS cell"
-    }
-    val coarseCols = if (pruned) s",\n    ${centCos("v", "cc_")}" else ""
-    val cellCol = if (pruned) s",\n    $coarseAssign" else ""
+    val coarseCols = if (pruned) s",\n    ${fixtureCosSql("v", "cc_")}" else ""
+    val cellCol = if (pruned) s",\n    ${fixtureCellSql("cc_")} AS cell" else ""
     val prunedCtes =
       if (!pruned) ""
       else
         s""",
-           |qcs AS (SELECT ${centCos("qv", "qc_")} FROM q),
-           |probe AS (
-           |  SELECT cid FROM (
-           |    ${(1 to KmFixtureK).map(c => s"SELECT $c AS cid, qc_$c AS qc FROM qcs").mkString(" UNION ALL\n    ")})
-           |  ORDER BY qc DESC, cid LIMIT 2)""".stripMargin
+           |qcs AS (SELECT ${fixtureCosSql("qv", "qc_")} FROM q),
+           |$fixtureProbeCteSql""".stripMargin
     val whereCell = if (pruned) "\n|WHERE b.cell IN (SELECT cid FROM probe)" else ""
     s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
        |q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0),
@@ -280,7 +168,7 @@ object SparkEntry {
     * identity makes incremental maintenance equal the rebuilt graph):
     * every ordered pair scored (floored at 4 decimals like the Spark
     * side), top-5 per query by (sim desc, neighbor id). */
-  private lazy val oracleSqlKnnBruteForce: String =
+  private[graft] lazy val oracleSqlKnnBruteForce: String =
     """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
       |p AS (SELECT a.vec_id AS vec_id, b.vec_id AS neighbor_id,
       |             floor((list_dot_product(a.v, b.v) /
@@ -292,289 +180,10 @@ object SparkEntry {
       |SELECT vec_id, neighbor_id, sim, CAST(rank AS INT) AS rank
       |FROM r WHERE rank <= 5 ORDER BY vec_id, rank""".stripMargin
 
-  /** Full replay of [[SimilarityOps.graphSearch]] from the brute-force
-    * graph with the hop loop unrolled (nHops = 2, beam = 8, k = 5, probes
-    * = mod-10 members, entries = mod-50 seeds, self-matches excluded):
-    * hop 0 scores every (query, entry) pair; each hop expands the
-    * current top-8 beam through the graph's out-edges, discards
-    * already-visited candidates (NOT EXISTS against the accumulated
-    * visited set), scores only the fresh frontier; the answer is the
-    * per-query top-5 of everything visited MINUS the query's own corpus
-    * row (the walk routes through self — sim 1.0 tops every beam — but
-    * the answer excludes it). Identical floored-cosine / id-tie ordering
-    * as the engine at every cut. */
-  private lazy val graphSearchOracleSql: String = {
-    val cos = (a: String, b: String) =>
-      s"floor((list_dot_product($a, $b) / " +
-        s"(sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b)))) " +
-        s"* 10000) / 10000"
-    s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |p AS (SELECT a.vec_id AS vec_id, b.vec_id AS neighbor_id,
-       |             ${cos("a.v", "b.v")} AS sim
-       |      FROM v a JOIN v b ON a.vec_id <> b.vec_id),
-       |g AS (SELECT vec_id, neighbor_id FROM (
-       |        SELECT vec_id, neighbor_id,
-       |          row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, neighbor_id) AS rnk
-       |        FROM p) WHERE rnk <= 5),
-       |q AS (SELECT vec_id AS qid, v AS qv FROM v WHERE vec_id % 10 = 0),
-       |ent AS (SELECT vec_id AS id FROM v WHERE vec_id % 50 = 0),
-       |s0 AS (SELECT q.qid, ent.id, ${cos("q.qv", "w.v")} AS sim
-       |       FROM q CROSS JOIN ent JOIN v w ON w.vec_id = ent.id),
-       |b0 AS (SELECT qid, id FROM (
-       |        SELECT qid, id, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, id) AS rn
-       |        FROM s0) WHERE rn <= 8),
-       |c1 AS (SELECT DISTINCT b0.qid, g.neighbor_id AS id
-       |       FROM b0 JOIN g ON g.vec_id = b0.id
-       |       WHERE NOT EXISTS (SELECT 1 FROM s0
-       |                         WHERE s0.qid = b0.qid AND s0.id = g.neighbor_id)),
-       |s1 AS (SELECT c1.qid, c1.id, ${cos("q.qv", "w.v")} AS sim
-       |       FROM c1 JOIN q ON q.qid = c1.qid JOIN v w ON w.vec_id = c1.id),
-       |vis1 AS (SELECT * FROM s0 UNION ALL SELECT * FROM s1),
-       |b1 AS (SELECT qid, id FROM (
-       |        SELECT qid, id, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, id) AS rn
-       |        FROM vis1) WHERE rn <= 8),
-       |c2 AS (SELECT DISTINCT b1.qid, g.neighbor_id AS id
-       |       FROM b1 JOIN g ON g.vec_id = b1.id
-       |       WHERE NOT EXISTS (SELECT 1 FROM vis1
-       |                         WHERE vis1.qid = b1.qid AND vis1.id = g.neighbor_id)),
-       |s2 AS (SELECT c2.qid, c2.id, ${cos("q.qv", "w.v")} AS sim
-       |       FROM c2 JOIN q ON q.qid = c2.qid JOIN v w ON w.vec_id = c2.id),
-       |vis2 AS (SELECT * FROM vis1 UNION ALL SELECT * FROM s2)
-       |SELECT qid AS vec_id, id AS neighbor_id, sim, CAST(rank AS INT) AS rank
-       |FROM (SELECT qid, id, sim,
-       |        row_number() OVER (PARTITION BY qid ORDER BY sim DESC, id) AS rank
-       |      FROM vis2 WHERE id <> qid)
-       |WHERE rank <= 5 ORDER BY vec_id, rank""".stripMargin
-  }
-
-  /** Full replay of [[SimilarityOps.graphSearchPq]] under the fixture
-    * codebooks: the [[graphSearchOracleSql]] walk with every scoring
-    * stage swapped for ADC — per-row codes (8 argmax CASEs), per-query
-    * fixed-point LUTs, the literal norm table, beam cuts ordered by the
-    * ADC quotient (exact integer sums, one double division — bit-stable
-    * across engines), the per-query ADC top-(k·refine) shortlist
-    * (self excluded BEFORE the cut, as in the engine), and the exact
-    * floored-cosine re-rank that produces the answer. */
-  private lazy val graphSearchPqOracleSql: String = {
-    val dim = 64
-    val cos = (a: String, b: String) =>
-      s"floor(${pqCosA(a, b)} * 10000) / 10000"
-    val lutCols = (for { s <- 0 until PqM; cid <- 1 to PqC } yield s"l_${s}_$cid")
-      .mkString(", ")
-    val ncCols = (0 until PqM).map(s => s"code_$s AS nc_$s").mkString(", ")
-    def scoreCte(name: String, candCte: String): String =
-      s"""$name AS (
-         |  SELECT c.qid, c.id,
-         |    CAST(${pqSdSumSql} AS DOUBLE) / sqrt(CAST(${pqSnSumSql} AS DOUBLE)) AS adc
-         |  FROM $candCte c
-         |    JOIN ql q ON q.qid = c.qid
-         |    JOIN bn n ON n.vec_id = c.id,
-         |    nrm)""".stripMargin
-    def beamCte(name: String, visCte: String): String =
-      s"""$name AS (SELECT qid, id FROM (
-         |    SELECT qid, id, row_number() OVER (PARTITION BY qid ORDER BY adc DESC, id) AS rn
-         |    FROM $visCte) WHERE rn <= 8)""".stripMargin
-    def expandCte(name: String, beam: String, vis: String): String =
-      s"""$name AS (SELECT DISTINCT $beam.qid, g.neighbor_id AS id
-         |  FROM $beam JOIN g ON g.vec_id = $beam.id
-         |  WHERE NOT EXISTS (SELECT 1 FROM $vis
-         |                    WHERE $vis.qid = $beam.qid AND $vis.id = g.neighbor_id))""".stripMargin
-    s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |p AS (SELECT a.vec_id AS vec_id, b.vec_id AS neighbor_id,
-       |             ${cos("a.v", "b.v")} AS sim
-       |      FROM v a JOIN v b ON a.vec_id <> b.vec_id),
-       |g AS (SELECT vec_id, neighbor_id FROM (
-       |        SELECT vec_id, neighbor_id,
-       |          row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, neighbor_id) AS rnk
-       |        FROM p) WHERE rnk <= 5),
-       |cz AS (SELECT vec_id, v,
-       |    ${pqCwCosSql(dim)},
-       |    ${pqLutDotsSql(dim)}
-       |  FROM v),
-       |b AS (SELECT vec_id,
-       |    $pqCodeCasesSql
-       |  FROM cz),
-       |bn AS (SELECT vec_id, $ncCols FROM b),
-       |nrm AS (SELECT
-       |    ${pqNrmColsSql(dim)}),
-       |ql AS (SELECT vec_id AS qid, $lutCols FROM cz WHERE vec_id % 10 = 0),
-       |ent AS (SELECT vec_id AS id FROM v WHERE vec_id % 50 = 0),
-       |c0 AS (SELECT ql.qid, ent.id FROM ql CROSS JOIN ent),
-       |${scoreCte("s0", "c0")},
-       |${beamCte("b0", "s0")},
-       |${expandCte("c1", "b0", "s0")},
-       |${scoreCte("s1", "c1")},
-       |vis1 AS (SELECT * FROM s0 UNION ALL SELECT * FROM s1),
-       |${beamCte("b1", "vis1")},
-       |${expandCte("c2", "b1", "vis1")},
-       |${scoreCte("s2", "c2")},
-       |vis2 AS (SELECT * FROM vis1 UNION ALL SELECT * FROM s2),
-       |short AS (SELECT qid, id FROM (
-       |    SELECT qid, id, row_number() OVER (PARTITION BY qid ORDER BY adc DESC, id) AS rn
-       |    FROM vis2 WHERE id <> qid) WHERE rn <= 20),
-       |re AS (SELECT sh.qid AS vec_id, sh.id AS neighbor_id,
-       |    ${cos("a.v", "c.v")} AS sim
-       |  FROM short sh JOIN v a ON a.vec_id = sh.qid JOIN v c ON c.vec_id = sh.id),
-       |rk AS (SELECT *,
-       |    row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, neighbor_id) AS rank
-       |  FROM re)
-       |SELECT vec_id, neighbor_id, sim, CAST(rank AS INT) AS rank
-       |FROM rk WHERE rank <= 5 ORDER BY vec_id, rank""".stripMargin
-  }
-
-  /** Full replay of [[SimilarityOps.sq8TopK]] (pruned=false) /
-    * [[SimilarityOps.ivfSq8TopK]] (pruned=true, fixture centroids,
-    * nProbe=2): symmetric int8 encode, exact-integer quantized-cosine
-    * ranking (one double division of exact longs), top-(k·refine)
-    * shortlist, floored-cosine re-rank. */
-  private def sq8OracleSql(pruned: Boolean): String = {
-    val cents = fixtureCentroids(64)
-    def centCos(vec: String, alias: String): String = cents.map { case (cid, c) =>
-      val arr = c.mkString("[", ", ", "]")
-      s"(list_dot_product($vec, $arr) / (sqrt(list_dot_product($vec, $vec)) * " +
-        s"sqrt(list_dot_product($arr, $arr)))) AS $alias$cid"
-    }.mkString(",\n    ")
-    val coarseAssign = {
-      val arms = (1 until KmFixtureK).map { i =>
-        val conds = ((i + 1) to KmFixtureK).map(j => s"cc_$i >= cc_$j").mkString(" AND ")
-        s"WHEN $conds THEN $i"
-      }.mkString(" ")
-      s"CASE $arms ELSE $KmFixtureK END AS cell"
-    }
-    val coarseCols = if (pruned) s",\n        ${centCos("v", "cc_")}" else ""
-    val cellCol = if (pruned) s", $coarseAssign" else ""
-    val prunedCtes =
-      if (!pruned) ""
-      else
-        s""",
-           |qcs AS (SELECT ${centCos("qv0", "qc_")}
-           |        FROM (SELECT v AS qv0 FROM v WHERE vec_id = 0)),
-           |probe AS (
-           |  SELECT cid FROM (
-           |    ${(1 to KmFixtureK).map(c => s"SELECT $c AS cid, qc_$c AS qc FROM qcs").mkString(" UNION ALL\n    ")})
-           |  ORDER BY qc DESC, cid LIMIT 2)""".stripMargin
-    val whereCell = if (pruned) " AND c.cell IN (SELECT cid FROM probe)" else ""
-    s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |m AS (SELECT vec_id, v,
-       |        list_max(list_transform(v, x -> abs(x))) AS mx$coarseCols FROM v),
-       |c AS (SELECT vec_id,
-       |        list_transform(v, x -> CASE WHEN mx = 0 THEN 0
-       |          ELSE greatest(-127, least(127, floor(x * 127.0 / mx + 0.5))) END) AS c$cellCol
-       |      FROM m),
-       |qc AS (SELECT c AS qc, list_dot_product(c, c) AS qnrm FROM c WHERE vec_id = 0)$prunedCtes,
-       |sc AS (SELECT vec_id,
-       |         CAST(list_dot_product(c.c, qc) AS BIGINT) AS q_dot,
-       |         list_dot_product(c.c, c.c) AS nrm, qnrm
-       |       FROM c, qc WHERE 1 = 1$whereCell),
-       |short AS (SELECT vec_id, q_dot FROM sc WHERE nrm > 0
-       |          ORDER BY (CAST(q_dot AS DOUBLE) / (sqrt(nrm) * sqrt(qnrm))) DESC, vec_id
-       |          LIMIT 80),
-       |q AS (SELECT v AS qv FROM v WHERE vec_id = 0),
-       |re AS (SELECT s.vec_id, s.q_dot,
-       |        floor((list_dot_product(w.v, qv) /
-       |              (sqrt(list_dot_product(w.v, w.v)) * sqrt(list_dot_product(qv, qv)))) * 10000) / 10000 AS sim
-       |       FROM short s JOIN v w ON w.vec_id = s.vec_id, q)
-       |SELECT vec_id, q_dot, sim FROM re ORDER BY sim DESC, vec_id LIMIT 20""".stripMargin
-  }
-
-  /** Full replay of [[SimilarityOps.mmrSelect]] (k=5, pool=40, λ=7/10):
-    * the relevance pool cut, then each greedy pick as an unrolled CTE —
-    * candidates = pool minus selected, penalty = max fixed-point cosine
-    * against any selected row, argmax of `7·rel − 3·max_sim` with ties to
-    * the smallest id. All scores are exact integers, so every argmax is
-    * engine-reproducible. */
-  private def fpCosPpmSql(a: String, b: String): String =
-    s"CAST(floor((list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a)) * " +
-      s"sqrt(list_dot_product($b, $b)))) * 1000000) AS BIGINT)"
-
-  /** The s1..sel5 greedy-pick CTE chain over an existing
-    * `pool(vec_id, v, rel)` — shared by [[mmrOracleSql]] (rel = query
-    * cosine) and [[serveOracleSql]] (rel = MaxSim over IVF candidates). */
-  private def mmrPickCtesSql: String = {
-    val picks = (2 to 5).map { i =>
-      s"""c$i AS (
-         |  SELECT p.vec_id, p.rel, max(${fpCosPpmSql("p.v", "s.v")}) AS ms, first(p.v) AS v
-         |  FROM pool p CROSS JOIN sel${i - 1} s
-         |  WHERE p.vec_id NOT IN (SELECT vec_id FROM sel${i - 1})
-         |  GROUP BY p.vec_id, p.rel),
-         |s$i AS (SELECT vec_id, v, $i AS pick, 7 * rel - 3 * ms AS mmr FROM c$i
-         |        ORDER BY mmr DESC, vec_id LIMIT 1),
-         |sel$i AS (SELECT * FROM sel${i - 1} UNION ALL SELECT * FROM s$i)""".stripMargin
-    }.mkString(",\n")
-    s"""s1 AS (SELECT vec_id, v, 1 AS pick, 7 * rel AS mmr FROM pool
-       |       ORDER BY rel DESC, vec_id LIMIT 1),
-       |sel1 AS (SELECT * FROM s1),
-       |$picks""".stripMargin
-  }
-
-  private lazy val mmrOracleSql: String =
-    s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |q AS (SELECT v AS qv FROM v WHERE vec_id = 0),
-       |rel AS (SELECT vec_id, v, ${fpCosPpmSql("v.v", "qv")} AS rel FROM v, q),
-       |pool AS (SELECT vec_id, v, rel FROM rel ORDER BY rel DESC, vec_id LIMIT 40),
-       |$mmrPickCtesSql
-       |SELECT vec_id, pick, mmr FROM sel5 ORDER BY pick""".stripMargin
-
-  /** Full replay of the composed serving pipeline (g_serve_pipeline):
-    * IVF candidate routing (fixture-centroid cell argmax, probe-2 IN
-    * filter) → MaxSim late-interaction scoring of the candidates (the
-    * g_maxsim 8×8 replay, integers) → top-20 pool by (maxsim, id) → the
-    * 5-pick MMR chain with rel = maxsim and the floored-cosine penalty.
-    * Every stage is exact integer math or a replayed argmax — the whole
-    * stack is hash-gated with no tolerance. */
-  private lazy val serveOracleSql: String = {
-    val cents = fixtureCentroids(64)
-    def centCos(vec: String, alias: String): String = cents.map { case (cid, c) =>
-      val arr = c.mkString("[", ", ", "]")
-      s"(list_dot_product($vec, $arr) / (sqrt(list_dot_product($vec, $vec)) * " +
-        s"sqrt(list_dot_product($arr, $arr)))) AS $alias$cid"
-    }.mkString(",\n    ")
-    val coarseAssign = {
-      val arms = (1 until KmFixtureK).map { i =>
-        val conds = ((i + 1) to KmFixtureK).map(j => s"cc_$i >= cc_$j").mkString(" AND ")
-        s"WHEN $conds THEN $i"
-      }.mkString(" ")
-      s"CASE $arms ELSE $KmFixtureK END AS cell"
-    }
-    s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |q AS (SELECT v AS qv FROM v WHERE vec_id = 0),
-       |cz AS (SELECT vec_id, v,
-       |    ${centCos("v", "cc_")},
-       |    $coarseAssign
-       |  FROM v),
-       |qcs AS (SELECT ${centCos("qv", "qc_")} FROM q),
-       |probe AS (
-       |  SELECT cid FROM (
-       |    ${(1 to KmFixtureK).map(c => s"SELECT $c AS cid, qc_$c AS qc FROM qcs").mkString(" UNION ALL\n    ")})
-       |  ORDER BY qc DESC, cid LIMIT 2),
-       |cand AS (SELECT vec_id, v FROM cz WHERE cell IN (SELECT cid FROM probe)),
-       |pair AS (
-       |  SELECT d.vec_id, ti.i,
-       |    CASE WHEN list_dot_product(list_slice(qv, i*8+1, (i+1)*8),
-       |                               list_slice(qv, i*8+1, (i+1)*8)) = 0
-       |           OR list_dot_product(list_slice(d.v, j*8+1, (j+1)*8),
-       |                               list_slice(d.v, j*8+1, (j+1)*8)) = 0
-       |         THEN 0
-       |         ELSE CAST(floor((list_dot_product(list_slice(qv, i*8+1, (i+1)*8),
-       |                                           list_slice(d.v, j*8+1, (j+1)*8)) /
-       |              (sqrt(list_dot_product(list_slice(qv, i*8+1, (i+1)*8),
-       |                                     list_slice(qv, i*8+1, (i+1)*8))) *
-       |               sqrt(list_dot_product(list_slice(d.v, j*8+1, (j+1)*8),
-       |                                     list_slice(d.v, j*8+1, (j+1)*8))))) * 1000000) AS BIGINT)
-       |    END AS s
-       |  FROM cand d, q, range(0, 8) ti(i), range(0, 8) tj(j)),
-       |mx AS (SELECT vec_id, i, max(s) AS ms FROM pair GROUP BY vec_id, i),
-       |tot AS (SELECT vec_id, CAST(sum(ms) AS BIGINT) AS rel FROM mx GROUP BY vec_id),
-       |pool AS (SELECT t.vec_id, w.v, t.rel FROM tot t JOIN v w ON w.vec_id = t.vec_id
-       |         ORDER BY t.rel DESC, t.vec_id LIMIT 20),
-       |$mmrPickCtesSql
-       |SELECT vec_id, pick, mmr FROM sel5 ORDER BY pick""".stripMargin
-  }
-
   /** Fixed lexical query for the BM25 rows: one rare token (`dup`, df a
     * few % of docs), two common ones — the idf spread exercises both ends
     * of the saturation curve. */
-  private val Bm25Query = Seq("dup", "spark", "customer")
+  private[graft] val Bm25Query = Seq("dup", "spark", "customer")
 
   /** The BM25 scoring CTEs over `documents` — shared by [[bm25OracleSql]]
     * and [[hybridOracleSql]]. Replays [[graft.operators.RetrievalOps]]'s
@@ -583,7 +192,7 @@ object SparkEntry {
     * via Double.toString (round-trips to the identical double), per-term
     * contributions quantize to DECIMAL(18,8) before the order-free exact
     * sum, final score floored at 4 digits. */
-  private lazy val bm25ScoreCtesSql: String = {
+  private[graft] lazy val bm25ScoreCtesSql: String = {
     val terms = Bm25Query.map(t => s"'$t'").mkString(", ")
     val k1 = graft.operators.RetrievalOps.DefaultK1
     val b = graft.operators.RetrievalOps.DefaultB
@@ -605,1639 +214,61 @@ object SparkEntry {
        |       GROUP BY doc_id)""".stripMargin
   }
 
-  /** Curriculum-ordered packing replayed in SQL — shared by
-    * g_curriculum (batch) and q_stream_curriculum (the streamed
-    * periodic re-manifest): one truth, one hash. */
-  private lazy val curriculumOracleSql: String =
-
-      // rank strata (4 buckets) -> the curriculum order bucket*P + perm
-      // -> the one-window packing replay, bucket carried through
-      """WITH s AS (SELECT doc_id,
-        |        CAST((len(list_distinct(string_split(coalesce(text, ''), ' '))) * 1000000)
-        |             // len(string_split(coalesce(text, ''), ' ')) AS BIGINT) AS score
-        |      FROM documents),
-        |r AS (SELECT doc_id, score,
-        |        CAST(row_number() OVER (ORDER BY score, doc_id) AS BIGINT) - 1 AS rank,
-        |        CAST(count(*) OVER () AS BIGINT) AS n
-        |      FROM s),
-        |bkt AS (SELECT doc_id, CAST((rank * 4) // n AS BIGINT) AS bucket FROM r),
-        |d AS (SELECT documents.doc_id,
-        |        CAST(len(string_split(coalesce(text, ''), ' ')) AS BIGINT) AS tok, bucket,
-        |        bucket * 2147483647 + ((documents.doc_id % 2147483647) * 62089911) % 2147483647 AS ord
-        |      FROM documents JOIN bkt ON documents.doc_id = bkt.doc_id),
-        |o AS (SELECT doc_id, tok, bucket,
-        |        CAST(sum(tok) OVER (ORDER BY ord, doc_id
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) - tok AS off
-        |      FROM d WHERE tok > 0),
-        |t AS (SELECT CAST(coalesce(sum(tok), 0) AS BIGINT) AS tt FROM d WHERE tok > 0),
-        |sp AS (SELECT doc_id, bucket, tok, off,
-        |        unnest(generate_series(off // 128, (off + tok - 1) // 128)) AS seq_id
-        |      FROM o)
-        |SELECT sp.seq_id,
-        |       CAST(greatest(off, seq_id * 128) - seq_id * 128 AS BIGINT) AS seq_pos,
-        |       doc_id, bucket,
-        |       CAST(greatest(off, seq_id * 128) - off AS BIGINT) AS doc_start,
-        |       CAST(least(off + tok, (seq_id + 1) * 128)
-        |            - greatest(off, seq_id * 128) AS BIGINT) AS len
-        |FROM sp, t WHERE sp.seq_id < tt // 128
-        |ORDER BY seq_id, seq_pos""".stripMargin
-
-  /** DuckDB expressions for the shared logit feature template — ONE
-    * list, asserted against [[graft.operators.TextOps.LogitXCols]], so
-    * the unrolled-CTE replay scales with d: adding a feature means one
-    * Spark column in [[graft.operators.TextOps.logitFeatures]] plus one
-    * entry here, and every logit oracle (train, eval, stream twin)
-    * regenerates. Each is a ratio of exact integer counts (or an exact
-    * count scaled by a constant) — bit-identical doubles cross-engine. */
-  private lazy val logitFeatureSql: Seq[(String, String)] = {
-    val stops = graft.operators.TextOps.EnStopwords.map(s => s"'$s'").mkString(", ")
-    val nTok = "len(string_split(text, ' '))"
-    val fs = Seq(
-      "x0" -> "CAST(1.0 AS DOUBLE)",
-      "x1" -> (s"CAST(len(list_filter(string_split(text, ' '), t -> t IN ($stops))) AS DOUBLE)"
-        + s" / $nTok"),
-      "x2" -> s"CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE) / $nTok",
-      "x3" -> "n_chars / 1000.0",
-      "x4" -> ("length(regexp_replace(text, '[a-zA-Z0-9\\s]', '', 'g'))"
-        + " / CAST(greatest(length(text), 1) AS DOUBLE)"),
-      "x5" -> s"((length(text) - ($nTok - 1)) / CAST($nTok AS DOUBLE)) / 10.0",
-      "x6" -> ("length(regexp_replace(text, '[^A-Z]', '', 'g'))"
-        + " / CAST(greatest(length(text), 1) AS DOUBLE)"))
-    require(fs.map(_._1) == graft.operators.TextOps.LogitXCols,
-      "logit oracle feature list drifted from TextOps.LogitXCols")
-    fs
-  }
-
-  /** The full-batch logistic-GD trainer replayed in SQL — shared by
-    * g_logit_train (batch) and q_stream_logit (streamed feature
-    * maintenance). The whole descent unrolls as CTE pairs (g_s = the
-    * step's exact-integer gradient sums, w_s = the updated unit
-    * weights), mirroring [[graft.operators.TextOps.logitTrain]]
-    * expression-for-expression: `(units · 1e-8) · x` doubles, per-row
-    * contributions floored to 1e-8 units and summed as DECIMAL(38,0),
-    * the power-of-two learning rate applied by double floor. Generated
-    * programmatically from [[logitFeatureSql]] (the xCols seam) and
-    * [[GraftConf.LogitStepsDefault]], so d and the step count each live
-    * in ONE place. */
-  private lazy val logitTrainOracleSql: String = descentOracleSql(
-    "CASE WHEN lang = 'en' THEN CAST(1.0 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END",
-    zz => s"1.0 / (1.0 + exp(-($zz)))")
-
-  /** The Poisson (log-link) GLM descent replayed in SQL — the SAME
-    * unrolled-CTE generator as the logit oracle with the mean function
-    * swapped to `exp(z)` and the outcome the token count in kilotokens
-    * (pre-scaled so exp stays O(0.1); see
-    * [[graft.operators.TextOps.glmTrainLog]]). */
-  private lazy val glmPoissonOracleSql: String = descentOracleSql(
-    "len(string_split(text, ' ')) / 1000.0",
-    zz => s"exp($zz)")
-
-  /** Shared unrolled-CTE generator for the full-batch GD family: one CTE
-    * pair per step (g_s = the exact-integer gradient sums over
-    * `x · (μ(z) − y)`, w_s = the updated unit weights), parameterized by
-    * the label expression and the mean function μ — exactly
-    * [[graft.operators.TextOps]]' `gdDescend` seam, SQL side. */
-  private def descentOracleSql(ySql: String, muOf: String => String): String = {
-    val xs = logitFeatureSql.map(_._1)
-    s"""WITH f AS (SELECT doc_id,
-      |  $ySql AS y,
-      |  ${logitFeatureSql.map { case (n, e) => s"$e AS $n" }.mkString(",\n  ")}
-      |FROM documents)""".stripMargin + descentLoopSql(xs, muOf)
-  }
-
-  /** Just the weight-update CTE chain of the unrolled-CTE GD replay
-    * (`,w0 AS ... ,gS/wS AS ...` over an already-defined feature CTE
-    * `f(doc_id, y, xs...)`; the final weights live in `w<steps>` as
-    * integer 1e-8 units `u0..`) — split out of [[descentLoopSql]] so a
-    * consumer can score a DIFFERENT frame with the trained weights (the
-    * Bradley–Terry reward ranker scores every document with weights
-    * fitted on the pairwise diffs). */
-  private def descentStepsSql(xs: Seq[String], muOf: String => String): String = {
-    val steps = GraftConf.LogitStepsDefault
-    def z(u: Int => String): String =
-      xs.zipWithIndex.map { case (x, j) => s"(${u(j)} * 1e-8) * $x" }.mkString(" + ")
-    val sb = new StringBuilder
-    sb ++= s""",
-      |w0 AS (SELECT ${xs.indices.map(j => s"CAST(0 AS BIGINT) AS u$j").mkString(", ")})"""
-      .stripMargin
-    for (s <- 1 to steps) {
-      val zz = z(j => s"u$j")
-      sb ++= s""",
-        |g$s AS (SELECT ${xs.zipWithIndex.map { case (x, j) =>
-          s"sum(CAST(floor($x * (${muOf(zz)} - y) * 1e8) AS DECIMAL(38,0))) AS g$j"
-        }.mkString(", ")}
-        |  FROM f CROSS JOIN w${s - 1}),
-        |w$s AS (SELECT ${xs.indices.map(j =>
-          s"u$j - CAST(floor(CAST(g$j AS DOUBLE) / 4096.0) AS BIGINT) AS u$j").mkString(", ")}
-        |  FROM w${s - 1} CROSS JOIN g$s)""".stripMargin
-    }
-    sb.toString
-  }
-
-  /** The descent loop + final scoring of the unrolled-CTE GD replay,
-    * over an ALREADY-DEFINED feature CTE `f(doc_id, y, xs...)` — shared
-    * by [[descentOracleSql]] (features from `documents`) and the Platt
-    * calibrator (features from another descent's scores). */
-  private def descentLoopSql(xs: Seq[String], muOf: String => String): String = {
-    val steps = GraftConf.LogitStepsDefault
-    def z(u: Int => String): String =
-      xs.zipWithIndex.map { case (x, j) => s"(${u(j)} * 1e-8) * $x" }.mkString(" + ")
-    descentStepsSql(xs, muOf) + s"""
-      |SELECT doc_id, y AS label,
-      |       floor((${z(j => s"u$j")}) * 1000000) / 1000000 AS logit
-      |FROM f CROSS JOIN w$steps ORDER BY doc_id""".stripMargin
-  }
-
-  /** Platt scaling replayed in SQL: the whole [[logitTrainOracleSql]]
-    * descent as a subquery, its scores re-entering a SECOND unrolled
-    * descent as the 1-d feature (bias + raw logit) — a descent over a
-    * descent from the same generator. */
-  private lazy val logitPlattOracleSql: String = {
-    val core = logitTrainOracleSql.stripSuffix(" ORDER BY doc_id")
-    s"""WITH scored AS ($core),
-      |f AS (SELECT doc_id, label AS y, CAST(1.0 AS DOUBLE) AS x0,
-      |             logit AS x1 FROM scored)""".stripMargin +
-      descentLoopSql(Seq("x0", "x1"), zz => s"1.0 / (1.0 + exp(-($zz)))")
-  }
-
-  /** The unigram family's shared DuckDB materializations — the
-    * [[phashSharedDdl]] discipline (one connection per checker run;
-    * `IF NOT EXISTS` makes the first family member pay each derivation
-    * once, order-free, definitions from ONE lazy val so they cannot
-    * drift): the distinct-word table, the substring seed, the round-1
-    * best paths under the capped seed vocabulary (the brute-force
-    * RECURSIVE-CTE enumeration of every segmentation per word, winner by
-    * the kernel's exact `(cost, chr(1)-joined path)` tie-break; max word
-    * length 8 bounds the enumeration at ~tetranacci(8) paths), the
-    * hard-EM piece counts, the pruned round-2 vocabulary, and the round-2
-    * best paths. Split in three cumulative prefixes so a subset check of
-    * a round-1 row never pays the round-2 enumeration. */
-  private lazy val unigramSeedDdl: String =
-    """CREATE TEMP TABLE IF NOT EXISTS graft_ug_w AS
-      |SELECT word, CAST(count(*) AS BIGINT) AS freq FROM (
-      |  SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-      |WHERE len(word) > 0 GROUP BY word;
-      |CREATE TEMP TABLE IF NOT EXISTS graft_ug_seed AS
-      |SELECT piece, CAST(sum(freq) AS BIGINT) AS cnt FROM (
-      |  SELECT freq, unnest(list_filter(flatten(
-      |    list_transform(range(1, len(word) + 1), s ->
-      |      list_transform(range(1, 5), l ->
-      |        CASE WHEN s + l - 1 <= len(word)
-      |             THEN substring(word, CAST(s AS INT), CAST(l AS INT)) END))),
-      |    p -> p IS NOT NULL)) AS piece
-      |  FROM graft_ug_w)
-      |GROUP BY piece;
-      |""".stripMargin
-
-  private lazy val unigramRound1Ddl: String =
-    unigramSeedDdl +
-      """CREATE TEMP TABLE IF NOT EXISTS graft_ug_best AS
-      |WITH RECURSIVE
-      |cap AS (SELECT piece, cnt FROM graft_ug_seed
-      |        ORDER BY cnt DESC, piece LIMIT 64),
-      |vocab AS (SELECT DISTINCT piece, cnt FROM (
-      |  SELECT piece, cnt FROM cap
-      |  UNION ALL SELECT piece, cnt FROM graft_ug_seed WHERE len(piece) = 1)),
-      |tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS t FROM vocab),
-      |v AS (SELECT piece,
-      |        CAST(floor((ln(CAST(t AS DOUBLE)) - ln(CAST(cnt AS DOUBLE)))
-      |             * 100000000) AS BIGINT) AS u
-      |      FROM vocab CROSS JOIN tot),
-      |seg AS (
-      |  SELECT word, freq, CAST(0 AS BIGINT) AS pos,
-      |         CAST(0 AS BIGINT) AS cost, CAST('' AS VARCHAR) AS path
-      |  FROM graft_ug_w
-      |  UNION ALL
-      |  SELECT s.word, s.freq, s.pos + len(v.piece), s.cost + v.u,
-      |         s.path || chr(1) || v.piece
-      |  FROM seg s JOIN v
-      |    ON substring(s.word, CAST(s.pos + 1 AS INT), len(v.piece)) = v.piece
-      |  WHERE s.pos < len(s.word)),
-      |b AS (
-      |  SELECT word, freq, path,
-      |         row_number() OVER (PARTITION BY word ORDER BY cost, path) AS rn
-      |  FROM seg WHERE pos = len(word))
-      |SELECT word, freq, path FROM b WHERE rn = 1;
-      |CREATE TEMP TABLE IF NOT EXISTS graft_ug_emc AS
-      |SELECT piece, CAST(sum(freq) AS BIGINT) AS cnt FROM (
-      |  SELECT freq, unnest(string_split(path, chr(1))) AS piece
-      |  FROM graft_ug_best) x
-      |WHERE piece <> '' GROUP BY piece;
-      |""".stripMargin
-
-  private lazy val unigramRound2Ddl: String =
-    unigramRound1Ddl +
-      """CREATE TEMP TABLE IF NOT EXISTS graft_ug_vocab2 AS
-      |WITH
-      |tot2 AS (SELECT CAST(sum(cnt) AS BIGINT) AS t FROM graft_ug_emc),
-      |u2 AS (SELECT piece, cnt,
-      |        CAST(floor((ln(CAST(t AS DOUBLE)) - ln(CAST(cnt AS DOUBLE)))
-      |             * 100000000) AS BIGINT) AS u,
-      |        CAST(floor(ln(CAST(t AS DOUBLE)) * 100000000) AS BIGINT) AS uc
-      |      FROM graft_ug_emc CROSS JOIN tot2),
-      |ch2 AS (SELECT piece AS c2, u AS cu FROM u2 WHERE len(piece) = 1),
-      |alt2 AS (SELECT piece, cnt, u,
-      |          CAST(sum(coalesce(cu, uc)) AS BIGINT) AS alt
-      |        FROM (SELECT piece, cnt, u, uc,
-      |                unnest(list_transform(range(1, len(piece) + 1),
-      |                  i -> substring(piece, CAST(i AS INT), 1))) AS c2
-      |              FROM u2 WHERE len(piece) >= 2) x
-      |        LEFT JOIN ch2 USING (c2)
-      |        GROUP BY piece, cnt, u),
-      |k2 AS (SELECT piece, cnt,
-      |        CAST(row_number() OVER (ORDER BY
-      |          CAST(CAST(cnt AS HUGEINT) * (alt - u) AS BIGINT) DESC, piece)
-      |          AS BIGINT) AS rank
-      |      FROM alt2)
-      |SELECT DISTINCT piece, cnt FROM (
-      |  SELECT piece, cnt FROM k2 WHERE rank <= 16
-      |  UNION ALL SELECT piece, cnt FROM graft_ug_emc WHERE len(piece) = 1);
-      |CREATE TEMP TABLE IF NOT EXISTS graft_ug_best2 AS
-      |WITH RECURSIVE
-      |tot3 AS (SELECT CAST(sum(cnt) AS BIGINT) AS t FROM graft_ug_vocab2),
-      |v2 AS (SELECT piece,
-      |        CAST(floor((ln(CAST(t AS DOUBLE)) - ln(CAST(cnt AS DOUBLE)))
-      |             * 100000000) AS BIGINT) AS u
-      |      FROM graft_ug_vocab2 CROSS JOIN tot3),
-      |seg2 AS (
-      |  SELECT word, freq, CAST(0 AS BIGINT) AS pos,
-      |         CAST(0 AS BIGINT) AS cost, CAST('' AS VARCHAR) AS path
-      |  FROM graft_ug_w
-      |  UNION ALL
-      |  SELECT s.word, s.freq, s.pos + len(v.piece), s.cost + v.u,
-      |         s.path || chr(1) || v.piece
-      |  FROM seg2 s JOIN v2 v
-      |    ON substring(s.word, CAST(s.pos + 1 AS INT), len(v.piece)) = v.piece
-      |  WHERE s.pos < len(s.word)),
-      |b2 AS (
-      |  SELECT word, freq, path,
-      |         row_number() OVER (PARTITION BY word ORDER BY cost, path) AS rn
-      |  FROM seg2 WHERE pos = len(word))
-      |SELECT word, freq, path FROM b2 WHERE rn = 1;
-      |""".stripMargin
-
-  /** The SentencePiece prune step replayed in SQL: the same seed and
-    * integer nll units, the char-fallback loss
-    * `cnt · (Σ_ch nll(ch) − nll(piece))` (missing standalone chars at
-    * the cnt = 1 ceiling), the (loss desc, piece) rank, top-32 kept. */
-  private lazy val unigramPruneOracleSql: String =
-    unigramSeedDdl +
-      s"""WITH
-      |tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS t FROM graft_ug_seed),
-      |u AS (SELECT piece, cnt,
-      |        CAST(floor((ln(CAST(t AS DOUBLE)) - ln(CAST(cnt AS DOUBLE)))
-      |             * 100000000) AS BIGINT) AS u,
-      |        CAST(floor(ln(CAST(t AS DOUBLE)) * 100000000) AS BIGINT) AS uc
-      |      FROM graft_ug_seed CROSS JOIN tot),
-      |ch AS (SELECT piece AS c2, u AS cu FROM u WHERE len(piece) = 1),
-      |alt AS (SELECT piece, cnt, u,
-      |          CAST(sum(coalesce(cu, uc)) AS BIGINT) AS alt
-      |        FROM (SELECT piece, cnt, u, uc,
-      |                unnest(list_transform(range(1, len(piece) + 1),
-      |                  i -> substring(piece, CAST(i AS INT), 1))) AS c2
-      |              FROM u WHERE len(piece) >= 2) x
-      |        LEFT JOIN ch USING (c2)
-      |        GROUP BY piece, cnt, u),
-      |r AS (SELECT piece, cnt,
-      |        CAST(CAST(cnt AS HUGEINT) * (alt - u) AS BIGINT) AS loss
-      |      FROM alt),
-      |k AS (SELECT piece, cnt, loss,
-      |        CAST(row_number() OVER (ORDER BY loss DESC, piece) AS BIGINT) AS rank
-      |      FROM r)
-      |SELECT piece, cnt, loss, rank FROM k WHERE rank <= 32
-      |ORDER BY rank""".stripMargin
-
-  /** The hard-EM step's visible tail: the re-estimated piece counts are
-    * the shared `graft_ug_emc` materialization. */
-  private lazy val unigramStepOracleSql: String =
-    unigramRound1Ddl +
-      """SELECT piece, cnt FROM graft_ug_emc
-      |ORDER BY cnt DESC, piece LIMIT 50""".stripMargin
-
-  /** The composed trainer pipeline replayed in SQL, every stage nested
-    * via the shared materializations: the EM-step counts re-enter the
-    * prune's char-fallback loss rank (`graft_ug_vocab2`), and the SECOND
-    * brute-force segmentation enumeration under the re-derived units
-    * (`graft_ug_best2`) encodes every word. A word the pruned vocabulary
-    * cannot cover has no complete path — LEFT JOIN + coalesce(0) mirrors
-    * the kernel's empty-array contract. */
-  private lazy val unigramPipelineOracleSql: String =
-    unigramRound2Ddl +
-      """WITH enc2 AS (SELECT word,
-      |          CAST(len(string_split(path, chr(1))) - 1 AS BIGINT) AS n
-      |        FROM graft_ug_best2),
-      |dw AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word
-      |       FROM documents)
-      |SELECT doc_id, CAST(sum(coalesce(n, 0)) AS BIGINT) AS n_tokens,
-      |       CAST(count(*) AS BIGINT) AS n_words
-      |FROM dw LEFT JOIN enc2 USING (word)
-      |WHERE len(word) > 0
-      |GROUP BY doc_id ORDER BY doc_id""".stripMargin
-
-  /** The corpus encode replayed in SQL: per-word token counts from the
-    * SAME best-path enumeration (the path is `chr(1)`-joined, so pieces
-    * = len(split) − 1), the corpus words re-exploded and joined — the
-    * oracle pays the join per occurrence exactly like the engine. LEFT
-    * JOIN + coalesce(0), not INNER: the engine contract
-    * (unigramEncodeFromWords) keeps a word the vocabulary cannot cover
-    * VISIBLE as a 0-token word — equivalent here only because the capped
-    * seed vocabulary contains every single character, but the oracle must
-    * encode the contract, not the coincidence. */
-  private lazy val unigramEncodeOracleSql: String =
-    unigramRound1Ddl +
-      """WITH enc AS (SELECT word,
-      |          CAST(len(string_split(path, chr(1))) - 1 AS BIGINT) AS n
-      |        FROM graft_ug_best),
-      |dw AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word
-      |       FROM documents)
-      |SELECT doc_id, CAST(sum(coalesce(n, 0)) AS BIGINT) AS n_tokens,
-      |       CAST(count(*) AS BIGINT) AS n_words
-      |FROM dw LEFT JOIN enc USING (word)
-      |WHERE len(word) > 0
-      |GROUP BY doc_id ORDER BY doc_id""".stripMargin
-
-  /** The two-EM-round trainer replayed in SQL: round-2 piece counts from
-    * the `graft_ug_best2` enumeration (EM under the PRUNED round-1
-    * vocabulary — the materializations nest seed → EM → prune → EM), then
-    * the prune loss/rank replay keeps the top 8. Gates that the driver
-    * loop's second iteration really segments under the re-derived units —
-    * a drifted count or tie-break anywhere in EITHER round moves a rank. */
-  private lazy val unigramTrainOracleSql: String =
-    unigramRound2Ddl +
-      """WITH emc2 AS (SELECT piece, CAST(sum(freq) AS BIGINT) AS cnt FROM (
-      |  SELECT freq, unnest(string_split(path, chr(1))) AS piece
-      |  FROM graft_ug_best2) x
-      |  WHERE piece <> '' GROUP BY piece),
-      |tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS t FROM emc2),
-      |u AS (SELECT piece, cnt,
-      |        CAST(floor((ln(CAST(t AS DOUBLE)) - ln(CAST(cnt AS DOUBLE)))
-      |             * 100000000) AS BIGINT) AS u,
-      |        CAST(floor(ln(CAST(t AS DOUBLE)) * 100000000) AS BIGINT) AS uc
-      |      FROM emc2 CROSS JOIN tot),
-      |ch AS (SELECT piece AS c2, u AS cu FROM u WHERE len(piece) = 1),
-      |alt AS (SELECT piece, cnt, u,
-      |          CAST(sum(coalesce(cu, uc)) AS BIGINT) AS alt
-      |        FROM (SELECT piece, cnt, u, uc,
-      |                unnest(list_transform(range(1, len(piece) + 1),
-      |                  i -> substring(piece, CAST(i AS INT), 1))) AS c2
-      |              FROM u WHERE len(piece) >= 2) x
-      |        LEFT JOIN ch USING (c2)
-      |        GROUP BY piece, cnt, u),
-      |r AS (SELECT piece, cnt,
-      |        CAST(CAST(cnt AS HUGEINT) * (alt - u) AS BIGINT) AS loss
-      |      FROM alt),
-      |k AS (SELECT piece, cnt, loss,
-      |        CAST(row_number() OVER (ORDER BY loss DESC, piece) AS BIGINT) AS rank
-      |      FROM r)
-      |SELECT piece, cnt, loss, rank FROM k WHERE rank <= 8
-      |ORDER BY rank""".stripMargin
-
-  /** The pHash pipeline replayed in SQL, generated from the SAME
-    * [[graft.operators.MultimodalOps.DctBasis1024]] constants the Spark
-    * kernel embeds (single source — no cross-engine basis drift): the
-    * midpoint-strata frame indices, the 8×8 integer DCT per 64-byte
-    * frame (ASCII fixture: char == byte, the established g_frame_sample
-    * equivalence), and the 63-AC lower-median bit rule — as CTEs ending
-    * in `h` (one row per sampled frame with its hash), shared by every
-    * pHash oracle. */
-  private lazy val framePhashHashCtes: String = {
-    val ct = graft.operators.MultimodalOps.DctBasis1024.mkString("[", ", ", "]")
-    s"""WITH m AS (SELECT doc_id AS media_id, text AS content,
-      |        CAST(octet_length(CAST(text AS BLOB)) AS BIGINT) // 64 AS nf
-      |      FROM documents),
-      |g AS (SELECT media_id, content, nf, CAST(least(8, nf) AS BIGINT) AS kk
-      |      FROM m WHERE nf > 0),
-      |x AS (SELECT media_id, content, nf, kk,
-      |        unnest(generate_series(0, kk - 1)) AS frame_ix FROM g),
-      |y AS (SELECT media_id, content, frame_ix,
-      |        ((2 * frame_ix + 1) * nf) // (2 * kk) AS frame_idx FROM x),
-      |p AS (SELECT media_id, frame_ix,
-      |        list_transform(range(0, 64), i ->
-      |          CAST(ascii(substring(content,
-      |            CAST(frame_idx * 64 + i + 1 AS INT), 1)) AS BIGINT)) AS px
-      |      FROM y),
-      |c AS (SELECT media_id, frame_ix,
-      |        list_transform(range(0, 64), kk ->
-      |          CAST(list_sum(list_transform(range(0, 64), i ->
-      |            ($ct)[CAST((kk // 8) * 8 + (i // 8) + 1 AS INT)]
-      |            * ($ct)[CAST((kk % 8) * 8 + (i % 8) + 1 AS INT)]
-      |            * px[CAST(i + 1 AS INT)])) AS BIGINT)) AS coef
-      |      FROM p),
-      |cm AS (SELECT media_id, frame_ix, coef,
-      |        list_sort(coef[2:64])[32] AS med FROM c),
-      |h AS (SELECT media_id, frame_ix,
-      |        CAST(list_sum(list_transform(range(1, 64), b ->
-      |          CASE WHEN coef[CAST(b + 1 AS INT)] > med
-      |               THEN (CAST(1 AS BIGINT) << CAST(b - 1 AS INT))
-      |               ELSE CAST(0 AS BIGINT) END)) AS BIGINT) AS phash
-      |      FROM cm)""".stripMargin
-  }
-
-  /** The pHash family's shared DuckDB materializations. The checker runs
-    * every oracle in ONE connection (tools/check.py and the driver's gate
-    * both do), so the expensive derivations — the per-frame integer DCT
-    * (`graft_ph_h`) and the brute-force all-pairs truth at dist ≤ 3
-    * (`graft_ph_pairs`) — are `CREATE TEMP TABLE IF NOT EXISTS`
-    * statements prepended to EVERY family row's SQL: the first member
-    * executed pays the cost once, later members reuse the tables, and
-    * execution order doesn't matter (IF NOT EXISTS is idempotent; every
-    * member carries the identical DDL from this one lazy val, so the
-    * definitions cannot drift apart). A checker that opens a fresh
-    * connection per query still verifies correctly — each oracle stays
-    * self-contained — at the old per-row cost. */
-  private lazy val phashSharedDdl: String =
-    s"""CREATE TEMP TABLE IF NOT EXISTS graft_ph_h AS
-      |$framePhashHashCtes
-      |SELECT media_id, frame_ix, phash FROM h;
-      |CREATE TEMP TABLE IF NOT EXISTS graft_ph_pairs AS
-      |SELECT a.media_id AS media_a, a.frame_ix AS frame_a,
-      |       b.media_id AS media_b, b.frame_ix AS frame_b,
-      |       CAST(bit_count(xor(a.phash, b.phash)) AS BIGINT) AS dist
-      |FROM graft_ph_h a JOIN graft_ph_h b ON a.media_id < b.media_id
-      |WHERE bit_count(xor(a.phash, b.phash)) <= 3;
-      |""".stripMargin
-
-  private lazy val framePhashOracleSql: String =
-    phashSharedDdl +
-      """SELECT media_a, frame_a, media_b, frame_b, dist FROM graft_ph_pairs
-      |ORDER BY media_a, frame_a, media_b, frame_b""".stripMargin
-
-  /** The media-level rollup: pairs with ≥ 2 near-duplicate frames, plus
-    * the temporal-alignment vote — per media pair, the modal frame-index
-    * offset `frame_a − frame_b` (ties → lowest offset) and how many frame
-    * pairs share it. A re-encode matches at ONE consistent offset
-    * (aligned_frames ≈ n_frame_pairs); a shared 2-frame intro between
-    * otherwise-different videos scatters across offsets. */
-  private lazy val phashMediaOracleSql: String =
-    phashSharedDdl +
-      """WITH o AS (
-      |  SELECT media_a, media_b, frame_a - frame_b AS coff,
-      |         CAST(count(*) AS BIGINT) AS n_off, min(dist) AS min_d
-      |  FROM graft_ph_pairs GROUP BY media_a, media_b, coff),
-      |r AS (
-      |  SELECT media_a, media_b, coff, n_off,
-      |         CAST(sum(n_off) OVER (PARTITION BY media_a, media_b)
-      |              AS BIGINT) AS n_frame_pairs,
-      |         min(min_d) OVER (PARTITION BY media_a, media_b) AS min_dist,
-      |         row_number() OVER (PARTITION BY media_a, media_b
-      |                            ORDER BY n_off DESC, coff) AS rn
-      |  FROM o)
-      |SELECT media_a, media_b, n_frame_pairs, min_dist,
-      |       n_off AS aligned_frames, coff AS modal_offset
-      |FROM r WHERE rn = 1 AND n_frame_pairs >= 2
-      |ORDER BY media_a, media_b""".stripMargin
-
-  /** The indexed probe replayed in SQL — increment (doc_id % 5 = 0)
-    * vs corpus (the rest), the brute-force cross-split truth: every
-    * (increment frame, corpus frame) pair within dist ≤ 3, DISTINCT,
-    * rolled up to media pairs with ≥ 2 matching frames plus the
-    * temporal-alignment vote (the [[phashMediaOracleSql]] columns). The
-    * banded (band_ix, bucket, band) equi-join against the persisted index
-    * must equal it losslessly (pigeonhole over 7 bands). Shared by
-    * g_phash_indexed (batch-built index) and q_stream_phash (streamed
-    * index) — one truth, one hash. */
-  private lazy val phashIndexedOracleSql: String =
-    phashSharedDdl +
-      """WITH xp AS (
-      |  SELECT DISTINCT i.media_id AS media_new, i.frame_ix AS frame_new,
-      |         c.media_id AS media_corpus, c.frame_ix AS frame_corpus,
-      |         CAST(bit_count(xor(i.phash, c.phash)) AS BIGINT) AS dist
-      |  FROM graft_ph_h i CROSS JOIN graft_ph_h c
-      |  WHERE i.media_id % 5 = 0 AND c.media_id % 5 <> 0
-      |    AND bit_count(xor(i.phash, c.phash)) <= 3),
-      |o AS (
-      |  SELECT media_new, media_corpus, frame_new - frame_corpus AS coff,
-      |         CAST(count(*) AS BIGINT) AS n_off, min(dist) AS min_d
-      |  FROM xp GROUP BY media_new, media_corpus, coff),
-      |r AS (
-      |  SELECT media_new, media_corpus, coff, n_off,
-      |         CAST(sum(n_off) OVER (PARTITION BY media_new, media_corpus)
-      |              AS BIGINT) AS n_frame_pairs,
-      |         min(min_d) OVER (PARTITION BY media_new, media_corpus) AS min_dist,
-      |         row_number() OVER (PARTITION BY media_new, media_corpus
-      |                            ORDER BY n_off DESC, coff) AS rn
-      |  FROM o)
-      |SELECT media_new, media_corpus, n_frame_pairs, min_dist,
-      |       n_off AS aligned_frames, coff AS modal_offset
-      |FROM r WHERE rn = 1 AND n_frame_pairs >= 2
-      |ORDER BY media_new, media_corpus""".stripMargin
-
-  /** Video dedup closed over the pHash pair truth: the ≥2-frame media
-    * pairs become undirected edges, the recursive closure is the
-    * component truth (the g_dedup_cc_star discipline), and the election
-    * replays canonicalPerCluster — longest member keeps (ties → lowest
-    * id), singletons keep themselves. */
-  private lazy val phashCcOracleSql: String =
-    phashSharedDdl +
-      """WITH RECURSIVE
-      |pairs AS (SELECT media_a, media_b FROM graft_ph_pairs),
-      |mp AS (SELECT media_a, media_b FROM pairs
-      |       GROUP BY media_a, media_b HAVING count(*) >= 2),
-      |edges AS (
-      |  SELECT media_a AS src, media_b AS dst FROM mp
-      |  UNION SELECT media_b AS src, media_a AS dst FROM mp),
-      |reach(a, b) AS (
-      |  SELECT src, src FROM edges
-      |  UNION
-      |  SELECT r.a, e.dst FROM reach r JOIN edges e ON r.b = e.src),
-      |assign AS (SELECT a AS doc_id, min(b) AS cluster_id FROM reach GROUP BY a),
-      |ranked AS (
-      |  SELECT d.doc_id, s.cluster_id,
-      |    row_number() OVER (PARTITION BY s.cluster_id
-      |                       ORDER BY d.n_chars DESC, d.doc_id) AS rn
-      |  FROM documents d JOIN assign s ON d.doc_id = s.doc_id)
-      |SELECT doc_id, cluster_id,
-      |  CAST(CASE WHEN rn = 1 THEN 1 ELSE 0 END AS BIGINT) AS keep
-      |FROM ranked
-      |UNION ALL
-      |SELECT d.doc_id, d.doc_id AS cluster_id, CAST(1 AS BIGINT) AS keep
-      |FROM documents d LEFT JOIN assign s ON d.doc_id = s.doc_id
-      |WHERE s.doc_id IS NULL
-      |ORDER BY doc_id""".stripMargin
-
-  /** The multimodal dataset card replayed in SQL: byte/frame tallies
-    * from the payload lengths, the byte-CDC chunking fold (the
-    * g_cdc_binary replay with the source carried) counted total and
-    * DISTINCT per source, and the pHash cluster mass from the shared
-    * brute-force pair truth (`graft_ph_pairs`). */
-  private lazy val mediaCardOracleSql: String =
-    phashSharedDdl +
-      """WITH m AS (SELECT doc_id AS media_id, source, text FROM documents),
-      |base AS (SELECT source, CAST(count(*) AS BIGINT) AS n_media,
-      |    CAST(coalesce(sum(octet_length(CAST(text AS BLOB))), 0) AS BIGINT)
-      |      AS n_bytes,
-      |    CAST(coalesce(sum(CASE
-      |      WHEN octet_length(CAST(text AS BLOB)) // 64 > 0
-      |      THEN least(8, octet_length(CAST(text AS BLOB)) // 64)
-      |      ELSE 0 END), 0) AS BIGINT) AS n_frames
-      |  FROM m GROUP BY source),
-      |t AS (SELECT media_id, source, coalesce(text, '') AS s FROM m),
-      |p AS (SELECT media_id, source, s, unnest(range(length(s))) AS pos
-      |      FROM t WHERE length(s) > 0),
-      |x AS (SELECT media_id, source, pos, s[pos+1] AS ch,
-      |        CASE WHEN pos > 0 AND pos + 8 <= length(s) THEN
-      |          (list_reduce(list_prepend(CAST(0 AS BIGINT),
-      |             list_transform(range(1, 9), i -> CAST(unicode(s[pos+i]) AS BIGINT))),
-      |             (acc, c) -> (acc*31 + c) % 1000000007) % 16 = 0)
-      |        ELSE false END AS boundary
-      |      FROM p),
-      |c AS (SELECT media_id, source, pos, ch,
-      |        SUM(CASE WHEN boundary THEN 1 ELSE 0 END)
-      |          OVER (PARTITION BY media_id ORDER BY pos) AS chunk_idx
-      |      FROM x),
-      |ch2 AS (SELECT media_id, source, chunk_idx,
-      |          string_agg(ch, '' ORDER BY pos) AS chunk_text
-      |        FROM c GROUP BY media_id, source, chunk_idx),
-      |cagg AS (SELECT source, CAST(count(*) AS BIGINT) AS n_chunks,
-      |           CAST(count(DISTINCT chunk_text) AS BIGINT) AS n_distinct_chunks
-      |         FROM ch2 GROUP BY source),
-      |mp AS (SELECT media_a, media_b FROM graft_ph_pairs
-      |       GROUP BY media_a, media_b HAVING count(*) >= 2),
-      |cm AS (SELECT DISTINCT media_id FROM (
-      |  SELECT media_a AS media_id FROM mp
-      |  UNION ALL SELECT media_b AS media_id FROM mp)),
-      |pagg AS (SELECT source, CAST(count(*) AS BIGINT) AS n_phash_clustered
-      |         FROM m JOIN cm USING (media_id) GROUP BY source)
-      |SELECT base.source, n_media, n_bytes, n_frames,
-      |       coalesce(n_chunks, 0) AS n_chunks,
-      |       coalesce(n_distinct_chunks, 0) AS n_distinct_chunks,
-      |       coalesce(n_phash_clustered, 0) AS n_phash_clustered
-      |FROM base
-      |LEFT JOIN cagg USING (source)
-      |LEFT JOIN pagg USING (source)
-      |ORDER BY source""".stripMargin
-
-  /** The calibrated quality loop replayed in SQL: the ENTIRE
-    * [[logitPlattOracleSql]] (a descent nested in a descent) as a
-    * subquery, its calibrated log-odds thresholded at 0, the kept corpus
-    * and the raw corpus reduced to per-source cards and differenced —
-    * the g_card_delta tail over a two-descent head. */
-  private lazy val qualityLoopOracleSql: String = {
-    val cal = logitPlattOracleSql.stripSuffix(" ORDER BY doc_id")
-    def card = """CAST(count(*) AS BIGINT) AS n_docs,
-      |        CAST(sum(length(text)) AS BIGINT) AS n_chars,
-      |        CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens,
-      |        CAST(count(DISTINCT sha256(text)) AS BIGINT) AS n_distinct_texts,
-      |        CAST(count(DISTINCT lang) AS BIGINT) AS n_langs""".stripMargin
-    s"""WITH cal AS ($cal),
-      |keep AS (SELECT doc_id FROM cal WHERE logit >= 0.0),
-      |b AS (SELECT source, $card
-      |      FROM documents GROUP BY source),
-      |a AS (SELECT source, $card
-      |      FROM documents JOIN keep USING (doc_id) GROUP BY source)
-      |SELECT b.source,
-      |  coalesce(a.n_docs, 0) AS n_docs,
-      |  coalesce(a.n_docs, 0) - b.n_docs AS d_n_docs,
-      |  coalesce(a.n_chars, 0) AS n_chars,
-      |  coalesce(a.n_chars, 0) - b.n_chars AS d_n_chars,
-      |  coalesce(a.n_tokens, 0) AS n_tokens,
-      |  coalesce(a.n_tokens, 0) - b.n_tokens AS d_n_tokens,
-      |  coalesce(a.n_distinct_texts, 0) AS n_distinct_texts,
-      |  coalesce(a.n_distinct_texts, 0) - b.n_distinct_texts AS d_n_distinct_texts,
-      |  coalesce(a.n_langs, 0) AS n_langs,
-      |  coalesce(a.n_langs, 0) - b.n_langs AS d_n_langs
-      |FROM b LEFT JOIN a USING (source)
-      |ORDER BY b.source""".stripMargin
-  }
-
-  /** The Bradley–Terry pairwise fit replayed in SQL: the
-    * [[prefPairsOracleSql]] pairing, per-doc features from the SHARED
-    * [[logitFeatureSql]] generator, chosen−rejected diffs as the
-    * feature frame, the whole unrolled descent (y = 1 rows), and the
-    * classEval pivot over sign-of-logit predictions. */
-  private lazy val btFitOracleSql: String = {
-    val xs = logitFeatureSql.map(_._1)
-    val pairsCore = prefPairsOracleSql.stripSuffix("\nORDER BY c.source, pair_rank")
-    val scoredCte =
-      s"""WITH pr AS ($pairsCore),
-        |ft AS (SELECT doc_id,
-        |  ${logitFeatureSql.map { case (n, e) => s"$e AS $n" }.mkString(",\n  ")}
-        |FROM documents),
-        |f AS (SELECT p.chosen_id AS doc_id, CAST(1.0 AS DOUBLE) AS y,
-        |  ${xs.map(x => s"c.$x - r.$x AS $x").mkString(",\n  ")}
-        |FROM pr p JOIN ft c ON c.doc_id = p.chosen_id
-        |          JOIN ft r ON r.doc_id = p.rejected_id)""".stripMargin +
-        descentLoopSql(xs, zz => s"1.0 / (1.0 + exp(-($zz)))")
-          .stripSuffix(" ORDER BY doc_id")
-    classEvalPivotSql(
-      s"""WITH sc AS ($scoredCte),
-        |lab AS (SELECT doc_id, 'pref' AS label,
-        |        CASE WHEN logit >= 0.0 THEN 'pref' ELSE 'anti' END AS pred
-        |        FROM sc)""".stripMargin)
-  }
-
-  /** The Bradley–Terry reward RANKER replayed in SQL — the selection
-    * consumer of [[btFitOracleSql]]'s fit: the same pairing + diffs +
-    * unrolled descent, but the trained weights then score EVERY document
-    * (not the diffs), and each source keeps its top quarter by reward
-    * through the exact count-derived quota + single-window rank the
-    * salted scoreQuantileFilter provably reproduces (the
-    * g_quality_quantile oracle pattern). */
-  private lazy val btRankOracleSql: String = {
-    val xs = logitFeatureSql.map(_._1)
-    val steps = GraftConf.LogitStepsDefault
-    val pairsCore = prefPairsOracleSql.stripSuffix("\nORDER BY c.source, pair_rank")
-    val zz = xs.zipWithIndex.map { case (x, j) => s"(w.u$j * 1e-8) * ft.$x" }
-      .mkString(" + ")
-    s"""WITH pr AS ($pairsCore),
-      |ft AS (SELECT doc_id, source,
-      |  ${logitFeatureSql.map { case (n, e) => s"$e AS $n" }.mkString(",\n  ")}
-      |FROM documents),
-      |f AS (SELECT p.chosen_id AS doc_id, CAST(1.0 AS DOUBLE) AS y,
-      |  ${xs.map(x => s"c.$x - r.$x AS $x").mkString(",\n  ")}
-      |FROM pr p JOIN ft c ON c.doc_id = p.chosen_id
-      |          JOIN ft r ON r.doc_id = p.rejected_id)""".stripMargin +
-      descentStepsSql(xs, z => s"1.0 / (1.0 + exp(-($z)))") +
-      s""",
-      |sc AS (SELECT ft.doc_id, ft.source,
-      |         floor(($zz) * 1000000) / 1000000 AS reward
-      |       FROM ft CROSS JOIN w$steps w),
-      |c AS (SELECT source, CAST(ceil(0.25 * CAST(count(*) AS DOUBLE)) AS BIGINT) AS quota
-      |      FROM sc GROUP BY source),
-      |r AS (SELECT sc.doc_id, sc.source, sc.reward,
-      |        CAST(row_number() OVER (
-      |          PARTITION BY sc.source ORDER BY sc.reward DESC, sc.doc_id) AS INT) AS rank,
-      |        c.quota
-      |      FROM sc JOIN c USING (source))
-      |SELECT doc_id, source, reward, rank FROM r WHERE rank <= quota
-      |ORDER BY doc_id""".stripMargin
-  }
-
-  /** The train→evaluate loop replayed in SQL: the whole
-    * [[logitTrainOracleSql]] descent as a subquery, reduced to the exact
-    * confusion counts at the logit-0 decision boundary and the derived
-    * precision/recall/F1 (single-division forms, 6-digit floor). */
-  private lazy val logitEvalOracleSql: String = {
-    val core = logitTrainOracleSql.stripSuffix(" ORDER BY doc_id")
-    s"""WITH scored AS ($core)
-      |SELECT
-      |  CAST(sum(CASE WHEN label = 1.0 AND logit >= 0.0 THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-      |  CAST(sum(CASE WHEN label = 0.0 AND logit >= 0.0 THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-      |  CAST(sum(CASE WHEN label = 1.0 AND logit < 0.0 THEN 1 ELSE 0 END) AS BIGINT) AS fn,
-      |  CAST(sum(CASE WHEN label = 0.0 AND logit < 0.0 THEN 1 ELSE 0 END) AS BIGINT) AS tn,
-      |  floor(CASE WHEN sum(CASE WHEN logit >= 0.0 THEN 1 ELSE 0 END) > 0
-      |    THEN CAST(sum(CASE WHEN label = 1.0 AND logit >= 0.0 THEN 1 ELSE 0 END) AS DOUBLE)
-      |         / sum(CASE WHEN logit >= 0.0 THEN 1 ELSE 0 END)
-      |    ELSE 0.0 END * 1000000) / 1000000 AS precision_,
-      |  floor(CASE WHEN sum(CASE WHEN label = 1.0 THEN 1 ELSE 0 END) > 0
-      |    THEN CAST(sum(CASE WHEN label = 1.0 AND logit >= 0.0 THEN 1 ELSE 0 END) AS DOUBLE)
-      |         / sum(CASE WHEN label = 1.0 THEN 1 ELSE 0 END)
-      |    ELSE 0.0 END * 1000000) / 1000000 AS recall_,
-      |  floor(CASE WHEN 2 * sum(CASE WHEN label = 1.0 AND logit >= 0.0 THEN 1 ELSE 0 END)
-      |             + sum(CASE WHEN label = 0.0 AND logit >= 0.0 THEN 1 ELSE 0 END)
-      |             + sum(CASE WHEN label = 1.0 AND logit < 0.0 THEN 1 ELSE 0 END) > 0
-      |    THEN CAST(2 * sum(CASE WHEN label = 1.0 AND logit >= 0.0 THEN 1 ELSE 0 END) AS DOUBLE)
-      |         / (2 * sum(CASE WHEN label = 1.0 AND logit >= 0.0 THEN 1 ELSE 0 END)
-      |            + sum(CASE WHEN label = 0.0 AND logit >= 0.0 THEN 1 ELSE 0 END)
-      |            + sum(CASE WHEN label = 1.0 AND logit < 0.0 THEN 1 ELSE 0 END))
-      |    ELSE 0.0 END * 1000000) / 1000000 AS f1
-      |FROM scored""".stripMargin
-  }
-
-  /** Interpolated Kneser–Ney cross-corpus scoring replayed in SQL —
-    * shared by g_kn_score (batch) and q_stream_kn (streamed count
-    * maintenance): one truth, one hash. Every stage mirrors
-    * [[graft.operators.TextOps.knScore]] expression-for-expression:
-    * exact-binary D = 0.75, the max(·,1) Pcont floor, the unseen-context
-    * Pcont fallback, ln quantized to DECIMAL(18,8) before the
-    * multiplicity-weighted exact sum, floor at 4 digits. */
-  private lazy val knScoreOracleSql: String =
-    s"""WITH lm AS (SELECT * FROM documents WHERE doc_id % 2 = 0),
-      |sc AS (SELECT * FROM documents WHERE doc_id % 2 = 1),
-      |uni AS (SELECT w, CAST(count(*) AS BIGINT) AS c
-      |        FROM (SELECT unnest(string_split(text, ' ')) AS w FROM lm) GROUP BY 1),
-      |vocab AS (SELECT w FROM uni WHERE c >= ${GraftConf.KnMinCountDefault}),
-      |lmt AS (SELECT doc_id, string_split(text, ' ') AS ts FROM lm),
-      |lmpairs AS (
-      |  SELECT CASE WHEN v1.w IS NULL THEN '<unk>' ELSE pr[1] END AS w1,
-      |         CASE WHEN v2.w IS NULL THEN '<unk>' ELSE pr[2] END AS w2
-      |  FROM (SELECT unnest(list_transform(range(1, len(ts)), i -> [ts[i], ts[i + 1]])) AS pr
-      |        FROM lmt) p
-      |  LEFT JOIN vocab v1 ON v1.w = pr[1]
-      |  LEFT JOIN vocab v2 ON v2.w = pr[2]),
-      |c2 AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS c2 FROM lmpairs GROUP BY 1, 2),
-      |ctx AS (SELECT w1, CAST(sum(c2) AS BIGINT) AS c1,
-      |               CAST(count(*) AS BIGINT) AS n1f FROM c2 GROUP BY 1),
-      |pred AS (SELECT w2, CAST(count(*) AS BIGINT) AS n1b FROM c2 GROUP BY 1),
-      |btot AS (SELECT CAST(count(*) AS BIGINT) AS b FROM c2),
-      |sct AS (SELECT doc_id, string_split(text, ' ') AS ts FROM sc),
-      |scpairs AS (
-      |  SELECT doc_id,
-      |         CASE WHEN v1.w IS NULL THEN '<unk>' ELSE pr[1] END AS w1,
-      |         CASE WHEN v2.w IS NULL THEN '<unk>' ELSE pr[2] END AS w2
-      |  FROM (SELECT doc_id,
-      |          unnest(list_transform(range(1, len(ts)), i -> [ts[i], ts[i + 1]])) AS pr
-      |        FROM sct) p
-      |  LEFT JOIN vocab v1 ON v1.w = pr[1]
-      |  LEFT JOIN vocab v2 ON v2.w = pr[2]),
-      |dp AS (SELECT doc_id, w1, w2, CAST(count(*) AS BIGINT) AS cnt
-      |       FROM scpairs GROUP BY 1, 2, 3),
-      |scored AS (
-      |  SELECT doc_id, cnt,
-      |    CASE WHEN coalesce(c1, 0) > 0
-      |      THEN (greatest(CAST(coalesce(c2, 0) AS DOUBLE) - 0.75, 0.0)
-      |            + 0.75 * CAST(coalesce(n1f, 0) AS DOUBLE)
-      |                   * (CAST(greatest(coalesce(n1b, 0), 1) AS DOUBLE)
-      |                      / CAST(b AS DOUBLE)))
-      |           / CAST(c1 AS DOUBLE)
-      |      ELSE CAST(greatest(coalesce(n1b, 0), 1) AS DOUBLE) / CAST(b AS DOUBLE)
-      |    END AS p
-      |  FROM dp LEFT JOIN c2 USING (w1, w2) LEFT JOIN ctx USING (w1)
-      |          LEFT JOIN pred USING (w2) CROSS JOIN btot)
-      |SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_bigrams,
-      |       floor((CAST(sum(CAST(ln(p) AS DECIMAL(18,8)) * cnt) AS DOUBLE)
-      |              / sum(cnt)) * 10000) / 10000 AS avg_logprob
-      |FROM scored GROUP BY doc_id ORDER BY doc_id""".stripMargin
-
-  /** The feature-hashed logistic descent replayed in SQL
-    * ([[graft.operators.TextOps.logitTrainHashed]]): weights live as CTE
-    * FRAMES (bkt, u) instead of scalar columns — w_s joins g_s on the
-    * bucket — and the per-doc activation is an exact BIGINT unit-sum
-    * with one double conversion. Token buckets via the cross-engine
-    * polynomial hash (the DSIR idiom). Generated programmatically so the
-    * step count stays in one place. */
-  private lazy val logitHashedOracleSql: String = {
-    val steps = GraftConf.LogitStepsDefault
-    val sb = new StringBuilder
-    sb ++= """WITH tk AS (SELECT doc_id,
-      |        CASE WHEN lang = 'en' THEN CAST(1.0 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END AS y,
-      |        unnest(string_split(text, ' ')) AS tok
-      |      FROM documents),
-      |tokb AS (SELECT doc_id, y,
-      |        list_reduce(list_prepend(CAST(0 AS BIGINT),
-      |          list_transform(range(1, length(tok)+1),
-      |            i -> CAST(unicode(tok[i]) AS BIGINT))),
-      |          (acc, c) -> (acc*31 + c) % 1000000007) % 64 AS bkt,
-      |        CAST(count(*) AS BIGINT) AS cnt
-      |      FROM tk GROUP BY 1, 2, 3),
-      |w0 AS (SELECT DISTINCT bkt, CAST(0 AS BIGINT) AS u FROM tokb)""".stripMargin
-    for (s <- 1 to steps) {
-      sb ++= s""",
-        |z$s AS (SELECT doc_id, y, CAST(sum(cnt * u) AS BIGINT) AS zu
-        |        FROM tokb JOIN w${s - 1} USING (bkt) GROUP BY 1, 2),
-        |r$s AS (SELECT doc_id,
-        |          1.0 / (1.0 + exp(-(CAST(zu AS DOUBLE) * 1e-8))) - y AS r
-        |        FROM z$s),
-        |g$s AS (SELECT bkt, sum(CAST(floor(cnt * r * 1e8) AS DECIMAL(38,0))) AS g
-        |        FROM tokb JOIN r$s USING (doc_id) GROUP BY 1),
-        |w$s AS (SELECT bkt, u - CAST(floor(CAST(g AS DOUBLE) / 4096.0) AS BIGINT) AS u
-        |        FROM w${s - 1} JOIN g$s USING (bkt))""".stripMargin
-    }
-    sb ++= s"""
-      |SELECT doc_id, y AS label,
-      |       floor((CAST(zu AS DOUBLE) * 1e-8) * 1000000) / 1000000 AS logit
-      |FROM (SELECT doc_id, y, CAST(sum(cnt * u) AS BIGINT) AS zu
-      |      FROM tokb JOIN w$steps USING (bkt) GROUP BY 1, 2)
-      |ORDER BY doc_id""".stripMargin
-    sb.toString
-  }
-
-  /** Multinomial Naive Bayes train-and-classify replayed in SQL — shared
-    * by g_nb_langid (batch) and q_stream_nb (streamed count maintenance).
-    * Mirrors [[graft.operators.TextOps.nbTrainScore]]: add-one smoothing
-    * over exact class-token counts, ln quantized to DECIMAL(18,8), pure
-    * decimal per-(doc, class) scores, (score desc, class asc) argmax. */
-  private lazy val nbLangidOracleSql: String =
-    """WITH lm AS (SELECT * FROM documents WHERE doc_id % 2 = 0),
-      |sc AS (SELECT * FROM documents WHERE doc_id % 2 = 1),
-      |cls AS (SELECT lang AS c, CAST(count(*) AS BIGINT) AS dc FROM lm GROUP BY 1),
-      |tot AS (SELECT CAST(count(*) AS BIGINT) AS d FROM lm),
-      |lmtoks AS (SELECT lang AS c, unnest(string_split(text, ' ')) AS w FROM lm),
-      |ncw AS (SELECT c, w, CAST(count(*) AS BIGINT) AS n FROM lmtoks GROUP BY 1, 2),
-      |tc AS (SELECT c, CAST(sum(n) AS BIGINT) AS t FROM ncw GROUP BY 1),
-      |voc AS (SELECT CAST(count(*) AS BIGINT) AS v
-      |        FROM (SELECT DISTINCT w FROM ncw)),
-      |prior AS (SELECT c, CAST(ln(CAST(dc AS DOUBLE) / d) AS DECIMAL(18,8)) AS lnp
-      |          FROM cls CROSS JOIN tot),
-      |dtoks AS (SELECT doc_id, w, CAST(count(*) AS BIGINT) AS cnt
-      |          FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM sc)
-      |          GROUP BY 1, 2),
-      |scored AS (
-      |  SELECT doc_id, c,
-      |    max(lnp) + sum(CAST(ln((CAST(coalesce(n, 0) AS DOUBLE) + 1.0) / (t + v))
-      |                        AS DECIMAL(18,8)) * cnt) AS score
-      |  FROM dtoks CROSS JOIN (SELECT c FROM cls) cl
-      |       LEFT JOIN ncw USING (c, w) JOIN tc USING (c) JOIN prior USING (c)
-      |       CROSS JOIN voc
-      |  GROUP BY 1, 2),
-      |ranked AS (SELECT doc_id, c, score,
-      |             row_number() OVER (PARTITION BY doc_id
-      |                                ORDER BY score DESC, c) AS rn
-      |           FROM scored)
-      |SELECT doc_id, c AS pred, CAST(score AS DOUBLE) AS score
-      |FROM ranked WHERE rn = 1 ORDER BY doc_id""".stripMargin
-
-  /** Exact tie-aware ROC-AUC replayed in SQL over the whole
-    * [[logitTrainOracleSql]] descent: quantize to 1e-6 units, per-unit
-    * counts, strictly-below negatives via ONE window (the single-window
-    * formulation the two-phase Spark plan provably equals), Mann–Whitney
-    * numerator as exact decimals, one double division, 6-digit floor. */
-  private lazy val logitAucOracleSql: String = {
-    val core = logitTrainOracleSql.stripSuffix(" ORDER BY doc_id")
-    s"""WITH scored AS ($core),
-      |uu AS (SELECT CAST(floor(logit * 1e6) AS BIGINT) AS u,
-      |              CASE WHEN label = 1.0 THEN 1 ELSE 0 END AS y FROM scored),
-      |s AS (SELECT u, CAST(sum(y) AS BIGINT) AS n1,
-      |             CAST(sum(1 - y) AS BIGINT) AS n0 FROM uu GROUP BY 1),
-      |w AS (SELECT u, n1, n0,
-      |             CAST(coalesce(sum(n0) OVER (ORDER BY u
-      |               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS nbelow
-      |      FROM s),
-      |t AS (SELECT CAST(sum(n1) AS BIGINT) AS np, CAST(sum(n0) AS BIGINT) AS nn,
-      |             CAST(sum(CAST(n1 AS DECIMAL(19,0))
-      |                      * CAST(2 * nbelow + n0 AS DECIMAL(19,0))) AS DECIMAL(38,0)) AS num
-      |      FROM w)
-      |SELECT np AS n_pos, nn AS n_neg,
-      |       floor(CASE WHEN np > 0 AND nn > 0
-      |             THEN CAST(num AS DOUBLE)
-      |                  / (2.0 * CAST(np AS DOUBLE) * CAST(nn AS DOUBLE))
-      |             ELSE 0.0 END * 1000000) / 1000000 AS auc
-      |FROM t""".stripMargin
-  }
-
-  /** The calibration bins replayed in SQL over the whole descent:
-    * fixed-width bins on the floored logit, exact counts, mean logit
-    * from integer 1e-6-unit sums. */
-  private lazy val logitCalibrationOracleSql: String = {
-    val core = logitTrainOracleSql.stripSuffix(" ORDER BY doc_id")
-    s"""WITH scored AS ($core),
-      |b AS (SELECT CAST(floor(logit * 1024.0) AS BIGINT) AS bin,
-      |             CAST(floor(logit * 1e6) AS BIGINT) AS u,
-      |             CASE WHEN label = 1.0 THEN 1 ELSE 0 END AS y FROM scored),
-      |g AS (SELECT bin, CAST(count(*) AS BIGINT) AS n,
-      |             CAST(sum(y) AS BIGINT) AS n_pos,
-      |             CAST(sum(CAST(u AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS su
-      |      FROM b GROUP BY 1)
-      |SELECT bin, n, n_pos,
-      |       floor(CAST(n_pos AS DOUBLE) / CAST(n AS DOUBLE) * 1000000) / 1000000 AS frac_pos,
-      |       floor(CAST(su AS DOUBLE) / CAST(n AS DOUBLE) / 1e6 * 1000000) / 1000000 AS mean_logit
-      |FROM g ORDER BY bin""".stripMargin
-  }
-
-  /** The priors-only NB ablation replayed in SQL: majority-class
-    * baseline (doc-prior argmax, class-asc tie-break) through the same
-    * classEval pivot as [[nbEvalOracleSql]]. */
-  private lazy val nbPriorsOracleSql: String =
-    classEvalPivotSql(
-      """WITH lm AS (SELECT * FROM documents WHERE doc_id % 2 = 0),
-        |sc AS (SELECT * FROM documents WHERE doc_id % 2 = 1),
-        |top AS (SELECT lang AS pred FROM lm GROUP BY lang
-        |        ORDER BY count(*) DESC, lang LIMIT 1),
-        |lab AS (SELECT sc.doc_id, sc.lang AS label, top.pred
-        |        FROM sc CROSS JOIN top)""".stripMargin)
-
-  /** The heuristic language id through the same pivot — the third point
-    * of the heuristic / trained-NB / priors-only comparison triple. */
-  private lazy val langidEvalOracleSql: String =
-    classEvalPivotSql(
-      """WITH lab AS (SELECT doc_id, lang AS label,
-        |  CASE WHEN len(list_intersect(list_distinct(string_split(text, ' ')),
-        |         ['the','a','of','and','to','in','is'])) >= 2
-        |    THEN 'en' ELSE 'other' END AS pred
-        |  FROM documents WHERE doc_id % 2 = 1)""".stripMargin)
-
-  /** DoReMi-shaped EG reweighting replayed in SQL: the whole logit
-    * descent as a subquery, per-doc quantized losses joined to domains,
-    * one double division for each domain mean, then the unrolled EG
-    * steps (m_t = quantized w·exp(η·loss), w_t = m/Σ) over the bounded
-    * domain frame. */
-  private lazy val doremiOracleSql: String = {
-    val core = logitTrainOracleSql.stripSuffix(" ORDER BY doc_id")
-    val steps = GraftConf.LogitStepsDefault
-    val sb = new StringBuilder
-    sb ++= s"""WITH scored AS ($core),
-      |l AS (SELECT d.source,
-      |        CASE WHEN label = 1.0
-      |          THEN CAST(-ln(1.0 / (1.0 + exp(-logit))) AS DECIMAL(18,8))
-      |          ELSE CAST(-ln(1.0 - 1.0 / (1.0 + exp(-logit))) AS DECIMAL(18,8))
-      |        END AS loss
-      |      FROM scored JOIN documents d USING (doc_id)),
-      |dl AS (SELECT source, CAST(sum(loss) AS DOUBLE) / count(*) AS ml
-      |       FROM l GROUP BY 1),
-      |dd AS (SELECT count(*) AS d FROM dl),
-      |w0 AS (SELECT source, ml, 1.0 / d AS w FROM dl CROSS JOIN dd)""".stripMargin
-    for (s <- 1 to steps) {
-      sb ++= s""",
-        |m$s AS (SELECT source, ml,
-        |          CAST(w * exp(1.0 * ml) AS DECIMAL(18,8)) AS m FROM w${s - 1}),
-        |t$s AS (SELECT sum(m) AS t FROM m$s),
-        |w$s AS (SELECT source, ml, CAST(m AS DOUBLE) / CAST(t AS DOUBLE) AS w
-        |        FROM m$s CROSS JOIN t$s)""".stripMargin
-    }
-    sb ++= s"""
-      |SELECT source, floor(ml * 1000000) / 1000000 AS mean_loss,
-      |       floor(w * 1000000) / 1000000 AS weight
-      |FROM w$steps ORDER BY source""".stripMargin
-    sb.toString
-  }
-
-  /** The preference-pair construction replayed in SQL: single-window
-    * per-group ranks (the two-phase engine rank's spec-pinned equal);
-    * i-th best joins i-th worst on (source, i), strict inequality drops
-    * equal/self/reflected pairs. Shared by g_pref_pairs (batch) and
-    * q_stream_pref (the streamed periodic re-pair). */
-  private lazy val prefPairsOracleSql: String =
-    """WITH s AS (SELECT doc_id, source,
-        |        CAST(floor(least(greatest(
-        |          least(len(string_split(text, ' ')) / 64.0, 1.0) * 0.4 +
-        |          (len(list_distinct(string_split(text, ' '))) /
-        |           CAST(len(string_split(text, ' ')) AS DOUBLE)) * 0.4 +
-        |          (1.0 - length(regexp_replace(text, '[a-zA-Z0-9\s]', '', 'g')) /
-        |                 CAST(length(text) AS DOUBLE)) * 0.2,
-        |          0.0), 1.0) * 10000) AS BIGINT) AS score
-        |      FROM documents),
-        |r AS (SELECT doc_id, source, score,
-        |        CAST(row_number() OVER (PARTITION BY source ORDER BY score, doc_id)
-        |             AS BIGINT) - 1 AS rank,
-        |        CAST(count(*) OVER (PARTITION BY source) AS BIGINT) AS n
-        |      FROM s),
-        |c AS (SELECT source, n - rank AS i, doc_id AS chosen_id,
-        |             score AS chosen_score FROM r),
-        |j AS (SELECT source, rank + 1 AS i, doc_id AS rejected_id,
-        |             score AS rejected_score FROM r)
-        |SELECT c.source, CAST(c.i AS BIGINT) AS pair_rank,
-        |       chosen_id, chosen_score, rejected_id, rejected_score
-        |FROM c JOIN j ON c.source = j.source AND c.i = j.i
-        |WHERE chosen_score > rejected_score
-        |ORDER BY c.source, pair_rank""".stripMargin
-
-  /** The NB train→evaluate loop replayed in SQL: the whole
-    * [[nbLangidOracleSql]] pipeline as a subquery, labels joined back,
-    * reduced to per-class one-vs-rest confusion counts,
-    * precision/recall/F1 (single-division 6-digit-floored forms) and
-    * the macro-F1 (floored-F1 mean over exact decimals). */
-  private lazy val nbEvalOracleSql: String =
-    classEvalPivotSql(s"""WITH nb AS (${nbLangidOracleSql.stripSuffix(" ORDER BY doc_id")}),
-      |lab AS (SELECT nb.doc_id, d.lang AS label, nb.pred
-      |        FROM nb JOIN documents d USING (doc_id))""".stripMargin)
-
-  /** The shared classEval pivot tail ([[graft.operators.TextOps.classEval]]
-    * in SQL): per-class one-vs-rest confusion over the label ∪ pred
-    * class list, P/R/F1 single-division floored, macro-F1 over exact
-    * decimals — appended to a WITH-prefix that defines
-    * `lab(doc_id, label, pred)`. */
-  private def classEvalPivotSql(labPrefix: String): String =
-    s"""$labPrefix,
-      |cl AS (SELECT DISTINCT label AS class FROM lab
-      |       UNION SELECT DISTINCT pred FROM lab),
-      |base AS (SELECT class,
-      |  CAST(sum(CASE WHEN label = class AND pred = class THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-      |  CAST(sum(CASE WHEN label <> class AND pred = class THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-      |  CAST(sum(CASE WHEN label = class AND pred <> class THEN 1 ELSE 0 END) AS BIGINT) AS fn
-      |  FROM lab CROSS JOIN cl GROUP BY class),
-      |prf AS (SELECT class, tp, fp, fn,
-      |  floor(CASE WHEN tp + fp > 0 THEN CAST(tp AS DOUBLE) / (tp + fp)
-      |        ELSE 0.0 END * 1000000) / 1000000 AS precision_,
-      |  floor(CASE WHEN tp + fn > 0 THEN CAST(tp AS DOUBLE) / (tp + fn)
-      |        ELSE 0.0 END * 1000000) / 1000000 AS recall_,
-      |  floor(CASE WHEN 2 * tp + fp + fn > 0
-      |        THEN CAST(2 * tp AS DOUBLE) / (2 * tp + fp + fn)
-      |        ELSE 0.0 END * 1000000) / 1000000 AS f1
-      |  FROM base),
-      |mac AS (SELECT floor(CAST(sum(CAST(f1 AS DECIMAL(18,6))) AS DOUBLE)
-      |               / count(*) * 1000000) / 1000000 AS macro_f1 FROM prf)
-      |SELECT class, tp, fp, fn, precision_, recall_, f1, macro_f1
-      |FROM prf CROSS JOIN mac ORDER BY class""".stripMargin
-
-  /** Interpolated Kneser–Ney TRIGRAM scoring replayed in SQL — shared by
-    * g_kn3_score and q_stream_kn3. Mirrors
-    * [[graft.operators.TextOps.kn3Score]] expression-for-expression,
-    * with the p2 (bigram-continuation) level computed as its own column
-    * before the trigram level consumes it — the same two-stage shape as
-    * the Spark plan. */
-  private lazy val kn3ScoreOracleSql: String =
-    s"""WITH lm AS (SELECT * FROM documents WHERE doc_id % 2 = 0),
-      |sc AS (SELECT * FROM documents WHERE doc_id % 2 = 1),
-      |uni AS (SELECT w, CAST(count(*) AS BIGINT) AS c
-      |        FROM (SELECT unnest(string_split(text, ' ')) AS w FROM lm) GROUP BY 1),
-      |vocab AS (SELECT w FROM uni WHERE c >= ${GraftConf.KnMinCountDefault}),
-      |lmt AS (SELECT doc_id, string_split(text, ' ') AS ts FROM lm),
-      |lmtris AS (
-      |  SELECT CASE WHEN v1.w IS NULL THEN '<unk>' ELSE tr[1] END AS w1,
-      |         CASE WHEN v2.w IS NULL THEN '<unk>' ELSE tr[2] END AS w2,
-      |         CASE WHEN v3.w IS NULL THEN '<unk>' ELSE tr[3] END AS w3
-      |  FROM (SELECT unnest(list_transform(range(1, len(ts) - 1),
-      |                 i -> [ts[i], ts[i + 1], ts[i + 2]])) AS tr
-      |        FROM lmt) p
-      |  LEFT JOIN vocab v1 ON v1.w = tr[1]
-      |  LEFT JOIN vocab v2 ON v2.w = tr[2]
-      |  LEFT JOIN vocab v3 ON v3.w = tr[3]),
-      |c3 AS (SELECT w1, w2, w3, CAST(count(*) AS BIGINT) AS c3
-      |       FROM lmtris GROUP BY 1, 2, 3),
-      |ctx3 AS (SELECT w1, w2, CAST(sum(c3) AS BIGINT) AS ctx3,
-      |                CAST(count(*) AS BIGINT) AS n1f3 FROM c3 GROUP BY 1, 2),
-      |t AS (SELECT w2, w3, CAST(count(*) AS BIGINT) AS t FROM c3 GROUP BY 1, 2),
-      |ctx2c AS (SELECT w2, CAST(sum(t) AS BIGINT) AS ctx2c,
-      |                 CAST(count(*) AS BIGINT) AS n1f2c FROM t GROUP BY 1),
-      |pred AS (SELECT w3, CAST(count(*) AS BIGINT) AS n1b FROM t GROUP BY 1),
-      |btot AS (SELECT CAST(count(*) AS BIGINT) AS b FROM t),
-      |sct AS (SELECT doc_id, string_split(text, ' ') AS ts FROM sc),
-      |sctris AS (
-      |  SELECT doc_id,
-      |         CASE WHEN v1.w IS NULL THEN '<unk>' ELSE tr[1] END AS w1,
-      |         CASE WHEN v2.w IS NULL THEN '<unk>' ELSE tr[2] END AS w2,
-      |         CASE WHEN v3.w IS NULL THEN '<unk>' ELSE tr[3] END AS w3
-      |  FROM (SELECT doc_id,
-      |          unnest(list_transform(range(1, len(ts) - 1),
-      |            i -> [ts[i], ts[i + 1], ts[i + 2]])) AS tr
-      |        FROM sct) p
-      |  LEFT JOIN vocab v1 ON v1.w = tr[1]
-      |  LEFT JOIN vocab v2 ON v2.w = tr[2]
-      |  LEFT JOIN vocab v3 ON v3.w = tr[3]),
-      |dp AS (SELECT doc_id, w1, w2, w3, CAST(count(*) AS BIGINT) AS cnt
-      |       FROM sctris GROUP BY 1, 2, 3, 4),
-      |s1 AS (
-      |  SELECT doc_id, cnt, c3, ctx3, n1f3,
-      |    CASE WHEN coalesce(ctx2c, 0) > 0
-      |      THEN (greatest(CAST(coalesce(t, 0) AS DOUBLE) - 0.75, 0.0)
-      |            + 0.75 * CAST(coalesce(n1f2c, 0) AS DOUBLE)
-      |                   * (CAST(greatest(coalesce(n1b, 0), 1) AS DOUBLE)
-      |                      / CAST(b AS DOUBLE)))
-      |           / CAST(ctx2c AS DOUBLE)
-      |      ELSE CAST(greatest(coalesce(n1b, 0), 1) AS DOUBLE) / CAST(b AS DOUBLE)
-      |    END AS p2
-      |  FROM dp LEFT JOIN c3 USING (w1, w2, w3) LEFT JOIN ctx3 USING (w1, w2)
-      |          LEFT JOIN t USING (w2, w3) LEFT JOIN ctx2c USING (w2)
-      |          LEFT JOIN pred USING (w3) CROSS JOIN btot),
-      |scored AS (
-      |  SELECT doc_id, cnt,
-      |    CASE WHEN coalesce(ctx3, 0) > 0
-      |      THEN (greatest(CAST(coalesce(c3, 0) AS DOUBLE) - 0.75, 0.0)
-      |            + 0.75 * CAST(coalesce(n1f3, 0) AS DOUBLE) * p2)
-      |           / CAST(ctx3 AS DOUBLE)
-      |      ELSE p2
-      |    END AS p
-      |  FROM s1)
-      |SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_trigrams,
-      |       floor((CAST(sum(CAST(ln(p) AS DECIMAL(18,8)) * cnt) AS DOUBLE)
-      |              / sum(cnt)) * 10000) / 10000 AS avg_logprob
-      |FROM scored GROUP BY doc_id ORDER BY doc_id""".stripMargin
-
-  /** The CCNet composition replayed in SQL: the whole
-    * [[kn3ScoreOracleSql]] LM-scoring pipeline as a subquery, then the
-    * per-domain top-keepFrac cut in the single-window formulation the
-    * salted [[graft.operators.CurationOps.scoreQuantileFilter]] provably
-    * reproduces (the g_quality_quantile oracle pattern). */
-  private lazy val ccnetPipelineOracleSql: String = {
-    val core = kn3ScoreOracleSql.stripSuffix(" ORDER BY doc_id")
-    s"""WITH sc3 AS ($core),
-      |sjoin AS (SELECT sc3.doc_id, d.source, sc3.avg_logprob
-      |          FROM sc3 JOIN documents d USING (doc_id)),
-      |c AS (SELECT source, CAST(ceil(0.5 * CAST(count(*) AS DOUBLE)) AS BIGINT) AS quota
-      |      FROM sjoin GROUP BY source),
-      |r AS (SELECT sjoin.doc_id, sjoin.source, sjoin.avg_logprob,
-      |             CAST(row_number() OVER (
-      |               PARTITION BY sjoin.source
-      |               ORDER BY sjoin.avg_logprob DESC, sjoin.doc_id) AS INT) AS rank,
-      |             c.quota
-      |      FROM sjoin JOIN c USING (source))
-      |SELECT doc_id, source, avg_logprob, rank FROM r WHERE rank <= quota
-      |ORDER BY doc_id""".stripMargin
-  }
-
-  /** The CCNet head/middle/tail split replayed in SQL: the
-    * [[kn3ScoreOracleSql]] pipeline as a subquery, scores quantized to
-    * integer 1e-4 units (the 4-digit floor's own grid — lossless),
-    * shifted non-negative by the corpus minimum, then per-source
-    * equal-size-by-rank THIRDS in the single-window formulation the
-    * two-phase [[graft.operators.CurationOps.rankBucketsByGroup]] is
-    * spec-pinned to equal. */
-  private lazy val ccnetBucketsOracleSql: String = {
-    val core = kn3ScoreOracleSql.stripSuffix(" ORDER BY doc_id")
-    s"""WITH sc3 AS ($core),
-      |sj AS (SELECT sc3.doc_id, d.source,
-      |              CAST(floor(sc3.avg_logprob * 1e4) AS BIGINT) AS u
-      |       FROM sc3 JOIN documents d USING (doc_id)),
-      |m AS (SELECT min(u) AS mu FROM sj),
-      |s AS (SELECT doc_id, source, u - mu AS score FROM sj CROSS JOIN m),
-      |r AS (SELECT doc_id, source, score,
-      |        CAST(row_number() OVER (PARTITION BY source ORDER BY score, doc_id)
-      |             AS BIGINT) - 1 AS rank,
-      |        CAST(count(*) OVER (PARTITION BY source) AS BIGINT) AS n
-      |      FROM s)
-      |SELECT source, doc_id, score, CAST((rank * 3) // n AS BIGINT) AS bucket, rank
-      |FROM r ORDER BY doc_id""".stripMargin
-  }
-
-  /** The composed training-run assembly replayed in SQL — shared by
-    * g_train_manifest (batch) and q_stream_manifest (the streamed
-    * periodic re-manifest): one truth, one hash. */
-  private lazy val trainManifestOracleSql: String =
-    trainManifestOracleSqlFrom("documents")
-
-  /** The composed forget gate replayed in SQL: the post-delete corpus
-    * materializes once (`graft_fg_docs` — the [[phashSharedDdl]]
-    * temp-table discipline), the UniMax schedule replays over it
-    * (`graft_fg_manifest`, the [[trainManifestOracleSqlFrom]] nesting),
-    * and every artifact's expected post-forget SIZE is derived from its
-    * own independent truth: the doc count, bands-per-doc, the distinct
-    * (token, doc) posting pairs, the distinct k-shingles of ≥k-token
-    * docs, 7 bands × sampled frames, the k-NN fan-out, the recursive
-    * closure of the exact-Jaccard pair list (the proven-equal MinHash
-    * truth), and the replayed manifest's row count. `n_diff` pins the
-    * engine's own readback-vs-rebuild diff at zero for EVERY artifact —
-    * a forget that leaves one stale row anywhere fails this row. */
-  private lazy val forgetOracleSql: String =
-    s"""CREATE TEMP TABLE IF NOT EXISTS graft_fg_docs AS
-      |SELECT * FROM documents WHERE doc_id % 97 <> 3;
-      |CREATE TEMP TABLE IF NOT EXISTS graft_fg_manifest AS
-      |${trainManifestOracleSqlFrom("graft_fg_docs")};
-      |WITH RECURSIVE
-      |shj AS (SELECT doc_id, list_distinct(CASE WHEN len(t) >= 3
-      |    THEN list_transform(range(1, len(t) - 1), i -> array_to_string(t[i:i+2], ' '))
-      |    ELSE [array_to_string(t, ' ')] END) AS toks
-      |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM graft_fg_docs)),
-      |prs AS (
-      |  SELECT a.doc_id AS id1, b.doc_id AS id2
-      |  FROM shj a JOIN shj b ON a.doc_id < b.doc_id
-      |  WHERE len(list_intersect(a.toks, b.toks)) /
-      |        (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks))) >= 0.5),
-      |edges AS (
-      |  SELECT id1 AS src, id2 AS dst FROM prs
-      |  UNION SELECT id2 AS src, id1 AS dst FROM prs),
-      |reach(a, b) AS (
-      |  SELECT src, src FROM edges
-      |  UNION
-      |  SELECT r.a, e.dst FROM reach r JOIN edges e ON r.b = e.src),
-      |assign AS (SELECT a AS doc_id, min(b) AS cluster_id FROM reach GROUP BY a),
-      |spansh AS (
-      |  SELECT DISTINCT array_to_string(t[CAST(i AS INT):CAST(i + 2 AS INT)], ' ') AS shingle
-      |  FROM (SELECT unnest(range(1, len(t) - 1)) AS i, t
-      |        FROM (SELECT string_split(text, ' ') AS t FROM graft_fg_docs)
-      |        WHERE len(t) >= 3)),
-      |postings AS (SELECT DISTINCT doc_id, tok FROM (
-      |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM graft_fg_docs
-      |  WHERE text IS NOT NULL))
-      |SELECT artifact, CAST(n_after AS BIGINT) AS n_after,
-      |       CAST(0 AS BIGINT) AS n_diff
-      |FROM (
-      |  SELECT 'chunk_store' AS artifact,
-      |    (SELECT count(*) FROM graft_fg_docs
-      |     WHERE length(coalesce(text, '')) > 0) AS n_after
-      |  UNION ALL SELECT 'cluster_assign', (SELECT count(*) FROM assign)
-      |  UNION ALL SELECT 'doc_log', (SELECT count(*) FROM graft_fg_docs)
-      |  UNION ALL SELECT 'knn_graph',
-      |    5 * (SELECT count(*) FROM embeddings WHERE vec_id % 97 <> 3)
-      |  UNION ALL SELECT 'lsh_index', 4 * (SELECT count(*) FROM graft_fg_docs)
-      |  UNION ALL SELECT 'phash_index',
-      |    (SELECT coalesce(sum(7 * least(8, octet_length(CAST(text AS BLOB)) // 64)), 0)
-      |     FROM graft_fg_docs WHERE octet_length(CAST(text AS BLOB)) // 64 > 0)
-      |  UNION ALL SELECT 'postings_index', (SELECT count(*) FROM postings)
-      |  UNION ALL SELECT 'pq_index',
-      |    (SELECT count(*) FROM embeddings WHERE vec_id % 97 <> 3)
-      |  UNION ALL SELECT 'sq8_index',
-      |    (SELECT count(*) FROM embeddings WHERE vec_id % 97 <> 3)
-      |  UNION ALL SELECT 'schedule_manifest', (SELECT count(*) FROM graft_fg_manifest)
-      |  UNION ALL SELECT 'shingle_index', (SELECT count(*) FROM spansh)
-      |) ORDER BY artifact""".stripMargin
-
-  /** The composed-queue drain must leave each artifact at the rebuild's
-    * size with a zero row-level diff — the [[forgetOracleSql]] arms for
-    * the six streamed faces, sharing its `graft_fg_docs` materialization
-    * (one DuckDB temp table serves the whole forget family). */
-  private lazy val streamForgetAllOracleSql: String =
-    s"""CREATE TEMP TABLE IF NOT EXISTS graft_fg_docs AS
-      |SELECT * FROM documents WHERE doc_id % 97 <> 3;
-      |WITH spansh AS (
-      |  SELECT DISTINCT array_to_string(t[CAST(i AS INT):CAST(i + 2 AS INT)], ' ') AS shingle
-      |  FROM (SELECT unnest(range(1, len(t) - 1)) AS i, t
-      |        FROM (SELECT string_split(text, ' ') AS t FROM graft_fg_docs)
-      |        WHERE len(t) >= 3)),
-      |postings AS (SELECT DISTINCT doc_id, tok FROM (
-      |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM graft_fg_docs
-      |  WHERE text IS NOT NULL))
-      |SELECT artifact, CAST(n_after AS BIGINT) AS n_after,
-      |       CAST(0 AS BIGINT) AS n_diff
-      |FROM (
-      |  SELECT 'chunk_store' AS artifact,
-      |    (SELECT count(*) FROM graft_fg_docs
-      |     WHERE length(coalesce(text, '')) > 0) AS n_after
-      |  UNION ALL SELECT 'lsh_index',
-      |    4 * (SELECT count(*) FROM graft_fg_docs)
-      |  UNION ALL SELECT 'phash_index',
-      |    (SELECT coalesce(sum(7 * least(8, octet_length(CAST(text AS BLOB)) // 64)), 0)
-      |     FROM graft_fg_docs WHERE octet_length(CAST(text AS BLOB)) // 64 > 0)
-      |  UNION ALL SELECT 'postings_index', (SELECT count(*) FROM postings)
-      |  UNION ALL SELECT 'shingle_index', (SELECT count(*) FROM spansh)
-      |  UNION ALL SELECT 'sq8_index',
-      |    (SELECT count(*) FROM embeddings WHERE vec_id % 97 <> 3)
-      |) ORDER BY artifact""".stripMargin
-
-  /** The curated-landing forget's law in sizes: after forget + full
-    * re-crawl, the `_para_index` holds EVERY distinct 8-token chunk of
-    * the corpus (each key is admitted by an original doc or re-admitted
-    * by the re-crawl once its admitters were forgotten), and the landed
-    * docs are the surviving originals plus the whole re-crawl. Both
-    * n_diff are pinned 0 against the engine-side rebuild. */
-  private lazy val curatedForgetOracleSql: String =
-    s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-      |s AS (SELECT doc_id, toks, unnest(range(0, len(toks), 8)) AS st FROM t),
-      |p AS (SELECT array_to_string(list_slice(toks, st + 1, st + 8), ' ') AS para
-      |      FROM s)
-      |SELECT artifact, CAST(n_after AS BIGINT) AS n_after,
-      |       CAST(0 AS BIGINT) AS n_diff
-      |FROM (
-      |  SELECT 'docs' AS artifact,
-      |    (SELECT count(*) FROM documents WHERE doc_id % 97 <> 3)
-      |      + (SELECT count(*) FROM documents) AS n_after
-      |  UNION ALL SELECT 'para_index', (SELECT count(DISTINCT para) FROM p)
-      |) ORDER BY artifact""".stripMargin
-
-  /** [[trainManifestOracleSql]] parameterized over its corpus table, so
-    * the forget oracle can replay the schedule over the post-delete
-    * corpus (`graft_fg_docs`) with the SAME four-stage nesting. */
-  private def trainManifestOracleSqlFrom(docsTable: String): String =
-
-      // all four stages replayed: the g_epoch_expand CTEs, the
-      // (seed+1)-pre-shifted interleave permutation over eid = id*4 +
-      // epoch, the one-window
-      // prefix sum, and the span fan-out with the partial tail dropped
-      s"""WITH c AS (SELECT source,
-        |        CAST(sum(len(string_split(coalesce(text, ''), ' '))) AS BIGINT) AS n_tokens
-        |      FROM $docsTable GROUP BY source),
-        |r AS (SELECT source, n_tokens, n_tokens * 3 AS cap,
-        |        CAST(row_number() OVER (ORDER BY n_tokens * 3, source) AS BIGINT) AS i,
-        |        CAST(count(*) OVER () AS BIGINT) AS s,
-        |        coalesce(SUM(n_tokens * 3) OVER (ORDER BY n_tokens * 3, source
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS bef
-        |      FROM c),
-        |f AS (SELECT *,
-        |        (CAST(cap AS HUGEINT) * (s - i + 1) <= CAST(40000 AS HUGEINT) - bef) AS flag
-        |      FROM r),
-        |m AS (SELECT *, coalesce(max(CASE WHEN flag THEN i END) OVER (), 0) AS mm,
-        |        coalesce(max(CASE WHEN flag THEN bef + cap END) OVER (), 0) AS pm
-        |      FROM f),
-        |a AS (SELECT source, n_tokens,
-        |        CAST(CASE WHEN i <= mm THEN cap
-        |             ELSE ((40000 - pm) // (s - mm)) +
-        |                  (CASE WHEN i - mm <= ((40000 - pm) % (s - mm)) THEN 1 ELSE 0 END)
-        |        END AS BIGINT) AS alloc
-        |      FROM m),
-        |e AS (SELECT source,
-        |        CAST(CASE WHEN n_tokens > 0 THEN alloc // n_tokens ELSE 0 END AS BIGINT) AS fullr,
-        |        CAST(CASE WHEN n_tokens > 0 THEN alloc % n_tokens ELSE 0 END AS BIGINT) AS frac
-        |      FROM a),
-        |d AS (SELECT doc_id, source,
-        |        CAST(len(string_split(coalesce(text, ''), ' ')) AS BIGINT) AS n_tokens,
-        |        ((doc_id % 2147483647) * 62089911) % 2147483647 AS sk
-        |      FROM $docsTable),
-        |fullrep AS (SELECT doc_id, d.source,
-        |        unnest(generate_series(0, fullr - 1)) AS epoch, n_tokens
-        |      FROM d JOIN e USING (source) WHERE fullr > 0),
-        |cum AS (SELECT d.doc_id, d.source, d.n_tokens, e.fullr, e.frac,
-        |        CAST(sum(d.n_tokens) OVER (PARTITION BY d.source ORDER BY d.sk, d.doc_id
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cm
-        |      FROM d JOIN e USING (source)),
-        |u AS (SELECT doc_id, source, epoch, n_tokens FROM fullrep
-        |      UNION ALL
-        |      SELECT doc_id, source, fullr AS epoch, n_tokens FROM cum
-        |      WHERE cm - n_tokens < frac),
-        |k AS (SELECT *, doc_id * 4 + epoch AS eid,
-        |        (((doc_id * 4 + epoch + 1) % 2147483647) * 62089911) % 2147483647 AS ord
-        |      FROM u),
-        |o2 AS (SELECT *,
-        |        CAST(sum(n_tokens) OVER (ORDER BY ord, eid
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |          - n_tokens AS off
-        |      FROM k WHERE n_tokens > 0),
-        |t2 AS (SELECT CAST(coalesce(sum(n_tokens), 0) AS BIGINT) AS tt
-        |       FROM k WHERE n_tokens > 0),
-        |s2 AS (SELECT doc_id, source, epoch, n_tokens, off,
-        |        unnest(generate_series(off // 128, (off + n_tokens - 1) // 128)) AS seq_id
-        |      FROM o2)
-        |SELECT seq_id,
-        |       CAST(greatest(off, seq_id * 128) - seq_id * 128 AS BIGINT) AS seq_pos,
-        |       doc_id, source, epoch,
-        |       CAST(greatest(off, seq_id * 128) - off AS BIGINT) AS doc_start,
-        |       CAST(least(off + n_tokens, (seq_id + 1) * 128)
-        |            - greatest(off, seq_id * 128) AS BIGINT) AS len
-        |FROM s2, t2 WHERE s2.seq_id < tt // 128
-        |ORDER BY seq_id, seq_pos""".stripMargin
-
-  private lazy val bm25OracleSql: String =
-    s"""WITH $bm25ScoreCtesSql
-       |SELECT doc_id, n_terms, bm25 FROM sc
-       |ORDER BY bm25 DESC, doc_id LIMIT 10""".stripMargin
-
-  /** Adjacency replayed directly (1-based list indexing): positions i
-    * with ts[i] = ts[i+1] = 'order'; anchor is 0-based like the engine.
-    * Shared by g_phrase (full scan) and g_phrase_indexed (positional
-    * index probe — bit-equal contract). */
-  private lazy val phraseOracleSql: String =
-    """WITH d AS (SELECT doc_id,
-      |        string_split(coalesce(text, ''), ' ') AS ts FROM documents),
-      |p AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS anchor
-      |      FROM d, unnest(generate_series(1, len(ts) - 1)) AS t(i)
-      |      WHERE ts[i] = 'order' AND ts[i + 1] = 'order')
-      |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_hits,
-      |       CAST(min(anchor) AS BIGINT) AS first_pos
-      |FROM p GROUP BY doc_id ORDER BY doc_id""".stripMargin
-
-  /** BM25 among exact-phrase matches: the shared scoring CTEs, the
-    * adjacency doc set, a semi join — corpus-wide stats by construction
-    * (the CTEs never see the filter). */
-  private lazy val bm25PhraseOracleSql: String =
-    s"""WITH $bm25ScoreCtesSql,
-       |pdocs AS (SELECT DISTINCT x.doc_id FROM
-       |            (SELECT doc_id, string_split(coalesce(text, ''), ' ') AS ts
-       |             FROM documents) x,
-       |            unnest(generate_series(1, len(ts) - 1)) AS t(i)
-       |          WHERE ts[i] = 'order' AND ts[i + 1] = 'order')
-       |SELECT sc.doc_id, n_terms, bm25 FROM sc JOIN pdocs ON sc.doc_id = pdocs.doc_id
-       |ORDER BY bm25 DESC, sc.doc_id LIMIT 10""".stripMargin
-
-  /** Concat-and-chunk packing replayed as one window prefix-sum (the
-    * engine's chunked two-phase form is spec-pinned bit-equal), spans
-    * via generate_series, trailing partial sequence dropped by the
-    * total. Shared by g_pack_spans (the batch packer) and q_stream_pack
-    * (the streamed + compacted index readback — same contract). */
-  private lazy val packSpansOracleSql: String =
-    """WITH d AS (SELECT doc_id,
-      |        CAST(len(string_split(coalesce(text, ''), ' ')) AS BIGINT) AS n
-      |      FROM documents),
-      |o AS (SELECT doc_id, n,
-      |        CAST(sum(n) OVER (ORDER BY doc_id
-      |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) - n AS off
-      |      FROM d WHERE n > 0),
-      |t AS (SELECT CAST(coalesce(sum(n), 0) AS BIGINT) AS tt FROM d WHERE n > 0),
-      |s AS (SELECT doc_id, n, off,
-      |        unnest(generate_series(off // 128, (off + n - 1) // 128)) AS seq_id
-      |      FROM o)
-      |SELECT s.seq_id,
-      |       CAST(greatest(off, seq_id * 128) - seq_id * 128 AS BIGINT) AS seq_pos,
-      |       doc_id,
-      |       CAST(greatest(off, seq_id * 128) - off AS BIGINT) AS doc_start,
-      |       CAST(least(off + n, (seq_id + 1) * 128)
-      |            - greatest(off, seq_id * 128) AS BIGINT) AS len
-      |FROM s, t WHERE s.seq_id < tt // 128
-      |ORDER BY seq_id, seq_pos""".stripMargin
-
-  /** Replay of [[graft.operators.RetrievalOps.hybridTopK]]: the BM25 arm
-    * (top-30, ranks by the same total order), the exact floored-cosine
-    * arm, and the RRF fold — each arm's reciprocal 1/(60+rank) quantized
-    * to DECIMAL(18,8) before the exact sum, floored at 6 digits. */
-  private lazy val hybridOracleSql: String = {
-    val rc = "CAST(1.0 / (60.0 + CAST(rank AS DOUBLE)) AS DECIMAL(18,8))"
-    s"""WITH $bm25ScoreCtesSql,
-       |lex AS (SELECT doc_id AS id,
-       |               CAST(row_number() OVER (ORDER BY bm25 DESC, doc_id) AS INT) AS rank
-       |        FROM sc ORDER BY bm25 DESC, doc_id LIMIT 30),
-       |q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0),
-       |sim AS (SELECT vec_id,
-       |               floor((list_dot_product(CAST(embedding AS DOUBLE[]), qv) /
-       |                     (sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
-       |                                            CAST(embedding AS DOUBLE[]))) *
-       |                      sqrt(list_dot_product(qv, qv)))) * 10000) / 10000 AS sim
-       |        FROM embeddings, q),
-       |vec AS (SELECT vec_id AS id,
-       |               CAST(row_number() OVER (ORDER BY sim DESC, vec_id) AS INT) AS rank
-       |        FROM sim ORDER BY sim DESC, vec_id LIMIT 30),
-       |u AS (SELECT id, $rc AS c FROM lex
-       |      UNION ALL SELECT id, $rc AS c FROM vec)
-       |SELECT id, CAST(count(*) AS BIGINT) AS n_arms,
-       |       floor(CAST(sum(c) AS DOUBLE) * 1000000) / 1000000 AS rrf
-       |FROM u GROUP BY id ORDER BY rrf DESC, id LIMIT 10""".stripMargin
-  }
-
-  /** Full replay of [[SimilarityOps.knnGraphPq]] under the fixture
-    * centroids + codebooks: cell argmax and probe ranking (the pruned
-    * [[pqOracleSql]] patterns, here per-row since every vector is a
-    * query), the 8 per-subspace code argmaxes, the per-query ADC LUT
-    * (floor(list_dot_product(q_s, codeword)·1e6) BIGINTs — the
-    * [[pqOracleSql]] LUT discipline, per row instead of per one query),
-    * the literal reconstruction-norm table, the ADC-cosine
-    * top-(k·refine) shortlist (integer sums, one double division — the
-    * identical primitive sequence as the engine), and the floored-cosine
-    * exact re-rank. */
-  // --- fixture-PQ SQL fragment builders, shared by knnPqOracleSql and
-  // graphSearchPqOracleSql (same dim-64 / PqM / PqC geometry) ---
-  private def pqArr(w: Seq[Double]) = w.mkString("[", ", ", "]")
-  private def pqCosA(a: String, b: String) =
+  // --- fixture-PQ SQL fragment builders, shared by pqOracleSql,
+  // knnPqOracleSql and graphSearchPqOracleSql (same dim-64 / PqM / PqC
+  // geometry) ---
+  private[graft] def pqArr(w: Seq[Double]) = w.mkString("[", ", ", "]")
+  private[graft] def pqCosA(a: String, b: String) =
     s"(list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b))))"
   /** per-row codeword cosines `c_{s}_{cid}` feeding the code argmaxes */
-  private def pqCwCosSql(dim: Int): String = {
+  private[graft] def pqCwCosSql(dim: Int): String = {
     val subDim = dim / PqM
     (for { s <- 0 until PqM; (cid, w) <- fixturePqCodebooks(dim)(s) } yield
       s"${pqCosA(s"v[${s * subDim + 1}:${(s + 1) * subDim}]", pqArr(w))} AS c_${s}_$cid")
       .mkString(",\n    ")
   }
-  /** per-row fixed-point LUT dots `l_{s}_{cid}` (the row as a query) */
-  private def pqLutDotsSql(dim: Int): String = {
-    val subDim = dim / PqM
-    (for { s <- 0 until PqM; (cid, w) <- fixturePqCodebooks(dim)(s) } yield
-      s"CAST(floor(list_dot_product(v[${s * subDim + 1}:${(s + 1) * subDim}], ${pqArr(w)})" +
-        s" * 1000000) AS BIGINT) AS l_${s}_$cid")
-      .mkString(",\n    ")
-  }
-  /** the literal reconstruction-norm table `nn_{s}_{cid}` */
-  private def pqNrmColsSql(dim: Int): String =
-    (for { s <- 0 until PqM; (cid, w) <- fixturePqCodebooks(dim)(s) } yield
-      s"CAST(floor(list_dot_product(${pqArr(w)}, ${pqArr(w)}) * 1000000) AS BIGINT) AS nn_${s}_$cid")
-      .mkString(",\n    ")
   /** the m per-subspace code argmaxes (ties to the smallest code) */
-  private def pqCodeCasesSql: String =
-    (0 until PqM).map { s =>
-      val arms = (1 until PqC).map { i =>
-        val conds = ((i + 1) to PqC).map(j => s"c_${s}_$i >= c_${s}_$j").mkString(" AND ")
-        s"WHEN $conds THEN $i"
-      }.mkString(" ")
-      s"CASE $arms ELSE $PqC END AS code_$s"
-    }.mkString(",\n    ")
-  /** ADC numerator: Σ_s the candidate's code dispatched into the query's LUT */
-  private def pqSdSumSql: String =
-    (0 until PqM).map { s =>
-      val arms = (1 until PqC).map(c => s"WHEN $c THEN l_${s}_$c").mkString(" ")
-      s"(CASE nc_$s $arms ELSE l_${s}_$PqC END)"
-    }.mkString("\n     + ")
-  /** ADC denominator: the candidate's reconstruction squared norm */
-  private def pqSnSumSql: String =
-    (0 until PqM).map { s =>
-      val arms = (1 until PqC).map(c => s"WHEN $c THEN nn_${s}_$c").mkString(" ")
-      s"(CASE nc_$s $arms ELSE nn_${s}_$PqC END)"
-    }.mkString("\n     + ")
-
-  private def knnPqOracleSql: String = {
-    val dim = 64
-    val cents = fixtureCentroids(dim)
-    def arr(w: Seq[Double]) = pqArr(w)
-    def cosA(a: String, b: String) = pqCosA(a, b)
-    val centCos = cents.map { case (cid, c) => s"${cosA("v", arr(c))} AS cc_$cid" }
+  private[graft] def pqCodeCasesSql: String =
+    (0 until PqM).map(s => s"${argmaxCaseSql(PqC)(i => s"c_${s}_$i")} AS code_$s")
       .mkString(",\n    ")
-    val cwCos = pqCwCosSql(dim)
-    val lutDots = pqLutDotsSql(dim)
-    val nrmCols = pqNrmColsSql(dim)
-    val cellCase = {
-      val arms = (1 until KmFixtureK).map { i =>
-        val conds = ((i + 1) to KmFixtureK).map(j => s"cc_$i >= cc_$j").mkString(" AND ")
-        s"WHEN $conds THEN $i"
-      }.mkString(" ")
-      s"CASE $arms ELSE $KmFixtureK END AS cell"
-    }
-    val codeCases = pqCodeCasesSql
-    val lutCols = (for { s <- 0 until PqM; cid <- 1 to PqC } yield s"l_${s}_$cid")
-      .mkString(", ")
-    val cellUnion = (1 to KmFixtureK)
-      .map(cid => s"SELECT vec_id, $cid AS cid, cc_$cid AS cc FROM cz")
-      .mkString(" UNION ALL\n      ")
-    val sdSum = pqSdSumSql
-    val snSum = pqSnSumSql
-    val ncCols = (0 until PqM).map(s => s"n.code_$s AS nc_$s").mkString(", ")
-    s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |cz AS (SELECT vec_id, v,
-       |    $centCos,
-       |    $cwCos,
-       |    $lutDots
-       |  FROM v),
-       |b AS (SELECT vec_id,
-       |    $cellCase,
-       |    $codeCases
-       |  FROM cz),
-       |nrm AS (SELECT
-       |    $nrmCols),
-       |pc AS (
-       |  SELECT vec_id AS qid, cid AS cell FROM (
-       |    SELECT vec_id, cid, cc,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY cc DESC, cid) AS rn
-       |    FROM ($cellUnion))
-       |  WHERE rn <= 2),
-       |sc AS (
-       |  SELECT p.qid, n.vec_id AS id,
-       |    CAST($sdSum AS DOUBLE)
-       |      / sqrt(CAST($snSum AS DOUBLE)) AS adc
-       |  FROM pc p
-       |    JOIN (SELECT vec_id, $lutCols FROM cz) q ON q.vec_id = p.qid
-       |    JOIN (SELECT vec_id, cell, $ncCols FROM b n) n ON n.cell = p.cell
-       |      AND n.vec_id <> p.qid,
-       |    nrm),
-       |short AS (
-       |  SELECT qid, id FROM (
-       |    SELECT qid, id,
-       |      row_number() OVER (PARTITION BY qid ORDER BY adc DESC, id) AS rn
-       |    FROM sc)
-       |  WHERE rn <= 20),
-       |re AS (
-       |  SELECT sh.qid AS vec_id, sh.id AS neighbor_id,
-       |    floor(${cosA("a.v", "c.v")} * 10000) / 10000 AS sim
-       |  FROM short sh JOIN v a ON a.vec_id = sh.qid JOIN v c ON c.vec_id = sh.id),
-       |rk AS (SELECT *,
-       |    row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, neighbor_id) AS rank
-       |  FROM re)
-       |SELECT vec_id, neighbor_id, sim, CAST(rank AS INT) AS rank
-       |FROM rk WHERE rank <= 5 ORDER BY vec_id, rank""".stripMargin
-  }
 
-  /** Full replay of [[SimilarityOps.prototypePrune]] under the fixture
-    * centroids: cell argmax, own-centroid fixed-point score, per-cell
-    * counts, per-cell hardest-first rank, the integer keep rule. */
-  private lazy val prototypePruneOracleSql: String = {
-    val cents = fixtureCentroids(64)
-    def arr(w: Seq[Double]) = w.mkString("[", ", ", "]")
-    def cosA(a: String, b: String) =
-      s"(list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b))))"
-    val centCos = cents.map { case (cid, c) => s"${cosA("v", arr(c))} AS cc_$cid" }
-      .mkString(",\n    ")
-    val ccCols = (1 to KmFixtureK).map(c => s"cc_$c").mkString(", ")
-    val cellCase = {
-      val arms = (1 until KmFixtureK).map { i =>
-        val conds = ((i + 1) to KmFixtureK).map(j => s"cc_$i >= cc_$j").mkString(" AND ")
-        s"WHEN $conds THEN $i"
-      }.mkString(" ")
-      s"CASE $arms ELSE $KmFixtureK END AS cell"
-    }
-    val protoCase = (1 until KmFixtureK).map(c => s"WHEN $c THEN cc_$c")
-      .mkString("CASE cell ", " ", s" ELSE cc_$KmFixtureK END")
-    s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |cz AS (SELECT vec_id,
-       |    $centCos
-       |  FROM v),
-       |b AS (SELECT vec_id, $ccCols, $cellCase FROM cz),
-       |s AS (SELECT vec_id, cell,
-       |    CAST(floor(($protoCase) * 1000000) AS BIGINT) AS proto_ppm
-       |  FROM b),
-       |n AS (SELECT cell, CAST(count(*) AS BIGINT) AS cn FROM s GROUP BY cell),
-       |r AS (SELECT s.vec_id, s.cell, s.proto_ppm, n.cn,
-       |    row_number() OVER (PARTITION BY s.cell ORDER BY s.proto_ppm ASC, s.vec_id) AS rk
-       |  FROM s JOIN n ON n.cell = s.cell)
-       |SELECT vec_id, cell, proto_ppm, (rk * 100 <= cn * 60) AS kept
-       |FROM r ORDER BY vec_id""".stripMargin
-  }
+  /** The recursive closure of the pair CTE `pairs` (columns `left`,
+    * `right`): CTEs `edges`, both directions of every pair, and
+    * `reach(a, b)`, every node reachable from `a`; `min(b)` per `a` labels
+    * its connected component. The caller opens `WITH RECURSIVE`. */
+  private[graft] def reachCtesSql(pairs: String, left: String = "id1",
+      right: String = "id2"): String =
+    s"""edges AS (
+       |  SELECT $left AS src, $right AS dst FROM $pairs
+       |  UNION SELECT $right AS src, $left AS dst FROM $pairs),
+       |reach(a, b) AS (
+       |  SELECT src, src FROM edges
+       |  UNION
+       |  SELECT r.a, e.dst FROM reach r JOIN edges e ON r.b = e.src)""".stripMargin
 
-  /** The fixed-point Lloyd-step oracle, shared by g_kmeans_step (batch)
-    * and q_stream_kmeans (single-batch streaming degenerate case). */
-  private lazy val kmeansStepOracleSql: String = {
-    val cents = fixtureCentroids(64)
-    val cosExprs = cents.map { case (cid, c) =>
-      val arr = c.mkString("[", ", ", "]")
-      s"(list_dot_product(v, $arr) / (sqrt(list_dot_product(v, v)) * sqrt(list_dot_product($arr, $arr)))) AS c$cid"
-    }.mkString(",\n    ")
-    val assign = (1 until KmFixtureK).map { i =>
-      val conds = ((i + 1) to KmFixtureK).map(j => s"c$i >= c$j").mkString(" AND ")
-      s"WHEN $conds THEN $i"
-    }.mkString("CASE ", " ", s" ELSE $KmFixtureK END")
-    s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |c AS (
-       |  SELECT vec_id, v,
-       |    $cosExprs
-       |  FROM v),
-       |b AS (SELECT vec_id, v, $assign AS cell FROM c),
-       |e AS (
-       |  SELECT cell, u.dim AS dim, u.x AS x
-       |  FROM (SELECT cell,
-       |          unnest(list_transform(range(len(v)), i -> {'dim': i, 'x': v[i+1]})) AS u
-       |        FROM b))
-       |SELECT cell, dim,
-       |       CAST(sum(CAST(floor(x * 1000000.0) AS BIGINT)) AS DOUBLE)
-       |         / (1000000.0 * count(*)) AS mean_x,
-       |       count(*) AS n_vecs
-       |FROM e GROUP BY cell, dim ORDER BY cell, dim""".stripMargin
-  }
+  /** The exact shingle-Jaccard components of the `(doc_id, text)` rows of
+    * `docs`: CTEs `sh`, each doc's distinct 3-token shingles (its whole
+    * text when shorter), `pairs` at Jaccard >= 0.5, and their
+    * [[reachCtesSql]] closure. */
+  private[graft] def shingleReachCtesSql(docs: String): String =
+    s"""sh AS (
+       |  SELECT doc_id, list_distinct(CASE WHEN len(t) >= 3
+       |    THEN list_transform(range(1, len(t) - 1), i -> array_to_string(t[i:i+2], ' '))
+       |    ELSE [array_to_string(t, ' ')] END) AS toks
+       |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM $docs)),
+       |pairs AS (
+       |  SELECT a.doc_id AS id1, b.doc_id AS id2
+       |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
+       |  WHERE len(list_intersect(a.toks, b.toks)) /
+       |        (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks))) >= 0.5),
+       |${reachCtesSql("pairs")}""".stripMargin
 
   /** A fresh scratch directory for one query's intermediate tables. All
     * of them live under one per-JVM `graft_*` root, which a shutdown hook
     * removes when the JVM exits: after Spark has stopped (the hook runs
     * below Spark's own shutdown priority), so after Verify or Bench has
     * collected every result read from it. */
-  private def scratchDir(prefix: String): String =
+  private[graft] def scratchDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(scratchRoot, s"${prefix}_").toString
 
   private lazy val scratchRoot: java.nio.file.Path = {
@@ -2305,7 +336,7 @@ object SparkEntry {
   /** [[drain]] into the memory sink `name` in output `mode`, returning the
     * drained rows; a stale query still running under `name` is stopped
     * first. */
-  private def drainToMemory(s: SparkSession, dir: String, table: String, name: String,
+  private[graft] def drainToMemory(s: SparkSession, dir: String, table: String, name: String,
       mode: String)(rows: DataFrame): DataFrame = {
     s.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
     drain(s, dir, table)(rows.writeStream.format("memory").queryName(name).outputMode(mode))
@@ -2372,4754 +403,14 @@ object SparkEntry {
       .orderBy(col("user_id"))
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // ---- B. projections / filters ------------------------------------
-    "q_load_aggregate" -> { (s, dir) => // B1: one aggregate, clustering order
-      Tables.events(s, dir)
-        .filter(col("user_id") === 7)
-        .select(col("user_id"), col("event_id"), col("ts_us"), col("event_type"),
-          col("value"), col("props"))
-        .orderBy(col("event_id"))
-    },
-
-    "q_load_desc" -> { (s, dir) => // B4: same partition, reverse order
-      Tables.events(s, dir)
-        .filter(col("user_id") === 7)
-        .select(col("user_id"), col("event_id"), col("ts_us"), col("event_type"))
-        .orderBy(col("event_id").desc)
-    },
-
-    "q_load_event" -> { (s, dir) => // B2: point lookup (first event of agg 7)
-      Tables.events(s, dir)
-        .filter(col("user_id") === 7)
-        .orderBy(col("event_id"))
-        .select(col("event_id"), col("ts_us"), col("props"))
-        .limit(1)
-    },
-
-    "q_load_rebuild" -> { (s, dir) => // B3: narrowest projection, payload only
-      Tables.events(s, dir)
-        .filter(col("user_id") === 7)
-        .orderBy(col("event_id"))
-        .select(col("props"))
-        .limit(1)
-    },
-
-    "q_ts_range" -> { (s, dir) => // B5/E2: inclusive time-range full scan
-      Tables.events(s, dir)
-        .filter(Tables.tsUsBetween(T10, T20))
-        .select(col("event_id"), col("user_id"), col("event_type"), col("ts_us"))
-        .orderBy(col("event_id"))
-    },
-
-    "q_ts_range_derived" -> { (s, dir) => // B5 written the way a USER
-      // writes it: the range filter sits on the derived micros column
-      // with no manual raw bound — plans.DerivedLongBounds synthesizes
-      // the nanos scan bounds (pinned in PlanRegressionSpec); shares
-      // q_ts_range's oracle
-      Tables.events(s, dir)
-        .filter(col("ts_us").between(T10, T20))
-        .select(col("event_id"), col("user_id"), col("event_type"), col("ts_us"))
-        .orderBy(col("event_id"))
-    },
-
-    // ---- A6/E4/C1/C2: the by-event-type index ------------------------
-    "q_index_build" -> { (s, dir) => // A6: index derivation from the log
-      Tables.events(s, dir)
-        .select(col("event_type").as("et"), col("pid"),
-          col("user_id").as("aid"), col("event_id").as("eid"), col("ts_us"))
-        .orderBy(col("et"), col("pid"), col("ts_us"), col("eid"))
-    },
-
-    "q_index_range" -> { (s, dir) => // E4: day-pruned index range read
-      Tables.events(s, dir)
-        .filter(col("event_type") === "purchase" &&
-          col("pid").between(2024010, 2024020) &&
-          Tables.tsUsBetween(T10, T20))
-        .select(col("event_type").as("et"), col("pid"),
-          col("user_id").as("aid"), col("event_id").as("eid"), col("ts_us"))
-        .orderBy(col("ts_us"), col("eid"))
-    },
-
-    "q_index_join" -> { (s, dir) => // C1: index -> events equi-join
-      // through EventStoreOps (hint-free policy; PlanRegressionSpec pins it)
-      val ev = Tables.events(s, dir)
-      val idx = ev
-        .filter(col("event_type") === "purchase" && Tables.tsUsBetween(T10, T20))
-        .select(col("user_id").as("aid"), col("event_id").as("eid"))
-      graft.operators.EventStoreOps.indexJoinOn(ev, idx,
-          col("user_id") === col("aid") && col("event_id") === col("eid"))
-        .select(col("event_id"), col("user_id"), col("event_type"), col("ts_us"), col("value"))
-        .orderBy(col("event_id"))
-    },
-
-    "q_semi_join" -> { (s, dir) => // C2: whole aggregates touched by a type
-      // through EventStoreOps (hint-free policy; PlanRegressionSpec pins it)
-      val ev = Tables.events(s, dir)
-      val touched = ev
-        .filter(col("event_type") === "error" && Tables.tsUsBetween(T10, T20))
-        .select(col("user_id").as("aid")).distinct()
-      graft.operators.EventStoreOps.semiJoinAggregatesOn(ev, touched,
-          col("user_id") === col("aid"))
-        .groupBy(col("user_id"))
-        .agg(
-          count(lit(1)).as("n_events"),
-          min("ts_us").as("first_us"),
-          max("ts_us").as("last_us"))
-        .orderBy(col("user_id"))
-    },
-
-    // ---- D/E. aggregation / replay -----------------------------------
-    "q_aggregate_streams" -> { (s, dir) => // E3/D5: per-aggregate ordered stream
-      Tables.events(s, dir)
-        .groupBy(col("user_id"))
-        .agg(
-          count(lit(1)).as("n_events"),
-          array_join(transform(array_sort(collect_list(col("event_id"))),
-            _.cast("string")), ",").as("ids_csv"))
-        .orderBy(col("user_id"))
-    },
-
-    "q_keyset_page" -> { (s, dir) => // E6: keyset pagination, page after rev 100
-      Tables.events(s, dir)
-        .filter(col("user_id") === 7 && col("event_id") > 100)
-        .select(col("event_id"), col("ts_us"), col("event_type"))
-        .orderBy(col("event_id"))
-        .limit(10)
-    },
-
-    "q_min_ts" -> { (s, dir) => // D1: global min ts (default replay start)
-      Tables.events(s, dir).agg(min("ts_us").as("min_ts_us"))
-    },
-
-    "q_message_counter" -> { (s, dir) => // D2: counter truth per message type
-      Tables.events(s, dir)
-        .groupBy(col("event_type").as("msgid"))
-        .agg(count(lit(1)).as("cv"))
-        .orderBy(col("msgid"))
-    },
-
-    "q_count_for_type" -> { (s, dir) => // D4 (fixed semantics): count one type
-      Tables.events(s, dir)
-        .filter(col("event_type") === "click")
-        .agg(count(lit(1)).as("cnt"))
-    },
-
-    "q_latest_state" -> { (s, dir) => // current-state table: the newest
-      // event per aggregate in ONE hash aggregation (max_by — no window,
-      // no self-join; the CDC "latest revision wins" read). event_id is
-      // unique per aggregate, so the argmax is deterministic.
-      Tables.events(s, dir)
-        .groupBy(col("user_id"))
-        .agg(
-          max(col("event_id")).as("last_rev"),
-          max_by(col("event_type"), col("event_id")).as("last_type"),
-          max_by(col("ts_us"), col("event_id")).as("last_ts_us"))
-        .orderBy(col("user_id"))
-    },
-
-    "q_cohort_retention" -> { (s, dir) => // cohort analysis: users grouped
-      // by first-seen day, per (cohort, days-since) active-user counts —
-      // the standard retention matrix. Two aggs + one join: the first-seen
-      // frame is |users| (AQE broadcasts it); the fact shuffles once.
-      val ev = Tables.events(s, dir)
-        // integer `div`, not double-divide-then-truncate: matches the
-        // oracle's exact floor-division (//) semantics for all longs, not
-        // just positive ones far from the 2^53 double mantissa limit
-        .select(col("user_id"), expr("ts_us div 86400000000").as("day"))
-      val firstSeen = ev.groupBy(col("user_id")).agg(min(col("day")).as("cohort_day"))
-      ev.join(firstSeen, Seq("user_id"))
-        .groupBy(col("cohort_day"), (col("day") - col("cohort_day")).as("days_since"))
-        .agg(countDistinct(col("user_id")).as("active_users"))
-        .orderBy(col("cohort_day"), col("days_since"))
-    },
-
-    "q_pivot_types" -> { (s, dir) => // pivot: per-user event-type counts as
-      // columns (Catalyst rewrites the pivot into conditional aggregates —
-      // one shuffle, no per-column scans); explicit value list, so the
-      // schema is static and no values-discovery pre-pass runs at scale
-      Tables.events(s, dir)
-        .groupBy(col("user_id"))
-        .pivot("event_type", Seq("click", "view", "purchase", "signup", "error"))
-        .agg(count(lit(1)))
-        .na.fill(0L)
-        .orderBy(col("user_id"))
-    },
-
-    "q_rollup_daily" -> { (s, dir) => // rollup: (et, pid) counts with both
-      // subtotal levels in one pass — grouping-sets expansion inside a
-      // single hash aggregation, the OLAP subtotal shape
-      Tables.events(s, dir)
-        .rollup(col("event_type"), col("pid"))
-        .agg(count(lit(1)).as("n"), grouping_id().cast("long").as("gid"))
-        .orderBy(col("gid"), col("event_type"), col("pid"))
-    },
-
-    "q_daily_counts" -> { (s, dir) => // E4 partition math: per-day-pid counts
-      Tables.events(s, dir)
-        .groupBy(col("pid"))
-        .agg(
-          count(lit(1)).as("n"),
-          count(when(col("event_type") === "purchase", 1)).as("n_purchase"))
-        .orderBy(col("pid"))
-    },
-
-    "q_commit_split" -> { (s, dir) => // D5: pos-gap commit reassembly,
-      // end-to-end through the write-side pos encoding and the read-side
-      // split (AggregateCommitBlock.cs:56-64): events are grouped into one
-      // commit per (aggregate, day); every event is a private event and the
-      // value>=100 ones are ALSO published as public events, which
-      // commitToRows places at pos = n-1+PublicEventsOffset+k. The oracle
-      // recomputes the expected positions arithmetically.
-      val ev = Tables.events(s, dir)
-      val commits = ev
-        .groupBy(col("user_id").as("id"), col("pid").as("rev"))
-        .agg(
-          min(TimeFns.microsToFileTime(col("ts_us"))).as("ts"),
-          transform(
-            array_sort(collect_list(struct(col("event_id").as("eid"),
-              encode(col("props"), "utf-8").as("d")))),
-            e => e.getField("d")).as("events"),
-          transform(
-            array_sort(collect_list(when(col("value") >= 100,
-              struct(col("event_id").as("eid"), encode(col("props"), "utf-8").as("d"))))),
-            e => e.getField("d")).as("publicEvents"))
-      val rows = graft.sources.Storage.commitToRows(commits)
-      graft.operators.EventStoreOps.reassembleCommits(rows)
-        .select(col("id"), col("rev"),
-          size(col("events")).as("n_private"),
-          size(col("publicEvents")).as("n_public"),
-          array_join(transform(col("events"),
-            e => e.getField("pos").cast("string")), ",").as("priv_pos"),
-          array_join(transform(col("publicEvents"),
-            e => e.getField("pos").cast("string")), ",").as("pub_pos"))
-        .orderBy(col("id"), col("rev"))
-    },
-
-    "q_counter_fold" -> { (s, dir) => // B7/D2/D3: increments-log fold with a
-      // compensating reset (MessageCounter.cs:63-117): +1 per event, then a
-      // reset appends -cv for the pre-2024-01-10 prefix; the fold nets out
-      // to the post-reset count per message type.
-      val ev = Tables.events(s, dir)
-      val incr = ev.select(col("event_type").as("msgid"), lit(1L).as("delta"))
-      val early = ev.filter(col("ts_ns") < lit(T10 * 1000L))
-        .select(col("event_type").as("msgid"), lit(1L).as("delta"))
-      val resets = graft.operators.CounterOps.counters(early)
-        .select(col("msgid"), (-col("cv")).as("delta"))
-      graft.operators.CounterOps.counters(incr.unionByName(resets))
-        .orderBy(col("msgid"))
-    },
-
-    "q_message_scan" -> { (s, dir) => // A8/A9: message-store scan shape —
-      // day-truncated FileTime partition key (the same withMessageDate the
-      // sink uses) -> per-day counts and ts bounds
-      // (CassandraMessageStore.cs:19-68)
-      val msgs = Tables.eventLog(s, dir).select(col("ts"), col("data"))
-      graft.sources.Storage.withMessageDate(msgs)
-        .groupBy(col("date"))
-        .agg(count(lit(1)).as("n_msgs"), min("ts").as("first_ts"), max("ts").as("last_ts"))
-        .orderBy(col("date"))
-    },
-
-    "q_stream_counters" -> { (s, dir) => // streaming D2: the message counter
-      // as an update/complete-mode stateful streaming aggregation, driven
-      // to batch completion with an AvailableNow drain and gated by the
-      // SAME oracle as the batch fold — the streaming path computes the
-      // reference's counter semantics (MessageCounter.cs) exactly-once
-      drainToMemory(s, dir, "events", "q_stream_counters_sink", "complete")(
-          graft.streaming.StreamingOps.liveCounters(stream(s, dir, "events"), etCol = "event_type"))
-        .select(col("msgid"), col("cv")).orderBy(col("msgid"))
-    },
-
-    "q_stream_dedup" -> { (s, dir) => // streaming exactly-once landing: the
-      // log's file-stream source unioned with itself simulates at-least-once
-      // redelivery (every event arrives twice); dropDuplicatesWithinWatermark
-      // on (id, rev, pos) lands each exactly once, and the landed counts
-      // must match the batch oracle — the reference's non-idempotent
-      // retry-double-write (CassandraEventStore.cs:67-70) made exact
-      val ev = stream(s, dir, "events")
-      val src = ev.select(col("user_id").as("id"), col("event_id").cast("int").as("rev"),
-        lit(0).as("pos"), col("event_type"),
-        timestamp_micros(Tables.tsToMicros(col("ts"), ev.schema("ts").dataType)).as("ts_t"))
-      drainToMemory(s, dir, "events", "q_stream_dedup_sink", "append")(
-          graft.streaming.StreamingOps.dedupedEvents(src.unionByName(src), "ts_t"))
-        .groupBy(col("event_type").as("msgid"))
-        .agg(count(lit(1)).as("cv"))
-        .orderBy(col("msgid"))
-    },
-
-    "q_zorder_box" -> { (s, dir) => // Z-order layout round trip: events
-      // re-clustered on the (user_id, pid) interleaved-bit key, read back
-      // through a two-dimensional box filter. The result is
-      // layout-independent, so the oracle gates read correctness;
-      // LayoutSpec gates the pruning property (footer min/max tight on
-      // BOTH dimensions) that is the feature's reason to exist at 100 TB.
-      val out = scratchDir("zorder")
-      try {
-        val ev = Tables.events(s, dir)
-          .select(col("user_id"), col("event_id"), col("ts_us"),
-            col("pid").cast("long").as("pid"))
-        graft.sources.Layout.writeZOrdered(ev, s"$out/z", "user_id", "pid",
-          bits = 21, nFiles = 8)
-        s.read.parquet(s"$out/z")
-          .filter(col("user_id").between(3, 10) && col("pid").between(2024010L, 2024020L))
-          .select(col("user_id"), col("event_id"), col("ts_us"), col("pid"))
-          .orderBy(col("event_id"))
-          // eager: the box-filtered readback (small by construction) is
-          // materialized before the table copy is deleted — a bench rep
-          // must not orphan a full events copy under /tmp per invocation
-          .localCheckpoint(true)
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
-    },
-
-    "q_stream_contamination" -> { (s, dir) => // stream-STATIC join: eval
-      // docs stream in and are screened against the static train-corpus
-      // shingle index as they land (the continuous benchmark-decontam
-      // shape); the landed pair set rolled up per eval doc must equal the
-      // batch shingle-overlap truth. Stateless append — no watermark, no
-      // join state; the static side re-plans per micro-batch.
-      val evalStream = stream(s, dir, "documents")
-        .filter(pmod(col("doc_id"), lit(97)) === 0)
-      val trainShingles = CurationOps.shingleRows(
-          Tables.documents(s, dir).filter(pmod(col("doc_id"), lit(97)) =!= 0),
-          k = 3, hashed = false)
-        .select(col("shingle")).distinct()
-      drainToMemory(s, dir, "documents", "q_stream_contamination_sink", "append")(
-          graft.streaming.StreamingOps.contaminationStream(evalStream, trainShingles))
-        .groupBy(col("eval_id"))
-        .agg(countDistinct(col("shingle")).as("n_shared"))
-        .orderBy(col("eval_id"))
-    },
-
-    "q_stream_decontam" -> { (s, dir) => // stream-static SEMANTIC
-      // decontamination: eval embeddings stream in, probe ALL IVF cells
-      // (probe-all = lossless, the g_decontam_ivf contract) against the
-      // static train cell index, and every pair clearing the cosine
-      // threshold lands exactly once — stateless append, no join state.
-      // The per-eval argmax over the landed pairs must equal the batch
-      // g_decontam rows' flagged subset; rolled up here per eval doc.
-      val evalStream = stream(s, dir, "embeddings")
-        .filter(col("label") === 0)
-      val train = Tables.embeddings(s, dir).filter(col("label") === 1)
-      drainToMemory(s, dir, "embeddings", "q_stream_decontam_sink", "append")(
-          graft.streaming.StreamingOps.decontamStream(evalStream, train,
-            centroids = fixtureCentroids(64), nProbe = KmFixtureK, threshold = 0.3))
-        .groupBy(col("eval_id"))
-        .agg(max(struct(col("sim"), (-col("train_id")).as("nt"),
-          col("train_id").as("t"))).as("m"),
-          count(lit(1)).as("n_flagged"))
-        .select(col("eval_id"), col("m.t").as("train_id"),
-          col("m.sim").as("sim"), col("n_flagged"))
-        .orderBy(col("eval_id"))
-    },
-
-    "q_stream_attrib" -> { (s, dir) => // stream-stream attribution join:
-      // purchases matched to the same user's views from the preceding 6h,
-      // both sides watermarked, the time-range condition bounding join
-      // state. The memory sink collects the append-mode pair stream; the
-      // per-purchase rollup of those pairs must equal the batch self-join
-      // the oracle computes — landing the pairs exactly once is the gate.
-      val ev = stream(s, dir, "events")
-      val src = ev.select(col("user_id"), col("event_id"), col("event_type"),
-        timestamp_micros(Tables.tsToMicros(col("ts"), ev.schema("ts").dataType)).as("ts_t"))
-      drainToMemory(s, dir, "events", "q_stream_attrib_sink", "append")(
-          graft.streaming.StreamingOps.attributionPairs(src, srcType = "view", tgtType = "purchase"))
-        .groupBy(col("purchase_id"))
-        .agg(count(lit(1)).as("n_views"), min(col("view_id")).as("first_view_id"))
-        .orderBy(col("purchase_id"))
-    },
-
-    "q_stream_sessions" -> { (s, dir) => // streaming sessionization:
-      // session_window merges events with gaps < 6h per user — the
-      // stateful merging-window shape (state = open sessions only, bounded
-      // by the watermark horizon at scale). Boundary semantics differ from
-      // the batch sessionizer by design: session_window starts a NEW
-      // session at gap == 6h exactly (strict <), and the oracle encodes
-      // that (>= starts a session), so the gate is exact, not approximate.
-      val ev = stream(s, dir, "events")
-      val src = ev.select(col("user_id"),
-        timestamp_micros(Tables.tsToMicros(col("ts"), ev.schema("ts").dataType)).as("ts_t"))
-      drainToMemory(s, dir, "events", "q_stream_sessions_sink", "complete")(
-          graft.streaming.StreamingOps.sessionCounts(src))
-        .select(col("user_id"), col("start_us"), col("last_us"), col("n_events"))
-        .orderBy(col("user_id"), col("start_us"))
-    },
-
-    "q_stream_index" -> { (s, dir) => // streaming A6/E5: continuous index
-      // maintenance — each micro-batch is projected through the batch A6
-      // derivation and landed in the (et, pid) layout via foreachBatch
-      // (StreamingOps.indexTo); readback of the persisted index must equal
-      // the batch derivation, so it shares q_index_build's oracle
-      val out = scratchDir("q_stream_index")
-      val ev = stream(s, dir, "events")
-      val src = ev.select( // test-table -> canonical event columns (FIXTURES.md §2)
-        col("event_type").as("et"),
-        col("user_id").as("id"),
-        col("event_id").as("rev"),
-        lit(0).as("pos"),
-        TimeFns.microsToFileTime(Tables.tsToMicros(col("ts"), ev.schema("ts").dataType)).as("ts"))
-      drain(s, dir, "events")(
-        graft.streaming.StreamingOps.indexTo(src, s"$out/index", s"$out/ckpt"))
-      s.read.parquet(s"$out/index")
-        .select(col("et"), col("pid"), col("aid"), col("rev").as("eid"),
-          TimeFns.fileTimeToMicros(col("ts")).as("ts_us"))
-        .orderBy(col("et"), col("pid"), col("ts_us"), col("eid"))
-    },
-
-    "q_generation_delete" -> { (s, dir) => // A5, object-store flavor,
-      // end-to-end: land the log as generation 1 (bucketed + _CURRENT
-      // manifest), tombstone every event of aggregate 7, deleteAndPromote
-      // (rewrites ONLY bucket(7) into generation 2, atomic manifest swap),
-      // then read back through the manifest — must equal the oracle's
-      // WHERE user_id <> 7 over the source table
-      val root = scratchDir("gen") + "/events"
-      val log = Tables.eventLog(s, dir).drop("et")
-        .withColumn("id", col("id").cast("string").cast("binary"))
-      graft.sources.Generations.bootstrap(s, root, log, nBuckets = 16)
-      val tomb = log.filter(col("id") === lit("7".getBytes)).select("id", "rev", "pos")
-      graft.sources.Generations.deleteAndPromote(s, root, tomb, nBuckets = 16)
-      graft.sources.Generations.readCurrent(s, root)
-        .select(
-          col("id").cast("string").cast("long").as("user_id"),
-          col("rev").as("event_id"),
-          TimeFns.fileTimeToMicros(col("ts")).as("ts_us"))
-        .orderBy(col("user_id"), col("event_id"))
-    },
-
-    "q_generation_diff" -> { (s, dir) => // time-travel DIFF between two
-      // promotes: bootstrap (v1), delete aggregate 7 (v2), then
-      // Generations.diff(1, 2) — resolved from the MANIFESTS, reading
-      // only buckets whose entry changed (here: bucket(7) on both
-      // sides), must report exactly aggregate 7's rows as 'removed'
-      val root = scratchDir("gendiff") + "/events"
-      val log = Tables.eventLog(s, dir).drop("et")
-        .withColumn("id", col("id").cast("string").cast("binary"))
-      graft.sources.Generations.bootstrap(s, root, log, nBuckets = 16)
-      val tomb = log.filter(col("id") === lit("7".getBytes)).select("id", "rev", "pos")
-      graft.sources.Generations.deleteAndPromote(s, root, tomb, nBuckets = 16)
-      graft.sources.Generations.diff(s, root, vOld = 1, vNew = 2)
-        .select(
-          col("id").cast("string").cast("long").as("user_id"),
-          col("rev").as("event_id"),
-          col("change"))
-        .orderBy(col("user_id"), col("event_id"))
-    },
-
-    "q_stream_versioned" -> { (s, dir) => // round-9 verdict #2, oracle side:
-      // streaming ingest composed with the Generations MVCC tier. The
-      // events stream lands through ingestToVersioned (each micro-batch =
-      // appendAndPromote under conflict retry), then a deleteAndPromote
-      // removes aggregate 7 and the manifest-resolved readback must equal
-      // the batch oracle over user_id <> 7 — the q_stream_counters shape
-      // (counts per type) over the versioned layout. The CONCURRENT
-      // stream-vs-delete race is StreamingGenerationsSpec; this gates the
-      // composed data path end-to-end against DuckDB.
-      val out = scratchDir("q_stream_versioned")
-      val root = s"$out/events"
-      val ev = stream(s, dir, "events")
-      val src = ev.select( // test-table -> canonical event columns (FIXTURES.md §2)
-        col("user_id").cast("string").cast("binary").as("id"),
-        col("event_id").cast("int").as("rev"),
-        lit(0).as("pos"),
-        TimeFns.microsToFileTime(Tables.tsToMicros(col("ts"), ev.schema("ts").dataType)).as("ts"),
-        col("event_type").cast("binary").as("data"))
-      drain(s, dir, "events")(graft.streaming.StreamingOps
-        .ingestToVersioned(src, root, s"$out/ckpt", nBuckets = 16))
-      val tomb = graft.sources.Generations.readCurrent(s, root)
-        .filter(col("id") === lit("7".getBytes)).select("id", "rev", "pos")
-      graft.sources.Generations.deleteAndPromote(s, root, tomb, nBuckets = 16)
-      graft.sources.Generations.readCurrent(s, root)
-        .groupBy(col("data").cast("string").as("msgid"))
-        .agg(count(lit(1)).as("cv"))
-        .orderBy(col("msgid"))
-    },
-
-    "q_stream_curated" -> { (s, dir) => // round-10 verdict #2: the streaming
-      // curated landing, oracle side — an AvailableNow run of curatedIngest
-      // lands documents through the per-batch dedup-against-index path
-      // (idempotent batch-id-derived layout, pb-bucketed paragraph-key
-      // index), and the docs readback must equal the BATCH paragraphDedup
-      // truth (g_para_dedup's oracle; the single source file arrives as one
-      // micro-batch — cross-batch/cross-run frontier semantics are
-      // StreamingCurationSpec's job)
-      val out = scratchDir("q_stream_curated")
-      val src = stream(s, dir, "documents")
-        .select(col("doc_id"), col("text"))
-      drain(s, dir, "documents")(graft.streaming.StreamingOps
-        .curatedIngest(src, s"$out/curated", s"$out/ckpt"))
-      s.read.parquet(s"$out/curated/docs")
-        .select(col("doc_id"), col("clean_text"), col("n_kept"), col("n_dropped"))
-        .orderBy(col("doc_id"))
-    },
-
-    "q_stream_card" -> { (s, dir) => // streaming dataset card: an
-      // AvailableNow run lands per-batch partial sums + distinct key
-      // digests; the merged read must equal the BATCH datasetCard over
-      // the same corpus (g_dataset_card's oracle verbatim). Cross-batch
-      // merge/replay/fold semantics are CardStreamSpec's job.
-      val out = scratchDir("q_stream_card")
-      val src = stream(s, dir, "documents")
-        .select(col("source"), col("lang"), col("text"))
-      drain(s, dir, "documents")(graft.streaming.StreamingOps
-        .cardStream(src, s"$out/card", s"$out/ckpt"))
-      graft.streaming.StreamingOps.readCard(s, s"$out/card")
-        .orderBy(col("source"))
-    },
-
-    "q_stream_budget" -> { (s, dir) => // token-budget-capped streaming
-      // ingest: an AvailableNow run admits documents until the lifetime
-      // budget (9000 tokens, seed-7 permutation order) — the single-batch
-      // case IS the batch tokenBudgetSample, so it shares g_token_budget's
-      // single-window oracle. Cross-batch frontier/replay semantics are
-      // BudgetStreamSpec's job.
-      val out = scratchDir("q_stream_budget")
-      val src = stream(s, dir, "documents")
-        .select(col("doc_id"), col("text"))
-      drain(s, dir, "documents")(graft.streaming.StreamingOps
-        .budgetIngest(src, s"$out/budget", s"$out/ckpt",
-          budgetTokens = 9000L, seed = 7L, nRanges = 8))
-      s.read.schema("doc_id LONG, sort_key LONG, n_tokens LONG")
-        .option("basePath", s"$out/budget/docs").parquet(s"$out/budget/docs")
-        .select(col("doc_id"), col("sort_key"), col("n_tokens"))
-        .orderBy(col("doc_id"))
-    },
-
-    "q_stream_quantiles" -> { (s, dir) => // streaming EXACT quantiles: an
-      // AvailableNow run lands per-batch (lang, n_chars) count-histogram
-      // partials; rank selection over the merged histogram must equal
-      // the batch exact-quantile truth (g_exact_quantiles' oracle
-      // verbatim). Cross-batch merge/replay/fold are QuantileStreamSpec's.
-      val out = scratchDir("q_stream_quant")
-      val src = stream(s, dir, "documents")
-        .select(col("lang"), col("n_chars"))
-      drain(s, dir, "documents")(graft.streaming.StreamingOps
-        .quantileStream(src, s"$out/hist", s"$out/ckpt"))
-      graft.streaming.StreamingOps
-        .readQuantiles(s, s"$out/hist", ps = Seq(0.25, 0.5, 0.75))
-        .orderBy(col("lang"))
-    },
-
-    "q_stream_topk" -> { (s, dir) => // streaming heavy hitters: an
-      // AvailableNow run lands one fixed-size frequent-items state per
-      // micro-batch; the combined estimate must equal exact counts while
-      // the vocabulary fits the tracked slots (g_sketch_topk's oracle
-      // verbatim — the streamed state merges to the batch sketch).
-      // Cross-batch merge/replay/fold semantics are TopkStreamSpec's job.
-      val out = scratchDir("q_stream_topk")
-      val src = stream(s, dir, "documents")
-        .select(col("text"))
-      drain(s, dir, "documents")(graft.streaming.StreamingOps
-        .topkStream(src, s"$out/topk", s"$out/ckpt", maxTracked = 1024))
-      graft.streaming.StreamingOps.readTopK(s, s"$out/topk", k = 10)
-    },
-
-    "q_stream_ivf" -> { (s, dir) => // streaming ANN-index maintenance,
-      // oracle side: an AvailableNow run of ivfIndexStream lands the
-      // embeddings in the versioned cell-partitioned IVF layout
-      // (batch-id-derived Overwrite directories — idempotent under
-      // checkpoint replay), and a probe-ALL read over the STREAMED index
-      // must equal brute force — the g_sim_ivf_indexed losslessness
-      // contract extended over the streaming landing. Cross-batch
-      // replay/fold semantics are StreamingIvfSpec's job.
-      val e = Tables.embeddings(s, dir)
-      val qv = e.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-      val centroids = SimilarityOps.ivfCentroids(e, k = 16, nIters = 2)
-      val out = scratchDir("q_stream_ivf")
-      val src = stream(s, dir, "embeddings")
-      drain(s, dir, "embeddings")(graft.streaming.StreamingOps
-        .ivfIndexStream(src, centroids, s"$out/index", s"$out/ckpt"))
-      SimilarityOps.ivfTopKIndexed(s, s"$out/index", centroids, qv, 20, nProbe = 16)
-    },
-
-    "q_stream_knn" -> { (s, dir) => // streaming k-NN graph maintenance,
-      // oracle side: an AvailableNow run of knnGraphStream lands the
-      // embeddings as a versioned corpus + edge-delta layout, and the
-      // RESOLVED read at probe-all must equal brute force — g_knn_graph's
-      // losslessness contract extended over the streaming landing (shares
-      // its oracle). Multi-batch fold/replay/compaction semantics are
-      // KnnStreamSpec's job.
-      val e = Tables.embeddings(s, dir)
-      val centroids = SimilarityOps.ivfCentroids(e, k = 16, nIters = 2)
-      val out = scratchDir("q_stream_knn")
-      val src = stream(s, dir, "embeddings")
-      drain(s, dir, "embeddings")(graft.streaming.StreamingOps
-        .knnGraphStream(src, centroids, k = 5,
-          nProbe = if (oracleScale(dir)) 16 else 4, s"$out/graph", s"$out/ckpt"))
-      graft.streaming.StreamingOps.readKnnGraph(s, s"$out/graph")
-        .orderBy(col("vec_id"), col("rank"))
-    },
-
-    "q_stream_pq" -> { (s, dir) => // streaming IVF-PQ index maintenance,
-      // oracle side: an AvailableNow run of pqIndexStream lands the
-      // embeddings as codes-only cell-partitioned deltas, and a probe-ALL
-      // read over the STREAMED index must equal the full ADC scan —
-      // g_sim_pq_indexed's losslessness contract over the streaming
-      // landing (shares g_sim_pq's oracle). Cross-batch replay/fold/drift
-      // semantics are PqStreamSpec's job.
-      val e = Tables.embeddings(s, dir)
-      val qv = e.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-      val out = scratchDir("q_stream_pq")
-      val src = stream(s, dir, "embeddings")
-      drain(s, dir, "embeddings")(graft.streaming.StreamingOps
-        .pqIndexStream(src, fixtureCentroids(64), fixturePqCodebooks(64),
-          s"$out/index", s"$out/ckpt"))
-      SimilarityOps.pqTopKIndexed(s, s"$out/index", fixtureCentroids(64),
-        fixturePqCodebooks(64), qv, k = 20, nProbe = KmFixtureK)
-    },
-
-    "q_stream_store" -> { (s, dir) => // streaming chunk-store ingest,
-      // oracle side: an AvailableNow run of chunkStoreIngest lands the
-      // corpus (as binary payloads) in the leveled CAS layout, and the
-      // reassembled readback must digest-equal the ORIGINALS —
-      // g_chunk_store's end-to-end round-trip contract over the
-      // streaming landing. Cross-batch novel-only dedup, replay, drift
-      // and compaction are ChunkStoreStreamSpec's job.
-      val out = scratchDir("q_stream_store")
-      val src = stream(s, dir, "documents")
-      drain(s, dir, "documents")(graft.streaming.StreamingOps
-        .chunkStoreIngest(MultimodalOps.mediaFromDocuments(src),
-          s"$out/store", s"$out/ckpt"))
-      MultimodalOps.readChunkStore(s, s"$out/store")
-        .select(col("media_id"), md5(col("content")).as("content_md5"))
-        .orderBy(col("media_id"))
-    },
-
-    "q_stream_lsh" -> { (s, dir) => // streaming LSH-index maintenance,
-      // oracle side: an AvailableNow run of lshIndexStream signs the
-      // corpus split into the versioned (band, bucket) layout, and an
-      // increment probed against the STREAMED index must equal the exact
-      // cross-split Jaccard truth — g_dedup_indexed's oracle verbatim
-      // (banding is deterministic, so a streamed corpus signs identically
-      // to a batch-built one). Cross-batch replay/fold semantics are
-      // StreamingLshSpec's job.
-      val docs = Tables.documents(s, dir)
-      val out = scratchDir("q_stream_lsh")
-      val src = stream(s, dir, "documents")
-        .filter(col("doc_id") % 5 =!= 0) // the corpus split streams in
-      drain(s, dir, "documents")(graft.streaming.StreamingOps
-        .lshIndexStream(src, s"$out/lshidx", s"$out/ckpt", nBuckets = 16))
-      val corpus = docs.filter(col("doc_id") % 5 =!= 0)
-      DedupOps.minHashNearDupsIndexed(
-          docs.filter(col("doc_id") % 5 === 0), corpus, s"$out/lshidx",
-          nBuckets = 16, threshold = 0.5)
-        .orderBy(col("new_id"), col("corpus_id"))
-    },
-
-    "q_stream_spans" -> { (s, dir) => // streaming shingle-count index
-      // maintenance, oracle side: an AvailableNow run of shingleIndexStream
-      // lands the corpus split's source-tagged partial counts, and the
-      // increment's span probe against the STREAMED index must equal the
-      // union-truth — g_dup_spans_incr's oracle verbatim (counts are
-      // deterministic and the probe final-merges the partials, so a
-      // streamed corpus counts identically to a batch-signed one).
-      // Cross-batch replay/fold semantics are SpanIndexSpec's job.
-      val docs = Tables.documents(s, dir)
-      val out = scratchDir("q_stream_spans")
-      val src = stream(s, dir, "documents")
-        .filter(col("doc_id") % 5 =!= 0) // the corpus split streams in
-      drain(s, dir, "documents")(graft.streaming.StreamingOps
-        .shingleIndexStream(src, s"$out/spanidx", s"$out/ckpt", k = 3, nPb = 8, hashed = false))
-      TextOps.duplicatedSpansAgainst(docs.filter(col("doc_id") % 5 === 0),
-          s"$out/spanidx", k = 3, minSpanTokens = 8, hashed = false)
-        .orderBy(col("doc_id"), col("start_tok"))
-    },
-
-    "q_stream_cc" -> { (s, dir) => // the full streaming dedup-clustering
-      // loop, oracle side: an AvailableNow clusterIngest run over the
-      // corpus split (self-join pairs + LSH-index cross pairs folded into
-      // the versioned assignment per batch); the newest assignment version
-      // must equal the recursive-CTE component truth over the corpus
-      // split's exact-Jaccard pairs. Multi-batch/replay/lineage semantics
-      // are ClusterStreamSpec's job.
-      val out = scratchDir("q_stream_cc")
-      val src = stream(s, dir, "documents")
-        .filter(col("doc_id") % 5 =!= 0)
-        .select(col("doc_id"), col("text"))
-      drain(s, dir, "documents")(graft.streaming.StreamingOps
-        .clusterIngest(src, s"$out/loop", s"$out/ckpt", nBuckets = 8,
-          nDocBuckets = 8)) // both bucket counts sized to the fixture sf
-      graft.streaming.StreamingOps.currentAssignment(s, s"$out/loop")
-        .orderBy(col("doc_id"))
-    },
-
-    "q_stream_bloom" -> { (s, dir) => // streaming Bloom-sidecar maintenance,
-      // oracle side: an AvailableNow run of bloomIndexStream sketches the
-      // corpus split per micro-batch; the increment probed with the
-      // OR-merged sketch through incrementalExactBloom must equal the
-      // plain incremental-exact truth (no false negatives + exact confirm
-      // — g_dedup_incremental_exact's oracle verbatim). Multi-batch
-      // merge/replay/fold semantics are BloomStreamSpec's job.
-      val docs = Tables.documents(s, dir)
-      val out = scratchDir("q_stream_bloom")
-      val src = stream(s, dir, "documents")
-        .filter(col("doc_id") % 5 =!= 0) // the corpus split streams in
-      drain(s, dir, "documents")(graft.streaming.StreamingOps
-        .bloomIndexStream(src, s"$out/bloomidx", s"$out/ckpt",
-          expectedItems = 1L << 10, fpp = 0.05))
-      val sketch = graft.streaming.StreamingOps.readMergedBloom(s, s"$out/bloomidx")
-      DedupOps.incrementalExactBloom(
-          docs.filter(col("doc_id") % 5 === 0),
-          docs.filter(col("doc_id") % 5 =!= 0),
-          sketch = Some(sketch))
-        .orderBy(col("new_id"))
-    },
-
-    "q_rev_monitor" -> { (s, dir) => // streaming revision monitor as a
-      // table (round-9 verdict #7): flatMapGroupsWithState run in BATCH
-      // mode — the same code path the stream executes, state empty-initial,
-      // each aggregate processed once — emitting one row per commit with
-      // its optimistic-concurrency status (ok = rev exactly last+1,
-      // conflict = replayed/duplicate rev, gap = skipped revs), the
-      // reference's rev-based concurrency model as a queryable table.
-      val ev = Tables.events(s, dir).select(
-        col("user_id").cast("string").as("idB64"),
-        col("event_id").cast("int").as("rev"))
-      graft.streaming.StreamingOps.revisionMonitor(ev)
-        .toDF("idB64", "rev", "status")
-        .orderBy(col("idB64"), col("rev"), col("status"))
-    },
-
-    "q_migration" -> { (s, dir) => // E9: read-transform (migration reclassify)
-      Tables.events(s, dir)
-        .select(
-          col("event_id"), col("user_id"),
-          upper(col("event_type")).as("et_migrated"),
-          when(col("value") >= 100, "public").otherwise("private").as("visibility"),
-          (col("ts_us") + 1000000L).as("ts_shifted_us"))
-        .orderBy(col("event_id"))
-    },
-
-    // ---- Analytics headliners (scan->filter->join->agg->sort) --------
-    "q1_pricing" -> { (s, dir) => // TPC-H Q1 shape on lineitem
-      Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp_ntz"))
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          sum(col("l_quantity").cast("decimal(12,2)")).cast("double").as("sum_qty"),
-          sum(col("l_extendedprice").cast("decimal(12,2)")).cast("double").as("sum_base"),
-          sum(col("l_extendedprice").cast("decimal(12,2)") *
-            (lit(1).cast("decimal(4,2)") - col("l_discount").cast("decimal(4,2)")))
-            .cast("double").as("sum_disc_price"),
-          // exact decimal sum -> double, / count: engine-order-independent
-          (sum(col("l_quantity").cast("decimal(12,2)")).cast("double") /
-            count(lit(1))).as("avg_qty"),
-          (sum(col("l_extendedprice").cast("decimal(12,2)")).cast("double") /
-            count(lit(1))).as("avg_price"),
-          (sum(col("l_discount").cast("decimal(4,2)")).cast("double") /
-            count(lit(1))).as("avg_disc"),
-          count(lit(1)).as("count_order"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"))
-    },
-
-    "q_top_segments" -> { (s, dir) => // broadcast dim join + agg
-      Tables.orders(s, dir)
-        .join(Tables.customer(s, dir), col("o_custkey") === col("c_custkey"))
-        .groupBy(col("c_mktsegment"))
-        .agg(
-          count(lit(1)).as("n_orders"),
-          sum(col("o_totalprice").cast("decimal(12,2)")).cast("double").as("sum_price"),
-          (sum(col("o_totalprice").cast("decimal(12,2)")).cast("double") /
-            count(lit(1))).as("avg_price"))
-        .orderBy(col("c_mktsegment"))
-    },
-
-    // ---- Canonical event-log API (binary id / rev / pos / FileTime) --
-    // These route through Tables.eventLog + the EventStoreOps/IndexOps
-    // operators, proving the canonical-schema library path against the
-    // oracle (not just the raw-column queries above).
-    "q_canon_load" -> { (s, dir) => // B1 through the canonical API
-      val log = Tables.eventLog(s, dir)
-      graft.operators.EventStoreOps.loadAggregateEvents(log, lit(7L))
-        .select(col("rev"), col("pos"),
-          TimeFns.fileTimeToMicros(col("ts")).as("ts_us"), col("data"))
-        .orderBy(col("rev"), col("pos"))
-    },
-
-    "q_canon_streams" -> { (s, dir) => // E3/D5 through the canonical API
-      graft.operators.EventStoreOps.aggregateStreams(Tables.eventLog(s, dir))
-        .select(col("id"), col("n_events"),
-          array_join(transform(col("stream.rev"), _.cast("string")), ",").as("revs_csv"))
-        .orderBy(col("id"))
-    },
-
-    "q_canon_streams_sorted" -> { (s, dir) => // E3's O(1)-memory variant
-      // through the oracle: the locality-based mapPartitions run-length
-      // grouping (the escape hatch for aggregates too large to
-      // collect_list) must produce exactly what the hash-agg path does
-      graft.operators.EventStoreOps.aggregateStreamsSorted(Tables.eventLog(s, dir))
-        .select(col("id"), col("n_events"),
-          array_join(transform(col("stream.rev"), _.cast("string")), ",").as("revs_csv"))
-        .orderBy(col("id"))
-    },
-
-    "q_canon_enumerate" -> { (s, dir) => // E1 through the canonical API:
-      // enumerateEventStore dispatches the typed request to the index
-      // branch (readRange -> hint-free indexJoin back into the log) — the
-      // full dispatch composition crosses the oracle, not just its parts
-      val log = Tables.eventLog(s, dir)
-      val idx = graft.operators.IndexOps.buildIndex(log)
-      graft.operators.EventStoreOps.enumerateEventStore(
-          log, idx, Some("purchase"),
-          TimeFns.FileTimeEpochTicks + T10 * 10L,
-          TimeFns.FileTimeEpochTicks + T20 * 10L)
-        .select(col("id"), col("rev"),
-          TimeFns.fileTimeToMicros(col("ts")).as("ts_us"), col("et"))
-        .orderBy(col("id"), col("rev"))
-    },
-
-    "q_event_gaps" -> { (s, dir) => // inter-event time statistics per aggregate
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
-      Tables.events(s, dir)
-        .withColumn("gap_us", col("ts_us") - lag(col("ts_us"), 1).over(w))
-        .filter(col("gap_us").isNotNull)
-        .groupBy(col("user_id"))
-        .agg(
-          count(lit(1)).as("n_gaps"),
-          min("gap_us").as("min_gap_us"),
-          max("gap_us").as("max_gap_us"),
-          sum("gap_us").as("total_gap_us"))
-        .orderBy(col("user_id"))
-    },
-
-    "q_canon_index_range" -> { (s, dir) => // E4 through the canonical API
-      val idx = graft.operators.IndexOps.buildIndex(Tables.eventLog(s, dir))
-      graft.operators.IndexOps.readRange(
-          idx, "purchase",
-          TimeFns.FileTimeEpochTicks + T10 * 10L,
-          TimeFns.FileTimeEpochTicks + T20 * 10L)
-        .select(col("et"), col("pid"), col("aid"), col("rev"),
-          TimeFns.fileTimeToMicros(col("ts")).as("ts_us"))
-        .orderBy(col("ts_us"), col("rev"))
-    },
-
-    // ---- Analytics breadth: windows, sessions, star joins ------------
-    "q3_top_orders" -> { (s, dir) => // 3-way star join + top-k by revenue
-      val cust = Tables.customer(s, dir).filter(col("c_mktsegment") === "BUILDING")
-      val ord = Tables.orders(s, dir)
-        .filter(col("o_orderdate") < lit("1997-01-01").cast("timestamp_ntz"))
-      val li = Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") > lit("1997-01-01").cast("timestamp_ntz"))
-      li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(cust, col("o_custkey") === col("c_custkey"))
-        .groupBy(col("o_orderkey"), col("o_orderdate"))
-        .agg(sum(col("l_extendedprice").cast("decimal(12,2)") *
-          (lit(1).cast("decimal(4,2)") - col("l_discount").cast("decimal(4,2)")))
-          .cast("double").as("revenue"))
-        .orderBy(col("revenue").desc, col("o_orderkey"))
-        .limit(10)
-    },
-
-    "q_sessionize" -> { (s, dir) => // gap-based sessionization (6h windows)
-      graft.operators.BehaviorOps.sessionize(Tables.events(s, dir), gapUs = 21600000000L)
-        .groupBy(col("user_id"), col("session_id"))
-        .agg(
-          count(lit(1)).as("n_events"),
-          min("ts_us").as("start_us"),
-          (max("ts_us") - min("ts_us")).as("dur_us"))
-        .orderBy(col("user_id"), col("session_id"))
-    },
-
-    "q_sessionize_chunked" -> { (s, dir) => // the skew-proof two-phase
-      // sessionizer (hot key spreads over time chunks) against the SAME
-      // oracle as q_sessionize — 1-day chunks over the 30-day corpus
-      graft.operators.BehaviorOps.sessionizeChunked(Tables.events(s, dir),
-          gapUs = 21600000000L, chunkWidthUs = 86400000000L)
-        .groupBy(col("user_id"), col("session_id"))
-        .agg(
-          count(lit(1)).as("n_events"),
-          min("ts_us").as("start_us"),
-          (max("ts_us") - min("ts_us")).as("dur_us"))
-        .orderBy(col("user_id"), col("session_id"))
-    },
-
-    "q_asof_chunked" -> { (s, dir) => // the skew-proof chunked-carry as-of
-      // join against the SAME oracle as q_asof_lastview — 1-day chunks
-      val ev = Tables.events(s, dir)
-      val probe = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts_us"))
-      val ref = ev.filter(col("event_type") === "view")
-        .groupBy(col("user_id"), col("ts_us"))
-        .agg(max(col("event_id")).as("view_event_id"))
-      TemporalOps.asOfJoinChunked(probe, ref, "user_id", "ts_us",
-          Seq("view_event_id", "ts_us"), chunkWidth = 86400000000L)
-        .select(col("event_id"), col("user_id"), col("ts_us"),
-          col("asof_view_event_id").as("view_event_id"),
-          col("asof_ts_us").as("view_ts_us"),
-          (col("ts_us") - col("asof_ts_us")).as("gap_us"))
-        .orderBy(col("event_id"))
-    },
-
-    "q_top2_per_user" -> { (s, dir) => // windowed top-k per aggregate
-      graft.operators.BehaviorOps.topKPerGroup(
-          Tables.events(s, dir),
-          Seq(col("user_id")), Seq(col("value").desc, col("event_id")), 2)
-        .select(col("user_id"), col("rn"), col("event_id"), col("value"))
-        .orderBy(col("user_id"), col("rn"))
-    },
-
-    "q_funnel3" -> { (s, dir) => // 3-step greedy ordered funnel
-      graft.operators.BehaviorOps.funnel(
-          Tables.events(s, dir), Seq("signup", "view", "purchase"))
-        .orderBy(col("user_id"))
-    },
-
-    "q_funnel3_agg" -> { (s, dir) => // the skew-proof min-agg-chain funnel
-      // against the SAME oracle as q_funnel3 (which is itself written in
-      // the agg-chain form) — no per-key collect_list
-      graft.operators.BehaviorOps.funnelAgg(
-          Tables.events(s, dir), Seq("signup", "view", "purchase"))
-        .orderBy(col("user_id"))
-    },
-
-    "q_running_value" -> { (s, dir) => // cumulative per-aggregate fold
-      import org.apache.spark.sql.expressions.Window
-      val cum = Window.partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      Tables.events(s, dir)
-        .filter(col("user_id") < 3)
-        .select(col("user_id"), col("event_id"), col("ts_us"),
-          sum(col("value").cast("decimal(12,2)")).over(cum)
-            .cast("double").as("running_value"))
-        .orderBy(col("user_id"), col("ts_us"), col("event_id"))
-    },
-
-    "q_brand_volume" -> { (s, dir) => // part x lineitem x supplier rollup
-      Tables.lineitem(s, dir)
-        .join(Tables.part(s, dir), col("l_partkey") === col("p_partkey"))
-        .join(Tables.supplier(s, dir), col("l_suppkey") === col("s_suppkey"))
-        .groupBy(col("p_brand"))
-        .agg(
-          sum(col("l_quantity").cast("decimal(12,2)")).cast("double").as("sum_qty"),
-          count(lit(1)).as("n_lines"),
-          countDistinct(col("s_suppkey")).as("n_suppliers"))
-        .orderBy(col("p_brand"))
-    },
-
-    "q6_forecast" -> { (s, dir) => // TPC-H Q6 shape: filter-only aggregation
-      Tables.lineitem(s, dir)
-        .filter(
-          col("l_shipdate") >= lit("1996-01-01").cast("timestamp_ntz") &&
-          col("l_shipdate") < lit("1997-01-01").cast("timestamp_ntz") &&
-          col("l_discount").between(0.02, 0.06) &&
-          col("l_quantity") < 24)
-        .agg(
-          sum(col("l_extendedprice").cast("decimal(12,2)") *
-            col("l_discount").cast("decimal(4,2)"))
-            .cast("double").as("revenue"),
-          count(lit(1)).as("n_lines"))
-    },
-
-    "q_hourly_histogram" -> { (s, dir) => // activity histogram by hour-of-day
-      Tables.events(s, dir)
-        .groupBy(hour(col("ts_t")).as("hour"))
-        .agg(
-          count(lit(1)).as("n"),
-          count(when(col("event_type") === "error", 1)).as("n_errors"))
-        .orderBy(col("hour"))
-    },
-
-    "q5_region_revenue" -> { (s, dir) => // 5-way star join, revenue per nation
-      val nat = Tables.nation(s, dir)
-        .join(broadcast(Tables.region(s, dir).filter(col("r_name") === "ASIA")),
-          col("n_regionkey") === col("r_regionkey"))
-      val cust = Tables.customer(s, dir)
-        .join(broadcast(nat), col("c_nationkey") === col("n_nationkey"))
-      Tables.lineitem(s, dir)
-        .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
-        .join(cust, col("o_custkey") === col("c_custkey"))
-        .groupBy(col("n_name"))
-        .agg(sum(col("l_extendedprice").cast("decimal(12,2)") *
-          (lit(1).cast("decimal(4,2)") - col("l_discount").cast("decimal(4,2)")))
-          .cast("double").as("revenue"))
-        .orderBy(col("revenue").desc, col("n_name"))
-    },
-
-    "q_returned_top" -> { (s, dir) => // returned-items top customers
-      Tables.lineitem(s, dir)
-        .filter(col("l_returnflag") === "R")
-        .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
-        .join(Tables.customer(s, dir), col("o_custkey") === col("c_custkey"))
-        .groupBy(col("c_custkey"), col("c_name"))
-        .agg(sum(col("l_extendedprice").cast("decimal(12,2)") *
-          (lit(1).cast("decimal(4,2)") - col("l_discount").cast("decimal(4,2)")))
-          .cast("double").as("lost_revenue"))
-        .orderBy(col("lost_revenue").desc, col("c_custkey"))
-        .limit(20)
-    },
-
-    "q_churned_users" -> { (s, dir) => // set op: active early, gone late
-      val ev = Tables.events(s, dir)
-      val early = ev.filter(Tables.tsUsBetween(
-        TimeFns.utcMicros("2024-01-01T00:00:00"), TimeFns.utcMicros("2024-01-10T00:00:00")))
-        .select(col("user_id")).distinct()
-      val late = ev.filter(Tables.tsUsBetween(
-        TimeFns.utcMicros("2024-01-20T00:00:00"), TimeFns.utcMicros("2024-01-30T00:00:00")))
-        .select(col("user_id")).distinct()
-      early.except(late).orderBy(col("user_id"))
-    },
-
-    "q_payload_decode" -> { (s, dir) => // the ISerializer boundary: opaque
-      // payload -> typed columns, as codegen'd from_json (no UDF)
-      Tables.events(s, dir)
-        .select(col("event_id"),
-          from_json(col("props"),
-            org.apache.spark.sql.types.StructType.fromDDL("k BIGINT"))
-            .getField("k").as("k"))
-        .filter(col("k") >= 50)
-        .orderBy(col("event_id"))
-    },
-
-    "q_payload_envelope" -> { (s, dir) => // the SECOND serializer at the
-      // same seam (reference ISerializer is deployment-pluggable): binary
-      // pass-through envelope (magic + schema id + verbatim payload bytes),
-      // full write -> read round trip with schema-id DISPATCH — id 1
-      // decodes as JSON, other ids pass through opaque. All codegen'd
-      // substring/concat arithmetic, no UDF; the oracle replays the same
-      // byte arithmetic on the VARCHAR side.
-      import graft.operators.SerdeOps
-      val enc = Tables.events(s, dir).select(
-        col("event_id"),
-        SerdeOps.encodeEnvelope(col("props"),
-          when(col("event_id") % 2 === 0, lit(1)).otherwise(lit(2))).as("data"))
-      enc.select(col("event_id"), SerdeOps.decodeEnvelope(col("data")).as("env"))
-        .filter(col("env.schema_id").isNotNull)
-        .select(
-          col("event_id"),
-          col("env.schema_id").as("schema_id"),
-          when(col("env.schema_id") === 1,
-            from_json(col("env.payload").cast("string"),
-              org.apache.spark.sql.types.StructType.fromDDL("k BIGINT")).getField("k"))
-            .as("k"),
-          col("env.payload").cast("string").as("payload"))
-        .orderBy(col("event_id"))
-    },
-
-    "q_salted_counter" -> { (s, dir) => // D2 under skew: two-phase salted agg
-      // phase 1 fans each hot key over 16 salt buckets (partial counts),
-      // phase 2 folds the 16 partials — bounds any single reducer's input
-      // at corpus/16 per key regardless of key skew
-      Tables.events(s, dir)
-        .withColumn("salt", pmod(xxhash64(col("event_id")), lit(16)))
-        .groupBy(col("event_type").as("msgid"), col("salt"))
-        .agg(count(lit(1)).as("partial"))
-        .groupBy(col("msgid"))
-        .agg(sum(col("partial")).cast("long").as("cv"))
-        .orderBy(col("msgid"))
-    },
-
-    // ---- §G. training-data pipeline operators ------------------------
-    "g_curation" -> { (s, dir) => // composed curation pipeline: dedup ->
-      // quality gate -> language gate -> per-source yield report
-      val docs = Tables.documents(s, dir)
-      val keep = docs.groupBy(sha2(col("text"), 256).as("sha"))
-        .agg(min(col("doc_id")).as("doc_id"))
-        .select("doc_id")
-      val curated = docs
-        .join(keep, Seq("doc_id"), "left_semi") // exact-dedup survivors
-        .withColumn("n_tokens", size(split(col("text"), " ")))
-        .filter(col("n_tokens").between(20, 200) && col("n_chars") >= 100)
-        .filter(col("lang").isin("en", "de", "fr"))
-      curated.groupBy(col("lang"), col("source"))
-        .agg(
-          count(lit(1)).as("n_kept"),
-          (sum(col("n_tokens")).cast("double") / count(lit(1))).as("avg_tokens"),
-          sum(col("n_chars")).as("sum_chars"))
-        .orderBy(col("lang"), col("source"))
-    },
-
-    "q_funnel" -> { (s, dir) => // behavioral funnel: signup -> purchase
-      val ev = Tables.events(s, dir)
-      val first = (et: String, out: String) => ev.filter(col("event_type") === et)
-        .groupBy(col("user_id")).agg(min(col("ts_us")).as(out))
-      first("signup", "signup_us")
-        .join(first("purchase", "purchase_us"), Seq("user_id"), "left")
-        .select(col("user_id"), col("signup_us"),
-          // 0 = not converted: keep the output column non-null — null vs
-          // NaN round-trips differently through arrow/pandas comparisons
-          coalesce(when(col("purchase_us") > col("signup_us"), col("purchase_us")),
-            lit(0L)).as("converted_us"))
-        .orderBy(col("user_id"))
-    },
-
-    "g_embed_pairs" -> { (s, dir) => // exact cosine pairs within label blocks
-      graft.plans.GraftFunctions.register(s)
-      val e = Tables.embeddings(s, dir)
-        .select(col("label"), col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val a = e.select(col("label"), col("vec_id").as("id1"), col("v").as("v1"))
-      val b = e.select(col("label"), col("vec_id").as("id2"), col("v").as("v2"))
-      a.join(b, Seq("label")).filter(col("id1") < col("id2"))
-        .withColumn("raw", graft.plans.GraftFunctions.cosine(col("v1"), col("v2")))
-        .filter(col("raw") >= 0.3)
-        .select(col("label"), col("id1"), col("id2"),
-          graft.functions.NumFns.floorAt(col("raw"), 4).as("sim"))
-        .orderBy(col("id1"), col("id2"))
-    },
-
-    "g_embed_neardup" -> { (s, dir) => // cosine near-dups in LSH buckets,
-      // oracle-gated: the hyperplane signs are deterministic XXH64
-      // arithmetic, inlined as ±1.0 literals into the DuckDB oracle at
-      // SQL-construction time, so bucket assignment AND in-bucket cosine
-      // are recomputed independently. testdata embeddings max pairwise
-      // cosine ~0.51 at sf0.01: a "near-dup" threshold of 0.35 with 3
-      // hyperplanes keeps candidate recall high enough to emit rows
-      SimilarityOps.embeddingNearDups(Tables.embeddings(s, dir), threshold = 0.35, nPlanes = 3)
-        .orderBy(col("id1"), col("id2"))
-    },
-    "g_dedup_exact" -> { (s, dir) => // exact dedup by content hash
-      DedupOps.exact(Tables.documents(s, dir)).orderBy(col("keep_id"))
-    },
-
-    "g_dedup_jaccard" -> { (s, dir) => // blocked exact token-set Jaccard
-      DedupOps.ngramJaccardPairs(Tables.documents(s, dir), blockWidth = 8, threshold = 0.5)
-        .orderBy(col("id1"), col("id2"))
-    },
-
-    "g_dedup_edit" -> { (s, dir) => // fuzzy dedup by thresholded edit
-      // distance within (lang, length-band) blocks — the character-level
-      // near-dup flavor (in-word typos); banded early-abandon DP bounds
-      // per-pair cost by the radius, not len^2
-      DedupOps.editDistancePairs(Tables.documents(s, dir), blockWidth = 8, maxDist = 20)
-        .orderBy(col("id1"), col("id2"))
-    },
-
-    "g_dedup_minhash" -> { (s, dir) => // MinHash-LSH near-dups, oracle-gated:
-      // the DuckDB oracle computes exact 3-gram-shingle Jaccard over ALL
-      // pairs; a green hash certifies LSH recall@threshold == 1.0 on this
-      // corpus (true near-dups have shingle-jaccard ~1, so every band
-      // collides) AND rescore precision == 1.0 (by construction). Measured
-      // 28/28 (sf0.001) and 25/25 (sf0.01) — see tools/RecallTune.
-      DedupOps.minHashNearDups(Tables.documents(s, dir), threshold = 0.5)
-        .orderBy(col("id1"), col("id2"))
-    },
-
-    "g_dedup_incremental" -> { (s, dir) => // increment-vs-corpus near-dups:
-      // the daily-batch shape — the new slice band-joins the existing
-      // corpus' LSH index, the corpus never self-joins or re-clusters.
-      // Oracle = exact cross-split shingle Jaccard (same recall-1.0 regime
-      // g_dedup_minhash certifies for these banding parameters).
-      val docs = Tables.documents(s, dir)
-      DedupOps.minHashNearDupsAgainst(
-          docs.filter(col("doc_id") % 5 === 0),
-          docs.filter(col("doc_id") % 5 =!= 0), threshold = 0.5)
-        .orderBy(col("new_id"), col("corpus_id"))
-    },
-
-    "g_dedup_indexed" -> { (s, dir) => // the persisted-LSH-index shape:
-      // the corpus' band signatures are written once, partitionBy(band,
-      // bucket); the increment joins the INDEX (the corpus text is only
-      // touched for candidate rescore), and the join's partition-column
-      // keys let dynamic partition pruning skip untouched directories.
-      // Must equal g_dedup_incremental's truth exactly — same oracle.
-      // nBuckets sized to the SF (16 -> 64 directories here; a 100 TB
-      // corpus would keep the 64-bucket default = 256 directories)
-      val docs = Tables.documents(s, dir)
-      val out = scratchDir("mh_index")
-      val path = s"$out/mhidx"
-      val corpus = docs.filter(col("doc_id") % 5 =!= 0)
-      DedupOps.writeMinHashIndex(corpus, path, nBuckets = 16)
-      DedupOps.minHashNearDupsIndexed(
-          docs.filter(col("doc_id") % 5 === 0), corpus, path, nBuckets = 16, threshold = 0.5)
-        .orderBy(col("new_id"), col("corpus_id"))
-    },
-
-    "g_dedup_incremental_exact" -> { (s, dir) => // exact incremental dedup:
-      // every increment doc annotated with its corpus copy count + first
-      // copy id (null = novel); the join ships 32-byte content digests,
-      // not text
-      val docs = Tables.documents(s, dir)
-      DedupOps.incrementalExact(
-          docs.filter(col("doc_id") % 5 === 0),
-          docs.filter(col("doc_id") % 5 =!= 0))
-        .orderBy(col("new_id"))
-    },
-
-    "g_dedup_bloom" -> { (s, dir) => // the broadcast Bloom-prefiltered
-      // variant: sketch rejections take n_corpus_copies = 0 map-only, only
-      // sketch hits confirm against the corpus digests — false positives
-      // are removed by the confirm join, false negatives cannot exist, so
-      // the output is row-identical to g_dedup_incremental_exact (and the
-      // oracle is the same SQL). Tiny sketch (forced FPs at this corpus
-      // size) so BOTH paths carry rows at every sf.
-      val docs = Tables.documents(s, dir)
-      DedupOps.incrementalExactBloom(
-          docs.filter(col("doc_id") % 5 === 0),
-          docs.filter(col("doc_id") % 5 =!= 0),
-          expectedItems = 1L << 10, fpp = 0.05)
-        .orderBy(col("new_id"))
-    },
-
-    "g_embed_neardup_recall" -> { (s, dir) => // the LSH-bucketed embedding
-      // near-dup gate: precision is exact by construction (in-bucket pairs
-      // are rescored with true cosine), recall vs the exact all-pairs truth
-      // is floored at 0.2 — random synthetic vectors are LSH's worst case
-      // (measured 0.26 at both sfs; clustered real embeddings do far
-      // better). Both sides computed in Spark; the oracle row asserts the
-      // invariants.
-      graft.plans.GraftFunctions.register(s)
-      val e = Tables.embeddings(s, dir)
-      val ev = e.select(col("vec_id").as("id"), col("embedding").cast("array<double>").as("v"))
-      val exact = ev.select(col("id").as("id1"), col("v").as("v1"))
-        .join(ev.select(col("id").as("id2"), col("v").as("v2")), col("id1") < col("id2"))
-        .filter(graft.plans.GraftFunctions.cosine(col("v1"), col("v2")) >= 0.35)
-        .select("id1", "id2")
-      val lsh = SimilarityOps.embeddingNearDups(e, threshold = 0.35, nPlanes = 3)
-        .select("id1", "id2")
-      exact.withColumn("hit", lit(1L))
-        .join(lsh.withColumn("found", lit(1L)), Seq("id1", "id2"), "full_outer")
-        .agg(
-          sum(when(col("found") === 1L && col("hit").isNull, 1L).otherwise(0L)).as("false_pos"),
-          (sum(when(col("found") === 1L && col("hit") === 1L, 1L).otherwise(0L)) /
-            sum(col("hit"))).as("recall"))
-        .select(lit(0.35).as("threshold"),
-          (col("false_pos") === 0L).as("precision_exact"),
-          lit(0.2).as("recall_floor"),
-          (col("recall") >= 0.2).as("meets_floor"))
-    },
-
-    "g_sketch_topk" -> { (s, dir) => // heavy-hitter tokens via the
-      // approx_top_k sketch, oracle-gated EXACTLY: with the vocabulary
-      // inside the tracked-slot budget the sketch provably matches exact
-      // counts (certified by the hash gate); at 100 TB vocab the same
-      // fixed-size state gives guaranteed-error heavy hitters while the
-      // exact path must shuffle every distinct token.
-      TextOps.tokenHeavyHitters(Tables.documents(s, dir), k = 10)
-    },
-
-    "g_sketch_quantiles" -> { (s, dir) => // third sketch-family member:
-      // per-language length quantiles via approx_percentile (fixed-size
-      // mergeable GK state vs the exact path's full per-group multiset),
-      // gated on the GK RANK contract — definition-convention-immune:
-      // the true rank of each sketch output must sit within p*n ± n/acc+1,
-      // booleans pinned by the oracle
-      TextOps.quantileSketchGate(Tables.documents(s, dir)).orderBy(col("lang"))
-    },
-
-    "g_embed_pca" -> { (s, dir) => // PCA dimension reduction (64 -> 8)
-      // invariant-gated: covariance via one distributed pass (d^2 driver
-      // state), eigen on the driver, projection per-row. The gate row
-      // asserts the three things a correct PCA cannot violate: orthonormal
-      // projections contract norms, per-component energies follow the
-      // eigenvalue order, top-8 variance clears the floor.
-      SimilarityOps.pcaInvariants(Tables.embeddings(s, dir), k = 8, varFloor = 0.1)
-    },
-
-    "g_semdedup" -> { (s, dir) => // SemDeDup-style semantic dedup over the
-      // LSH-blocked pair list: every vector keeps/drops against its
-      // earliest in-block near-dup. Oracle recomputes blocks from inlined
-      // hyperplane signs + the drop rule — the whole decision is
-      // hash-gated, unlike k-means blocking whose cells are driver state.
-      SimilarityOps.semanticDedup(Tables.embeddings(s, dir), threshold = 0.35, nPlanes = 3)
-        .orderBy(col("vec_id"))
-    },
-
-    "g_semdedup_exact" -> { (s, dir) => // the same drop rule over ALL pairs
-      // (nPlanes = 0 -> single block): the definition truth the blocked
-      // path approximates — verification-scale only (one join task), like
-      // g_embed_pairs' quadratic blocks; production is g_semdedup.
-      SimilarityOps.semanticDedup(Tables.embeddings(s, dir), threshold = 0.35, nPlanes = 0)
-        .orderBy(col("vec_id"))
-    },
-
-    "g_semdedup_kmeans" -> { (s, dir) => // the paper's k-means blocking,
-      // row-level (round-9 verdict #4): cell assignment = argmax cosine
-      // against 4 inline ±1 FIXTURE centroid vectors (ties to the smallest
-      // cid) via the same codegen'd cellExpr kernel the IVF path uses, so
-      // the oracle replays the WHOLE per-row decision from inline literals
-      // the way g_semdedup replays hyperplane signs — kept/dup_of for every
-      // vector, not a 1-row invariant scalar. The data-derived ivfCentroids
-      // variant (semanticDedupKMeans) keeps its invariant + superset spec
-      // gates in TemporalCurationSpec.
-      SimilarityOps.semanticDedupWithCentroids(
-          Tables.embeddings(s, dir), threshold = 0.35, centroids = fixtureCentroids(64))
-        .orderBy(col("vec_id"))
-    },
-
-    "g_kmeans_step" -> { (s, dir) => // one distributed Lloyd update step,
-      // row-level: nearest-centroid assignment against the 4 inline ±1
-      // fixture centroids (the same codegen cellExpr kernel the IVF path
-      // uses), then per-(cell, dim) FIXED-POINT means — coordinates are
-      // floor(x*1e6) longs so the partial sums commute across partitions
-      // and both engines sum exact integers. This is the update step
-      // ivfCentroids iterates; the oracle replays assignment + means from
-      // inline literals the way g_semdedup_kmeans replays its blocking.
-      val vecs = Tables.embeddings(s, dir)
-        .select(col("vec_id").as("id"), VectorFns.toDouble(col("embedding")).as("v"))
-      SimilarityOps.kmeansStep(vecs, fixtureCentroids(64))
-        .orderBy(col("cell"), col("dim"))
-    },
-
-    "q_stream_kmeans" -> { (s, dir) => // streaming mini-batch k-means,
-      // oracle side: an AvailableNow run of kmeansStream over the whole
-      // embeddings table is ONE micro-batch assigned against the fixture
-      // seed — the landed fixed-point state read back as means must equal
-      // the batch Lloyd step exactly (g_kmeans_step's oracle verbatim).
-      // Multi-batch sequential semantics, replay idempotence, drifted-seed
-      // refusal and state compaction are KmeansStreamSpec's job.
-      val out = scratchDir("q_stream_km")
-      val src = stream(s, dir, "embeddings")
-      drain(s, dir, "embeddings")(graft.streaming.StreamingOps
-        .kmeansStream(src, s"$out/kmstate", s"$out/ckpt", seed = fixtureCentroids(64)))
-      graft.streaming.StreamingOps.readStreamKmeans(s, s"$out/kmstate")
-        .orderBy(col("cell"), col("dim"))
-    },
-
-    "g_domain_quota" -> { (s, dir) => // per-domain document cap (top-N by
-      // length per source), two-phase salted ranking so a mega-domain is
-      // saltBuckets parallel tasks, not one window task; survivor ranks
-      // provably equal the single-window formulation the oracle computes
-      CurationOps.domainQuota(Tables.documents(s, dir), quota = 10, saltBuckets = 4)
-        .orderBy(col("doc_id"))
-    },
-
-    "g_dataset_card" -> { (s, dir) => // per-source corpus report: one
-      // map-side-combined aggregation pass (plus the exact-distinct
-      // expansion), fixed-point quality mean — the release-notes numbers
-      // of a curated corpus, bit-identical under any partitioning
-      CurationOps.datasetCard(Tables.documents(s, dir))
-        .orderBy(col("source"))
-    },
-
-    "g_dsir_weights" -> { (s, dir) => // DSIR-style hashed n-gram
-      // importance scores: target = English docs, raw = the rest;
-      // bucketed token features (rolling-fingerprint buckets, 64 here so
-      // the sf0.001 corpus populates them), Laplace-smoothed fixed-point
-      // target/raw ratio per bucket, per-doc integer score sums —
-      // bit-identical across engines and partitionings
-      CurationOps.importanceWeights(
-          Tables.documents(s, dir), targetPred = col("lang") === "en",
-          nBuckets = 64)
-        .orderBy(col("doc_id"))
-    },
-
-    "g_quality_quantile" -> { (s, dir) => // per-domain quality-quantile
-      // filter: keep each source's top 30% by the heuristic quality score
-      // (count-derived exact quota, salted two-phase ranking — the
-      // domainQuota skew machinery with a dynamic per-domain cutoff).
-      // Oracle replays the single-window formulation the salted form
-      // provably reproduces.
-      CurationOps.qualityQuantileFilter(
-          Tables.documents(s, dir), keepFrac = 0.3, saltBuckets = 4)
-        .orderBy(col("doc_id"))
-    },
-
-    "g_chunk_store" -> { (s, dir) => // content-addressed chunk store
-      // round trip: write the corpus into the dedup STORAGE layout (each
-      // distinct CDC chunk once + per-payload recipes), reassemble every
-      // payload from its recipe, and prove the round trip byte-exact by
-      // digest — the oracle hashes the ORIGINALS, so a green row
-      // certifies write + store-dedup + join + ordered concat end to end.
-      val path = scratchDir("chunkstore") + "/store"
-      MultimodalOps.writeChunkStore(
-        MultimodalOps.mediaFromDocuments(Tables.documents(s, dir)), path)
-      MultimodalOps.readChunkStore(s, path)
-        .select(col("media_id"), md5(col("content")).as("content_md5"))
-        .orderBy(col("media_id"))
-    },
-
-    "g_cdc_binary" -> { (s, dir) => // BYTE-level CDC dedup over the
-      // multimodal binary column (the native rolling-hash kernel —
-      // graft_cdc_boundaries — then map-only chunk extraction and
-      // content-keyed occurrence counting). The text corpus as utf-8
-      // bytes is the oracle-replayable stand-in (byte == codepoint on
-      // ASCII, the g_multimodal_decode precedent); real binary payloads
-      // are gated by the driver-reference spec instead.
-      MultimodalOps.cdcByteStats(
-          MultimodalOps.mediaFromDocuments(Tables.documents(s, dir)),
-          w = 8, divisor = 16)
-        .orderBy(col("media_id"))
-    },
-
-    "g_cdc_chunks" -> { (s, dir) => // content-defined chunking dedup
-      // report: rolling-fingerprint boundaries (w=3 windows, divisor 8),
-      // corpus-wide chunk occurrence counts, per-doc dup totals. String
-      // mode for the oracle; hashed=true is the same plan with 8-byte
-      // keys through the occurrence shuffle. Shift-resistance (the point
-      // of CDC vs fixed stride) is spec-pinned.
-      DedupOps.cdcChunkStats(Tables.documents(s, dir), w = 3, divisor = 8)
-        .orderBy(col("doc_id"))
-    },
-
-    "g_cdc_neardup" -> { (s, dir) => // binary near-dup pairs by CDC
-      // chunk-set Jaccard (>= 50%): the media-dedup step whole-file
-      // digests cannot see — a re-containered copy keeps most chunk
-      // frames. Inverted-index equi-join on the chunk key, integer
-      // cross-multiplied threshold (no FP boundary). String-chunk mode
-      // for the oracle; hashed + maxDf are the 100 TB path (spec-gated).
-      MultimodalOps.cdcNearDups(
-          MultimodalOps.mediaFromDocuments(Tables.documents(s, dir)),
-          thresholdPct = 50, w = 8, divisor = 16)
-        .orderBy(col("media_a"), col("media_b"))
-    },
-
-    "g_dup_passages" -> { (s, dir) => // cross-doc duplicated-passage
-      // fraction per doc (shingle-level dedup companion); string-shingle
-      // mode so DuckDB recomputes the identical counts — hashed mode is
-      // the same plan with 8-byte shingles through the shuffles
-      TextOps.duplicatedPassages(Tables.documents(s, dir), k = 3, hashed = false)
-        .orderBy(col("doc_id"))
-    },
-
-    "g_dup_spans" -> { (s, dir) => // exact substring dedup, detect phase:
-      // maximal token ranges of corpus-duplicated 3-shingle runs, >= 8
-      // tokens; string mode for the oracle, hashed is the 100 TB path
-      TextOps.duplicatedSpans(Tables.documents(s, dir), k = 3, minSpanTokens = 8, hashed = false)
-        .orderBy(col("doc_id"), col("start_tok"))
-    },
-
-    "g_span_clip" -> { (s, dir) => // exact substring dedup, remove phase:
-      // every doc rebuilt with its duplicated spans clipped out (fully-
-      // covered exact-dup docs come back as ''); one codegen HOF pass,
-      // no token explode on the clip side
-      TextOps.clipDuplicatedSpans(Tables.documents(s, dir), k = 3, minSpanTokens = 8, hashed = false)
-        .orderBy(col("doc_id"))
-    },
-
-    "g_dup_spans_incr" -> { (s, dir) => // incremental span detection against
-      // a persisted shingle-COUNT index (counts, not positions — the index
-      // is orders of magnitude smaller than the corpus); must equal
-      // duplicatedSpans over the union restricted to increment docs, which
-      // is exactly what the oracle computes
-      val docs = Tables.documents(s, dir)
-      val out = scratchDir("span_index")
-      val path = s"$out/spanidx"
-      TextOps.writeShingleIndex(docs.filter(col("doc_id") % 5 =!= 0), path,
-        k = 3, nPb = 8, hashed = false)
-      TextOps.duplicatedSpansAgainst(docs.filter(col("doc_id") % 5 === 0), path,
-        k = 3, minSpanTokens = 8, hashed = false)
-        .orderBy(col("doc_id"), col("start_tok"))
-    },
-
-    "g_dedup_simhash_complete" -> { (s, dir) => // the pigeonhole guarantee,
-      // driver-gated: pairs found via the 4x16-bit block self-join must
-      // EQUAL the brute-force hamming<=3 pairs over the same fingerprints
-      // (any pair within the radius shares >= 1 whole block — exact recall
-      // by construction, not sampling)
-      val docs = Tables.documents(s, dir)
-      val fps = DedupOps.simHashFingerprints(docs)
-      val brute = fps.select(col("id").as("id1"), col("fp").as("fp1"))
-        .join(fps.select(col("id").as("id2"), col("fp").as("fp2")), col("id1") < col("id2"))
-        .filter(graft.functions.TextFns.hamming64(col("fp1"), col("fp2")) <= 3)
-        .agg(count(lit(1)).as("n_brute"))
-      val blocked = DedupOps.simHashNearDups(docs, maxHamming = 3)
-        .agg(count(lit(1)).as("n_blocked"))
-      blocked.crossJoin(brute)
-        .select(lit(3).as("max_hamming"), (col("n_blocked") === col("n_brute")).as("complete"))
-    },
-
-    "g_dedup_clusters" -> { (s, dir) => // near-dup clusters over MinHash
-      // pairs — the 100 TB composition (LSH candidates -> label prop),
-      // oracle-gated end-to-end: the MinHash pair list is oracle-equal to
-      // exact shingle-Jaccard pairs (g_dedup_minhash green), so the DuckDB
-      // recursive-CTE components over those pairs are the exact truth.
-      DedupOps.nearDupClusters(
-          DedupOps.minHashNearDups(Tables.documents(s, dir), threshold = 0.5),
-          maxIter = 10) // earlyStop probes convergence; cliques need <=3
-        .orderBy(col("doc_id"))
-    },
-
-    "g_dedup_clusters_exact" -> { (s, dir) => // the same connected-components
-      // operator over the ORACLE-GREEN exact pair list (g_dedup_jaccard);
-      // the DuckDB oracle recomputes the components with a recursive CTE,
-      // so min-label propagation is hash-gated end-to-end.
-      DedupOps.nearDupClusters(
-          DedupOps.ngramJaccardPairs(Tables.documents(s, dir), blockWidth = 8, threshold = 0.5),
-          maxIter = 10)
-        .orderBy(col("doc_id"))
-    },
-
-    "g_dedup_cc_star" -> { (s, dir) => // the large-star/small-star CC
-      // algorithm (the O(log² n)-round scale path, skew-safe on hub
-      // nodes) over the MinHash pair list — the full 100 TB composition,
-      // gated row-level: the pair list is oracle-equal to exact
-      // shingle-Jaccard pairs (g_dedup_minhash green), and the oracle's
-      // recursive-CTE closure over those pairs is the component truth.
-      DedupOps.nearDupClustersStar(
-          DedupOps.minHashNearDups(Tables.documents(s, dir), threshold = 0.5))
-        .orderBy(col("doc_id"))
-    },
-
-    "g_cluster_keep" -> { (s, dir) => // canonical-representative election:
-      // the assignment (star CC over the oracle-equal MinHash pair list)
-      // joined back to the corpus once; keep = 1 for the longest doc of
-      // each cluster (ties -> lowest id) and for every unclustered
-      // singleton. The election is a partial-aggregable max_by (hub-
-      // cluster skew-safe) — at 100 TB the corpus never feeds a window
-      // or sort, just one join.
-      val docs = Tables.documents(s, dir)
-      DedupOps.canonicalPerCluster(docs,
-          DedupOps.nearDupClustersStar(
-            DedupOps.minHashNearDups(docs, threshold = 0.5)))
-        .orderBy(col("doc_id"))
-    },
-
-    "g_dedup_cc_incr" -> { (s, dir) => // incremental CC, the daily-crawl
-      // shape: prior assignment over the corpus-only pair list + today's
-      // pairs touching increment docs == the full-recompute component
-      // truth (g_dedup_cc_star's oracle verbatim). History's pair list is
-      // never rematerialized — the assignment is its lossless
-      // connectivity summary.
-      val docs = Tables.documents(s, dir)
-      // pin the pair list ONCE: unpinned, the prior star loop and the
-      // incremental star loop each re-derive the full MinHash signature
-      // + rescore pipeline (two corpus-sized computations for one truth)
-      val all = graft.operators.Checkpoints.pin(
-        DedupOps.minHashNearDups(docs, threshold = 0.5)
-          .select(col("id1"), col("id2")), reliable = false)
-      val prior = DedupOps.nearDupClustersStar(
-        all.filter(col("id1") % 5 =!= 0 && col("id2") % 5 =!= 0))
-      val fresh = all.filter(col("id1") % 5 === 0 || col("id2") % 5 === 0)
-      DedupOps.nearDupClustersIncremental(prior, fresh).orderBy(col("doc_id"))
-    },
-
-    "g_dedup_simhash" -> { (s, dir) => // SimHash near-dups, oracle-gated:
-      // the token hash is FNV-1a 64 (reproducible in DuckDB HUGEINT
-      // arithmetic), so the oracle recomputes fingerprints + brute-force
-      // hamming<=3 pairs independently — a green hash certifies the banded
-      // block join is exact at the radius. Radius 3 = the 16-bit-block
-      // scale regime (4 block keys per doc); wider radii narrow the blocks
-      // and blow up the candidate join.
-      DedupOps.simHashNearDups(Tables.documents(s, dir), maxHamming = 3)
-        .orderBy(col("id1"), col("id2"))
-    },
-
-    "g_sim_topk" -> { (s, dir) => // exact cosine top-k vs vec_id=0
-      val e = Tables.embeddings(s, dir)
-      val q = e.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-      SimilarityOps.bruteForceTopK(e, q, 20)
-    },
-
-    "g_sim_sq8" -> { (s, dir) => // scalar-quantized (SQ8) compressed scan:
-      // one int8 code per dimension (8x less bandwidth than float64), the
-      // scan reads codes only and ranks by the EXACT-INTEGER quantized
-      // cosine (fused kernel emits dot and norm as longs; one double
-      // division — bit-stable across engines), then the top-(k*refine)
-      // shortlist joins the raw store for the exact floored-cosine answer.
-      // Fully deterministic, so the oracle replays encode + integer ADC +
-      // re-rank end to end — no recall floor needed.
-      val e = Tables.embeddings(s, dir)
-      val q = e.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-      SimilarityOps.sq8TopK(e, q, k = 20, refine = 4)
-    },
-
-    "g_sim_hamming" -> { (s, dir) => // binary sign sketch: 1 bit/dim packed
-      // into ceil(d/64) longs (64x less bandwidth), candidates ranked by
-      // hamming distance bit_count(xor) — built-in integer ops — exact
-      // floored-cosine re-rank of the top-(k*refine). The cheapest rung of
-      // the compressed-scan ladder (float64 -> SQ8 -> PQ -> binary);
-      // deterministic end to end, so the oracle replays pack + popcount +
-      // re-rank.
-      val e = Tables.embeddings(s, dir)
-      val q = e.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-      SimilarityOps.hammingTopK(e, q, k = 20, refine = 4)
-    },
-
-    "g_sim_ivfsq8" -> { (s, dir) => // the FAISS IVF,SQ8 composition:
-      // coarse-quantize to the fixture cells, IN-filter the query's 2
-      // nearest cells (directory pruning under a cell-partitioned
-      // layout), integer-ADC-score only surviving codes, exact re-rank —
-      // the ivfPqTopK plan shape one rung down the compression ladder,
-      // hash-gated end to end by the pruned sq8 replay (no recall floor:
-      // the pruning is part of the replayed contract).
-      val e = Tables.embeddings(s, dir)
-      val q = e.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-      SimilarityOps.ivfSq8TopK(e, fixtureCentroids(64), q, nProbe = 2, k = 20, refine = 4)
-    },
-
-    "g_sim_sq8_indexed" -> { (s, dir) => // the PERSISTED IVF-SQ8 layout:
-      // codes-only files (d int8s per row, raw vectors not stored), cell
-      // hive directories, probe-all readback == the full integer-ADC scan
-      // — the g_sim_pq_indexed losslessness contract one rung down the
-      // ladder (write + directory-pruned read + re-rank against the raw
-      // store, all certified by the g_sim_sq8 oracle hash).
-      val e = Tables.embeddings(s, dir)
-      val q = e.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-      val path = scratchDir("sq8idx") + "/idx"
-      SimilarityOps.writeSq8Index(e, fixtureCentroids(64), path)
-      SimilarityOps.sq8TopKIndexed(s, path, fixtureCentroids(64), e, q,
-        k = 20, nProbe = KmFixtureK, refine = 4)
-    },
-
-    "q_stream_sq8" -> { (s, dir) => // streaming IVF-SQ8 index maintenance,
-      // oracle side: an AvailableNow run of sq8IndexStream lands the
-      // embeddings as codes-only cell-partitioned deltas, and a probe-ALL
-      // read over the STREAMED index must equal the full integer-ADC scan
-      // — g_sim_sq8_indexed's losslessness contract over the streaming
-      // landing (shares g_sim_sq8's oracle). Cross-batch replay/fold
-      // semantics are Sq8StreamSpec's job.
-      val e = Tables.embeddings(s, dir)
-      val qv = e.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-      val out = scratchDir("q_stream_sq8")
-      val src = stream(s, dir, "embeddings")
-      drain(s, dir, "embeddings")(graft.streaming.StreamingOps
-        .sq8IndexStream(src, fixtureCentroids(64), s"$out/index", s"$out/ckpt"))
-      SimilarityOps.sq8TopKIndexed(s, s"$out/index", fixtureCentroids(64), e, qv,
-        k = 20, nProbe = KmFixtureK, refine = 4)
-    },
-
-    "g_serve_pipeline" -> { (s, dir) => // the composed serving stack,
-      // hash-gated end to end: IVF candidate routing (probe-2 cell IN
-      // filter) -> MaxSim late-interaction scoring of the candidates (the
-      // fused T^2 kernel, exact integers) -> top-20 pool by (maxsim, id)
-      // -> 5-pick MMR diversification with rel = maxsim. This is the
-      // retrieve/rerank/diversify pipeline a RAG or hard-negative-mining
-      // deployment runs; composing the three operators in one oracle row
-      // certifies the STAGE BOUNDARIES (candidate set, pool cut, pick
-      // argmaxes), not just each operator alone.
-      val e = Tables.embeddings(s, dir)
-      val qv = e.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-      val cents = fixtureCentroids(64)
-      val vecs = e.select(col("vec_id").as("id"), VectorFns.toDouble(col("embedding")).as("v"))
-      val cands = SimilarityOps.assignCells(vecs, cents)
-        .filter(col("cell").isin(SimilarityOps.probeCellsOf(cents, qv, 2): _*))
-      val pool = cands.select(col("id"), col("v"),
-          graft.plans.MaxSimColumns.maxSim(col("v"),
-            graft.plans.MaxSimColumns.tokensOf(qv, 8), 8).as("rel_ppm"))
-        .orderBy(col("rel_ppm").desc, col("id")).limit(20)
-      SimilarityOps.mmrSelectFromPool(pool, k = 5)
-    },
-
-    "g_bm25" -> { (s, dir) => // Okapi BM25 lexical retrieval (Lucene-
-      // variant idf), top-10 by (score desc, doc_id). Exactness: ln
-      // pinned to DECIMAL(18,8), per-term contributions decimal-quantized
-      // before the order-free sum, score floored at 4 digits — the whole
-      // scorer replays bit-exactly in DuckDB, no tolerance. Shape: token
-      // explode -> query-term filter -> (doc,term) tf agg -> broadcast
-      // |query|-row df -> doc-keyed dl join -> per-doc agg.
-      RetrievalOps.bm25TopK(Tables.documents(s, dir), Bm25Query,
-        k = GraftConf.int(s, GraftConf.RetrievalK, 10),
-        k1 = GraftConf.fraction(s, GraftConf.Bm25K1, RetrievalOps.DefaultK1, 0.0, 10.0),
-        b = GraftConf.fraction(s, GraftConf.Bm25B, RetrievalOps.DefaultB))
-    },
-
-    "g_bm25_indexed" -> { (s, dir) => // BM25 served from the PERSISTED
-      // token-partitioned postings index: (tok, doc_id, tf) rows under
-      // pt = pmod(xxhash64(tok), nPt) hive dirs, (doc_id, dl) sidecar,
-      // nPt routing contract in _meta.json — the probe reads ONLY the pt
-      // directories the query terms hash to (posting-list cost, not
-      // corpus cost), never scans documents, and derives N/avgdl in-DAG
-      // from the _docs frame it already joins (so the constants track a
-      // streamed index). Contract: bit-equal to the full-scan g_bm25
-      // (shared oracle hash).
-      val path = scratchDir("postings") + "/idx"
-      val nPt = GraftConf.int(s, GraftConf.PostingsNPt, 16)
-      RetrievalOps.writePostingsIndex(Tables.documents(s, dir), path, nPt)
-      RetrievalOps.bm25TopKIndexed(s, path, Bm25Query,
-        k = GraftConf.int(s, GraftConf.RetrievalK, 10),
-        k1 = GraftConf.fraction(s, GraftConf.Bm25K1, RetrievalOps.DefaultK1, 0.0, 10.0),
-        b = GraftConf.fraction(s, GraftConf.Bm25B, RetrievalOps.DefaultB))
-    },
-
-    "q_stream_postings" -> { (s, dir) => // streaming postings-index
-      // maintenance, oracle side: an AvailableNow run of postingsStream
-      // lands the corpus as pt-partitioned per-batch deltas (_docs-first
-      // crash ordering), compactPostingsIndex folds them into the
-      // __batch=-1 base, and the BM25 probe over the STREAMED index must
-      // be bit-equal to the full-scan g_bm25 (shared oracle hash) — the
-      // g_bm25_indexed losslessness contract over the streaming landing
-      // plus the fold. Cross-batch replay/lineage/crash-window semantics
-      // are PostingsStreamSpec's job.
-      val out = scratchDir("q_stream_postings")
-      val src = stream(s, dir, "documents")
-      drain(s, dir, "documents")(graft.streaming.StreamingOps
-        .postingsStream(src, s"$out/idx", s"$out/ckpt",
-          nPt = GraftConf.int(s, GraftConf.PostingsNPt, 16)))
-      graft.streaming.StreamingOps.compactPostingsIndex(s, s"$out/idx")
-      RetrievalOps.bm25TopKIndexed(s, s"$out/idx", Bm25Query,
-        k = GraftConf.int(s, GraftConf.RetrievalK, 10),
-        k1 = GraftConf.fraction(s, GraftConf.Bm25K1, RetrievalOps.DefaultK1, 0.0, 10.0),
-        b = GraftConf.fraction(s, GraftConf.Bm25B, RetrievalOps.DefaultB))
-    },
-
-    "g_hybrid_rrf" -> { (s, dir) => // hybrid lexical+vector retrieval:
-      // BM25 top-30 and exact-cosine top-30 fused by reciprocal-rank
-      // fusion (1/(60+rank), decimal-quantized exact sum, 6-digit floor),
-      // top-10 by (rrf desc, id) — the standard hybrid-search serving
-      // composition; both arms are bounded shortlists so the fusion is
-      // 60-row work.
-      val e = Tables.embeddings(s, dir)
-      val qv = e.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-      RetrievalOps.hybridTopK(Tables.documents(s, dir), e, Bm25Query, qv,
-        k = GraftConf.int(s, GraftConf.RetrievalK, 10), poolK = 30,
-        rrfK = GraftConf.int(s, GraftConf.RrfK, 60))
-    },
-
-    "g_maxsim" -> { (s, dir) => // ColBERT-style late interaction: doc and
-      // query are bags of 8 token-vectors (the flat 64-dim embedding
-      // sliced by the PQ subspace geometry); score = sum over query
-      // tokens of the max fixed-point floored cosine against any doc
-      // token — exact integer math end to end (one fused T^2 kernel per
-      // row, map-only + TakeOrdered), so the oracle replays the full
-      // interaction with no tolerance. At 100 TB this scoring runs over
-      // an ANN shortlist; the corpus-wide row hash-gates the scoring.
-      val e = Tables.embeddings(s, dir)
-      val q = e.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-      SimilarityOps.maxSimTopK(e, q, subDim = 8, k = 20)
-    },
-
-    "g_mmr_select" -> { (s, dir) => // maximal marginal relevance: greedy
-      // k-pick over the pinned top-40 relevance pool, each pick maximizing
-      // 7*rel_ppm - 3*max_sim_ppm (lambda = 0.7 as an integer ratio —
-      // every score exact integer math, ties to the smallest id). Picks
-      // unroll as k deterministic plan stages (the graphSearch hop
-      // discipline): pool x selected is a bounded broadcast product
-      // (<= poolSize x k rows), one keyed max, one TakeOrdered(1) each.
-      // The oracle replays all five picks with unrolled CTEs.
-      val e = Tables.embeddings(s, dir)
-      val q = e.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-      SimilarityOps.mmrSelect(e, q, k = 5, poolSize = 40)
-    },
-
-    "g_sim_pq" -> { (s, dir) => // product-quantization ADC top-k: encode
-      // every vector as 8 codes (per-subspace codegen argmax against the
-      // inline ±1 fixture codebooks), score by summing the query's
-      // fixed-point per-(subspace, codeword) lookup table — the scan
-      // touches m ints per row instead of d floats (the 8–32× smaller
-      // index PQ exists for). Row-level oracle: DuckDB replays encode +
-      // ADC from the same inline literals.
-      val e = Tables.embeddings(s, dir)
-      val q = e.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-      val cbs = fixturePqCodebooks(64)
-      val enc = SimilarityOps.pqEncode(
-        e.select(col("vec_id").as("id"), VectorFns.toDouble(col("embedding")).as("v")), cbs)
-      SimilarityOps.pqTopK(enc, SimilarityOps.pqLut(cbs, q), 20)
-        .withColumnRenamed("id", "vec_id")
-    },
-
-    "g_sim_ivfpq" -> { (s, dir) => // IVF-PQ (the FAISS-style composition):
-      // coarse-quantize to the fixture cells, keep the query's 2 nearest
-      // cells (IN filter — directory pruning under the writeIvfIndex
-      // layout), ADC-score only the surviving codes. Projection + filter +
-      // top-k: zero exchanges before the final reduction. The oracle
-      // replays cell assignment, probe-cell ranking, encode and ADC.
-      val e = Tables.embeddings(s, dir)
-      val q = e.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-      SimilarityOps.ivfPqTopK(
-          e.select(col("vec_id").as("id"), VectorFns.toDouble(col("embedding")).as("v")),
-          fixtureCentroids(64), fixturePqCodebooks(64), q, nProbe = 2, k = 20)
-        .withColumnRenamed("id", "vec_id")
-    },
-
-    "g_sim_pq_indexed" -> { (s, dir) => // the PERSISTED IVF-PQ layout:
-      // codes-only files (the raw vectors are not stored), cell hive
-      // directories, probe-all readback == the full ADC scan — the
-      // g_sim_ivf_indexed losslessness contract extended to the
-      // compressed index (write + directory-pruned read + codes-only
-      // ReadSchema, all certified by the g_sim_pq oracle hash).
-      val e = Tables.embeddings(s, dir)
-      val q = e.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-      val path = scratchDir("pqidx") + "/idx"
-      SimilarityOps.writePqIndex(e, fixtureCentroids(64), fixturePqCodebooks(64), path)
-      SimilarityOps.pqTopKIndexed(s, path, fixtureCentroids(64), fixturePqCodebooks(64),
-        q, k = 20, nProbe = KmFixtureK)
-    },
-
-    "g_sim_ann" -> { (s, dir) => // multi-probe LSH top-k, probe-all setting:
-      // with maxProbeFlips = nPlanes every bucket is enumerated, so a green
-      // brute-force-oracle hash certifies the bucketed path is LOSSLESS —
-      // assignment is total, probe enumeration covers the space, scoring
-      // ranks identically — the invariant that makes IN-filter/partition
-      // pruning safe at reduced probes. The approximate regime itself is
-      // gated by g_sim_ann_recall (this synthetic corpus is near-random, so
-      // exact top-20 needs near-exhaustive probing; clustered real corpora
-      // probe few buckets).
-      val e = Tables.embeddings(s, dir)
-      val q = e.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-      SimilarityOps.lshTopK(e, q, 20, nPlanes = 4, maxProbeFlips = 4)
-    },
-
-    "g_sim_ann_recall" -> { (s, dir) => // the driver-gated recall number:
-      // recall@20 of the genuinely approximate setting (probe the query
-      // bucket + all hamming<=2 neighbors = 11/16 buckets) against brute
-      // force, asserted >= 0.8 (measured 0.85-0.9 on sf0.001/sf0.01)
-      val e = Tables.embeddings(s, dir)
-      val q = e.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-      val ann = SimilarityOps.lshTopK(e, q, 20, nPlanes = 4, maxProbeFlips = 2)
-        .select(col("vec_id"))
-      SimilarityOps.bruteForceTopK(e, q, 20)
-        .join(ann, Seq("vec_id"), "left_semi")
-        .agg((count(lit(1)) / 20.0).as("recall"))
-        .select(lit(20).as("k"), lit(0.8).as("recall_floor"),
-          (col("recall") >= 0.8).as("meets_floor"))
-    },
-
-    "g_sim_ivf" -> { (s, dir) => // IVF top-k, probe-all setting: same
-      // losslessness gate as g_sim_ann (green hash = cell assignment loses
-      // no vector, rankings match brute force); the approximate regime is
-      // gated by g_sim_ivf_recall. Assignment is a shuffle-free codegen
-      // projection; the persisted partitionBy(cell) layout is spec'd in
-      // DedupSimilaritySpec.
-      val e = Tables.embeddings(s, dir)
-      val q = e.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-      val centroids = SimilarityOps.ivfCentroids(e, k = 16, nIters = 2)
-      SimilarityOps.ivfTopK(e, centroids, q, 20, nProbe = 16)
-    },
-
-    "g_sim_ivf_indexed" -> { (s, dir) => // the PERSISTED IVF layout end-to-
-      // end: write partitionBy(cell) directories, read back through the
-      // probe-cell partition filter (directory pruning — the layout the
-      // 100 TB deployment actually queries), probe-all so the brute-force
-      // oracle certifies losslessness of write + pruned read + scoring
-      val e = Tables.embeddings(s, dir)
-      val q = e.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-      val centroids = SimilarityOps.ivfCentroids(e, k = 16, nIters = 2)
-      val path = scratchDir("ivf_idx") + "/index"
-      SimilarityOps.writeIvfIndex(e, centroids, path)
-      SimilarityOps.ivfTopKIndexed(s, path, centroids, q, 20, nProbe = 16)
-    },
-
-    "g_sim_ivf_recall" -> { (s, dir) => // recall@20 probing 8/16 cells,
-      // asserted >= 0.8 (measured 0.8-0.9 on sf0.001/sf0.01)
-      val e = Tables.embeddings(s, dir)
-      val q = e.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-      val centroids = SimilarityOps.ivfCentroids(e, k = 16, nIters = 2)
-      val ann = SimilarityOps.ivfTopK(e, centroids, q, 20, nProbe = 8)
-        .select(col("vec_id"))
-      SimilarityOps.bruteForceTopK(e, q, 20)
-        .join(ann, Seq("vec_id"), "left_semi")
-        .agg((count(lit(1)) / 20.0).as("recall"))
-        .select(lit(20).as("k"), lit(0.8).as("recall_floor"),
-          (col("recall") >= 0.8).as("meets_floor"))
-    },
-
-    "g_dedup_normalized" -> { (s, dir) => // exact dedup over canonicalized
-      // text (lowercase, strip punctuation, collapse whitespace) — catches
-      // the case/punctuation variants raw-byte hashing misses
-      TextOps.dedupNormalized(Tables.documents(s, dir)).orderBy(col("keep_id"))
-    },
-
-    "g_ngram_vocab" -> { (s, dir) => // corpus bigram vocabulary: top-50 by
-      // frequency (the statistics pass of tokenizer training)
-      TextOps.ngramVocabulary(Tables.documents(s, dir), k = 2, topK = 50)
-    },
-
-    "g_bpe_pairs" -> { (s, dir) => // BPE training, count phase: adjacent
-      // symbol-pair frequencies from the initial character state, computed
-      // over the DISTINCT-WORD table weighted by word frequency (the
-      // corpus-compaction that makes every BPE iteration vocabulary-sized
-      // at 100 TB); top-50 under a total (cnt DESC, s1, s2) order
-      TextOps.bpePairCounts(TextOps.bpeWords(Tables.documents(s, dir)))
-        .orderBy(col("cnt").desc, col("s1"), col("s2"))
-        .limit(50)
-    },
-
-    "g_bpe_step" -> { (s, dir) => // BPE training, one full iteration:
-      // argmax pair (cnt DESC, lexicographic tie-break — the loop's
-      // deterministic rule) -> greedy left-to-right merge pass (a single
-      // codegen'd array fold, map-only) -> recount. With g_bpe_pairs this
-      // gates both halves of learnBpe's loop body; the oracle re-derives
-      // the argmax independently and replays the merge via non-overlapping
-      // split-and-interleave (provably the same greedy pass from the
-      // character state).
-      val words = TextOps.bpeWords(Tables.documents(s, dir))
-      val top = TextOps.bpePairCounts(words)
-        .orderBy(col("cnt").desc, col("s1"), col("s2"))
-        .limit(1).collect()(0)
-      TextOps.bpePairCounts(
-          TextOps.bpeApplyMerge(words, top.getAs[String]("s1"), top.getAs[String]("s2")))
-        .orderBy(col("cnt").desc, col("s1"), col("s2"))
-        .limit(50)
-    },
-
-    "g_bpe_encode" -> { (s, dir) => // the encode path end-to-end with the
-      // argmax merge: per-doc token counts after the merge pass — distinct
-      // words encoded once, corpus joins the word->tokens map ONCE (the
-      // shape that holds at any merge count; one merge keeps the oracle
-      // exactly replayable from the character state)
-      val docs = Tables.documents(s, dir)
-      val top = TextOps.bpePairCounts(TextOps.bpeWords(docs))
-        .orderBy(col("cnt").desc, col("s1"), col("s2"))
-        .limit(1).collect()(0)
-      TextOps.bpeEncode(docs, Seq((top.getAs[String]("s1"), top.getAs[String]("s2"))))
-        .orderBy(col("doc_id"))
-    },
-
-    "g_unigram_step" -> { (s, dir) => // unigram-LM (SentencePiece-style)
-      // tokenizer training, one full hard-EM iteration: substring seed
-      // vocabulary (occurrence-counted over the distinct-word table) ->
-      // bounded cap (top-64 by count, plus every single character so
-      // segmentation is total) -> Viterbi E-step under integer nll units
-      // -> re-estimated piece counts. The oracle re-derives the seed and
-      // the cap, then replays the E-step by brute-force enumeration of
-      // EVERY segmentation per word (recursive CTE) with the kernel's
-      // exact (cost, sep-joined-path) tie-break — the DP must equal it.
-      val docs = Tables.documents(s, dir)
-      val vocab = TextOps.unigramCapVocab(TextOps.unigramSeed(docs, maxPieceLen = 4))
-      TextOps.unigramEmStep(docs, vocab)
-        .orderBy(col("cnt").desc, col("piece")).limit(50)
-    },
-
-    "g_unigram_prune" -> { (s, dir) => // the prune half of the
-      // SentencePiece iteration: multi-char seed pieces ranked by the
-      // likelihood DROP if removed with single-character fallback
-      // (loss = cnt * (sum char nll - piece nll), exact integer units),
-      // top-32 kept. Exact to Kudo 2018's alternative-segmentation loss
-      // whenever the best alternative IS the char split. The oracle
-      // replays seed, units, the char join, and the rank.
-      TextOps.unigramPrune(
-          TextOps.unigramSeed(Tables.documents(s, dir), maxPieceLen = 4),
-          keep = 32)
-        .orderBy(col("rank"))
-    },
-
-    "g_unigram_encode" -> { (s, dir) => // the unigram encode path
-      // end-to-end (bpeEncode's contract for the OTHER trainer): seed →
-      // cap → per-distinct-word Viterbi segmentation under the trained
-      // integer nll units → the corpus joins the word→token-count map
-      // ONCE. The oracle re-derives the vocabulary, brute-force-
-      // enumerates every word's best path, and replays the occurrence
-      // join — so a drifted unit or tie-break moves some word's token
-      // count and flips a doc row.
-      val docs = Tables.documents(s, dir)
-      val words = graft.operators.Checkpoints.pin(
-        TextOps.bpeWords(docs).select(col("word"), col("freq")),
-        reliable = false)
-      val vocab = TextOps.unigramCapVocab(
-        TextOps.unigramSeedFromWords(words, maxPieceLen = 4))
-      TextOps.unigramEncodeFromWords(docs, words, vocab)
-        .orderBy(col("doc_id"))
-    },
-
-    "g_unigram_pipeline" -> { (s, dir) => // the tokenizer trainer
-      // composed end-to-end (the g_pipeline_e2e discipline): seed → cap
-      // → one hard-EM step → prune to the top-16 multi-char pieces (+
-      // the E-step's single characters, so coverage stays total where it
-      // can) → re-encode the corpus under the PRUNED vocabulary. The
-      // distinct-word frame is pinned once and shared by seed, EM, and
-      // encode — the corpus pays ONE groupBy and ONE join, end to end.
-      // The oracle replays every stage nested (two segmentation
-      // enumerations under two vocabularies), so a drifted unit,
-      // tie-break, or prune rank anywhere moves some doc's token count.
-      val docs = Tables.documents(s, dir)
-      val words = graft.operators.Checkpoints.pin(
-        TextOps.bpeWords(docs).select(col("word"), col("freq")),
-        reliable = false)
-      val vocab0 = TextOps.unigramCapVocab(TextOps.unigramSeedFromWords(words))
-      val em = graft.operators.Checkpoints.pin(
-        TextOps.unigramEmStepFromWords(words, vocab0), reliable = false)
-      // a character the E-step never used is absent from em — a word
-      // needing it encodes to 0 tokens (visible, the kernel contract)
-      val vocab = TextOps.unigramPrune(em, keep = 16)
-        .select(col("piece"), col("cnt"))
-        .unionByName(em.filter(length(col("piece")) === 1))
-        .distinct()
-        .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-      TextOps.unigramEncodeFromWords(docs, words, vocab)
-        .orderBy(col("doc_id"))
-    },
-
-    "g_unigram_train" -> { (s, dir) => // the trainer run to CONVERGENCE
-      // discipline (verdict r17 #4): SentencePiece's outer loop
-      // alternating hard-EM and prune — seed → cap(64) → EM₁ → prune to
-      // 16 multi-char pieces (+ EM₁'s single chars) → EM₂ under the
-      // PRUNED vocabulary's re-estimated units → prune to 8. Two full EM
-      // rounds gated: the oracle nests BOTH brute-force segmentation
-      // enumerations (the pipeline row's materializations) and replays
-      // the final loss rank, so a drifted unit, count, or tie-break in
-      // EITHER round moves a rank. Output: the final trained vocabulary
-      // with its loss evidence.
-      val words = graft.operators.Checkpoints.pin(
-        TextOps.bpeWords(Tables.documents(s, dir))
-          .select(col("word"), col("freq")),
-        reliable = false)
-      TextOps.unigramTrainFromWords(words, keeps = Seq(16, 8))
-        .orderBy(col("rank"))
-    },
-
-    "q_stream_unigram" -> { (s, dir) => // the unigram trainer's streamed
-      // corpus face: the word-frequency frame is the ONE corpus-sized
-      // aggregation of the whole trainer, and it is exactly the unigram
-      // count frame the KN family already maintains incrementally — so
-      // an AvailableNow run of knCountsStream + the fold serve the
-      // words, and seed/cap/EM run vocabulary-sized on top. Must be
-      // bit-equal to the batch g_unigram_step (shared oracle hash).
-      val out = scratchDir("q_stream_unigram")
-      val src = stream(s, dir, "documents")
-      drain(s, dir, "documents")(graft.streaming.StreamingOps
-        .knCountsStream(src, s"$out/idx", s"$out/ckpt"))
-      graft.streaming.StreamingOps.compactKnCounts(s, s"$out/idx")
-      val words = graft.streaming.StreamingOps.readKnCounts(s, s"$out/idx")._1
-        .filter(length(col("w")) > 0) // bpeWords' empty-token filter
-        .select(col("w").as("word"), col("c").as("freq"))
-      val vocab = TextOps.unigramCapVocab(
-        TextOps.unigramSeedFromWords(words, maxPieceLen = 4))
-      TextOps.unigramEmStepFromWords(words, vocab)
-        .orderBy(col("cnt").desc, col("piece")).limit(50)
-    },
-
-    "g_sim_batch" -> { (s, dir) => // many-queries-at-once exact top-k: the
-      // probe set broadcasts (constant-size), scoring is a broadcast
-      // nested-loop + per-probe window — the batch retrieval path
-      SimilarityOps.batchTopK(
-          Tables.embeddings(s, dir),
-          Tables.embeddings(s, dir).filter(col("vec_id") < 5), k = 10)
-        .select(col("probe_id"), col("vec_id"), col("sim"), col("rank"))
-        .orderBy(col("probe_id"), col("rank"))
-    },
-
-    "g_rag_retrieve" -> { (s, dir) => // the RAG retrieve-then-read
-      // composition: ANN top-k over the embedding column, hits joined
-      // back to the documents table for the payload — embeddings and
-      // documents share ids in the fixtures. The hit set is k×|probes|
-      // (bounded), so AQE broadcasts it into the corpus join; at scale
-      // the retrieval side swaps to the IVF/LSH index (g_sim_ivf_indexed).
-      val hits = SimilarityOps.batchTopK(
-        Tables.embeddings(s, dir),
-        Tables.embeddings(s, dir).filter(col("vec_id") < 3), k = 5)
-      hits.join(Tables.documents(s, dir), hits("vec_id") === col("doc_id"))
-        .select(col("probe_id"), col("rank"), col("doc_id"), col("sim"),
-          col("lang"), col("n_chars"))
-        .orderBy(col("probe_id"), col("rank"))
-    },
-
-    "g_text_stats" -> { (s, dir) => // corpus stats per (lang, source)
-      TextOps.corpusStats(Tables.documents(s, dir)).orderBy(col("lang"), col("source"))
-    },
-
-    "g_token_counts" -> { (s, dir) => // per-doc token counting
-      TextOps.tokenCounts(Tables.documents(s, dir)).orderBy(col("doc_id"))
-    },
-
-    "g_token_commonness" -> { (s, dir) => // corpus-frequency quality profile
-      // (TF side of an LM-score filter): corpus freq table -> skew-prone
-      // token join back -> per-doc integer stats
-      TextOps.tokenCommonness(Tables.documents(s, dir)).orderBy(col("doc_id"))
-    },
-
-    "g_lang_id" -> { (s, dir) => // n-gram-heuristic language id
-      TextOps.langId(Tables.documents(s, dir)).orderBy(col("doc_id"))
-    },
-
-    "g_quality" -> { (s, dir) => // per-doc quality scoring
-      TextOps.qualityScores(Tables.documents(s, dir)).orderBy(col("doc_id"))
-    },
-
-    "g_sketch_distinct" -> { (s, dir) => // HLL++ vocabulary cardinality,
-      // invariant-gated: the sketch estimate must sit within 3x the
-      // requested rsd of the exact count (deterministic — HLL is
-      // hash-based, so this is a stable property of the corpus, like the
-      // recall gates). Exact counts cross the oracle; the sketch's scale
-      // win is its fixed-size map-side partial state.
-      val docs = Tables.documents(s, dir)
-      val toks = docs.select(col("lang"), explode(graft.functions.TextFns.tokens(col("text"))).as("tok"))
-      val exact = toks.groupBy(col("lang")).agg(countDistinct(col("tok")).as("n_exact"))
-      TextOps.tokenCardinality(docs, rsd = 0.05)
-        .join(exact, "lang")
-        .select(col("lang"), col("n_exact"),
-          (abs(col("n_approx") - col("n_exact")).cast("double") / col("n_exact") <= 0.15)
-            .as("within_bound"))
-        .orderBy(col("lang"))
-    },
-
-    "g_quality_rules" -> { (s, dir) => // Gopher/C4-style rule filter:
-      // per-rule audit flags + kept conjunction, one map-only pass
-      TextOps.qualityRules(Tables.documents(s, dir)).orderBy(col("doc_id"))
-    },
-
-    "g_redact" -> { (s, dir) => // PII-style regex scrubbing: mask term list
-      // + digit runs, count redactions; map-only codegen pass
-      TextOps.redact(Tables.documents(s, dir), TextOps.RedactPatterns).orderBy(col("doc_id"))
-    },
-
-    "g_distinctive_terms" -> { (s, dir) => // per-doc top-3 TF-IDF-shape
-      // terms with exact integer ranking (df asc, tf desc, term asc)
-      TextOps.distinctiveTerms(Tables.documents(s, dir), perDoc = 3)
-        .orderBy(col("doc_id"), col("rank"))
-    },
-
-    "g_chunk_windows" -> { (s, dir) => // context-window/RAG chunking:
-      // 32-token windows every 24 tokens (8-token overlap), map-only
-      TextOps.chunkTokens(Tables.documents(s, dir), chunkSize = 32, stride = 24)
-        .orderBy(col("doc_id"), col("chunk_idx"))
-    },
-
-    "g_para_dedup" -> { (s, dir) => // CCNet/C4-style paragraph dedup with
-      // document reconstruction: split every doc into non-overlapping
-      // 8-token passages (chunkTokens at stride == chunkSize), drop all but
-      // the corpus-wide first occurrence of each distinct passage, and
-      // reassemble each doc from its survivors in order — duplicated docs
-      // come back gutted, unique docs come back verbatim. Row-level gate
-      // over every document (clean_text + kept/dropped counts).
-      DedupOps.paragraphDedup(
-          TextOps.chunkTokens(Tables.documents(s, dir), chunkSize = 8, stride = 8),
-          idxCol = "chunk_idx", paraCol = "chunk_text")
-        .orderBy(col("doc_id"))
-    },
-
-    "g_para_dedup_incr" -> { (s, dir) => // incremental paragraph dedup:
-      // the daily landing (doc_id % 5 == 0) deduped against the historical
-      // corpus' paragraphs AND itself, reassembled — the corpus is never
-      // rewritten. Same chunking as g_para_dedup.
-      val docs = Tables.documents(s, dir)
-      def paras(d: org.apache.spark.sql.DataFrame) =
-        TextOps.chunkTokens(d, chunkSize = 8, stride = 8)
-      DedupOps.paragraphDedupAgainst(
-          paras(docs.filter(col("doc_id") % 5 === 0)),
-          paras(docs.filter(col("doc_id") % 5 =!= 0)),
-          idxCol = "chunk_idx", paraCol = "chunk_text")
-        .orderBy(col("doc_id"))
-    },
-
-    "g_cooccur_lift" -> { (s, dir) => // token-pair association mining:
-      // top-50 co-occurring pairs by exact integer lift (basis points)
-      TextOps.cooccurrenceLift(Tables.documents(s, dir), topK = 50)
-    },
-
-    "g_quality_logit" -> { (s, dir) => // model-based quality filter: a
-      // logistic classifier over the rule features with FIXTURE
-      // coefficients (stand-ins for a trained model's weights, inlined as
-      // literals the way production would broadcast them) — scored as the
-      // raw logit (monotone-equivalent to sigmoid, bit-exact cross-engine),
-      // kept = floored logit >= 0.6. Map-only codegen projection.
-      TextOps.qualityLogit(Tables.documents(s, dir),
-          wNTokens = 0.01, wMeanTokLen = 0.2, wPunct = -8.0, wStopword = 0.15,
-          bias = -1.0, threshold = 0.6)
-        .orderBy(col("doc_id"))
-    },
-
-    "g_logit_train" -> { (s, dir) => // TRAIN the quality/language
-      // classifier in-engine — the missing half of g_quality_logit
-      // (which scores fixed weights): full-batch logistic GD over
-      // deterministic count-ratio features (bias, stopword ratio, TTR,
-      // length), labels lang='en'. Bit-exact cross-engine replay via
-      // integer-unit weights, per-row gradient contributions floored to
-      // 1e-8 units and summed as exact decimals, power-of-two learning
-      // rate applied by double floor (no DIV-direction mismatch). The
-      // oracle replays the ENTIRE descent as unrolled CTEs — a drifted
-      // gradient in any step flips every logit.
-      TextOps.logitTrainScore(Tables.documents(s, dir),
-          steps = GraftConf.int(s, GraftConf.LogitSteps, GraftConf.LogitStepsDefault))
-        .orderBy(col("doc_id"))
-    },
-
-    "q_stream_logit" -> { (s, dir) => // maintained quality classifier,
-      // oracle side: an AvailableNow run of logitStream lands the slim
-      // deterministic feature deltas and retrains on refresh — the
-      // served scored corpus must be bit-equal to the batch
-      // g_logit_train (shared oracle hash). Full-batch GD is a global
-      // function of the corpus (the UniMax-manifest argument), so the
-      // maintenance contract is periodic O(corpus-features) retrain;
-      // staleness/replay/lineage/drift are LogitSpec's job.
-      val out = scratchDir("q_stream_logit")
-      val src = stream(s, dir, "documents")
-      drain(s, dir, "documents")(graft.streaming.StreamingOps
-        .logitStream(src, s"$out/idx", s"$out/ckpt",
-          steps = GraftConf.int(s, GraftConf.LogitSteps, GraftConf.LogitStepsDefault)))
-      graft.streaming.StreamingOps.readLogitScores(s, s"$out/idx")
-        .orderBy(col("doc_id"))
-    },
-
-    "g_quality_unigram" -> { (s, dir) => // corpus unigram-LM quality score
-      // (KenLM-style mean token log-prob, decimal-quantized for parity)
-      TextOps.unigramLogProb(Tables.documents(s, dir)).orderBy(col("doc_id"))
-    },
-
-    "g_quality_bigram" -> { (s, dir) => // bigram-LM quality score (CCNet-
-      // style perplexity filter one Markov order up): per-doc mean
-      // log P(w2|w1), MLE pair/context counts, decimal quantize-then-sum
-      TextOps.bigramLogProb(Tables.documents(s, dir)).orderBy(col("doc_id"))
-    },
-
-    "g_kn_score" -> { (s, dir) => // interpolated Kneser–Ney bigram
-      // scoring, the CROSS-CORPUS form MLE can't do (unseen pair ⇒
-      // log 0): LM estimated on the even-id half, the odd-id half scored
-      // under it — discounted seen mass + continuation-probability
-      // backoff, <unk> cut at minCount, exact-binary D = 0.75, ln
-      // decimal-quantized before the multiplicity-weighted exact sum.
-      // Model joins are type-count-sized; docs collapse to distinct
-      // (doc, pair) with multiplicities before touching the model.
-      val d = Tables.documents(s, dir)
-      TextOps.knScoreAgainst(
-          d.filter(col("doc_id") % 2 === 1), d.filter(col("doc_id") % 2 === 0),
-          minCount = GraftConf.int(s, GraftConf.KnMinCount, GraftConf.KnMinCountDefault).toLong)
-        .orderBy(col("doc_id"))
-    },
-
-    "q_stream_kn" -> { (s, dir) => // streamed Kneser–Ney count
-      // maintenance, oracle side: an AvailableNow run of knCountsStream
-      // lands the LM half's raw unigram/pair type counts as
-      // source-tagged deltas, compactKnCounts folds both roots, and
-      // scoring the odd half against the FOLDED counts must be bit-equal
-      // to the batch g_kn_score (shared oracle hash) — the <unk> cut
-      // applies at model-read time, so the stream never needs to know
-      // minCount. Replay/lineage/fold semantics are KnStreamSpec's job.
-      val out = scratchDir("q_stream_kn")
-      val src = stream(s, dir, "documents")
-        .filter(col("doc_id") % 2 === 0)
-      drain(s, dir, "documents")(graft.streaming.StreamingOps
-        .knCountsStream(src, s"$out/idx", s"$out/ckpt"))
-      graft.streaming.StreamingOps.compactKnCounts(s, s"$out/idx")
-      val (uni, pairs) = graft.streaming.StreamingOps.readKnCounts(s, s"$out/idx")
-      TextOps.knScore(
-          Tables.documents(s, dir).filter(col("doc_id") % 2 === 1), uni, pairs,
-          minCount = GraftConf.int(s, GraftConf.KnMinCount, GraftConf.KnMinCountDefault).toLong)
-        .orderBy(col("doc_id"))
-    },
-
-    "g_kn3_score" -> { (s, dir) => // interpolated Kneser–Ney TRIGRAM
-      // scoring — the standard KenLM order: discounted trigram mass
-      // backing off through the bigram-continuation level to the
-      // unigram-continuation floor, every statistic count algebra over
-      // the mapped trigram types. Same cross-corpus split and exactness
-      // discipline as g_kn_score; the oracle replays the full
-      // three-level chain.
-      val d = Tables.documents(s, dir)
-      TextOps.kn3ScoreAgainst(
-          d.filter(col("doc_id") % 2 === 1), d.filter(col("doc_id") % 2 === 0),
-          minCount = GraftConf.int(s, GraftConf.KnMinCount, GraftConf.KnMinCountDefault).toLong)
-        .orderBy(col("doc_id"))
-    },
-
-    "q_stream_kn3" -> { (s, dir) => // streamed trigram-KN count
-      // maintenance, oracle side: kn3CountsStream lands the LM half's
-      // raw unigram + trigram type counts, compactKn3Counts folds both
-      // roots, and scoring the odd half against the folded counts must
-      // be bit-equal to the batch g_kn3_score (shared oracle hash) —
-      // the bigram-continuation level derives from the trigram types at
-      // read time, so the stream maintains exactly two frames.
-      val out = scratchDir("q_stream_kn3")
-      val src = stream(s, dir, "documents")
-        .filter(col("doc_id") % 2 === 0)
-      drain(s, dir, "documents")(graft.streaming.StreamingOps
-        .kn3CountsStream(src, s"$out/idx", s"$out/ckpt"))
-      graft.streaming.StreamingOps.compactKn3Counts(s, s"$out/idx")
-      val (uni, tri) = graft.streaming.StreamingOps.readKn3Counts(s, s"$out/idx")
-      TextOps.kn3Score(
-          Tables.documents(s, dir).filter(col("doc_id") % 2 === 1), uni, tri,
-          minCount = GraftConf.int(s, GraftConf.KnMinCount, GraftConf.KnMinCountDefault).toLong)
-        .orderBy(col("doc_id"))
-    },
-
-    "g_logit_eval" -> { (s, dir) => // the train→evaluate loop in one DAG:
-      // the g_logit_train descent reduced to exact confusion counts at
-      // the logit-0 boundary + precision/recall/F1 (single-division
-      // forms). The oracle replays the WHOLE pipeline — descent included
-      // — so a drifted gradient anywhere flips the metrics row.
-      TextOps.logitConfusion(TextOps.logitTrainScore(Tables.documents(s, dir),
-        steps = GraftConf.int(s, GraftConf.LogitSteps, GraftConf.LogitStepsDefault)))
-    },
-
-    "g_logit_auc" -> { (s, dir) => // threshold-free evaluation of the
-      // trained classifier: EXACT tie-aware ROC-AUC (Mann–Whitney over
-      // per-score-type counts, mid-rank ties kept integer by the ×2,
-      // one final double division). The running below-count runs
-      // two-phase (range offsets over the bounded range frame), so no
-      // corpus-wide single-partition window exists at any score
-      // cardinality. The oracle replays the whole descent AND the rank
-      // statistic.
-      TextOps.logitAuc(TextOps.logitTrainScore(Tables.documents(s, dir),
-        steps = GraftConf.int(s, GraftConf.LogitSteps, GraftConf.LogitStepsDefault)))
-    },
-
-    "g_logit_calibration" -> { (s, dir) => // reliability diagram of the
-      // trained classifier: fixed-width logit bins (rank-free — ntile
-      // ties are engine-dependent), per bin exact counts, positive
-      // fraction and mean logit (1e-6-unit integer sums, one division).
-      // The frac_pos-vs-sigmoid(mean_logit) drift is the Platt signal.
-      TextOps.logitCalibration(TextOps.logitTrainScore(Tables.documents(s, dir),
-          steps = GraftConf.int(s, GraftConf.LogitSteps, GraftConf.LogitStepsDefault)))
-        .orderBy(col("bin"))
-    },
-
-    "g_nb_priors" -> { (s, dir) => // priors-only NB ablation: the
-      // majority-class baseline evaluated with the same classEval pivot
-      // as g_nb_eval — the floor the token model's macro-F1 lift is
-      // measured from (same train/test split, same tie-break).
-      val d = Tables.documents(s, dir)
-      val scored = TextOps.nbPriorsScore(
-        d.filter(col("doc_id") % 2 === 1), d.filter(col("doc_id") % 2 === 0))
-      TextOps.classEval(scored
-          .join(d.select(col("doc_id"), col("lang").as("label")), Seq("doc_id")))
-        .orderBy(col("class"))
-    },
-
-    "g_doremi_weights" -> { (s, dir) => // DoReMi-shaped mixture
-      // reweighting: per-domain mean logistic loss of the trained
-      // classifier (quantized-decimal evidence), then T exponentiated-
-      // gradient steps over the bounded DOMAIN frame — high-loss domains
-      // gain weight (the group-DRO direction). The oracle replays the
-      // descent AND the EG iteration; every transcendental is quantized
-      // before its order-free sum.
-      val steps = GraftConf.int(s, GraftConf.LogitSteps, GraftConf.LogitStepsDefault)
-      val scored = TextOps.logitTrainScore(Tables.documents(s, dir), steps = steps)
-      CurationOps.doremiWeights(
-          TextOps.logitLossPerDoc(scored)
-            .join(Tables.documents(s, dir).select(col("doc_id"), col("source")),
-              Seq("doc_id")),
-          eta = 1.0, steps = steps)
-        .orderBy(col("source"))
-    },
-
-    "g_pref_pairs" -> { (s, dir) => // DPO-style preference-pair
-      // assembly: per source, the i-th best document by the quality
-      // score (quantized to exact 1e-4 longs) pairs with the i-th worst
-      // as (chosen, rejected) — top-vs-bottom construction for
-      // preference training. Ranks via the two-phase grouped-rank
-      // machinery (mega-domain-safe); the strict score inequality drops
-      // equal-score, self, and reflected pairs. Oracle replays the
-      // single-window formulation the two-phase rank is spec-pinned to
-      // equal.
-      val scored = Tables.documents(s, dir).select(col("doc_id"), col("source"),
-        floor(graft.functions.TextFns.qualityScore(col("text")) * lit(1e4))
-          .cast("long").as("score"))
-      CurationOps.preferencePairs(scored)
-        .orderBy(col("source"), col("pair_rank"))
-    },
-
-    "q_stream_pref" -> { (s, dir) => // maintained preference pairs,
-      // oracle side: an AvailableNow run of prefPairsStream lands the
-      // slim (doc_id, source, score) evidence and re-pairs on refresh —
-      // the served pairs must be bit-equal to the batch g_pref_pairs
-      // (shared oracle hash). Pairing is a global function of each
-      // domain's ranking, so the scheduleBatch periodic-re-derive
-      // contract applies.
-      val out = scratchDir("q_stream_pref")
-      val src = stream(s, dir, "documents")
-        .select(col("doc_id"), col("source"),
-          floor(graft.functions.TextFns.qualityScore(col("text")) * lit(1e4))
-            .cast("long").as("score"))
-      drain(s, dir, "documents")(graft.streaming.StreamingOps
-        .prefPairsStream(src, s"$out/idx", s"$out/ckpt"))
-      graft.streaming.StreamingOps.readPrefPairs(s, s"$out/idx")
-        .orderBy(col("source"), col("pair_rank"))
-    },
-
-    "g_logit_platt" -> { (s, dir) => // Platt scaling — the calibration
-      // FIX for what g_logit_calibration measures: a second 1-d logistic
-      // descent (bias + raw logit) over the first descent's scores, both
-      // from the same GD seam. The oracle nests one unrolled descent
-      // inside another; a drifted gradient in EITHER flips every
-      // calibrated score.
-      val steps = GraftConf.int(s, GraftConf.LogitSteps, GraftConf.LogitStepsDefault)
-      val f = TextOps.logitTrainScore(Tables.documents(s, dir), steps = steps)
-        .select(col("doc_id"), col("label").as("y"),
-          lit(1.0).as("x0"), col("logit").as("x1"))
-      TextOps.logitScoreFeatures(f,
-          TextOps.logitTrain(f, xCols = Seq("x0", "x1"), steps = steps),
-          xCols = Seq("x0", "x1"))
-        .orderBy(col("doc_id"))
-    },
-
-    "g_quality_loop" -> { (s, dir) => // the calibrated quality loop
-      // composed in ONE DAG (the g_pipeline_e2e discipline): train the
-      // quality classifier -> Platt-calibrate its scores (the
-      // g_logit_platt descent-over-a-descent) -> keep docs whose
-      // CALIBRATED log-odds clear 0 (probability 0.5 on the calibrated
-      // scale — the boundary calibration actually moved) -> report the
-      // kept-vs-raw release delta per source (cardDelta). The oracle
-      // replays ALL four stages nested, so a drifted gradient in either
-      // descent moves the decision boundary and flips the kept set.
-      val steps = GraftConf.int(s, GraftConf.LogitSteps, GraftConf.LogitStepsDefault)
-      val d = Tables.documents(s, dir)
-      val scored = TextOps.logitTrainScore(d, steps = steps)
-      val f = scored.select(col("doc_id"), col("label").as("y"),
-        lit(1.0).as("x0"), col("logit").as("x1"))
-      val cal = TextOps.logitScoreFeatures(f,
-        TextOps.logitTrain(f, xCols = Seq("x0", "x1"), steps = steps),
-        xCols = Seq("x0", "x1"))
-      val kept = d.join(cal.filter(col("logit") >= lit(0.0)).select(col("doc_id")),
-        Seq("doc_id"), "left_semi")
-      CurationOps.cardDelta(before = d, after = kept)
-        .orderBy(col("source"))
-    },
-
-    "g_bt_fit" -> { (s, dir) => // Bradley–Terry reward fit over the DPO
-      // pairs — the consumer g_pref_pairs was missing: P(chosen >
-      // rejected) = sigma(w * (x_c - x_r)), so the SAME gdDescend seam
-      // trains on the pairwise feature DIFFERENCES with y = 1 (the bias
-      // diff is identically 0 and its weight never moves), and the
-      // pairwise-accuracy eval is the classEval pivot over
-      // sign-of-logit predictions. The oracle replays pairing, feature
-      // diffs, the whole descent, and the pivot.
-      val steps = GraftConf.int(s, GraftConf.LogitSteps, GraftConf.LogitStepsDefault)
-      val d = Tables.documents(s, dir)
-      val pairs = CurationOps.preferencePairs(
-        d.select(col("doc_id"), col("source"),
-          floor(graft.functions.TextFns.qualityScore(col("text")) * lit(1e4))
-            .cast("long").as("score")))
-      val feats = graft.operators.Checkpoints.pin(
-        TextOps.logitFeatures(d)
-          .select(col("doc_id") +: TextOps.LogitXCols.map(col): _*),
-        reliable = false)
-      val diffs = graft.operators.Checkpoints.pin(
-        pairs
-          .join(feats.select(col("doc_id").as("chosen_id") +:
-            TextOps.LogitXCols.map(c => col(c).as(s"c_$c")): _*), Seq("chosen_id"))
-          .join(feats.select(col("doc_id").as("rejected_id") +:
-            TextOps.LogitXCols.map(c => col(c).as(s"r_$c")): _*), Seq("rejected_id"))
-          .select(col("chosen_id").as("doc_id") +: lit(1.0).as("y") +:
-            TextOps.LogitXCols.map(c => (col(s"c_$c") - col(s"r_$c")).as(c)): _*),
-        reliable = false)
-      val sp = TextOps.logitScoreFeatures(diffs,
-        TextOps.logitTrain(diffs, steps = steps))
-      TextOps.classEval(sp.select(col("doc_id"), lit("pref").as("label"),
-          when(col("logit") >= lit(0.0), lit("pref")).otherwise(lit("anti")).as("pred")))
-        .orderBy(col("class"))
-    },
-
-    "g_bt_rank" -> { (s, dir) => // best-of-n selection under the learned
-      // reward — the consumer of g_bt_fit's weights (a fitted reward
-      // model nobody scores with is as incomplete as unpaired
-      // preferences): the SAME pairing → diffs → descent, then the
-      // trained weights score EVERY document, each source keeping its
-      // top quarter by reward through the salted two-phase
-      // scoreQuantileFilter. The whole chain is ONE operator
-      // (CurationOps.btRewardRank) shared bit-for-bit with the streamed
-      // maintainer — both gate on this oracle's single-window replay.
-      val steps = GraftConf.int(s, GraftConf.LogitSteps, GraftConf.LogitStepsDefault)
-      val d = Tables.documents(s, dir)
-      CurationOps.btRewardRank(
-          TextOps.logitFeatures(d)
-            .select(col("doc_id") +: TextOps.LogitXCols.map(col): _*)
-            .join(d.select(col("doc_id"), col("source"),
-              floor(graft.functions.TextFns.qualityScore(col("text")) * lit(1e4))
-                .cast("long").as("score")), Seq("doc_id")),
-          steps = steps)
-        .orderBy(col("doc_id"))
-    },
-
-    "g_glm_poisson" -> { (s, dir) => // the GLM seam beyond the logit
-      // link: Poisson (log-link) regression of the token COUNT in
-      // kilotokens (n_tokens / 1000 — a pre-scaled count outcome, not a
-      // per-character rate) on the same seven features — the identical
-      // integer-unit /
-      // exact-decimal-gradient descent with the mean function swapped to
-      // exp(z) (canonical-link gradients share one shape). The outcome
-      // is pre-scaled so exp stays O(0.1), keeping the exp last-ulp
-      // floor-boundary class at the logit trainer's negligible level.
-      // The oracle unrolls the whole descent from the SAME generator.
-      val f = TextOps.logitFeatures(Tables.documents(s, dir),
-        label = org.apache.spark.sql.functions.size(
-          graft.functions.TextFns.tokens(col("text"))).cast("double") / lit(1000.0))
-      TextOps.logitScoreFeatures(f, TextOps.glmTrainLog(f,
-          steps = GraftConf.int(s, GraftConf.LogitSteps, GraftConf.LogitStepsDefault)))
-        .orderBy(col("doc_id"))
-    },
-
-    "q_stream_glm" -> { (s, dir) => // maintained Poisson GLM, oracle
-      // side: an AvailableNow run of glmStream lands the rate-labeled
-      // feature deltas and retrains on refresh — served scores must be
-      // bit-equal to the batch g_glm_poisson (shared oracle hash). The
-      // link id is pinned in _meta.json so a logit sink and a GLM sink
-      // can never silently continue each other.
-      val out = scratchDir("q_stream_glm")
-      val src = stream(s, dir, "documents")
-      drain(s, dir, "documents")(graft.streaming.StreamingOps
-        .glmStream(src, s"$out/idx", s"$out/ckpt",
-          steps = GraftConf.int(s, GraftConf.LogitSteps, GraftConf.LogitStepsDefault)))
-      graft.streaming.StreamingOps.readGlmScores(s, s"$out/idx")
-        .orderBy(col("doc_id"))
-    },
-
-    "q_stream_doremi" -> { (s, dir) => // maintained DoReMi mixture,
-      // oracle side: an AvailableNow run of doremiStream lands the
-      // feature-plus-domain deltas and recomputes classifier -> per-domain
-      // loss -> EG weights on refresh — the served mixture must be
-      // bit-equal to the batch g_doremi_weights (shared oracle hash).
-      // lrDen and eta pin by exact IEEE bits in _meta.json.
-      val out = scratchDir("q_stream_doremi")
-      val src = stream(s, dir, "documents")
-      drain(s, dir, "documents")(graft.streaming.StreamingOps
-        .doremiStream(src, s"$out/idx", s"$out/ckpt",
-          steps = GraftConf.int(s, GraftConf.LogitSteps, GraftConf.LogitStepsDefault)))
-      graft.streaming.StreamingOps.readDoremiWeights(s, s"$out/idx")
-        .orderBy(col("source"))
-    },
-
-    "q_stream_bt" -> { (s, dir) => // maintained Bradley–Terry reward
-      // selection, oracle side: an AvailableNow run of btRankStream
-      // lands the feature-plus-domain-plus-score deltas and recomputes
-      // pairing -> pairwise descent -> reward scores -> per-source
-      // top-quarter keep on refresh — the served rows must be bit-equal
-      // to the batch g_bt_rank (shared oracle hash). lrDen and keepFrac
-      // pin by exact IEEE bits in _meta.json.
-      val out = scratchDir("q_stream_bt")
-      val src = stream(s, dir, "documents")
-      drain(s, dir, "documents")(graft.streaming.StreamingOps
-        .btRankStream(src, s"$out/idx", s"$out/ckpt",
-          steps = GraftConf.int(s, GraftConf.LogitSteps, GraftConf.LogitStepsDefault)))
-      graft.streaming.StreamingOps.readBtRank(s, s"$out/idx")
-        .orderBy(col("doc_id"))
-    },
-
-    "g_ccnet_buckets" -> { (s, dir) => // the CCNet head/middle/tail
-      // split (the paper's actual bucketing, next to g_ccnet_pipeline's
-      // hard cut): per-source perplexity THIRDS of the trigram-KN
-      // scores. Scores quantize to integer 1e-4 units (the 4-digit
-      // floor's grid — lossless), shift non-negative by the
-      // 1-row-broadcast corpus minimum (the rankBuckets DIV contract),
-      // then the two-phase per-group rank strata — bucket 2 = head
-      // (best log-probability), no corpus-wide window at any scale.
-      val d = Tables.documents(s, dir)
-      val scored = TextOps.kn3ScoreAgainst(
-          d.filter(col("doc_id") % 2 === 1), d.filter(col("doc_id") % 2 === 0),
-          minCount = GraftConf.int(s, GraftConf.KnMinCount, GraftConf.KnMinCountDefault).toLong)
-        .join(d.select(col("doc_id"), col("source")), Seq("doc_id"))
-        .select(col("doc_id"), col("source"),
-          floor(col("avg_logprob") * lit(1e4)).cast("long").as("__u"))
-      val minU = scored.agg(min(col("__u")).as("__minu"))
-      CurationOps.rankBucketsByGroup(
-          scored.crossJoin(broadcast(minU))
-            .select(col("doc_id"), col("source"),
-              (col("__u") - col("__minu")).as("score")),
-          nBuckets = 3)
-        .orderBy(col("doc_id"))
-    },
-
-    "g_logit_hashed" -> { (s, dir) => // feature-HASHED logistic
-      // regression — the fastText shape: tokens hash into 64 buckets
-      // (the cross-engine polynomial hash), the model is a bucket-keyed
-      // WEIGHT FRAME (no driver vector), and the per-doc activation is
-      // an exact integer unit-sum with ONE double conversion — so the
-      // whole descent replays bit-identically from unrolled CTEs even
-      // at vocab-scale feature counts.
-      TextOps.logitTrainHashed(Tables.documents(s, dir), nBuckets = 64,
-          steps = GraftConf.int(s, GraftConf.LogitSteps, GraftConf.LogitStepsDefault))
-        .orderBy(col("doc_id"))
-    },
-
-    "g_nb_langid" -> { (s, dir) => // TRAINED language identification:
-      // multinomial Naive Bayes with add-one smoothing, estimated on the
-      // even-id half's (lang, token) counts, classifying the odd half —
-      // the generative complement of g_logit_train and the trained
-      // sibling of the heuristic g_lang_id. Per-(doc, class) scores are
-      // pure decimals (ln quantized before the exact sum, no division
-      // after), so the argmax and its tie-break replay bit-identically.
-      val d = Tables.documents(s, dir)
-      TextOps.nbTrainScore(
-          d.filter(col("doc_id") % 2 === 1), d.filter(col("doc_id") % 2 === 0))
-        .orderBy(col("doc_id"))
-    },
-
-    "q_stream_nb" -> { (s, dir) => // maintained NB model, oracle side:
-      // nbCountsStream lands the LM half's class-token and class-doc
-      // counts as source-tagged deltas (NB evidence is additive — the
-      // knCountsStream discipline, not a global-schedule refresh),
-      // compactNbCounts folds both roots, and classifying the odd half
-      // against the folded model must be bit-equal to the batch
-      // g_nb_langid (shared oracle hash).
-      val out = scratchDir("q_stream_nb")
-      val src = stream(s, dir, "documents")
-        .filter(col("doc_id") % 2 === 0)
-      drain(s, dir, "documents")(graft.streaming.StreamingOps
-        .nbCountsStream(src, s"$out/idx", s"$out/ckpt"))
-      graft.streaming.StreamingOps.compactNbCounts(s, s"$out/idx")
-      val (ncw, cls) = graft.streaming.StreamingOps.readNbCounts(s, s"$out/idx")
-      TextOps.nbScore(
-          Tables.documents(s, dir).filter(col("doc_id") % 2 === 1), ncw, cls)
-        .orderBy(col("doc_id"))
-    },
-
-    "g_zipf_fit" -> { (s, dir) => // corpus-health diagnostic: per-lang
-      // OLS slope/intercept of ln(freq) vs ln(rank) over the top-100
-      // token types (natural text ~ slope −1; flat/steep slopes flag
-      // templated or degenerate sources). Exact rank cut, quantized
-      // logs, exact decimal OLS sums, fixed-shape double closed form —
-      // the oracle replays all of it. Windows run over the Zipf-bounded
-      // TYPE frame only.
-      TextOps.zipfFit(Tables.documents(s, dir), topN = 100)
-        .orderBy(col("lang"))
-    },
-
-    "g_mink_prob" -> { (s, dir) => // min-K% probability membership
-      // signal (Shi et al. 2024): per eval doc, the mean of its 20%
-      // lowest token log-probs under the train half's add-one unigram
-      // LM — the model-side memorization audit next to g_novelty's
-      // n-gram one. Value-cutoff selection over the per-(doc, lp)
-      // multiplicity frame (tie-straddling is sum-unique), quantized
-      // ln, one division; the oracle replays LM, cutoff, and boundary
-      // arithmetic.
-      val d = Tables.documents(s, dir)
-      TextOps.minKProb(
-          d.filter(col("doc_id") % 2 === 1), d.filter(col("doc_id") % 2 === 0),
-          kPercent = 20)
-        .orderBy(col("doc_id"))
-    },
-
-    "g_novelty" -> { (s, dir) => // memorization audit: per eval doc, the
-      // fraction of its distinct 3-shingles NOT in the train half's
-      // shingle set — contamination's per-doc inverse (near-zero novelty
-      // = memorization suspect / leak). One shingle-keyed left join;
-      // string shingles here so the oracle replays exactly (hashed=true
-      // is the 8-byte production path, collision-only approximation).
-      val d = Tables.documents(s, dir)
-      CurationOps.noveltyScore(
-          d.filter(col("doc_id") % 2 === 1), d.filter(col("doc_id") % 2 === 0),
-          k = 3, hashed = false)
-        .orderBy(col("doc_id"))
-    },
-
-    "g_langid_eval" -> { (s, dir) => // the HEURISTIC language id through
-      // the same classEval pivot as g_nb_eval/g_nb_priors — the third
-      // point of the comparison triple (heuristic / trained NB /
-      // priors-only), on the same held-out odd-id half. The heuristic
-      // only ever guesses en/other, so the union class list keeps every
-      // label's recall row (zero where it never predicts).
-      val d = Tables.documents(s, dir).filter(col("doc_id") % 2 === 1)
-      TextOps.classEval(
-          TextOps.langId(d).select(col("doc_id"),
-            col("lang_label").as("label"), col("lang_guess").as("pred")))
-        .orderBy(col("class"))
-    },
-
-    "g_nb_eval" -> { (s, dir) => // the NB train→evaluate loop closed the
-      // way g_logit_eval closed the logit loop: the g_nb_langid argmax
-      // joined back to the held-out labels and reduced to per-class
-      // one-vs-rest confusion counts + precision/recall/F1 and the
-      // macro-F1 (floored-F1 mean over exact decimals). The oracle
-      // replays the ENTIRE pipeline — model counts, smoothing, argmax
-      // tie-break, confusion pivot — so a drifted probability anywhere
-      // moves a doc across a class boundary and flips the counts.
-      val d = Tables.documents(s, dir)
-      val scored = TextOps.nbTrainScore(
-        d.filter(col("doc_id") % 2 === 1), d.filter(col("doc_id") % 2 === 0))
-      TextOps.classEval(scored
-          .join(d.select(col("doc_id"), col("lang").as("label")), Seq("doc_id")))
-        .orderBy(col("class"))
-    },
-
-    "g_ccnet_pipeline" -> { (s, dir) => // the CCNet stage boundary
-      // composed in ONE DAG (the g_pipeline_e2e discipline — each stage
-      // feeds the next's corpus): interpolated trigram-KN scoring of the
-      // crawl half under the clean half's LM (g_kn3_score's exact
-      // machinery) → per-domain top-half cut by avg_logprob through the
-      // salted scoreQuantileFilter → the kept corpus. The oracle replays
-      // BOTH stage boundaries, so a drifted trigram probability anywhere
-      // moves a doc across its domain's cut.
-      val d = Tables.documents(s, dir)
-      val scored = TextOps.kn3ScoreAgainst(
-          d.filter(col("doc_id") % 2 === 1), d.filter(col("doc_id") % 2 === 0),
-          minCount = GraftConf.int(s, GraftConf.KnMinCount, GraftConf.KnMinCountDefault).toLong)
-        .join(d.select(col("doc_id"), col("source")), Seq("doc_id"))
-      CurationOps.scoreQuantileFilter(scored, keepFrac = 0.5, saltBuckets = 4,
-          domainCol = "source", idCol = "doc_id", scoreCol = "avg_logprob")
-        .orderBy(col("doc_id"))
-    },
-
-    "g_oov_rate" -> { (s, dir) => // tokenizer-fit report: per-doc OOV
-      // fraction against the corpus top-100 vocabulary (deterministic
-      // count-desc/token-asc cut); vocab broadcasts, token stream never
-      // shuffles on the token key
-      TextOps.oovRate(Tables.documents(s, dir), vocabSize = 100).orderBy(col("doc_id"))
-    },
-
-    "g_hard_negatives" -> { (s, dir) => // contrastive-training hard
-      // negatives: per probe, top-10 most-similar DIFFERENT-label vectors
-      // (label inequality rides the broadcast join condition)
-      SimilarityOps.hardNegatives(
-          Tables.embeddings(s, dir),
-          Tables.embeddings(s, dir).filter(col("vec_id") < 5), k = 10)
-        .orderBy(col("probe_id"), col("rank"))
-    },
-
-    "g_bitext_margin" -> { (s, dir) => // margin-based bitext mining
-      // (Artetxe & Schwenk ratio margin) between the label-0 and label-1
-      // embedding sides: per left vector, the best right candidate by
-      // cos normalized against both k-NN neighborhood means. Fixed-point
-      // ingredients (floored-cos longs, integer neighborhood sums) make
-      // the score bit-exact cross-engine; the full-cross-product scoring
-      // is the definition truth (the scale path feeds the same margin
-      // from IVF candidates).
-      SimilarityOps.bitextMargin(Tables.embeddings(s, dir), leftLabel = 0, rightLabel = 1, k = 4)
-        .orderBy(col("x_id"))
-    },
-
-    "g_bitext_ivf" -> { (s, dir) => // the bitext scale path: IVF-cell
-      // candidate generation (right side lands in its cell, left probes
-      // ALL cells here) feeding the identical margin/argmax tail —
-      // probe-all == the exact cross-product definition row-for-row, so
-      // the shared oracle hash certifies the equi-join candidate path is
-      // lossless (the g_sim_ivf losslessness contract for bitext).
-      // Reduced-probe behavior is BitextIvfSpec's job.
-      SimilarityOps.bitextMarginIvf(Tables.embeddings(s, dir),
-          leftLabel = 0, rightLabel = 1,
-          centroids = fixtureCentroids(64), nProbe = KmFixtureK, k = 4)
-        .orderBy(col("x_id"))
-    },
-
-    "g_decontam_semantic" -> { (s, dir) => // embedding-level
-      // decontamination, the semantic sibling of the n-gram
-      // g_contamination: each eval-side vector's nearest train-side
-      // vector by cosine + a threshold flag — paraphrased leakage that
-      // n-gram overlap misses. Fixed-point floored-cos argmax with
-      // (sim desc, id asc) tie-break; the full cross product is the
-      // definition truth (the g_embed_pairs quadratic-budget class).
-      SimilarityOps.crossMaxCosine(Tables.embeddings(s, dir),
-          evalLabel = 0, trainLabel = 1, threshold = 0.3)
-        .orderBy(col("eval_id"))
-    },
-
-    "g_decontam_ivf" -> { (s, dir) => // the decontamination scale path:
-      // train vectors land in their IVF cell, eval vectors probe ALL
-      // cells here — probe-all == the exact definition row-for-row
-      // (shared oracle hash = the losslessness gate); production probes
-      // fewer cells for candidate-sized joins instead of the cross
-      // product.
-      SimilarityOps.crossMaxCosineIvf(Tables.embeddings(s, dir),
-          evalLabel = 0, trainLabel = 1, threshold = 0.3,
-          centroids = fixtureCentroids(64), nProbe = KmFixtureK)
-        .orderBy(col("eval_id"))
-    },
-
-    "g_length_quantiles" -> { (s, dir) => // corpus length distribution
-      val fl = (c: org.apache.spark.sql.Column) =>
-        graft.functions.NumFns.floorAt(c, 4)
-      Tables.documents(s, dir)
-        .groupBy(col("lang"))
-        .agg(
-          count(lit(1)).as("n_docs"),
-          fl(expr("percentile(n_chars, 0.25)")).as("q25"),
-          fl(expr("percentile(n_chars, 0.5)")).as("q50"),
-          fl(expr("percentile(n_chars, 0.75)")).as("q75"))
-        .orderBy(col("lang"))
-    },
-
-    "g_fingerprints" -> { (s, dir) => // md5 content fingerprint (oracle-able)
-      Tables.documents(s, dir)
-        .select(col("doc_id"), md5(lower(col("text"))).as("md5_norm"))
-        .orderBy(col("doc_id"))
-    },
-
-    "g_fingerprints_rolling" -> { (s, dir) => // rolling fingerprint, oracle-
-      // gated via the char-level polynomial variant (identical fold in
-      // DuckDB list_reduce); the xxhash token fold stays engine-local
-      // (TextVectorFnsSpec)
-      TextOps.fingerprints(Tables.documents(s, dir))
-        .select(col("doc_id"), col("poly_fp"))
-        .orderBy(col("doc_id"))
-    },
-
-    "g_multimodal_meta" -> { (s, dir) => // binary column metadata
-      MultimodalOps.mediaMeta(MultimodalOps.mediaFromDocuments(Tables.documents(s, dir)))
-        .select(col("media_id"), col("byte_len"), col("content_md5"))
-        .orderBy(col("media_id"))
-    },
-
-    "g_multimodal_decode" -> { (s, dir) => // stubbed decode features through
-      // the mapPartitions codec seam — oracle-gated: the pseudo-features
-      // are byte statistics of the (ASCII) blob, which the oracle
-      // recomputes from codepoints; all ratios are exact integer quotients
-      // (sums < 2^53), so direct equality holds without flooring
-      MultimodalOps.decodeStub(MultimodalOps.mediaFromDocuments(Tables.documents(s, dir)))
-        .orderBy(col("media_id"))
-    },
-
-    // ---- Temporal joins (as-of / bucketized range) --------------------
-    "q_asof_lastview" -> { (s, dir) => // latest prior 'view' per 'purchase'
-      val ev = Tables.events(s, dir)
-      val probe = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts_us"))
-      // pre-reduce the reference side to one row per (key, ts) — as-of tie
-      // determinism (see TemporalOps.asOfJoin)
-      val ref = ev.filter(col("event_type") === "view")
-        .groupBy(col("user_id"), col("ts_us"))
-        .agg(max(col("event_id")).as("view_event_id"))
-      TemporalOps.asOfJoin(probe, ref, "user_id", "ts_us", Seq("view_event_id", "ts_us"))
-        .select(col("event_id"), col("user_id"), col("ts_us"),
-          col("asof_view_event_id").as("view_event_id"),
-          col("asof_ts_us").as("view_ts_us"),
-          (col("ts_us") - col("asof_ts_us")).as("gap_us"))
-        .orderBy(col("event_id"))
-    },
-
-    "q_range_activity" -> { (s, dir) => // events within ±30min of each error
-      val ev = Tables.events(s, dir)
-      val probes = ev.filter(col("event_type") === "error")
-        .select(col("event_id").as("anchor_id"), col("user_id"),
-          (col("ts_us") - 1800000000L).as("lo"), (col("ts_us") + 1800000000L).as("hi"))
-      TemporalOps.rangeJoin(
-          probes, ev.select(col("user_id"), col("ts_us")),
-          "user_id", "lo", "hi", "ts_us", bucketWidth = 3600000000L)
-        .groupBy(col("anchor_id"), col("user_id"))
-        .agg(count(lit(1)).as("n_nearby"))
-        .orderBy(col("anchor_id"))
-    },
-
-    // ---- Corpus curation (§G training-data pipeline) ------------------
-    "g_contamination" -> { (s, dir) => // eval-set 3-gram overlap check
-      val docs = Tables.documents(s, dir)
-      val evalSet = docs.filter(pmod(col("doc_id"), lit(97)) === 0)
-      val train = docs.filter(pmod(col("doc_id"), lit(97)) =!= 0)
-      // hashed=false: exact shingle strings, oracle-checkable; production
-      // runs hashed=true (8-byte shingle hashes through the shuffle)
-      CurationOps.contamination(train, evalSet, k = 3, hashed = false)
-        .orderBy(col("doc_id"))
-    },
-
-    "g_repetition" -> { (s, dir) => // duplicate-3-gram ratio per doc
-      CurationOps.repetitionRatio(Tables.documents(s, dir), k = 3, hashed = false)
-        .orderBy(col("doc_id"))
-    },
-
-    "g_token_packing" -> { (s, dir) => // 2048-token training-shard packing
-      CurationOps.tokenPacking(Tables.documents(s, dir), capacity = 2048L)
-        .orderBy(col("lang"), col("doc_id"))
-    },
-
-    "g_pack_sequences" -> { (s, dir) => // the materialized shards: one row
-      // per (stratum, bin) with documents concatenated in id order — the
-      // physical sequence a trainer reads; in-group order imposed by
-      // sort_array, not shuffle order
-      CurationOps.packedSequences(Tables.documents(s, dir), capacity = 2048L)
-        .orderBy(col("lang"), col("bin"))
-    },
-
-    "g_mixture_sample" -> { (s, dir) => // alpha-mixture re-weighting
-      // (alpha = 0.5): per-source acceptance rates + realized sample sizes
-      CurationOps.mixtureSample(Tables.documents(s, dir))
-        .groupBy(col("source"), col("n_docs"), col("rate_ppm"))
-        .agg(count(when(col("sampled"), 1)).as("n_sampled"))
-        .orderBy(col("source"))
-    },
-
-    "g_mixture_temp" -> { (s, dir) => // temperature-scaled mixture
-      // (alpha = 0.75 via two nested sqrts — IEEE-exact in both engines,
-      // unlike a libm pow): per-source rates + realized sample sizes
-      CurationOps.temperatureSample(Tables.documents(s, dir), sqrtDepth = 2)
-        .groupBy(col("source"), col("n_docs"), col("rate_ppm"))
-        .agg(count(when(col("sampled"), 1)).as("n_sampled"))
-        .orderBy(col("source"))
-    },
-
-    "g_split_stratified" -> { (s, dir) => // deterministic train/val/test split
-      CurationOps.stratifiedSplit(Tables.documents(s, dir))
-        .orderBy(col("lang"), col("split"))
-    },
-
-    "g_split_safe" -> { (s, dir) => // leakage-safe split: near-dup clusters
-      // (star CC over the oracle-equal MinHash pair list) land on ONE side
-      // atomically — the side is the shuffleShards permutation of the
-      // cluster representative, so a near-duplicate pair can never
-      // straddle train/test. Row-level: (doc_id, group_id, split) for
-      // every document; the oracle replays the recursive-CTE closure and
-      // the same BIGINT permutation.
-      val docs = Tables.documents(s, dir)
-      CurationOps.leakageSafeSplit(
-          docs,
-          DedupOps.nearDupClustersStar(DedupOps.minHashNearDups(docs, threshold = 0.5)))
-        .orderBy(col("doc_id"))
-    },
-
-    "g_train_shuffle" -> { (s, dir) => // deterministic training-order
-      // shuffle: multiplicative permutation mod 2^31-1 assigns every doc
-      // a reproducible pseudo-random sort key + hash shard, map-only (the
-      // global order is declared by the key, never materialized by a
-      // sort). Overflow-safe for any id, so Spark's wrapping int64 and
-      // DuckDB's trapping int64 agree bit-for-bit.
-      CurationOps.shuffleShards(Tables.documents(s, dir), nShards = 8)
-        .select(col("doc_id"), col("sort_key"), col("shard"))
-        .orderBy(col("doc_id"))
-    },
-
-    "g_pack_spans" -> { (s, dir) => // GPT-style concat-and-chunk packing:
-      // the corpus in doc_id order becomes one token stream; 128-token
-      // sequences own contiguous slices; every doc emits one span row per
-      // sequence it crosses (seq_pos / doc_start / len — the manifest a
-      // loader builds input ids and attention-reset masks from) and the
-      // trailing partial sequence is dropped. Two-phase chunked prefix
-      // sum; the sequence-count denominator is a 1-row broadcast (no
-      // driver action).
-      AssemblyOps.packTokenSpans(Tables.documents(s, dir), seqLen = 128L)
-        .orderBy(col("seq_id"), col("seq_pos"))
-    },
-
-    "g_epoch_expand" -> { (s, dir) => // UniMax epochs materialized (the
-      // "applied at training time" half unimaxSelect defers): each
-      // source's docs repeat alloc DIV n full epochs; the remainder is
-      // filled by the minimal shuffle-order prefix (boundary kept) at
-      // epoch = full. budget 40000 / cap 3 exercises both paths at the
-      // oracle SFs (alloc ≈ 2000/source vs ~1300-token sources).
-      AssemblyOps.epochExpand(Tables.documents(s, dir),
-          budgetTokens = 40000L, epochCap = 3)
-        .orderBy(col("doc_id"), col("epoch"))
-    },
-
-    "g_train_manifest" -> { (s, dir) => // the composed assembly DAG:
-      // allocation → epoch expansion → deterministic interleave of
-      // (doc, epoch) instances (permutation of eid = id*4 + epoch,
-      // pre-shifted by seed+1) → 128-token packing. The oracle replays
-      // all four stages;
-      // drift in ANY of them flips this row even if their own rows stay
-      // green.
-      AssemblyOps.trainManifest(Tables.documents(s, dir),
-          budgetTokens = 40000L, epochCap = 3, seqLen = 128L)
-        .orderBy(col("seq_id"), col("seq_pos"))
-    },
-
-    "g_pack_binned" -> { (s, dir) => // truncation-free length-binned
-      // packing: docs grouped by exact token count n, cap = 64 DIV n
-      // whole docs per sequence at positions slot*n, filled in
-      // shuffle-permutation order; docs with n > 64 excluded (the
-      // fixture's 10-99 token range exercises both paths). Two-phase
-      // ranks (chunked permutation ranges); only the bounded
-      // distinct-lengths frame sees an unpartitioned window.
-      AssemblyOps.packBinned(Tables.documents(s, dir), seqLen = 64L)
-        .orderBy(col("seq_id"), col("seq_pos"))
-    },
-
-    "g_phrase" -> { (s, dir) => // exact consecutive-phrase occurrences by
-      // anchor-grouping: each (term i, position) match votes for anchor
-      // pos - i; q votes = one occurrence — overlapping matches ("order
-      // order order" holds two) and repeated terms need no special
-      // casing. Token explode -> broadcast 2-row phrase join -> ONE
-      // (doc, anchor) shuffle; no q-way positional self-join.
-      RetrievalOps.phraseMatches(Tables.documents(s, dir), Seq("order", "order"))
-        .orderBy(col("doc_id"))
-    },
-
-    "g_bm25_phrase" -> { (s, dir) => // BM25 ranking among exact-phrase
-      // matches: corpus-wide df/idf stats (a phrase FILTER must not
-      // change scores), left-semi restriction to the phrase doc set,
-      // top-10 by (score desc, id).
-      RetrievalOps.bm25PhraseTopK(Tables.documents(s, dir), Bm25Query,
-        Seq("order", "order"), k = GraftConf.int(s, GraftConf.RetrievalK, 10))
-    },
-
-    "g_phrase_indexed" -> { (s, dir) => // phrase matching served from the
-      // POSITIONAL postings index: the probe reads ONLY the phrase
-      // terms' pt directories and explodes their stored positions into
-      // the same anchor vote — posting-list cost, never a corpus scan.
-      // Contract: bit-equal to the full-scan g_phrase (shared oracle
-      // hash); the ONE index serves both BM25 (positions pruned away)
-      // and phrases.
-      val path = scratchDir("posidx") + "/idx"
-      RetrievalOps.writePostingsIndex(Tables.documents(s, dir), path,
-        GraftConf.int(s, GraftConf.PostingsNPt, 16))
-      RetrievalOps.phraseMatchesIndexed(s, path, Seq("order", "order"))
-        .orderBy(col("doc_id"))
-    },
-
-    "g_assembly_e2e" -> { (s, dir) => // the curation -> assembly DAG in
-      // ONE oracle row: exact dedup (min-id representative per distinct
-      // text) -> curriculum rank strata (2 TTR buckets) -> 128-token
-      // packing in (bucket, permutation) order -> 8-sequence loader
-      // shards with checksums. The replay crosses all three stage
-      // boundaries (survivor set, bucket assignment, stream offsets), so
-      // drift in ANY stage flips this row even if each stage's own row
-      // stays green — the g_pipeline_e2e discipline for assembly.
-      val docs = Tables.documents(s, dir)
-      val keep = DedupOps.exact(docs).select(col("keep_id").as("doc_id"))
-      val survivors = docs.join(keep, Seq("doc_id"), "left_semi")
-      AssemblyOps.shardManifest(
-          AssemblyOps.curriculumManifest(survivors, nBuckets = 2, seqLen = 128L),
-          seqsPerShard = 8L)
-        .orderBy(col("shard"))
-    },
-
-    "g_bm25_faceted" -> { (s, dir) => // faceted retrieval: the top 3 docs
-      // of EVERY source by BM25 — corpus-wide scoring (facets must not
-      // change idf), one doc-keyed facet join, one window PARTITIONED by
-      // source (each facet ranks in its own tasks).
-      RetrievalOps.bm25FacetedTopK(Tables.documents(s, dir), Bm25Query,
-          perSource = 3)
-        .orderBy(col("source"), col("rank"))
-    },
-
-    "g_snippets" -> { (s, dir) => // deterministic hit snippets: the
-      // 3-token context around the earliest occurrence of any query term
-      // in every matching doc — pure per-row codegen (array_position /
-      // slice / array_join), map-only at any corpus size.
-      RetrievalOps.snippets(Tables.documents(s, dir), Bm25Query, window = 3)
-        .orderBy(col("doc_id"))
-    },
-
-    "g_serve_lexical" -> { (s, dir) => // the composed lexical serving
-      // stack, hash-gated end to end with NO corpus scan anywhere:
-      // scoring stats, posting lists, and phrase adjacency all from the
-      // ONE positional index — query cost is posting-list-sized.
-      // Contract: bit-equal to the full-scan g_bm25_phrase (shared
-      // oracle hash).
-      val path = scratchDir("servelex") + "/idx"
-      RetrievalOps.writePostingsIndex(Tables.documents(s, dir), path,
-        GraftConf.int(s, GraftConf.PostingsNPt, 16))
-      RetrievalOps.bm25PhraseTopKIndexed(s, path, Bm25Query, Seq("order", "order"),
-        k = GraftConf.int(s, GraftConf.RetrievalK, 10))
-    },
-
-    "g_frame_dedup" -> { (s, dir) => // cross-media frame-level dedup:
-      // sampled-frame digests colliding across >= 2 distinct media rows
-      // (re-encoded/re-muxed copies share frame content even when
-      // container bytes differ). One digest-keyed map-side-combined
-      // shuffle; output sized by the duplicate set.
-      MultimodalOps.frameDups(
-          MultimodalOps.mediaFromDocuments(Tables.documents(s, dir)),
-          frameBytes = 16, fps = 4, k = 8)
-        .orderBy(col("frame_md5"))
-    },
-
-    "g_frame_sample" -> { (s, dir) => // deterministic frame sampling over
-      // the fake media column (16-byte "frames", 4 fps, up to 8 samples):
-      // midpoint-of-strata indices — strictly increasing, never
-      // frame-0-biased — with byte offsets, timestamps, and the sliced
-      // frame digest. Map-only: bounded explode + codegen substring/md5.
-      MultimodalOps.frameSampleManifest(
-          MultimodalOps.mediaFromDocuments(Tables.documents(s, dir)),
-          frameBytes = 16, fps = 4, k = 8)
-        .orderBy(col("media_id"), col("frame_ix"))
-    },
-
-    "g_frame_phash" -> { (s, dir) => // perceptual frame near-dups: the
-      // integer 8x8 DCT pHash over 64-byte stub-decoded frames (shared
-      // quantized-cosine basis, 63 AC sign-vs-median bits), paired
-      // across distinct media by the 7x9-bit banded Hamming join
-      // (pigeonhole-complete at dist <= 3, candidate-sized shuffle,
-      // never all-pairs). The oracle recomputes every hash from the
-      // SAME basis constants and takes the brute-force pair truth the
-      // banded join must equal losslessly. Parameters come through the
-      // GraftConf seam (defaults = the oracle's constants, so an unset
-      // conf is byte-identical; a retuned run fails LOUD on the hash).
-      MultimodalOps.framePhashPairs(
-          MultimodalOps.mediaFromDocuments(Tables.documents(s, dir)),
-          fps = GraftConf.int(s, GraftConf.PhashFps, 4),
-          k = GraftConf.int(s, GraftConf.PhashK, 8),
-          maxDist = GraftConf.int(s, GraftConf.PhashMaxDist, 3, min = 0))
-        .orderBy(col("media_a"), col("frame_a"), col("media_b"), col("frame_b"))
-    },
-
-    "g_phash_media" -> { (s, dir) => // the media-level rollup a video
-      // dedup acts on: media pairs with >= 2 near-duplicate sampled
-      // frames (one match is noise, a run is a re-encoded copy or a
-      // shared segment), with the pair count, the closest distance, and
-      // the temporal-alignment vote (modal frame offset + how many pairs
-      // share it — a re-encode aligns, a shared intro scatters).
-      MultimodalOps.mediaPhashDups(
-          MultimodalOps.mediaFromDocuments(Tables.documents(s, dir)),
-          fps = GraftConf.int(s, GraftConf.PhashFps, 4),
-          k = GraftConf.int(s, GraftConf.PhashK, 8),
-          maxDist = GraftConf.int(s, GraftConf.PhashMaxDist, 3, min = 0),
-          minFrames = GraftConf.int(s, GraftConf.PhashMinFrames, 2))
-        .orderBy(col("media_a"), col("media_b"))
-    },
-
-    "g_phash_indexed" -> { (s, dir) => // the daily-crawl video-dedup
-      // shape: the corpus' banded frame hashes persist once
-      // (writePhashIndex — the writeMinHashIndex discipline, fps/k/
-      // nBuckets pinned in _meta.json), and each increment probes the
-      // INDEX instead of re-hashing the corpus: a (band_ix, bucket,
-      // band) equi-join, candidate-sized, exact bit_count rescore,
-      // >= 2-frame rollup. The oracle is the brute-force cross-split
-      // truth — a green row certifies the banded join lossless at the
-      // radius AND the persisted layout read back bit-exact.
-      val media = MultimodalOps.mediaFromDocuments(Tables.documents(s, dir))
-      val out = scratchDir("phash_idx")
-      val nb = GraftConf.int(s, GraftConf.PhashBuckets, 16)
-      val (fps, k) = (GraftConf.int(s, GraftConf.PhashFps, 4),
-        GraftConf.int(s, GraftConf.PhashK, 8))
-      MultimodalOps.writePhashIndex(
-        media.filter(col("media_id") % 5 =!= 0), s"$out/idx",
-        fps = fps, k = k, nBuckets = nb)
-      MultimodalOps.mediaPhashDupsIndexed(
-          media.filter(col("media_id") % 5 === 0), s"$out/idx",
-          fps = fps, k = k,
-          maxDist = GraftConf.int(s, GraftConf.PhashMaxDist, 3, min = 0),
-          minFrames = GraftConf.int(s, GraftConf.PhashMinFrames, 2),
-          nBuckets = nb)
-        .orderBy(col("media_new"), col("media_corpus"))
-    },
-
-    "q_stream_phash" -> { (s, dir) => // streaming pHash-index
-      // maintenance, oracle side: an AvailableNow run of
-      // phashIndexStream hashes and bands the corpus split into the
-      // versioned (band_ix, bucket) layout, and the increment probed
-      // against the STREAMED index must equal the same brute-force
-      // cross-split truth as g_phash_indexed (the DCT hash is
-      // deterministic, so a streamed corpus indexes identically to a
-      // batch-built one). Cross-batch replay/fold semantics are the
-      // shared versioned-sink specs' job.
-      val out = scratchDir("q_stream_phash")
-      val src = stream(s, dir, "documents")
-        .filter(col("doc_id") % 5 =!= 0)
-        .select(col("doc_id").as("media_id"),
-          to_binary(col("text"), lit("utf-8")).as("content"))
-      val nb = GraftConf.int(s, GraftConf.PhashBuckets, 16)
-      drain(s, dir, "documents")(graft.streaming.StreamingOps
-        .phashIndexStream(src, s"$out/idx", s"$out/ckpt",
-          fps = GraftConf.int(s, GraftConf.PhashFps, 4),
-          k = GraftConf.int(s, GraftConf.PhashK, 8), nBuckets = nb))
-      val media = MultimodalOps.mediaFromDocuments(Tables.documents(s, dir))
-      MultimodalOps.mediaPhashDupsIndexed(
-          media.filter(col("media_id") % 5 === 0), s"$out/idx",
-          fps = GraftConf.int(s, GraftConf.PhashFps, 4),
-          k = GraftConf.int(s, GraftConf.PhashK, 8),
-          maxDist = GraftConf.int(s, GraftConf.PhashMaxDist, 3, min = 0),
-          minFrames = GraftConf.int(s, GraftConf.PhashMinFrames, 2),
-          nBuckets = nb)
-        .orderBy(col("media_new"), col("media_corpus"))
-    },
-
-    "g_phash_cc" -> { (s, dir) => // video dedup completed: the pHash
-      // media rollup's pairs feed the SAME alternating-star CC +
-      // canonical election the text near-dups use — re-encoded copies
-      // and shared-segment media cluster, each cluster keeps its longest
-      // member (ties → lowest id), untouched media keep themselves. The
-      // oracle closes the brute-force pair truth recursively and replays
-      // the election, so a drifted DCT bit anywhere re-shapes a cluster.
-      val docs = Tables.documents(s, dir)
-      val pairs = MultimodalOps.mediaPhashDups(
-          MultimodalOps.mediaFromDocuments(docs),
-          fps = GraftConf.int(s, GraftConf.PhashFps, 4),
-          k = GraftConf.int(s, GraftConf.PhashK, 8),
-          maxDist = GraftConf.int(s, GraftConf.PhashMaxDist, 3, min = 0),
-          minFrames = GraftConf.int(s, GraftConf.PhashMinFrames, 2),
-          alignment = false) // ids feed the components; skip the vote
-        .select(col("media_a").as("id1"), col("media_b").as("id2"))
-      DedupOps.canonicalPerCluster(docs,
-          DedupOps.nearDupClustersStar(pairs))
-        .orderBy(col("doc_id"))
-    },
-
-    "g_phash_cc_incr" -> { (s, dir) => // incremental video clusters, the
-      // daily-crawl steady state (g_dedup_cc_incr's shape for media):
-      // the prior assignment is star CC over corpus-only media pairs,
-      // derived from a SELF-join of the persisted index (the index IS
-      // the corpus' hash state — the corpus bytes are decoded and
-      // hashed exactly once, at index build); today's increment probes
-      // the same index for its cross pairs, adds its increment-internal
-      // pairs, and nearDupClustersIncremental merges — which must equal
-      // the full-recompute component truth (g_phash_cc's oracle
-      // verbatim: one truth, one hash), followed by the same canonical
-      // election.
-      val docs = Tables.documents(s, dir)
-      val media = MultimodalOps.mediaFromDocuments(docs)
-      val corpus = media.filter(col("media_id") % 5 =!= 0)
-      val inc = media.filter(col("media_id") % 5 === 0)
-      val out = scratchDir("phash_cc_incr")
-      val nb = GraftConf.int(s, GraftConf.PhashBuckets, 16)
-      val (fps, k) = (GraftConf.int(s, GraftConf.PhashFps, 4),
-        GraftConf.int(s, GraftConf.PhashK, 8))
-      val maxDist = GraftConf.int(s, GraftConf.PhashMaxDist, 3, min = 0)
-      val minFrames = GraftConf.int(s, GraftConf.PhashMinFrames, 2)
-      MultimodalOps.writePhashIndex(corpus, s"$out/idx",
-        fps = fps, k = k, nBuckets = nb)
-      // after the index lands, the prior star-CC loop and the increment's
-      // pair derivations (cross probe + increment-internal pairs) are
-      // independent eager chains — overlap them (guide §2.6); the pinned
-      // pair frame also keeps the incremental loop from re-deriving the
-      // decode+hash pipeline inside its own canon pin
-      val chains = graft.operators.Par.run(s, parallelism = 2)(
-        () => DedupOps.nearDupClustersStar(
-          MultimodalOps.mediaPhashDupsFromIndex(s, s"$out/idx",
-              maxDist = maxDist, minFrames = minFrames, alignment = false)
-            .select(col("media_a").as("id1"), col("media_b").as("id2"))),
-        () => {
-          val crossPairs = MultimodalOps.mediaPhashDupsIndexed(inc, s"$out/idx",
-              fps = fps, k = k, maxDist = maxDist, minFrames = minFrames,
-              nBuckets = nb, alignment = false)
-            .select(col("media_new").as("id1"), col("media_corpus").as("id2"))
-          val incPairs = MultimodalOps.mediaPhashDups(inc,
-              fps = fps, k = k, maxDist = maxDist, minFrames = minFrames,
-              alignment = false)
-            .select(col("media_a").as("id1"), col("media_b").as("id2"))
-          graft.operators.Checkpoints.pin(
-            crossPairs.unionByName(incPairs), reliable = false)
-        })
-      val (prior, freshPairs) = (chains(0), chains(1))
-      DedupOps.canonicalPerCluster(docs,
-          DedupOps.nearDupClustersIncremental(prior, freshPairs))
-        .orderBy(col("doc_id"))
-    },
-
-    "g_media_card" -> { (s, dir) => // the multimodal release report: per
-      // source, the media/byte/frame tallies, the chunk-store dedup
-      // evidence (total vs DISTINCT content-addressed chunks), and the
-      // pHash cluster mass (media in >= 2-frame near-dup pairs). The
-      // oracle replays the byte-CDC chunking fold, counts distinct chunk
-      // contents (sha-distinct == content-distinct), and derives the
-      // cluster mass from the shared brute-force pair truth.
-      MultimodalOps.mediaCard(Tables.documents(s, dir))
-        .orderBy(col("source"))
-    },
-
-    "q_stream_media_card" -> { (s, dir) => // the multimodal release
-      // report MAINTAINED: an AvailableNow run lands slim per-batch
-      // evidence (source-tagged sums, distinct chunk addresses, the
-      // banded frame index, newly-discovered dup endpoints) and the
-      // read-side assembly must equal the batch mediaCard over the same
-      // corpus — g_media_card's oracle verbatim ("one truth, one hash").
-      // Cross-batch pair discovery / replay / fold are
-      // MediaCardStreamSpec's job.
-      val out = scratchDir("q_stream_mcard")
-      val src = stream(s, dir, "documents")
-        .select(col("doc_id"), col("source"), col("text"))
-      drain(s, dir, "documents")(graft.streaming.StreamingOps
-        .mediaCardStream(src, s"$out/card", s"$out/ckpt", nBuckets = 16))
-      graft.streaming.StreamingOps.readMediaCard(s, s"$out/card")
-        .orderBy(col("source"))
-    },
-
-    "q_forget_everywhere" -> { (s, dir) => // the composed compliance
-      // delete (reference A5/A7 delete semantics composed across every
-      // derived artifact, the per-table way the reference's callers
-      // compose them): ONE id set is tombstoned from the versioned doc
-      // log AND every artifact derived from the corpus — LSH bands,
-      // shingle counts, postings, pHash index, chunk store (+GC), the
-      // k-NN graph, the near-dup cluster assignment, and a schedule
-      // sink's evidence + served manifest. The gate is the one-truth
-      // discipline: every artifact's post-forget READBACK is diffed
-      // row-level against a from-scratch REBUILD over the corpus minus
-      // the ids (n_diff must be 0 — the oracle pins it, plus each
-      // readback's expected size from its own independent derivation).
-      // At bench SFs the world samples down (the sampled-recall
-      // protocol); the oracle SFs gate the full corpus.
-      import graft.operators._
-      import graft.streaming.StreamingOps
-      val full = Tables.documents(s, dir)
-      val cells = 16
-      // pin the world's inputs ONCE: ~40 actions (writes, rebuilds,
-      // readback diffs) follow, and every unpinned reuse would re-scan
-      // the corpus parquet per action. The doc-side pins and the
-      // embedding-side pins + Lloyd training are INDEPENDENT eager
-      // chains — overlap the pre-work like the faces below (guide §2.6)
-      val pre = graft.operators.Par.run[Any](s, parallelism = 2)(
-        () => {
-          val docs = graft.operators.Checkpoints.pin(
-            if (oracleScale(dir)) full else full.filter(col("doc_id") % 16 === 0),
-            reliable = false)
-          (docs,
-            docs.filter(col("doc_id") % 97 === 3).localCheckpoint(true),
-            docs.filter(col("doc_id") % 97 =!= 3).localCheckpoint(true))
-        },
-        () => {
-          val allEmb = Tables.embeddings(s, dir)
-          val emb = graft.operators.Checkpoints.pin(
-            if (oracleScale(dir)) allEmb
-            else allEmb.filter(col("vec_id") % 32 === 0), reliable = false)
-          (emb,
-            emb.filter(col("vec_id") % 97 =!= 3).localCheckpoint(true),
-            SimilarityOps.ivfCentroids(emb, k = cells, nIters = 2))
-        })
-      type DF = org.apache.spark.sql.DataFrame
-      val (docs, ids, kept) = pre(0).asInstanceOf[(DF, DF, DF)]
-      val dead = ids.select(col("doc_id"))
-      val out = scratchDir("forget")
-      // ONE action per artifact: the readback count and the two-sided
-      // rebuild diff ride one union job (this row runs ~40 small jobs;
-      // per-job scheduling + AQE latency dominates its wall time, so the
-      // audit must not triple it)
-      def auditArm(readback: org.apache.spark.sql.DataFrame,
-          truth: org.apache.spark.sql.DataFrame): (Long, Long) = {
-        val counts = readback.select(lit("n").as("__k"))
-          .unionAll(readback.exceptAll(truth).select(lit("d").as("__k")))
-          .unionAll(truth.exceptAll(readback).select(lit("d").as("__k")))
-          .groupBy(col("__k")).agg(count(lit(1)).as("__c")).collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        (counts.getOrElse("n", 0L), counts.getOrElse("d", 0L))
-      }
-      // the rebuild-and-diff audit runs at the ORACLE SFs (where the gate
-      // verifies it); at bench SFs the row times the PRODUCTION shape —
-      // world build + forget + readback — and reports n_diff = -1 ("not
-      // audited here"): at 100 TB a compliance pass does not rebuild the
-      // corpus to check itself, and the ~20 extra rebuild/diff jobs would
-      // double the row's wall for no verified signal
-      val auditDiffs = oracleScale(dir)
-      // in-DAG scalar (the no-driver-count policy): one agg job, never an
-      // eager action a plan re-executes
-      def rowCount(df: org.apache.spark.sql.DataFrame): Long =
-        df.agg(count(lit(1))).collect()(0).getLong(0)
-      def arm(name: String, readback: org.apache.spark.sql.DataFrame,
-          truth: => org.apache.spark.sql.DataFrame): (String, Long, Long) =
-        if (auditDiffs) { val (n, d) = auditArm(readback, truth); (name, n, d) }
-        else (name, rowCount(readback), -1L)
-
-      // shared inputs, pinned/collected ONCE (in `pre` above) before the
-      // overlapped faces: the embeddings pin + trained centroids feed
-      // three faces, the media projections two
-      val (emb, embKept, fullCentroids) =
-        pre(1).asInstanceOf[(DF, DF, Seq[(Int, Seq[Double])])]
-      val embIds = emb.filter(col("vec_id") % 97 === 3).select(col("vec_id"))
-      val media = MultimodalOps.mediaFromDocuments(docs)
-      val keptMedia = MultimodalOps.mediaFromDocuments(kept)
-      val idsMedia = MultimodalOps.mediaFromDocuments(ids)
-      val lshCols = Seq("id", "band", "bandsig", "bucket")
-      val ptCols = Seq("tok", "doc_id", "tf", "positions")
-      val dlCols = Seq("doc_id", "dl")
-      val phCols = Seq("media_id", "frame_ix", "phash", "band_ix", "band", "bucket")
-      val sqCols = Seq("id", "codes", "cell")
-
-      // Every face is an independent write->forget->audit chain against
-      // its own $out subtree — a chain of many SMALL driver jobs whose
-      // scheduling latency dominates this row's wall time. Overlap the
-      // chains (guide §2.6, operators.Par): FIFO scheduling back-fills
-      // each chain's straggler tail with the next chain's tasks. Face
-      // contents (and the audit tuples) are unchanged — heaviest chains
-      // first so the pool's tail is short. Pool of 6 over the 11 chains:
-      // each chain is mostly small driver jobs, so 6 in flight still
-      // leaves cores for every job's tasks (A/B-measured vs 4, r21).
-      val audit = graft.operators.Par.run(s, parallelism = 6)(
-        // 7. exact k-NN graph: affected probes requeried vs full rebuild
-        () => {
-          val graph = SimilarityOps.knnGraph(emb, fullCentroids, k = 5,
-            nProbe = cells)
-          val knnBack = ForgetOps.forgetFromKnnGraph(graph, emb, embIds, k = 5)
-          // truth stays INSIDE arm()'s by-name argument: at bench SFs the
-          // rebuild arm (its driver-side k-means collect included) must
-          // never run — the row's production-shape contract
-          arm("knn_graph", knnBack,
-            SimilarityOps.knnGraph(embKept,
-              SimilarityOps.ivfCentroids(embKept, k = cells, nIters = 2), k = 5,
-              nProbe = cells))
-        },
-        // 8. near-dup cluster assignment: affected components re-closed
-        () => {
-          val pairs = DedupOps.minHashNearDups(docs, threshold = 0.5)
-            .select(col("id1"), col("id2")).localCheckpoint(true)
-          val pairsKept = pairs
-            .join(dead, col("id1") === col("doc_id"), "left_anti")
-            .join(dead, col("id2") === col("doc_id"), "left_anti")
-          val prior = DedupOps.nearDupClustersStar(pairs)
-          val ccBack = ForgetOps.forgetClusters(prior, pairsKept, dead)
-          arm("cluster_assign", ccBack,
-            DedupOps.nearDupClustersStar(pairsKept))
-        },
-        // 9. schedule sink (UniMax train manifest): evidence levels drop
-        // the ids, the newest served version re-manifests in place
-        () => {
-          val ddl = "doc_id LONG, source STRING, n_tokens LONG"
-          StreamingOps.manifestBatch(docs, 0L, s"$out/sched",
-            budgetTokens = 40000L, epochCap = 3, seqLen = 128L, refreshEvery = 1,
-            seed = 0L, nRanges = 64, sourceCol = "source", idCol = "doc_id",
-            textCol = "text")
-          ForgetOps.forgetFromSchedule(s, s"$out/sched", dead, ddl,
-            corpus => graft.operators.AssemblyOps.trainManifest(corpus, 40000L, 3,
-              128L, textCol = "n_tokens", nTokensCol = Some("n_tokens")))
-          val schedBack = StreamingOps.readTrainManifest(s, s"$out/sched")
-          arm("schedule_manifest", schedBack,
-            graft.operators.AssemblyOps.trainManifest(kept, 40000L, 3, 128L))
-        },
-        // 1. versioned doc log: bootstrap -> deleteAndPromote -> readback
-        () => {
-          val asEvents = (d: org.apache.spark.sql.DataFrame) => d.select(
-            col("doc_id").cast("string").cast("binary").as("id"),
-            lit(1).as("rev"), lit(0).as("pos"),
-            TimeFns.microsToFileTime(lit(0L)).as("ts"),
-            col("text").cast("binary").as("data"))
-          graft.sources.Generations.bootstrap(s, s"$out/log", asEvents(docs),
-            nBuckets = 16)
-          graft.sources.Generations.deleteAndPromote(s, s"$out/log",
-            asEvents(ids).select("id", "rev", "pos"), nBuckets = 16)
-          val logBack = graft.sources.Generations.readCurrent(s, s"$out/log")
-            .select(col("id").cast("string").cast("long").as("doc_id"),
-              col("data").cast("string").as("text"))
-          arm("doc_log", logBack, kept.select(col("doc_id"), col("text")))
-        },
-        // 2. LSH MinHash index: partition-pruned rewrite vs rebuild
-        () => {
-          DedupOps.writeMinHashIndex(docs, s"$out/lsh", nBuckets = 16)
-          ForgetOps.forgetFromLshIndex(s, s"$out/lsh", ids, nBuckets = 16)
-          if (auditDiffs) DedupOps.writeMinHashIndex(kept, s"$out/lsh2", nBuckets = 16)
-          val lshBack = s.read.parquet(s"$out/lsh").select(lshCols.map(col): _*)
-          arm("lsh_index", lshBack,
-            s.read.parquet(s"$out/lsh2").select(lshCols.map(col): _*))
-        },
-        // 3. shingle-count index: negative-count delta vs rebuild
-        () => {
-          TextOps.writeShingleIndex(docs, s"$out/sh", k = 3, nPb = 16, hashed = true)
-          ForgetOps.forgetFromShingleIndex(s, s"$out/sh", ids, k = 3, nPb = 16,
-            hashed = true)
-          if (auditDiffs)
-            TextOps.writeShingleIndex(kept, s"$out/sh2", k = 3, nPb = 16, hashed = true)
-          val shBack = TextOps.readShingleCounts(s, s"$out/sh", hashed = true)
-          arm("shingle_index", shBack,
-            TextOps.readShingleCounts(s, s"$out/sh2", hashed = true))
-        },
-        // 4. postings index (postings levels + _docs sidecar)
-        () => {
-          RetrievalOps.writePostingsIndex(docs, s"$out/pt", nPt = 16)
-          ForgetOps.forgetFromPostingsIndex(s, s"$out/pt", ids, nPt = 16)
-          if (auditDiffs) RetrievalOps.writePostingsIndex(kept, s"$out/pt2", nPt = 16)
-          val ptBack = s.read.parquet(s"$out/pt").select(ptCols.map(col): _*)
-          if (auditDiffs) {
-            val (ptN, ptD) = auditArm(ptBack,
-              s.read.parquet(s"$out/pt2").select(ptCols.map(col): _*))
-            val (_, dlD) = auditArm(
-              s.read.parquet(s"$out/pt/_docs").select(dlCols.map(col): _*),
-              s.read.parquet(s"$out/pt2/_docs").select(dlCols.map(col): _*))
-            ("postings_index", ptN, ptD + dlD)
-          } else ("postings_index", rowCount(ptBack), -1L)
-        },
-        // 5. banded pHash index
-        () => {
-          MultimodalOps.writePhashIndex(media, s"$out/ph", nBuckets = 16)
-          ForgetOps.forgetFromPhashIndex(s, s"$out/ph", idsMedia, nBuckets = 16)
-          if (auditDiffs)
-            MultimodalOps.writePhashIndex(keptMedia, s"$out/ph2", nBuckets = 16)
-          val phBack = s.read.parquet(s"$out/ph").select(phCols.map(col): _*)
-          arm("phash_index", phBack,
-            s.read.parquet(s"$out/ph2").select(phCols.map(col): _*))
-        },
-        // 6. content-addressed chunk store: recipes shrink, GC reclaims,
-        // the kept payloads still reassemble byte-exactly
-        () => {
-          MultimodalOps.writeChunkStore(media, s"$out/cs")
-          MultimodalOps.deleteFromChunkStore(s, s"$out/cs", idsMedia.select("media_id"))
-          if (auditDiffs) MultimodalOps.writeChunkStore(keptMedia, s"$out/cs2")
-          val digBack = MultimodalOps.readChunkStore(s, s"$out/cs")
-            .select(col("media_id"), md5(col("content")).as("content_md5"))
-          val digTruth = keptMedia.filter(octet_length(col("content")) > 0)
-            .select(col("media_id"), md5(col("content")).as("content_md5"))
-          if (auditDiffs) {
-            val (csN, csD) = auditArm(digBack, digTruth)
-            val (_, ckD) = auditArm(s.read.parquet(s"$out/cs/chunks"),
-              s.read.parquet(s"$out/cs2/chunks"))
-            val (_, rcD) = auditArm(s.read.parquet(s"$out/cs/recipes"),
-              s.read.parquet(s"$out/cs2/recipes"))
-            ("chunk_store", csN, csD + ckD + rcD)
-          } else
-            // bench shape: the digest-frame row count == distinct recipe
-            // media (one digest per media with >= 1 chunk) — same number
-            // without reassembling every payload
-            ("chunk_store", rowCount(s.read
-              .parquet(s"$out/cs/recipes").select(col("media_id")).distinct()),
-              -1L)
-        },
-        // 7b. persisted IVF-SQ8 vector store: the forgotten vectors' home
-        // cells rewrite under the FROZEN centroids (the seed contract);
-        // the readback equals a rebuild over the remaining vectors
-        () => {
-          SimilarityOps.writeSq8Index(emb, fullCentroids, s"$out/sq8")
-          ForgetOps.forgetFromCellIndex(s, s"$out/sq8",
-            emb.join(embIds, Seq("vec_id"), "left_semi"), fullCentroids)
-          if (auditDiffs)
-            SimilarityOps.writeSq8Index(embKept, fullCentroids, s"$out/sq82")
-          arm("sq8_index",
-            s.read.parquet(s"$out/sq8").select(sqCols.map(col): _*),
-            s.read.parquet(s"$out/sq82").select(sqCols.map(col): _*))
-        },
-        // 7c. persisted IVF-PQ codes store: the same home-cell rewrite one
-        // rung up the compression ladder (fixture geometry — cells from the
-        // shared 64-dim fixture centroids, codes from the fixture
-        // codebooks; the forget asserts the PQ sidecar, not the SQ8 one)
-        () => {
-          SimilarityOps.writePqIndex(emb, fixtureCentroids(64),
-            fixturePqCodebooks(64), s"$out/pq")
-          ForgetOps.forgetFromPqIndex(s, s"$out/pq",
-            emb.join(embIds, Seq("vec_id"), "left_semi"), fixtureCentroids(64),
-            fixturePqCodebooks(64))
-          if (auditDiffs)
-            SimilarityOps.writePqIndex(embKept, fixtureCentroids(64),
-              fixturePqCodebooks(64), s"$out/pq2")
-          arm("pq_index",
-            s.read.parquet(s"$out/pq").select(sqCols.map(col): _*),
-            s.read.parquet(s"$out/pq2").select(sqCols.map(col): _*))
-        })
-
-      // the pass is complete — persist the ATTESTATION (id-set digest,
-      // per-artifact evidence, parameters, wall stamp) and serve the
-      // audit FROM its readback: the oracle now gates the durable record
-      // a GDPR audit would read, not just the in-flight DataFrame
-      ForgetOps.writeAttestation(s, s"$out/attest", dead, "doc_id",
-        audit, params = Seq("audited" -> (if (auditDiffs) 1L else 0L)))
-      ForgetOps.readAttestation(s, s"$out/attest").orderBy(col("artifact"))
-    },
-
-    "q_forget_curated" -> { (s, dir) => // the curated-landing forget
-      // face: a streaming paragraph-dedup landing forgets an id set from
-      // BOTH its landed docs and its `_para_index` admission keys (keys
-      // derived from the ids' own LANDED clean_text — delta-proportional,
-      // ids-only by nature), then a RE-CRAWL re-sends the full corpus
-      // under fresh ids. The law: content whose every admitter was
-      // forgotten is ADMITTED again, so the index converges to exactly
-      // the rebuild's key set (ingest surviving, then the same re-crawl),
-      // and the landed doc-id set matches the rebuild's row-for-row. The
-      // oracle pins both sizes independently: the index is ALL distinct
-      // 8-token chunks of the corpus (every key is eventually admitted —
-      // by an original doc or the re-crawl), the docs face is
-      // kept + re-crawl.
-      import graft.streaming.StreamingOps
-      val full = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val docs = graft.operators.Checkpoints.pin(
-        if (oracleScale(dir)) full else full.filter(col("doc_id") % 16 === 0),
-        reliable = false)
-      val ids = docs.filter(col("doc_id") % 97 === 3).select(col("doc_id"))
-      val recrawl = docs
-        .select((col("doc_id") + 10000000L).as("doc_id"), col("text"))
-      val out = scratchDir("fg_cur")
-      val out2 = scratchDir("fg_cur2")
-      def land(root: String, b0: org.apache.spark.sql.DataFrame,
-          b1: org.apache.spark.sql.DataFrame): Unit = {
-        StreamingOps.curatedBatch(b0, 0L, root, chunkSize = 8, nPb = 16)
-        StreamingOps.curatedBatch(b1, 1L, root, chunkSize = 8, nPb = 16)
-      }
-      // the forgetting landing and its rebuild twin are independent
-      // pipelines against disjoint roots — overlap them (guide §2.6);
-      // each pipeline stays internally sequential (batch order is the
-      // landing's semantics)
-      graft.operators.Par.run(s, parallelism = 2)(
-        () => {
-          land(out, docs.filter(col("doc_id") % 2 === 0),
-            docs.filter(col("doc_id") % 2 =!= 0))
-          graft.operators.ForgetOps.forgetFromCuratedLanding(s, out, ids,
-            chunkSize = 8, nPb = 16)
-          StreamingOps.curatedBatch(recrawl, 2L, out, chunkSize = 8, nPb = 16)
-        },
-        () => {
-          land(out2,
-            docs.filter(col("doc_id") % 2 === 0 && col("doc_id") % 97 =!= 3),
-            docs.filter(col("doc_id") % 2 =!= 0 && col("doc_id") % 97 =!= 3))
-          StreamingOps.curatedBatch(recrawl, 2L, out2, chunkSize = 8, nPb = 16)
-        })
-      def keysOf(root: String) = s.read.schema("__k LONG, pb INT, __batch LONG")
-        .option("basePath", s"$root/_para_index")
-        .parquet(s"$root/_para_index").select(col("__k")).distinct()
-      def docIdsOf(root: String) = s.read
-        .schema("doc_id LONG, clean_text STRING, n_kept LONG, " +
-          "n_dropped LONG, __batch LONG")
-        .option("basePath", s"$root/docs").parquet(s"$root/docs")
-        .select(col("doc_id"))
-      // ONE union job per face (the q_forget_everywhere audit shape)
-      def face(readback: org.apache.spark.sql.DataFrame,
-          truth: org.apache.spark.sql.DataFrame): (Long, Long) = {
-        val m = readback.select(lit("n").as("__f"))
-          .unionAll(readback.exceptAll(truth).select(lit("d").as("__f")))
-          .unionAll(truth.exceptAll(readback).select(lit("d").as("__f")))
-          .groupBy(col("__f")).agg(count(lit(1)).as("__c")).collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        (m.getOrElse("n", 0L), m.getOrElse("d", 0L))
-      }
-      // the two face audits are independent read-only jobs — overlapped
-      val faces = graft.operators.Par.run(s, parallelism = 2)(
-        () => face(docIdsOf(out), docIdsOf(out2)),
-        () => face(keysOf(out), keysOf(out2)))
-      val (nd, dd) = faces(0)
-      val (nk, dk) = faces(1)
-      import s.implicits._
-      Seq(("docs", nd, dd), ("para_index", nk, dk))
-        .toDF("artifact", "n_after", "n_diff").orderBy(col("artifact"))
-    },
-
-    "q_stream_forget_all" -> { (s, dir) => // the COMPOSED compliance
-      // queue: ONE tombstone stream drains per micro-batch into every
-      // wired face — LSH, pHash, postings, shingle (its negative delta
-      // replay-idempotent via passId = batchId), the chunk store
-      // (recipes + GC, ids-only) — plus a vector tombstone stream into
-      // the IVF-SQ8 cell face. After the drains each artifact
-      // must equal a from-scratch rebuild over the remaining corpus
-      // (audited at oracle SFs; bench SFs time the production shape —
-      // n_diff = -1, the q_forget_everywhere protocol).
-      import graft.streaming.StreamingOps
-      val full = Tables.documents(s, dir)
-      val atOracle = oracleScale(dir)
-      // doc-side and embedding-side pins are independent eager chains —
-      // overlap the pre-work (the q_forget_everywhere shape, guide §2.6)
-      val pre = graft.operators.Par.run[Any](s, parallelism = 2)(
-        () => {
-          val docs = graft.operators.Checkpoints.pin(
-            if (atOracle) full else full.filter(col("doc_id") % 16 === 0),
-            reliable = false)
-          (docs, docs.filter(col("doc_id") % 97 =!= 3).localCheckpoint(true))
-        },
-        () => {
-          val allEmb = Tables.embeddings(s, dir)
-          val emb = graft.operators.Checkpoints.pin(
-            if (atOracle) allEmb else allEmb.filter(col("vec_id") % 32 === 0),
-            reliable = false)
-          (emb, emb.filter(col("vec_id") % 97 =!= 3).localCheckpoint(true))
-        })
-      type DF = org.apache.spark.sql.DataFrame
-      val (docs, kept) = pre(0).asInstanceOf[(DF, DF)]
-      val (emb, embKept) = pre(1).asInstanceOf[(DF, DF)]
-      val out = scratchDir("sfa")
-      // the six artifact builds are independent write chains against
-      // disjoint $out subtrees — overlap them (guide §2.6, operators.Par;
-      // pool 6 = all chains in flight, A/B-measured vs 4 in r21)
-      graft.operators.Par.run(s, parallelism = 6)(
-        () => DedupOps.writeMinHashIndex(docs, s"$out/lsh", nBuckets = 16),
-        () => MultimodalOps.writePhashIndex(MultimodalOps.mediaFromDocuments(docs),
-          s"$out/ph", nBuckets = 16),
-        () => RetrievalOps.writePostingsIndex(docs, s"$out/pt", nPt = 16),
-        () => TextOps.writeShingleIndex(docs, s"$out/sh", k = 3, nPb = 16,
-          hashed = true),
-        () => MultimodalOps.writeChunkStore(MultimodalOps.mediaFromDocuments(docs),
-          s"$out/cs"),
-        () => SimilarityOps.writeSq8Index(emb, fixtureCentroids(64), s"$out/sq8"))
-      val docTombs = stream(s, dir, "documents")
-        .filter(col("doc_id") % 97 === 3 &&
-          (lit(atOracle) || col("doc_id") % 16 === 0))
-      val vecTombs = stream(s, dir, "embeddings")
-        .filter(col("vec_id") % 97 === 3 &&
-          (lit(atOracle) || col("vec_id") % 32 === 0))
-      // the two queues drain DISJOINT faces (doc artifacts vs the SQ8
-      // cell store) from separate checkpoints — run them concurrently;
-      // Structured Streaming schedules each query's micro-batches on its
-      // own thread already
-      val q1 = StreamingOps.forgetStream(docTombs, s"$out/ckpt1",
-          lshPath = Some(s"$out/lsh"), phashPath = Some(s"$out/ph"),
-          postingsPath = Some(s"$out/pt"), shinglePath = Some(s"$out/sh"),
-          chunkStorePath = Some(s"$out/cs"),
-          nBuckets = 16, nPt = 16, spanK = 3, nPb = 16, phashBuckets = 16)
-        // not a drain: its conf toggle would retune the concurrent queue
-        .trigger(Trigger.AvailableNow()).start()
-      val q2 = StreamingOps.forgetStream(vecTombs, s"$out/ckpt2",
-          sq8Path = Some(s"$out/sq8"), centroids = fixtureCentroids(64),
-          idCol = "vec_id")
-        // not a drain: its conf toggle would retune the concurrent queue
-        .trigger(Trigger.AvailableNow()).start()
-      q1.awaitTermination()
-      q2.awaitTermination()
-      // rebuild-and-diff at oracle SFs; counts-only at bench SFs
-      def rowCount(df: org.apache.spark.sql.DataFrame): Long =
-        df.agg(count(lit(1))).collect()(0).getLong(0)
-      def auditArm(readback: org.apache.spark.sql.DataFrame,
-          truth: org.apache.spark.sql.DataFrame): (Long, Long) = {
-        val m = readback.select(lit("n").as("__f"))
-          .unionAll(readback.exceptAll(truth).select(lit("d").as("__f")))
-          .unionAll(truth.exceptAll(readback).select(lit("d").as("__f")))
-          .groupBy(col("__f")).agg(count(lit(1)).as("__c")).collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        (m.getOrElse("n", 0L), m.getOrElse("d", 0L))
-      }
-      def arm(name: String, readback: org.apache.spark.sql.DataFrame,
-          truth: => org.apache.spark.sql.DataFrame): (String, Long, Long) =
-        if (atOracle) { val (n, d) = auditArm(readback, truth); (name, n, d) }
-        else (name, rowCount(readback), -1L)
-      // rebuild truths (oracle SFs only) are independent write chains —
-      // overlapped like the builds above
-      if (atOracle) {
-        graft.operators.Par.run(s, parallelism = 5)(
-          () => DedupOps.writeMinHashIndex(kept, s"$out/lsh2", nBuckets = 16),
-          () => MultimodalOps.writePhashIndex(MultimodalOps.mediaFromDocuments(kept),
-            s"$out/ph2", nBuckets = 16),
-          () => RetrievalOps.writePostingsIndex(kept, s"$out/pt2", nPt = 16),
-          () => TextOps.writeShingleIndex(kept, s"$out/sh2", k = 3, nPb = 16,
-            hashed = true),
-          () => SimilarityOps.writeSq8Index(embKept, fixtureCentroids(64),
-            s"$out/sq82"))
-      }
-      val lshCols = Seq("id", "band", "bandsig", "bucket").map(col)
-      val phCols = Seq("media_id", "frame_ix", "phash", "band_ix", "band",
-        "bucket").map(col)
-      val ptCols = Seq("tok", "doc_id", "tf", "positions").map(col)
-      val sqCols = Seq("id", "codes", "cell").map(col)
-      // the six audit arms are independent read-only jobs — overlapped too
-      val audit = graft.operators.Par.run(s, parallelism = 6)(
-        // chunk-store truth: the kept payloads still reassemble byte-exactly
-        // (digest equality needs no second store build); at bench SFs the
-        // digest-frame size == distinct recipe media, counted without
-        // reassembling every payload
-        () => if (atOracle) {
-          val keptMedia = MultimodalOps.mediaFromDocuments(kept)
-          arm("chunk_store",
-            MultimodalOps.readChunkStore(s, s"$out/cs")
-              .select(col("media_id"), md5(col("content")).as("content_md5")),
-            keptMedia.filter(octet_length(col("content")) > 0)
-              .select(col("media_id"), md5(col("content")).as("content_md5")))
-        } else
-          ("chunk_store", rowCount(s.read
-            .parquet(s"$out/cs/recipes").select(col("media_id")).distinct()),
-            -1L),
-        () => arm("lsh_index", s.read.parquet(s"$out/lsh").select(lshCols: _*),
-          s.read.parquet(s"$out/lsh2").select(lshCols: _*)),
-        () => arm("phash_index", s.read.parquet(s"$out/ph").select(phCols: _*),
-          s.read.parquet(s"$out/ph2").select(phCols: _*)),
-        () => {
-          val ptBack = s.read.parquet(s"$out/pt").select(ptCols: _*)
-          if (atOracle) {
-            val (ptN, ptD) = auditArm(ptBack,
-              s.read.parquet(s"$out/pt2").select(ptCols: _*))
-            val (_, dlD) = auditArm(
-              s.read.parquet(s"$out/pt/_docs").select(col("doc_id"), col("dl")),
-              s.read.parquet(s"$out/pt2/_docs").select(col("doc_id"), col("dl")))
-            ("postings_index", ptN, ptD + dlD)
-          } else ("postings_index", rowCount(ptBack), -1L)
-        },
-        () => arm("shingle_index",
-          TextOps.readShingleCounts(s, s"$out/sh", hashed = true),
-          TextOps.readShingleCounts(s, s"$out/sh2", hashed = true)),
-        () => arm("sq8_index", s.read.parquet(s"$out/sq8").select(sqCols: _*),
-          s.read.parquet(s"$out/sq82").select(sqCols: _*)))
-      // the queue pass attests like the composed batch pass — a GDPR
-      // audit reads records, not job logs; the oracle gates the durable
-      // readback
-      graft.operators.ForgetOps.writeAttestation(s, s"$out/attest",
-        docs.filter(col("doc_id") % 97 === 3).select(col("doc_id")),
-        "doc_id", audit,
-        params = Seq("audited" -> (if (atOracle) 1L else 0L)))
-      graft.operators.ForgetOps.readAttestation(s, s"$out/attest")
-        .orderBy(col("artifact"))
-    },
-
-    "q_forget_knn_store" -> { (s, dir) => // the PERSISTED k-NN graph's
-      // forget face: a two-batch knnGraphStream store (corpus cells +
-      // latest-wins edge versions) forgets an id set — dead vectors leave
-      // their home cells, dead probes drop from every level, survivor
-      // probes that listed a dead neighbor re-query the remaining corpus
-      // and land as a new version. The resolved readback must equal the
-      // batch knnGraph over the surviving vectors at the same nProbe,
-      // row-for-row (n_diff pinned 0; size = k per survivor).
-      import graft.streaming.StreamingOps
-      val allEmb = Tables.embeddings(s, dir)
-      val emb = graft.operators.Checkpoints.pin(
-        if (oracleScale(dir)) allEmb
-        else allEmb.filter(col("vec_id") % 32 === 0), reliable = false)
-      val cents = fixtureCentroids(64)
-      val out = scratchDir("fg_knn")
-      // the store chain (two lineage-ordered batches + the forget) and
-      // the batch-truth rebuild are independent — overlap them (guide
-      // §2.6); the truth is PINNED in its chain so the diff job below
-      // reads it once instead of recomputing the scored join per side
-      val chains = graft.operators.Par.run(s, parallelism = 2)(
-        () => {
-          StreamingOps.knnGraphBatch(emb.filter(col("vec_id") % 2 === 0), 0L,
-            cents, 5, KmFixtureK, out)
-          StreamingOps.knnGraphBatch(emb.filter(col("vec_id") % 2 =!= 0), 1L,
-            cents, 5, KmFixtureK, out)
-          graft.operators.ForgetOps.forgetFromKnnGraphStore(s, out,
-            emb.filter(col("vec_id") % 97 === 3).select(col("vec_id")),
-            k = 5, nProbe = KmFixtureK, centroids = cents)
-          null: org.apache.spark.sql.DataFrame
-        },
-        () => SimilarityOps.knnGraph(
-          emb.filter(col("vec_id") % 97 =!= 3), cents, k = 5,
-          nProbe = KmFixtureK).localCheckpoint(true))
-      val back = StreamingOps.readKnnGraph(s, out).localCheckpoint(true)
-      val truth = chains(1)
-      // readback count + two-sided diff ride ONE union job — same numbers
-      val m = back.select(lit("n").as("__f"))
-        .unionAll(back.exceptAll(truth).select(lit("d").as("__f")))
-        .unionAll(truth.exceptAll(back).select(lit("d").as("__f")))
-        .groupBy(col("__f")).agg(count(lit(1)).as("__c")).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      import s.implicits._
-      Seq((m.getOrElse("n", 0L), m.getOrElse("d", 0L)))
-        .toDF("n_rows", "n_diff").orderBy(col("n_rows"))
-    },
-
-    "q_stream_forget" -> { (s, dir) => // the compliance QUEUE shape:
-      // tombstoned documents arrive as a stream and lshForgetStream
-      // applies the partition-pruned forget per micro-batch — replay
-      // idempotent (re-forgetting absent ids rewrites the same
-      // survivors), single-mutator like every in-place maintenance op.
-      // After the drain the index must equal a from-scratch rebuild over
-      // the remaining corpus, row-for-row (n_diff pinned 0; the size from
-      // the bands-per-doc invariant).
-      val docs = Tables.documents(s, dir)
-      val out = scratchDir("q_stream_forget")
-      val tombs = stream(s, dir, "documents").filter(col("doc_id") % 97 === 3)
-      // the live-index chain (build -> drain the tombstone queue over it)
-      // and the rebuild-truth chain touch disjoint roots — overlap them
-      // (guide §2.6, operators.Par)
-      graft.operators.Par.run(s, parallelism = 2)(
-        () => {
-          DedupOps.writeMinHashIndex(docs, s"$out/idx", nBuckets = 16)
-          val q = graft.streaming.StreamingOps
-            .lshForgetStream(tombs, s"$out/idx", s"$out/ckpt", nBuckets = 16)
-            // not a drain: its conf toggle would retune the other Par chain
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        },
-        () => DedupOps.writeMinHashIndex(docs.filter(col("doc_id") % 97 =!= 3),
-          s"$out/idx2", nBuckets = 16))
-      val sel = Seq("id", "band", "bandsig", "bucket").map(col)
-      val back = s.read.parquet(s"$out/idx").select(sel: _*)
-      val truth = s.read.parquet(s"$out/idx2").select(sel: _*)
-      // readback count + two-sided diff ride ONE union job (the
-      // q_forget_everywhere audit shape) — same numbers, half the actions
-      val m = back.select(lit("n").as("__f"))
-        .unionAll(back.exceptAll(truth).select(lit("d").as("__f")))
-        .unionAll(truth.exceptAll(back).select(lit("d").as("__f")))
-        .groupBy(col("__f")).agg(count(lit(1)).as("__c")).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      import s.implicits._
-      Seq((m.getOrElse("n", 0L), m.getOrElse("d", 0L)))
-        .toDF("n_rows", "n_diff").orderBy(col("n_rows"))
-    },
-
-    "g_rank_buckets" -> { (s, dir) => // exact rank-derived strata over an
-      // integer score (type-token ratio in ppm): 0-based global rank in
-      // (score, id) order, bucket = rank*10 DIV n — equal-size-by-rank
-      // deciles, two-phase ranks (per-score-range counts + range-local
-      // windows), the total as a 1-row broadcast.
-      val toks = TextFns.tokens(coalesce(col("text"), lit("")))
-      val scored = Tables.documents(s, dir).select(col("doc_id"),
-          size(array_distinct(toks)).cast("long").as("__d"),
-          size(toks).cast("long").as("__t"))
-        .withColumn("score", expr("(__d * 1000000L) DIV __t"))
-        .select(col("doc_id"), col("score"))
-      CurationOps.rankBuckets(scored, nBuckets = 10).orderBy(col("doc_id"))
-    },
-
-    "g_rank_buckets_grouped" -> { (s, dir) => // per-source rank strata:
-      // TTR quartiles WITHIN each source (per-facet curriculum/quality
-      // bands) — every window one level deeper than g_rank_buckets
-      // (range offsets by group, ranks by (group, range)); no
-      // corpus-wide window exists at all.
-      val toks = TextFns.tokens(coalesce(col("text"), lit("")))
-      val scored = Tables.documents(s, dir).select(col("doc_id"), col("source"),
-          size(array_distinct(toks)).cast("long").as("__d"),
-          size(toks).cast("long").as("__t"))
-        .withColumn("score", expr("(__d * 1000000L) DIV __t"))
-        .select(col("doc_id"), col("source"), col("score"))
-      CurationOps.rankBucketsByGroup(scored, nBuckets = 4).orderBy(col("doc_id"))
-    },
-
-    "g_curriculum" -> { (s, dir) => // curriculum-ordered packing: 4
-      // equal-rank TTR strata, ascending-bucket token stream with
-      // pseudo-random in-bucket order, 128-token packing carrying the
-      // bucket — sequence ids are curriculum-monotone (spec law), so a
-      // trainer walking seq_id order walks the schedule.
-      AssemblyOps.curriculumManifest(Tables.documents(s, dir),
-          nBuckets = 4, seqLen = 128L)
-        .orderBy(col("seq_id"), col("seq_pos"))
-    },
-
-    "q_stream_curriculum" -> { (s, dir) => // maintained curriculum
-      // manifest, oracle side: an AvailableNow run of curriculumStream
-      // lands the slim (id, TTR-score, n_tokens) evidence and re-ranks +
-      // re-packs over the accumulated counts — the served manifest must
-      // be bit-equal to the batch curriculumManifest (shared oracle
-      // hash). Corpus-wide rank buckets move with every batch (the
-      // UniMax-manifest argument), so the maintenance contract is the
-      // same periodic O(corpus-counts) refresh; staleness/replay/
-      // lineage/drift are CurriculumStreamSpec's job.
-      val out = scratchDir("q_stream_curriculum")
-      val src = stream(s, dir, "documents")
-      drain(s, dir, "documents")(graft.streaming.StreamingOps
-        .curriculumStream(src, s"$out/idx", s"$out/ckpt",
-          nBuckets = 4, seqLen = 128L))
-      graft.streaming.StreamingOps.readCurriculumManifest(s, s"$out/idx")
-        .orderBy(col("seq_id"), col("seq_pos"))
-    },
-
-    "q_stream_pack" -> { (s, dir) => // incremental packing, oracle side:
-      // an AvailableNow run of packStream lands the corpus as versioned
-      // span + offset deltas (sb/ob block-partitioned), compactPackIndex
-      // folds both roots, and the readback must be bit-equal to the
-      // batch packTokenSpans — appending to a packed corpus is O(delta).
-      // Cross-batch tail re-emission / replay / lineage / crash windows
-      // are PackStreamSpec's job.
-      val out = scratchDir("q_stream_pack")
-      val src = stream(s, dir, "documents")
-      drain(s, dir, "documents")(graft.streaming.StreamingOps
-        .packStream(src, s"$out/idx", s"$out/ckpt", seqLen = 128L))
-      graft.streaming.StreamingOps.compactPackIndex(s, s"$out/idx")
-      graft.streaming.StreamingOps.readPackIndex(s, s"$out/idx")
-        .orderBy(col("seq_id"), col("seq_pos"))
-    },
-
-    "q_stream_manifest" -> { (s, dir) => // UniMax-scheduled training
-      // manifest as a MAINTAINED asset, oracle side: an AvailableNow run
-      // of manifestStream lands the slim (id, source, n_tokens) delta and
-      // re-manifests over the accumulated counts — the served manifest
-      // must be bit-equal to the batch trainManifest over the same corpus
-      // (shared oracle hash with g_train_manifest). Waterfilling is not
-      // delta-maintainable (every batch can move θ), so the maintenance
-      // contract is periodic O(corpus-counts) refresh, never a re-scan of
-      // text; staleness/refreshEvery/replay/lineage/drift semantics are
-      // ManifestStreamSpec's job.
-      val out = scratchDir("q_stream_manifest")
-      val src = stream(s, dir, "documents")
-      drain(s, dir, "documents")(graft.streaming.StreamingOps
-        .manifestStream(src, s"$out/idx", s"$out/ckpt",
-          budgetTokens = 40000L, epochCap = 3, seqLen = 128L))
-      graft.streaming.StreamingOps.readTrainManifest(s, s"$out/idx")
-        .orderBy(col("seq_id"), col("seq_pos"))
-    },
-
-    "g_shard_manifest" -> { (s, dir) => // loader shards over the packed
-      // manifest: contiguous 8-sequence shards, each with exact
-      // size/range facts and an order-free modular row-signature
-      // checksum a loader can re-derive to validate shard content.
-      // One map-side-combined shuffle keyed on the shard.
-      AssemblyOps.shardManifest(
-          AssemblyOps.packTokenSpans(Tables.documents(s, dir), seqLen = 128L),
-          seqsPerShard = 8L)
-        .orderBy(col("shard"))
-    },
-
-    "g_span_corrupt" -> { (s, dir) => // T5/UL2 span-corruption masks,
-      // deterministic uniform-strata variant: 15% density, 3-token spans
-      // over 128-token sequences = 6 spans in 21-token strata, each
-      // placed by the multiplicative permutation — non-overlapping by
-      // construction, bit-reproducible, map-only after the
-      // distinct-sequence frame.
-      AssemblyOps.spanCorruptMask(
-          AssemblyOps.packTokenSpans(Tables.documents(s, dir), seqLen = 128L),
-          seqLen = 128L, densityPpm = 150000L, meanSpan = 3L)
-        .orderBy(col("seq_id"), col("span_ix"))
-    },
-
-    "g_pack_stats" -> { (s, dir) => // the packing-efficiency report over
-      // BOTH packers — the truncation-vs-slack tradeoff as one gated
-      // row pair: concat-and-chunk (fill_ppm = 10^6 by construction,
-      // nonzero split share) vs length-binned (split_ppm = 0 by
-      // construction, fill < 10^6, overlength docs dropped). One
-      // seq-keyed and one doc-keyed shuffle per arm, corpus totals as a
-      // 1-row broadcast.
-      val docs = Tables.documents(s, dir)
-      AssemblyOps.packStats(AssemblyOps.packTokenSpans(docs, seqLen = 128L), docs, 128L)
-        .withColumn("packer", lit("chunk"))
-        .unionByName(
-          AssemblyOps.packStats(AssemblyOps.packBinned(docs, seqLen = 64L), docs, 64L)
-            .withColumn("packer", lit("binned")))
-        .orderBy(col("packer"))
-    },
-
-    "g_dsir_select" -> { (s, dir) => // DSIR end to end: importance scores
-      // (target = English) length-normalized in fixed point, top 30% of
-      // the RAW pool kept through the salted quantile machinery —
-      // deterministic selection, bit-identical reruns. Oracle replays
-      // scoring + normalization + the single-window rank.
-      CurationOps.importanceSelect(
-          Tables.documents(s, dir), targetPred = col("lang") === "en",
-          keepFrac = 0.3, nBuckets = 64, saltBuckets = 4)
-        .orderBy(col("doc_id"))
-    },
-
-    "g_card_delta" -> { (s, dir) => // corpus drift report: per-source
-      // dataset-card deltas between two snapshots (even vs all doc_ids —
-      // the release-over-release comparison), full-outer so appearing
-      // sources report against zero
-      val docs = Tables.documents(s, dir)
-      CurationOps.cardDelta(
-          before = docs.filter(col("doc_id") % 2 === 0), after = docs)
-        .orderBy(col("source"))
-    },
-
-    "g_join_cardinality" -> { (s, dir) => // exact join-output size from
-      // the two keyed count frames, without materializing a row of the
-      // join — the pre-flight that catches a both-sides-hot key before
-      // the shuffle is written. orders x lineitem on the order key:
-      // join_rows must equal |lineitem| exactly.
-      CurationOps.joinCardinality(
-        Tables.orders(s, dir), "o_orderkey",
-        Tables.lineitem(s, dir), "l_orderkey")
-    },
-
-    "g_exact_quantiles" -> { (s, dir) => // exact per-language length
-      // quantiles WITHOUT a per-group sort: two-phase counting locates
-      // each target rank's value bucket, only those buckets' rows are
-      // windowed. The exact companion of the GK sketch gate
-      // (g_sketch_quantiles); oracle replays plain rank selection.
-      CurationOps.exactQuantiles(
-          Tables.documents(s, dir), ps = Seq(0.25, 0.5, 0.75))
-        .orderBy(col("lang"))
-    },
-
-    "g_skew_report" -> { (s, dir) => // join-key skew diagnostics on the
-      // event stream's natural key: per-key counts folded to the numbers
-      // that pick a partitioning strategy; all-integer, argmax
-      // tie-broken to the smallest key
-      CurationOps.keySkewReport(Tables.events(s, dir), keyCol = "user_id")
-    },
-
-    "g_domain_budget" -> { (s, dir) => // per-domain token-budget curation:
-      // each source keeps its best docs (quality desc, id tiebreak) until
-      // 800 kept tokens. Two-phase exact with NO driver state: the
-      // running-total window runs over the (domains x nRanges) range-sum
-      // frame, only the one boundary range per domain is cum-sum
-      // windowed. Oracle replays the per-domain single-window truth.
-      CurationOps.domainTokenBudget(
-          Tables.documents(s, dir), budgetTokens = 800L, nRanges = 8)
-        .orderBy(col("doc_id"))
-    },
-
-    "g_length_hist" -> { (s, dir) => // log2-bucketed length histogram per
-      // source: bucket = bit length of n_chars (exact integer log2+1 in
-      // both engines — no FP boundary at powers of two), one
-      // map-side-combined aggregation
-      CurationOps.lengthHistogram(Tables.documents(s, dir))
-        .orderBy(col("source"), col("len_bucket"))
-    },
-
-    "g_jsonl_roundtrip" -> { (s, dir) => // JSONL interchange: export the
-      // corpus to sharded JSON-Lines, read it back schema-on-read, and
-      // prove the round trip lossless — the oracle is the plain corpus
-      // scan, so a green row certifies escaping/typing/sharding end to
-      // end (the format training-data pipelines actually exchange)
-      val out = scratchDir("jsonl") + "/docs"
-      graft.sources.Tables.exportJsonl(Tables.documents(s, dir), out, nShards = 4)
-      graft.sources.Tables.importJsonl(s, out,
-          "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
-        .select(col("doc_id"), col("text"), col("lang"), col("source"), col("n_chars"))
-        .orderBy(col("doc_id"))
-    },
-
-    "g_token_budget" -> { (s, dir) => // exact token-budget prefix sample:
-      // the first 9000 tokens of the corpus in deterministic permutation
-      // order (boundary doc kept). Two-phase exact: per-key-range sums
-      // (bounded driver state) locate the boundary range; only that
-      // 1/nRanges slice is windowed — the oracle replays the single
-      // global window the split provably equals.
-      CurationOps.tokenBudgetSample(
-          Tables.documents(s, dir), budgetTokens = 9000L, seed = 7L, nRanges = 8)
-        .orderBy(col("doc_id"))
-    },
-
-    "g_pipeline_e2e" -> { (s, dir) => // the composed curation pipeline:
-      // quality-logit filter -> exact dedup -> corpus-wide paragraph dedup
-      // with reconstruction -> split assignment, one DAG, per-doc output.
-      // The oracle replays ALL four stages in sequence — this row gates
-      // stage composition (each stage feeding the next's corpus), not just
-      // the stages individually.
-      CurationOps.curationPipeline(Tables.documents(s, dir))
-        .orderBy(col("doc_id"))
-    },
-
-    "g_embed_quant" -> { (s, dir) => // int8 quantization stats per vector
-      SimilarityOps.quantizeStats(Tables.embeddings(s, dir))
-        .orderBy(col("vec_id"))
-    },
-
-    // ---- Analytics breadth: more TPC-H shapes -------------------------
-    "q4_priority" -> { (s, dir) => // existence semi-join by priority
-      Tables.orders(s, dir)
-        .join(Tables.lineitem(s, dir),
-          col("o_orderkey") === col("l_orderkey") &&
-            col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 90 DAYS"),
-          "left_semi")
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n_orders"))
-        .orderBy(col("o_orderpriority"))
-    },
-
-    "q12_priority_class" -> { (s, dir) => // join + conditional class counts
-      Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp_ntz") &&
-          col("l_shipdate") < lit("1997-01-01").cast("timestamp_ntz"))
-        .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("l_returnflag"))
-        .agg(
-          sum(when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1L).otherwise(0L))
-            .as("high_line_count"),
-          sum(when(!col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1L).otherwise(0L))
-            .as("low_line_count"))
-        .orderBy(col("l_returnflag"))
-    },
-
-    "q14_promo" -> { (s, dir) => // promo revenue share (exact-decimal ratio)
-      val rev = col("l_extendedprice").cast("decimal(12,2)") *
-        (lit(1).cast("decimal(4,2)") - col("l_discount").cast("decimal(4,2)"))
-      Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") >= lit("1996-03-01").cast("timestamp_ntz") &&
-          col("l_shipdate") < lit("1996-04-01").cast("timestamp_ntz"))
-        .join(Tables.part(s, dir), col("l_partkey") === col("p_partkey"))
-        .agg(
-          graft.functions.NumFns.floorAt(
-            lit(100.0) * sum(when(col("p_type").startsWith("PROMO"), rev).otherwise(lit(0))).cast("double") /
-              sum(rev).cast("double"), 4).as("promo_pct"),
-          count(lit(1)).as("n_lines"))
-    },
-
-    "q16_parts_suppliers" -> { (s, dir) => // distinct-supplier count + anti-join
-      val ps = Tables.lineitem(s, dir)
-        .select(col("l_partkey"), col("l_suppkey")).distinct()
-      val excluded = Tables.supplier(s, dir)
-        .filter(col("s_acctbal") < 0).select(col("s_suppkey"))
-      ps.join(excluded, col("l_suppkey") === col("s_suppkey"), "left_anti")
-        .join(Tables.part(s, dir), col("l_partkey") === col("p_partkey"))
-        .groupBy(col("p_brand"), col("p_type"))
-        .agg(countDistinct(col("l_suppkey")).as("supplier_cnt"))
-        .orderBy(col("supplier_cnt").desc, col("p_brand"), col("p_type"))
-    },
-
-    "q18_big_orders" -> { (s, dir) => // HAVING-filtered agg joined back
-      val big = Tables.lineitem(s, dir)
-        .groupBy(col("l_orderkey"))
-        .agg(sum(col("l_quantity").cast("decimal(12,2)")).as("sum_qty_d"))
-        .filter(col("sum_qty_d") > 250)
-      Tables.orders(s, dir)
-        .join(big, col("o_orderkey") === col("l_orderkey"))
-        .join(Tables.customer(s, dir), col("o_custkey") === col("c_custkey"))
-        .select(col("c_name"), col("o_orderkey"), col("o_orderdate"),
-          col("o_totalprice"), col("sum_qty_d").cast("double").as("sum_qty"))
-        .orderBy(col("o_orderkey"))
-    },
-
-    "q7_nation_volume" -> { (s, dir) => // TPC-H Q7 shape: two-sided nation
-      // pair join (supplier nation x customer nation) + per-year rollup
-      val nat = (alias: String) => Tables.nation(s, dir)
-        .select(col("n_nationkey").as(s"${alias}_nk"), col("n_name").as(alias))
-      val picked = Seq("NATION_1", "NATION_2", "NATION_3")
-      Tables.lineitem(s, dir)
-        .filter(col("l_shipdate").between(
-          lit("1996-01-01").cast("timestamp_ntz"), lit("1997-12-31").cast("timestamp_ntz")))
-        .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
-        .join(Tables.customer(s, dir), col("o_custkey") === col("c_custkey"))
-        .join(Tables.supplier(s, dir), col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(nat("supp_nation")), col("s_nationkey") === col("supp_nation_nk"))
-        .join(broadcast(nat("cust_nation")), col("c_nationkey") === col("cust_nation_nk"))
-        .filter(col("supp_nation").isin(picked: _*) && col("cust_nation").isin(picked: _*) &&
-          col("supp_nation") =!= col("cust_nation"))
-        .groupBy(col("supp_nation"), col("cust_nation"), year(col("l_shipdate")).as("l_year"))
-        .agg(sum(col("l_extendedprice").cast("decimal(12,2)") *
-          (lit(1).cast("decimal(4,2)") - col("l_discount").cast("decimal(4,2)")))
-          .cast("double").as("volume"))
-        .orderBy(col("supp_nation"), col("cust_nation"), col("l_year"))
-    },
-
-    "q15_top_supplier" -> { (s, dir) => // TPC-H Q15 shape: windowed revenue
-      // per supplier + scalar-max selection
-      val rev = Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp_ntz") &&
-          col("l_shipdate") < lit("1996-04-01").cast("timestamp_ntz"))
-        .groupBy(col("l_suppkey").as("supplier_no"))
-        .agg(sum(col("l_extendedprice").cast("decimal(12,2)") *
-          (lit(1).cast("decimal(4,2)") - col("l_discount").cast("decimal(4,2)")))
-          .cast("double").as("total_revenue"))
-      val top = rev.agg(max(col("total_revenue")).as("max_revenue"))
-      Tables.supplier(s, dir)
-        .join(rev, col("s_suppkey") === col("supplier_no"))
-        .join(broadcast(top), col("total_revenue") === col("max_revenue"))
-        .select(col("s_suppkey"), col("s_name"), col("total_revenue"))
-        .orderBy(col("s_suppkey"))
-    },
-
-    "q17_small_qty" -> { (s, dir) => // TPC-H Q17 shape: correlated avg
-      // threshold per part (decorrelated to a per-key aggregate join)
-      val pt = Tables.part(s, dir)
-        .filter(col("p_brand") === "Brand#23" && col("p_size") < 15)
-        .select(col("p_partkey"))
-      val li = Tables.lineitem(s, dir)
-        .join(pt, col("l_partkey") === col("p_partkey"))
-      val thr = li.groupBy(col("l_partkey").as("t_partkey"))
-        .agg((sum(col("l_quantity").cast("decimal(12,2)")).cast("double") /
-          count(lit(1))).as("avg_qty"))
-      li.join(thr, col("l_partkey") === col("t_partkey"))
-        .filter(col("l_quantity") < lit(0.2) * col("avg_qty"))
-        .agg(
-          (sum(col("l_extendedprice").cast("decimal(12,2)")).cast("double") / 7.0)
-            .as("avg_yearly"),
-          count(lit(1)).as("n_lines"))
-    },
-
-    "q19_disjunctive" -> { (s, dir) => // TPC-H Q19 shape: OR-of-ANDs
-      // predicate across the join (disjunctive pushdown + one agg)
-      val band = (brand: String, szHi: Int, qLo: Int, qHi: Int) =>
-        col("p_brand") === brand && col("p_size").between(1, szHi) &&
-          col("l_quantity").between(qLo, qHi)
-      Tables.lineitem(s, dir)
-        .join(Tables.part(s, dir), col("l_partkey") === col("p_partkey"))
-        .filter(band("Brand#12", 5, 1, 11) || band("Brand#23", 10, 10, 20) ||
-          band("Brand#24", 15, 20, 30))
-        .agg(
-          sum(col("l_extendedprice").cast("decimal(12,2)") *
-            (lit(1).cast("decimal(4,2)") - col("l_discount").cast("decimal(4,2)")))
-            .cast("double").as("revenue"),
-          count(lit(1)).as("n_lines"))
-    },
-
-    "q22_idle_customers" -> { (s, dir) => // scalar subquery + anti-join
-      val cust = Tables.customer(s, dir)
-      // deterministic average: exact decimal sum / count (avg(double) is
-      // partial-sum order-dependent and could flip boundary comparisons)
-      val avgBal = cust.filter(col("c_acctbal") > 0)
-        .agg((sum(col("c_acctbal").cast("decimal(12,2)")).cast("double") /
-          count(lit(1))).as("avg_bal"))
-      val recent = Tables.orders(s, dir)
-        .filter(col("o_orderdate") >= lit("1997-06-01").cast("timestamp_ntz"))
-        .select(col("o_custkey")).distinct()
-      cust.crossJoin(avgBal)
-        .filter(col("c_acctbal") > col("avg_bal"))
-        .join(recent, col("c_custkey") === col("o_custkey"), "left_anti")
-        .groupBy(col("c_nationkey"))
-        .agg(count(lit(1)).as("n_cust"),
-          sum(col("c_acctbal").cast("decimal(12,2)")).cast("double").as("total_bal"))
-        .orderBy(col("c_nationkey"))
-    },
-
-    "q2_min_supplier" -> { (s, dir) => // TPC-H Q2 shape: correlated min over
-      // a priced-offer relation + join back (no partsupp table in the
-      // fixtures, so lineitem's min extended price per (part, supplier)
-      // stands in as the offer list — the plan shape is identical: regional
-      // dimension reduction, grouped min, equality join back on the min)
-      val eu = Tables.supplier(s, dir)
-        .join(broadcast(Tables.nation(s, dir)), col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(Tables.region(s, dir).filter(col("r_name") === "EUROPE")),
-          col("n_regionkey") === col("r_regionkey"))
-        .select(col("s_suppkey"), col("s_name"), col("s_acctbal"), col("n_name"))
-      val px = Tables.part(s, dir)
-        .filter(col("p_size") <= 10 && col("p_type") === "STANDARD")
-        .select(col("p_partkey"), col("p_name"))
-      // per-part min via a window over the ALREADY-AGGREGATED offers frame:
-      // one lineitem scan total (a groupBy-min + join-back would re-run the
-      // whole fact pipeline for the second aggregate — the offers relation
-      // after grouping is |parts x suppliers| small, so one extra exchange
-      // of it beats a second 100 TB scan)
-      val offers = Tables.lineitem(s, dir)
-        .join(eu.select("s_suppkey"), col("l_suppkey") === col("s_suppkey"), "left_semi")
-        .join(px.select("p_partkey"), col("l_partkey") === col("p_partkey"), "left_semi")
-        .groupBy(col("l_partkey"), col("l_suppkey"))
-        .agg(min(col("l_extendedprice")).as("price"))
-      import org.apache.spark.sql.expressions.Window
-      offers
-        .withColumn("min_price",
-          min(col("price")).over(Window.partitionBy(col("l_partkey"))))
-        .filter(col("price") === col("min_price"))
-        .join(px, col("l_partkey") === col("p_partkey"))
-        .join(eu, col("l_suppkey") === col("s_suppkey"))
-        .select(col("p_partkey"), col("p_name"), col("s_suppkey"), col("s_name"),
-          col("s_acctbal"), col("n_name"), col("price"))
-        .orderBy(col("s_acctbal").desc, col("n_name"), col("s_name"), col("p_partkey"))
-    },
-
-    "q8_market_share" -> { (s, dir) => // TPC-H Q8 shape: one nation's share
-      // of regional import volume per year — 7-table join, conditional
-      // aggregation, exact-decimal volume, double division at the end
-      val n2 = Tables.nation(s, dir)
-        .select(col("n_nationkey").as("s_nk"), col("n_name").as("supp_nation"))
-      val n1 = Tables.nation(s, dir)
-        .select(col("n_nationkey").as("c_nk"), col("n_regionkey").as("c_rk"))
-      val vol = col("l_extendedprice").cast("decimal(12,2)") *
-        (lit(1).cast("decimal(4,2)") - col("l_discount").cast("decimal(4,2)"))
-      Tables.lineitem(s, dir)
-        .join(Tables.part(s, dir).filter(col("p_type") === "PROMO"),
-          col("l_partkey") === col("p_partkey"))
-        .join(Tables.supplier(s, dir), col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(n2), col("s_nationkey") === col("s_nk"))
-        .join(Tables.orders(s, dir).filter(col("o_orderdate").between(
-            lit("1995-01-01").cast("timestamp_ntz"), lit("1996-12-31").cast("timestamp_ntz"))),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(Tables.customer(s, dir), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(n1), col("c_nationkey") === col("c_nk"))
-        .join(broadcast(Tables.region(s, dir).filter(col("r_name") === "AMERICA")),
-          col("c_rk") === col("r_regionkey"))
-        .groupBy(year(col("o_orderdate")).as("o_year"))
-        .agg((sum(when(col("supp_nation") === "NATION_3", vol)
-            .otherwise(lit(0).cast("decimal(17,4)"))).cast("double") /
-          sum(vol).cast("double")).as("mkt_share"))
-        .orderBy(col("o_year"))
-    },
-
-    "q9_profit" -> { (s, dir) => // TPC-H Q9 shape: profit by supplier
-      // nation x order year over the whole fact — 5-table join, two
-      // decimal products per row, negative-capable sum. No partsupp table
-      // in the fixtures: part retail price stands in for supply cost
-      // (amount = extprice*(1-disc) - retail*qty), both products exact
-      // DECIMAL(18,4) before the subtraction on BOTH engines.
-      val vol = (col("l_extendedprice").cast("decimal(12,2)") *
-        (lit(1).cast("decimal(4,2)") - col("l_discount").cast("decimal(4,2)")))
-        .cast("decimal(18,4)")
-      val cost = (col("p_retailprice").cast("decimal(12,2)") *
-        col("l_quantity").cast("decimal(12,2)")).cast("decimal(18,4)")
-      Tables.lineitem(s, dir)
-        .join(Tables.part(s, dir).filter(col("p_name").contains("red")),
-          col("l_partkey") === col("p_partkey"))
-        .join(Tables.supplier(s, dir), col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(Tables.nation(s, dir)), col("s_nationkey") === col("n_nationkey"))
-        .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("n_name"), year(col("o_orderdate")).as("o_year"))
-        .agg(sum(vol - cost).cast("double").as("sum_profit"))
-        .orderBy(col("n_name"), col("o_year").desc)
-    },
-
-    "q11_value_parts" -> { (s, dir) => // TPC-H Q11 shape: value
-      // concentration — per-part traded value for one region's suppliers,
-      // kept where value exceeds 1/1000 of the regional total. The
-      // threshold is a one-row scalar crossJoin (q22's bounded-BNL
-      // family) and the comparison is value*1000 > total: pure decimal
-      // integer arithmetic, no float boundary to flip between engines.
-      val asiaSupp = Tables.supplier(s, dir)
-        .join(broadcast(Tables.nation(s, dir)), col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(Tables.region(s, dir).filter(col("r_name") === "ASIA")),
-          col("n_regionkey") === col("r_regionkey"))
-        .select(col("s_suppkey"))
-      val pv = Tables.lineitem(s, dir)
-        .join(asiaSupp, col("l_suppkey") === col("s_suppkey"), "left_semi")
-        .groupBy(col("l_partkey"))
-        .agg(sum(col("l_extendedprice").cast("decimal(12,2)")).as("value"))
-      val total = pv.agg(sum(col("value")).as("total"))
-      pv.crossJoin(broadcast(total))
-        .filter(col("value") * 1000 > col("total"))
-        .select(col("l_partkey"), col("value").cast("double").as("value"))
-        .orderBy(col("value").desc, col("l_partkey"))
-    },
-
-    "q13_order_histogram" -> { (s, dir) => // TPC-H Q13 shape: outer-join
-      // count (customers with zero orders must survive) -> histogram
-      Tables.customer(s, dir)
-        .join(Tables.orders(s, dir).filter(col("o_orderpriority") =!= "1-URGENT"),
-          col("c_custkey") === col("o_custkey"), "left")
-        .groupBy(col("c_custkey"))
-        .agg(count(col("o_orderkey")).as("c_count"))
-        .groupBy(col("c_count"))
-        .agg(count(lit(1)).as("custdist"))
-        .orderBy(col("custdist").desc, col("c_count").desc)
-    },
-
-    "q20_semi_chain" -> { (s, dir) => // TPC-H Q20 shape: nested semi chain —
-      // region-filtered suppliers semi-joined against a grouped HAVING
-      // subquery that itself semi-joins a name-filtered part list
-      val asia = Tables.supplier(s, dir)
-        .join(broadcast(Tables.nation(s, dir)), col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(Tables.region(s, dir).filter(col("r_name") === "ASIA")),
-          col("n_regionkey") === col("r_regionkey"))
-        .select(col("s_suppkey"), col("s_name"), col("s_acctbal"))
-      val smallParts = Tables.part(s, dir)
-        .filter(col("p_name").startsWith("small ")).select(col("p_partkey"))
-      val qualified = Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") >= lit("1998-01-01").cast("timestamp_ntz") &&
-          col("l_shipdate") < lit("1999-01-01").cast("timestamp_ntz"))
-        .join(smallParts, col("l_partkey") === col("p_partkey"), "left_semi")
-        .groupBy(col("l_suppkey"), col("l_partkey"))
-        .agg(sum(col("l_quantity").cast("decimal(12,2)")).as("qty"))
-        .filter(col("qty") > 40) // tuned: nonzero qualifiers at every sf
-        .select(col("l_suppkey"))
-      asia.join(qualified, col("s_suppkey") === col("l_suppkey"), "left_semi")
-        .orderBy(col("s_suppkey"))
-    },
-
-    "q21_late_supplier" -> { (s, dir) => // TPC-H Q21 shape: exists + not-
-      // exists against the self-joined fact — suppliers whose line shipped
-      // last among multi-supplier 'F' orders (l_shipdate stands in for the
-      // missing receipt/commit pair; the semi + anti join pair is the shape)
-      val l1 = Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"))
-      val fOrders = Tables.orders(s, dir)
-        .filter(col("o_orderstatus") === "F").select(col("o_orderkey"))
-      val l2 = l1.select(col("l_orderkey").as("o2"), col("l_suppkey").as("s2"))
-      val l3 = l1.select(col("l_orderkey").as("o3"), col("l_suppkey").as("s3"),
-        col("l_shipdate").as("d3"))
-      l1.join(fOrders, col("l_orderkey") === col("o_orderkey"), "left_semi")
-        .join(l2, col("o2") === col("l_orderkey") && col("s2") =!= col("l_suppkey"), "left_semi")
-        .join(l3, col("o3") === col("l_orderkey") && col("s3") =!= col("l_suppkey") &&
-          col("d3") > col("l_shipdate"), "left_anti")
-        .join(Tables.supplier(s, dir), col("l_suppkey") === col("s_suppkey"))
-        .groupBy(col("s_name"))
-        .agg(count(lit(1)).as("numwait"))
-        .orderBy(col("numwait").desc, col("s_name"))
-        .limit(20)
-    },
-
-    "g_source_overlap" -> { (s, dir) => // exact pairwise source-overlap
-      // matrix over distinct document content: the "should crawls A and B
-      // be cross-deduped" report — intersection, Jaccard, and both
-      // directed containments per source pair in exact integer ppm.
-      // Content-keyed inverted index (df >= 2), never sources × corpus;
-      // string mode for the oracle, hashed = 8-byte keys at 100 TB.
-      CurationOps.sourceOverlap(Tables.documents(s, dir))
-        .orderBy(col("source_a"), col("source_b"))
-    },
-
-    "g_sketch_bottomk" -> { (s, dir) => // KMV bottom-k corpus signatures:
-      // each source summarized by its 64 smallest distinct content
-      // fingerprints (deterministic — a pure function of the content
-      // set), pairwise Jaccard ESTIMATED from the merged signatures. The
-      // oracle replays the estimator itself (poly-fp + row_number), so
-      // the row is green in both the sparse-exact and estimate regimes;
-      // estimator ≈ exact is additionally spec-pinned against
-      // g_source_overlap's truth.
-      CurationOps.bottomKJaccard(
-          CurationOps.bottomKSignatures(Tables.documents(s, dir), k = 64, nBuckets = 8),
-          k = 64)
-        .orderBy(col("source_a"), col("source_b"))
-    },
-
-    "g_unimax" -> { (s, dir) => // UniMax mixture allocation (Chung et al.
-      // 2304.09151): split a 20k-token budget across sources as uniformly
-      // as the 2-epoch repetition cap allows — waterfilling computed with
-      // window functions on the domains-sized frame, integer to the
-      // token (remainder to the smallest-cap uncapped sources).
-      CurationOps.unimaxAllocation(
-          Tables.documents(s, dir), budgetTokens = 20000L, epochCap = 2)
-        .orderBy(col("source"))
-    },
-
-    "g_unimax_select" -> { (s, dir) => // UniMax end to end: the allocation
-      // above decides each source's token budget; each source then keeps
-      // its best documents (quality desc, id tiebreak) until its budget
-      // is covered — the full corpus-mixing pass in one DAG, two-phase
-      // per-domain selection with no driver state.
-      CurationOps.unimaxSelect(
-          Tables.documents(s, dir), budgetTokens = 20000L, epochCap = 2, nRanges = 8)
-        .orderBy(col("doc_id"))
-    },
-
-    "g_boilerplate" -> { (s, dir) => // per-source boilerplate removal: any
-      // 8-token passage present in >= 10% of its source's documents (df
-      // >= 2) is dropped EVERYWHERE and documents are reassembled — the
-      // C4/RefinedWeb repeated-line cleaning step (distinct from
-      // paragraph dedup, which keeps first occurrences of global dups).
-      val docs = Tables.documents(s, dir)
-      DedupOps.boilerplateRemove(
-          TextOps.chunkTokens(docs, chunkSize = 8, stride = 8)
-            .join(docs.select(col("doc_id"), col("source")), Seq("doc_id")),
-          pctDocs = 10, minDf = 2, idxCol = "chunk_idx", paraCol = "chunk_text")
-        .orderBy(col("doc_id"))
-    },
-
-    "g_containment" -> { (s, dir) => // near-subset pairs: doc_a whose
-      // 3-shingle set is >= 60% contained in doc_b — the asymmetric
-      // excerpt/quote/wrapper relation MinHash resemblance misses.
-      // Inverted-index equi-join on the shingle, integer cross-multiplied
-      // threshold; string mode for the oracle, hashed + maxDf at 100 TB.
-      DedupOps.containmentPairs(Tables.documents(s, dir), k = 3, thresholdPct = 60)
-        .orderBy(col("doc_a"), col("doc_b"))
-    },
-
-    "g_knn_graph" -> { (s, dir) => // corpus-wide k-NN graph through IVF
-      // cells. At the ORACLE SFs this runs the probe-all setting:
-      // candidates meet through the cell equi-join (map-only assignment
-      // both sides), so probing every cell makes the graph EXACTLY brute
-      // force — the losslessness gate (the brute-force oracle certifies
-      // cell routing loses no edge). At bench SFs the same query runs the
-      // production reduced-probe setting (the quadratic-truth budget
-      // policy, SURVEY §2.8): BENCH then tracks the plan a 100 TB user
-      // runs, and the approximate regime stays gated by g_knn_recall.
-      // Corpus-level knobs (cells, Lloyd iters, k, production nProbe) read
-      // the GraftConf seam; the oracle arm's probe count is CELLS — i.e.
-      // probe-all stays probe-all whatever the cell count is tuned to.
-      val e = Tables.embeddings(s, dir)
-      val cells = GraftConf.int(s, GraftConf.IvfCells, 16)
-      val centroids = SimilarityOps.ivfCentroids(e, k = cells,
-        nIters = GraftConf.int(s, GraftConf.IvfIters, 2))
-      SimilarityOps.knnGraph(e, centroids, k = GraftConf.int(s, GraftConf.KnnK, 5),
-          nProbe = if (oracleScale(dir)) cells else GraftConf.int(s, GraftConf.KnnNProbe, 4))
-        .orderBy(col("vec_id"), col("rank"))
-    },
-
-    "g_knn_recall" -> { (s, dir) => // k-NN graph recall in the approximate
-      // regime: edges found probing 8/16 cells vs the brute-force graph,
-      // asserted >= the floor, over the SAMPLED query set (vec_id % 4 = 0
-      // — the standard sampled-recall protocol; the exact side costs
-      // (n/4)·n instead of n²). The exact graph is PINNED so the
-      // left-semi probe and the denominator read one materialization (no
-      // driver-side count(), no double execution), and the denominator is
-      // computed in-DAG via a 1×1 broadcast cross join. recall_decile is
-      // the floored decile of the measured recall — an oracle-pinned
-      // drift tripwire (measured 0.86-0.89 at the oracle SFs, so decile 8
-      // flips the hash row red well before the 0.75 floor boolean would).
-      // n_exact = 0 (empty corpus) degrades to recall 0 / meets_floor
-      // false instead of NaN.
-      val e = Tables.embeddings(s, dir)
-      val cells = GraftConf.int(s, GraftConf.IvfCells, 16)
-      val k = GraftConf.int(s, GraftConf.KnnK, 5)
-      val centroids = SimilarityOps.ivfCentroids(e, k = cells,
-        nIters = GraftConf.int(s, GraftConf.IvfIters, 2))
-      val sample: Column => Column = recallSample(s, dir)
-      // the exact-truth pin and the production-probe side are independent
-      // materializations over the same centroids — overlap them (guide
-      // §2.6, operators.Par); the approx pin also keeps the final
-      // hits+denominator job from re-deriving the probe-8 scored join
-      val pins = graft.operators.Par.run(s, parallelism = 2)(
-        () => graft.operators.Checkpoints.pin(
-          SimilarityOps.knnGraph(e, centroids, k = k, nProbe = cells,
-            querySample = sample).select(col("vec_id"), col("neighbor_id")),
-          reliable = false),
-        () => graft.operators.Checkpoints.pin(
-          SimilarityOps.knnGraph(e, centroids, k = k,
-            nProbe = GraftConf.int(s, GraftConf.KnnNProbe, 8),
-            querySample = sample).select(col("vec_id"), col("neighbor_id")),
-          reliable = false))
-      val (exact, approx) = (pins(0), pins(1))
-      val hits = exact.join(approx, Seq("vec_id", "neighbor_id"), "left_semi")
-        .agg(count(lit(1)).as("hits"))
-      val denom = exact.agg(
-        countDistinct(col("vec_id")).as("n_queries"), count(lit(1)).as("n_exact"))
-      hits.crossJoin(denom)
-        // integer-exact fixed-point recall (never float-divide a gate: a
-        // quotient landing exactly on a decile/floor boundary must agree
-        // with the oracle's integer `//`)
-        .withColumn("recall_ppm", expr(
-          "CASE WHEN n_exact > 0 THEN (hits * CAST(1000000 AS BIGINT)) div n_exact " +
-            "ELSE CAST(0 AS BIGINT) END"))
-        .select(lit(k).as("k"), col("n_queries"), col("n_exact"),
-          expr("recall_ppm div 100000").cast("int").as("recall_decile"),
-          lit(0.75).as("recall_floor"),
-          (col("recall_ppm") >= 750000L).as("meets_floor"))
-    },
-
-    "g_knn_incr" -> { (s, dir) => // incremental k-NN graph maintenance:
-      // a batch of new embeddings (vec_id % 5 = 0) folds into the old
-      // corpus's graph — new queries score against the whole corpus
-      // through the cells, OLD queries score against the NEW arrivals
-      // only (delta-proportional work), the base edges ride along as
-      // pre-scored candidates, one union + top-k window. The merge
-      // identity top-k(A∪B) = top-k(top-k(A)∪B) makes this EXACT, so at
-      // probe-all the result is the brute-force graph over the unioned
-      // corpus — the same oracle truth as g_knn_graph (and PqSpec pins
-      // incremental == rebuild at reduced probes too). Centroids are
-      // frozen from the OLD corpus — the persisted-index seed contract.
-      val e = Tables.embeddings(s, dir)
-      val old = e.filter(col("vec_id") % 5 =!= 0)
-      val fresh = e.filter(col("vec_id") % 5 === 0)
-      val cells = GraftConf.int(s, GraftConf.IvfCells, 16)
-      val k = GraftConf.int(s, GraftConf.KnnK, 5)
-      val centroids = SimilarityOps.ivfCentroids(old, k = cells,
-        nIters = GraftConf.int(s, GraftConf.IvfIters, 2))
-      val nP = if (oracleScale(dir)) cells else GraftConf.int(s, GraftConf.KnnNProbe, 4)
-      val base = SimilarityOps.knnGraph(old, centroids, k = k, nProbe = nP)
-      SimilarityOps.knnGraphIncremental(base, old, fresh, centroids, k = k, nProbe = nP)
-        .orderBy(col("vec_id"), col("rank"))
-    },
-
-    "g_prototype_prune" -> { (s, dir) => // prototypicality pruning
-      // (Sorscher et al. 2022): keep the 60% HARDEST (least prototypical)
-      // examples per cluster — cell argmax + own-centroid cosine in one
-      // projection, a broadcast k-row count frame, one window per cell;
-      // the integer keep rule (rank·100 ≤ n·60) is engine-exact. Fixture
-      // centroids make every stage oracle-replayable.
-      SimilarityOps.prototypePrune(Tables.embeddings(s, dir),
-          fixtureCentroids(64), keepPct = 60, keepHardest = true)
-        .orderBy(col("vec_id"))
-    },
-
-    "g_semdedup_knn" -> { (s, dir) => // SemDeDup routed through the k-NN
-      // graph — the paper's actual deployment shape (kNN then threshold):
-      // the drop rule becomes a filter + keyed min over n·k edge rows,
-      // no pair scan at all. Probe-all makes the graph's top-5 exact, so
-      // the oracle replays the identical rule from brute force; reduced
-      // probes at bench SFs under-drop only (policy; spec pins validity).
-      val e = Tables.embeddings(s, dir)
-      val cells = GraftConf.int(s, GraftConf.IvfCells, 16)
-      val centroids = SimilarityOps.ivfCentroids(e, k = cells,
-        nIters = GraftConf.int(s, GraftConf.IvfIters, 2))
-      val edges = SimilarityOps.knnGraph(e, centroids,
-        k = GraftConf.int(s, GraftConf.KnnK, 5),
-        nProbe = if (oracleScale(dir)) cells else GraftConf.int(s, GraftConf.KnnNProbe, 4))
-      SimilarityOps.semanticDedupKnn(e, edges,
-          threshold = GraftConf.fraction(s, GraftConf.SemdedupThreshold, 0.35))
-        .orderBy(col("vec_id"))
-    },
-
-    "g_knn_descent" -> { (s, dir) => // NN-descent refinement: a COARSE
-      // cheap init (nProbe 2/16 — deliberately under-probed) plus two
-      // general-neighborhood descent rounds, measured on the sampled
-      // brute-force truth. The oracle pins both deciles: init 3 (0.38),
-      // descended 5 (0.57 at both oracle SFs) — the operator's value IS
-      // the gap, and `improved` is the in-DAG monotonicity witness
-      // (descent keeps old edges in the candidate pool, so it can never
-      // lose a hit). Candidate volume per round is n·(2k)², corpus-pair
-      // independent — recall bought without raising nProbe.
-      val e = Tables.embeddings(s, dir)
-      val cells = GraftConf.int(s, GraftConf.IvfCells, 16)
-      val k = GraftConf.int(s, GraftConf.KnnK, 5)
-      val centroids = SimilarityOps.ivfCentroids(e, k = cells,
-        nIters = GraftConf.int(s, GraftConf.IvfIters, 2))
-      val sample: Column => Column = recallSample(s, dir)
-      // the exact-truth pin and the coarse-init pin are independent
-      // eager materializations over the same centroids — overlap them
-      // (guide §2.6, operators.Par). Re-measured in r21 after the r20
-      // driver flagged this row 0.81 vs r19: on idle full-bench
-      // methodology the overlapped form is 4.43 s vs 6.63 s sequential
-      // (docs/bench_r21_idle.json vs bench_r20_idle.json), and a 5-rep
-      // A/B of both shapes agrees (5.45 vs 6.20/6.68 min-of-5) — the
-      // driver's regression was r19-record noise, so the overlap stays.
-      val pins = graft.operators.Par.run(s, parallelism = 2)(
-        () => graft.operators.Checkpoints.pin(
-          SimilarityOps.knnGraph(e, centroids, k = k, nProbe = cells,
-            querySample = sample).select(col("vec_id"), col("neighbor_id")),
-          reliable = false),
-        () => graft.operators.Checkpoints.pin(
-          SimilarityOps.knnGraph(e, centroids, k = k, nProbe = 2),
-          reliable = false))
-      val (exact, init) = (pins(0), pins(1))
-      val desc = SimilarityOps.nnDescend(e, init, k = k,
-        nIters = GraftConf.int(s, GraftConf.DescentIters, 2))
-      descentGate(exact, init, desc, k)
-    },
-
-    "g_knn_descent_pq" -> { (s, dir) => // descent-on-codes: the same
-      // coarse nProbe=2 init and the same two general-neighborhood
-      // rounds, but each round's n·(2k)² proposals are ADC-scored against
-      // the PINNED codes frame (trained m=16 c=16 codebooks — m ints per
-      // proposal instead of d doubles) and only the per-query top-(k·2)
-      // shortlist gets the exact cosine that enters the merge. The merged
-      // graph stays exact-similarity-ordered, so `improved` is still a
-      // structural witness. The oracle pins the deterministic counts and
-      // both measured deciles (trained state is deterministic — drift
-      // means the path changed): the value claimed is that an
-      // AGGRESSIVELY pruned (refine=2) codes-scored descent still climbs
-      // from the same init the full-precision gate starts at.
-      val e = Tables.embeddings(s, dir)
-      val cells = GraftConf.int(s, GraftConf.IvfCells, 16)
-      val k = GraftConf.int(s, GraftConf.KnnK, 5)
-      val centroids = SimilarityOps.ivfCentroids(e, k = cells,
-        nIters = GraftConf.int(s, GraftConf.IvfIters, 2))
-      val sample: Column => Column = recallSample(s, dir)
-      // three independent eager chains — the PQ codebook training (its
-      // own Lloyd loop, centroid-independent), the exact-truth pin and
-      // the coarse-init pin — overlapped (guide §2.6); Any-typed because
-      // the chains return different shapes
-      val chains = graft.operators.Par.run[Any](s, parallelism = 3)(
-        () => SimilarityOps.trainPqCodebooksJoint(e,
-          m = GraftConf.int(s, GraftConf.PqM, 16),
-          c = GraftConf.int(s, GraftConf.PqC, 16), nIters = 3),
-        () => graft.operators.Checkpoints.pin(
-          SimilarityOps.knnGraph(e, centroids, k = k, nProbe = cells,
-            querySample = sample).select(col("vec_id"), col("neighbor_id")),
-          reliable = false),
-        () => graft.operators.Checkpoints.pin(
-          SimilarityOps.knnGraph(e, centroids, k = k, nProbe = 2),
-          reliable = false))
-      val codebooks = chains(0).asInstanceOf[Seq[Seq[(Int, Seq[Double])]]]
-      val exact = chains(1).asInstanceOf[org.apache.spark.sql.DataFrame]
-      val init = chains(2).asInstanceOf[org.apache.spark.sql.DataFrame]
-      val desc = SimilarityOps.nnDescendPq(e, init, codebooks, k = k,
-        nIters = GraftConf.int(s, GraftConf.DescentIters, 2),
-        refine = GraftConf.int(s, GraftConf.KnnRefine, 2))
-      descentGate(exact, init, desc, k)
-    },
-
-    "g_knn_pq" -> { (s, dir) => // the k-NN graph's 100 TB scoring path:
-      // ADC over PQ codes — the query stays raw and carries its per-query
-      // fixed-point LUT (floor(dot(q_s, codeword)·1e6) longs, one map-only
-      // graft_dot projection); the neighbor side is the codes-only index
-      // frame; per candidate the score is the cosine of the query against
-      // the neighbor's reconstruction (integer LUT + norm-table sums, one
-      // double division); exact cosine re-rank of the per-query ADC
-      // top-20. Fixture centroids + codebooks (shared deterministic
-      // state, the g_sim_ivfpq discipline) make every stage — cell
-      // argmax, probe ranking, 8 code argmaxes, the 32-entry LUT and norm
-      // tables, the shortlist window, the floored-cosine re-rank —
-      // replayable by the DuckDB oracle, so the full codes-only pipeline
-      // is hash-gated end to end at the production setting (nProbe 2/4):
-      // no quadratic truth anywhere in this row. Deliberately NOT
-      // GraftConf-wired: the static oracle SQL replays this exact fixture
-      // geometry (PqM/PqC/k/nProbe/refine are baked into its CTEs), so
-      // these are replay constants, not tuning knobs — the trained-path
-      // twin g_knn_pq_recall is where the knobs live.
-      val e = Tables.embeddings(s, dir)
-      SimilarityOps.knnGraphPq(e, fixtureCentroids(64), fixturePqCodebooks(64),
-          k = 5, nProbe = 2, refine = 4)
-        .orderBy(col("vec_id"), col("rank"))
-    },
-
-    "g_knn_pq_recall" -> { (s, dir) => // measured recall of the PRODUCTION
-      // codes-only graph — data-derived IVF routing (Lloyd k=16×2) and
-      // data-TRAINED codebooks (trainPqCodebooks m=16 c=16, the real
-      // deployment where codebooks fit the corpus) at nProbe 8/16,
-      // refine 16 — vs the full-precision brute-force truth for the
-      // sampled queries (vec_id % 4 = 0; the exact side is pinned once
-      // for the semi-join and the in-DAG denominator). Trained state is
-      // not SQL-replayable, so the oracle pins the deterministic counts
-      // and the measured recall's decile (0.805-0.822 here → decile 8 at
-      // both oracle SFs — k-means is deterministic, so drift means the
-      // path changed) plus the 0.70 floor gate against the 0.86 routing
-      // ceiling g_knn_recall pins.
-      val e = Tables.embeddings(s, dir)
-      val cells = GraftConf.int(s, GraftConf.IvfCells, 16)
-      val k = GraftConf.int(s, GraftConf.KnnK, 5)
-      val centroids = SimilarityOps.ivfCentroids(e, k = cells,
-        nIters = GraftConf.int(s, GraftConf.IvfIters, 2))
-      val sample: Column => Column = recallSample(s, dir)
-      // codebook training (centroid-independent Lloyd loop) and the
-      // exact-truth pin are independent eager chains — overlapped
-      // (guide §2.6); Any-typed because the chains return different shapes
-      val chains = graft.operators.Par.run[Any](s, parallelism = 2)(
-        () => SimilarityOps.trainPqCodebooksJoint(e,
-          m = GraftConf.int(s, GraftConf.PqM, 16),
-          c = GraftConf.int(s, GraftConf.PqC, 16), nIters = 3),
-        () => graft.operators.Checkpoints.pin(
-          SimilarityOps.knnGraph(e, centroids, k = k, nProbe = cells,
-            querySample = sample).select(col("vec_id"), col("neighbor_id")),
-          reliable = false))
-      val codebooks = chains(0).asInstanceOf[Seq[Seq[(Int, Seq[Double])]]]
-      val exact = chains(1).asInstanceOf[org.apache.spark.sql.DataFrame]
-      val approx = SimilarityOps.knnGraphPq(e, centroids, codebooks,
-          k = k, nProbe = GraftConf.int(s, GraftConf.KnnNProbe, 8),
-          refine = GraftConf.int(s, GraftConf.KnnRefine, 16), querySample = sample)
-        .select(col("vec_id"), col("neighbor_id"))
-      val hits = exact.join(approx, Seq("vec_id", "neighbor_id"), "left_semi")
-        .agg(count(lit(1)).as("hits"))
-      val denom = exact.agg(
-        countDistinct(col("vec_id")).as("n_queries"), count(lit(1)).as("n_exact"))
-      hits.crossJoin(denom)
-        .withColumn("recall_ppm", expr(
-          "CASE WHEN n_exact > 0 THEN (hits * CAST(1000000 AS BIGINT)) div n_exact " +
-            "ELSE CAST(0 AS BIGINT) END"))
-        .select(lit(k).as("k"), col("n_queries"), col("n_exact"),
-          expr("recall_ppm div 100000").cast("int").as("recall_decile"),
-          lit(0.70).as("recall_floor"),
-          (col("recall_ppm") >= 700000L).as("meets_floor"))
-    },
-
-    "g_graph_search" -> { (s, dir) => // the SERVING path: a query batch
-      // answered by beam search over the persisted k-NN graph — per query
-      // per hop ≤ beam·k candidates meet the corpus through equi-joins
-      // (never a corpus scan, never cellPop-sized probes). Probes are the
-      // mod-10 member sample (self-matches excluded), entries the mod-50
-      // navigation seeds (bounded broadcast). At the oracle SFs the graph
-      // is probe-all == brute force, so the whole walk — entry scoring,
-      // beam cuts, frontier anti-joins, final ranks — is hash-replayed by
-      // DuckDB with the two hops unrolled; at bench SFs the same walk runs
-      // over the production reduced-probe graph (quadratic-truth policy).
-      val e = Tables.embeddings(s, dir)
-      val cells = GraftConf.int(s, GraftConf.IvfCells, 16)
-      val k = GraftConf.int(s, GraftConf.KnnK, 5)
-      val centroids = SimilarityOps.ivfCentroids(e, k = cells,
-        nIters = GraftConf.int(s, GraftConf.IvfIters, 2))
-      // pin the graph: graphSearch's per-hop frontier pins would
-      // otherwise re-derive the whole scored-join + window knnGraph
-      // subtree once per hop (cross-job plans share no ReusedExchange)
-      val graph = graft.operators.Checkpoints.pin(
-        SimilarityOps.knnGraph(e, centroids, k = k,
-          nProbe = if (oracleScale(dir)) cells
-            else GraftConf.int(s, GraftConf.KnnNProbe, 4)),
-        reliable = false)
-      SimilarityOps.graphSearch(graph, e,
-          probes = e.filter(col("vec_id") % 10 === 0),
-          entry = e.filter(col("vec_id") % 50 === 0).select(col("vec_id")),
-          k = k, beam = GraftConf.int(s, GraftConf.GraphBeam, 8),
-          nHops = GraftConf.int(s, GraftConf.GraphHops, 2),
-          excludeSelf = true, probeIdCol = "vec_id")
-        .orderBy(col("vec_id"), col("rank"))
-    },
-
-    "g_graph_search_pq" -> { (s, dir) => // codes-only serving: the same
-      // walk as g_graph_search but every scoring touch during the hops
-      // reads the pinned codes frame (m ints) against the probe's pinned
-      // fixed-point LUT; beam cuts order by the ADC quotient; only the
-      // final per-query ADC top-(k·refine) shortlist joins the raw
-      // vectors for the exact answer. At 100 TB the raw corpus is k·refine
-      // point lookups per query — the walk itself never reads it. Fixture
-      // codebooks (the g_knn_pq discipline) make EVERY stage — 8 code
-      // argmaxes, per-probe LUTs, norm table, ADC beams, frontier
-      // anti-joins, shortlist cut, floored-cosine re-rank — DuckDB-
-      // replayable, so the full codes-serving pipeline is hash-gated end
-      // to end; walk geometry (beam 8, hops 2, refine 4, k 5) is baked
-      // into the replay, so like g_knn_pq this row is deliberately not
-      // GraftConf-wired.
-      val e = Tables.embeddings(s, dir)
-      val cells = GraftConf.int(s, GraftConf.IvfCells, 16)
-      val centroids = SimilarityOps.ivfCentroids(e, k = cells,
-        nIters = GraftConf.int(s, GraftConf.IvfIters, 2))
-      // pin the graph (the g_graph_search rationale: one derivation,
-      // not one per hop)
-      val graph = graft.operators.Checkpoints.pin(
-        SimilarityOps.knnGraph(e, centroids, k = 5,
-          nProbe = if (oracleScale(dir)) cells
-            else GraftConf.int(s, GraftConf.KnnNProbe, 4)),
-        reliable = false)
-      SimilarityOps.graphSearchPq(graph, e,
-          probes = e.filter(col("vec_id") % 10 === 0),
-          entry = e.filter(col("vec_id") % 50 === 0).select(col("vec_id")),
-          codebooks = fixturePqCodebooks(64),
-          k = 5, beam = 8, nHops = 2, refine = 4,
-          excludeSelf = true, probeIdCol = "vec_id")
-        .orderBy(col("vec_id"), col("rank"))
-    },
-  )
-
   /** Shared by g_chunk_store and q_stream_store. */
-  private lazy val oracleSqlChunkStore: String =
+  private[graft] lazy val oracleSqlChunkStore: String =
     """SELECT doc_id AS media_id, md5(text) AS content_md5
       |FROM documents WHERE length(coalesce(text, '')) > 0
       |ORDER BY media_id""".stripMargin
 
   /** Shared by g_dataset_card and q_stream_card. */
-  private lazy val oracleSqlDatasetCard: String =
+  private[graft] lazy val oracleSqlDatasetCard: String =
     """SELECT source,
       |       CAST(count(*) AS BIGINT) AS n_docs,
       |       CAST(sum(length(text)) AS BIGINT) AS n_chars,
@@ -7137,7 +428,7 @@ object SparkEntry {
       |FROM documents GROUP BY source ORDER BY source""".stripMargin
 
   /** Shared by g_dedup_incremental_exact, g_dedup_bloom and q_stream_bloom. */
-  private lazy val oracleSqlDedupIncrementalExact: String =
+  private[graft] lazy val oracleSqlDedupIncrementalExact: String =
     """SELECT a.doc_id AS new_id,
       |       CAST(count(b.doc_id) AS BIGINT) AS n_corpus_copies,
       |       min(b.doc_id) AS first_copy_id
@@ -7146,30 +437,8 @@ object SparkEntry {
       |WHERE a.doc_id % 5 = 0
       |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  /** Shared by g_dedup_clusters, g_dedup_cc_star and g_dedup_cc_incr. */
-  private lazy val oracleSqlDedupClusters: String =
-    """WITH RECURSIVE sh AS (
-      |  SELECT doc_id, list_distinct(CASE WHEN len(t) >= 3
-      |    THEN list_transform(range(1, len(t) - 1), i -> array_to_string(t[i:i+2], ' '))
-      |    ELSE [array_to_string(t, ' ')] END) AS toks
-      |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)),
-      |pairs AS (
-      |  SELECT a.doc_id AS id1, b.doc_id AS id2
-      |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-      |  WHERE len(list_intersect(a.toks, b.toks)) /
-      |        (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks))) >= 0.5),
-      |edges AS (
-      |  SELECT id1 AS src, id2 AS dst FROM pairs
-      |  UNION SELECT id2 AS src, id1 AS dst FROM pairs),
-      |reach(a, b) AS (
-      |  SELECT src, src FROM edges
-      |  UNION
-      |  SELECT r.a, e.dst FROM reach r JOIN edges e ON r.b = e.src)
-      |SELECT a AS doc_id, min(b) AS cluster_id
-      |FROM reach GROUP BY a ORDER BY doc_id""".stripMargin
-
   /** Shared by g_dedup_incremental, g_dedup_indexed and q_stream_lsh. */
-  private lazy val oracleSqlDedupIncremental: String =
+  private[graft] lazy val oracleSqlDedupIncremental: String =
     """WITH sh AS (
       |  SELECT doc_id, list_distinct(CASE WHEN len(t) >= 3
       |    THEN list_transform(range(1, len(t) - 1), i -> array_to_string(t[i:i+2], ' '))
@@ -7184,7 +453,7 @@ object SparkEntry {
       |ORDER BY new_id, corpus_id""".stripMargin
 
   /** Shared by g_dup_spans_incr and q_stream_spans. */
-  private lazy val oracleSqlDupSpansIncr: String =
+  private[graft] lazy val oracleSqlDupSpansIncr: String =
     """WITH base AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
       |pos AS (SELECT doc_id, unnest(range(1, len(t) - 1)) AS i, t FROM base WHERE len(t) >= 3),
       |sh AS (SELECT doc_id, i - 1 AS idx, array_to_string(t[i:i+2], ' ') AS shingle FROM pos),
@@ -7200,7 +469,7 @@ object SparkEntry {
       |ORDER BY doc_id, start_tok""".stripMargin
 
   /** Shared by g_exact_quantiles and q_stream_quantiles. */
-  private lazy val oracleSqlExactQuantiles: String =
+  private[graft] lazy val oracleSqlExactQuantiles: String =
     """WITH v AS (SELECT lang, doc_id, n_chars,
       |        row_number() OVER (PARTITION BY lang ORDER BY n_chars, doc_id) AS rn,
       |        count(*) OVER (PARTITION BY lang) AS n
@@ -7211,16 +480,8 @@ object SparkEntry {
       |  max(CASE WHEN rn = CAST(ceil(0.75 * n) AS BIGINT) THEN n_chars END) AS p75
       |FROM v GROUP BY lang ORDER BY lang""".stripMargin
 
-  /** Shared by g_knn_descent and g_knn_descent_pq. */
-  private lazy val oracleSqlKnnDescent: String =
-    """SELECT 5 AS k,
-      |  CAST((SELECT count(*) FROM embeddings WHERE vec_id % 4 = 0) AS BIGINT) AS n_queries,
-      |  CAST(5 * (SELECT count(*) FROM embeddings WHERE vec_id % 4 = 0) AS BIGINT) AS n_exact,
-      |  3 AS init_decile, 5 AS desc_decile,
-      |  true AS improved, true AS meets_floor""".stripMargin
-
   /** Shared by g_para_dedup and q_stream_curated. */
-  private lazy val oracleSqlParaDedup: String =
+  private[graft] lazy val oracleSqlParaDedup: String =
     """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
       |s AS (SELECT doc_id, toks, unnest(range(0, len(toks), 8)) AS st FROM t),
       |p AS (SELECT doc_id, CAST(st // 8 AS INT) AS idx,
@@ -7236,7 +497,7 @@ object SparkEntry {
       |FROM r GROUP BY doc_id ORDER BY doc_id""".stripMargin
 
   /** Shared by g_sim_topk, g_sim_ann, g_sim_ivf, g_sim_ivf_indexed and q_stream_ivf. */
-  private lazy val oracleSqlSimTopK: String =
+  private[graft] lazy val oracleSqlSimTopK: String =
     """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0)
       |SELECT vec_id,
       |       floor((list_dot_product(CAST(embedding AS DOUBLE[]), qv) /
@@ -7246,13 +507,13 @@ object SparkEntry {
       |ORDER BY sim DESC, vec_id LIMIT 20""".stripMargin
 
   /** Shared by g_sketch_topk and q_stream_topk. */
-  private lazy val oracleSqlSketchTopK: String =
+  private[graft] lazy val oracleSqlSketchTopK: String =
     """SELECT tok, CAST(count(*) AS BIGINT) AS cnt
       |FROM (SELECT unnest(string_split(text, ' ')) AS tok FROM documents)
       |GROUP BY tok ORDER BY cnt DESC, tok LIMIT 10""".stripMargin
 
   /** Shared by g_token_budget and q_stream_budget. */
-  private lazy val oracleSqlTokenBudget: String =
+  private[graft] lazy val oracleSqlTokenBudget: String =
     """WITH k AS (SELECT doc_id,
       |        ((doc_id % 2147483647) * 62089911 + 7) % 2147483647 AS sort_key,
       |        CAST(len(string_split(coalesce(text, ''), ' ')) AS BIGINT) AS n_tokens
@@ -7265,3045 +526,13 @@ object SparkEntry {
       |WHERE cum - n_tokens < 9000
       |ORDER BY doc_id""".stripMargin
 
-  /** Shared by q_asof_lastview and q_asof_chunked. */
-  private lazy val oracleSqlAsofLastView: String =
-    """WITH v AS (SELECT user_id, epoch_us(ts) AS ts_us, max(event_id) AS view_event_id
-      |           FROM events WHERE event_type = 'view' GROUP BY 1, 2),
-      |     p AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us
-      |           FROM events WHERE event_type = 'purchase')
-      |SELECT p.event_id, p.user_id, p.ts_us,
-      |       v.view_event_id, v.ts_us AS view_ts_us, p.ts_us - v.ts_us AS gap_us
-      |FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.ts_us >= v.ts_us
-      |ORDER BY p.event_id""".stripMargin
-
-  /** Shared by q_canon_streams and q_canon_streams_sorted. */
-  private lazy val oracleSqlCanonStreams: String =
-    """SELECT user_id AS id, count(*) AS n_events,
-      |       string_agg(CAST(event_id AS INT), ',' ORDER BY CAST(event_id AS INT)) AS revs_csv
-      |FROM events GROUP BY user_id ORDER BY id""".stripMargin
-
-  /** Shared by q_funnel3 and q_funnel3_agg. */
-  private lazy val oracleSqlFunnel3: String =
-    """WITH base AS (SELECT DISTINCT user_id FROM events
-      |              WHERE event_type IN ('signup', 'view', 'purchase')),
-      |su AS (SELECT user_id, min(epoch_us(ts)) AS t FROM events
-      |       WHERE event_type = 'signup' GROUP BY user_id),
-      |v AS (SELECT e.user_id, min(epoch_us(e.ts)) AS t
-      |      FROM events e JOIN su ON e.user_id = su.user_id
-      |      WHERE e.event_type = 'view' AND epoch_us(e.ts) > su.t
-      |      GROUP BY e.user_id),
-      |p AS (SELECT e.user_id, min(epoch_us(e.ts)) AS t
-      |      FROM events e JOIN v ON e.user_id = v.user_id
-      |      WHERE e.event_type = 'purchase' AND epoch_us(e.ts) > v.t
-      |      GROUP BY e.user_id)
-      |SELECT b.user_id,
-      |       coalesce(su.t, 0) AS signup_us,
-      |       coalesce(v.t, 0) AS view_us,
-      |       coalesce(p.t, 0) AS purchase_us
-      |FROM base b
-      |LEFT JOIN su USING (user_id)
-      |LEFT JOIN v USING (user_id)
-      |LEFT JOIN p USING (user_id)
-      |ORDER BY user_id""".stripMargin
-
-  /** Shared by q_index_build and q_stream_index. */
-  private lazy val oracleSqlIndexBuild: String =
-    """SELECT event_type AS et, CAST(year(ts)*1000 + dayofyear(ts) AS INT) AS pid,
-      |       user_id AS aid, event_id AS eid, epoch_us(ts) AS ts_us
-      |FROM events ORDER BY et, pid, ts_us, eid""".stripMargin
-
-  /** Shared by q_message_counter and q_stream_counters. */
-  private lazy val oracleSqlMessageCounter: String =
-    """SELECT event_type AS msgid, count(*) AS cv
-      |FROM events GROUP BY event_type ORDER BY msgid""".stripMargin
-
-  /** Shared by q_sessionize and q_sessionize_chunked. */
-  private lazy val oracleSqlSessionize: String =
-    """WITH t AS (
-      |  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-      |         lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS prev_us
-      |  FROM events),
-      |s AS (
-      |  SELECT user_id, event_id, ts_us,
-      |         CAST(sum(CASE WHEN prev_us IS NULL OR ts_us - prev_us > 21600000000 THEN 1 ELSE 0 END)
-      |              OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-      |                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-      |  FROM t)
-      |SELECT user_id, session_id, count(*) AS n_events,
-      |       min(ts_us) AS start_us, max(ts_us) - min(ts_us) AS dur_us
-      |FROM s GROUP BY user_id, session_id
-      |ORDER BY user_id, session_id""".stripMargin
-
-  /** Shared by q_ts_range and q_ts_range_derived. */
-  private lazy val oracleSqlTsRange: String =
-    s"""SELECT event_id, user_id, event_type, epoch_us(ts) AS ts_us
-       |FROM events WHERE ts BETWEEN $SqlT10 AND $SqlT20
-       |ORDER BY event_id""".stripMargin
+  /** One entry per implemented operator from SURVEY.md §2: every row's
+    * closure, from the [[rows.QueryDef]] registry. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    rows.QueryDef.all.map { case (name, d) => name -> d.build }
 
   /** DuckDB-equivalent SQL per query (same tables, same column names, same
-    * row order). */
-  def oracleSql: Map[String, String] = Map(
-    "q_load_aggregate" ->
-      """SELECT user_id, event_id, epoch_us(ts) AS ts_us, event_type, value, props
-        |FROM events WHERE user_id = 7 ORDER BY event_id""".stripMargin,
-
-    "q_load_desc" ->
-      """SELECT user_id, event_id, epoch_us(ts) AS ts_us, event_type
-        |FROM events WHERE user_id = 7 ORDER BY event_id DESC""".stripMargin,
-
-    "q_load_event" ->
-      """SELECT event_id, epoch_us(ts) AS ts_us, props
-        |FROM events WHERE user_id = 7 ORDER BY event_id LIMIT 1""".stripMargin,
-
-    "q_load_rebuild" ->
-      """SELECT props FROM events WHERE user_id = 7 ORDER BY event_id LIMIT 1""".stripMargin,
-
-    "q_ts_range" ->
-      oracleSqlTsRange,
-
-    "q_ts_range_derived" ->
-      // same truth as q_ts_range: the derived-column filter must select
-      // exactly the rows the raw-bound convention selects
-      oracleSqlTsRange,
-
-    "q_index_build" ->
-      oracleSqlIndexBuild,
-
-    "q_index_range" ->
-      s"""SELECT event_type AS et, CAST(year(ts)*1000 + dayofyear(ts) AS INT) AS pid,
-         |       user_id AS aid, event_id AS eid, epoch_us(ts) AS ts_us
-         |FROM events
-         |WHERE event_type = 'purchase'
-         |  AND CAST(year(ts)*1000 + dayofyear(ts) AS INT) BETWEEN 2024010 AND 2024020
-         |  AND ts BETWEEN $SqlT10 AND $SqlT20
-         |ORDER BY ts_us, eid""".stripMargin,
-
-    "q_index_join" ->
-      s"""SELECT e.event_id, e.user_id, e.event_type, epoch_us(e.ts) AS ts_us, e.value
-         |FROM events e
-         |JOIN (SELECT user_id AS aid, event_id AS eid FROM events
-         |      WHERE event_type = 'purchase' AND ts BETWEEN $SqlT10 AND $SqlT20) i
-         |  ON e.user_id = i.aid AND e.event_id = i.eid
-         |ORDER BY e.event_id""".stripMargin,
-
-    "q_semi_join" ->
-      s"""SELECT user_id, count(*) AS n_events,
-         |       min(epoch_us(ts)) AS first_us, max(epoch_us(ts)) AS last_us
-         |FROM events
-         |WHERE user_id IN (SELECT DISTINCT user_id FROM events
-         |                  WHERE event_type = 'error' AND ts BETWEEN $SqlT10 AND $SqlT20)
-         |GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "q_aggregate_streams" ->
-      """SELECT user_id, count(*) AS n_events,
-        |       string_agg(event_id, ',' ORDER BY event_id) AS ids_csv
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "q_keyset_page" ->
-      """SELECT event_id, epoch_us(ts) AS ts_us, event_type
-        |FROM events WHERE user_id = 7 AND event_id > 100
-        |ORDER BY event_id LIMIT 10""".stripMargin,
-
-    "q_min_ts" ->
-      "SELECT min(epoch_us(ts)) AS min_ts_us FROM events",
-
-    "q_message_counter" ->
-      oracleSqlMessageCounter,
-
-    "q_count_for_type" ->
-      "SELECT count(*) AS cnt FROM events WHERE event_type = 'click'",
-
-    "q_stream_counters" ->
-      oracleSqlMessageCounter,
-
-    "q_stream_dedup" ->
-      // the doubled stream must land exactly the batch-distinct counts
-      """SELECT event_type AS msgid, count(*) AS cv
-        |FROM (SELECT DISTINCT user_id, event_id, event_type FROM events)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_stream_versioned" ->
-      // the q_stream_counters shape, post-delete, over the versioned
-      // layout: the streamed-then-deleteAndPromoted table must read back
-      // as the batch truth minus aggregate 7
-      """SELECT event_type AS msgid, count(*) AS cv
-        |FROM events WHERE user_id <> 7
-        |GROUP BY event_type ORDER BY msgid""".stripMargin,
-
-    "q_stream_curated" ->
-      // the streaming curated landing must equal the batch paragraph-dedup
-      // truth — g_para_dedup's oracle verbatim (same chunking, same
-      // first-occurrence-wins, same ordered reassembly)
-      oracleSqlParaDedup,
-
-    // the single-batch budget landing shares g_token_budget's
-    // single-window truth (same budget, seed, permutation order)
-    "q_stream_budget" ->
-      oracleSqlTokenBudget,
-
-    // the streamed histogram shares the batch exact-quantile truth
-    "q_stream_quantiles" ->
-      oracleSqlExactQuantiles,
-
-    // the streamed heavy-hitter state shares the batch sketch's truth:
-    // exact recount while the vocabulary fits the tracked slots,
-    // deterministic tie-break (count desc, token asc) on both sides
-    "q_stream_topk" ->
-      oracleSqlSketchTopK,
-
-    // the streamed card shares the batch card's truth
-    "q_stream_card" ->
-      oracleSqlDatasetCard,
-
-    "q_rev_monitor" ->
-      // the monitor's per-aggregate sorted fold in closed form: scanning
-      // revs ascending, last = max of the preceding revs (0 initially).
-      // Tied revs: whichever tied row is scanned first is judged against
-      // the prior max and the rest are conflicts — the output multiset is
-      // identical for any tie order, so the total ORDER BY pins one form
-      """WITH r AS (
-        |  SELECT CAST(user_id AS VARCHAR) AS idB64, CAST(event_id AS INT) AS rev,
-        |         COALESCE(CAST(max(event_id) OVER (
-        |           PARTITION BY user_id ORDER BY event_id
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS INT), 0) AS last
-        |  FROM events)
-        |SELECT idB64, rev,
-        |       CASE WHEN rev = last + 1 THEN 'ok'
-        |            WHEN rev <= last THEN 'conflict'
-        |            ELSE 'gap' END AS status
-        |FROM r ORDER BY idB64, rev, status""".stripMargin,
-
-    "q_latest_state" ->
-      // arg_max == max_by; the argmax key (event_id) is unique per group
-      """SELECT user_id, max(event_id) AS last_rev,
-        |       arg_max(event_type, event_id) AS last_type,
-        |       arg_max(epoch_us(ts), event_id) AS last_ts_us
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "q_cohort_retention" ->
-      // integer day arithmetic on epoch micros (positive -> floor == trunc
-      // on both engines)
-      """WITH ev AS (
-        |  SELECT user_id, CAST(epoch_us(ts) // 86400000000 AS BIGINT) AS day
-        |  FROM events),
-        |fs AS (SELECT user_id, min(day) AS cohort_day FROM ev GROUP BY 1)
-        |SELECT cohort_day, e.day - cohort_day AS days_since,
-        |       CAST(count(DISTINCT e.user_id) AS BIGINT) AS active_users
-        |FROM ev e JOIN fs USING (user_id)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q_pivot_types" ->
-      // the conditional-aggregate expansion Catalyst lowers pivot into
-      """SELECT user_id,
-        |  CAST(count(CASE WHEN event_type = 'click' THEN 1 END) AS BIGINT) AS click,
-        |  CAST(count(CASE WHEN event_type = 'view' THEN 1 END) AS BIGINT) AS view,
-        |  CAST(count(CASE WHEN event_type = 'purchase' THEN 1 END) AS BIGINT) AS purchase,
-        |  CAST(count(CASE WHEN event_type = 'signup' THEN 1 END) AS BIGINT) AS signup,
-        |  CAST(count(CASE WHEN event_type = 'error' THEN 1 END) AS BIGINT) AS error
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "q_rollup_daily" ->
-      // ROLLUP levels with the standard first-arg-is-MSB grouping id
-      """SELECT event_type, CAST(year(ts)*1000 + dayofyear(ts) AS INT) AS pid,
-        |       count(*) AS n, CAST(GROUPING(event_type, pid) AS BIGINT) AS gid
-        |FROM events
-        |GROUP BY ROLLUP(event_type, pid)
-        |ORDER BY gid, event_type, pid""".stripMargin,
-
-    "q_daily_counts" ->
-      """SELECT CAST(year(ts)*1000 + dayofyear(ts) AS INT) AS pid, count(*) AS n,
-        |       count(CASE WHEN event_type = 'purchase' THEN 1 END) AS n_purchase
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_commit_split" ->
-      // the pos-offset rule recomputed arithmetically: private events take
-      // pos 0..n-1, public events n-1+5+k (PublicEventsOffset = 5)
-      """WITH c AS (
-        |  SELECT user_id AS id, CAST(year(ts)*1000 + dayofyear(ts) AS INT) AS rev,
-        |         CAST(count(*) AS INT) AS n,
-        |         CAST(count(CASE WHEN value >= 100 THEN 1 END) AS INT) AS m
-        |  FROM events GROUP BY 1, 2)
-        |SELECT id, rev, n AS n_private, m AS n_public,
-        |       array_to_string(list_transform(range(0, n), i -> CAST(i AS VARCHAR)), ',') AS priv_pos,
-        |       coalesce(array_to_string(list_transform(range(0, m), j -> CAST(n - 1 + 5 + j AS VARCHAR)), ','), '') AS pub_pos
-        |FROM c ORDER BY id, rev""".stripMargin,
-
-    "q_counter_fold" ->
-      """SELECT event_type AS msgid,
-        |       CAST(count(*) - count(CASE WHEN ts < TIMESTAMP '2024-01-10 00:00:00' THEN 1 END) AS BIGINT) AS cv
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_message_scan" ->
-      """WITH m AS (SELECT epoch_us(ts)*10 + 116444736000000000 AS ft FROM events)
-        |SELECT (ft // 864000000000) * 864000000000 AS date,
-        |       count(*) AS n_msgs, min(ft) AS first_ts, max(ft) AS last_ts
-        |FROM m GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_migration" ->
-      """SELECT event_id, user_id, upper(event_type) AS et_migrated,
-        |       CASE WHEN value >= 100 THEN 'public' ELSE 'private' END AS visibility,
-        |       epoch_us(ts) + 1000000 AS ts_shifted_us
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "q1_pricing" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       CAST(sum(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
-        |       CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_base,
-        |       CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2)) *
-        |                (CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(4,2))))
-        |            AS DOUBLE) AS sum_disc_price,
-        |       CAST(sum(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) / count(*) AS avg_qty,
-        |       CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) / count(*) AS avg_price,
-        |       CAST(sum(CAST(l_discount AS DECIMAL(4,2))) AS DOUBLE) / count(*) AS avg_disc,
-        |       count(*) AS count_order
-        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q_top_segments" ->
-      """SELECT c_mktsegment, count(*) AS n_orders,
-        |       CAST(sum(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_price,
-        |       CAST(sum(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) / count(*) AS avg_price
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-
-    "q_canon_load" ->
-      """SELECT CAST(event_id AS INT) AS rev, 0 AS pos, epoch_us(ts) AS ts_us,
-        |       props AS data
-        |FROM events WHERE user_id = 7 ORDER BY rev, pos""".stripMargin,
-
-    "q_canon_streams" ->
-      oracleSqlCanonStreams,
-
-    "q_event_gaps" ->
-      """WITH g AS (
-        |  SELECT user_id,
-        |         epoch_us(ts) - lag(epoch_us(ts))
-        |           OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS gap_us
-        |  FROM events)
-        |SELECT user_id, count(*) AS n_gaps,
-        |       min(gap_us) AS min_gap_us, max(gap_us) AS max_gap_us,
-        |       CAST(sum(gap_us) AS BIGINT) AS total_gap_us
-        |FROM g WHERE gap_us IS NOT NULL
-        |GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "q_canon_streams_sorted" ->
-      oracleSqlCanonStreams,
-
-    "q_canon_enumerate" ->
-      s"""SELECT user_id AS id, CAST(event_id AS INT) AS rev,
-         |       epoch_us(ts) AS ts_us, event_type AS et
-         |FROM events
-         |WHERE event_type = 'purchase' AND ts BETWEEN $SqlT10 AND $SqlT20
-         |ORDER BY id, rev""".stripMargin,
-
-    "q_canon_index_range" ->
-      s"""SELECT event_type AS et, CAST(year(ts)*1000 + dayofyear(ts) AS INT) AS pid,
-         |       user_id AS aid, CAST(event_id AS INT) AS rev, epoch_us(ts) AS ts_us
-         |FROM events
-         |WHERE event_type = 'purchase' AND ts BETWEEN $SqlT10 AND $SqlT20
-         |ORDER BY ts_us, rev""".stripMargin,
-
-    "q3_top_orders" ->
-      """SELECT o_orderkey, o_orderdate,
-        |       CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2)) *
-        |                (CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(4,2))))
-        |            AS DOUBLE) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
-        |  AND l_shipdate > TIMESTAMP '1997-01-01 00:00:00'
-        |GROUP BY o_orderkey, o_orderdate
-        |ORDER BY revenue DESC, o_orderkey LIMIT 10""".stripMargin,
-
-    "q_sessionize" ->
-      oracleSqlSessionize,
-
-    "q_zorder_box" ->
-      // the layout-independent truth of the two-dimensional box read
-      """SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-        |       CAST(year(ts)*1000 + dayofyear(ts) AS BIGINT) AS pid
-        |FROM events
-        |WHERE user_id BETWEEN 3 AND 10
-        |  AND year(ts)*1000 + dayofyear(ts) BETWEEN 2024010 AND 2024020
-        |ORDER BY event_id""".stripMargin,
-
-    "q_stream_contamination" ->
-      // the batch truth of the streamed pair set: per EVAL doc, distinct
-      // shingles shared with the train corpus (the flipped view of
-      // g_contamination's per-train-doc rollup)
-      """WITH sh AS (
-        |  SELECT doc_id, unnest(CASE WHEN len(t) >= 3
-        |    THEN list_transform(range(1, len(t) - 1), i -> array_to_string(t[i:i+2], ' '))
-        |    ELSE [array_to_string(t, ' ')] END) AS shingle
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)),
-        |tr AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 97 <> 0)
-        |SELECT s.doc_id AS eval_id, CAST(count(DISTINCT s.shingle) AS BIGINT) AS n_shared
-        |FROM sh s JOIN tr USING (shingle)
-        |WHERE s.doc_id % 97 = 0
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_stream_attrib" ->
-      // the batch truth of the streamed pair set: same-user views in the
-      // 6h window preceding each purchase (inclusive both ends)
-      """SELECT p.event_id AS purchase_id, count(*) AS n_views,
-        |       min(v.event_id) AS first_view_id
-        |FROM events p JOIN events v
-        |  ON v.user_id = p.user_id
-        | AND p.event_type = 'purchase' AND v.event_type = 'view'
-        | AND epoch_us(v.ts) BETWEEN epoch_us(p.ts) - 21600000000 AND epoch_us(p.ts)
-        |GROUP BY p.event_id ORDER BY purchase_id""".stripMargin,
-
-    "q_stream_sessions" ->
-      // session_window semantics: a gap >= 6h STARTS a new session
-      // (strict-< merge), unlike the batch sessionizer's > — encoded
-      // exactly here
-      """WITH t AS (
-        |  SELECT user_id, epoch_us(ts) AS ts_us,
-        |         lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts)) AS prev_us
-        |  FROM events),
-        |s AS (
-        |  SELECT user_id, ts_us,
-        |         CAST(sum(CASE WHEN prev_us IS NULL OR ts_us - prev_us >= 21600000000 THEN 1 ELSE 0 END)
-        |              OVER (PARTITION BY user_id ORDER BY ts_us
-        |                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS sid
-        |  FROM t)
-        |SELECT user_id, min(ts_us) AS start_us, max(ts_us) AS last_us,
-        |       count(*) AS n_events
-        |FROM s GROUP BY user_id, sid
-        |ORDER BY user_id, start_us""".stripMargin,
-
-    "q_sessionize_chunked" ->
-      // same oracle as q_sessionize: the two-phase chunked path must
-      // produce identical sessions
-      oracleSqlSessionize,
-
-    "q_top2_per_user" ->
-      """SELECT user_id, rn, event_id, value FROM (
-        |  SELECT user_id, event_id, value,
-        |         CAST(row_number() OVER (PARTITION BY user_id ORDER BY value DESC, event_id) AS INT) AS rn
-        |  FROM events) t
-        |WHERE rn <= 2 ORDER BY user_id, rn""".stripMargin,
-
-    "q_running_value" ->
-      """SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-        |       CAST(sum(CAST(value AS DECIMAL(12,2)))
-        |            OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id
-        |                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |            AS DOUBLE) AS running_value
-        |FROM events WHERE user_id < 3
-        |ORDER BY user_id, ts_us, event_id""".stripMargin,
-
-    "q_brand_volume" ->
-      """SELECT p_brand,
-        |       CAST(sum(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
-        |       count(*) AS n_lines,
-        |       CAST(count(DISTINCT s_suppkey) AS BIGINT) AS n_suppliers
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |GROUP BY p_brand ORDER BY p_brand""".stripMargin,
-
-    "q6_forecast" ->
-      """SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2)) *
-        |                CAST(l_discount AS DECIMAL(4,2))) AS DOUBLE) AS revenue,
-        |       count(*) AS n_lines
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-        |  AND l_discount BETWEEN 0.02 AND 0.06
-        |  AND l_quantity < 24""".stripMargin,
-
-    "q_hourly_histogram" ->
-      """SELECT CAST(hour(ts) AS INT) AS hour, count(*) AS n,
-        |       count(CASE WHEN event_type = 'error' THEN 1 END) AS n_errors
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q5_region_revenue" ->
-      """SELECT n_name,
-        |       CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2)) *
-        |                (CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(4,2))))
-        |            AS DOUBLE) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA'
-        |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin,
-
-    "q_returned_top" ->
-      """SELECT c_custkey, c_name,
-        |       CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2)) *
-        |                (CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(4,2))))
-        |            AS DOUBLE) AS lost_revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE l_returnflag = 'R'
-        |GROUP BY c_custkey, c_name
-        |ORDER BY lost_revenue DESC, c_custkey LIMIT 20""".stripMargin,
-
-    "q_churned_users" ->
-      """SELECT DISTINCT user_id FROM events
-        |WHERE ts BETWEEN TIMESTAMP '2024-01-01 00:00:00' AND TIMESTAMP '2024-01-10 00:00:00'
-        |EXCEPT
-        |SELECT DISTINCT user_id FROM events
-        |WHERE ts BETWEEN TIMESTAMP '2024-01-20 00:00:00' AND TIMESTAMP '2024-01-30 00:00:00'
-        |ORDER BY user_id""".stripMargin,
-
-    "q_payload_decode" ->
-      """SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
-        |FROM events
-        |WHERE CAST(json_extract_string(props, '$.k') AS BIGINT) >= 50
-        |ORDER BY event_id""".stripMargin,
-
-    "q_payload_envelope" ->
-      // same envelope byte arithmetic on the VARCHAR side: ASCII header
-      // "GB1" + 0-padded 4-digit schema id, payload verbatim after byte 7
-      """WITH enc AS (
-        |  SELECT event_id,
-        |    'GB1' || lpad(CAST(CASE WHEN event_id % 2 = 0 THEN 1 ELSE 2 END AS VARCHAR), 4, '0')
-        |        || props AS data
-        |  FROM events)
-        |SELECT event_id,
-        |  CAST(substring(data, 4, 4) AS INT) AS schema_id,
-        |  CASE WHEN CAST(substring(data, 4, 4) AS INT) = 1
-        |       THEN CAST(json_extract_string(substring(data, 8), '$.k') AS BIGINT) END AS k,
-        |  substring(data, 8) AS payload
-        |FROM enc
-        |WHERE substring(data, 1, 3) = 'GB1'
-        |ORDER BY event_id""".stripMargin,
-
-    "q_salted_counter" ->
-      """SELECT msgid, CAST(sum(partial) AS BIGINT) AS cv FROM (
-        |  SELECT event_type AS msgid, hash(event_id) % 16 AS salt, count(*) AS partial
-        |  FROM events GROUP BY 1, 2) t
-        |GROUP BY msgid ORDER BY msgid""".stripMargin,
-
-    "g_dedup_exact" ->
-      """SELECT sha256(text) AS content_sha, min(doc_id) AS keep_id, count(*) AS n_copies
-        |FROM documents GROUP BY sha256(text) ORDER BY keep_id""".stripMargin,
-
-    "g_dedup_edit" ->
-      // same blocking, unthresholded levenshtein recomputation (for pairs
-      // within the radius the thresholded kernel returns the true
-      // distance, so the lists agree exactly)
-      """WITH base AS (
-        |  SELECT doc_id, lang, floor(n_chars / 8) AS len_bucket, text
-        |  FROM documents)
-        |SELECT a.doc_id AS id1, b.doc_id AS id2,
-        |       CAST(levenshtein(a.text, b.text) AS INT) AS dist
-        |FROM base a JOIN base b
-        |  ON a.lang = b.lang AND a.len_bucket = b.len_bucket AND a.doc_id < b.doc_id
-        |WHERE levenshtein(a.text, b.text) <= 20
-        |ORDER BY id1, id2""".stripMargin,
-
-    "g_dedup_jaccard" ->
-      """WITH base AS (
-        |  SELECT doc_id, lang, floor(n_chars / 8) AS len_bucket,
-        |         list_distinct(string_split(text, ' ')) AS toks
-        |  FROM documents)
-        |SELECT a.doc_id AS id1, b.doc_id AS id2,
-        |       floor((len(list_intersect(a.toks, b.toks)) /
-        |             (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks)))) * 10000) / 10000 AS jaccard
-        |FROM base a JOIN base b
-        |  ON a.lang = b.lang AND a.len_bucket = b.len_bucket AND a.doc_id < b.doc_id
-        |WHERE len(list_intersect(a.toks, b.toks)) /
-        |      (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks))) >= 0.5
-        |ORDER BY id1, id2""".stripMargin,
-
-    "g_dedup_minhash" ->
-      // exact 3-gram-shingle Jaccard over ALL pairs — green hash certifies
-      // LSH recall 1.0 + rescore precision 1.0 on this corpus
-      """WITH sh AS (
-        |  SELECT doc_id, list_distinct(CASE WHEN len(t) >= 3
-        |    THEN list_transform(range(1, len(t) - 1), i -> array_to_string(t[i:i+2], ' '))
-        |    ELSE [array_to_string(t, ' ')] END) AS toks
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents))
-        |SELECT a.doc_id AS id1, b.doc_id AS id2,
-        |       floor((len(list_intersect(a.toks, b.toks)) /
-        |             (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks)))) * 10000) / 10000 AS jaccard
-        |FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |WHERE len(list_intersect(a.toks, b.toks)) /
-        |      (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks))) >= 0.5
-        |ORDER BY id1, id2""".stripMargin,
-
-    "g_dedup_indexed" ->
-      // identical truth to g_dedup_incremental: the persisted index is a
-      // materialization of the corpus band keys, not a semantic change
-      oracleSqlDedupIncremental,
-
-    "q_stream_lsh" ->
-      // identical truth to g_dedup_indexed: the streamed index is the same
-      // materialization of the corpus band keys, landed per micro-batch
-      oracleSqlDedupIncremental,
-
-    "g_dedup_incremental" ->
-      // exact cross-split shingle Jaccard: increment (doc_id % 5 = 0)
-      // against corpus (the rest)
-      oracleSqlDedupIncremental,
-
-    "g_dedup_incremental_exact" ->
-      // text equality stands in for the digest join (no SHA-256 collision
-      // at any plausible corpus size)
-      oracleSqlDedupIncrementalExact,
-
-    "g_dedup_bloom" ->
-      // identical truth to g_dedup_incremental_exact: the Bloom prefilter
-      // is exact once the confirm join removes false positives (and no
-      // false negative can exist)
-      oracleSqlDedupIncrementalExact,
-
-    "q_stream_cc" ->
-      // the recursive component truth over the CORPUS SPLIT's exact
-      // shingle-Jaccard pairs — what the streamed loop's newest
-      // assignment version must reproduce
-      """WITH RECURSIVE sh AS (
-        |  SELECT doc_id, list_distinct(CASE WHEN len(t) >= 3
-        |    THEN list_transform(range(1, len(t) - 1), i -> array_to_string(t[i:i+2], ' '))
-        |    ELSE [array_to_string(t, ' ')] END) AS toks
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents
-        |        WHERE doc_id % 5 <> 0)),
-        |pairs AS (
-        |  SELECT a.doc_id AS id1, b.doc_id AS id2
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |  WHERE len(list_intersect(a.toks, b.toks)) /
-        |        (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks))) >= 0.5),
-        |edges AS (
-        |  SELECT id1 AS src, id2 AS dst FROM pairs
-        |  UNION SELECT id2 AS src, id1 AS dst FROM pairs),
-        |reach(a, b) AS (
-        |  SELECT src, src FROM edges
-        |  UNION
-        |  SELECT r.a, e.dst FROM reach r JOIN edges e ON r.b = e.src)
-        |SELECT a AS doc_id, min(b) AS cluster_id
-        |FROM reach GROUP BY a ORDER BY doc_id""".stripMargin,
-
-    "q_stream_bloom" ->
-      // identical truth again: the streamed sidecar OR-merges to the same
-      // bits a batch-built sketch would set, and the probe is exact
-      oracleSqlDedupIncrementalExact,
-
-    "g_embed_neardup_recall" ->
-      ("SELECT CAST(0.35 AS DOUBLE) AS threshold, true AS precision_exact, " +
-        "CAST(0.2 AS DOUBLE) AS recall_floor, true AS meets_floor"),
-
-    "g_dedup_simhash_complete" ->
-      "SELECT 3 AS max_hamming, true AS complete",
-
-    "g_embed_neardup" ->
-      // independent recomputation of the full LSH near-dup pipeline: bucket
-      // = sign bits against the inlined ±1 hyperplanes (same XXH64-derived
-      // planes as VectorFns.rhpBucket, dim 64), then exact cosine within
-      // bucket — both sides sequential-left-fold doubles, so parity is
-      // bit-exact up to the shared floor-at-4 rounding
-      s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |b AS (
-         |  SELECT vec_id, v,
-         |    (CASE WHEN list_dot_product(v, ${rhpSignsSql(0, 64)}) >= 0 THEN 1 ELSE 0 END)
-         |  + (CASE WHEN list_dot_product(v, ${rhpSignsSql(1, 64)}) >= 0 THEN 2 ELSE 0 END)
-         |  + (CASE WHEN list_dot_product(v, ${rhpSignsSql(2, 64)}) >= 0 THEN 4 ELSE 0 END) AS bucket
-         |  FROM v)
-         |SELECT a.vec_id AS id1, c.vec_id AS id2,
-         |       floor((list_dot_product(a.v, c.v) /
-         |             (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(c.v, c.v)))) * 10000) / 10000 AS sim
-         |FROM b a JOIN b c ON a.bucket = c.bucket AND a.vec_id < c.vec_id
-         |WHERE floor((list_dot_product(a.v, c.v) /
-         |      (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(c.v, c.v)))) * 10000) / 10000 >= 0.35
-         |ORDER BY id1, id2""".stripMargin,
-
-    "g_sketch_topk" ->
-      // exact recount: the sketch must equal true counts while the
-      // vocabulary fits its slots; deterministic tie-break (count desc,
-      // token asc) on both sides
-      oracleSqlSketchTopK,
-
-    "g_sketch_quantiles" ->
-      // the rank-contract booleans must hold for any correct quantile
-      // sketch at this accuracy; sizes pin the sketch ran per group
-      """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs, true AS rank_ok
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-
-    "g_embed_pca" ->
-      // the invariant gate: the booleans must hold for ANY correct PCA of
-      // this corpus (norm contraction / eigenvalue-ordered energies /
-      // variance floor), so the oracle asserts them as constants
-      """SELECT CAST(8 AS INT) AS k, count(*) AS n_vecs,
-        |       true AS norms_contract, true AS energy_ordered,
-        |       true AS var_frac_ok
-        |FROM embeddings""".stripMargin,
-
-    "g_semdedup" ->
-      // blocks recomputed from the inlined hyperplane signs, then the drop
-      // rule: a vector is dropped iff an earlier same-block vector has
-      // floor-at-4 cosine >= 0.35; dup_of = the earliest such winner
-      s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |b AS (
-         |  SELECT vec_id, v,
-         |    (CASE WHEN list_dot_product(v, ${rhpSignsSql(0, 64)}) >= 0 THEN 1 ELSE 0 END)
-         |  + (CASE WHEN list_dot_product(v, ${rhpSignsSql(1, 64)}) >= 0 THEN 2 ELSE 0 END)
-         |  + (CASE WHEN list_dot_product(v, ${rhpSignsSql(2, 64)}) >= 0 THEN 4 ELSE 0 END) AS bucket
-         |  FROM v),
-         |losers AS (
-         |  SELECT b2.vec_id AS vec_id, min(b1.vec_id) AS dup_of
-         |  FROM b b1 JOIN b b2 ON b1.bucket = b2.bucket AND b1.vec_id < b2.vec_id
-         |  WHERE floor((list_dot_product(b1.v, b2.v) /
-         |        (sqrt(list_dot_product(b1.v, b1.v)) * sqrt(list_dot_product(b2.v, b2.v)))) * 10000) / 10000 >= 0.35
-         |  GROUP BY b2.vec_id)
-         |SELECT v.vec_id, l.dup_of IS NULL AS kept, l.dup_of
-         |FROM v LEFT JOIN losers l USING (vec_id)
-         |ORDER BY vec_id""".stripMargin,
-
-    "g_semdedup_kmeans" ->
-      // full replay of the fixture-centroid k-means blocking: cosine
-      // against the 4 inlined ±1 centroids (both sides sequential-left-fold
-      // doubles — bit-exact parity), argmax cell with ties to the smallest
-      // cid (the CASE's >= order == cellExpr's (csim, -cid) struct max),
-      // then the identical in-block drop rule as g_semdedup
-      {
-        val cents = fixtureCentroids(64)
-        // interpolation precedes the outer stripMargin; these continuation
-        // lines carry no '|' so the margin strip leaves them untouched
-        val cosExprs = cents.map { case (cid, c) =>
-          val arr = c.mkString("[", ", ", "]")
-          s"(list_dot_product(v, $arr) / (sqrt(list_dot_product(v, v)) * sqrt(list_dot_product($arr, $arr)))) AS c$cid"
-        }.mkString(",\n    ")
-        val assign = (1 until KmFixtureK).map { i =>
-          val conds = ((i + 1) to KmFixtureK).map(j => s"c$i >= c$j").mkString(" AND ")
-          s"WHEN $conds THEN $i"
-        }.mkString("CASE ", " ", s" ELSE $KmFixtureK END")
-        s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-           |c AS (
-           |  SELECT vec_id, v,
-           |    $cosExprs
-           |  FROM v),
-           |b AS (SELECT vec_id, v, $assign AS block FROM c),
-           |losers AS (
-           |  SELECT b2.vec_id AS vec_id, min(b1.vec_id) AS dup_of
-           |  FROM b b1 JOIN b b2 ON b1.block = b2.block AND b1.vec_id < b2.vec_id
-           |  WHERE floor((list_dot_product(b1.v, b2.v) /
-           |        (sqrt(list_dot_product(b1.v, b1.v)) * sqrt(list_dot_product(b2.v, b2.v)))) * 10000) / 10000 >= 0.35
-           |  GROUP BY b2.vec_id)
-           |SELECT v.vec_id, l.dup_of IS NULL AS kept, l.dup_of
-           |FROM v LEFT JOIN losers l USING (vec_id)
-           |ORDER BY vec_id""".stripMargin
-      },
-
-    "g_kmeans_step" ->
-      // full replay of one Lloyd update: cosine against the 4 inlined ±1
-      // centroids (sequential-left-fold doubles — bit-exact parity),
-      // argmax cell with ties to the smallest cid, then per-(cell, dim)
-      // fixed-point means: floor(x*1e6) is the same IEEE double product
-      // floored in both engines, and the BIGINT sums are exact — no
-      // FP-addition order anywhere between the engines
-      kmeansStepOracleSql,
-
-    "q_stream_kmeans" ->
-      // the streaming centroid sink's single-batch degenerate case IS the
-      // batch Lloyd step (state = that batch's fixed-point sums, read back
-      // as means) — the same oracle verbatim; multi-batch sequential
-      // semantics are KmeansStreamSpec's job
-      kmeansStepOracleSql,
-
-    "g_semdedup_exact" ->
-      // the unblocked definition truth: same drop rule over all pairs
-      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |losers AS (
-        |  SELECT b2.vec_id AS vec_id, min(b1.vec_id) AS dup_of
-        |  FROM v b1 JOIN v b2 ON b1.vec_id < b2.vec_id
-        |  WHERE floor((list_dot_product(b1.v, b2.v) /
-        |        (sqrt(list_dot_product(b1.v, b1.v)) * sqrt(list_dot_product(b2.v, b2.v)))) * 10000) / 10000 >= 0.35
-        |  GROUP BY b2.vec_id)
-        |SELECT v.vec_id, l.dup_of IS NULL AS kept, l.dup_of
-        |FROM v LEFT JOIN losers l USING (vec_id)
-        |ORDER BY vec_id""".stripMargin,
-
-    "g_domain_quota" ->
-      // the single-window formulation the two-phase salted ranking must
-      // exactly reproduce
-      """SELECT doc_id, source, n_chars, rank FROM (
-        |  SELECT doc_id, source, n_chars,
-        |         CAST(row_number() OVER (PARTITION BY source ORDER BY n_chars DESC, doc_id) AS INT) AS rank
-        |  FROM documents) t
-        |WHERE rank <= 10 ORDER BY doc_id""".stripMargin,
-
-    "g_dataset_card" ->
-      // the quality expression is g_quality's quality column pre-floor;
-      // sums cast to BIGINT (DuckDB sum(BIGINT) is HUGEINT)
-      oracleSqlDatasetCard,
-
-    "g_dsir_weights" ->
-      // replay: whitespace tokens, the (acc*31+codepoint) mod 1e9+7
-      // rolling fingerprint per token (the g_cdc_chunks identity) mod 64
-      // as the feature bucket, Laplace-smoothed integer ratio weights
-      // (// = DuckDB integer division = Spark DIV), per-doc sums
-      """WITH tk AS (SELECT doc_id,
-        |        CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS is_t,
-        |        unnest(string_split(coalesce(text, ''), ' ')) AS tok
-        |      FROM documents),
-        |b AS (SELECT doc_id, is_t,
-        |        list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |          list_transform(range(1, length(tok)+1),
-        |            i -> CAST(unicode(tok[i]) AS BIGINT))),
-        |          (acc, c) -> (acc*31 + c) % 1000000007) % 64 AS bkt
-        |      FROM tk),
-        |w AS (SELECT bkt,
-        |        (CAST((sum(CASE WHEN is_t = 1 THEN 1 ELSE 0 END) + 1) AS BIGINT) * 1000000)
-        |          // CAST((sum(CASE WHEN is_t = 0 THEN 1 ELSE 0 END) + 1) AS BIGINT) AS w
-        |      FROM b GROUP BY bkt)
-        |SELECT b.doc_id, CAST(max(b.is_t) AS BIGINT) AS is_target,
-        |       count(*) AS n_tokens, CAST(sum(w.w) AS BIGINT) AS score
-        |FROM b JOIN w USING (bkt)
-        |GROUP BY b.doc_id ORDER BY b.doc_id""".stripMargin,
-
-    "g_quality_quantile" ->
-      // the single-window formulation with the exact count-derived quota;
-      // the q_score expression is g_quality's quality column verbatim
-      """WITH s AS (
-        |  SELECT doc_id, source,
-        |         floor(least(greatest(
-        |           least(len(string_split(text, ' ')) / 64.0, 1.0) * 0.4 +
-        |           (len(list_distinct(string_split(text, ' '))) /
-        |            CAST(len(string_split(text, ' ')) AS DOUBLE)) * 0.4 +
-        |           (1.0 - length(regexp_replace(text, '[a-zA-Z0-9\s]', '', 'g')) /
-        |                  CAST(length(text) AS DOUBLE)) * 0.2,
-        |           0.0), 1.0) * 10000) / 10000 AS q_score
-        |  FROM documents),
-        |c AS (SELECT source, CAST(ceil(0.3 * CAST(count(*) AS DOUBLE)) AS BIGINT) AS quota
-        |      FROM s GROUP BY source),
-        |r AS (SELECT s.doc_id, s.source, s.q_score,
-        |             CAST(row_number() OVER (
-        |               PARTITION BY s.source ORDER BY s.q_score DESC, s.doc_id) AS INT) AS rank,
-        |             c.quota
-        |      FROM s JOIN c USING (source))
-        |SELECT doc_id, source, q_score, rank FROM r WHERE rank <= quota
-        |ORDER BY doc_id""".stripMargin,
-
-    "g_chunk_store" ->
-      // the round-trip truth is just the original corpus digests: equality
-      // certifies the store's write/dedup/reassembly pipeline end-to-end
-      oracleSqlChunkStore,
-
-    // the streamed landing shares the round-trip truth
-    "q_stream_store" ->
-      oracleSqlChunkStore,
-
-    "g_cdc_binary" ->
-      // replay at byte granularity: the (acc*31+byte) fold over each
-      // 8-byte window (byte == codepoint on this ASCII corpus), boundary
-      // = fp % 16 == 0 at pos > 0, running-sum chunk ids, then exact
-      // content-keyed occurrence counting — identical chunking to the
-      // [start, end)-range formulation the engine derives from the
-      // boundary array
-      """WITH t AS (SELECT doc_id, coalesce(text, '') AS s FROM documents),
-        |p AS (SELECT doc_id, s, unnest(range(length(s))) AS pos FROM t WHERE length(s) > 0),
-        |x AS (SELECT doc_id, pos, s[pos+1] AS ch,
-        |        CASE WHEN pos > 0 AND pos + 8 <= length(s) THEN
-        |          (list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |             list_transform(range(1, 9), i -> CAST(unicode(s[pos+i]) AS BIGINT))),
-        |             (acc, c) -> (acc*31 + c) % 1000000007) % 16 = 0)
-        |        ELSE false END AS boundary
-        |      FROM p),
-        |c AS (SELECT doc_id, pos, ch,
-        |        SUM(CASE WHEN boundary THEN 1 ELSE 0 END)
-        |          OVER (PARTITION BY doc_id ORDER BY pos) AS chunk_idx
-        |      FROM x),
-        |ch2 AS (SELECT doc_id, chunk_idx, string_agg(ch, '' ORDER BY pos) AS chunk_text
-        |        FROM c GROUP BY doc_id, chunk_idx),
-        |o AS (SELECT chunk_text, count(*) AS occ FROM ch2 GROUP BY chunk_text)
-        |SELECT ch2.doc_id AS media_id, CAST(count(*) AS BIGINT) AS n_chunks,
-        |       CAST(count(CASE WHEN o.occ >= 2 THEN 1 END) AS BIGINT) AS n_dup_chunks
-        |FROM ch2 JOIN o USING (chunk_text)
-        |GROUP BY ch2.doc_id ORDER BY media_id""".stripMargin,
-
-    "g_cdc_neardup" ->
-      // the g_cdc_binary byte-fold chunking replay, then distinct
-      // per-payload chunk sets, an inverted-index pair join, and the
-      // integer cross-multiplied Jaccard threshold — all-integer
-      // arithmetic end to end (// is DuckDB's integer division,
-      // mirroring Spark's DIV)
-      """WITH t AS (SELECT doc_id, coalesce(text, '') AS s FROM documents),
-        |p AS (SELECT doc_id, s, unnest(range(length(s))) AS pos FROM t WHERE length(s) > 0),
-        |x AS (SELECT doc_id, pos, s[pos+1] AS ch,
-        |        CASE WHEN pos > 0 AND pos + 8 <= length(s) THEN
-        |          (list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |             list_transform(range(1, 9), i -> CAST(unicode(s[pos+i]) AS BIGINT))),
-        |             (acc, c) -> (acc*31 + c) % 1000000007) % 16 = 0)
-        |        ELSE false END AS boundary
-        |      FROM p),
-        |c AS (SELECT doc_id, pos, ch,
-        |        SUM(CASE WHEN boundary THEN 1 ELSE 0 END)
-        |          OVER (PARTITION BY doc_id ORDER BY pos) AS chunk_idx
-        |      FROM x),
-        |ch2 AS (SELECT doc_id, chunk_idx, string_agg(ch, '' ORDER BY pos) AS chunk_text
-        |        FROM c GROUP BY doc_id, chunk_idx),
-        |s2 AS (SELECT DISTINCT doc_id, chunk_text FROM ch2),
-        |n AS (SELECT doc_id, count(*) AS n FROM s2 GROUP BY doc_id),
-        |pr AS (SELECT a.doc_id AS media_a, b.doc_id AS media_b, count(*) AS inter
-        |       FROM s2 a JOIN s2 b ON a.chunk_text = b.chunk_text AND a.doc_id < b.doc_id
-        |       GROUP BY 1, 2)
-        |SELECT pr.media_a, pr.media_b, pr.inter, na.n AS n_a, nb.n AS n_b,
-        |       (pr.inter * 1000000) // (na.n + nb.n - pr.inter) AS jaccard_ppm
-        |FROM pr JOIN n na ON na.doc_id = pr.media_a
-        |        JOIN n nb ON nb.doc_id = pr.media_b
-        |WHERE pr.inter * 100 >= 50 * (na.n + nb.n - pr.inter)
-        |ORDER BY media_a, media_b""".stripMargin,
-
-    "g_cdc_chunks" ->
-      // replay: token windows, the (acc*31+code) mod 1e9+7 fold over the
-      // 3-token shingle string, boundary = fp % 8 == 0 at pos > 0, a
-      // running boundary sum as the chunk id, then occurrence counting
-      """WITH t AS (SELECT doc_id, string_split(coalesce(text, ''), ' ') AS toks FROM documents),
-        |p AS (SELECT doc_id, unnest(range(len(toks))) AS pos, toks FROM t),
-        |x AS (SELECT doc_id, pos, toks[pos+1] AS tok,
-        |        CASE WHEN pos + 3 <= len(toks) AND pos > 0 THEN
-        |          (list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |             list_transform(range(1, length(array_to_string(toks[pos+1:pos+3], ' '))+1),
-        |               i -> CAST(unicode(array_to_string(toks[pos+1:pos+3], ' ')[i]) AS BIGINT))),
-        |             (acc, c) -> (acc*31 + c) % 1000000007) % 8 = 0)
-        |        ELSE false END AS boundary
-        |      FROM p),
-        |c AS (SELECT doc_id, pos, tok,
-        |        SUM(CASE WHEN boundary THEN 1 ELSE 0 END)
-        |          OVER (PARTITION BY doc_id ORDER BY pos) AS chunk_idx
-        |      FROM x),
-        |ch AS (SELECT doc_id, chunk_idx, string_agg(tok, ' ' ORDER BY pos) AS chunk_text
-        |       FROM c GROUP BY doc_id, chunk_idx),
-        |o AS (SELECT chunk_text, count(*) AS occ FROM ch GROUP BY chunk_text)
-        |SELECT ch.doc_id, CAST(count(*) AS BIGINT) AS n_chunks,
-        |       CAST(count(CASE WHEN o.occ >= 2 THEN 1 END) AS BIGINT) AS n_dup_chunks
-        |FROM ch JOIN o USING (chunk_text)
-        |GROUP BY ch.doc_id ORDER BY ch.doc_id""".stripMargin,
-
-    "g_dup_passages" ->
-      // distinct 3-token shingles per doc (short docs = whole text, the
-      // shingleRows convention) -> doc frequency -> per-doc dup fraction
-      """WITH sh AS (
-        |  SELECT DISTINCT doc_id, shingle FROM (
-        |    SELECT doc_id, unnest(CASE WHEN len(t) >= 3
-        |      THEN list_transform(range(1, len(t) - 1), i -> array_to_string(t[i:i+2], ' '))
-        |      ELSE [array_to_string(t, ' ')] END) AS shingle
-        |    FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents))),
-        |df AS (SELECT shingle, count(*) AS df FROM sh GROUP BY shingle)
-        |SELECT s.doc_id, count(*) AS n_shingles,
-        |       CAST(sum(CASE WHEN f.df >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_shingles,
-        |       floor((CAST(sum(CASE WHEN f.df >= 2 THEN 1 ELSE 0 END) AS DOUBLE) / count(*)) * 1000000) / 1000000 AS dup_frac
-        |FROM sh s JOIN df f USING (shingle)
-        |GROUP BY s.doc_id ORDER BY s.doc_id""".stripMargin,
-
-    "g_dup_spans" ->
-      // positioned 3-shingles (docs >= 3 tokens) -> corpus occurrence >= 2
-      // -> gaps-and-islands merge (idx - row_number) -> spans >= 8 tokens
-      """WITH base AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |pos AS (SELECT doc_id, unnest(range(1, len(t) - 1)) AS i, t FROM base WHERE len(t) >= 3),
-        |sh AS (SELECT doc_id, i - 1 AS idx, array_to_string(t[i:i+2], ' ') AS shingle FROM pos),
-        |occ AS (SELECT shingle FROM (SELECT shingle, count(*) AS c FROM sh GROUP BY 1) WHERE c >= 2),
-        |isl AS (SELECT doc_id, idx,
-        |               idx - row_number() OVER (PARTITION BY doc_id ORDER BY idx) AS grp
-        |        FROM sh JOIN occ USING (shingle))
-        |SELECT doc_id, CAST(min(idx) AS BIGINT) AS start_tok,
-        |       CAST(max(idx) + 2 AS BIGINT) AS end_tok,
-        |       CAST(max(idx) - min(idx) + 3 AS BIGINT) AS span_tokens
-        |FROM isl GROUP BY doc_id, grp
-        |HAVING max(idx) - min(idx) + 3 >= 8
-        |ORDER BY doc_id, start_tok""".stripMargin,
-
-    "g_span_clip" ->
-      // the remove phase: tokens not covered by any >= 8-token span,
-      // rejoined; LEFT JOIN keeps fully-clipped docs as ''
-      """WITH base AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |pos AS (SELECT doc_id, unnest(range(1, len(t) - 1)) AS i, t FROM base WHERE len(t) >= 3),
-        |sh AS (SELECT doc_id, i - 1 AS idx, array_to_string(t[i:i+2], ' ') AS shingle FROM pos),
-        |occ AS (SELECT shingle FROM (SELECT shingle, count(*) AS c FROM sh GROUP BY 1) WHERE c >= 2),
-        |isl AS (SELECT doc_id, idx,
-        |               idx - row_number() OVER (PARTITION BY doc_id ORDER BY idx) AS grp
-        |        FROM sh JOIN occ USING (shingle)),
-        |spans AS (SELECT doc_id, min(idx) AS s, max(idx) + 2 AS e
-        |          FROM isl GROUP BY doc_id, grp HAVING max(idx) - min(idx) + 3 >= 8),
-        |tok AS (SELECT doc_id, unnest(range(1, len(t) + 1)) AS ti, t FROM base),
-        |keep AS (SELECT k.doc_id, k.ti - 1 AS i, k.t[k.ti] AS tk FROM tok k
-        |         WHERE NOT EXISTS (SELECT 1 FROM spans sp
-        |                           WHERE sp.doc_id = k.doc_id AND k.ti - 1 BETWEEN sp.s AND sp.e))
-        |SELECT b.doc_id, coalesce(kc.ct, '') AS clean_text
-        |FROM base b LEFT JOIN (SELECT doc_id, array_to_string(list(tk ORDER BY i), ' ') AS ct
-        |                       FROM keep GROUP BY doc_id) kc USING (doc_id)
-        |ORDER BY b.doc_id""".stripMargin,
-
-    "g_dup_spans_incr" ->
-      // the spec-pinned identity: spans against the corpus index ==
-      // duplicatedSpans over the UNION, restricted to increment docs
-      // (corpus_cnt + inc_cnt >= 2 is the union occurrence count)
-      oracleSqlDupSpansIncr,
-
-    "q_stream_spans" ->
-      // identical truth to g_dup_spans_incr: the streamed index is the
-      // same source-tagged partial-count materialization of the corpus,
-      // landed per micro-batch and final-merged by the probe
-      oracleSqlDupSpansIncr,
-
-    "g_dedup_simhash" ->
-      // brute-force recomputation: FNV-1a 64 per token (HUGEINT fold ==
-      // Java wrapping-long fold), per-bit majority vote, all-pairs hamming
-      // <= 3 — certifies the banded block join loses no pair at the radius
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
-        |h AS (
-        |  SELECT doc_id, CAST(list_reduce(
-        |    list_prepend(CAST(14695981039346656037 AS HUGEINT),
-        |      list_transform(range(1, length(tok)+1), i -> CAST(unicode(tok[i]) AS HUGEINT))),
-        |    (acc, c) -> (xor(acc, c) * 1099511628211) % 18446744073709551616) AS UBIGINT) AS h
-        |  FROM toks),
-        |votes AS (
-        |  SELECT doc_id, b, sum(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS v
-        |  FROM h CROSS JOIN range(0, 64) t(b)
-        |  GROUP BY doc_id, b),
-        |fp AS (
-        |  SELECT doc_id, CAST(sum(CASE WHEN v > 0 THEN CAST(CAST(1 AS UBIGINT) << b AS HUGEINT) ELSE 0 END) AS UBIGINT) AS fp
-        |  FROM votes GROUP BY doc_id)
-        |SELECT a.doc_id AS id1, c.doc_id AS id2,
-        |       CAST(bit_count(xor(a.fp, c.fp)) AS INT) AS hamming
-        |FROM fp a JOIN fp c ON a.doc_id < c.doc_id
-        |WHERE bit_count(xor(a.fp, c.fp)) <= 3
-        |ORDER BY id1, id2""".stripMargin,
-
-    "g_dedup_clusters" ->
-      // connected components over the exact shingle-Jaccard pair list (the
-      // proven-equal truth of the MinHash pair list — g_dedup_minhash),
-      // recomputed via recursive-CTE transitive closure; min reachable id
-      // per doc == min-label propagation at convergence
-      oracleSqlDedupClusters,
-
-    "g_dedup_cc_star" ->
-      // same truth as g_dedup_clusters (components over the exact
-      // shingle-Jaccard pair list, proven equal to the MinHash pair list);
-      // gates the alternating-star algorithm's output row-level
-      oracleSqlDedupClusters,
-
-    "g_cluster_keep" ->
-      // the g_dedup_cc_star closure truth, then the election: rank within
-      // each cluster by (n_chars DESC, doc_id), keep rank 1; docs outside
-      // every cluster keep themselves
-      """WITH RECURSIVE sh AS (
-        |  SELECT doc_id, list_distinct(CASE WHEN len(t) >= 3
-        |    THEN list_transform(range(1, len(t) - 1), i -> array_to_string(t[i:i+2], ' '))
-        |    ELSE [array_to_string(t, ' ')] END) AS toks
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)),
-        |pairs AS (
-        |  SELECT a.doc_id AS id1, b.doc_id AS id2
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |  WHERE len(list_intersect(a.toks, b.toks)) /
-        |        (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks))) >= 0.5),
-        |edges AS (
-        |  SELECT id1 AS src, id2 AS dst FROM pairs
-        |  UNION SELECT id2 AS src, id1 AS dst FROM pairs),
-        |reach(a, b) AS (
-        |  SELECT src, src FROM edges
-        |  UNION
-        |  SELECT r.a, e.dst FROM reach r JOIN edges e ON r.b = e.src),
-        |assign AS (SELECT a AS doc_id, min(b) AS cluster_id FROM reach GROUP BY a),
-        |ranked AS (
-        |  SELECT d.doc_id, s.cluster_id,
-        |    row_number() OVER (PARTITION BY s.cluster_id
-        |                       ORDER BY d.n_chars DESC, d.doc_id) AS rn
-        |  FROM documents d JOIN assign s ON d.doc_id = s.doc_id)
-        |SELECT doc_id, cluster_id,
-        |  CAST(CASE WHEN rn = 1 THEN 1 ELSE 0 END AS BIGINT) AS keep
-        |FROM ranked
-        |UNION ALL
-        |SELECT d.doc_id, d.doc_id AS cluster_id, CAST(1 AS BIGINT) AS keep
-        |FROM documents d LEFT JOIN assign s ON d.doc_id = s.doc_id
-        |WHERE s.doc_id IS NULL
-        |ORDER BY doc_id""".stripMargin,
-
-    "g_dedup_cc_incr" ->
-      // identical truth to g_dedup_cc_star: merging the delta pairs into
-      // the prior assignment must reproduce the full recursive closure
-      oracleSqlDedupClusters,
-
-    "g_fingerprints_rolling" ->
-      // the identical (acc*31 + code) mod 1e9+7 fold over codepoints
-      """SELECT doc_id,
-        |       list_reduce(
-        |         list_prepend(CAST(0 AS BIGINT),
-        |           list_transform(range(1, length(text)+1), i -> CAST(unicode(text[i]) AS BIGINT))),
-        |         (acc, c) -> (acc * 31 + c) % 1000000007) AS poly_fp
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "g_multimodal_decode" ->
-      // byte statistics recomputed from codepoints (ASCII corpus: byte ==
-      // codepoint); all quotients are exact-integer / integer, no flooring
-      """WITH c AS (
-        |  SELECT doc_id AS media_id,
-        |         list_transform(range(1, length(text)+1), i -> unicode(text[i])) AS codes,
-        |         octet_length(encode(text)) AS byte_len
-        |  FROM documents)
-        |SELECT media_id, CAST(byte_len AS INT) AS byte_len,
-        |       CAST(list_sum(codes) AS DOUBLE) / byte_len AS mean_byte,
-        |       CAST(list_max(codes) AS INT) AS max_byte,
-        |       CAST(len(list_distinct(codes)) AS DOUBLE) / least(byte_len, 256) AS entropy_proxy
-        |FROM c ORDER BY media_id""".stripMargin,
-
-    "g_dedup_clusters_exact" ->
-      // connected components over the exact-Jaccard pair list, recomputed
-      // independently: transitive closure via recursive CTE, then min
-      // reachable id per doc = cluster label (matches min-label propagation
-      // at convergence)
-      """WITH RECURSIVE base AS (
-        |  SELECT doc_id, lang, floor(n_chars / 8) AS len_bucket,
-        |         list_distinct(string_split(text, ' ')) AS toks
-        |  FROM documents),
-        |pairs AS (
-        |  SELECT a.doc_id AS id1, b.doc_id AS id2
-        |  FROM base a JOIN base b
-        |    ON a.lang = b.lang AND a.len_bucket = b.len_bucket AND a.doc_id < b.doc_id
-        |  WHERE len(list_intersect(a.toks, b.toks)) /
-        |        (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks))) >= 0.5),
-        |edges AS (
-        |  SELECT id1 AS src, id2 AS dst FROM pairs
-        |  UNION SELECT id2 AS src, id1 AS dst FROM pairs),
-        |reach(a, b) AS (
-        |  SELECT src, src FROM edges
-        |  UNION
-        |  SELECT r.a, e.dst FROM reach r JOIN edges e ON r.b = e.src)
-        |SELECT a AS doc_id, min(b) AS cluster_id
-        |FROM reach GROUP BY a ORDER BY doc_id""".stripMargin,
-
-    "g_sim_topk" ->
-      oracleSqlSimTopK,
-
-    "g_maxsim" ->
-      // full replay of the late-interaction scoring: 8x8 token-pair
-      // floored fixed-point cosines (zero-norm pairs contribute 0, as in
-      // the kernel), per-query-token max, integer sum — order-free exact
-      // math, no tolerance anywhere
-      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |q AS (SELECT v AS qv FROM v WHERE vec_id = 0),
-        |pair AS (
-        |  SELECT d.vec_id, ti.i,
-        |    CASE WHEN list_dot_product(list_slice(qv, i*8+1, (i+1)*8),
-        |                               list_slice(qv, i*8+1, (i+1)*8)) = 0
-        |           OR list_dot_product(list_slice(d.v, j*8+1, (j+1)*8),
-        |                               list_slice(d.v, j*8+1, (j+1)*8)) = 0
-        |         THEN 0
-        |         ELSE CAST(floor((list_dot_product(list_slice(qv, i*8+1, (i+1)*8),
-        |                                           list_slice(d.v, j*8+1, (j+1)*8)) /
-        |              (sqrt(list_dot_product(list_slice(qv, i*8+1, (i+1)*8),
-        |                                     list_slice(qv, i*8+1, (i+1)*8))) *
-        |               sqrt(list_dot_product(list_slice(d.v, j*8+1, (j+1)*8),
-        |                                     list_slice(d.v, j*8+1, (j+1)*8))))) * 1000000) AS BIGINT)
-        |    END AS s
-        |  FROM v d, q, range(0, 8) ti(i), range(0, 8) tj(j)),
-        |mx AS (SELECT vec_id, i, max(s) AS ms FROM pair GROUP BY vec_id, i),
-        |tot AS (SELECT vec_id, CAST(sum(ms) AS BIGINT) AS maxsim FROM mx GROUP BY vec_id)
-        |SELECT vec_id, maxsim FROM tot ORDER BY maxsim DESC, vec_id LIMIT 20""".stripMargin,
-
-    "g_mmr_select" -> mmrOracleSql,
-
-    "g_serve_pipeline" -> serveOracleSql,
-
-    "g_bm25" -> bm25OracleSql,
-
-    // the indexed probe's contract is bit-equality with the full scan, so
-    // it shares g_bm25's oracle hash
-    "g_bm25_indexed" -> bm25OracleSql,
-
-    // streamed + compacted index is bit-equal to the full scan too
-    "q_stream_postings" -> bm25OracleSql,
-
-    "g_hybrid_rrf" -> hybridOracleSql,
-
-    // full replay: per-vector symmetric int8 encode (floor(x+0.5)
-    // rounding — identical tie behavior in both engines), exact-integer
-    // quantized-cosine ranking, top-80 shortlist, floored-cosine re-rank;
-    // the pruned arm adds the fixture-centroid cell argmax + probe-cell
-    // IN filter before the shortlist cut (the pqOracleSql discipline)
-    "g_sim_sq8" -> sq8OracleSql(pruned = false),
-    "g_sim_ivfsq8" -> sq8OracleSql(pruned = true),
-    // probe-all over the persisted codes-only SQ8 layout == the full scan
-    "g_sim_sq8_indexed" -> sq8OracleSql(pruned = false),
-    // probe-all over the STREAMED codes-only SQ8 layout == the full scan
-    "q_stream_sq8" -> sq8OracleSql(pruned = false),
-
-    "g_sim_hamming" ->
-      // full replay: sign-bit pack into one UBIGINT word (bit j set iff
-      // v[j] > 0 — same two's-complement bit pattern as the engine's
-      // long), hamming = bit_count(xor), top-80 by (hamming, id),
-      // zero-norm rows dropped at the re-rank, floored-cosine answer
-      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |fp AS (SELECT vec_id,
-        |         bit_or(CASE WHEN v[b + 1] > 0 THEN CAST(1 AS UBIGINT) << b
-        |                     ELSE CAST(0 AS UBIGINT) END) AS fp
-        |       FROM v CROSS JOIN range(0, 64) t(b) GROUP BY vec_id),
-        |qf AS (SELECT fp AS qfp FROM fp WHERE vec_id = 0),
-        |short AS (SELECT f.vec_id, CAST(bit_count(xor(f.fp, qfp)) AS INT) AS hamming
-        |          FROM fp f, qf
-        |          ORDER BY hamming, f.vec_id LIMIT 80),
-        |q AS (SELECT v AS qv FROM v WHERE vec_id = 0),
-        |re AS (SELECT s.vec_id, s.hamming,
-        |        floor((list_dot_product(w.v, qv) /
-        |              (sqrt(list_dot_product(w.v, w.v)) * sqrt(list_dot_product(qv, qv)))) * 10000) / 10000 AS sim
-        |       FROM short s JOIN v w ON w.vec_id = s.vec_id, q
-        |       WHERE list_dot_product(w.v, w.v) > 0)
-        |SELECT vec_id, hamming, sim FROM re ORDER BY sim DESC, vec_id LIMIT 20""".stripMargin,
-
-    "g_sim_pq" -> pqOracleSql(pruned = false),
-    "g_sim_ivfpq" -> pqOracleSql(pruned = true),
-    // probe-all over the persisted codes-only layout == the full ADC scan
-    "g_sim_pq_indexed" -> pqOracleSql(pruned = false),
-    // probe-all over the STREAMED codes-only layout == the full ADC scan
-    "q_stream_pq" -> pqOracleSql(pruned = false),
-
-    // probe-all ANN == brute force: the losslessness gates share the
-    // brute-force oracle (see the query comments)
-    "g_sim_ann" ->
-      oracleSqlSimTopK,
-
-    "q_generation_diff" ->
-      // the delete's change set is exactly aggregate 7's rows, all
-      // 'removed' (nothing added): the manifest-pruned diff must
-      // reconstruct it without replaying the operation
-      """SELECT user_id, CAST(event_id AS INT) AS event_id,
-        |       'removed' AS change
-        |FROM events WHERE user_id = 7
-        |ORDER BY user_id, event_id""".stripMargin,
-
-    "q_generation_delete" ->
-      // the durable-delete lifecycle must leave exactly the non-tombstoned
-      // rows visible through the manifest
-      """SELECT user_id, CAST(event_id AS INT) AS event_id, epoch_us(ts) AS ts_us
-        |FROM events WHERE user_id <> 7
-        |ORDER BY user_id, event_id""".stripMargin,
-
-    "q_stream_index" ->
-      // identical to q_index_build: the streaming maintenance path must
-      // land exactly the batch derivation
-      oracleSqlIndexBuild,
-
-    "g_sim_ivf_indexed" ->
-      // probe-all over the persisted layout == brute force (same
-      // losslessness contract as g_sim_ivf, now including write + pruned
-      // directory read)
-      oracleSqlSimTopK,
-
-    "q_stream_ivf" ->
-      // probe-all over the STREAMED versioned layout == brute force (the
-      // g_sim_ivf_indexed contract, landing through ivfIndexStream)
-      oracleSqlSimTopK,
-
-    "q_stream_knn" ->
-      // the resolved streamed graph at probe-all == the brute-force graph
-      // (g_knn_graph's truth, landing through knnGraphStream)
-      oracleSqlKnnBruteForce,
-
-    "g_sim_ivf" ->
-      oracleSqlSimTopK,
-
-    // the recall-floor gates: the Spark side computes recall@20 of the
-    // reduced-probe approximate setting against brute force; the oracle row
-    // is the asserted expectation — the driver's hash gate goes red if a
-    // code change drops recall below the floor
-    "g_sim_ann_recall" ->
-      "SELECT 20 AS k, CAST(0.8 AS DOUBLE) AS recall_floor, true AS meets_floor",
-
-    "g_sim_ivf_recall" ->
-      "SELECT 20 AS k, CAST(0.8 AS DOUBLE) AS recall_floor, true AS meets_floor",
-
-    "g_curation" ->
-      """WITH keep AS (
-        |  SELECT min(doc_id) AS doc_id FROM documents GROUP BY sha256(text)),
-        |curated AS (
-        |  SELECT d.*, CAST(len(string_split(d.text, ' ')) AS INT) AS n_tokens
-        |  FROM documents d JOIN keep k ON d.doc_id = k.doc_id
-        |  WHERE len(string_split(d.text, ' ')) BETWEEN 20 AND 200
-        |    AND d.n_chars >= 100 AND d.lang IN ('en', 'de', 'fr'))
-        |SELECT lang, source, count(*) AS n_kept,
-        |       CAST(CAST(sum(n_tokens) AS BIGINT) AS DOUBLE) / count(*) AS avg_tokens,
-        |       CAST(sum(n_chars) AS BIGINT) AS sum_chars
-        |FROM curated GROUP BY lang, source ORDER BY lang, source""".stripMargin,
-
-    "q_funnel3" ->
-      oracleSqlFunnel3,
-
-    "q_funnel3_agg" ->
-      // same oracle as q_funnel3: the agg-chain operator must reproduce
-      // the greedy funnel exactly
-      oracleSqlFunnel3,
-
-    "q_funnel" ->
-      """WITH s AS (SELECT user_id, min(epoch_us(ts)) AS signup_us
-        |           FROM events WHERE event_type = 'signup' GROUP BY user_id),
-        |p AS (SELECT user_id, min(epoch_us(ts)) AS purchase_us
-        |      FROM events WHERE event_type = 'purchase' GROUP BY user_id)
-        |SELECT s.user_id, s.signup_us,
-        |       coalesce(CASE WHEN p.purchase_us > s.signup_us THEN p.purchase_us END, 0) AS converted_us
-        |FROM s LEFT JOIN p ON s.user_id = p.user_id
-        |ORDER BY s.user_id""".stripMargin,
-
-    "g_embed_pairs" ->
-      """SELECT a.label, a.vec_id AS id1, b.vec_id AS id2,
-        |       floor((list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])) /
-        |              (sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[]))) *
-        |               sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))))) * 10000) / 10000 AS sim
-        |FROM embeddings a JOIN embeddings b
-        |  ON a.label = b.label AND a.vec_id < b.vec_id
-        |WHERE list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])) /
-        |      (sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[]))) *
-        |       sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])))) >= 0.3
-        |ORDER BY id1, id2""".stripMargin,
-
-    "g_dedup_normalized" ->
-      """SELECT md5(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'),
-        |                               ' +', ' ', 'g'))) AS canon_md5,
-        |       min(doc_id) AS keep_id, count(*) AS n_copies
-        |FROM documents GROUP BY 1 ORDER BY keep_id""".stripMargin,
-
-    "g_ngram_vocab" ->
-      """WITH sh AS (
-        |  SELECT unnest(CASE WHEN len(t) >= 2
-        |    THEN list_transform(range(1, len(t)), i -> array_to_string(t[i:i+1], ' '))
-        |    ELSE [array_to_string(t, ' ')] END) AS shingle
-        |  FROM (SELECT string_split(text, ' ') AS t FROM documents))
-        |SELECT shingle, count(*) AS n
-        |FROM sh GROUP BY 1 ORDER BY n DESC, shingle LIMIT 50""".stripMargin,
-
-    "g_bpe_pairs" ->
-      // adjacent character pairs weighted by word frequency; sum(BIGINT)
-      // is HUGEINT in DuckDB -> cast back
-      """WITH w AS (
-        |  SELECT word, count(*) AS freq FROM (
-        |    SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-        |  WHERE len(word) > 0 GROUP BY word),
-        |p AS (
-        |  SELECT u.s1 AS s1, u.s2 AS s2, freq FROM (
-        |    SELECT freq,
-        |      unnest(list_transform(range(1, len(c)), i -> {'s1': c[i], 's2': c[i+1]})) AS u
-        |    FROM (SELECT string_split(word, '') AS c, freq FROM w)))
-        |SELECT s1, s2, CAST(sum(freq) AS BIGINT) AS cnt
-        |FROM p GROUP BY s1, s2 ORDER BY cnt DESC, s1, s2 LIMIT 50""".stripMargin,
-
-    "g_bpe_step" ->
-      // the same argmax the loop takes (cnt DESC, lexicographic), then the
-      // greedy left-to-right merge replayed as a non-overlapping split on
-      // the merged-pair substring with the merge token re-interleaved
-      // between segment characters (string_split scans left to right
-      // non-overlapping — exactly the fold's greedy pass; for the FIRST
-      // merge all symbols are single characters, so every substring
-      // occurrence is a pair adjacency and no false boundary exists),
-      // then the identical pair recount over the new token lists
-      """WITH w AS (
-        |  SELECT word, count(*) AS freq FROM (
-        |    SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-        |  WHERE len(word) > 0 GROUP BY word),
-        |p0 AS (
-        |  SELECT u.s1 AS s1, u.s2 AS s2, freq FROM (
-        |    SELECT freq,
-        |      unnest(list_transform(range(1, len(c)), i -> {'s1': c[i], 's2': c[i+1]})) AS u
-        |    FROM (SELECT string_split(word, '') AS c, freq FROM w))),
-        |m AS (
-        |  SELECT s1, s2, s1 || s2 AS ab FROM (
-        |    SELECT s1, s2, CAST(sum(freq) AS BIGINT) AS cnt
-        |    FROM p0 GROUP BY s1, s2 ORDER BY cnt DESC, s1, s2 LIMIT 1)),
-        |toks AS (
-        |  SELECT freq, list_filter(
-        |    list_slice(fl, 1, len(fl) - 1), t -> t <> '') AS c FROM (
-        |    SELECT freq,
-        |      flatten(list_transform(
-        |        string_split(word, ab),
-        |        s -> list_append(string_split(s, ''), ab))) AS fl
-        |    FROM w CROSS JOIN m)),
-        |p1 AS (
-        |  SELECT u.s1 AS s1, u.s2 AS s2, freq FROM (
-        |    SELECT freq,
-        |      unnest(list_transform(range(1, len(c)), i -> {'s1': c[i], 's2': c[i+1]})) AS u
-        |    FROM toks))
-        |SELECT s1, s2, CAST(sum(freq) AS BIGINT) AS cnt
-        |FROM p1 GROUP BY s1, s2 ORDER BY cnt DESC, s1, s2 LIMIT 50""".stripMargin,
-
-    "g_bpe_encode" ->
-      // per-word token count after the argmax merge (same split-interleave
-      // replay), then the per-doc aggregation over exploded corpus words
-      """WITH w AS (
-        |  SELECT word, count(*) AS freq FROM (
-        |    SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-        |  WHERE len(word) > 0 GROUP BY word),
-        |p0 AS (
-        |  SELECT u.s1 AS s1, u.s2 AS s2, freq FROM (
-        |    SELECT freq,
-        |      unnest(list_transform(range(1, len(c)), i -> {'s1': c[i], 's2': c[i+1]})) AS u
-        |    FROM (SELECT string_split(word, '') AS c, freq FROM w))),
-        |m AS (
-        |  SELECT s1 || s2 AS ab FROM (
-        |    SELECT s1, s2, CAST(sum(freq) AS BIGINT) AS cnt
-        |    FROM p0 GROUP BY s1, s2 ORDER BY cnt DESC, s1, s2 LIMIT 1)),
-        |tokn AS (
-        |  SELECT word, len(list_filter(
-        |    list_slice(fl, 1, len(fl) - 1), t -> t <> '')) AS n_toks FROM (
-        |    SELECT word,
-        |      flatten(list_transform(
-        |        string_split(word, ab),
-        |        s -> list_append(string_split(s, ''), ab))) AS fl
-        |    FROM w CROSS JOIN m)),
-        |d AS (
-        |  SELECT doc_id, word FROM (
-        |    SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents)
-        |  WHERE len(word) > 0)
-        |SELECT doc_id, CAST(sum(n_toks) AS BIGINT) AS n_tokens, count(*) AS n_words
-        |FROM d JOIN tokn USING (word)
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "g_sim_batch" ->
-      """WITH probes AS (
-        |  SELECT vec_id AS probe_id, CAST(embedding AS DOUBLE[]) AS pv
-        |  FROM embeddings WHERE vec_id < 5),
-        |scored AS (
-        |  SELECT probe_id, e.vec_id,
-        |         floor((list_dot_product(CAST(e.embedding AS DOUBLE[]), pv) /
-        |               (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[]))) *
-        |                sqrt(list_dot_product(pv, pv)))) * 10000) / 10000 AS sim
-        |  FROM embeddings e JOIN probes ON e.vec_id <> probe_id),
-        |ranked AS (
-        |  SELECT probe_id, vec_id, sim,
-        |         CAST(row_number() OVER (PARTITION BY probe_id ORDER BY sim DESC, vec_id) AS INT) AS rank
-        |  FROM scored)
-        |SELECT probe_id, vec_id, sim, rank FROM ranked
-        |WHERE rank <= 10 ORDER BY probe_id, rank""".stripMargin,
-
-    "g_rag_retrieve" ->
-      // the g_sim_batch truth (3 probes, rank <= 5) joined to documents
-      """WITH probes AS (
-        |  SELECT vec_id AS probe_id, CAST(embedding AS DOUBLE[]) AS pv
-        |  FROM embeddings WHERE vec_id < 3),
-        |scored AS (
-        |  SELECT probe_id, e.vec_id,
-        |         floor((list_dot_product(CAST(e.embedding AS DOUBLE[]), pv) /
-        |               (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[]))) *
-        |                sqrt(list_dot_product(pv, pv)))) * 10000) / 10000 AS sim
-        |  FROM embeddings e JOIN probes ON e.vec_id <> probe_id),
-        |ranked AS (
-        |  SELECT probe_id, vec_id, sim,
-        |         CAST(row_number() OVER (PARTITION BY probe_id ORDER BY sim DESC, vec_id) AS INT) AS rank
-        |  FROM scored)
-        |SELECT probe_id, rank, d.doc_id, sim, d.lang, d.n_chars
-        |FROM ranked JOIN documents d ON ranked.vec_id = d.doc_id
-        |WHERE rank <= 5 ORDER BY probe_id, rank""".stripMargin,
-
-    "g_text_stats" ->
-      """SELECT lang, source, count(*) AS n_docs,
-        |       CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-        |       CAST(CAST(sum(n_chars) AS BIGINT) AS DOUBLE) / count(*) AS avg_chars,
-        |       min(n_chars) AS min_chars, max(n_chars) AS max_chars
-        |FROM documents GROUP BY lang, source ORDER BY lang, source""".stripMargin,
-
-    "g_token_counts" ->
-      """SELECT doc_id,
-        |       CAST(len(string_split(text, ' ')) AS INT) AS n_tokens,
-        |       CAST(len(list_distinct(string_split(text, ' '))) AS INT) AS n_distinct,
-        |       CAST(len(string_split_regex(text, '\s+')) +
-        |            length(regexp_replace(text, '[a-zA-Z0-9\s]', '', 'g')) AS INT) AS n_bpeish
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "g_token_commonness" ->
-      // all-integer until the final exact-sum/count division
-      """WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
-        |freq AS (SELECT tok, CAST(count(*) AS BIGINT) AS c FROM toks GROUP BY tok)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-        |       CAST(min(c) AS BIGINT) AS min_freq,
-        |       CAST(sum(c) AS BIGINT) AS sum_freq,
-        |       CAST(CAST(sum(c) AS BIGINT) AS DOUBLE) / count(*) AS mean_freq
-        |FROM toks JOIN freq USING (tok)
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "g_lang_id" ->
-      """SELECT doc_id, lang AS lang_label,
-        |       CAST(len(list_intersect(list_distinct(string_split(text, ' ')),
-        |                ['the','a','of','and','to','in','is'])) AS INT) AS en_stopword_hits,
-        |       floor((length(regexp_replace(text, '[^aeiou]', '', 'g')) /
-        |             CAST(length(text) AS DOUBLE)) * 10000) / 10000 AS vowel_ratio,
-        |       CASE WHEN len(list_intersect(list_distinct(string_split(text, ' ')),
-        |                ['the','a','of','and','to','in','is'])) >= 2
-        |            THEN 'en' ELSE 'other' END AS lang_guess
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "g_quality" ->
-      """SELECT doc_id,
-        |       CAST(len(string_split(text, ' ')) AS INT) AS n_tokens,
-        |       floor((length(regexp_replace(text, '[a-zA-Z0-9\s]', '', 'g')) /
-        |             CAST(length(text) AS DOUBLE)) * 10000) / 10000 AS punct_ratio,
-        |       floor(least(greatest(
-        |         least(len(string_split(text, ' ')) / 64.0, 1.0) * 0.4 +
-        |         (len(list_distinct(string_split(text, ' '))) /
-        |          CAST(len(string_split(text, ' ')) AS DOUBLE)) * 0.4 +
-        |         (1.0 - length(regexp_replace(text, '[a-zA-Z0-9\s]', '', 'g')) /
-        |                CAST(length(text) AS DOUBLE)) * 0.2,
-        |         0.0), 1.0) * 10000) / 10000 AS quality
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "g_sketch_distinct" ->
-      // exact side recomputed; within_bound is the deterministic HLL
-      // error invariant (same pattern as the recall gates)
-      """SELECT lang, CAST(count(DISTINCT tok) AS BIGINT) AS n_exact,
-        |       true AS within_bound
-        |FROM (SELECT lang, unnest(string_split(text, ' ')) AS tok FROM documents)
-        |GROUP BY lang ORDER BY lang""".stripMargin,
-
-    "g_quality_rules" ->
-      """WITH q AS (
-        |  SELECT doc_id,
-        |         len(string_split(text, ' ')) AS n_tokens,
-        |         (length(text) - (len(string_split(text, ' ')) - 1))
-        |           / CAST(len(string_split(text, ' ')) AS DOUBLE) AS mtl,
-        |         length(regexp_replace(text, '[a-zA-Z0-9\s]', '', 'g'))
-        |           / CAST(length(text) AS DOUBLE) AS punct,
-        |         len(list_intersect(list_distinct(string_split(text, ' ')),
-        |             ['the','a','of','and','to','in','is'])) AS hits
-        |  FROM documents)
-        |SELECT doc_id, CAST(n_tokens AS INT) AS n_tokens,
-        |       floor(mtl * 10000) / 10000 AS mean_tok_len,
-        |       (n_tokens >= 30 AND n_tokens <= 80) AS r_len,
-        |       (mtl >= 3.8 AND mtl <= 4.6) AS r_tok_len,
-        |       (punct <= 0.2) AS r_punct,
-        |       (hits >= 2) AS r_stopword,
-        |       ((n_tokens >= 30 AND n_tokens <= 80)
-        |        AND (mtl >= 3.8 AND mtl <= 4.6)
-        |        AND (punct <= 0.2) AND (hits >= 2)) AS kept
-        |FROM q ORDER BY doc_id""".stripMargin,
-
-    "g_redact" ->
-      // sequential replace; each pattern counted against the text AFTER the
-      // earlier patterns applied (exactly the spans masked)
-      """WITH r1 AS (SELECT doc_id,
-        |    CAST(len(regexp_extract_all(text, '\bcustomer\b')) AS INT) AS c1,
-        |    regexp_replace(text, '\bcustomer\b', '<NAME>', 'g') AS t1 FROM documents),
-        |r2 AS (SELECT doc_id, c1,
-        |    CAST(len(regexp_extract_all(t1, '[0-9]+')) AS INT) AS c2,
-        |    regexp_replace(t1, '[0-9]+', '<NUM>', 'g') AS t2 FROM r1),
-        |r3 AS (SELECT doc_id, c1, c2,
-        |    CAST(len(regexp_extract_all(t2, '\bkey\b')) AS INT) AS c3,
-        |    regexp_replace(t2, '\bkey\b', '<KEY>', 'g') AS t3 FROM r2)
-        |SELECT doc_id, CAST(c1 + c2 + c3 AS INT) AS n_redactions, t3 AS redacted
-        |FROM r3 ORDER BY doc_id""".stripMargin,
-
-    "g_distinctive_terms" ->
-      """WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
-        |tf AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf FROM toks GROUP BY 1, 2),
-        |df AS (SELECT tok, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY 1),
-        |ranked AS (SELECT doc_id, tok AS term, tf, df,
-        |    CAST(row_number() OVER (PARTITION BY doc_id
-        |         ORDER BY df ASC, tf DESC, tok ASC) AS INT) AS rank
-        |  FROM tf JOIN df USING (tok))
-        |SELECT doc_id, term, tf, df, rank FROM ranked
-        |WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin,
-
-    "g_chunk_windows" ->
-      // range(0, len, 24) == sequence(0, len-1, 24); list_slice is 1-based
-      // inclusive-both-ends and clamps, like Spark slice(arr, start, len)
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-        |s AS (SELECT doc_id, toks, unnest(range(0, len(toks), 24)) AS st FROM t)
-        |SELECT doc_id, CAST(st // 24 AS INT) AS chunk_idx,
-        |       CAST(len(list_slice(toks, st + 1, st + 32)) AS INT) AS n_chunk_tokens,
-        |       array_to_string(list_slice(toks, st + 1, st + 32), ' ') AS chunk_text
-        |FROM s ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    "g_para_dedup" ->
-      // same chunking idiom as g_chunk_windows (stride 8, width 8), then
-      // first-occurrence-wins over (doc_id, idx) per distinct passage and
-      // ordered reassembly; list(... ORDER BY) FILTER replays the
-      // kept-only ordered collect
-      oracleSqlParaDedup,
-
-    "g_para_dedup_incr" ->
-      // the g_para_dedup idiom restricted to the increment, with a
-      // NOT-IN-corpus condition on top of first-occurrence-wins
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-        |s AS (SELECT doc_id, toks, unnest(range(0, len(toks), 8)) AS st FROM t),
-        |p AS (SELECT doc_id, CAST(st // 8 AS INT) AS idx,
-        |             array_to_string(list_slice(toks, st + 1, st + 8), ' ') AS para
-        |      FROM s),
-        |ip AS (SELECT * FROM p WHERE doc_id % 5 = 0),
-        |cp AS (SELECT DISTINCT para FROM p WHERE doc_id % 5 <> 0),
-        |r AS (SELECT doc_id, idx, para,
-        |             row_number() OVER (PARTITION BY para ORDER BY doc_id, idx) AS rn
-        |      FROM ip),
-        |k AS (SELECT doc_id, idx, para,
-        |             (rn = 1 AND para NOT IN (SELECT para FROM cp)) AS kept
-        |      FROM r)
-        |SELECT doc_id,
-        |       coalesce(array_to_string(list(para ORDER BY idx) FILTER (WHERE kept), ' '), '') AS clean_text,
-        |       CAST(count(*) FILTER (WHERE kept) AS BIGINT) AS n_kept,
-        |       CAST(count(*) FILTER (WHERE NOT kept) AS BIGINT) AS n_dropped
-        |FROM k GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "g_cooccur_lift" ->
-      // HUGEINT numerator mirrors the Spark DECIMAL(38,0) cast; // is floor
-      // division on positives, same as Spark DIV
-      """WITH toks AS (SELECT DISTINCT doc_id, tok FROM
-        |    (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents)),
-        |pairs AS (SELECT a.tok AS tok1, b.tok AS tok2, CAST(count(*) AS BIGINT) AS c_xy
-        |  FROM toks a JOIN toks b ON a.doc_id = b.doc_id AND a.tok < b.tok
-        |  GROUP BY 1, 2 HAVING count(*) >= 2),
-        |df AS (SELECT tok, CAST(count(*) AS BIGINT) AS c FROM toks GROUP BY 1),
-        |n AS (SELECT CAST(count(*) AS BIGINT) AS nn FROM documents)
-        |SELECT tok1, tok2, c_xy, dx.c AS c_x, dy.c AS c_y,
-        |       CAST(CAST(c_xy AS HUGEINT) * nn * 10000
-        |            // (CAST(dx.c AS HUGEINT) * dy.c) AS BIGINT) AS lift_bp
-        |FROM pairs
-        |JOIN df dx ON dx.tok = pairs.tok1
-        |JOIN df dy ON dy.tok = pairs.tok2
-        |CROSS JOIN n
-        |ORDER BY lift_bp DESC, tok1, tok2 LIMIT 50""".stripMargin,
-
-    "g_logit_train" -> logitTrainOracleSql,
-    // the streamed feature landing + periodic retrain serves the SAME
-    // descent — one truth, one hash (LogitSpec pins the fold semantics)
-    "q_stream_logit" -> logitTrainOracleSql,
-
-    "g_quality_logit" ->
-      // identical left-assoc multiply-add chain over the same features.
-      // n_tok/hits are CAST to DOUBLE here: DuckDB parses 0.01/-1.0 as
-      // DECIMAL and would fold decimal*integer EXACTLY, converting to
-      // double mid-chain at a different point than Spark's all-double
-      // arithmetic (one-ulp floor flips, seen at sf0.001 doc 14); with
-      // double operands every step is the same IEEE op in both engines
-      """WITH f AS (
-        |  SELECT doc_id,
-        |         CAST(len(string_split(text, ' ')) AS DOUBLE) AS n_tok,
-        |         (length(text) - (len(string_split(text, ' ')) - 1)) /
-        |           CAST(len(string_split(text, ' ')) AS DOUBLE) AS mean_tok_len,
-        |         length(regexp_replace(text, '[a-zA-Z0-9\s]', '', 'g')) /
-        |           CAST(length(text) AS DOUBLE) AS punct,
-        |         CAST(len(list_intersect(list_distinct(string_split(text, ' ')),
-        |             ['the', 'a', 'of', 'and', 'to', 'in', 'is'])) AS DOUBLE) AS hits
-        |  FROM documents),
-        |s AS (
-        |  SELECT doc_id,
-        |         floor((-1.0 + 0.01 * n_tok + 0.2 * mean_tok_len
-        |                + -8.0 * punct + 0.15 * hits) * 10000) / 10000 AS logit
-        |  FROM f)
-        |SELECT doc_id, logit, logit >= 0.6 AS kept
-        |FROM s ORDER BY doc_id""".stripMargin,
-
-    "g_quality_unigram" ->
-      // per-token logs quantized to DECIMAL(18,8) BEFORE the sum on both
-      // sides (order-free exact sum), mean floored at 4 digits
-      """WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
-        |freq AS (SELECT tok, CAST(count(*) AS BIGINT) AS c FROM toks GROUP BY 1),
-        |tot AS (SELECT CAST(sum(c) AS BIGINT) AS total FROM freq)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-        |       floor((CAST(sum(CAST(ln(CAST(c AS DOUBLE) / total) AS DECIMAL(18,8)))
-        |                   AS DOUBLE) / count(*)) * 10000) / 10000 AS avg_logprob
-        |FROM toks JOIN freq USING (tok) CROSS JOIN tot
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "g_quality_bigram" ->
-      // pairs via 1-based list indexing (range(1, len) = positions of
-      // bigram left-sides); context count = bigram left-side count, so
-      // edge effects cancel exactly as in the Spark window-lead pairs
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
-        |pairs AS (
-        |  SELECT doc_id, pr[1] AS w1, pr[2] AS w2
-        |  FROM (SELECT doc_id,
-        |          unnest(list_transform(range(1, len(ts)), i -> [ts[i], ts[i + 1]])) AS pr
-        |        FROM t)),
-        |c2 AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS c2 FROM pairs GROUP BY 1, 2),
-        |c1 AS (SELECT w1, CAST(count(*) AS BIGINT) AS c1 FROM pairs GROUP BY 1)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-        |       floor((CAST(sum(CAST(ln(CAST(c2 AS DOUBLE) / c1) AS DECIMAL(18,8)))
-        |                   AS DOUBLE) / count(*)) * 10000) / 10000 AS avg_logprob
-        |FROM pairs JOIN c2 USING (w1, w2) JOIN c1 USING (w1)
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "g_kn_score" -> knScoreOracleSql,
-    // the streamed count landing + fold serves the SAME model — one
-    // truth, one hash (KnStreamSpec pins the fold semantics)
-    "q_stream_kn" -> knScoreOracleSql,
-
-    "g_kn3_score" -> kn3ScoreOracleSql,
-    "q_stream_kn3" -> kn3ScoreOracleSql,
-
-    "g_logit_eval" -> logitEvalOracleSql,
-    "g_logit_hashed" -> logitHashedOracleSql,
-
-    "g_nb_langid" -> nbLangidOracleSql,
-
-    "g_nb_eval" -> nbEvalOracleSql,
-
-    "g_langid_eval" -> langidEvalOracleSql,
-
-    "g_zipf_fit" ->
-      // exact (count desc, token asc) top-100 cut per lang; quantized
-      // logs; exact decimal OLS sums; fixed-shape double closed form
-      """WITH tk AS (SELECT lang, unnest(string_split(text, ' ')) AS tok FROM documents),
-        |c AS (SELECT lang, tok, CAST(count(*) AS BIGINT) AS c FROM tk GROUP BY 1, 2),
-        |r AS (SELECT lang, c,
-        |        row_number() OVER (PARTITION BY lang ORDER BY c DESC, tok) AS r
-        |      FROM c),
-        |q AS (SELECT lang,
-        |        CAST(ln(CAST(r AS DOUBLE)) AS DECIMAL(18,8)) AS x,
-        |        CAST(ln(CAST(c AS DOUBLE)) AS DECIMAL(18,8)) AS y
-        |      FROM r WHERE r <= 100),
-        |a AS (SELECT lang, CAST(count(*) AS BIGINT) AS n,
-        |        sum(x) AS sx, sum(y) AS sy, sum(x * y) AS sxy, sum(x * x) AS sxx
-        |      FROM q GROUP BY 1),
-        |b AS (SELECT lang, n, sx, sy,
-        |        CASE WHEN CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |                  - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) = 0.0
-        |             THEN 0.0
-        |             ELSE (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-        |                   - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        |                  / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |                     - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) END AS slope
-        |      FROM a)
-        |SELECT lang, n AS n_top,
-        |       floor(slope * 1000000) / 1000000 AS slope,
-        |       floor((CAST(sy AS DOUBLE) - slope * CAST(sx AS DOUBLE))
-        |             / CAST(n AS DOUBLE) * 1000000) / 1000000 AS intercept
-        |FROM b ORDER BY lang""".stripMargin,
-
-    "g_mink_prob" ->
-      // LM type counts + 1-row (T, V); per-(doc, lp) multiplicities;
-      // bottom-k by value cutoff with the boundary group contributing
-      // least(m, k - seen) copies; k = ceil(0.2·n) in DOUBLE both sides
-      """WITH lm AS (SELECT * FROM documents WHERE doc_id % 2 = 0),
-        |sc AS (SELECT * FROM documents WHERE doc_id % 2 = 1),
-        |cnt AS (SELECT w, CAST(count(*) AS BIGINT) AS c
-        |        FROM (SELECT unnest(string_split(text, ' ')) AS w FROM lm) GROUP BY 1),
-        |tot AS (SELECT CAST(sum(c) AS BIGINT) AS t, CAST(count(*) AS BIGINT) AS v FROM cnt),
-        |dt AS (SELECT doc_id, w, CAST(count(*) AS BIGINT) AS m0
-        |       FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM sc)
-        |       GROUP BY 1, 2),
-        |lpj AS (SELECT doc_id,
-        |          CAST(ln((CAST(coalesce(c, 0) AS DOUBLE) + 1.0) / (t + v))
-        |               AS DECIMAL(18,8)) AS lp,
-        |          m0
-        |        FROM dt LEFT JOIN cnt USING (w) CROSS JOIN tot),
-        |g AS (SELECT doc_id, lp, CAST(sum(m0) AS BIGINT) AS m FROM lpj GROUP BY 1, 2),
-        |r AS (SELECT doc_id, lp, m,
-        |        CAST(sum(m) OVER (PARTITION BY doc_id) AS BIGINT) AS n,
-        |        CAST(coalesce(sum(m) OVER (PARTITION BY doc_id ORDER BY lp
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS bef
-        |      FROM g),
-        |s AS (SELECT doc_id, n,
-        |        CAST(ceil(CAST(0.2 AS DOUBLE) * n) AS BIGINT) AS k, lp,
-        |        least(m, CAST(ceil(CAST(0.2 AS DOUBLE) * n) AS BIGINT) - bef) AS take
-        |      FROM r WHERE bef < CAST(ceil(CAST(0.2 AS DOUBLE) * n) AS BIGINT))
-        |SELECT doc_id, CAST(max(n) AS BIGINT) AS n_tokens,
-        |       floor(CAST(sum(lp * CAST(take AS DECIMAL(10,0))) AS DOUBLE)
-        |             / CAST(max(k) AS DOUBLE) * 10000) / 10000 AS mink_mean
-        |FROM s GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "g_novelty" ->
-      // the contamination shingle shape, per-doc inverse: distinct eval
-      // shingles left-join the train distinct-shingle set
-      """WITH sh AS (
-        |  SELECT doc_id, unnest(CASE WHEN len(t) >= 3
-        |    THEN list_transform(range(1, len(t) - 1), i -> array_to_string(t[i:i+2], ' '))
-        |    ELSE [array_to_string(t, ' ')] END) AS shingle
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)),
-        |tr AS (SELECT DISTINCT shingle, 1 AS hit FROM sh WHERE doc_id % 2 = 0),
-        |ev AS (SELECT DISTINCT doc_id, shingle FROM sh WHERE doc_id % 2 = 1)
-        |SELECT ev.doc_id, CAST(count(*) AS BIGINT) AS n_shingles,
-        |       CAST(sum(CASE WHEN hit IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_seen,
-        |       floor((1.0 - CAST(sum(CASE WHEN hit IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-        |              / count(*)) * 1000000) / 1000000 AS novelty_frac
-        |FROM ev LEFT JOIN tr USING (shingle)
-        |GROUP BY ev.doc_id ORDER BY ev.doc_id""".stripMargin,
-
-    "g_nb_priors" -> nbPriorsOracleSql,
-
-    "g_logit_auc" -> logitAucOracleSql,
-
-    "g_logit_calibration" -> logitCalibrationOracleSql,
-
-    "g_ccnet_pipeline" -> ccnetPipelineOracleSql,
-
-    "g_ccnet_buckets" -> ccnetBucketsOracleSql,
-
-    "g_glm_poisson" -> glmPoissonOracleSql,
-
-    // the streamed maintainer serves the SAME descent
-    "q_stream_glm" -> glmPoissonOracleSql,
-
-    // the streamed maintainer recomputes the SAME mixture (one truth)
-    "q_stream_doremi" -> doremiOracleSql,
-
-    "g_logit_platt" -> logitPlattOracleSql,
-
-    "g_quality_loop" -> qualityLoopOracleSql,
-
-    "g_bt_fit" -> btFitOracleSql,
-    "g_bt_rank" -> btRankOracleSql,
-    // the streamed twin serves the SAME rows (one truth, one hash)
-    "q_stream_bt" -> btRankOracleSql,
-
-    "g_doremi_weights" -> doremiOracleSql,
-
-    "g_pref_pairs" -> prefPairsOracleSql,
-
-    // the streamed maintainer re-pairs the SAME construction
-    "q_stream_pref" -> prefPairsOracleSql,
-    // the streamed count landing + fold IS the model (additive evidence)
-    "q_stream_nb" -> nbLangidOracleSql,
-
-    "g_oov_rate" ->
-      """WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
-        |vocab AS (
-        |  SELECT tok FROM (
-        |    SELECT tok, count(*) AS c FROM toks GROUP BY 1
-        |    ORDER BY c DESC, tok LIMIT 100)),
-        |marked AS (
-        |  SELECT doc_id, CASE WHEN v.tok IS NULL THEN 1.0 ELSE 0.0 END AS oov
-        |  FROM toks LEFT JOIN vocab v USING (tok))
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-        |       floor((sum(oov) / count(*)) * 1000000) / 1000000 AS oov_frac
-        |FROM marked GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "g_hard_negatives" ->
-      """WITH probes AS (
-        |  SELECT vec_id AS probe_id, label AS probe_label, CAST(embedding AS DOUBLE[]) AS pv
-        |  FROM embeddings WHERE vec_id < 5),
-        |scored AS (
-        |  SELECT probe_id, e.vec_id, e.label,
-        |         floor((list_dot_product(CAST(e.embedding AS DOUBLE[]), pv) /
-        |               (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[]))) *
-        |                sqrt(list_dot_product(pv, pv)))) * 10000) / 10000 AS sim
-        |  FROM embeddings e JOIN probes
-        |    ON e.vec_id <> probe_id AND e.label <> probe_label),
-        |ranked AS (
-        |  SELECT probe_id, vec_id, label, sim,
-        |         CAST(row_number() OVER (PARTITION BY probe_id ORDER BY sim DESC, vec_id) AS INT) AS rank
-        |  FROM scored)
-        |SELECT probe_id, vec_id, label, sim, rank FROM ranked
-        |WHERE rank <= 10 ORDER BY probe_id, rank""".stripMargin,
-
-    // probe-all IVF candidates == the exact cross product: the scale
-    // path's losslessness gate shares the definition oracle
-    "g_bitext_ivf" -> oracleSqlBitextMargin,
-
-    "g_bitext_margin" -> oracleSqlBitextMargin,
-
-    "g_decontam_semantic" -> oracleSqlDecontamSemantic,
-
-    // probe-all == the exact cross product: one truth, one hash
-    "g_decontam_ivf" -> oracleSqlDecontamSemantic,
-
-    "q_stream_decontam" ->
-      // the stream lands exactly the threshold-flagged pairs; rolled up
-      // per eval doc (argmax + flagged count) it must equal the brute
-      // truth over the same split
-      """WITH x AS (
-        |  SELECT vec_id AS eval_id, CAST(embedding AS DOUBLE[]) AS xv
-        |  FROM embeddings WHERE label = 0),
-        |y AS (
-        |  SELECT vec_id AS train_id, CAST(embedding AS DOUBLE[]) AS yv
-        |  FROM embeddings WHERE label = 1),
-        |sc AS (
-        |  SELECT eval_id, train_id,
-        |    CAST(floor((list_dot_product(xv, yv) /
-        |      (sqrt(list_dot_product(xv, xv)) * sqrt(list_dot_product(yv, yv)))) * 10000.0)
-        |      AS BIGINT) AS s
-        |  FROM x CROSS JOIN y),
-        |fl AS (SELECT * FROM sc WHERE s >= 3000),
-        |r AS (SELECT eval_id, train_id, s,
-        |        row_number() OVER (PARTITION BY eval_id ORDER BY s DESC, train_id) AS rn,
-        |        CAST(count(*) OVER (PARTITION BY eval_id) AS BIGINT) AS n_flagged
-        |      FROM fl)
-        |SELECT eval_id, train_id, CAST(s AS DOUBLE) / 1e4 AS sim, n_flagged
-        |FROM r WHERE rn = 1 ORDER BY eval_id""".stripMargin,
-
-    "q_asof_lastview" ->
-      oracleSqlAsofLastView,
-
-    "q_asof_chunked" ->
-      // same oracle as q_asof_lastview: the chunked-carry variant must
-      // produce the identical as-of matching
-      oracleSqlAsofLastView,
-
-    "q_range_activity" ->
-      """WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us, event_type FROM events),
-        |     p AS (SELECT event_id AS anchor_id, user_id, ts_us FROM e WHERE event_type = 'error')
-        |SELECT p.anchor_id, p.user_id, CAST(count(*) AS BIGINT) AS n_nearby
-        |FROM p JOIN e ON p.user_id = e.user_id
-        | AND e.ts_us BETWEEN p.ts_us - 1800000000 AND p.ts_us + 1800000000
-        |GROUP BY 1, 2 ORDER BY 1""".stripMargin,
-
-    "g_contamination" ->
-      """WITH sh AS (
-        |  SELECT doc_id, unnest(CASE WHEN len(t) >= 3
-        |    THEN list_transform(range(1, len(t) - 1), i -> array_to_string(t[i:i+2], ' '))
-        |    ELSE [array_to_string(t, ' ')] END) AS shingle
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)),
-        |ev AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 97 = 0),
-        |tr AS (SELECT DISTINCT doc_id, shingle FROM sh WHERE doc_id % 97 <> 0)
-        |SELECT tr.doc_id, CAST(count(*) AS BIGINT) AS n_shared
-        |FROM tr JOIN ev USING (shingle)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "g_repetition" ->
-      """WITH sh AS (
-        |  SELECT doc_id, unnest(CASE WHEN len(t) >= 3
-        |    THEN list_transform(range(1, len(t) - 1), i -> array_to_string(t[i:i+2], ' '))
-        |    ELSE [array_to_string(t, ' ')] END) AS shingle
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents))
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_shingles,
-        |       floor((1.0 - CAST(count(DISTINCT shingle) AS DOUBLE) / count(*)) * 10000.0) / 10000.0
-        |         AS repetition
-        |FROM sh GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "g_token_packing" ->
-      """SELECT doc_id, lang, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-        |       CAST(floor((sum(len(string_split(text, ' ')))
-        |              OVER (PARTITION BY lang ORDER BY doc_id
-        |                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |            - len(string_split(text, ' '))) / 2048.0) AS BIGINT) AS bin
-        |FROM documents ORDER BY lang, doc_id""".stripMargin,
-
-    "g_pack_sequences" ->
-      // bins recomputed with the same prefix-sum rule, shards assembled
-      // with ORDER BY doc_id string_agg — byte-equal to the Spark
-      // sort_array concatenation
-      """WITH bins AS (
-        |  SELECT doc_id, lang, text,
-        |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-        |         CAST(floor((sum(len(string_split(text, ' ')))
-        |                OVER (PARTITION BY lang ORDER BY doc_id
-        |                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |              - len(string_split(text, ' '))) / 2048.0) AS BIGINT) AS bin
-        |  FROM documents)
-        |SELECT lang, bin, count(*) AS n_docs,
-        |       CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
-        |       string_agg(text, ' ' ORDER BY doc_id) AS packed_text
-        |FROM bins GROUP BY lang, bin ORDER BY lang, bin""".stripMargin,
-
-    "g_mixture_sample" ->
-      // rate normalized at the RAREST stratum (n_min): kept counts follow
-      // sqrt(n_s); a prior n_max formulation degenerated to rate = 1
-      """WITH c AS (
-        |  SELECT source, count(*) AS n_docs FROM documents GROUP BY 1),
-        |r AS (
-        |  SELECT source, CAST(n_docs AS BIGINT) AS n_docs,
-        |         least(1000000, CAST(floor(sqrt(CAST((SELECT min(n_docs) FROM c) AS DOUBLE) /
-        |                                        CAST(n_docs AS DOUBLE)) * 1000000) AS BIGINT)) AS rate_ppm
-        |  FROM c)
-        |SELECT r.source, r.n_docs, r.rate_ppm,
-        |       count(CASE WHEN d.doc_id % 1000000 < r.rate_ppm THEN 1 END) AS n_sampled
-        |FROM documents d JOIN r ON d.source = r.source
-        |GROUP BY 1, 2, 3 ORDER BY r.source""".stripMargin,
-
-    "g_mixture_temp" ->
-      // temperature depth 2: rate = (n_min/n_s)^(1/4) via nested sqrt —
-      // kept counts follow n_s^0.75
-      """WITH c AS (
-        |  SELECT source, count(*) AS n_docs FROM documents GROUP BY 1),
-        |r AS (
-        |  SELECT source, CAST(n_docs AS BIGINT) AS n_docs,
-        |         least(1000000, CAST(floor(sqrt(sqrt(CAST((SELECT min(n_docs) FROM c) AS DOUBLE) /
-        |                                             CAST(n_docs AS DOUBLE))) * 1000000) AS BIGINT)) AS rate_ppm
-        |  FROM c)
-        |SELECT r.source, r.n_docs, r.rate_ppm,
-        |       count(CASE WHEN d.doc_id % 1000000 < r.rate_ppm THEN 1 END) AS n_sampled
-        |FROM documents d JOIN r ON d.source = r.source
-        |GROUP BY 1, 2, 3 ORDER BY r.source""".stripMargin,
-
-    "g_split_stratified" ->
-      """SELECT lang,
-        |       CASE WHEN doc_id % 100 < 90 THEN 'train'
-        |            WHEN doc_id % 100 < 95 THEN 'val' ELSE 'test' END AS split,
-        |       count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS n_chars_total
-        |FROM documents GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "g_split_safe" ->
-      // closure over the exact shingle-Jaccard pair list (the proven-equal
-      // truth of the MinHash pairs), min reachable id as the cluster rep,
-      // then the identical BIGINT permutation of the rep decides the side
-      """WITH RECURSIVE sh AS (
-        |  SELECT doc_id, list_distinct(CASE WHEN len(t) >= 3
-        |    THEN list_transform(range(1, len(t) - 1), i -> array_to_string(t[i:i+2], ' '))
-        |    ELSE [array_to_string(t, ' ')] END) AS toks
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)),
-        |pairs AS (
-        |  SELECT a.doc_id AS id1, b.doc_id AS id2
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |  WHERE len(list_intersect(a.toks, b.toks)) /
-        |        (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks))) >= 0.5),
-        |edges AS (
-        |  SELECT id1 AS src, id2 AS dst FROM pairs
-        |  UNION SELECT id2 AS src, id1 AS dst FROM pairs),
-        |reach(a, b) AS (
-        |  SELECT src, src FROM edges
-        |  UNION
-        |  SELECT r.a, e.dst FROM reach r JOIN edges e ON r.b = e.src),
-        |comp AS (SELECT a AS doc_id, min(b) AS cluster_id FROM reach GROUP BY a),
-        |g AS (
-        |  SELECT d.doc_id, coalesce(c.cluster_id, d.doc_id) AS group_id
-        |  FROM documents d LEFT JOIN comp c USING (doc_id))
-        |SELECT doc_id, group_id,
-        |       CASE WHEN (((group_id % 2147483647) * 62089911) % 2147483647) % 100 < 90 THEN 'train'
-        |            WHEN (((group_id % 2147483647) * 62089911) % 2147483647) % 100 < 95 THEN 'val'
-        |            ELSE 'test' END AS split
-        |FROM g ORDER BY doc_id""".stripMargin,
-
-    "g_train_shuffle" ->
-      // the same permutation in BIGINT arithmetic: ((id mod P) * m + seed)
-      // mod P with P = 2^31-1, m = 62089911, seed = 0; shard = key mod 8
-      """SELECT doc_id,
-        |       ((doc_id % 2147483647) * 62089911) % 2147483647 AS sort_key,
-        |       (((doc_id % 2147483647) * 62089911) % 2147483647) % 8 AS shard
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "g_pack_spans" -> packSpansOracleSql,
-
-    // the streamed + compacted pack index reads back bit-equal to the
-    // batch packer (single-batch landing; cross-batch tail re-emission
-    // is PackStreamSpec's job)
-    "q_stream_pack" -> packSpansOracleSql,
-
-    "g_phrase" -> phraseOracleSql,
-
-    // the positional-index probe is bit-equal to the full scan
-    "g_phrase_indexed" -> phraseOracleSql,
-
-    "g_bm25_phrase" -> bm25PhraseOracleSql,
-
-    // the index-served composition is bit-equal to the full scan
-    "g_serve_lexical" -> bm25PhraseOracleSql,
-
-    "g_assembly_e2e" ->
-      // all four stages replayed: min-id dedup, TTR rank strata (2
-      // buckets), the curriculum order bucket*P + perm, the one-window
-      // packing, and the shard rollup with the modular checksum
-      """WITH dd AS (SELECT doc_id, text FROM (
-        |        SELECT doc_id, text,
-        |          row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-        |        FROM documents) z WHERE rn = 1),
-        |s AS (SELECT doc_id,
-        |        CAST((len(list_distinct(string_split(coalesce(text, ''), ' '))) * 1000000)
-        |             // len(string_split(coalesce(text, ''), ' ')) AS BIGINT) AS score
-        |      FROM dd),
-        |r AS (SELECT doc_id, score,
-        |        CAST(row_number() OVER (ORDER BY score, doc_id) AS BIGINT) - 1 AS rank,
-        |        CAST(count(*) OVER () AS BIGINT) AS n FROM s),
-        |bkt AS (SELECT doc_id, CAST((rank * 2) // n AS BIGINT) AS bucket FROM r),
-        |d2 AS (SELECT dd.doc_id,
-        |        CAST(len(string_split(coalesce(text, ''), ' ')) AS BIGINT) AS tok,
-        |        bucket,
-        |        bucket * 2147483647
-        |          + ((dd.doc_id % 2147483647) * 62089911) % 2147483647 AS ord
-        |      FROM dd JOIN bkt ON dd.doc_id = bkt.doc_id),
-        |o AS (SELECT doc_id, tok,
-        |        CAST(sum(tok) OVER (ORDER BY ord, doc_id
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) - tok AS off
-        |      FROM d2 WHERE tok > 0),
-        |t AS (SELECT CAST(coalesce(sum(tok), 0) AS BIGINT) AS tt FROM d2 WHERE tok > 0),
-        |sp AS (SELECT s2.seq_id,
-        |        CAST(greatest(off, seq_id * 128) - seq_id * 128 AS BIGINT) AS seq_pos,
-        |        doc_id,
-        |        CAST(least(off + tok, (seq_id + 1) * 128)
-        |             - greatest(off, seq_id * 128) AS BIGINT) AS len
-        |       FROM (SELECT doc_id, tok, off,
-        |               unnest(generate_series(off // 128, (off + tok - 1) // 128)) AS seq_id
-        |             FROM o) s2, t
-        |       WHERE s2.seq_id < tt // 128)
-        |SELECT seq_id // 8 AS shard,
-        |       CAST(count(DISTINCT seq_id) AS BIGINT) AS n_seqs,
-        |       CAST(count(*) AS BIGINT) AS n_slices,
-        |       CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-        |       CAST(sum(len) AS BIGINT) AS n_tokens,
-        |       min(seq_id) AS first_seq,
-        |       max(seq_id) AS last_seq,
-        |       CAST(CAST(sum(((doc_id % 2147483647) * 62089911
-        |              + seq_id * 131 + seq_pos * 31 + len) % 2147483647) AS HUGEINT)
-        |            % 2147483647 AS BIGINT) AS checksum
-        |FROM sp GROUP BY 1 ORDER BY shard""".stripMargin,
-
-    "g_bm25_faceted" ->
-      // the shared scoring CTEs + the facet join + a per-source window
-      s"""WITH $bm25ScoreCtesSql,
-         |f AS (SELECT d.source, sc.doc_id, n_terms, bm25,
-         |        CAST(row_number() OVER (PARTITION BY d.source
-         |          ORDER BY bm25 DESC, sc.doc_id) AS INT) AS rank
-         |      FROM sc JOIN documents d ON sc.doc_id = d.doc_id)
-         |SELECT source, rank, doc_id, n_terms, bm25 FROM f WHERE rank <= 3
-         |ORDER BY source, rank""".stripMargin,
-
-    "g_snippets" ->
-      // earliest query-term position (sentinel for absent), inclusive
-      // token slice [mp-3, mp+3] clipped to the doc, space-joined
-      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
-        |p AS (SELECT doc_id, ts,
-        |        least(coalesce(nullif(list_position(ts, 'dup'), 0), 2147483647),
-        |              coalesce(nullif(list_position(ts, 'spark'), 0), 2147483647),
-        |              coalesce(nullif(list_position(ts, 'customer'), 0), 2147483647)) AS mp
-        |      FROM d),
-        |q AS (SELECT doc_id, ts, mp,
-        |        greatest(1, mp - 3) AS s,
-        |        least(mp + 3, len(ts)) AS e
-        |      FROM p WHERE mp < 2147483647)
-        |SELECT doc_id, CAST(mp - 1 AS BIGINT) AS anchor,
-        |       array_to_string(ts[s:e], ' ') AS snippet
-        |FROM q ORDER BY doc_id""".stripMargin,
-
-    "g_frame_dedup" ->
-      // the g_frame_sample CTEs, rolled up by digest and filtered to
-      // cross-media collisions
-      """WITH m AS (SELECT doc_id AS media_id, text AS content,
-        |        CAST(octet_length(CAST(text AS BLOB)) AS BIGINT) // 16 AS nf
-        |      FROM documents),
-        |g AS (SELECT media_id, content, nf,
-        |        CAST(least(8, nf) AS BIGINT) AS kk FROM m WHERE nf > 0),
-        |x AS (SELECT media_id, content, nf, kk,
-        |        unnest(generate_series(0, kk - 1)) AS frame_ix FROM g),
-        |y AS (SELECT media_id,
-        |        md5(substring(content,
-        |          CAST((((2 * frame_ix + 1) * nf) // (2 * kk)) * 16 + 1 AS INT), 16))
-        |          AS frame_md5
-        |      FROM x)
-        |SELECT frame_md5, CAST(count(*) AS BIGINT) AS n_occurrences,
-        |       CAST(count(DISTINCT media_id) AS BIGINT) AS n_media,
-        |       min(media_id) AS first_media
-        |FROM y GROUP BY 1 HAVING count(DISTINCT media_id) >= 2
-        |ORDER BY frame_md5""".stripMargin,
-
-    "g_frame_sample" ->
-      // the fake media content is the utf-8 of text (ASCII fixture:
-      // char == byte, the established g_media_meta equivalence), so the
-      // byte slices replay as VARCHAR substrings; midpoint strata in
-      // exact integer arithmetic
-      """WITH m AS (SELECT doc_id AS media_id, text AS content,
-        |        CAST(octet_length(CAST(text AS BLOB)) AS BIGINT) // 16 AS nf
-        |      FROM documents),
-        |g AS (SELECT media_id, content, nf,
-        |        CAST(least(8, nf) AS BIGINT) AS kk FROM m WHERE nf > 0),
-        |x AS (SELECT media_id, content, nf, kk,
-        |        unnest(generate_series(0, kk - 1)) AS frame_ix FROM g),
-        |y AS (SELECT media_id, content, frame_ix,
-        |        CAST(((2 * frame_ix + 1) * nf) // (2 * kk) AS BIGINT) AS frame_idx
-        |      FROM x)
-        |SELECT media_id, frame_ix, frame_idx,
-        |       CAST(frame_idx * 16 AS BIGINT) AS byte_start,
-        |       CAST((frame_idx * 1000) // 4 AS BIGINT) AS ts_ms,
-        |       md5(substring(content, CAST(frame_idx * 16 + 1 AS INT), 16)) AS frame_md5
-        |FROM y ORDER BY media_id, frame_ix""".stripMargin,
-
-    "g_frame_phash" -> framePhashOracleSql,
-
-    "g_phash_media" -> phashMediaOracleSql,
-    "g_phash_cc" -> phashCcOracleSql,
-    "g_phash_indexed" -> phashIndexedOracleSql,
-    // the streamed index serves the SAME probe rows (one truth, one hash)
-    "q_stream_phash" -> phashIndexedOracleSql,
-    // incremental merge must equal the full recompute (one truth, one hash)
-    "g_phash_cc_incr" -> phashCcOracleSql,
-
-    "g_unigram_step" -> unigramStepOracleSql,
-    "g_unigram_encode" -> unigramEncodeOracleSql,
-    "g_unigram_pipeline" -> unigramPipelineOracleSql,
-    "g_unigram_train" -> unigramTrainOracleSql,
-    "q_forget_everywhere" -> forgetOracleSql,
-    "q_forget_curated" -> curatedForgetOracleSql,
-    "q_stream_forget_all" -> streamForgetAllOracleSql,
-    // the resolved store equals the kept-corpus rebuild: k rows per
-    // survivor (probe-all at the fixture geometry), zero row diff
-    "q_forget_knn_store" ->
-      """SELECT CAST(5 * (SELECT count(*) FROM embeddings
-        |                 WHERE vec_id % 97 <> 3) AS BIGINT) AS n_rows,
-        |       CAST(0 AS BIGINT) AS n_diff
-        |ORDER BY n_rows""".stripMargin,
-    "g_media_card" -> mediaCardOracleSql,
-    "q_stream_media_card" -> mediaCardOracleSql,
-    "q_stream_forget" ->
-      // the streamed forget's size invariant (4 band rows per remaining
-      // doc — every doc has a signature, short-text fallback included)
-      // and the engine's own readback-vs-rebuild diff pinned at zero
-      """SELECT CAST(4 * count(*) AS BIGINT) AS n_rows,
-        |       CAST(0 AS BIGINT) AS n_diff
-        |FROM documents WHERE doc_id % 97 <> 3
-        |ORDER BY n_rows""".stripMargin,
-
-    "g_unigram_prune" -> unigramPruneOracleSql,
-
-    // the streamed count maintainer serves the SAME trainer (one truth)
-    "q_stream_unigram" -> unigramStepOracleSql,
-
-    "g_rank_buckets" ->
-      // the engine's two-phase rank is spec-pinned bit-equal to this
-      // single window; score = integer type-token ratio in ppm
-      """WITH s AS (SELECT doc_id,
-        |        CAST((len(list_distinct(string_split(coalesce(text, ''), ' '))) * 1000000)
-        |             // len(string_split(coalesce(text, ''), ' ')) AS BIGINT) AS score
-        |      FROM documents),
-        |r AS (SELECT doc_id, score,
-        |        CAST(row_number() OVER (ORDER BY score, doc_id) AS BIGINT) - 1 AS rank,
-        |        CAST(count(*) OVER () AS BIGINT) AS n
-        |      FROM s)
-        |SELECT doc_id, score, CAST((rank * 10) // n AS BIGINT) AS bucket, rank
-        |FROM r ORDER BY doc_id""".stripMargin,
-
-    "g_rank_buckets_grouped" ->
-      // the engine's two-phase grouped rank is spec-pinned bit-equal to
-      // this per-group window
-      """WITH s AS (SELECT doc_id, source,
-        |        CAST((len(list_distinct(string_split(coalesce(text, ''), ' '))) * 1000000)
-        |             // len(string_split(coalesce(text, ''), ' ')) AS BIGINT) AS score
-        |      FROM documents),
-        |r AS (SELECT doc_id, source, score,
-        |        CAST(row_number() OVER (PARTITION BY source ORDER BY score, doc_id)
-        |             AS BIGINT) - 1 AS rank,
-        |        CAST(count(*) OVER (PARTITION BY source) AS BIGINT) AS n
-        |      FROM s)
-        |SELECT source, doc_id, score, CAST((rank * 4) // n AS BIGINT) AS bucket, rank
-        |FROM r ORDER BY doc_id""".stripMargin,
-
-    "g_curriculum" -> curriculumOracleSql,
-
-    // the streamed periodic re-manifest serves the SAME schedule
-    "q_stream_curriculum" -> curriculumOracleSql,
-
-    "g_epoch_expand" ->
-      // the g_unimax waterfilling CTEs at budget 40000 / cap 3, then the
-      // repeat schedule: full epochs via generate_series, the fractional
-      // epoch as the minimal sk-order prefix covering alloc mod n
-      // (boundary kept — the domainTokenBudget rule)
-      """WITH c AS (SELECT source,
-        |        CAST(sum(len(string_split(coalesce(text, ''), ' '))) AS BIGINT) AS n_tokens
-        |      FROM documents GROUP BY source),
-        |r AS (SELECT source, n_tokens, n_tokens * 3 AS cap,
-        |        CAST(row_number() OVER (ORDER BY n_tokens * 3, source) AS BIGINT) AS i,
-        |        CAST(count(*) OVER () AS BIGINT) AS s,
-        |        coalesce(SUM(n_tokens * 3) OVER (ORDER BY n_tokens * 3, source
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS bef
-        |      FROM c),
-        |f AS (SELECT *,
-        |        (CAST(cap AS HUGEINT) * (s - i + 1) <= CAST(40000 AS HUGEINT) - bef) AS flag
-        |      FROM r),
-        |m AS (SELECT *, coalesce(max(CASE WHEN flag THEN i END) OVER (), 0) AS mm,
-        |        coalesce(max(CASE WHEN flag THEN bef + cap END) OVER (), 0) AS pm
-        |      FROM f),
-        |a AS (SELECT source, n_tokens,
-        |        CAST(CASE WHEN i <= mm THEN cap
-        |             ELSE ((40000 - pm) // (s - mm)) +
-        |                  (CASE WHEN i - mm <= ((40000 - pm) % (s - mm)) THEN 1 ELSE 0 END)
-        |        END AS BIGINT) AS alloc
-        |      FROM m),
-        |e AS (SELECT source,
-        |        CAST(CASE WHEN n_tokens > 0 THEN alloc // n_tokens ELSE 0 END AS BIGINT) AS fullr,
-        |        CAST(CASE WHEN n_tokens > 0 THEN alloc % n_tokens ELSE 0 END AS BIGINT) AS frac
-        |      FROM a),
-        |d AS (SELECT doc_id, source,
-        |        CAST(len(string_split(coalesce(text, ''), ' ')) AS BIGINT) AS n_tokens,
-        |        ((doc_id % 2147483647) * 62089911) % 2147483647 AS sk
-        |      FROM documents),
-        |fullrep AS (SELECT doc_id, d.source,
-        |        unnest(generate_series(0, fullr - 1)) AS epoch, n_tokens
-        |      FROM d JOIN e USING (source) WHERE fullr > 0),
-        |cum AS (SELECT d.doc_id, d.source, d.n_tokens, e.fullr, e.frac,
-        |        CAST(sum(d.n_tokens) OVER (PARTITION BY d.source ORDER BY d.sk, d.doc_id
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cm
-        |      FROM d JOIN e USING (source))
-        |SELECT doc_id, source, epoch, n_tokens FROM fullrep
-        |UNION ALL
-        |SELECT doc_id, source, fullr AS epoch, n_tokens FROM cum WHERE cm - n_tokens < frac
-        |ORDER BY doc_id, epoch""".stripMargin,
-
-    "g_train_manifest" -> trainManifestOracleSql,
-
-    // the streamed periodic re-manifest serves the SAME schedule — one
-    // truth, two engines (losslessness contract, ManifestStreamSpec)
-    "q_stream_manifest" -> trainManifestOracleSql,
-
-    "g_pack_binned" ->
-      // length-binned packing replayed: exact-length groups, cap = 64 DIV
-      // n whole docs per sequence, ranks in permutation order (the
-      // engine's two-phase chunked rank is spec-pinned bit-equal to this
-      // single window), dense global seq ids via ascending-length group
-      // offsets; docs with n > 64 excluded
-      """WITH d AS (SELECT doc_id,
-        |        CAST(len(string_split(coalesce(text, ''), ' ')) AS BIGINT) AS n,
-        |        ((doc_id % 2147483647) * 62089911) % 2147483647 AS ord
-        |      FROM documents),
-        |k AS (SELECT doc_id, n, ord, 64 // n AS cap FROM d WHERE n > 0 AND n <= 64),
-        |r AS (SELECT doc_id, n, cap,
-        |        CAST(row_number() OVER (PARTITION BY n ORDER BY ord, doc_id) AS BIGINT) - 1 AS rr
-        |      FROM k),
-        |go AS (SELECT n, CAST(coalesce(sum((cnt + cap - 1) // cap) OVER (ORDER BY n
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS goff
-        |       FROM (SELECT n, cap, CAST(count(*) AS BIGINT) AS cnt FROM k GROUP BY n, cap) g)
-        |SELECT CAST(goff + rr // cap AS BIGINT) AS seq_id,
-        |       CAST((rr % cap) * n AS BIGINT) AS seq_pos,
-        |       doc_id, n AS len
-        |FROM r JOIN go USING (n)
-        |ORDER BY seq_id, seq_pos""".stripMargin,
-
-    "g_shard_manifest" ->
-      // the g_pack_spans CTEs, then the shard rollup: counts, id range,
-      // token sum, and the modular row-signature checksum (sum reduced
-      // mod P; DuckDB's HUGEINT sum cast back)
-      """WITH d AS (SELECT doc_id,
-        |        CAST(len(string_split(coalesce(text, ''), ' ')) AS BIGINT) AS n
-        |      FROM documents),
-        |o AS (SELECT doc_id, n,
-        |        CAST(sum(n) OVER (ORDER BY doc_id
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) - n AS off
-        |      FROM d WHERE n > 0),
-        |t AS (SELECT CAST(coalesce(sum(n), 0) AS BIGINT) AS tt FROM d WHERE n > 0),
-        |sp AS (SELECT s.seq_id,
-        |        CAST(greatest(off, seq_id * 128) - seq_id * 128 AS BIGINT) AS seq_pos,
-        |        doc_id,
-        |        CAST(least(off + n, (seq_id + 1) * 128)
-        |             - greatest(off, seq_id * 128) AS BIGINT) AS len
-        |       FROM (SELECT doc_id, n, off,
-        |               unnest(generate_series(off // 128, (off + n - 1) // 128)) AS seq_id
-        |             FROM o) s, t
-        |       WHERE s.seq_id < tt // 128)
-        |SELECT seq_id // 8 AS shard,
-        |       CAST(count(DISTINCT seq_id) AS BIGINT) AS n_seqs,
-        |       CAST(count(*) AS BIGINT) AS n_slices,
-        |       CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-        |       CAST(sum(len) AS BIGINT) AS n_tokens,
-        |       min(seq_id) AS first_seq,
-        |       max(seq_id) AS last_seq,
-        |       CAST(CAST(sum(((doc_id % 2147483647) * 62089911
-        |              + seq_id * 131 + seq_pos * 31 + len) % 2147483647) AS HUGEINT)
-        |            % 2147483647 AS BIGINT) AS checksum
-        |FROM sp GROUP BY 1 ORDER BY shard""".stripMargin,
-
-    "g_span_corrupt" ->
-      // the sequence universe is dense 0 .. T DIV 128 - 1 (the packer's
-      // kept sequences), then the strata arithmetic: 6 spans of 3 in
-      // 21-token strata, offsets via the multiplicative permutation
-      """WITH d AS (SELECT
-        |        CAST(len(string_split(coalesce(text, ''), ' ')) AS BIGINT) AS n
-        |      FROM documents),
-        |t AS (SELECT CAST(coalesce(sum(n), 0) AS BIGINT) AS tt FROM d WHERE n > 0),
-        |q AS (SELECT unnest(generate_series(0, tt // 128 - 1)) AS seq_id FROM t),
-        |x AS (SELECT seq_id, unnest(generate_series(0, 5)) AS span_ix FROM q)
-        |SELECT seq_id, span_ix,
-        |       CAST(span_ix * 21
-        |            + ((((seq_id * 6 + span_ix) % 2147483647) * 62089911)
-        |               % 2147483647) % 19 AS BIGINT) AS span_start,
-        |       CAST(3 AS BIGINT) AS span_len
-        |FROM x ORDER BY seq_id, span_ix""".stripMargin,
-
-    "g_pack_stats" ->
-      // both packers replayed (the g_pack_spans CTEs at L=128, the
-      // g_pack_binned CTEs at L=64), then the report aggregates — exact
-      // integer fill/split ppm, corpus totals shared across arms
-      """WITH d AS (SELECT doc_id,
-        |        CAST(len(string_split(coalesce(text, ''), ' ')) AS BIGINT) AS n,
-        |        ((doc_id % 2147483647) * 62089911) % 2147483647 AS ord
-        |      FROM documents),
-        |t AS (SELECT CAST(coalesce(sum(n), 0) AS BIGINT) AS tt,
-        |             CAST(count(*) AS BIGINT) AS cd FROM d WHERE n > 0),
-        |o AS (SELECT doc_id, n,
-        |        CAST(sum(n) OVER (ORDER BY doc_id
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) - n AS off
-        |      FROM d WHERE n > 0),
-        |cs AS (SELECT s.seq_id, doc_id,
-        |        CAST(least(off + n, (seq_id + 1) * 128)
-        |             - greatest(off, seq_id * 128) AS BIGINT) AS len
-        |       FROM (SELECT doc_id, n, off,
-        |               unnest(generate_series(off // 128, (off + n - 1) // 128)) AS seq_id
-        |             FROM o) s, t
-        |       WHERE s.seq_id < tt // 128),
-        |k AS (SELECT doc_id, n, ord, 64 // n AS cap FROM d WHERE n > 0 AND n <= 64),
-        |r AS (SELECT doc_id, n, cap,
-        |        CAST(row_number() OVER (PARTITION BY n ORDER BY ord, doc_id) AS BIGINT) - 1 AS rr
-        |      FROM k),
-        |go AS (SELECT n, CAST(coalesce(sum((cnt + cap - 1) // cap) OVER (ORDER BY n
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS goff
-        |       FROM (SELECT n, cap, CAST(count(*) AS BIGINT) AS cnt FROM k GROUP BY n, cap) g),
-        |bs AS (SELECT CAST(goff + rr // cap AS BIGINT) AS seq_id, doc_id, n AS len
-        |       FROM r JOIN go USING (n)),
-        |stat_c AS (SELECT CAST(count(DISTINCT seq_id) AS BIGINT) AS n_seqs,
-        |                  CAST(count(*) AS BIGINT) AS n_slices,
-        |                  CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs_packed,
-        |                  CAST(coalesce(sum(len), 0) AS BIGINT) AS kept_tokens FROM cs),
-        |split_c AS (SELECT CAST(count(*) AS BIGINT) AS n_docs_split FROM
-        |             (SELECT doc_id FROM cs GROUP BY doc_id HAVING count(*) > 1)),
-        |stat_b AS (SELECT CAST(count(DISTINCT seq_id) AS BIGINT) AS n_seqs,
-        |                  CAST(count(*) AS BIGINT) AS n_slices,
-        |                  CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs_packed,
-        |                  CAST(coalesce(sum(len), 0) AS BIGINT) AS kept_tokens FROM bs),
-        |split_b AS (SELECT CAST(count(*) AS BIGINT) AS n_docs_split FROM
-        |             (SELECT doc_id FROM bs GROUP BY doc_id HAVING count(*) > 1))
-        |SELECT * FROM (
-        |  SELECT 'chunk' AS packer, n_seqs, n_slices, n_docs_packed, n_docs_split,
-        |         cd - n_docs_packed AS n_docs_dropped, kept_tokens,
-        |         tt - kept_tokens AS dropped_tokens,
-        |         CAST(CASE WHEN n_seqs > 0
-        |              THEN (kept_tokens * 1000000) // (n_seqs * 128) ELSE 0 END AS BIGINT)
-        |           AS fill_ppm,
-        |         CAST(CASE WHEN n_docs_packed > 0
-        |              THEN (n_docs_split * 1000000) // n_docs_packed ELSE 0 END AS BIGINT)
-        |           AS split_ppm
-        |  FROM stat_c, split_c, t
-        |  UNION ALL
-        |  SELECT 'binned', n_seqs, n_slices, n_docs_packed, n_docs_split,
-        |         cd - n_docs_packed, kept_tokens, tt - kept_tokens,
-        |         CAST(CASE WHEN n_seqs > 0
-        |              THEN (kept_tokens * 1000000) // (n_seqs * 64) ELSE 0 END AS BIGINT),
-        |         CAST(CASE WHEN n_docs_packed > 0
-        |              THEN (n_docs_split * 1000000) // n_docs_packed ELSE 0 END AS BIGINT)
-        |  FROM stat_b, split_b, t
-        |) ORDER BY packer""".stripMargin,
-
-    "g_dsir_select" ->
-      // g_dsir_weights' scoring replayed, length-normalized with integer
-      // division, then the exact count-derived quota + single-window rank
-      // over the raw pool (the g_quality_quantile oracle pattern)
-      """WITH tk AS (SELECT doc_id,
-        |        CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS is_t,
-        |        unnest(string_split(coalesce(text, ''), ' ')) AS tok
-        |      FROM documents),
-        |b AS (SELECT doc_id, is_t,
-        |        list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |          list_transform(range(1, length(tok)+1),
-        |            i -> CAST(unicode(tok[i]) AS BIGINT))),
-        |          (acc, c) -> (acc*31 + c) % 1000000007) % 64 AS bkt
-        |      FROM tk),
-        |w AS (SELECT bkt,
-        |        (CAST((sum(CASE WHEN is_t = 1 THEN 1 ELSE 0 END) + 1) AS BIGINT) * 1000000)
-        |          // CAST((sum(CASE WHEN is_t = 0 THEN 1 ELSE 0 END) + 1) AS BIGINT) AS w
-        |      FROM b GROUP BY bkt),
-        |d AS (SELECT b.doc_id, CAST(max(b.is_t) AS BIGINT) AS is_target,
-        |        count(*) AS n_tokens, CAST(sum(w.w) AS BIGINT) AS score
-        |      FROM b JOIN w USING (bkt) GROUP BY b.doc_id),
-        |p AS (SELECT doc_id,
-        |        CAST((CAST(score AS HUGEINT) * 1000000) // n_tokens AS BIGINT) AS score_pt
-        |      FROM d WHERE is_target = 0),
-        |q AS (SELECT CAST(ceil(0.3 * CAST(count(*) AS DOUBLE)) AS BIGINT) AS quota FROM p),
-        |r AS (SELECT doc_id, score_pt,
-        |        CAST(row_number() OVER (ORDER BY score_pt DESC, doc_id) AS INT) AS rank
-        |      FROM p)
-        |SELECT doc_id, score_pt, rank FROM r, q WHERE rank <= quota
-        |ORDER BY doc_id""".stripMargin,
-
-    "g_card_delta" ->
-      // both snapshots' card integer columns recomputed and differenced;
-      // the full-outer coalesce degenerates to plain values here (every
-      // source has docs in both snapshots at these SFs)
-      """WITH b AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |        CAST(sum(length(text)) AS BIGINT) AS n_chars,
-        |        CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens,
-        |        CAST(count(DISTINCT sha256(text)) AS BIGINT) AS n_distinct_texts,
-        |        CAST(count(DISTINCT lang) AS BIGINT) AS n_langs
-        |      FROM documents WHERE doc_id % 2 = 0 GROUP BY source),
-        |a AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |        CAST(sum(length(text)) AS BIGINT) AS n_chars,
-        |        CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens,
-        |        CAST(count(DISTINCT sha256(text)) AS BIGINT) AS n_distinct_texts,
-        |        CAST(count(DISTINCT lang) AS BIGINT) AS n_langs
-        |      FROM documents GROUP BY source)
-        |SELECT a.source,
-        |       a.n_docs, a.n_docs - coalesce(b.n_docs, 0) AS d_n_docs,
-        |       a.n_chars, a.n_chars - coalesce(b.n_chars, 0) AS d_n_chars,
-        |       a.n_tokens, a.n_tokens - coalesce(b.n_tokens, 0) AS d_n_tokens,
-        |       a.n_distinct_texts,
-        |       a.n_distinct_texts - coalesce(b.n_distinct_texts, 0) AS d_n_distinct_texts,
-        |       a.n_langs, a.n_langs - coalesce(b.n_langs, 0) AS d_n_langs
-        |FROM a LEFT JOIN b USING (source)
-        |ORDER BY a.source""".stripMargin,
-
-    "g_join_cardinality" ->
-      // |A join B| = sum over shared keys of the count product — computed
-      // from the count frames on both sides
-      """WITH lc AS (SELECT o_orderkey AS k, count(*) AS lcnt FROM orders GROUP BY 1),
-        |rc AS (SELECT l_orderkey AS k, count(*) AS rcnt FROM lineitem GROUP BY 1),
-        |j AS (SELECT lc.k, lcnt, rcnt FROM lc JOIN rc USING (k))
-        |SELECT CAST(count(*) AS BIGINT) AS n_shared_keys,
-        |       CAST(coalesce(sum(lcnt * rcnt), 0) AS BIGINT) AS join_rows,
-        |       CAST(coalesce(max(lcnt * rcnt), 0) AS BIGINT) AS max_key_rows
-        |FROM j""".stripMargin,
-
-    "g_exact_quantiles" ->
-      // plain rank selection: value at rank ceil(p*n) (1-indexed) in
-      // (value, id) order per group — the truth the two-phase bucket
-      // locate-and-window provably equals
-      oracleSqlExactQuantiles,
-
-    "g_skew_report" ->
-      // single-row fold over the per-key counts; the argmax scalar
-      // subquery tie-breaks to the smallest key, // = Spark's DIV
-      """WITH c AS (SELECT user_id AS k, count(*) AS cnt FROM events GROUP BY user_id)
-        |SELECT CAST(sum(cnt) AS BIGINT) AS n_rows,
-        |       CAST(count(*) AS BIGINT) AS n_keys,
-        |       CAST(max(cnt) AS BIGINT) AS max_cnt,
-        |       (SELECT min(k) FROM c WHERE cnt = (SELECT max(cnt) FROM c)) AS max_key,
-        |       (CAST(max(cnt) AS BIGINT) * count(*) * 1000000)
-        |         // CAST(sum(cnt) AS BIGINT) AS skew_ppm
-        |FROM c""".stripMargin,
-
-    "g_domain_budget" ->
-      // the per-domain single-window truth the two-phase form equals:
-      // running token sum in (quality desc, id) order per source, keep
-      // rows whose cumulative START offset is below the budget. The q4
-      // expression is g_quality's quality column floored at 1e4,
-      // coalesced to 0 exactly like the implementation (qualityScore is
-      // NULL on null/empty text; such docs sort LAST among the real
-      // q4=0 ties by doc_id and report q4=0, not NULL).
-      """WITH s AS (SELECT doc_id, source,
-        |    coalesce(CAST(floor(least(greatest(
-        |      least(len(string_split(text, ' ')) / 64.0, 1.0) * 0.4 +
-        |      (len(list_distinct(string_split(text, ' '))) /
-        |       CAST(len(string_split(text, ' ')) AS DOUBLE)) * 0.4 +
-        |      (1.0 - length(regexp_replace(text, '[a-zA-Z0-9\s]', '', 'g')) /
-        |             CAST(length(text) AS DOUBLE)) * 0.2,
-        |      0.0), 1.0) * 10000) AS BIGINT), 0) AS q4,
-        |    CAST(len(string_split(coalesce(text, ''), ' ')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |c AS (SELECT doc_id, source, q4, n_tokens,
-        |        SUM(n_tokens) OVER (PARTITION BY source ORDER BY q4 DESC, doc_id
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |      FROM s)
-        |SELECT doc_id, source, q4, n_tokens FROM c
-        |WHERE cum - n_tokens < 800
-        |ORDER BY doc_id""".stripMargin,
-
-    "g_length_hist" ->
-      // bin() renders identically in both engines (verified incl. 0), so
-      // the bit-length bucket is exact integer arithmetic on both sides
-      """SELECT source, CAST(length(bin(n_chars)) AS BIGINT) AS len_bucket,
-        |       CAST(count(*) AS BIGINT) AS n_docs,
-        |       min(n_chars) AS min_chars, max(n_chars) AS max_chars,
-        |       CAST(sum(n_chars) AS BIGINT) AS sum_chars
-        |FROM documents GROUP BY source, len_bucket
-        |ORDER BY source, len_bucket""".stripMargin,
-
-    "g_jsonl_roundtrip" ->
-      // round-trip truth: the original corpus — equality certifies the
-      // jsonl write/escape/read pipeline losslessly
-      """SELECT doc_id, text, lang, source, n_chars
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "g_token_budget" ->
-      // the single-window truth the two-phase form equals: global running
-      // token sum over (sort_key, doc_id) permutation order, keep rows
-      // whose cumulative START offset is below the budget
-      oracleSqlTokenBudget,
-
-    "g_pipeline_e2e" ->
-      // all four stages replayed in sequence: the g_quality_logit logit
-      // (double-cast features), min-id-per-text exact keepers OVER the
-      // quality survivors, the g_para_dedup chunk/window/reassemble OVER
-      // the dedup survivors, then the g_split_stratified modulus rule.
-      // Grouping exact dedup by raw text == grouping by its sha digest.
-      """WITH fq AS (
-        |  SELECT doc_id,
-        |         floor((-1.0 + 0.01 * CAST(len(string_split(text, ' ')) AS DOUBLE)
-        |                + 0.2 * ((length(text) - (len(string_split(text, ' ')) - 1)) /
-        |                         CAST(len(string_split(text, ' ')) AS DOUBLE))
-        |                + -8.0 * (length(regexp_replace(text, '[a-zA-Z0-9\s]', '', 'g')) /
-        |                          CAST(length(text) AS DOUBLE))
-        |                + 0.15 * CAST(len(list_intersect(list_distinct(string_split(text, ' ')),
-        |                       ['the', 'a', 'of', 'and', 'to', 'in', 'is'])) AS DOUBLE)) * 10000) / 10000 AS logit
-        |  FROM documents),
-        |d1 AS (SELECT d.doc_id, d.text FROM documents d JOIN fq USING (doc_id) WHERE fq.logit >= 0.6),
-        |k2 AS (SELECT min(doc_id) AS doc_id FROM d1 GROUP BY text),
-        |d2 AS (SELECT d1.doc_id, d1.text FROM d1 JOIN k2 USING (doc_id)),
-        |t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM d2),
-        |s AS (SELECT doc_id, toks, unnest(range(0, len(toks), 8)) AS st FROM t),
-        |p AS (SELECT doc_id, CAST(st // 8 AS INT) AS idx,
-        |             array_to_string(list_slice(toks, st + 1, st + 8), ' ') AS para
-        |      FROM s),
-        |r AS (SELECT doc_id, idx, para,
-        |             row_number() OVER (PARTITION BY para ORDER BY doc_id, idx) AS rn
-        |      FROM p),
-        |g AS (SELECT doc_id,
-        |             coalesce(array_to_string(list(para ORDER BY idx) FILTER (WHERE rn = 1), ' '), '') AS clean_text,
-        |             CAST(count(*) FILTER (WHERE rn = 1) AS BIGINT) AS n_paras_kept,
-        |             CAST(count(*) FILTER (WHERE rn > 1) AS BIGINT) AS n_paras_dropped
-        |      FROM r GROUP BY doc_id)
-        |SELECT doc_id,
-        |       CASE WHEN doc_id % 100 < 90 THEN 'train'
-        |            WHEN doc_id % 100 < 95 THEN 'val' ELSE 'test' END AS split,
-        |       n_paras_kept, n_paras_dropped,
-        |       CAST(CASE WHEN clean_text = '' THEN 0
-        |            ELSE len(string_split(clean_text, ' ')) END AS INT) AS n_clean_tokens
-        |FROM g ORDER BY doc_id""".stripMargin,
-
-    "g_embed_quant" ->
-      """WITH q AS (
-        |  SELECT vec_id,
-        |         list_transform(CAST(embedding AS DOUBLE[]), x -> CASE WHEN m = 0 THEN 0
-        |           ELSE greatest(-127, least(127, floor(x * 127.0 / m + 0.5))) END) AS ql
-        |  FROM (SELECT vec_id, embedding,
-        |          list_max(list_transform(CAST(embedding AS DOUBLE[]), x -> abs(x))) AS m
-        |        FROM embeddings))
-        |SELECT vec_id, CAST(list_min(ql) AS BIGINT) AS q_min,
-        |       CAST(list_max(ql) AS BIGINT) AS q_max,
-        |       CAST(list_sum(list_transform(ql, x -> abs(x))) AS BIGINT) AS q_l1
-        |FROM q ORDER BY vec_id""".stripMargin,
-
-    "q4_priority" ->
-      """SELECT o_orderpriority, count(*) AS n_orders
-        |FROM orders
-        |WHERE EXISTS (SELECT 1 FROM lineitem
-        |              WHERE l_orderkey = o_orderkey
-        |                AND l_shipdate > o_orderdate + INTERVAL 90 DAY)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q12_priority_class" ->
-      """SELECT l_returnflag,
-        |       CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-        |                     THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-        |       CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-        |                     THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q14_promo" ->
-      """SELECT floor((100.0 * CAST(sum(CASE WHEN p_type LIKE 'PROMO%'
-        |                THEN CAST(l_extendedprice AS DECIMAL(12,2)) *
-        |                     (CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(4,2)))
-        |                ELSE 0 END) AS DOUBLE) /
-        |             CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2)) *
-        |                      (CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(4,2))))
-        |                  AS DOUBLE)) * 10000.0) / 10000.0 AS promo_pct,
-        |       count(*) AS n_lines
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE l_shipdate >= TIMESTAMP '1996-03-01 00:00:00'
-        |  AND l_shipdate < TIMESTAMP '1996-04-01 00:00:00'""".stripMargin,
-
-    "q16_parts_suppliers" ->
-      // NOT EXISTS, not NOT IN: the Spark side is a left_anti join, and the
-      // two only agree when the subquery can't yield NULL — NOT EXISTS has
-      // identical null semantics to anti-join by definition (q22 likewise)
-      """SELECT p_brand, p_type, CAST(count(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
-        |FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem) ps
-        |JOIN part ON l_partkey = p_partkey
-        |WHERE NOT EXISTS (SELECT 1 FROM supplier
-        |                  WHERE s_suppkey = l_suppkey AND s_acctbal < 0)
-        |GROUP BY 1, 2 ORDER BY supplier_cnt DESC, p_brand, p_type""".stripMargin,
-
-    "q18_big_orders" ->
-      """SELECT c_name, o_orderkey, o_orderdate, o_totalprice,
-        |       CAST(sum_qty_d AS DOUBLE) AS sum_qty
-        |FROM orders
-        |JOIN (SELECT l_orderkey, sum(CAST(l_quantity AS DECIMAL(12,2))) AS sum_qty_d
-        |      FROM lineitem GROUP BY 1
-        |      HAVING sum(CAST(l_quantity AS DECIMAL(12,2))) > 250) b
-        |  ON o_orderkey = l_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q7_nation_volume" ->
-      """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-        |       CAST(year(l_shipdate) AS INT) AS l_year,
-        |       CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2)) *
-        |                (CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(4,2))))
-        |            AS DOUBLE) AS volume
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation n1 ON s_nationkey = n1.n_nationkey
-        |JOIN nation n2 ON c_nationkey = n2.n_nationkey
-        |WHERE n1.n_name IN ('NATION_1', 'NATION_2', 'NATION_3')
-        |  AND n2.n_name IN ('NATION_1', 'NATION_2', 'NATION_3')
-        |  AND n1.n_name <> n2.n_name
-        |  AND l_shipdate BETWEEN TIMESTAMP '1996-01-01 00:00:00' AND TIMESTAMP '1997-12-31 00:00:00'
-        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-
-    "q15_top_supplier" ->
-      """WITH rev AS (
-        |  SELECT l_suppkey AS supplier_no,
-        |         CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2)) *
-        |                  (CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(4,2))))
-        |              AS DOUBLE) AS total_revenue
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |    AND l_shipdate < TIMESTAMP '1996-04-01 00:00:00'
-        |  GROUP BY 1)
-        |SELECT s_suppkey, s_name, total_revenue
-        |FROM supplier JOIN rev ON s_suppkey = supplier_no
-        |WHERE total_revenue = (SELECT max(total_revenue) FROM rev)
-        |ORDER BY s_suppkey""".stripMargin,
-
-    "q17_small_qty" ->
-      """SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) / 7.0 AS avg_yearly,
-        |       count(*) AS n_lines
-        |FROM lineitem JOIN part ON p_partkey = l_partkey
-        |WHERE p_brand = 'Brand#23' AND p_size < 15
-        |  AND l_quantity < 0.2 * (SELECT CAST(sum(CAST(l2.l_quantity AS DECIMAL(12,2))) AS DOUBLE) / count(*)
-        |                          FROM lineitem l2 WHERE l2.l_partkey = p_partkey)""".stripMargin,
-
-    "q19_disjunctive" ->
-      """SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2)) *
-        |                (CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(4,2))))
-        |            AS DOUBLE) AS revenue,
-        |       count(*) AS n_lines
-        |FROM lineitem JOIN part ON p_partkey = l_partkey
-        |WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5 AND l_quantity BETWEEN 1 AND 11)
-        |   OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 10 AND l_quantity BETWEEN 10 AND 20)
-        |   OR (p_brand = 'Brand#24' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 20 AND 30)""".stripMargin,
-
-    "q22_idle_customers" ->
-      """SELECT c_nationkey, count(*) AS n_cust,
-        |       CAST(sum(CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE) AS total_bal
-        |FROM customer
-        |WHERE c_acctbal > (SELECT CAST(sum(CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE) / count(*)
-        |                   FROM customer WHERE c_acctbal > 0)
-        |  AND NOT EXISTS (SELECT 1 FROM orders
-        |                  WHERE o_custkey = c_custkey
-        |                    AND o_orderdate >= TIMESTAMP '1997-06-01 00:00:00')
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "g_length_quantiles" ->
-      """SELECT lang, count(*) AS n_docs,
-        |       floor(quantile_cont(n_chars, 0.25) * 10000) / 10000 AS q25,
-        |       floor(quantile_cont(n_chars, 0.5) * 10000) / 10000 AS q50,
-        |       floor(quantile_cont(n_chars, 0.75) * 10000) / 10000 AS q75
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-
-    "g_fingerprints" ->
-      """SELECT doc_id, md5(lower(text)) AS md5_norm
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "g_multimodal_meta" ->
-      """SELECT doc_id AS media_id,
-        |       CAST(octet_length(encode(text)) AS INT) AS byte_len,
-        |       md5(text) AS content_md5
-        |FROM documents ORDER BY media_id""".stripMargin,
-
-    "q2_min_supplier" ->
-      """WITH eu AS (SELECT s_suppkey, s_name, s_acctbal, n_name FROM supplier
-        |            JOIN nation ON s_nationkey = n_nationkey
-        |            JOIN region ON n_regionkey = r_regionkey AND r_name = 'EUROPE'),
-        |px AS (SELECT p_partkey, p_name FROM part WHERE p_size <= 10 AND p_type = 'STANDARD'),
-        |offers AS (SELECT l_partkey, l_suppkey, min(l_extendedprice) AS price
-        |           FROM lineitem JOIN eu ON l_suppkey = s_suppkey
-        |           JOIN px ON l_partkey = p_partkey
-        |           GROUP BY 1, 2)
-        |SELECT p_partkey, p_name, s_suppkey, s_name, s_acctbal, n_name, price
-        |FROM offers o JOIN px ON l_partkey = p_partkey JOIN eu ON l_suppkey = s_suppkey
-        |WHERE price = (SELECT min(price) FROM offers o2 WHERE o2.l_partkey = o.l_partkey)
-        |ORDER BY s_acctbal DESC, n_name, s_name, p_partkey""".stripMargin,
-
-    "q8_market_share" ->
-      """SELECT CAST(year(o_orderdate) AS INT) AS o_year,
-        |       CAST(sum(CASE WHEN supp_nation = 'NATION_3' THEN vol
-        |                     ELSE CAST(0 AS DECIMAL(18,4)) END) AS DOUBLE) /
-        |       CAST(sum(vol) AS DOUBLE) AS mkt_share
-        |FROM (
-        |  SELECT o_orderdate, n2.n_name AS supp_nation,
-        |         CAST(l_extendedprice AS DECIMAL(12,2)) *
-        |         (CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(4,2))) AS vol
-        |  FROM lineitem
-        |  JOIN part ON l_partkey = p_partkey AND p_type = 'PROMO'
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN nation n2 ON s_nationkey = n2.n_nationkey
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |   AND o_orderdate BETWEEN TIMESTAMP '1995-01-01 00:00:00' AND TIMESTAMP '1996-12-31 00:00:00'
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN nation n1 ON c_nationkey = n1.n_nationkey
-        |  JOIN region ON n1.n_regionkey = r_regionkey AND r_name = 'AMERICA') t
-        |GROUP BY o_year ORDER BY o_year""".stripMargin,
-
-    "q9_profit" ->
-      """SELECT n_name, CAST(year(o_orderdate) AS INT) AS o_year,
-        |       CAST(sum(
-        |         CAST(CAST(l_extendedprice AS DECIMAL(12,2)) *
-        |              (CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(4,2))) AS DECIMAL(18,4))
-        |       - CAST(CAST(p_retailprice AS DECIMAL(12,2)) *
-        |              CAST(l_quantity AS DECIMAL(12,2)) AS DECIMAL(18,4))) AS DOUBLE) AS sum_profit
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey AND p_name LIKE '%red%'
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY n_name, o_year
-        |ORDER BY n_name, o_year DESC""".stripMargin,
-
-    "q11_value_parts" ->
-      """WITH pv AS (
-        |  SELECT l_partkey, sum(CAST(l_extendedprice AS DECIMAL(12,2))) AS value
-        |  FROM lineitem
-        |  WHERE l_suppkey IN (SELECT s_suppkey FROM supplier
-        |    JOIN nation ON s_nationkey = n_nationkey
-        |    JOIN region ON n_regionkey = r_regionkey AND r_name = 'ASIA')
-        |  GROUP BY l_partkey)
-        |SELECT l_partkey, CAST(value AS DOUBLE) AS value
-        |FROM pv
-        |WHERE value * 1000 > (SELECT sum(value) FROM pv)
-        |ORDER BY value DESC, l_partkey""".stripMargin,
-
-    "q13_order_histogram" ->
-      """SELECT c_count, CAST(count(*) AS BIGINT) AS custdist FROM (
-        |  SELECT c_custkey, count(o_orderkey) AS c_count
-        |  FROM customer LEFT JOIN orders
-        |    ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
-        |  GROUP BY c_custkey) t
-        |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin,
-
-    "q20_semi_chain" ->
-      """SELECT s_suppkey, s_name, s_acctbal
-        |FROM supplier JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey AND r_name = 'ASIA'
-        |WHERE s_suppkey IN (
-        |  SELECT l_suppkey FROM lineitem
-        |  WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_name LIKE 'small %')
-        |    AND l_shipdate >= TIMESTAMP '1998-01-01 00:00:00'
-        |    AND l_shipdate < TIMESTAMP '1999-01-01 00:00:00'
-        |  GROUP BY l_suppkey, l_partkey
-        |  HAVING sum(CAST(l_quantity AS DECIMAL(12,2))) > CAST(40 AS DECIMAL(12,2)))
-        |ORDER BY s_suppkey""".stripMargin,
-
-    "q21_late_supplier" ->
-      """SELECT s_name, CAST(count(*) AS BIGINT) AS numwait
-        |FROM lineitem l1
-        |JOIN orders ON l1.l_orderkey = o_orderkey AND o_orderstatus = 'F'
-        |JOIN supplier ON l1.l_suppkey = s_suppkey
-        |WHERE EXISTS (SELECT 1 FROM lineitem l2
-        |              WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey)
-        |  AND NOT EXISTS (SELECT 1 FROM lineitem l3
-        |              WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey
-        |                AND l3.l_shipdate > l1.l_shipdate)
-        |GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 20""".stripMargin,
-
-    "g_source_overlap" ->
-      // distinct (source, text) sets, content-keyed pair intersections,
-      // left join onto the full source-pair universe; all-integer ppm
-      """WITH s2 AS (SELECT DISTINCT source, text FROM documents WHERE text IS NOT NULL),
-        |n AS (SELECT source, CAST(count(*) AS BIGINT) AS n FROM s2 GROUP BY source),
-        |pr AS (SELECT a.source AS source_a, b.source AS source_b, CAST(count(*) AS BIGINT) AS inter
-        |       FROM s2 a JOIN s2 b ON a.text = b.text AND a.source < b.source
-        |       GROUP BY 1, 2)
-        |SELECT na.source AS source_a, nb.source AS source_b,
-        |       coalesce(pr.inter, 0) AS inter, na.n AS n_a, nb.n AS n_b,
-        |       (coalesce(pr.inter, 0) * 1000000) // (na.n + nb.n - coalesce(pr.inter, 0)) AS jaccard_ppm,
-        |       (coalesce(pr.inter, 0) * 1000000) // na.n AS contain_a_ppm,
-        |       (coalesce(pr.inter, 0) * 1000000) // nb.n AS contain_b_ppm
-        |FROM n na JOIN n nb ON na.source < nb.source
-        |LEFT JOIN pr ON pr.source_a = na.source AND pr.source_b = nb.source
-        |ORDER BY source_a, source_b""".stripMargin,
-
-    "g_sketch_bottomk" ->
-      // the ESTIMATOR replayed exactly: per-source distinct poly
-      // fingerprints (g_fingerprints_rolling's fold), k smallest per
-      // source, per-pair union tagged/merged, k smallest of the union,
-      // overlap counted — deterministic in both engines at any regime
-      """WITH fp AS (SELECT DISTINCT source,
-        |        list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |          list_transform(range(1, length(text)+1), i -> CAST(unicode(text[i]) AS BIGINT))),
-        |          (acc, c) -> (acc * 31 + c) % 1000000007) AS fp
-        |      FROM documents WHERE text IS NOT NULL),
-        |sig AS (SELECT source, fp FROM (
-        |          SELECT source, fp, row_number() OVER (PARTITION BY source ORDER BY fp) AS rn
-        |          FROM fp) WHERE rn <= 64),
-        |srcs AS (SELECT DISTINCT source FROM sig),
-        |tagged AS (
-        |  SELECT p.source_a, p.source_b, s.fp,
-        |         max(CASE WHEN s.source = p.source_a THEN 1 ELSE 0 END) AS ia,
-        |         max(CASE WHEN s.source = p.source_b THEN 1 ELSE 0 END) AS ib
-        |  FROM (SELECT a.source AS source_a, b.source AS source_b
-        |        FROM srcs a JOIN srcs b ON a.source < b.source) p
-        |  JOIN sig s ON s.source = p.source_a OR s.source = p.source_b
-        |  GROUP BY 1, 2, 3),
-        |ranked AS (SELECT *, row_number() OVER (PARTITION BY source_a, source_b ORDER BY fp) AS rn
-        |           FROM tagged)
-        |SELECT source_a, source_b, CAST(count(*) AS BIGINT) AS n_sig,
-        |       CAST(count(CASE WHEN ia = 1 AND ib = 1 THEN 1 END) AS BIGINT) AS overlap,
-        |       (count(CASE WHEN ia = 1 AND ib = 1 THEN 1 END) * 1000000) // count(*) AS jaccard_est_ppm
-        |FROM ranked WHERE rn <= 64
-        |GROUP BY source_a, source_b
-        |ORDER BY source_a, source_b""".stripMargin,
-
-    "g_unimax" ->
-      // waterfilling replayed with the same windows: rank by (cap,
-      // source), capped iff cap·(S−i+1) <= budget − prefix (HUGEINT
-      // mirrors the Spark DECIMAL(38,0) cast), water level + remainder
-      // to the smallest-cap uncapped ranks
-      """WITH c AS (SELECT source,
-        |        CAST(sum(len(string_split(coalesce(text, ''), ' '))) AS BIGINT) AS n_tokens
-        |      FROM documents GROUP BY source),
-        |r AS (SELECT source, n_tokens, n_tokens * 2 AS cap,
-        |        CAST(row_number() OVER (ORDER BY n_tokens * 2, source) AS BIGINT) AS i,
-        |        CAST(count(*) OVER () AS BIGINT) AS s,
-        |        coalesce(SUM(n_tokens * 2) OVER (ORDER BY n_tokens * 2, source
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS bef
-        |      FROM c),
-        |f AS (SELECT *,
-        |        (CAST(cap AS HUGEINT) * (s - i + 1) <= CAST(20000 AS HUGEINT) - bef) AS flag
-        |      FROM r),
-        |m AS (SELECT *, coalesce(max(CASE WHEN flag THEN i END) OVER (), 0) AS mm,
-        |        coalesce(max(CASE WHEN flag THEN bef + cap END) OVER (), 0) AS pm
-        |      FROM f),
-        |a AS (SELECT source, n_tokens, cap,
-        |        CAST(CASE WHEN i <= mm THEN cap
-        |             ELSE ((20000 - pm) // (s - mm)) +
-        |                  (CASE WHEN i - mm <= ((20000 - pm) % (s - mm)) THEN 1 ELSE 0 END)
-        |        END AS BIGINT) AS alloc
-        |      FROM m)
-        |SELECT source, n_tokens, cap AS cap_tokens, alloc AS alloc_tokens,
-        |       CAST(CASE WHEN n_tokens > 0 THEN (alloc * 1000000) // n_tokens ELSE 0 END
-        |         AS BIGINT) AS epochs_ppm
-        |FROM a ORDER BY source""".stripMargin,
-
-    "g_unimax_select" ->
-      // the allocation CTEs verbatim, then the g_domain_budget
-      // single-window truth with the budget joined per source
-      """WITH c AS (SELECT source,
-        |        CAST(sum(len(string_split(coalesce(text, ''), ' '))) AS BIGINT) AS n_tokens
-        |      FROM documents GROUP BY source),
-        |r AS (SELECT source, n_tokens, n_tokens * 2 AS cap,
-        |        CAST(row_number() OVER (ORDER BY n_tokens * 2, source) AS BIGINT) AS i,
-        |        CAST(count(*) OVER () AS BIGINT) AS s,
-        |        coalesce(SUM(n_tokens * 2) OVER (ORDER BY n_tokens * 2, source
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS bef
-        |      FROM c),
-        |f AS (SELECT *,
-        |        (CAST(cap AS HUGEINT) * (s - i + 1) <= CAST(20000 AS HUGEINT) - bef) AS flag
-        |      FROM r),
-        |m AS (SELECT *, coalesce(max(CASE WHEN flag THEN i END) OVER (), 0) AS mm,
-        |        coalesce(max(CASE WHEN flag THEN bef + cap END) OVER (), 0) AS pm
-        |      FROM f),
-        |bud AS (SELECT source,
-        |        CASE WHEN i <= mm THEN cap
-        |             ELSE ((20000 - pm) // (s - mm)) +
-        |                  (CASE WHEN i - mm <= ((20000 - pm) % (s - mm)) THEN 1 ELSE 0 END)
-        |        END AS alloc
-        |      FROM m),
-        |sc AS (SELECT doc_id, source,
-        |    coalesce(CAST(floor(least(greatest(
-        |      least(len(string_split(text, ' ')) / 64.0, 1.0) * 0.4 +
-        |      (len(list_distinct(string_split(text, ' '))) /
-        |       CAST(len(string_split(text, ' ')) AS DOUBLE)) * 0.4 +
-        |      (1.0 - length(regexp_replace(text, '[a-zA-Z0-9\s]', '', 'g')) /
-        |             CAST(length(text) AS DOUBLE)) * 0.2,
-        |      0.0), 1.0) * 10000) AS BIGINT), 0) AS q4,
-        |    CAST(len(string_split(coalesce(text, ''), ' ')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |cm AS (SELECT doc_id, source, q4, n_tokens,
-        |        SUM(n_tokens) OVER (PARTITION BY source ORDER BY q4 DESC, doc_id
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |      FROM sc)
-        |SELECT doc_id, cm.source AS source, q4, n_tokens
-        |FROM cm JOIN bud ON cm.source = bud.source
-        |WHERE cm.cum - cm.n_tokens < bud.alloc
-        |ORDER BY doc_id""".stripMargin,
-
-    "g_boilerplate" ->
-      // g_para_dedup's chunking idiom, then per-(source, passage)
-      // DISTINCT-doc frequency vs the source's doc count — integer
-      // cross-multiplied ratio, all occurrences of boilerplate dropped
-      """WITH t AS (SELECT doc_id, source, string_split(text, ' ') AS toks FROM documents),
-        |s AS (SELECT doc_id, source, toks, unnest(range(0, len(toks), 8)) AS st FROM t),
-        |p AS (SELECT doc_id, source, CAST(st // 8 AS INT) AS idx,
-        |             array_to_string(list_slice(toks, st + 1, st + 8), ' ') AS para
-        |      FROM s),
-        |df AS (SELECT source, para, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
-        |       FROM p GROUP BY source, para),
-        |nd AS (SELECT source, CAST(count(DISTINCT doc_id) AS BIGINT) AS nd
-        |       FROM p GROUP BY source),
-        |k AS (SELECT p.doc_id, p.idx, p.para,
-        |             NOT (df.df >= 2 AND df.df * 100 >= 10 * nd.nd) AS kept
-        |      FROM p JOIN df ON p.source = df.source AND p.para = df.para
-        |             JOIN nd ON p.source = nd.source)
-        |SELECT doc_id,
-        |       coalesce(array_to_string(list(para ORDER BY idx) FILTER (WHERE kept), ' '), '') AS clean_text,
-        |       CAST(count(*) FILTER (WHERE kept) AS BIGINT) AS n_kept,
-        |       CAST(count(*) FILTER (WHERE NOT kept) AS BIGINT) AS n_dropped
-        |FROM k GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "g_containment" ->
-      // distinct 3-shingle sets (short docs contribute their whole text,
-      // the shingleRows convention), inverted-index pair intersections,
-      // both directions emitted and threshold-filtered independently
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-        |lng AS (SELECT doc_id, array_to_string(list_slice(toks, i, i + 2), ' ') AS shingle
-        |        FROM (SELECT doc_id, toks, unnest(range(1, len(toks) - 1)) AS i FROM t
-        |              WHERE len(toks) >= 3)),
-        |sht AS (SELECT doc_id, text AS shingle FROM documents
-        |        WHERE len(string_split(text, ' ')) < 3),
-        |s2 AS (SELECT DISTINCT doc_id, shingle FROM (SELECT * FROM lng UNION ALL SELECT * FROM sht)),
-        |n AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM s2 GROUP BY doc_id),
-        |pr AS (SELECT a.doc_id AS ida, b.doc_id AS idb, CAST(count(*) AS BIGINT) AS inter
-        |       FROM s2 a JOIN s2 b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |       GROUP BY 1, 2),
-        |bi AS (SELECT ida AS doc_a, idb AS doc_b, inter, na.n AS n_a, nb.n AS n_b
-        |       FROM pr JOIN n na ON na.doc_id = pr.ida JOIN n nb ON nb.doc_id = pr.idb
-        |       UNION ALL
-        |       SELECT idb AS doc_a, ida AS doc_b, inter, nb.n AS n_a, na.n AS n_b
-        |       FROM pr JOIN n na ON na.doc_id = pr.ida JOIN n nb ON nb.doc_id = pr.idb)
-        |SELECT doc_a, doc_b, inter, n_a, n_b,
-        |       (inter * 1000000) // n_a AS contain_ppm
-        |FROM bi WHERE inter * 100 >= 60 * n_a
-        |ORDER BY doc_a, doc_b""".stripMargin,
-
-    "g_knn_graph" -> oracleSqlKnnBruteForce,
-
-    "g_knn_incr" ->
-      // the merge identity makes incremental maintenance EXACT at
-      // probe-all, so the truth is the same brute-force graph over the
-      // unioned corpus — the split into old/new is invisible to it
-      oracleSqlKnnBruteForce,
-
-    "g_knn_recall" ->
-      // the approximate side routes through DATA-DERIVED centroids (Lloyd
-      // k=16×2 — not SQL-replayable), so the oracle pins what IS
-      // deterministic: the sampled-query counts, the measured recall's
-      // decile (the drift tripwire — an empirical constant at the oracle
-      // SFs, verified equal at sf0.001 and sf0.01), and the floor gate
-      """SELECT 5 AS k,
-        |  CAST((SELECT count(*) FROM embeddings WHERE vec_id % 4 = 0) AS BIGINT) AS n_queries,
-        |  CAST(5 * (SELECT count(*) FROM embeddings WHERE vec_id % 4 = 0) AS BIGINT) AS n_exact,
-        |  8 AS recall_decile, CAST(0.75 AS DOUBLE) AS recall_floor,
-        |  true AS meets_floor""".stripMargin,
-
-    "g_prototype_prune" -> prototypePruneOracleSql,
-
-    "g_semdedup_knn" ->
-      // the graph-routed drop rule replayed from the brute-force top-5:
-      // kept iff no earlier neighbor among the top-5 clears the
-      // threshold; dup_of = the smallest such earlier neighbor
-      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |p AS (SELECT a.vec_id AS vec_id, b.vec_id AS neighbor_id,
-        |             floor((list_dot_product(a.v, b.v) /
-        |                   (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))))
-        |                   * 10000) / 10000 AS sim
-        |      FROM v a JOIN v b ON a.vec_id <> b.vec_id),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, neighbor_id) AS rank
-        |      FROM p),
-        |l AS (SELECT vec_id, min(neighbor_id) AS dup_of
-        |      FROM r WHERE rank <= 5 AND neighbor_id < vec_id AND sim >= 0.35
-        |      GROUP BY vec_id)
-        |SELECT v.vec_id, (l.dup_of IS NULL) AS kept, l.dup_of
-        |FROM v LEFT JOIN l ON l.vec_id = v.vec_id
-        |ORDER BY v.vec_id""".stripMargin,
-
-    "g_knn_descent" ->
-      // iterative refinement is not SQL-replayable; the oracle pins the
-      // deterministic counts and BOTH measured deciles (the operator's
-      // value is the init→descended gap) plus the monotonicity and floor
-      // booleans
-      oracleSqlKnnDescent,
-
-    "g_knn_descent_pq" ->
-      // same pinned-decile discipline as g_knn_descent; that BOTH rows pin
-      // the SAME deciles (init 3 → descended 5) is itself the claim: the
-      // refine=2 ADC-pruned, codes-scored descent climbs exactly as far
-      // as full-precision descent at decile granularity
-      oracleSqlKnnDescent,
-
-    "g_knn_pq" -> knnPqOracleSql,
-
-    "g_knn_pq_recall" ->
-      // trained codebooks/centroids are not SQL-replayable; the oracle
-      // pins the deterministic sampled-query counts and the measured
-      // recall's decile (trainPqCodebooks/ivfCentroids are deterministic,
-      // so the decile is an exact constant at the oracle SFs, not noise)
-      """SELECT 5 AS k,
-        |  CAST((SELECT count(*) FROM embeddings WHERE vec_id % 4 = 0) AS BIGINT) AS n_queries,
-        |  CAST(5 * (SELECT count(*) FROM embeddings WHERE vec_id % 4 = 0) AS BIGINT) AS n_exact,
-        |  8 AS recall_decile, CAST(0.70 AS DOUBLE) AS recall_floor,
-        |  true AS meets_floor""".stripMargin,
-
-    "g_graph_search" -> graphSearchOracleSql,
-
-    "g_graph_search_pq" -> graphSearchPqOracleSql,
-  )
+    * row order), from the same registry. */
+  def oracleSql: Map[String, String] =
+    rows.QueryDef.all.map { case (name, d) => name -> d.oracleSql }
 }

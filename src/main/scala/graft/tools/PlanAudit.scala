@@ -27,6 +27,10 @@ import org.apache.spark.sql.SparkSession
   * CartesianProduct flags. A flagged row makes the process exit 1, so
   * the audit gates in CI without stdout parsing.
   *
+  * `window_global=` counts the `Window` nodes with an empty partition
+  * spec ([[globalWindows]]): each moves all its input rows to one task.
+  * It is reported, not flagged, until each site is proven bounded.
+  *
   * Usage: runMain graft.tools.PlanAudit q_index_join g_dedup_minhash ...
   * (no args = all queries; SPARK_GRAFT_SF_DIR overrides the fixture dir.)
   */
@@ -45,6 +49,43 @@ object PlanAudit {
   private val SanctionedProducts: Map[String, Int] = Map(
     "g_decontam_semantic" -> 1,
     "g_bitext_margin" -> 1)
+
+  private val SortOrderList = """.*\b(ASC|DESC) NULLS (FIRST|LAST)""".r
+
+  /** The number of `Window` nodes in plan string `plan` whose partition
+    * spec is empty. A node prints its window expressions, its partition
+    * spec and its order spec as bracketed lists and leaves an empty list
+    * out, so a global window prints one list, or two of which the second
+    * is sort orders. */
+  private[graft] def globalWindows(plan: String): Int =
+    """(?<![A-Za-z])Window \[""".r.findAllMatchIn(plan).count { m =>
+      val lists = bracketLists(plan, m.end - 1)
+      lists.size == 1 || (lists.size == 2 && SortOrderList.matches(lists(1)))
+    }
+
+  /** The contents of the `, `-separated bracketed lists that start at
+    * `plan(from)`, up to the end of that line. */
+  private def bracketLists(plan: String, from: Int): Seq[String] = {
+    val lists = Seq.newBuilder[String]
+    var i = from
+    var more = true
+    while (more) {
+      val start = i
+      var depth = 0
+      while (i < plan.length && plan(i) != '\n' && (i == start || depth > 0)) {
+        plan(i) match {
+          case '[' | '(' => depth += 1
+          case ']' | ')' => depth -= 1
+          case _ =>
+        }
+        i += 1
+      }
+      lists += plan.substring(start + 1, i - 1)
+      more = depth == 0 && plan.startsWith(", [", i)
+      i += 2
+    }
+    lists.result()
+  }
 
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
@@ -77,7 +118,8 @@ object PlanAudit {
       if (bad) badRows += 1
       println(s"PLAN $q exchanges=${n("Exchange")} broadcast=${n("BroadcastExchange")}" +
         s" cartesian=$cart bnlj=$bnlj sortmerge=${n("SortMergeJoin")}" +
-        s" pins=${pinned.size}" + (if (bad) " FLAGGED" else ""))
+        s" pins=${pinned.size} window_global=${plans.map(globalWindows).sum}" +
+        (if (bad) " FLAGGED" else ""))
     }
     println(s"AUDIT flagged_rows=$badRows")
     spark.stop()

@@ -213,11 +213,16 @@ class PlanRegressionSpec extends SparkSpec {
     // sanctioned bounded driver state (one query vector via head(),
     // k·d centroids, probed-bucket lists, eager pins). Denominators
     // belong in-DAG: agg + 1×1 cross join.
-    val src = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala")),
-      java.nio.charset.StandardCharsets.UTF_8)
-    assert(!src.contains(".count()"),
-      "SparkEntry contains a .count() — compute scalars in-DAG instead")
+    val rowsDir = java.nio.file.Paths.get("src/main/scala/graft/rows")
+    val files = java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala") +:
+      rowsDir.toFile.listFiles().filter(_.getName.endsWith(".scala")).map(_.toPath).toSeq
+    assert(files.size > 1, s"no row files under $rowsDir")
+    files.foreach { f =>
+      val src = new String(java.nio.file.Files.readAllBytes(f),
+        java.nio.charset.StandardCharsets.UTF_8)
+      assert(!src.contains(".count()"),
+        s"${f.getFileName} contains a .count() — compute scalars in-DAG instead")
+    }
   }
 
   test("knn graph family: equi-join candidate generation, no cartesian product") {

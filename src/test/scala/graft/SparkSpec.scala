@@ -18,12 +18,22 @@ object TestSpark {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** The one per-JVM root of every spec's fixture directories, removed by
+    * a shutdown hook that runs after Spark's own (lower priority), as
+    * `SparkEntry.scratchDir` does for the query closures. */
+  lazy val tmpRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft-test")
+    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
+      () => org.apache.commons.io.FileUtils.deleteQuietly(root.toFile), 20)
+    root
+  }
 }
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def tmpDir(): String =
-    java.nio.file.Files.createTempDirectory("graft-test").toString
+    java.nio.file.Files.createTempDirectory(TestSpark.tmpRoot, "graft-test").toString
   /** Recursive local-dir copy — specs use it to snapshot/restore sink
     * directories when simulating a compaction's crash windows. */
   def copyDir(src: java.io.File, dst: java.io.File): Unit =
